@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from big_data_spark.io.readers import read_table
 from big_data_spark.schemas import TESTDATA_SCHEMAS
 
+# The format stamp ("v") of a persisted catalog binding file; the
+# loader refuses any other value.
+_BINDING_VERSION = 2
+
 
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None
@@ -233,20 +237,14 @@ class SnapshotCatalog:
 
     # ----------------------------------------- warehouse registry
     #
-    # Layout (round 13): ONE binding file per table name under
-    # ``base_dir/_catalog/<quoted-name>.json`` — concurrent catalogs
+    # Layout: ONE binding file per table name under
+    # ``base_dir/_catalog/<quoted-name>.json`` holding
+    # ``{"v": _BINDING_VERSION, "name", "dir"}`` — concurrent catalogs
     # on one warehouse touch DISJOINT files for disjoint names, so a
-    # session's CTAS can never erase another session's binding (the
-    # round-12 last-writer-wins-on-the-whole-file defect). The only
-    # remaining write-write race is two sessions persisting the SAME
-    # name, where last-writer-wins is the correct semantics anyway.
-    # The pre-round-13 whole-file ``_catalog.json`` is still READ for
-    # backward compatibility (per-table files overlay it); DROP of a
-    # legacy-recorded name also rewrites the legacy file so the name
-    # cannot resurrect on the next load.
-
-    def _registry_path(self) -> str:
-        return f"{self.base_dir.rstrip('/')}/_catalog.json"
+    # session's CTAS can never erase another session's binding. The
+    # only remaining write-write race is two sessions persisting the
+    # SAME name, where last-writer-wins is the correct semantics
+    # anyway. The loader refuses a binding with any other ``"v"``.
 
     def _bindings_dir(self) -> str:
         return f"{self.base_dir.rstrip('/')}/_catalog"
@@ -279,39 +277,12 @@ class SnapshotCatalog:
         from big_data_spark.io.compact import hadoop_fs
         from big_data_spark.io.snapshot import (
             _read_json,
+            format_version_error,
             latest_manifest,
             read_snapshot,
         )
 
         bound: dict[str, str] = {}
-        # Legacy whole-file registry first (pre-round-13 warehouses).
-        legacy_tables: dict[str, str] = {}
-        fs, legacy_path = hadoop_fs(self.spark, self._registry_path())
-        legacy_seen = fs.exists(legacy_path)  # observed at load START
-        legacy_exists = legacy_seen
-        if legacy_seen:
-            try:
-                doc = _read_json(self.spark, self._registry_path())
-                legacy_tables = dict(doc.get("tables") or {})
-            except Exception:  # noqa: BLE001
-                if fs.exists(legacy_path):
-                    # Still present but unreadable (corrupt file,
-                    # I/O fault): silently loading with every legacy
-                    # table missing would be far worse than the
-                    # pre-round-14 loud failure — re-raise.
-                    raise
-                # Vanished mid-read: a concurrent load completed the
-                # migration below — its binding files (written BEFORE
-                # it retired the legacy file) cover every entry, so
-                # the overlay listing is complete. Nothing to migrate
-                # here; tombstone reclaim also waits (legacy_seen
-                # stays True) so a third session still holding the
-                # legacy content keeps its suppressions.
-                legacy_exists = False
-            bound.update(legacy_tables)
-        # Per-table binding files overlay (newer layout wins a name).
-        per_table: set[str] = set()  # names with a real binding file
-        tombstoned: set[str] = set()  # names with a tombstone file
         fs, cdir = hadoop_fs(self.spark, self._bindings_dir())
         if fs.exists(cdir):
             paths = [
@@ -358,89 +329,18 @@ class SnapshotCatalog:
                         # always complete.
                         continue
             for doc in docs:
-                if doc.get("name") and doc.get("dropped"):
-                    # Tombstone: a DROP of a legacy-recorded name —
-                    # suppress the legacy entry (per-name, race-free).
-                    bound.pop(doc["name"], None)
-                    tombstoned.add(doc["name"])
-                elif doc.get("name") and doc.get("dir"):
-                    bound[doc["name"]] = doc["dir"]
-                    per_table.add(doc["name"])
-        # One-time forward migration (round-14 directive #5): a
-        # pre-round-13 warehouse stops paying the overlay logic.
-        # While the legacy file exists, cover every legacy entry
-        # with its own binding file (atomic-rename publish, same
-        # content from every racing session — idempotent), then
-        # retire the legacy file; tombstones are KEPT this pass (a
-        # session that read the legacy file before we deleted it
-        # still needs them to suppress dropped names). A LATER load
-        # that finds no legacy file reclaims them: with nothing left
-        # to suppress, a tombstone is dead weight.
-        import json as _json
-
-        if legacy_exists:
-            try:
-                for n, d in sorted(legacy_tables.items()):
-                    if n in tombstoned or n in per_table:
-                        continue
-                    # CREATE-ONLY publish (if_absent): a binding or
-                    # tombstone that appeared since the directory
-                    # listing above is FRESHER than the legacy entry
-                    # — a concurrent DROP's tombstone must never be
-                    # clobbered back to life by this stale copy.
-                    self._write_binding_doc(
-                        n,
-                        _json.dumps(
-                            {"v": 2, "name": n, "dir": d},
-                            sort_keys=True,
-                        ),
-                        if_absent=True,
+                if doc.get("v") != _BINDING_VERSION:
+                    raise format_version_error(
+                        self._bindings_dir(), doc.get("v"), _BINDING_VERSION
                     )
-                lfs, lpath = hadoop_fs(
-                    self.spark, self._registry_path()
-                )
-                lfs.delete(lpath, False)
-            except Exception:  # noqa: BLE001
-                # Could not publish/retire (read-only warehouse,
-                # object-store fault): loading a legacy warehouse
-                # must keep WORKING without writes, exactly as it
-                # did pre-migration — keep the legacy file, retry
-                # the migration on a later load.
-                pass
-        elif not legacy_seen and tombstoned:
-            import time as _time
-
-            cutoff_ms = int(_time.time() * 1000) - 5000
-            for n in sorted(tombstoned):
-                fpath = (
-                    f"{self._bindings_dir()}/{self._binding_file(n)}"
-                )
-                _, tpath = hadoop_fs(self.spark, fpath)
-                try:
-                    doc = _read_json(self.spark, fpath)
-                    # Only reclaim what is STILL a tombstone and not
-                    # freshly written — the name may have been
-                    # re-created (CTAS-over-tombstone) since the
-                    # listing snapshot above, and the mtime guard
-                    # shrinks the remaining read-then-delete window
-                    # to a concurrent write landing in the same
-                    # instant as this stat+delete pair.
-                    if (
-                        doc.get("dropped")
-                        and fs.getFileStatus(tpath)
-                        .getModificationTime()
-                        < cutoff_ms
-                    ):
-                        fs.delete(tpath, False)
-                except Exception:  # noqa: BLE001
-                    continue  # already gone / read-only: best effort
+                bound[doc["name"]] = doc["dir"]
         for name, table_dir in sorted(bound.items()):
             self.tables[name] = table_dir
             self._persisted.add(name)
+            man = latest_manifest(self.spark, table_dir)
+            if man is None:
+                continue  # no commits yet: binding kept, no view
             try:
-                man = latest_manifest(self.spark, table_dir)
-                if man is None:
-                    continue  # no commits yet: binding kept, no view
                 # Pin the head view to the EXACT id just read, so
                 # _view_sid is authoritative (no registration race).
                 read_snapshot(
@@ -456,32 +356,15 @@ class SnapshotCatalog:
         file is either absent, the old binding, or the new one —
         and no other name's binding is ever touched."""
         import json as _json
-
-        self._write_binding_doc(
-            name,
-            _json.dumps(
-                {"v": 2, "name": name, "dir": self.tables[name]},
-                sort_keys=True,
-            ),
-        )
-
-    def _write_binding_doc(
-        self, name: str, body: str, if_absent: bool = False
-    ) -> bool:
-        """Publish one binding/tombstone doc. Default: overwrite-
-        rename (last writer wins — the explicit CTAS/DROP/persist
-        semantics). ``if_absent=True`` is CREATE-ONLY: plain rename,
-        which refuses an existing destination on HDFS/local — the
-        legacy-migration mode, where an existing file is ALWAYS
-        fresher than the legacy entry being copied (a concurrent
-        DROP's tombstone or CTAS's binding must never be clobbered
-        by a stale directory-listing snapshot). Returns True if this
-        call published the file."""
         import uuid as _uuid
 
         from big_data_spark.io.compact import hadoop_fs
         from big_data_spark.io.snapshot import _atomic_overwrite_local
 
+        body = _json.dumps(
+            {"v": _BINDING_VERSION, "name": name, "dir": self.tables[name]},
+            sort_keys=True,
+        )
         cdir = self._bindings_dir()
         fs, cpath = hadoop_fs(self.spark, cdir)
         fs.mkdirs(cpath)
@@ -494,11 +377,6 @@ class SnapshotCatalog:
         finally:
             out.close()
         _, final = hadoop_fs(self.spark, f"{cdir}/{fname}")
-        if if_absent:
-            if not fs.rename(tmp_path, final):
-                fs.delete(tmp_path, False)
-                return False  # destination exists: theirs is fresher
-            return True
         if (fs.getUri().getScheme() or "file") == "file":
             _atomic_overwrite_local(
                 self.spark, fs, cdir, tmp_path, final, fname[:-5]
@@ -514,39 +392,12 @@ class SnapshotCatalog:
                     f"could not publish catalog binding for {name!r} "
                     f"under {cdir!r}"
                 )
-        return True
 
     def _remove_binding(self, name: str) -> None:
-        """Unpersist ONE binding. If the name also lives in the
-        legacy whole-file registry, a per-name TOMBSTONE binding file
-        is written instead of deleting ours — the loader's overlay
-        then suppresses the legacy entry. Tombstones keep every
-        registry write per-name (no read-modify-write anywhere): two
-        sessions dropping different legacy names can never resurrect
-        each other's drop, which a legacy-file rewrite would allow
-        (round-13 review finding). Without a legacy entry the binding
-        file (and its checksum sidecar — ChecksumFileSystem.delete)
-        is simply removed."""
-        import json as _json
-
+        """Unpersist ONE binding: the binding file (and its checksum
+        sidecar — ChecksumFileSystem.delete) is removed."""
         from big_data_spark.io.compact import hadoop_fs
-        from big_data_spark.io.snapshot import _read_json
 
-        legacy = self._registry_path()
-        fs, lpath = hadoop_fs(self.spark, legacy)
-        in_legacy = False
-        if fs.exists(lpath):
-            doc = _read_json(self.spark, legacy)
-            in_legacy = name in (doc.get("tables") or {})
-        if in_legacy:
-            self._write_binding_doc(
-                name,
-                _json.dumps(
-                    {"v": 2, "name": name, "dropped": True},
-                    sort_keys=True,
-                ),
-            )
-            return
         cdir = self._bindings_dir()
         fs, fpath = hadoop_fs(
             self.spark, f"{cdir}/{self._binding_file(name)}"

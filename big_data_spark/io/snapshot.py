@@ -36,12 +36,19 @@ generations.
 Scale: the manifest is O(#partitions + #generations) driver-side
 JSON — the same bounded-metadata budget as a table format's manifest
 list; per-FILE column stats live in immutable per-generation sidecar
-files under ``_manifests/stats/`` referenced by path (round 12 — the
-Iceberg manifest-file split), loaded lazily and only for generations
-a query actually touches. Data moves only through normal distributed
-writes. Readers open one parquet scan per live generation (partition
-pruning and pushdown intact via ``basePath``) and union them;
-compaction folds many generations back into one.
+files under ``_manifests/stats/`` referenced by path (the Iceberg
+manifest-file split), loaded lazily and only for generations a query
+actually touches. Data moves only through normal distributed writes.
+Readers open one parquet scan per live generation (partition pruning
+and pushdown intact via ``basePath``) and union them; compaction
+folds many generations back into one.
+
+Format version: every manifest carries ``format_version`` =
+``FORMAT_VERSION`` (Iceberg's ``format-version``). Both manifest
+parsers refuse a missing or different stamp with one ValueError that
+names the table dir and says to rebuild it from source — tables are
+rebuilt, never migrated. Stats sidecars are reachable only through a
+manifest, so that one check covers them too.
 """
 
 from __future__ import annotations
@@ -63,16 +70,19 @@ _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "_data"
 _DELETES_DIR = "_deletes"
 _CDF_DIR = "_cdf"
-# Per-generation column-stats sidecars (round-12 directive #1): the
-# manifest itself carries only {generation: sidecar rel path} — the
-# per-FILE min/max + row counts live in one immutable JSON per
-# generation under this dir, written once when the generation is
-# first swept and referenced by path forever after. This keeps the
-# manifest O(#generations) where the round-11 inline layout was
-# O(live files) serialized per commit and parsed per read (the
+# Per-generation column-stats sidecars: the manifest itself carries
+# only {generation: sidecar rel path} — the per-FILE min/max + row
+# counts live in one immutable JSON per generation under this dir,
+# written once when the generation is first swept and referenced by
+# path forever after. This keeps the manifest O(#generations) instead
+# of O(live files) serialized per commit and parsed per read (the
 # Iceberg manifest-file / manifest-list split, Delta's checkpoint
 # sidecars).
 _STATS_SIDE_DIR = f"{_MANIFEST_DIR}/stats"
+# The on-disk format every writer stamps into each manifest. Bump it
+# whenever what a writer puts on disk changes; readers accept only
+# this value.
+FORMAT_VERSION = 1
 
 
 def _bare_expr(col):
@@ -252,10 +262,29 @@ def _read_json(spark: SparkSession, path: str) -> dict:
     return json.loads(text)
 
 
+def format_version_error(where: str, found, expected: int) -> ValueError:
+    """The one refusal for an on-disk structure whose format stamp is
+    missing or unknown — shared by the manifest and catalog-binding
+    readers so the message and the recovery read the same."""
+    return ValueError(
+        f"{where!r} has on-disk format version {found!r}, but this "
+        f"engine reads only version {expected} — rebuild it from source"
+    )
+
+
+def _checked_manifest(table_dir: str, man: dict) -> dict:
+    found = man.get("format_version")
+    if found != FORMAT_VERSION:
+        raise format_version_error(table_dir, found, FORMAT_VERSION)
+    return man
+
+
 def read_manifest(
     spark: SparkSession, table_dir: str, snapshot_id: int
 ) -> dict:
-    return _read_json(spark, _manifest_path(table_dir, snapshot_id))
+    return _checked_manifest(
+        table_dir, _read_json(spark, _manifest_path(table_dir, snapshot_id))
+    )
 
 
 # Below this many manifests a serial driver loop beats a Spark job
@@ -273,9 +302,8 @@ def _read_manifests(
     whole-file text scan fetches every manifest in parallel on the
     executors — at 10k commits (a year of 15-minute micro-batches)
     the serial walk was 10k sequential object-store round trips
-    before the first data read (round-9 verdict directive #4). The
-    JSON parse stays driver-side (exact dicts, no schema coercion);
-    only the I/O distributes. A manifest vacuumed between the listing
+    before the first data read. The JSON parse stays driver-side
+    (exact dicts, no schema coercion); only the I/O distributes. A manifest vacuumed between the listing
     and the scan fails the job loudly, same as the serial path."""
     if len(ids) <= _BULK_MANIFEST_THRESHOLD:
         return {i: read_manifest(spark, table_dir, i) for i in ids}
@@ -285,7 +313,7 @@ def _read_manifests(
     )
     out: dict[int, dict] = {}
     for r in rows:
-        man = json.loads(r["value"])
+        man = _checked_manifest(table_dir, json.loads(r["value"]))
         out[int(man["snapshot_id"])] = man
     missing = set(ids) - set(out)
     if missing:
@@ -331,20 +359,18 @@ def _write_stats_sidecar(
     table_dir: str,
     gen: str,
     files: dict[str, dict],
-    rows: dict[str, int] | None,
+    rows: dict[str, int],
     names_at: int,
-    sums: dict[str, dict] | None = None,
-    nonnull: dict[str, dict] | None = None,
+    sums: dict[str, dict],
+    nonnull: dict[str, dict],
 ) -> str:
     """Persist one generation's per-file stats as an immutable sidecar
     under ``_manifests/stats/`` and return its table-relative path.
-    ``rows`` None = row counts genuinely unknown (a legacy inline
-    block migrated without them) — the aggregate path refuses until
-    analyze_table backfills. ``names_at`` pins which rename-log
-    events are already reflected in the column keys (the max event
-    commit id at sweep time); readers replay only LATER events, so a
-    rename after the sweep stays metadata-only — no sidecar rewrite
-    (round-12 directive #1; Iceberg gets the same via field ids).
+    ``names_at`` pins which rename-log events are already reflected
+    in the column keys (the max event commit id at sweep time);
+    readers replay only LATER events, so a rename after the sweep
+    stays metadata-only — no sidecar rewrite (Iceberg gets the same
+    via field ids).
 
     No temp-then-rename: the name is unique (uuid) and the file is
     referenced only by a manifest committed strictly AFTER this write
@@ -356,9 +382,8 @@ def _write_stats_sidecar(
         "files": files,
         "rows": rows,
         "names_at": names_at,
-        # Per-file exact integer sums + non-null counts (round-12
-        # directive #8): None = never recorded (legacy migration —
-        # ANALYZE re-sweeps), {} = swept with no sum-capable columns.
+        # Per-file exact integer sums + non-null counts; {} = swept
+        # with no sum-capable columns.
         "sums": sums,
         "nonnull": nonnull,
     }
@@ -444,12 +469,8 @@ def _replay_sidecar_names(
 
 
 def _stats_covered(stats: dict | None) -> set[str]:
-    """Generations the stats block covers with per-file MIN/MAX —
-    sidecar paths (round 12) or inline ``gens`` (round-11 layout,
-    still readable)."""
-    return set((stats or {}).get("sidecars") or {}) | set(
-        (stats or {}).get("gens") or {}
-    )
+    """Generations the stats block covers with per-file MIN/MAX."""
+    return set((stats or {}).get("sidecars") or {})
 
 
 def _prefetch_sidecars(
@@ -467,8 +488,8 @@ def _prefetch_sidecars(
     loop."""
     side = (stats or {}).get("sidecars") or {}
     with _SIDECAR_CACHE_LOCK:
-        # DISTINCT uncached files: a consolidated sidecar (round 13)
-        # is referenced by MANY generations but read once.
+        # DISTINCT uncached files: a consolidated sidecar is
+        # referenced by MANY generations but read once.
         need: list[str] = []
         seen: set[str] = set()
         for g in gens:
@@ -537,59 +558,42 @@ def _load_gen_stats(
     _doc: dict | None = None,
 ) -> dict | None:
     """One generation's recorded stats from the stats block — LAZILY:
-    sidecar layouts read one small JSON (cached) only when a query
-    actually needs this generation, inline layouts return the
-    embedded dicts. None = uncovered; otherwise a dict with:
+    one small sidecar JSON (cached) read only when a query actually
+    needs this generation. None = uncovered (or a consolidated shard
+    that lost this generation's doc); otherwise a dict with:
 
     - ``files``: {file_rel: {col: [min,max] | "allnull" | None}}
-    - ``rows``:  {file_rel: n_rows}, or None if never recorded
+    - ``rows``:  {file_rel: n_rows}
     - ``sums``:  {file_rel: {col: exact-int-string | None}} for the
-      INTEGER stat columns (round 12), or None if never recorded
+      INTEGER stat columns
     - ``nonnull``: {file_rel: {col: non-null count}}, paired with
       ``sums``
 
     Column keys in every per-file dict are replayed through the
     evolution events committed after the sidecar's names_at stamp."""
     side = (stats or {}).get("sidecars") or {}
-    if gen in side:
-        doc = (
-            _doc
-            if _doc is not None
-            else _read_sidecar(spark, table_dir, side[gen])
-        )
-        if "gens" in doc:
-            # Consolidated sidecar (round 13): ONE file carries many
-            # generations' docs — extract this generation's. The raw
-            # file is what's cached, so every sibling generation is a
-            # pure cache hit after the first read.
-            doc = doc["gens"].get(gen)
-            if doc is None:
-                return None  # torn consolidation: behave as uncovered
-        at = int(doc.get("names_at") or 0)
-
-        def rp(block):
-            return (
-                None
-                if block is None
-                else _replay_sidecar_names(block, rename_log, at)
-            )
-
-        return {
-            "files": rp(doc.get("files") or {}),
-            "rows": doc.get("rows"),
-            "sums": rp(doc.get("sums")),
-            "nonnull": rp(doc.get("nonnull")),
-        }
-    inline = (stats or {}).get("gens") or {}
-    if gen in inline:
-        rows_block = (stats or {}).get("rows") or {}
-        return {
-            "files": inline[gen],
-            "rows": rows_block.get(gen),
-            "sums": None,  # inline layout predates sum recording
-            "nonnull": None,
-        }
-    return None
+    if gen not in side:
+        return None
+    doc = (
+        _doc
+        if _doc is not None
+        else _read_sidecar(spark, table_dir, side[gen])
+    )
+    if "gens" in doc:
+        # Consolidated sidecar: ONE file carries many generations'
+        # docs — extract this generation's. The raw file is what's
+        # cached, so every sibling generation is a pure cache hit
+        # after the first read.
+        doc = doc["gens"].get(gen)
+        if doc is None:
+            return None  # torn consolidation: behave as uncovered
+    at = int(doc["names_at"])
+    return {
+        "files": _replay_sidecar_names(doc["files"], rename_log, at),
+        "rows": doc["rows"],
+        "sums": _replay_sidecar_names(doc["sums"], rename_log, at),
+        "nonnull": _replay_sidecar_names(doc["nonnull"], rename_log, at),
+    }
 
 
 def load_generation_stats(
@@ -597,9 +601,9 @@ def load_generation_stats(
 ) -> tuple[dict | None, dict | None]:
     """Public spelling of the lazy per-generation stats load — the
     (per-file column stats, per-file row counts) a manifest records
-    for ``gen``, resolved through sidecars or the legacy inline
-    layout. Tools and tests use this instead of reaching into the
-    manifest dict, so the storage layout can evolve freely."""
+    for ``gen``, resolved through its sidecar. Tools and tests use
+    this instead of reaching into the manifest dict, so the storage
+    layout can evolve freely."""
     doc = _load_gen_stats(
         spark,
         table_dir,
@@ -1461,15 +1465,14 @@ def resolve_as_of_ts(
     spark: SparkSession, table_dir: str, ts_ms: int
 ) -> int:
     """The newest snapshot id committed at or before ``ts_ms``
-    (epoch millis) — timestamp time travel. Manifests written before
-    timestamps existed sort as 0 (always eligible). Manifest reads go
+    (epoch millis) — timestamp time travel. Manifest reads go
     through the bulk scan (_read_manifests): one parallel job, not
     O(#commits) serial driver round trips."""
     ids = snapshot_ids(spark, table_dir)
     mans = _read_manifests(spark, table_dir, ids)
     best: int | None = None
     for sid in ids:
-        if int(mans[sid].get("committed_at_ms") or 0) <= ts_ms:
+        if int(mans[sid]["committed_at_ms"]) <= ts_ms:
             best = sid
     if best is None:
         raise ValueError(
@@ -1718,9 +1721,12 @@ def evolve_schema(
             )
         by_name[col]["type"] = new_type
     _claim_check(spark, table_dir, next_id)
-    # Stats follow the evolution: keys remap to the new logical names
-    # (values untouched — a rename changes no bytes), dropped columns'
-    # stats go with them. Metadata-only, like the commit itself.
+    # Stats follow the evolution: only the COLUMNS list remaps eagerly
+    # (renamed to the new logical names, dropped columns removed). The
+    # immutable per-generation sidecars carry forward by path, and
+    # readers replay the rename-log events committed after each
+    # sidecar's names_at stamp onto its keys at load time — a rename
+    # on a million-file table rewrites zero stats bytes.
     stats = man.get("stats")
     if stats:
         key_map = {c: c for c in stats["columns"]}
@@ -1729,49 +1735,12 @@ def evolve_schema(
         for old, new in (renames or {}).items():
             if old in key_map:
                 key_map[old] = new
-        new_cols = [
-            key_map[c] for c in stats["columns"] if c in key_map
-        ]
-        if stats.get("sidecars"):
-            # Sidecar layout (round 12): only the COLUMNS list remaps
-            # eagerly — the immutable per-generation sidecars carry
-            # forward by path, and readers replay the rename-log
-            # events committed after each sidecar's names_at stamp
-            # onto its keys at load time. A rename on a million-file
-            # table rewrites zero stats bytes.
-            stats = {
-                "columns": new_cols,
-                "sidecars": dict(stats["sidecars"]),
-                **({"v": stats["v"]} if "v" in stats else {}),
-            }
-        else:
-            stats = {
-                "columns": new_cols,
-                "gens": {
-                    g: {
-                        f: {
-                            key_map[c]: v
-                            for c, v in per_col.items()
-                            if c in key_map
-                        }
-                        for f, per_col in files.items()
-                    }
-                    for g, files in (stats.get("gens") or {}).items()
-                },
-                # The version marker and the per-file row counts ride
-                # along: values are untouched by renames, so a v2
-                # (typed-canonical) block stays v2 and COUNT(*)
-                # metadata stays valid — dropping either here would
-                # silently disable typed pruning / metadata aggregates
-                # forever after one rename (every later commit carries
-                # the stripped block forward).
-                **(
-                    {"v": stats["v"]} if "v" in stats else {}
-                ),
-                **(
-                    {"rows": stats["rows"]} if "rows" in stats else {}
-                ),
-            }
+        stats = {
+            "columns": [
+                key_map[c] for c in stats["columns"] if c in key_map
+            ],
+            "sidecars": dict(stats["sidecars"]),
+        }
     commit_manifest(
         spark,
         table_dir,
@@ -1888,11 +1857,11 @@ def _sweep_generation_stats(
 
     out: dict[str, dict] = {}
     local = (fs.getUri().getScheme() or "file") == "file"
-    # A LEGACY generation being backfilled may carry a stat column
-    # under a former physical name (renamed after it was written) —
-    # resolve through the evolution log exactly like the read-path
-    # footer sweep, or the backfilled stats would record the column
-    # as permanently unprunable.
+    # A generation committed without stats and backfilled later may
+    # carry a stat column under a former physical name (renamed after
+    # it was written) — resolve through the evolution log exactly
+    # like the read-path footer sweep, or the backfilled stats would
+    # record the column as permanently unprunable.
     gen_id = _gen_id_of(gen_rel)
     if rename_log:
         from big_data_spark.io.stats import _physical_name
@@ -2130,36 +2099,26 @@ def _auto_commit_stats(
     layout_by: str | None,
     stats_columns: list[str] | None,
     rename_log: list | None = None,
-    backfill_rows: bool = False,
+    repair_torn: bool = False,
 ) -> dict | None:
     """The commit's ``stats`` block: carry every already-covered live
     generation forward (an O(1) sidecar-path copy per generation —
     pure metadata, nothing loaded), sweep only the NEW ones into
     fresh sidecars — O(new files) per commit, the Iceberg write-side
-    trade, and since round 12 the manifest itself stays
-    O(#generations). Returns None when no stat-worthy columns exist.
+    trade, and the manifest itself stays O(#generations). Returns
+    None when no stat-worthy columns exist.
 
-    Legacy inline blocks (round-11 layout) MIGRATE as they are
-    carried: each covered generation's inline dicts are written out
-    once as a sidecar — a one-time O(live files) metadata copy on the
-    first commit after upgrade, after which every commit is O(new)
-    again."""
-    gens = sorted(
-        {
-            rel.split("/")[1]
-            for rel in entries.values()
-            if rel.startswith(f"{_DATA_DIR}/")
-        }
-    )
+    ``repair_torn`` (ANALYZE) also loads each carried sidecar and
+    re-sweeps a generation whose doc is missing from its consolidated
+    shard."""
+    gens = sorted(_live_gens(entries))
     prev_side = (prev_stats or {}).get("sidecars") or {}
-    prev_gens = (prev_stats or {}).get("gens") or {}
-    prev_cov = set(prev_side) | set(prev_gens)
     if stats_columns is not None:
         columns = list(stats_columns)
         if (
             prev_stats
             and prev_stats.get("columns") != columns
-            and any(g in prev_cov for g in gens)
+            and any(g in prev_side for g in gens)
         ):
             raise ValueError(
                 "stats_columns differ from the table's recorded stats "
@@ -2175,11 +2134,9 @@ def _auto_commit_stats(
         )
     if not columns:
         return None
-    prev_rows = (prev_stats or {}).get("rows") or {}
     names_at = _rlog_max_id(rename_log)
     sum_cols = _sum_columns(columns, schema_fields)
     out_side: dict[str, str] = {}
-    carried = False
 
     def sweep(g: str) -> str:
         files, nrows = _sweep_generation_stats(
@@ -2206,51 +2163,17 @@ def _auto_commit_stats(
         )
 
     for g in gens:
-        if g in prev_side:
-            if backfill_rows:
-                # ANALYZE closes recording gaps: a sidecar migrated
-                # from a legacy block records rows=None (and sidecars
-                # from before sum recording carry sums=None) — load
-                # it (cached, one small JSON) and re-sweep if so.
-                doc = _load_gen_stats(spark, table_dir, prev_stats, g)
-                if doc is None or doc["rows"] is None or (
-                    sum_cols and doc["sums"] is None
-                ):
-                    out_side[g] = sweep(g)
-                    continue
+        if g in prev_side and not (
+            repair_torn
+            and _load_gen_stats(spark, table_dir, prev_stats, g) is None
+        ):
             # Ordinary commits carry covered generations by PATH —
             # O(1) per generation, nothing loaded, never a surprise
-            # full-table re-sweep (review finding, kept from r11).
+            # full-table re-sweep.
             out_side[g] = prev_side[g]
-            carried = True
-        elif g in prev_gens and (g in prev_rows or not backfill_rows):
-            # Inline legacy block: migrate this generation's embedded
-            # dicts into a sidecar once (rows=None / sums=None mark
-            # genuinely unrecorded data for analyze_table to
-            # backfill).
-            out_side[g] = _write_stats_sidecar(
-                spark,
-                table_dir,
-                g,
-                prev_gens[g],
-                prev_rows.get(g),
-                names_at,
-            )
-            carried = True
         else:
             out_side[g] = sweep(g)
-    # "v": 2 marks values normalized to the round-11 canonical typed
-    # forms (io/stats.norm_stat_value) — the read path applies typed
-    # (string/date/timestamp) compares ONLY to v2 blocks; a block
-    # carrying any pre-typed generation stays unversioned and prunes
-    # numeric columns only, exactly as before (a legacy timestamp
-    # string without fixed-width microseconds could otherwise
-    # false-drop on the prefix-equal edge). The layout (sidecars vs
-    # inline) is orthogonal to this value-format marker.
-    out = {"columns": columns, "sidecars": out_side}
-    if (prev_stats or {}).get("v") == 2 or prev_stats is None or not carried:
-        out["v"] = 2
-    return out
+    return {"columns": columns, "sidecars": out_side}
 
 
 def commit_manifest(
@@ -2337,15 +2260,15 @@ def commit_manifest(
         else latest_manifest(spark, table_dir, below=snapshot_id)
     )
     if prev_for_ts is not None:
-        ts = max(ts, int(prev_for_ts.get("committed_at_ms") or 0) + 1)
+        ts = max(ts, int(prev_for_ts["committed_at_ms"]) + 1)
     if stats == "auto":
-        # Manifest-embedded per-file column stats (round-11 directive
-        # #2): covered generations carry as pure metadata; only NEW
-        # generations get their footers swept — so pruned reads on a
-        # stats-bearing table never open a footer (Iceberg/Delta's
-        # commit-time trade). Callers pass an explicit dict (rollback:
-        # the restored version's own stats; evolve: the renamed-key
-        # remap) or None (no stats recorded).
+        # Manifest-embedded per-file column stats: covered
+        # generations carry as pure metadata; only NEW generations get
+        # their footers swept — so pruned reads on a stats-bearing
+        # table never open a footer (Iceberg/Delta's commit-time
+        # trade). Callers pass an explicit dict (rollback: the
+        # restored version's own stats; evolve: the remapped column
+        # list) or None (no stats recorded).
         # KNOWN COST under commit contention: a retrying writer
         # re-sweeps its (identical, renamed per attempt) new
         # generation's footers on every attempt — O(attempts x new
@@ -2368,21 +2291,19 @@ def commit_manifest(
         # the ORIGINAL timestamp forward: re-stamping with the current
         # wall clock would put manifest N's timestamp above an
         # existing successor N+1's, breaking the per-table monotone
-        # sequence resolve_as_of_ts depends on (round-10 advice). The
-        # original was clamped above ITS predecessor at first commit.
+        # sequence resolve_as_of_ts depends on. The original was
+        # clamped above ITS predecessor at first commit.
         _, probe = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
         fs_probe, _ = hadoop_fs(spark, table_dir)
         if fs_probe.exists(probe):
-            orig = _read_json(
-                spark, _manifest_path(table_dir, snapshot_id)
-            ).get("committed_at_ms")
-            # Carry ABSENT/0 forward as 0 too: a pre-timestamp-era
-            # manifest sorts as 0 (always eligible) — re-stamping it
-            # with the wall clock would be exactly the N-above-N+1
-            # inversion this branch exists to prevent.
-            ts = int(orig or 0)
+            ts = int(
+                read_manifest(spark, table_dir, snapshot_id)[
+                    "committed_at_ms"
+                ]
+            )
     body = json.dumps(
         {
+            "format_version": FORMAT_VERSION,
             "snapshot_id": snapshot_id,
             "entries": entries,
             "partition_col": partition_col,
@@ -2652,30 +2573,26 @@ def read_entries(
             {f"{table_dir}/{r}" for rels in by_gen.values() for r in rels}
         )
         kept_by_dir = {}
-        # MANIFEST stats first (round-11 directive #2): entry paths
-        # whose generation is covered by the commit-time stats block
-        # prune as pure driver-side metadata — zero footer opens, zero
-        # file listings. Only stat-less legacy generations fall back
-        # to the distributed footer sweep. Since round 12 the per-file
-        # stats live in per-generation SIDECARS loaded lazily below —
-        # only for generations that actually reach this read (entries
-        # are already partition-pruned upstream), so a
+        # MANIFEST stats first: entry paths whose generation is
+        # covered by the commit-time stats block prune as pure
+        # driver-side metadata — zero footer opens, zero file
+        # listings. Only generations committed without stats fall back
+        # to the distributed footer sweep. The per-file stats live in
+        # per-generation SIDECARS loaded lazily below — only for
+        # generations that actually reach this read (entries are
+        # already partition-pruned upstream), so a
         # partition-selective query on a million-file table touches
         # only its own generations' sidecar JSONs.
         covered_gens = _stats_covered(stats)
         stat_cols = (stats or {}).get("columns") or []
-        # Typed compares (round 11) need the committed schema's kind
-        # per column AND the v2 canonical value forms; unversioned
-        # blocks (pre-typed normalization) prune numeric columns only.
-        stat_kinds: dict[str, str] = {}
-        if (stats or {}).get("v") == 2:
-            from big_data_spark.io.stats import stat_kind
+        # Typed compares need the committed schema's kind per column.
+        from big_data_spark.io.stats import stat_kind
 
-            stat_kinds = {
-                f["name"]: k
-                for f in (schema_fields or [])
-                if (k := stat_kind(f["type"])) is not None
-            }
+        stat_kinds = {
+            f["name"]: k
+            for f in (schema_fields or [])
+            if (k := stat_kind(f["type"])) is not None
+        }
         session_tz = (
             spark.conf.get("spark.sql.session.timeZone", "UTC") or "UTC"
         )
@@ -4085,10 +4002,9 @@ def analyze_table(
     every live generation that lacks them — the explicit spelling of
     the backfill that otherwise rides along with the NEXT data commit
     (a read-mostly table could wait forever, paying the footer sweep
-    on every pruned read). Also the UPGRADE path: a table whose stats
-    block predates typed normalization (no ``"v": 2``) or whose
-    recorded column set should change re-sweeps from scratch, so
-    string/date/timestamp predicates start pruning from metadata.
+    on every pruned read). A generation whose doc went missing from
+    its consolidated shard is re-swept too, and a table whose recorded
+    column set should change re-sweeps from scratch.
 
     Commits ``maintenance=True`` with entries/schema/deletes carried
     verbatim — content is unchanged, the change feed skips it, and a
@@ -4103,8 +4019,8 @@ def analyze_table(
         # Validate against the committed schema BEFORE committing: a
         # typo'd column would otherwise silently replace a working
         # stats block with an all-None one that every later commit
-        # carries forward (review finding, round 11). Spark's own
-        # ANALYZE validates column existence the same way.
+        # carries forward. Spark's own ANALYZE validates column
+        # existence the same way.
         known = {f["name"] for f in man.get("schema") or []}
         bad = [c for c in stats_columns if not c or c not in known]
         if bad or not stats_columns:
@@ -4113,58 +4029,25 @@ def analyze_table(
                 f"committed schema has {sorted(known)!r}"
             )
     prev_stats = man.get("stats")
-    live_gens = sorted(
-        {
-            rel.split("/")[1]
-            for rel in man["entries"].values()
-            if rel.startswith(f"{_DATA_DIR}/")
-        }
-    )
-    cols_differ = (
+    live_gens = sorted(_live_gens(man["entries"]))
+    fresh = prev_stats is None or (
         stats_columns is not None
-        and prev_stats is not None
-        and list(stats_columns) != prev_stats.get("columns")
+        and list(stats_columns) != prev_stats["columns"]
     )
-    fresh = (
-        prev_stats is None
-        or cols_differ
-        or prev_stats.get("v") != 2
-    )
-    if fresh:
-        covered_before = 0
-    else:
-        # Covered = stats AND row counts recorded. Inline layouts say
-        # so in the block itself; a sidecar must be loaded (cached,
-        # one small JSON each) to see whether its rows are None — a
-        # migrated rows-less legacy generation. ANALYZE is the
-        # explicit gap-closer, so O(live generations) loads here are
+    covered_before = 0
+    if not fresh:
+        # Covered = a loadable sidecar doc. ANALYZE is the explicit
+        # gap-closer, so O(live generations) cached loads here are
         # its job, never the ordinary commit path's.
-        covered_before = 0
-        need_sums = bool(
-            _sum_columns(prev_stats["columns"], man.get("schema"))
-        )
-        for g in set(_stats_covered(prev_stats)) & set(live_gens):
-            doc = _load_gen_stats(spark, table_dir, prev_stats, g)
-            if (
-                doc is not None
-                and doc["rows"] is not None
-                and (not need_sums or doc["sums"] is not None)
-            ):
+        for g in _stats_covered(prev_stats) & set(live_gens):
+            if _load_gen_stats(spark, table_dir, prev_stats, g) is not None:
                 covered_before += 1
-    # A live generation still covered INLINE (round-11 layout) makes
-    # ANALYZE worth a commit even when fully covered: the commit
-    # migrates the embedded dicts into per-generation sidecars, so a
-    # read-mostly table stops paying the monolithic-manifest parse
-    # without waiting for its next data commit.
-    inline_live = not fresh and bool(
-        set(prev_stats.get("gens") or {}) & set(live_gens)
-    )
-    if not fresh and not inline_live and covered_before == len(live_gens):
+    if not fresh and covered_before == len(live_gens):
         # Fully covered: the one remaining maintenance is sidecar
-        # FRAGMENTATION (round-13 directive #6) — an append-heavy
-        # table holds one file per commit, and past the process cache
-        # cap every aggregate re-pays the bulk scan. Fold them into
-        # one consolidated file; below the threshold, a true no-op.
+        # FRAGMENTATION — an append-heavy table holds one file per
+        # commit, and past the process cache cap every aggregate
+        # re-pays the bulk scan. Fold them into one consolidated
+        # file; below the threshold, a true no-op.
         con = consolidate_stats(spark, table_dir)
         return {
             "analyzed_generations": 0,
@@ -4173,12 +4056,6 @@ def analyze_table(
             "snapshot_id": con["snapshot_id"],
             "merged_sidecars": con["merged_sidecars"],
         }
-    if fresh and stats_columns is None and prev_stats is not None:
-        # A version-only upgrade keeps the table's RECORDED column
-        # set — re-deriving the schema default here would silently
-        # drop a custom stats_columns choice (e.g. a non-leading
-        # column the table's queries prune on).
-        stats_columns = list(prev_stats["columns"])
     stats = _auto_commit_stats(
         spark,
         table_dir,
@@ -4189,7 +4066,7 @@ def analyze_table(
         man.get("layout_by"),
         stats_columns,
         rename_log=man.get("rename_log"),
-        backfill_rows=True,  # ANALYZE is the explicit gap-closer
+        repair_torn=True,  # ANALYZE is the explicit gap-closer
     )
     if stats is None:
         # No stat-capable columns: nothing to record, nothing to commit.
@@ -4201,8 +4078,8 @@ def analyze_table(
             "merged_sidecars": 0,
         }
     # Consolidate the freshly built block in the SAME commit when the
-    # sidecar file count crossed the threshold (round-13 directive
-    # #6) — one metadata commit covers backfill AND defragmentation.
+    # sidecar file count crossed the threshold — one metadata commit
+    # covers backfill AND defragmentation.
     stats, merged = _consolidated_stats_block(
         spark,
         table_dir,
@@ -4770,9 +4647,7 @@ def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
                 man.get("layout_by"),
                 len(cols),
                 sorted(set(cols) - prev_cols) if prev_cols else [],
-                int(man["committed_at_ms"])
-                if man.get("committed_at_ms")
-                else None,
+                int(man["committed_at_ms"]),
             )
         )
         prev_cols |= set(cols)
@@ -4850,15 +4725,14 @@ def metadata_aggregate(
     spark: SparkSession,
     table_dir: str,
     columns: list[str] | None = None,
-    require_sums: bool = False,
     as_of: int | None = None,
     partitions: dict | None = None,
     _man: dict | None = None,
 ) -> dict:
-    """COUNT(*), per-column MIN/MAX, and (round 12) SUM/AVG for
-    integer columns, answered from the manifest plus its
-    per-generation stats sidecars — zero data reads, zero footer
-    opens (the Iceberg/Delta metadata-aggregate trick). Returns
+    """COUNT(*), per-column MIN/MAX, and SUM/AVG for integer columns,
+    answered from the manifest plus its per-generation stats sidecars
+    — zero data reads, zero footer opens (the Iceberg/Delta
+    metadata-aggregate trick). Returns
     ``{"rows": N, "min": {col: value}, "max": {col: value},
     "sum": {col: int|None}, "avg": {col: float|None},
     "nonnull": {col: n}, "files": n, "snapshot_id": id,
@@ -4869,10 +4743,9 @@ def metadata_aggregate(
     integer kind (exact unbounded-int folding; float sums are
     order-dependent in Spark itself and decimals are refused
     upstream). A column appears in ``sum``/``avg``/``nonnull`` only
-    when every live file recorded sums (tables written before round
-    12 have not — ``analyze_table`` backfills); with
-    ``require_sums=True`` a requested integer column lacking coverage
-    raises instead of being omitted. A per-file decimal(38,0)
+    when every live file recorded its sum — a column physically
+    absent from some files (added by schema evolution) is left out,
+    since only a real query can NULL-pad it. A per-file decimal(38,0)
     overflow at sweep time, or a fold total at/beyond 2^63 (where the
     real query's bigint SUM itself overflows), always raises —
     exactness over availability. SUM of an all-NULL column is None
@@ -4885,25 +4758,22 @@ def metadata_aggregate(
     - merge-on-read delete vectors present (masked rows would count,
       and a masked row may hold a column's extreme) — fold_deletes
       first;
-    - a live file without recorded stats/row counts (legacy
-      generation: run ``analyze_table``);
-    - a requested column outside the recorded stats set, without
-      footer stats in some file, or non-numeric under an unversioned
-      (pre-typed) block;
+    - a live file without recorded stats/row counts (a generation
+      committed without stats: run ``analyze_table``);
+    - a requested column outside the recorded stats set, or without
+      footer stats in some file;
     - a TIMESTAMP partition column (dir values render through the
       session; other partition columns answer MIN/MAX from the live
-      entry keys themselves — round-12 #10 — and never enter
-      SUM/AVG).
+      entry keys themselves — and never enter SUM/AVG).
     ``columns=None`` aggregates every recorded stats column. An
     entirely-NULL column returns None min/max (SQL's MIN/MAX over
     all-NULL). Deleted-but-carried generations never count: liveness
     follows the same owner walk as pruned reads.
 
-    ``partitions`` ({col: value | list-of-values}, the
-    read_snapshot shape — round-14 directive #2) scopes the whole
-    fold to the MATCHING live entries: ``COUNT(*) ... WHERE date =
-    '2026-08-15'`` on a partitioned fact table answers from the
-    matching partitions' stats alone. Exact because a data file
+    ``partitions`` ({col: value | list-of-values}, the read_snapshot
+    shape) scopes the whole fold to the MATCHING live entries:
+    ``COUNT(*) ... WHERE date = '2026-08-15'`` on a partitioned fact
+    table answers from the matching partitions' stats alone. Exact because a data file
     lives entirely inside one partition leaf, so partition-level
     pruning loses no rows and admits no extras. An empty match
     returns SQL's empty-aggregate row (0 / NULLs); an unknown or
@@ -4916,10 +4786,9 @@ def metadata_aggregate(
         # folds many groups off ONE read) — trust it verbatim.
         man = _man
     elif as_of is not None:
-        # Time travel (round-13 optional #9): the fold's math works
-        # on ANY manifest — a pinned version's stats sidecars stay
-        # referenced (and vacuum-protected) as long as its manifest
-        # is retained. Raises the standard refusal on an expired or
+        # Time travel: the fold's math works on ANY manifest — a
+        # pinned version's stats sidecars stay referenced (and
+        # vacuum-protected) as long as its manifest is retained. Raises the standard refusal on an expired or
         # never-committed id so callers fall back to a real query.
         try:
             man = read_manifest(spark, table_dir, as_of)
@@ -4957,15 +4826,13 @@ def metadata_aggregate(
     pcols = set(_pcols(man.get("partition_col")) or [])
     kinds: dict[str, str] = {}
     types = {f["name"]: f["type"] for f in man.get("schema") or []}
-    v2 = stats.get("v") == 2
     part_cols: list[str] = []
     for c in cols:
         if c in pcols:
             # Partition columns answer MIN/MAX from the ENTRY KEYS
-            # themselves (round-12 #10 — composing show_partitions'
-            # source instead of refusing): every live entry IS a
-            # value occurrence. Kinds that order reliably from the
-            # raw dir strings only; timestamp partition values render
+            # themselves (composing show_partitions' source instead
+            # of refusing): every live entry IS a value occurrence.
+            # Kinds that order reliably from the raw dir strings only; timestamp partition values render
             # through the session and are refused (rare; loud).
             k = stat_kind(types.get(c, ""))
             if k not in ("numeric", "string", "date"):
@@ -4996,12 +4863,6 @@ def metadata_aggregate(
                 f"metadata_aggregate: column {c!r} has no orderable "
                 "stats kind"
             )
-        if k != "numeric" and not v2:
-            raise ValueError(
-                f"metadata_aggregate: {c!r} is non-numeric and the "
-                "stats block predates typed normalization — run "
-                "analyze_table to upgrade"
-            )
         kinds[c] = k
     int_cols = [
         c
@@ -5022,7 +4883,7 @@ def metadata_aggregate(
             "snapshot_id": man["snapshot_id"],
             "types": {c: types.get(c) for c in cols},
         }
-    if not stats or not _stats_covered(stats):
+    if not _stats_covered(stats):
         raise ValueError(
             "metadata_aggregate: no per-file stats/row counts in the "
             "manifest — run analyze_table (or commit once) to record "
@@ -5066,7 +4927,7 @@ def metadata_aggregate(
     # this gen's doc: partial replication, hand-restored backup) must
     # REFUSE — silently dropping the generation from the fold would
     # serve a wrong COUNT/MIN/MAX while the coverage gate above
-    # passed (round-13 review finding).
+    # passed.
     torn = [g for g, doc in loaded.items() if doc is None]
     if torn:
         raise ValueError(
@@ -5095,9 +4956,9 @@ def metadata_aggregate(
                 )
             # Integer-kind columns parse back to Python int — the
             # contract is "what collect() on the equivalent real query
-            # returns", and a bigint's MIN is 5, not 5.0 (round-12
-            # directive #3). The 2^53 refusal above guarantees the
-            # intermediate double is exact.
+            # returns", and a bigint's MIN is 5, not 5.0. The 2^53
+            # refusal above guarantees the intermediate double is
+            # exact.
             head = types.get(col, "").split("(")[0].strip().lower()
             if head in int_heads:
                 return int(v)
@@ -5124,8 +4985,8 @@ def metadata_aggregate(
     maxs: dict[str, object] = {c: None for c in cols}
     for g, file_rel in live:
         doc = loaded[g]
-        nr = (doc["rows"] or {}).get(file_rel)
-        per_col = (doc["files"] or {}).get(file_rel)
+        nr = doc["rows"].get(file_rel)
+        per_col = doc["files"].get(file_rel)
         if nr is None or per_col is None:
             raise ValueError(
                 f"metadata_aggregate: live file {file_rel!r} has no "
@@ -5152,9 +5013,9 @@ def metadata_aggregate(
                 mins[c] = lo
             if maxs[c] is None or hi > maxs[c]:
                 maxs[c] = hi
-    # Partition-column MIN/MAX from the live entry keys (round-12
-    # #10): one parsed value per LIVE entry — every entry has data by
-    # construction (empty partitions drop out of the manifest).
+    # Partition-column MIN/MAX from the live entry keys: one parsed
+    # value per LIVE entry — every entry has data by construction
+    # (empty partitions drop out of the manifest).
     if part_cols:
         pcols_list = _pcols(man.get("partition_col")) or []
         for key in entries:
@@ -5165,40 +5026,31 @@ def metadata_aggregate(
                     mins[c] = pv
                 if maxs[c] is None or pv > maxs[c]:
                     maxs[c] = pv
-    # SUM/AVG fold (round 12): exact Python-int accumulation over the
-    # per-file decimal sums; a column is answered only when EVERY
-    # live file recorded it.
+    # SUM/AVG fold: exact Python-int accumulation over the per-file
+    # decimal sums; a column is answered only when EVERY live file
+    # recorded it.
     sums_out: dict[str, object] = {}
     avg_out: dict[str, object] = {}
     nnn_out: dict[str, int] = {}
     for c in int_cols:
         tot = 0
         n_tot = 0
-        covered: bool | str = True
+        covered = True
         for g, file_rel in live:
             doc = loaded[g]
-            nr = (doc["rows"] or {}).get(file_rel)
-            if nr is not None and int(nr) == 0:
+            if int(doc["rows"][file_rel]) == 0:
                 continue  # empty file: contributes nothing
-            per_s = doc["sums"]
-            per_n = doc["nonnull"]
-            if per_s is None or per_n is None:
-                # Never recorded (pre-round-12 sidecar / migrated
-                # inline block): ANALYZE backfills by re-sweeping.
-                covered = "unrecorded"
+            per_s = doc["sums"].get(file_rel, {})
+            per_n = doc["nonnull"].get(file_rel, {})
+            if c not in per_s or c not in per_n:
+                # The sweep could not record THIS column for THIS
+                # file (physically absent: added by a later schema
+                # evolution) — no maintenance can conjure the values;
+                # only a real query (NULL-padding the column) answers.
+                covered = False
                 break
-            if c not in per_s.get(file_rel, {}) or c not in per_n.get(
-                file_rel, {}
-            ):
-                # Recorded sweep that could not record THIS column
-                # for THIS file (physically absent: added by a later
-                # schema evolution) — no maintenance can conjure the
-                # values; only a real query (NULL-padding the column)
-                # answers.
-                covered = "absent"
-                break
-            n = int(per_n[file_rel][c])
-            s = per_s[file_rel][c]
+            n = int(per_n[c])
+            s = per_s[c]
             if n == 0:
                 continue  # all-null column in this file
             if s is None:
@@ -5209,19 +5061,7 @@ def metadata_aggregate(
                 )
             tot += int(s)
             n_tot += n
-        if covered is not True:
-            if require_sums:
-                raise ValueError(
-                    f"metadata_aggregate: {c!r} has live files "
-                    "without recorded sums — "
-                    + (
-                        "run analyze_table to backfill"
-                        if covered == "unrecorded"
-                        else "the column is physically absent from "
-                        "some files (added by schema evolution); "
-                        "use a real query"
-                    )
-                )
+        if not covered:
             continue  # omitted: metadata cannot answer this column
         if n_tot == 0:
             sums_out[c] = None  # SQL SUM/AVG over all NULLs
@@ -5423,14 +5263,13 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
     }
     stats = man.get("stats") or {}
     covered = len(_stats_covered(stats) & gens)
-    # Distinct sidecar FILES serving the live generations (round-13
-    # optional #9): the fragmentation signal behind metadata-
-    # aggregate latency — `consolidate_stats`/`ANALYZE` folds a large
-    # count to 1. Cheap: manifest values only, nothing loaded.
+    # Distinct sidecar FILES serving the live generations: the
+    # fragmentation signal behind metadata-aggregate latency —
+    # `consolidate_stats`/`ANALYZE` folds a large count to 1. Cheap: manifest values only, nothing loaded.
     side = stats.get("sidecars") or {}
     live_rels = {side[g] for g in side if g in gens}
     n_side_files = len(live_rels)
-    # Consolidated SHARDS among them (round-14): a user reading WHY a
+    # Consolidated SHARDS among them: a user reading WHY a
     # metadata aggregate is slow (or refused) sees the shard/loose
     # split at a glance — many loose files = consolidation due.
     n_shards = sum(
@@ -5438,22 +5277,19 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
         for r in live_rels
         if r.rsplit("/", 1)[-1].startswith("consolidated-")
     )
-    # SUM/AVG coverage (the other refusal axis): live generations
-    # whose sidecars recorded per-file sums — below n_generations
-    # means SUM/AVG omit-or-refuse until ANALYZE backfills. DESCRIBE
-    # is the diagnostic surface, so the O(live generations) cached
-    # loads are its job (same trade analyze_table makes).
-    sums_covered = 0
-    for g in sorted(_stats_covered(stats) & gens):
-        doc = _load_gen_stats(
-            spark, table_dir, stats, g, man.get("rename_log")
-        )
-        if doc is not None and doc["sums"] is not None:
-            sums_covered += 1
+    # SUM/AVG coverage: live generations whose sidecar docs load (a
+    # doc lost from its consolidated shard refuses SUM/AVG until
+    # ANALYZE re-sweeps it). DESCRIBE is the diagnostic surface, so
+    # the O(live generations) cached loads are its job (same trade
+    # analyze_table makes).
+    sums_covered = sum(
+        _load_gen_stats(spark, table_dir, stats, g) is not None
+        for g in sorted(_stats_covered(stats) & gens)
+    )
     row = (
         table_dir,
         int(man["snapshot_id"]),
-        int(man.get("committed_at_ms") or 0),
+        int(man["committed_at_ms"]),
         _pcols(man.get("partition_col")) or [],
         man.get("layout_by"),
         len(man["entries"]),
@@ -6147,7 +5983,7 @@ def vacuum_snapshots(
         retained_mans = {
             sid: man
             for sid, man in cand.items()
-            if int(man.get("committed_at_ms") or 0) >= horizon_ms
+            if int(man["committed_at_ms"]) >= horizon_ms
         }
         expired = [i for i in expired if i not in retained_mans]
     kept = [i for i in ids if i not in set(expired)]

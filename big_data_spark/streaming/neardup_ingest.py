@@ -60,8 +60,8 @@ from pyspark.sql import functions as F
 
 from big_data_spark.io.snapshot import (
     append_snapshot,
+    latest_manifest,
     read_snapshot,
-    snapshot_ids,
 )
 from big_data_spark.lineage import truncate_lineage
 
@@ -78,12 +78,21 @@ def _read_state(
     spark: SparkSession, index_dir: str, table: str, below: int | None
 ) -> DataFrame | None:
     tdir = f"{index_dir}/{table}"
-    ids = snapshot_ids(spark, tdir)
-    if below is not None:
-        ids = [i for i in ids if i < below]
-    if not ids:
+    man = latest_manifest(spark, tdir, below=below)
+    if man is None:
         return None
-    return read_snapshot(spark, tdir, as_of=ids[-1])
+    if table == "bands":
+        # The probe equi-joins stored buckets against this engine's
+        # xxhash64 longs: an index whose bucket column has another
+        # type would fail mid-join with Spark's CAST_INVALID_INPUT.
+        types = {f["name"]: f["type"] for f in man.get("schema") or []}
+        if types.get("bucket") != "bigint":
+            raise ValueError(
+                f"near-dup band index at {index_dir!r} stores bucket as "
+                f"{types.get('bucket')!r}, not bigint — rebuild the "
+                f"index at {index_dir!r} from source"
+            )
+    return read_snapshot(spark, tdir, as_of=man["snapshot_id"])
 
 
 def read_neardup_clusters(
@@ -179,15 +188,11 @@ def ingest_neardup_batch(
     sh_old = _read_state(spark, index_dir, "shingles", batch_id)
     if bands_old is not None:
         # Partition-pruned probe: the batch's distinct _bb values are
-        # bounded driver metadata (<= _N_BAND_PARTS ints); the isNull
-        # arm keeps generations written before the _bb layout probing
-        # correctly (their rows read _bb as NULL).
+        # bounded driver metadata (<= _N_BAND_PARTS ints).
         bb_vals = [
             r["_bb"] for r in bands_new.select("_bb").distinct().collect()
         ]
-        bands_old = bands_old.filter(
-            F.col("_bb").isin(bb_vals) | F.col("_bb").isNull()
-        )
+        bands_old = bands_old.filter(F.col("_bb").isin(bb_vals))
         n, o = bands_new.alias("n"), bands_old.alias("o")
         # Broadcast the BATCH side: the stored index is probed
         # map-side — the only corpus-sized touch in the whole batch.

@@ -54,7 +54,11 @@ def pytest_collection_modifyitems(config, items):
     addopts (-m "not slow") deselect them so the fast gate tier —
     the full oracle gate + fast rows for every operator family —
     completes inside a bounded verification window. Full sweep:
-    python -m pytest tests/ -m "slow or not slow"."""
+    python -m pytest tests/ -m "slow or not slow".
+
+    An entry naming a function its (collected) file no longer defines
+    fails the run: a renamed slow test would otherwise silently move
+    into the fast tier."""
     manifest = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
     with open(manifest) as fh:
         slow = {
@@ -62,7 +66,20 @@ def pytest_collection_modifyitems(config, items):
             for line in fh
             if line.strip() and not line.startswith("#")
         }
+    modules = {}
     for item in items:
         base = item.nodeid.split("[")[0]
         if base in slow:
             item.add_marker(pytest.mark.slow)
+        if getattr(item, "module", None) is not None:
+            modules[base.split("::")[0]] = item.module
+    stale = []
+    for entry in sorted(slow):
+        path, func = entry.split("::")
+        if path in modules and not hasattr(modules[path], func):
+            stale.append(entry)
+    if stale:
+        raise pytest.UsageError(
+            f"{manifest} names functions that no longer exist: {stale} "
+            "— update the slow-test list"
+        )

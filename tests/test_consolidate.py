@@ -433,6 +433,8 @@ def test_prefetch_attributes_docs_to_the_rel_actually_read(
             files={f_rel: {"k": ["0", "9"]}},
             rows={f_rel: 10},
             names_at=0,
+            sums={},
+            nonnull={},
         )
         side[g] = rel
         if i == 0:
@@ -444,8 +446,8 @@ def test_prefetch_attributes_docs_to_the_rel_actually_read(
         "files": {"_data/s=0/part-0.parquet": {"k": ["0", "9"]}},
         "rows": {"_data/s=0/part-0.parquet": 999},
         "names_at": 0,
-        "sums": None,
-        "nonnull": None,
+        "sums": {},
+        "nonnull": {},
     }
     own = {}
     for j in (100, 101):
@@ -456,8 +458,8 @@ def test_prefetch_attributes_docs_to_the_rel_actually_read(
             "files": {f_rel: {"k": ["0", "9"]}},
             "rows": {f_rel: 7},
             "names_at": 0,
-            "sums": None,
-            "nonnull": None,
+            "sums": {},
+            "nonnull": {},
         }
     con_rel = "_manifests/stats/consolidated-deadbeef.json"
     os.makedirs(f"{t}/_manifests/stats", exist_ok=True)

@@ -2,13 +2,11 @@
 commits record per-file min/max for the table's leading numeric
 columns; pruned reads on a stats-bearing table are METADATA-ONLY
 (zero footer opens, zero file listings), identical in result to the
-footer-sweep path, which survives as the fallback for stat-less
-legacy generations. Covered generations carry as pure metadata —
+footer-sweep path, which survives as the fallback for generations
+committed without stats. Covered generations carry as pure metadata —
 only new generations are swept, once, at commit time."""
 
 from __future__ import annotations
-
-import pytest
 
 import big_data_spark.io.snapshot as snap
 import big_data_spark.io.stats as stats_mod
@@ -45,10 +43,9 @@ def test_commit_records_default_numeric_stats(spark, tmp_path):
     write_snapshot(_mk(spark, 0, 100).repartition(4), t)
     man = latest_manifest(spark, t)
     st = man["stats"]
-    # round 11 typed skipping: string columns are stat-worthy too,
-    # and fresh tables stamp the v2 canonical-form marker.
+    # round 11 typed skipping: string columns are stat-worthy too.
     assert st["columns"] == ["k", "v", "s"]
-    assert st["v"] == 2
+    assert man["format_version"] == snap.FORMAT_VERSION
     # round 12: the manifest carries only SIDECAR PATHS — the per-file
     # dicts live in one immutable JSON per generation.
     assert "gens" not in st and "rows" not in st
@@ -114,49 +111,6 @@ def test_carry_sweeps_only_new_generations(spark, tmp_path, monkeypatch):
         == man0["stats"]["sidecars"]["s=0"]
     )
     assert set(man1["stats"]["sidecars"]) == {"s=0", "s=1"}
-
-
-def test_legacy_generation_falls_back_to_footers(
-    spark, tmp_path, monkeypatch
-):
-    """A generation committed without stats prunes through the footer
-    sweep — and ONLY it does (covered generations stay metadata)."""
-    t = str(tmp_path / "legacy")
-    monkeypatch.setattr(
-        snap, "_auto_commit_stats", lambda *a, **k: None
-    )
-    append_snapshot(
-        _mk(spark, 0, 100).repartitionByRange(4, "k"), t, snapshot_id=0
-    )
-    monkeypatch.undo()
-    assert latest_manifest(spark, t)["stats"] is None
-    append_snapshot(
-        _mk(spark, 100, 200).repartitionByRange(4, "k"), t, snapshot_id=1
-    )
-    man = latest_manifest(spark, t)
-    # Backfill-on-next-commit: auto saw no prev stats and swept BOTH
-    # live generations, so the table is fully covered again.
-    assert snap._stats_covered(man["stats"]) == {"s=0", "s=1"}
-    swept_paths: list = []
-    real = stats_mod.prune_files_multi
-
-    def counting(spark_, paths, *a, **k):
-        swept_paths.extend(paths)
-        return real(spark_, paths, *a, **k)
-
-    monkeypatch.setattr(stats_mod, "prune_files_multi", counting)
-    got = read_snapshot(spark, t, predicate={"k": (150.0, 160.0)})
-    assert {r["k"] for r in got.collect()} == set(range(150, 161))
-    assert swept_paths == []  # fully covered -> zero sweeps
-
-    # Force a genuinely stat-less newest commit: the pruned read then
-    # sweeps exactly the uncovered paths and the result stays exact.
-    monkeypatch.setattr(snap, "_auto_commit_stats", lambda *a, **k: None)
-    append_snapshot(
-        _mk(spark, 200, 250).repartitionByRange(2, "k"), t, snapshot_id=2
-    )
-    got2 = read_snapshot(spark, t, predicate={"k": (150.0, 210.0)})
-    assert {r["k"] for r in got2.collect()} == set(range(150, 211))
 
 
 def test_stats_follow_schema_evolution(spark, tmp_path, monkeypatch):
@@ -246,12 +200,15 @@ def test_predicate_outside_stats_columns_falls_back_to_footers(
     assert len(got.inputFiles()) < 8  # and it genuinely pruned
 
 
-def test_legacy_backfill_resolves_renamed_columns(spark, tmp_path, monkeypatch):
-    """Backfilling stats for a generation written BEFORE a rename must
+def test_statless_backfill_resolves_renamed_columns(
+    spark, tmp_path, monkeypatch
+):
+    """A generation committed without stats prunes exactly through
+    the footer sweep; backfilling its stats AFTER a rename must
     resolve the old physical name through the evolution log — a
     None-recorded column would be permanently unprunable (round-11
     review)."""
-    t = str(tmp_path / "legacy_ren")
+    t = str(tmp_path / "statless_ren")
     monkeypatch.setattr(snap, "_auto_commit_stats", lambda *a, **k: None)
     append_snapshot(
         spark.range(0, 100)
@@ -262,7 +219,9 @@ def test_legacy_backfill_resolves_renamed_columns(spark, tmp_path, monkeypatch):
     )
     monkeypatch.undo()
     evolve_schema(spark, t, renames={"amount": "price"})
-    assert latest_manifest(spark, t)["stats"] is None  # still legacy
+    assert latest_manifest(spark, t)["stats"] is None  # still stat-less
+    got0 = read_snapshot(spark, t, predicate={"price": (10.0, 20.0)})
+    assert {r["price"] for r in got0.collect()} == set(range(10, 21))
     # Next data commit backfills BOTH generations under current names.
     append_snapshot(
         spark.range(100, 150)
@@ -333,55 +292,6 @@ def test_manifest_size_is_o_generations_not_o_files(spark, tmp_path):
     assert len(pruned.inputFiles()) <= 4
 
 
-def test_inline_legacy_block_migrates_to_sidecars(spark, tmp_path):
-    """A round-11 manifest (inline gens/rows) keeps reading as-is;
-    the FIRST commit on it migrates every carried generation into a
-    sidecar — one-time metadata copy, identical prune + aggregate
-    results after."""
-    import json
-    import os
-
-    from big_data_spark.io.snapshot import metadata_aggregate
-
-    t = str(tmp_path / "mig")
-    write_snapshot(_mk(spark, 0, 400).repartitionByRange(4, "k"), t)
-    man = latest_manifest(spark, t)
-    # Rewrite the committed manifest into the round-11 INLINE layout.
-    side = man["stats"]["sidecars"]
-    gens_inline: dict = {}
-    rows_inline: dict = {}
-    for g in side:
-        files, rows = snap.load_generation_stats(spark, t, man, g)
-        gens_inline[g] = files
-        rows_inline[g] = rows
-    man["stats"] = {
-        "columns": man["stats"]["columns"],
-        "v": 2,
-        "gens": gens_inline,
-        "rows": rows_inline,
-    }
-    p = f"{t}/_manifests/manifest-{man['snapshot_id']:012d}.json"
-    open(p, "w").write(json.dumps(man, sort_keys=True))
-    crc = f"{t}/_manifests/.manifest-{man['snapshot_id']:012d}.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-    # Inline layout still serves pruned reads and aggregates.
-    got = read_snapshot(spark, t, predicate={"k": (10.0, 20.0)})
-    assert {r["k"] for r in got.collect()} == set(range(10, 21))
-    assert metadata_aggregate(spark, t)["rows"] == 400
-    # One commit migrates: the new manifest carries sidecars only.
-    append_snapshot(_mk(spark, 400, 450), t)
-    man2 = latest_manifest(spark, t)
-    assert "gens" not in man2["stats"]
-    assert set(man2["stats"]["sidecars"]) == {"s=0", "s=1"}
-    assert man2["stats"]["v"] == 2  # typed marker survives migration
-    got2 = read_snapshot(spark, t, predicate={"k": (395.0, 405.0)})
-    assert {r["k"] for r in got2.collect()} == set(range(395, 406))
-    agg = metadata_aggregate(spark, t)
-    assert agg["rows"] == 450
-    assert agg["min"]["k"] == 0 and agg["max"]["k"] == 449
-
-
 def test_rename_after_sweep_replays_sidecar_names(
     spark, tmp_path, monkeypatch
 ):
@@ -448,46 +358,6 @@ def test_vacuum_reclaims_orphan_sidecars(spark, tmp_path):
     assert {r["k"] for r in got.collect()} == set(range(12, 28))
     # Every pre-existing (referenced) sidecar survived untouched.
     assert all_before <= after
-
-
-def test_rowsless_inline_migration_refuses_then_analyze_backfills(
-    spark, tmp_path
-):
-    """An inline legacy block WITHOUT row counts migrates to a
-    rows=None sidecar: pruning works, aggregates refuse loudly, and
-    ANALYZE re-sweeps exactly those generations."""
-    import json
-    import os
-
-    from big_data_spark.io.snapshot import analyze_table, metadata_aggregate
-
-    t = str(tmp_path / "norows")
-    write_snapshot(_mk(spark, 0, 200).repartitionByRange(2, "k"), t)
-    man = latest_manifest(spark, t)
-    gens_inline = {}
-    for g in man["stats"]["sidecars"]:
-        files, _ = snap.load_generation_stats(spark, t, man, g)
-        gens_inline[g] = files
-    man["stats"] = {
-        "columns": man["stats"]["columns"],
-        "v": 2,
-        "gens": gens_inline,  # no "rows": pre-row-count era
-    }
-    p = f"{t}/_manifests/manifest-{man['snapshot_id']:012d}.json"
-    open(p, "w").write(json.dumps(man, sort_keys=True))
-    crc = f"{t}/_manifests/.manifest-{man['snapshot_id']:012d}.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-    append_snapshot(_mk(spark, 200, 250), t)  # migrates, rows=None
-    man2 = latest_manifest(spark, t)
-    assert set(man2["stats"]["sidecars"]) == {"s=0", "s=1"}
-    got = read_snapshot(spark, t, predicate={"k": (50.0, 60.0)})
-    assert {r["k"] for r in got.collect()} == set(range(50, 61))
-    with pytest.raises(ValueError, match="analyze_table"):
-        metadata_aggregate(spark, t)
-    st = analyze_table(spark, t)
-    assert st["covered_generations"] == 2
-    assert metadata_aggregate(spark, t)["rows"] == 250
 
 
 def test_metadata_aggregate_bulk_prefetches_many_generations(

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_spark.io.snapshot import append_snapshot
 from big_data_spark.operators.components import connected_components
 from big_data_spark.queries.llm import minhash_lsh_pairs
 from big_data_spark.streaming.neardup_ingest import (
@@ -234,3 +236,24 @@ def test_streaming_wrapper(spark, tmp_path):
     truth = _batch_truth(docs)
     assert len(got) == 200
     assert got == {d: truth.get(d, d) for d in got}
+
+
+def test_string_bucket_band_index_asks_for_rebuild(spark, tmp_path):
+    """A band index whose stored bucket is an md5 hex string (the
+    earlier band key) cannot be probed with this engine's bigint
+    buckets: the ingest refuses with a rebuild instruction instead of
+    failing mid-join with Spark's CAST_INVALID_INPUT."""
+    idx = str(tmp_path / "index")
+    append_snapshot(
+        spark.createDataFrame(
+            [(1, 0, "0cc175b9c0f1b6a831c399e269772661", 3)],
+            "doc_id bigint, band int, bucket string, _bb int",
+        ),
+        f"{idx}/bands",
+        snapshot_id=0,
+        partition_by="_bb",
+    )
+    with pytest.raises(
+        ValueError, match=rf"rebuild the index at {re.escape(repr(idx))}"
+    ):
+        ingest_neardup_batch(_docs(spark).limit(5), idx, 1)

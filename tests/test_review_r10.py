@@ -1,22 +1,16 @@
 """Round-10 code-review regressions: exact epoch math in TIMESTAMP
 AS OF parsing, row-CDF consistency under non-deterministic SET
 expressions, the sidecar column-collision guard, time travel inside
-INSERT row sources, and the replay-timestamp carry for
-pre-timestamp-era manifests."""
+INSERT row sources."""
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 
 from big_data_spark.io.snapshot import (
     append_snapshot,
     read_changes,
-    read_manifest,
     read_snapshot,
-    resolve_as_of_ts,
     update_where,
 )
 from big_data_spark.sqldml import _parse_ts_ms
@@ -118,30 +112,6 @@ def test_insert_select_with_time_travel_source(spark, tmp_path):
     )
     assert st["inserted_rows"] == 3
     assert read_snapshot(spark, t).count() == 6
-
-
-def test_replace_recommit_of_pre_timestamp_manifest_stays_monotone(
-    spark, tmp_path
-):
-    """A replace replay of a manifest that predates commit
-    timestamps carries 0 forward (always-eligible semantics), never a
-    wall-clock stamp above its successor's."""
-    t = str(tmp_path / "zero_era")
-    df = spark.range(3).selectExpr("id AS k")
-    append_snapshot(df, t, snapshot_id=0)
-    # Rewrite manifest 0 as the pre-timestamp era wrote it.
-    mp = f"{t}/_manifests/manifest-{0:012d}.json"
-    body = json.load(open(mp))
-    body.pop("committed_at_ms")
-    crc = f"{t}/_manifests/.manifest-{0:012d}.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)  # out-of-band rewrite invalidates the sidecar
-    json.dump(body, open(mp, "w"))
-    append_snapshot(spark.range(2).selectExpr("id AS k"), t, snapshot_id=1)
-    ts1 = read_manifest(spark, t, 1)["committed_at_ms"]
-    append_snapshot(df, t, snapshot_id=0, replace=True)  # crash replay
-    assert read_manifest(spark, t, 0)["committed_at_ms"] == 0
-    assert resolve_as_of_ts(spark, t, ts1) == 1
 
 
 def test_dml_attribution_with_aliasing_partition_values(spark, tmp_path):

@@ -1080,3 +1080,123 @@ def test_delete_where_prunes_files_with_identical_result(
     a = sorted(map(tuple, read_snapshot(spark, t_pruned).collect()))
     b = sorted(map(tuple, read_snapshot(spark, t_plain).collect()))
     assert a == b and len(a) == 330
+
+
+# ----------------------------------------------- on-disk format version
+
+
+def _strip_format_version(table_dir, sid):
+    import json
+
+    path = f"{table_dir}/_manifests/manifest-{sid:012d}.json"
+    with open(path) as fh:
+        man = json.load(fh)
+    del man["format_version"]
+    with open(path, "w") as fh:
+        json.dump(man, fh, sort_keys=True)
+    crc = f"{table_dir}/_manifests/.manifest-{sid:012d}.json.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_unstamped_manifest_refused_on_serial_and_bulk_reads(
+    spark, tmp_path
+):
+    """A manifest without the format stamp fails with ONE message
+    naming the table and the recovery — through the serial manifest
+    read and through the bulk scan that takes over past the
+    threshold."""
+    import re
+
+    import big_data_spark.io.snapshot as snap
+    from big_data_spark.io.snapshot import table_history
+
+    t = str(tmp_path / "unstamped")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t)
+    _strip_format_version(t, 0)
+    msg = rf"^{re.escape(repr(t))} has on-disk format version None, .*rebuild it from source$"
+    with pytest.raises(ValueError, match=msg):
+        read_snapshot(spark, t)
+
+    t2 = str(tmp_path / "unstamped_bulk")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t2)
+    man = latest_manifest(spark, t2)
+    n = snap._BULK_MANIFEST_THRESHOLD + 1
+    for sid in range(1, n):
+        commit_manifest(
+            spark, t2, sid, man["entries"], schema_fields=man["schema"]
+        )
+    assert len(snapshot_ids(spark, t2)) == n
+    table_history(spark, t2)  # every manifest stamped: reads fine
+    _strip_format_version(t2, n // 2)
+    msg2 = rf"^{re.escape(repr(t2))} has on-disk format version None, .*rebuild it from source$"
+    with pytest.raises(ValueError, match=msg2):
+        table_history(spark, t2)
+
+
+def test_catalog_binding_of_another_version_refused(spark, tmp_path):
+    import json
+    import re
+
+    from big_data_spark.catalog import SnapshotCatalog
+
+    base = str(tmp_path / "wh")
+    t = str(tmp_path / "bound")
+    write_snapshot(spark.range(3).selectExpr("id AS k"), t)
+    cat = SnapshotCatalog(spark, base_dir=base)
+    cat.register("bound_t", t, persist=True)
+    SnapshotCatalog(spark, base_dir=base)  # current binding loads
+    path = f"{base}/_catalog/bound_t.json"
+    with open(path, "w") as fh:
+        json.dump({"v": 1, "name": "bound_t", "dir": t}, fh)
+    crc = f"{base}/_catalog/.bound_t.json.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+    msg = rf"^{re.escape(repr(base + '/_catalog'))} has on-disk format version 1, .*rebuild it from source$"
+    with pytest.raises(ValueError, match=msg):
+        SnapshotCatalog(spark, base_dir=base)
+
+
+def test_every_writer_stamps_the_format_version(spark, tmp_path):
+    """Each manifest a table's lifecycle leaves on disk carries the
+    stamp: write, append, COW and MOR delete, update, MERGE, compact,
+    evolve_schema and rollback."""
+    import json
+
+    from big_data_spark.io.compact import compact_snapshot
+    from big_data_spark.io.snapshot import (
+        FORMAT_VERSION,
+        append_snapshot,
+        delete_where,
+        evolve_schema,
+        rollback_snapshot,
+        update_where,
+    )
+    from big_data_spark.operators.merge import merge_snapshot
+
+    t = str(tmp_path / "life")
+    rows = "k long, v long"
+    steps = [
+        lambda: write_snapshot(
+            spark.createDataFrame([(i, i) for i in range(10)], rows), t
+        ),
+        lambda: append_snapshot(
+            spark.createDataFrame([(10, 10), (11, 11)], rows), t
+        ),
+        lambda: delete_where(spark, t, "k < 2"),
+        lambda: delete_where(spark, t, "k = 5", mode="mor"),
+        lambda: update_where(spark, t, "k = 6", {"v": "v + 100"}),
+        lambda: compact_snapshot(spark, t),
+        lambda: merge_snapshot(
+            spark, t, spark.createDataFrame([(7, 70), (20, 20)], rows), ["k"]
+        ),
+        lambda: evolve_schema(spark, t, renames={"v": "val"}),
+        lambda: rollback_snapshot(spark, t, 1),
+    ]
+    for i, step in enumerate(steps):
+        step()
+        assert snapshot_ids(spark, t) == list(range(i + 1)), i
+    mdir = f"{t}/_manifests"
+    for sid in range(len(steps)):
+        with open(f"{mdir}/manifest-{sid:012d}.json") as fh:
+            assert json.load(fh)["format_version"] == FORMAT_VERSION, sid

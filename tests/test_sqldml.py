@@ -888,144 +888,10 @@ def test_drop_racing_ctas_loses_neither(spark, tmp_path, seed):
     )
 
 
-def test_legacy_whole_file_registry_migrates_forward(spark, tmp_path):
-    """Pre-round-13 warehouses carry one _catalog.json. The FIRST
-    load migrates it forward (round-14 directive #5): every legacy
-    entry gets its own per-table binding file and the legacy file is
-    retired, so the second load takes the per-table-only path and a
-    later DROP deletes the binding file outright (no tombstone — the
-    legacy entry it would suppress is gone)."""
-    import json
-    import os
-
-    base = str(tmp_path / "whl")
-    os.makedirs(base)
-    old = str(tmp_path / "oldtab")
-    append_snapshot(spark.range(7).selectExpr("id AS k"), old)
-    with open(f"{base}/_catalog.json", "w") as fh:
-        json.dump({"v": 1, "tables": {"oldtab": old}}, fh)
-
-    cat = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert cat.tables["oldtab"] == old
-    assert (
-        cat.sql("SELECT count(*) AS n FROM oldtab").collect()[0]["n"]
-        == 7
-    )
-    # Migration: per-table binding written, legacy file retired.
-    mig = json.load(open(f"{base}/_catalog/oldtab.json"))
-    assert mig == {"v": 2, "name": "oldtab", "dir": old}
-    assert not os.path.exists(f"{base}/_catalog.json")
-    # Second load: per-table-only path, same bindings.
-    cat2 = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert cat2.tables["oldtab"] == old
-    cat2.sql("CREATE TABLE newtab AS SELECT id FROM range(3)")
-    assert os.path.exists(f"{base}/_catalog/newtab.json")
-    st = cat2.sql("DROP TABLE oldtab")
-    assert st["dropped"] is True
-    # No legacy entry left to suppress: the binding file is deleted,
-    # not tombstoned.
-    assert not os.path.exists(f"{base}/_catalog/oldtab.json")
-    fresh = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert "oldtab" not in fresh.tables and "newtab" in fresh.tables
-    # CTAS of the dropped name binds it afresh.
-    fresh.sql("CREATE TABLE oldtab AS SELECT id FROM range(4)")
-    again = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert (
-        again.sql("SELECT count(*) AS n FROM oldtab").collect()[0]["n"]
-        == 4
-    )
-
-
-def test_legacy_migration_reclaims_tombstones(spark, tmp_path):
-    """A tombstone (DROP of a legacy-recorded name) survives the
-    migrating load — a session still holding the legacy content needs
-    the suppression — and is reclaimed by the NEXT load, which finds
-    no legacy file: the dropped name stays dropped throughout and the
-    tombstone file is deleted."""
-    import json
-    import os
-
-    base = str(tmp_path / "whlt")
-    os.makedirs(f"{base}/_catalog")
-    keep = str(tmp_path / "keeptab")
-    gone = str(tmp_path / "gonetab")
-    for d in (keep, gone):
-        append_snapshot(spark.range(5).selectExpr("id AS k"), d)
-    with open(f"{base}/_catalog.json", "w") as fh:
-        json.dump(
-            {"v": 1, "tables": {"keeptab": keep, "gonetab": gone}}, fh
-        )
-    with open(f"{base}/_catalog/gonetab.json", "w") as fh:
-        json.dump({"v": 2, "name": "gonetab", "dropped": True}, fh)
-
-    first = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert "gonetab" not in first.tables and "keeptab" in first.tables
-    # Migrating load: legacy retired, tombstone KEPT, dropped name
-    # NOT resurrected as a binding.
-    assert not os.path.exists(f"{base}/_catalog.json")
-    assert json.load(open(f"{base}/_catalog/gonetab.json"))["dropped"]
-    # The reclaim pass skips FRESH tombstones (mtime guard against a
-    # racing CTAS-over-tombstone) — backdate it as a real aged one.
-    import time
-
-    old_ts = time.time() - 60
-    os.utime(f"{base}/_catalog/gonetab.json", (old_ts, old_ts))
-    second = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert "gonetab" not in second.tables and "keeptab" in second.tables
-    # Post-legacy load: the tombstone is dead weight — reclaimed.
-    assert not os.path.exists(f"{base}/_catalog/gonetab.json")
-    third = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert "gonetab" not in third.tables and "keeptab" in third.tables
-
-
-def test_concurrent_legacy_drops_never_resurrect(spark, tmp_path):
-    """Two sessions dropping DIFFERENT legacy-recorded names
-    concurrently: both drops stick (the per-name tombstones make the
-    writes disjoint; the old legacy-file rewrite let the last writer
-    re-record the other's dropped name)."""
-    import json
-    import os
-    import threading
-
-    base = str(tmp_path / "whl2")
-    os.makedirs(base)
-    dirs = {}
-    for n in ("la", "lb"):
-        d = str(tmp_path / f"leg_{n}")
-        append_snapshot(spark.range(3).selectExpr("id AS k"), d)
-        dirs[n] = d
-    with open(f"{base}/_catalog.json", "w") as fh:
-        json.dump({"v": 1, "tables": dirs}, fh)
-
-    gate = threading.Barrier(2)
-    errs: list = []
-
-    def drop(n: str) -> None:
-        try:
-            c = SnapshotCatalog(spark.newSession(), base_dir=base)
-            gate.wait(timeout=60)
-            c.sql(f"DROP TABLE {n}")
-        except Exception as exc:  # noqa: BLE001
-            errs.append(exc)
-
-    threads = [
-        threading.Thread(target=drop, args=(n,)) for n in ("la", "lb")
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=120)
-    assert not errs, errs
-    fresh = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert "la" not in fresh.tables and "lb" not in fresh.tables
-
-
 def test_many_table_warehouse_bulk_load(spark, tmp_path):
     """Past 32 binding files the registry loads in ONE distributed
     text scan (a 1000-table warehouse on an object store must not
-    pay 1000 serial round trips); tombstones still suppress and the
-    bindings come back exactly."""
-    import json
+    pay 1000 serial round trips) and the bindings come back exactly."""
     import os
 
     base = str(tmp_path / "whbulk")
@@ -1037,15 +903,7 @@ def test_many_table_warehouse_bulk_load(spark, tmp_path):
             spark.range(i + 1).selectExpr("id AS k"), t
         )
         cat.register(n, t, persist=True)
-    # hand-write a tombstone + a legacy file holding the same name:
-    # the bulk path must honor the suppression too
-    old = str(tmp_path / "bulk_legacy")
-    append_snapshot(spark.range(2).selectExpr("id AS k"), old)
-    with open(f"{base}/_catalog.json", "w") as fh:
-        json.dump({"v": 1, "tables": {"legacy_t": old}}, fh)
-    with open(f"{base}/_catalog/legacy_t.json", "w") as fh:
-        json.dump({"v": 2, "name": "legacy_t", "dropped": True}, fh)
-    assert len(os.listdir(f"{base}/_catalog")) >= 37
+    assert len(os.listdir(f"{base}/_catalog")) >= 36
     fresh = SnapshotCatalog(spark.newSession(), base_dir=base)
     assert set(fresh.tables) == set(names)
     assert (
@@ -1551,88 +1409,6 @@ def test_partition_predicate_fallthrough_matrix(spark, tmp_path):
     cat.refresh("pfall")
     m = cat.sql("SELECT COUNT(*) AS n FROM pfall WHERE p = 1")
     assert m.inputFiles() != [] and m.collect()[0]["n"] == 10
-
-
-def test_migration_write_is_create_only(spark, tmp_path):
-    """Review r14: migration publishes with CREATE-ONLY rename — an
-    existing file (a concurrent DROP's tombstone, a concurrent CTAS's
-    fresher binding) always wins over the stale legacy copy."""
-    import json
-    import os
-
-    base = str(tmp_path / "whco")
-    os.makedirs(f"{base}/_catalog")
-    cat = SnapshotCatalog(spark, versions="lazy", base_dir=base)
-    # Existing tombstone: if_absent publish must refuse and report it.
-    with open(f"{base}/_catalog/race.json", "w") as fh:
-        json.dump({"v": 2, "name": "race", "dropped": True}, fh)
-    published = cat._write_binding_doc(
-        "race",
-        json.dumps({"v": 2, "name": "race", "dir": "/tmp/stale"}),
-        if_absent=True,
-    )
-    assert published is False
-    assert json.load(open(f"{base}/_catalog/race.json"))["dropped"]
-    # Absent destination: publishes and reports it.
-    assert cat._write_binding_doc(
-        "fresh",
-        json.dumps({"v": 2, "name": "fresh", "dir": "/tmp/x"}),
-        if_absent=True,
-    )
-    assert json.load(open(f"{base}/_catalog/fresh.json"))["dir"] == "/tmp/x"
-    # No leaked temp files from the refused publish.
-    assert not [
-        f
-        for f in os.listdir(f"{base}/_catalog")
-        if ".tmp-" in f
-    ]
-
-
-def test_corrupt_legacy_registry_fails_loudly(spark, tmp_path):
-    """Review r14: a PRESENT-but-unreadable _catalog.json must fail
-    the load (as it did pre-migration), never silently drop every
-    legacy table."""
-    import os
-
-    base = str(tmp_path / "whcorrupt")
-    os.makedirs(base)
-    with open(f"{base}/_catalog.json", "w") as fh:
-        fh.write("{ truncated")
-    with pytest.raises(Exception):
-        SnapshotCatalog(spark.newSession(), base_dir=base)
-    # the corrupt file is left in place for diagnosis
-    assert os.path.exists(f"{base}/_catalog.json")
-
-
-def test_readonly_warehouse_legacy_load_still_works(
-    spark, tmp_path, monkeypatch
-):
-    """Review r14: a legacy warehouse that cannot be written to
-    (read-only mount, missing creds) must still LOAD — migration
-    failures keep the legacy file and retry later, never crash the
-    catalog constructor."""
-    import json
-    import os
-
-    base = str(tmp_path / "whro")
-    os.makedirs(base)
-    old = str(tmp_path / "rotab")
-    append_snapshot(spark.range(6).selectExpr("id AS k"), old)
-    with open(f"{base}/_catalog.json", "w") as fh:
-        json.dump({"v": 1, "tables": {"rotab": old}}, fh)
-
-    def boom(self, name, body, if_absent=False):
-        raise RuntimeError("py4j: AccessControlException (simulated)")
-
-    monkeypatch.setattr(SnapshotCatalog, "_write_binding_doc", boom)
-    cat = SnapshotCatalog(spark.newSession(), base_dir=base)
-    assert cat.tables["rotab"] == old
-    assert (
-        cat.sql("SELECT count(*) AS n FROM rotab").collect()[0]["n"]
-        == 6
-    )
-    # migration deferred: legacy file untouched, retried next load
-    assert os.path.exists(f"{base}/_catalog.json")
 
 
 def test_partition_literal_shapes_match_spark_casts(spark, tmp_path):

@@ -5,8 +5,6 @@ commit timestamps."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from big_data_spark.io.snapshot import (
@@ -86,28 +84,6 @@ def test_as_of_ts_resolution(spark, tmp_path):
         resolve_as_of_ts(spark, t, hist[0] - 10_000)
     with pytest.raises(ValueError, match="at most ONE"):
         read_snapshot(spark, t, as_of=1, tag="x")
-
-
-def test_pre_timestamp_manifests_resolve_as_epoch_zero(spark, tmp_path):
-    """Manifests written before committed_at_ms existed must stay
-    readable and always eligible for as_of_ts."""
-    import json
-
-    t = str(tmp_path / "legacy")
-    _build(spark, t, gens=2)
-    mp = f"{t}/_manifests/manifest-{0:012d}.json"
-    man = json.load(open(mp))
-    man.pop("committed_at_ms", None)
-    json.dump(man, open(mp, "w"), sort_keys=True)
-    # The Hadoop local FS keeps a checksum sidecar; rewriting the
-    # file out-of-band invalidates it.
-    crc = f"{t}/_manifests/.manifest-{0:012d}.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-    hist = table_history(spark, t)
-    row0 = hist.where("snapshot_id = 0").first()
-    assert row0["committed_at_ms"] is None
-    assert resolve_as_of_ts(spark, t, 1) == 0
 
 
 def test_rollback_snapshot_restores_content_and_schema(spark, tmp_path):

@@ -15,7 +15,6 @@ all — this extends SURVEY §2's lakehouse block.
 from __future__ import annotations
 
 import datetime as dt
-import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -245,7 +244,6 @@ def test_manifest_typed_stats_prune_metadata_only(
     )
     man = snap.latest_manifest(spark, t)
     assert man["stats"]["columns"] == ["id", "key", "d", "ts"]
-    assert man["stats"]["v"] == 2
 
     lo, hi = dt.datetime(2026, 1, 5), dt.datetime(2026, 1, 8)
     want = typed_df.filter(
@@ -265,45 +263,6 @@ def test_manifest_typed_stats_prune_metadata_only(
     # but the answer must stay exact (lossless under zero skips).
     got2 = read_snapshot(spark, t, predicate={"key": ("k00010", "k00010")})
     assert got2.count() == 80
-
-
-def test_legacy_unversioned_stats_never_typed_compare(
-    spark, tmp_path, typed_df
-):
-    """A stats block written before typed normalization (no "v": 2)
-    must NOT be compared lexicographically — its timestamp strings
-    lack fixed-width microseconds and could false-drop. The read path
-    falls back to numeric-only semantics: string bounds leave every
-    file unprunable, results stay exact."""
-    t = str(tmp_path / "legacy")
-    write_snapshot(
-        typed_df.repartitionByRange(4, "key").sortWithinPartitions("key"), t
-    )
-    # Strip the version marker in the committed manifest, simulating
-    # a pre-round-11 table.
-    man_dir = f"{t}/_manifests"
-    import os
-
-    newest = sorted(
-        n for n in os.listdir(man_dir) if n.startswith("manifest-")
-    )[-1]
-    p = f"{man_dir}/{newest}"
-    doc = json.loads(open(p).read())
-    assert doc["stats"].pop("v") == 2
-    open(p, "w").write(json.dumps(doc))
-    # Hadoop's local FS keeps a checksum sidecar; the rewrite above
-    # would otherwise fail the next manifest read.
-    crc = f"{man_dir}/.{newest}.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    got = read_snapshot(spark, t, predicate={"key": ("k00010", "k00012")})
-    want = typed_df.filter(
-        (F.col("key") >= "k00010") & (F.col("key") <= "k00012")
-    ).count()
-    assert got.count() == want
-    # unprunable: every live file still enters the scan
-    assert len(got.inputFiles()) == len(read_snapshot(spark, t).inputFiles())
 
 
 def test_manifest_prune_respects_session_timezone(
@@ -447,7 +406,7 @@ def test_analyze_backfills_statless_generations(
     assert st["analyzed_generations"] == 1
     assert st["covered_generations"] == 1
     man = snap.latest_manifest(spark, t)
-    assert man["stats"]["v"] == 2
+    assert set(man["stats"]["sidecars"]) == {"s=0"}
     assert man.get("maintenance") is True
 
     def boom(*a, **k):  # pragma: no cover
@@ -464,42 +423,6 @@ def test_analyze_backfills_statless_generations(
     st2 = analyze_table(spark, t)
     assert st2["analyzed_generations"] == 0
     assert st2["snapshot_id"] == man["snapshot_id"]
-
-
-def test_analyze_upgrades_unversioned_block_to_typed(spark, tmp_path):
-    """An unversioned (pre-typed) stats block can't serve string
-    predicates; ANALYZE re-sweeps from scratch and stamps v2, after
-    which the same predicate prunes from metadata."""
-    import os
-
-    from big_data_spark.io.snapshot import analyze_table
-
-    t = str(tmp_path / "anup")
-    df = spark.createDataFrame(
-        [(i, f"k{i % 20:04d}") for i in range(2000)], "k long, s string"
-    )
-    write_snapshot(df.repartitionByRange(4, "s").sortWithinPartitions("s"), t)
-    man_dir = f"{t}/_manifests"
-    newest = sorted(
-        n for n in os.listdir(man_dir) if n.startswith("manifest-")
-    )[-1]
-    p = f"{man_dir}/{newest}"
-    doc = json.loads(open(p).read())
-    doc["stats"].pop("v")
-    open(p, "w").write(json.dumps(doc))
-    crc = f"{man_dir}/.{newest}.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    full = len(read_snapshot(spark, t).inputFiles())
-    pre = read_snapshot(spark, t, predicate={"s": ("k0003", "k0004")})
-    assert len(pre.inputFiles()) == full  # legacy: unprunable
-
-    st = analyze_table(spark, t)
-    assert st["analyzed_generations"] == 1
-    post = read_snapshot(spark, t, predicate={"s": ("k0003", "k0004")})
-    assert post.count() == pre.count() == 200
-    assert len(post.inputFiles()) < full
 
 
 def test_analyze_sql_spelling_and_for_columns(spark, tmp_path):
@@ -626,9 +549,9 @@ def test_float_partition_keys_refuse_loudly(spark, tmp_path):
 
 
 def test_evolve_keeps_typed_stats_version(spark, tmp_path, monkeypatch):
-    """A rename/drop remaps stats keys metadata-only — the v2 marker
-    must ride along, or one evolution would silently disable typed
-    pruning forever (review finding, round 11)."""
+    """A rename/drop remaps stats keys metadata-only — typed pruning
+    must keep working after it, or one evolution would silently
+    disable it forever (review finding, round 11)."""
     from big_data_spark.io.snapshot import evolve_schema
 
     t = str(tmp_path / "evov")
@@ -642,7 +565,6 @@ def test_evolve_keeps_typed_stats_version(spark, tmp_path, monkeypatch):
     )
     evolve_schema(spark, t, renames={"v": "val"})
     man = snap.latest_manifest(spark, t)
-    assert man["stats"]["v"] == 2
     assert man["stats"]["columns"] == ["k", "region", "val"]
 
     def boom(*a, **k):  # pragma: no cover
@@ -655,11 +577,9 @@ def test_evolve_keeps_typed_stats_version(spark, tmp_path, monkeypatch):
 
 
 def test_analyze_upgrade_keeps_recorded_columns(spark, tmp_path):
-    """A version-only upgrade must keep the table's RECORDED stats
-    column set (e.g. a custom non-leading choice), not silently
+    """ANALYZE without stats_columns must keep the table's RECORDED
+    stats column set (e.g. a custom non-leading choice), not silently
     replace it with the schema default (review finding, round 11)."""
-    import os
-
     from big_data_spark.io.snapshot import analyze_table
 
     t = str(tmp_path / "ancols")
@@ -667,17 +587,6 @@ def test_analyze_upgrade_keeps_recorded_columns(spark, tmp_path):
         "id AS a", "id AS b", "id AS c", "id AS d", "id AS e"
     )
     write_snapshot(df.repartition(2), t, stats_columns=["e"])
-    man_dir = f"{t}/_manifests"
-    newest = sorted(
-        n for n in os.listdir(man_dir) if n.startswith("manifest-")
-    )[-1]
-    p = f"{man_dir}/{newest}"
-    doc = json.loads(open(p).read())
-    doc["stats"].pop("v")
-    open(p, "w").write(json.dumps(doc))
-    crc = f"{man_dir}/.{newest}.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
 
     st = analyze_table(spark, t)
     assert st["stats_columns"] == ["e"]
@@ -1073,43 +982,56 @@ def test_metadata_sum_overflow_refuses(spark, tmp_path):
         metadata_aggregate(spark, t, columns=["big"])
 
 
-def test_metadata_sum_uncovered_omits_or_refuses(spark, tmp_path):
-    """A sidecar written without sums (legacy migration) leaves the
-    column out of sum/avg by default, raises under require_sums, and
-    ANALYZE backfills by re-sweeping."""
+def test_metadata_sum_uncovered_omits_or_refuses(
+    spark, tmp_path, monkeypatch
+):
+    """An integer column added by schema evolution is physically
+    absent from the older files: metadata cannot answer it (their
+    footers carry no MIN/MAX, so the aggregate refuses) while COUNT
+    and the fully covered columns still answer. A sweep that records
+    MIN/MAX but no sum for some file leaves the column out of sum/avg
+    — omitted, never guessed."""
     from big_data_spark.io.snapshot import (
         analyze_table,
+        append_snapshot,
         metadata_aggregate,
     )
 
     t = str(tmp_path / "msumcov")
-    df = spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v")
-    write_snapshot(df.coalesce(2), t)
-    man = snap.latest_manifest(spark, t)
-    # Strip the sums from the committed sidecar, simulating a table
-    # written before round-12 sum recording.
-    import os
+    write_snapshot(spark.range(0, 100).selectExpr("id AS k").coalesce(2), t)
+    append_snapshot(
+        spark.range(100, 110).selectExpr("id AS k", "id * 2 AS v"), t
+    )
+    analyze_table(spark, t, stats_columns=["k", "v"])
+    with pytest.raises(ValueError, match="no usable footer stats for 'v'"):
+        metadata_aggregate(spark, t, columns=["k", "v"])
+    got = metadata_aggregate(spark, t, columns=["k"])
+    assert got["rows"] == 110 and got["sum"]["k"] == sum(range(110))
 
-    rel = man["stats"]["sidecars"]["s=0"]
-    p = f"{t}/{rel}"
-    doc = json.loads(open(p).read())
-    doc["sums"] = None
-    doc["nonnull"] = None
-    open(p, "w").write(json.dumps(doc, sort_keys=True))
-    crc = f"{os.path.dirname(p)}/.{os.path.basename(p)}.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-    snap._SIDECAR_CACHE.clear()  # the write primed the old content
-    got = metadata_aggregate(spark, t)
-    assert got["rows"] == 100  # COUNT and MIN/MAX still answer
-    assert got["min"]["k"] == 0
-    assert "k" not in got["sum"]  # omitted, not guessed
-    with pytest.raises(ValueError, match="analyze_table"):
-        metadata_aggregate(spark, t, require_sums=True)
-    st = analyze_table(spark, t)
-    assert st["covered_generations"] == 1
-    got2 = metadata_aggregate(spark, t, require_sums=True)
-    assert got2["sum"]["k"] == 4950 and got2["sum"]["v"] == 9900
+    t2 = str(tmp_path / "msumcov2")
+    real = snap._sweep_generation_sums
+
+    def without_v(*a, **k):
+        sums, nnn = real(*a, **k)
+        for per_file in (sums, nnn):
+            for cols in per_file.values():
+                cols.pop("v", None)
+        return sums, nnn
+
+    monkeypatch.setattr(snap, "_sweep_generation_sums", without_v)
+    write_snapshot(
+        spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v").coalesce(2),
+        t2,
+    )
+    monkeypatch.undo()
+    append_snapshot(
+        spark.range(100, 110).selectExpr("id AS k", "id * 2 AS v"), t2
+    )
+    got2 = metadata_aggregate(spark, t2, columns=["k", "v"])
+    assert got2["rows"] == 110
+    assert got2["min"]["v"] == 0 and got2["max"]["v"] == 218
+    assert got2["sum"]["k"] == sum(range(110))
+    assert "v" not in got2["sum"] and "v" not in got2["avg"]
 
 
 def test_metadata_aggregate_partition_columns_from_entry_keys(
