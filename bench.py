@@ -215,10 +215,15 @@ def main() -> None:
     # executor, which is session overhead, not query cost.
     spark.range(1000).mapInPandas(lambda it: it, "id long").count()
     # Compile each query's plan once against the tiny smoke SF: the
-    # Catalyst + Janino (whole-stage codegen) compile is plan-shape
-    # keyed, so the timed sf run below measures EXECUTION with a warm
-    # code cache — the steady state of a long-lived cluster — instead
-    # of folding ~0.5-1 s of one-time JIT per query into the number.
+    # Catalyst + Janino (whole-stage codegen) compile is keyed on the
+    # generated source, so the timed sf run below measures EXECUTION
+    # with a warm code cache — the steady state of a long-lived
+    # cluster — instead of folding ~0.5-1 s of one-time JIT per query
+    # into the number. The classes compiled here are still cached when
+    # each row's turn comes because get_spark sizes the code cache at
+    # 1,000 classes: the priming runs below then compile 21 classes
+    # over the suite. At Spark's default of 100 only the last row or
+    # two survived, and the priming runs recompiled 596.
     warm_sf = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(warm_sf):
         for name in headline:
@@ -236,6 +241,10 @@ def main() -> None:
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     errors: dict[str, str] = {}
     spreads: dict[str, list[float]] = {}
+    # Janino compiles during each row's timed repeats: with the code
+    # cache warm these read 0 or close to it.
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles: dict[str, int] = {}
     try:
         for name in headline:
             runs: list[float] = []
@@ -254,11 +263,15 @@ def main() -> None:
                 # query (PERF.md round-5 noise study).
                 spark._jvm.System.gc()
                 time.sleep(0.2)
+                compiled = codegen.METRIC_COMPILATION_TIME().getCount()
                 for _ in range(repeats):
                     start = time.perf_counter()
                     df = runners[name](spark, sf_dir)
                     df.write.format("noop").mode("overwrite").save()
                     runs.append(time.perf_counter() - start)
+                compiles[name] = (
+                    codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+                )
                 timings[name] = round(statistics.median(runs), 3)
                 # min/median/max per query: round-over-round
                 # regressions become attributable to variance (or not)
@@ -278,6 +291,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "query_runs": spreads,
+            "codegen_compiles": compiles,
             "sf": sf_dir,
         }
         if errors:

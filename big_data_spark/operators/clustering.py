@@ -24,8 +24,9 @@ operators.components.connected_components.
 from __future__ import annotations
 
 from pyspark.ml.feature import HashingTF, MinHashLSH
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from big_data_spark.lineage import truncate_lineage
 from big_data_spark.operators.ids import dense_ids
@@ -104,6 +105,20 @@ def neighbor_cluster_keys(
     )
 
 
+def base26_ids(rank: Column, n: Column) -> Column:
+    """Rank ``rank`` in [0, n) as a fixed-width base-26 letter id
+    (0 -> A, 25 -> Z, 26 -> BA at width 2). The width is the digit
+    count of n-1 in base 26, i.e. the reference's smallest w with
+    26**w >= n (Src/servers.py:151-157), at least 1."""
+    width = F.length(F.conv((n - 1).cast("string"), 10, 26))
+    digits = F.translate(
+        F.conv(rank.cast("string"), 10, 26),
+        "0123456789ABCDEFGHIJKLMNOP",
+        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+    )
+    return F.lpad(digits, width, "A")
+
+
 def assign_cluster_ids(clustered: DataFrame, cluster_col: str = "cluster") -> DataFrame:
     """Base-26 cluster ids (A, B, ..., AA, ...) with the reference's
     width rule ceil(log26(n_clusters)) (Src/servers.py:151-157) and
@@ -111,25 +126,19 @@ def assign_cluster_ids(clustered: DataFrame, cluster_col: str = "cluster") -> Da
     a distributed dense id (operators.ids) instead of driver dict
     order or a single-partition global window.
 
-    The single count() here is a scalar the reference also needed
-    (it collected all cluster keys); everything else stays distributed.
+    The width is computed inside the plan, so the caller's single
+    action runs the upstream chain once (a separate count() here
+    would run it twice).
     """
     distinct_clusters = clustered.select(cluster_col).distinct()
-    n = distinct_clusters.count()
-    width = 1
-    base = 26
-    while base**width < n:
-        width += 1
     with_rank = dense_ids(distinct_clusters, cluster_col, out_col="_rank")
-    rank = F.col("_rank")
-    digits = [
-        F.char(F.lit(65) + ((rank / (base**i)).cast("long") % base))
-        for i in range(width - 1, -1, -1)
-    ]
+    # #distinct clusters. The window puts the id dim in one partition,
+    # no more than the broadcast below ships to every task.
+    n = F.count(F.lit(1)).over(Window.partitionBy())
     ids = with_rank.select(
         cluster_col,
         F.when(F.col(cluster_col) == "user", F.lit("user"))
-        .otherwise(F.concat(*digits))
+        .otherwise(base26_ids(F.col("_rank"), n))
         .alias("cluster_id"),
     )
     # The id dim is #distinct clusters — broadcastable by construction.

@@ -206,10 +206,13 @@ def connected_components(
         .distinct(),
         eager=True,
     )
+    # Start from the closed-neighbourhood minimum rather than each
+    # vertex's own id: the same first propagation step, paid in the
+    # grouping that lists the vertices anyway, so one round fewer.
     labels = truncate_lineage(
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id")),
+        sym.groupBy("a").agg(
+            F.least(F.col("a"), F.min("b")).alias("component")
+        ).withColumnRenamed("a", "id"),
         eager=True,
     )
     for _ in range(max_iterations):

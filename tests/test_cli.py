@@ -9,6 +9,40 @@ from big_data_spark.main import main
 from tests.conftest import REFERENCE_DATA
 
 
+def _report_lines(out_dir: str) -> list[str]:
+    lines = []
+    for dirpath, _, files in os.walk(out_dir):
+        for name in files:
+            if name.startswith("part-"):
+                with open(os.path.join(dirpath, name)) as fh:
+                    lines += [f"{os.path.basename(dirpath)}:{ln}" for ln in fh]
+    return sorted(lines)
+
+
+def test_repeated_pass_reuses_generated_code(spark, tmp_path):
+    """A repeated pipeline pass finds its Janino-compiled classes in
+    Spark's codegen cache (session.get_spark sizes it above one pass's
+    ~300 classes; at Spark's default of 100 every pass recompiles all
+    of them). Defined first in this file so no other pipeline run in
+    the session has compiled these plan shapes already."""
+    from big_data_spark.datagen import generate_logs
+
+    logs = str(tmp_path / "logs.json")
+    generate_logs(
+        spark, n_trees=30, n_processes=90, max_depth=3, n_servers=40, seed=11
+    ).write.json(logs)
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles, reports = [], []
+    for i in range(3):
+        out = str(tmp_path / f"out{i}")
+        before = metric.METRIC_COMPILATION_TIME().getCount()
+        main([logs, "--out-dir", out], spark=spark)
+        compiles.append(metric.METRIC_COMPILATION_TIME().getCount() - before)
+        reports.append(_report_lines(out))
+    assert reports[0] and reports[0] == reports[1] == reports[2]
+    assert compiles[2] < 0.1 * compiles[0], compiles
+
+
 def test_cli_writes_all_three_outputs(spark, tmp_path):
     logs = os.path.join(REFERENCE_DATA, "test.json")
     main([logs, "--out-dir", str(tmp_path)], spark=spark)

@@ -72,6 +72,25 @@ def test_connected_components_chain(spark):
     assert got == {i: 0 for i in range(n + 1)}
 
 
+def test_connected_components_chain_star_and_self_loop(spark):
+    """Labels start at each vertex's neighbourhood minimum: a chain
+    listed from its high end, a star whose centre is not its minimum,
+    and a vertex that appears only as a self-loop all still end at
+    their component's minimum id."""
+    edges = spark.createDataFrame(
+        [(5, 4), (4, 3), (3, 2), (2, 1)]
+        + [(20, 15), (20, 21), (20, 22)]
+        + [(30, 30)],
+        ["src", "dst"],
+    )
+    got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    assert got == {
+        **{i: 1 for i in range(1, 6)},
+        **{i: 15 for i in (15, 20, 21, 22)},
+        30: 30,
+    }
+
+
 def test_star_components_raise_on_iteration_exhaustion(spark):
     """An unconverged star loop must fail loudly, not return split
     components (round-6 advice: the post-loop root mapping is only
@@ -362,6 +381,54 @@ def test_dense_ids_are_dense_and_deterministic(spark):
     assert sorted(rows.values()) == list(range(137))
     again = {r.k: r.kid for r in dense_ids(keys, "k", "kid", 16).collect()}
     assert rows == again
+
+
+def _reference_cluster_id(rank: int, n: int) -> str:
+    """The Python rule the ids follow: the smallest width w >= 1 with
+    26**w >= n, then the rank's base-26 digits as letters A-Z."""
+    width = 1
+    while 26**width < n:
+        width += 1
+    return "".join(chr(65 + (rank // 26**i) % 26) for i in range(width - 1, -1, -1))
+
+
+def test_base26_ids_match_reference_width_rule(spark):
+    from pyspark.sql import functions as F
+
+    from big_data_spark.operators.clustering import base26_ids
+
+    ns = (1, 2, 26, 27, 676, 677)
+    df = spark.createDataFrame(
+        [(n, r) for n in ns for r in range(n)], "n long, rank long"
+    )
+    got = {
+        (r.n, r.rank): r.cid
+        for r in df.select(
+            "n", "rank", base26_ids(F.col("rank"), F.col("n")).alias("cid")
+        ).collect()
+    }
+    assert got == {(n, r): _reference_cluster_id(r, n) for n in ns for r in range(n)}
+
+
+def test_assign_cluster_ids_width_and_user_passthrough(spark):
+    from big_data_spark.operators.clustering import assign_cluster_ids
+    from big_data_spark.operators.ids import dense_ids
+
+    keys = ["user"] + [f"s{i}+s{i + 1}" for i in range(26)]
+    clustered = spark.createDataFrame(
+        [(f"srv{i}", k) for i, k in enumerate(keys + keys[:5])],
+        "server_name string, cluster string",
+    )
+    got = {r.cluster: r.cluster_id for r in assign_cluster_ids(clustered).collect()}
+    ranks = {
+        r.cluster: r._rank
+        for r in dense_ids(clustered.select("cluster"), "cluster", "_rank").collect()
+    }
+    # 27 distinct keys, "user" among them: width 2 for everyone else.
+    assert got == {
+        k: "user" if k == "user" else _reference_cluster_id(ranks[k], len(keys))
+        for k in keys
+    }
 
 
 def test_cluster_servers_keeps_empty_connection_sets(spark):
