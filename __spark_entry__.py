@@ -8,69 +8,10 @@ extensions (dedup, ANN, multimodal, text analysis, decontamination,
 MERGE INTO / CDC apply, the data-quality gate, streaming incl. a
 watermarked stream-stream interval join, range join, SQL time
 travel over the engine's own snapshot tables) with DuckDB oracles.
-The registry holds 109 oracle-paired queries in total (round 14
-added metadata_partition_agg and metadata_groupby_agg —
-partition-predicate and partition-wise-GROUP-BY metadata
-aggregates, plan-asserted scan-free, the 59 past the
-50-row driver cap pytest-oracle gated — slotted metadata_aggregates
-plus five returning round-13 releases and released six multi-round
-rows with every family keeping a driver sibling; round 13
-added metadata_aggregates — the SQL door's metadata-only aggregate
-fast path, plan-asserted scan-free — and rotated the nine
-round-12-released rows back into driver slots, releasing nine
-twice-plus-slotted rows with every family keeping a driver sibling;
-round 12
-rotated typed_prune plus the long-unslotted snapshot_delete/
-shortest_paths/quality_gopher/events_resample/ann_recall/mv_refresh/
-decontaminate/cohort_retention into driver slots, releasing
-hybrid_search/pmi_cooccur/cube_sales/unpivot_metrics/percentiles/
-agg_collect_sorted/events_funnel/community_lpa/sql_portable_revenue
-to the pytest gate with every family keeping a driver sibling; round 11
-added partitioned_prune — a two-level manifest+commit-time-stats
-pruned read over a multi-column (status, priority) partitioned
-snapshot table with a partial leaf replace, the oracle re-deriving
-the rollup from raw orders — and typed_prune — typed data skipping:
-a timestamp+string predicate rollup answered from the commit-time
-manifest stats block on a ts-clustered events snapshot table,
-pytest-oracle gated past the 50-row driver cap — and rotated
-hybrid_search plus the
-long-unslotted pmi_cooccur/cube_sales/unpivot_metrics/percentiles/
-pivot_status/agg_collect_sorted/events_funnel/string_tokens into
-driver slots; round 10
-added snapshot_update_cdf — row-level pre/post-image change feed
-for UPDATE commits with the oracle re-deriving the exact change
-set — and hybrid_search — reciprocal-rank fusion of the BM25 and
-IVF-ANN hit lists — and extended sql_snapshot_asof with the
-TIMESTAMP AS OF SQL
-spelling; round 9 added snapshot_tag_travel — tag-pinned +
-timestamp time travel
-over snapshot tables — and sql_dml — DELETE/UPDATE/INSERT statement strings driven
-through SnapshotCatalog.sql with the oracle re-deriving the final
-state relationally — and evolved_read, a rename+widen schema
-evolution read across pre/post-evolution generations; round 7 added
-neardup_incremental and semdedup_incremental — the incremental
-ingest paths certified against their batch twins' oracles —
-sql_snapshot_asof — one ANSI string over catalog-registered
-snapshot views, versioned and current, with the oracle re-deriving
-each version from the raw tables — and snapshot_changes, the
-change-feed read between snapshot versions with compaction commits
-excluded — and point_lookup, exact-match file skipping through a
-per-file Bloom index, and pack_sequences, training-example
-packing over a distributed global prefix sum, and shard_summary,
-deterministic balanced training-shard export, and
-weighted_sample, exact-integer deterministic PPS sampling — and
-snapshot_delete, copy-on-write DELETE over the table format);
-the 56 past the 50-row driver cap are oracle-checked in pytest (tests/test_oracle.py) and by the
-full gate mirror (tools/gate_sim.py) at sf0.001/0.01/0.1, rotating
-into driver slots across rounds (COVERAGE.md "Round-1 note" and the
-rotation log in queries/__init__.py; round 7 rotated in the seven
-never-slotted rows shortest_paths/community_lpa/
-sql_portable_revenue/temporal_join/lm_perplexity/drift_psi/
-ann_recall plus sql_snapshot_asof; round 9 rotated in the eight
-never-slotted round-7 rows plus both new round-9 rows; round 10
-rotated in snapshot_tag_travel, doc_chunks, cohort_retention,
-dedup_segments, stratified_sample, bm25_search, semantic_search,
-community_lpa, merge_upsert and the new snapshot_update_cdf).
+The registry holds 109 oracle-paired queries in total; the 59 past the
+50-row driver cap (``_PYTEST_ONLY`` in queries/__init__.py) are
+oracle-checked in pytest (tests/test_oracle.py) and by the full gate
+mirror (tools/gate_sim.py).
 """
 
 from __future__ import annotations

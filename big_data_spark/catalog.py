@@ -110,12 +110,9 @@ def register_snapshot_views(
     canonical column order all apply to SQL users identically.
     Re-registration replaces the views (call again after new
     commits). Returns the registered names, latest first."""
-    from big_data_spark.io.snapshot import (
-        read_changes,
-        read_snapshot,
-        snapshot_ids,
-        table_history,
-    )
+    from big_data_spark.io.changes import read_changes, table_history
+    from big_data_spark.io.manifest import snapshot_ids
+    from big_data_spark.io.table_reads import read_snapshot
 
     if versions not in ("eager", "lazy"):
         raise ValueError(f"versions must be 'eager'|'lazy', got {versions!r}")
@@ -125,7 +122,7 @@ def register_snapshot_views(
     read_snapshot(spark, table_dir).createOrReplaceTempView(name)
     names = [name]
     if versions == "eager":
-        from big_data_spark.io.snapshot import list_tags
+        from big_data_spark.io.tags import list_tags
 
         for sid in ids:
             vname = f"{name}_v{sid}"
@@ -158,7 +155,7 @@ def register_aux_views(
     and unions a DataFrame per commit), which made every MERGE or
     UPDATE through the SQL door pay for the table's entire
     history."""
-    from big_data_spark.io.snapshot import read_changes, table_history
+    from big_data_spark.io.changes import read_changes, table_history
 
     table_history(spark, table_dir).createOrReplaceTempView(
         f"{name}_history"
@@ -176,7 +173,7 @@ def as_of(
     at snapshot ``version``; with ``name`` also registered as the
     ``name_v{version}`` temp view (the lazy twin of the eager loop —
     one view materializes, not O(versions))."""
-    from big_data_spark.io.snapshot import read_snapshot
+    from big_data_spark.io.table_reads import read_snapshot
 
     df = read_snapshot(spark, table_dir, as_of=version)
     if name is not None:
@@ -275,12 +272,12 @@ class SnapshotCatalog:
         still clean it up) but registers no view — loud on first
         SELECT rather than silently unlisted."""
         from big_data_spark.io.compact import hadoop_fs
-        from big_data_spark.io.snapshot import (
-            _read_json,
+        from big_data_spark.io.layout import _read_json
+        from big_data_spark.io.manifest import (
             format_version_error,
             latest_manifest,
-            read_snapshot,
         )
+        from big_data_spark.io.table_reads import read_snapshot
 
         bound: dict[str, str] = {}
         fs, cdir = hadoop_fs(self.spark, self._bindings_dir())
@@ -359,7 +356,7 @@ class SnapshotCatalog:
         import uuid as _uuid
 
         from big_data_spark.io.compact import hadoop_fs
-        from big_data_spark.io.snapshot import _atomic_overwrite_local
+        from big_data_spark.io.tags import _atomic_overwrite_local
 
         body = _json.dumps(
             {"v": _BINDING_VERSION, "name": name, "dir": self.tables[name]},
@@ -446,7 +443,7 @@ class SnapshotCatalog:
         return self._register_views_tracked(name)
 
     def _latest_sid(self, name: str) -> int | None:
-        from big_data_spark.io.snapshot import latest_manifest
+        from big_data_spark.io.manifest import latest_manifest
 
         try:
             man = latest_manifest(self.spark, self.tables[name])
@@ -488,7 +485,7 @@ class SnapshotCatalog:
         O(versions) registration and keep the full rebuild; users
         reading the aux views through bare spark.sql in lazy mode
         see the pre-DML feed until one of those refresh points."""
-        from big_data_spark.io.snapshot import read_snapshot
+        from big_data_spark.io.table_reads import read_snapshot
 
         if self.versions != "lazy":
             self.refresh(name)
@@ -575,7 +572,7 @@ class SnapshotCatalog:
         aggregate row)."""
         import re as _re
 
-        from big_data_spark.io.snapshot import _pcols
+        from big_data_spark.io.manifest import partition_cols
 
         # STRICT ASCII shapes only: Python's int()/fromisoformat
         # accept forms Spark's ANSI string casts reject (digit
@@ -584,11 +581,11 @@ class SnapshotCatalog:
         # CAST_INVALID_INPUT, breaking the exact-agreement contract.
         int_lit = _re.compile(r"^-?[0-9]+$")
         date_lit = _re.compile(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
-        pcols = set(_pcols(man.get("partition_col")) or [])
+        pcols = set(partition_cols(man) or [])
         if not pcols:
             return None
         types = {
-            f["name"]: f["type"] for f in man.get("schema") or []
+            f["name"]: f["type"] for f in man["schema"]
         }
         int_heads = ("tinyint", "smallint", "int", "bigint")
         out: dict[str, set[str]] = {}
@@ -712,11 +709,11 @@ class SnapshotCatalog:
         through. Locally both paths sit in fixed py4j overhead; the
         shape matters at object-store scale where the scan term grows
         with the table."""
-        from big_data_spark.io.snapshot import (
-            latest_manifest,
+        from big_data_spark.io.aggregates import (
             metadata_aggregate,
             metadata_group_aggregate,
         )
+        from big_data_spark.io.manifest import latest_manifest
 
         if as_of is None:
             view_sid = self._view_sid.get(name)
@@ -733,7 +730,7 @@ class SnapshotCatalog:
             # (round-13 review finding). A pinned version runs the
             # same prechecks against the PINNED manifest (round-14
             # directive #6) at the same one-read cost as head.
-            from big_data_spark.io.snapshot import read_manifest
+            from big_data_spark.io.manifest import read_manifest
 
             try:
                 man = (
@@ -750,7 +747,7 @@ class SnapshotCatalog:
         if sum_avg_cols:
             # Metadata SUM/AVG covers integer kinds only.
             types = {
-                f["name"]: f["type"] for f in man.get("schema") or []
+                f["name"]: f["type"] for f in man["schema"]
             }
             int_heads = ("tinyint", "smallint", "int", "bigint")
             for c in sum_avg_cols:
@@ -762,9 +759,9 @@ class SnapshotCatalog:
             # GROUP BY column is a partition column and every bare
             # select item names a group column — anything else is a
             # real aggregation the stats cannot scope.
-            from big_data_spark.io.snapshot import _pcols
+            from big_data_spark.io.manifest import partition_cols
 
-            pcols = set(_pcols(man.get("partition_col")) or [])
+            pcols = set(partition_cols(man) or [])
             if not set(group) <= pcols:
                 return None
             if not {
@@ -838,7 +835,7 @@ class SnapshotCatalog:
                 items,
                 {
                     f["name"]: f["type"]
-                    for f in man.get("schema") or []
+                    for f in man["schema"]
                 },
             )
             if fields is None:
@@ -941,10 +938,8 @@ class SnapshotCatalog:
         if travel is None:
             return None
         kind, val = travel
-        from big_data_spark.io.snapshot import (
-            list_tags,
-            resolve_as_of_ts,
-        )
+        from big_data_spark.io.table_reads import resolve_as_of_ts
+        from big_data_spark.io.tags import list_tags
         from big_data_spark.sqldml import _parse_ts_ms
 
         try:

@@ -1,0 +1,530 @@
+"""The change feed: ``read_changes`` (rows inserted or deleted
+between two versions, derived from manifest diffs, delete vectors and
+row-level CDF sidecars), ``follow_changes`` (the durable-cursor
+consumer step) and ``table_history`` (DESCRIBE HISTORY)."""
+
+from __future__ import annotations
+
+import json
+import uuid
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from big_data_spark.io.compact import hadoop_fs
+from big_data_spark.io.layout import (
+    _DATA_DIR,
+    _bare_expr,
+    _gen_id_of,
+    _live_gens,
+    _write_text,
+)
+from big_data_spark.io.manifest import (
+    _read_manifests,
+    dir_cols,
+    partition_cols,
+    snapshot_ids,
+)
+from big_data_spark.io.table_reads import (
+    _declared_partition_types,
+    _gen_read_ddl,
+    _masked_rels,
+    _normalize_scan,
+    _pad_to_schema,
+    read_delete_positions,
+    read_entries,
+    read_snapshot,
+)
+
+
+def read_changes(
+    spark: SparkSession,
+    table_dir: str,
+    after_id: int,
+    until_id: int | None = None,
+    predicate: dict | None = None,
+) -> DataFrame:
+    """Change feed between table versions: every row inserted or
+    deleted by the commits in ``(after_id, until_id]`` (``until_id``
+    defaults to the newest snapshot), tagged with ``_change_type``
+    ('insert' | 'delete') and ``_commit_id`` — the incremental-
+    consumption primitive (downstream sync, incremental MV feeds,
+    audit) a table format pairs with time travel.
+
+    Granularity is FILE-LEVEL, derived purely from manifest diffs
+    (bounded driver metadata; zero data reads beyond the changed
+    entries themselves):
+
+    - an appended generation's rows are inserts;
+    - a dropped entry's rows are deletes;
+    - a partial rewrite of partition k reports k's old rows as
+      deletes and its new rows as inserts (an in-place row update
+      therefore appears as delete+insert, like a table format
+      without row-level CDF enabled);
+    - maintenance commits (compact_snapshot) are SKIPPED — they
+      rewrite files without changing content, and reporting them
+      would fabricate a full delete+insert;
+    - replaying the feed onto a copy of version ``after_id``
+      (apply deletes, then inserts, per commit) reproduces version
+      ``until_id`` exactly (tested).
+
+    Retention: the feed reads OLD generations, so ``after_id`` must
+    still be within ``vacuum_snapshots``' kept window — expired
+    ranges raise on read like any other time travel.
+
+    ``predicate`` (round 11; same shape as ``read_snapshot`` — {col:
+    (lo, hi)} ranges or {col: [v1, ...]} IN-lists, typed bounds)
+    restricts the feed to matching CHANGE ROWS, exactly
+    ``read_changes(...).filter(...)`` — the range-shard consumer's
+    primitive (a downstream sync holding keys [a, b) reads only its
+    slice). File-level skipping applies through each side's OWN
+    manifest stats before any scan; rows whose side lacks the column
+    (pre-evolution) read as NULL and are excluded, like any filter.
+    An update-CDF commit whose row moves INTO the range shows only
+    the postimage insert (and out-of-range preimages drop) — the
+    shard consumer's correct view of a row migrating across shards.
+    """
+    ids = snapshot_ids(spark, table_dir)
+    if until_id is None:
+        until_id = ids[-1] if ids else -1
+    window = [i for i in ids if after_id < i <= until_id]
+    if after_id not in ids and after_id != -1:
+        raise ValueError(
+            f"snapshot {after_id} not found under {table_dir!r} "
+            f"(committed: {ids}) — expired by vacuum, or never existed; "
+            "pass after_id=-1 for 'since table creation'"
+        )
+    parts: list[DataFrame] = []
+    # Window manifests in ONE bulk fetch (parallel above the
+    # threshold): a since-creation feed over a long-lived table was
+    # O(#commits) serial driver round trips (round-9 verdict #4).
+    mans = _read_manifests(
+        spark,
+        table_dir,
+        window + ([after_id] if after_id != -1 else []),
+    )
+    if after_id == -1:
+        prev_man: dict | None = None
+        prev_entries: dict[str, str] = {}
+        prev_deletes: list[str] = []
+    else:
+        prev_man = mans[after_id]
+        prev_entries = prev_man["entries"]
+        prev_deletes = prev_man["deletes"]
+
+    def _vector_rows(vecs, entries_map, side):
+        """Rows the position vectors in ``vecs`` name, read from the
+        LIVE entries of ``entries_map`` (touched generations only —
+        the vectors name their files, so this is O(masked
+        generations), not O(table)) in the ``side`` manifest's schema,
+        minus rows its own vectors still mask. None when every
+        position is inert (its files are no longer live)."""
+        pos = read_delete_positions(spark, table_dir, vecs)
+        owned = _masked_rels(pos, set(entries_map.values()))
+        touched = {
+            k: rel for k, rel in entries_map.items() if rel in owned
+        }
+        if not touched:
+            return None
+        rows = read_entries(
+            spark,
+            table_dir,
+            touched,
+            predicate=predicate,
+            deletes=side["deletes"],
+            with_positions=True,
+            schema_fields=side["schema"],
+            rename_log=side["rename_log"],
+            stats=side["stats"],
+            partition_cols=dir_cols(side),
+        )
+        out = rows.join(
+            F.broadcast(pos),
+            (_bare_expr(F.col("_dv_path")) == pos["file_path"])
+            & (F.col("_dv_pos") == pos["row_index"]),
+        ).drop("_dv_path", "_dv_pos", "file_path", "row_index")
+        return _pad_to_schema(out, side["schema"])
+
+    # Simple-append RUN state (round-15 directive #3): a maximal run
+    # of consecutive pure-append commits under ONE committed schema
+    # collapses into a single multi-generation scan instead of one
+    # read_entries plan per commit — the `_changes` view over an
+    # N-append table was an N-part union whose construction and
+    # analysis both grew linearly with table age (probed at 600
+    # appends: ~35 s to build + ~20 s first action). The run scan
+    # reads every added entry through basePath=_data, so the `s=<gen>`
+    # layout dir surfaces as a partition column and maps to
+    # `_commit_id` through a constant-folded literal map — per-row
+    # attribution identical to the per-commit path. Qualification is
+    # strict (anything else keeps the existing per-commit plan):
+    # no predicate (file pruning stays on the read_entries path), no
+    # removals, no delete vectors on EITHER side (a vector can name a
+    # rollback-restored generation's files), no rename log (the
+    # per-generation replay is gen-keyed), a committed schema with a
+    # derivable explicit read DDL, no column named `s` (it would
+    # collide with the layout dir), and standard `_data/s=<id>` rels.
+    run_state: dict | None = None
+
+    def _flush_run() -> None:
+        nonlocal run_state
+        if run_state is None:
+            return
+        r, run_state = run_state, None
+        schema = r["schema"]
+        names = [f["name"] for f in schema]
+        if "_change_type" in names or "_commit_id" in names:
+            raise ValueError(
+                "read_changes: table already has a _change_type/"
+                "_commit_id column — rename it to read the feed"
+            )
+        paths = sorted({f"{table_dir}/{rel}" for rel in r["rels"]})
+        with _declared_partition_types(spark):
+            part = (
+                spark.read.schema(r["ddl"] + ", `s` string")
+                .option("basePath", f"{table_dir}/{_DATA_DIR}")
+                .parquet(*paths)
+            )
+        if not part.inputFiles():
+            # LOUD-OR-EXACT, same contract as read_entries' explicit-
+            # schema scan: a committed generation always holds >= 1
+            # data file.
+            raise ValueError(
+                f"append-run generations {sorted(r['gen_sid'])!r} under "
+                f"{table_dir!r} list no data files — concurrently "
+                "dropped or vacuumed during the read"
+            )
+        sid_map = F.create_map(
+            *[
+                F.lit(x)
+                for g, gsid in sorted(r["gen_sid"].items())
+                for x in (str(g), gsid)
+            ]
+        )
+        part = (
+            _normalize_scan(part, schema, None)
+            .withColumn(
+                "_commit_id", F.element_at(sid_map, F.col("s")).cast("int")
+            )
+            .withColumn("_change_type", F.lit("insert"))
+        )
+        parts.append(part.select(*names, "_change_type", "_commit_id"))
+
+    for sid in window:
+        man = mans[sid]
+        cur = man["entries"]
+        cur_deletes = man["deletes"]
+        if man["cdf"] and not man["maintenance"]:
+            _flush_run()
+            # Row-level CDF commit (update_where/delete_where
+            # row_cdf=True): the sidecar IS the commit's exact change
+            # set (update_preimage/update_postimage/delete rows in
+            # the commit's own schema) — emit it and SKIP the
+            # file-level generation diff, which would report every
+            # carried row of the rewritten generations as
+            # delete+insert. Replay: preimage/delete rows remove,
+            # postimage rows insert — reproduces the next version
+            # because non-matched rows of rewritten generations are
+            # carried unchanged.
+            cdf_df = spark.read.parquet(f"{table_dir}/{man['cdf']}")
+            if predicate:
+                from big_data_spark.io.stats import range_predicate
+
+                # The sidecar is one commit's bounded change set —
+                # a row filter is the right grain (no file pruning
+                # to win).
+                cdf_df = cdf_df.filter(range_predicate(predicate))
+            parts.append(
+                cdf_df.withColumn("_commit_id", F.lit(sid).cast("int"))
+            )
+            prev_entries = cur
+            prev_deletes = cur_deletes
+            prev_man = man
+            continue
+        if not man["maintenance"]:
+            prev_vals, cur_vals = (
+                set(prev_entries.values()),
+                set(cur.values()),
+            )
+            added = {
+                k: v for k, v in cur.items() if v not in prev_vals
+            }
+            removed = {
+                k: v for k, v in prev_entries.items() if v not in cur_vals
+            }
+            # Merge-on-read DELETE commits change no entries; their
+            # change set is the rows the NEW delete vectors mask —
+            # emitted as deletes. Vectors REMOVED by a non-maintenance
+            # commit (rollback_snapshot undoing a MOR delete) UNMASK
+            # their rows — emitted as inserts, minus rows a remaining
+            # vector still masks, so feed replay reproduces the
+            # target version (fold_deletes also clears vectors, but
+            # commits maintenance=True and is skipped: content
+            # unchanged).
+            new_dv = [d for d in cur_deletes if d not in set(prev_deletes)]
+            dropped_dv = [
+                d for d in prev_deletes if d not in set(cur_deletes)
+            ]
+            # Simple-append run qualification (see _flush_run above).
+            if (
+                predicate is None
+                and added
+                and not removed
+                and not new_dv
+                and not dropped_dv
+                and not cur_deletes
+                and not prev_deletes
+                and not man["rename_log"]
+            ):
+                pcols = dir_cols(man)
+                gen_sid: dict[int, int] = {}
+                ok = "s" not in {
+                    f["name"] for f in man["schema"]
+                } and "s" not in pcols
+                if ok:
+                    for rel in added.values():
+                        g = _gen_id_of(rel)
+                        if g is None:
+                            ok = False
+                            break
+                        gen_sid[g] = sid
+                ddl = (
+                    _gen_read_ddl(man["schema"], None, None, pcols)
+                    if ok
+                    else None
+                )
+                if ddl is not None:
+                    key = (
+                        json.dumps(man["schema"], sort_keys=True),
+                        tuple(pcols),
+                    )
+                    if run_state is not None and (
+                        run_state["key"] != key
+                        # A generation re-added under a NEW commit
+                        # (partition entries landing in an existing
+                        # gen dir across commits) must not overwrite
+                        # the run's gen->commit attribution: split
+                        # the run so each part's map stays 1:1.
+                        or any(g in run_state["gen_sid"] for g in gen_sid)
+                    ):
+                        _flush_run()
+                    if run_state is None:
+                        run_state = {
+                            "key": key,
+                            "schema": man["schema"],
+                            "ddl": ddl,
+                            "gen_sid": {},
+                            "rels": set(),
+                        }
+                    run_state["gen_sid"].update(gen_sid)
+                    run_state["rels"].update(added.values())
+                    prev_entries = cur
+                    prev_deletes = cur_deletes
+                    prev_man = man
+                    continue
+            # Anything below emits this commit's parts directly —
+            # flush first so parts keep commit order.
+            _flush_run()
+            # Vector-side rows count only for entries live in BOTH
+            # versions: a vector row whose file is cur-only is
+            # covered by the entry-diff insert side (with cur's masks
+            # applied), and one whose file is prev-only by the delete
+            # side — reading them here would emit phantom changes
+            # for rows invisible on one side of the commit (e.g. a
+            # rollback restoring a pre-fold vector over entries the
+            # fold replaced: the vector's files are no longer the
+            # live ones).
+            both = {
+                k: v for k, v in cur.items() if v in prev_vals
+            }
+            # DELETE-kind rows present in the schema they were LAST
+            # VISIBLE under (the predecessor's, masked by its vectors);
+            # INSERT-kind rows in the committing version's own — a
+            # rollback across an evolution must not NULL-pad the rows
+            # it reports. (Without a predecessor, ``both`` and
+            # ``removed`` are empty: only the insert side runs.)
+            for vecs, kind, side in (
+                (new_dv, "delete", prev_man),
+                (dropped_dv, "insert", man),
+            ):
+                if not vecs or not both:
+                    continue
+                dv_rows = _vector_rows(vecs, both, side)
+                if dv_rows is None:
+                    continue
+                parts.append(
+                    dv_rows.withColumn(
+                        "_change_type", F.lit(kind)
+                    ).withColumn("_commit_id", F.lit(sid).cast("int"))
+                )
+            for entries, kind, side in (
+                (removed, "delete", prev_man),
+                (added, "insert", man),
+            ):
+                if not entries:
+                    continue
+                # Apply the masking delete vectors of the side's OWN
+                # version: removed rows were visible under the PREV
+                # manifest's deletes, added rows under the CURRENT's.
+                df = read_entries(
+                    spark,
+                    table_dir,
+                    entries,
+                    predicate=predicate,
+                    deletes=side["deletes"],
+                    schema_fields=side["schema"],
+                    rename_log=side["rename_log"],
+                    stats=side["stats"],
+                    partition_cols=dir_cols(side),
+                )
+                # Present each side in ITS version's schema, padding
+                # pre-evolution generations with TYPED nulls the same
+                # way read_snapshot does (an untyped F.lit(None) is a
+                # void column parquet refuses to write — a feed window
+                # of only pre-evolution deletes must still be
+                # writable/arithmetic-safe downstream).
+                df = _pad_to_schema(df, side["schema"])
+                if "_change_type" in df.columns or "_commit_id" in df.columns:
+                    raise ValueError(
+                        "read_changes: table already has a _change_type/"
+                        "_commit_id column — rename it to read the feed"
+                    )
+                parts.append(
+                    df.withColumn("_change_type", F.lit(kind)).withColumn(
+                        "_commit_id", F.lit(sid).cast("int")
+                    )
+                )
+        prev_entries = cur
+        prev_deletes = cur_deletes
+        prev_man = man
+    _flush_run()
+    if not parts:
+        # No content changes in the window: empty feed with the
+        # table's current schema.
+        base = read_snapshot(spark, table_dir, as_of=until_id)
+        return (
+            base.withColumn("_change_type", F.lit("insert"))
+            .withColumn("_commit_id", F.lit(0).cast("int"))
+            .where(F.lit(False))
+        )
+    out = parts[0]
+    for other in parts[1:]:
+        out = out.unionByName(other, allowMissingColumns=True)
+    return out
+
+
+def follow_changes(
+    spark: SparkSession,
+    table_dir: str,
+    cursor_dir: str,
+    predicate: dict | None = None,
+):
+    """Incremental-consumer loop step over the change feed: read the
+    durable cursor under ``cursor_dir`` (last commit consumed; -1 =
+    since creation on first call), return ``(feed_df, commit)`` where
+    ``feed_df`` is ``read_changes(after_id=cursor, until_id=latest)``
+    and ``commit()`` atomically advances the cursor to that latest id
+    — call it only AFTER the consumer durably applied the feed, so a
+    crash between read and commit replays the same window
+    (at-least-once, the same contract as a streaming checkpoint).
+    Returns ``(None, None)`` when the table has no new commits.
+
+    The cursor is MONOTONIC by construction: each commit publishes an
+    immutable ``cursor-<id>.json`` (write-temp-then-rename; rename
+    refuses an existing destination, so re-publishing the same id is
+    a detected no-op) and readers take the MAXIMUM published id —
+    a slow consumer instance can therefore never regress the cursor
+    below a faster one's commit; its stale window re-applies, which
+    the at-least-once contract already requires consumers to
+    tolerate.
+    """
+    ids = snapshot_ids(spark, table_dir)
+    if not ids:
+        raise ValueError(f"no committed snapshots under {table_dir!r}")
+    fs, cdir = hadoop_fs(spark, cursor_dir)
+    fs.mkdirs(cdir)
+    committed = []
+    for st in fs.listStatus(cdir):
+        name = st.getPath().getName()
+        if name.startswith("cursor-") and name.endswith(".json"):
+            committed.append(int(name[len("cursor-") : -len(".json")]))
+    cursor = max(committed) if committed else -1
+    until = ids[-1]
+    if until <= cursor:
+        return None, None
+    feed = read_changes(
+        spark, table_dir, after_id=cursor, until_id=until,
+        predicate=predicate,
+    )
+
+    def commit() -> int:
+        body = json.dumps({"last_commit": until})
+        tmp = f"{cursor_dir}/.tmp-{uuid.uuid4().hex}"
+        _, tmp_path = hadoop_fs(spark, tmp)
+        _write_text(fs, tmp_path, body)
+        _, cpath = hadoop_fs(
+            spark, f"{cursor_dir}/cursor-{until:012d}.json"
+        )
+        if not fs.rename(tmp_path, cpath):
+            # Another instance already committed this exact window —
+            # idempotent; the cursor is where we wanted it.
+            fs.delete(tmp_path, False)
+        # Prune superseded cursor files (keep a short trail): readers
+        # take the max, so removing older ids never regresses.
+        stale = sorted(committed)[:-3]
+        for sid in stale:
+            _, sp = hadoop_fs(
+                spark, f"{cursor_dir}/cursor-{sid:012d}.json"
+            )
+            fs.delete(sp, False)
+        return until
+
+    # The window's bounds, readable BEFORE committing — until_id is
+    # the epoch / idempotency key a streaming consumer
+    # (stream_changes) hands to its process function; after_id is the
+    # cursor the window resumed from (per-batch metrics).
+    commit.until_id = until
+    commit.after_id = cursor
+    return feed, commit
+
+
+def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
+    """DESCRIBE HISTORY for a snapshot table: one row per committed
+    snapshot — (snapshot_id, n_entries, n_generations, maintenance,
+    partition_col, layout_by, n_columns, added_columns) — from
+    manifest metadata alone (no data reads). ``added_columns`` names
+    the columns this commit introduced over its predecessor: the
+    audit view of the additive-evolution contract."""
+    ids = snapshot_ids(spark, table_dir)
+    if not ids:
+        raise ValueError(f"no committed snapshots under {table_dir!r}")
+    mans = _read_manifests(spark, table_dir, ids)
+    rows = []
+    prev_cols: set[str] = set()
+    for sid in ids:
+        man = mans[sid]
+        cols = [f["name"] for f in man["schema"]]
+        gens = _live_gens(man["entries"])
+        rows.append(
+            (
+                sid,
+                len(man["entries"]),
+                len(gens),
+                bool(man["maintenance"]),
+                # Multi-column partitioning renders comma-joined in
+                # the (string) history column.
+                ",".join(partition_cols(man) or [])
+                or None,
+                man["layout_by"],
+                len(cols),
+                sorted(set(cols) - prev_cols) if prev_cols else [],
+                int(man["committed_at_ms"]),
+            )
+        )
+        prev_cols |= set(cols)
+    return spark.createDataFrame(
+        rows,
+        "snapshot_id int, n_entries int, n_generations int, "
+        "maintenance boolean, partition_col string, layout_by string, "
+        "n_columns int, added_columns array<string>, "
+        "committed_at_ms long",
+    )

@@ -327,10 +327,15 @@ def compact_snapshot(
     vector rows go inert; untouched partitions' masks still apply),
     and the commit is maintenance (change feed silent).
     """
-    from big_data_spark.io.snapshot import (
+    from big_data_spark.io.layout import generation_dir
+    from big_data_spark.io.manifest import (
+        _claim_check,
         latest_manifest,
-        read_snapshot,
+        partition_cols,
         select_partition_entries,
+    )
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import (
         write_snapshot,
         write_snapshot_partial,
     )
@@ -341,7 +346,7 @@ def compact_snapshot(
     touched_keys = list(man["entries"].keys())
     scoped = partitions is not None
     if scoped:
-        if man.get("partition_col") is None:
+        if partition_cols(man) is None:
             raise ValueError(
                 "compact_snapshot(partitions=): table is not "
                 "partitioned — omit partitions for the full rewrite"
@@ -378,12 +383,8 @@ def compact_snapshot(
         partitions=partitions,
     )
     next_id = man["snapshot_id"] + 1
-    from big_data_spark.io.snapshot import _claim_check
-
     _claim_check(spark, table_dir, next_id)
-    from big_data_spark.io.snapshot import _pcols
-
-    pcols = _pcols(man.get("partition_col"))
+    pcols = partition_cols(man)
     if pcols:
         if cluster_by:
             raise ValueError(
@@ -427,7 +428,7 @@ def compact_snapshot(
             out,
             table_dir,
             next_id,
-            man.get("partition_col"),
+            man["partition_col"],
             touched_keys,
             maintenance=True,
             # Full rewrite of every partition from the masked,
@@ -439,11 +440,10 @@ def compact_snapshot(
             # replay (the rewritten files' vector rows go inert with
             # the replaced generations; the new generation's id is
             # above every logged event, so no replay applies to it).
-            deletes="carry" if scoped else None,
-            rename_log="carry" if scoped else None,
+            **({} if scoped else {"deletes": [], "rename_log": []}),
             claim=True,
         )
-    elif man.get("layout_by"):
+    elif man["layout_by"]:
         # Generations are hive-partitioned on a layout column (e.g.
         # the band index's _bb bucket, append_snapshot(partition_by=));
         # preserve it so partition-pruned probes survive maintenance.
@@ -468,8 +468,6 @@ def compact_snapshot(
         # The layout fixes the file count (one per partition dir),
         # not the size heuristic — report what was actually written
         # so maintenance automation sizing follow-ups isn't misled.
-        from big_data_spark.io.snapshot import generation_dir
-
         n_out = parquet_inventory(
             spark, generation_dir(table_dir, next_id)
         )["n_files"]
@@ -516,20 +514,25 @@ def binpack_snapshot(
     """
     from pyspark.sql import functions as F
 
-    from big_data_spark.io.snapshot import (
-        _dir_cols,
+    from big_data_spark.io.manifest import (
+        SnapshotConflict,
+        _claim_check,
         commit_manifest,
+        dir_cols,
         latest_manifest,
-        read_entries,
+        partition_cols,
+        successor,
     )
+    from big_data_spark.io.table_reads import _pad_to_schema, read_entries
+    from big_data_spark.io.table_writes import _stage_and_claim, _unclaim
 
     man = latest_manifest(spark, table_dir)
     if man is None:
         raise ValueError(f"no committed snapshots under {table_dir!r}")
-    if man.get("partition_col") is not None:
+    if partition_cols(man) is not None:
         raise ValueError(
             "binpack_snapshot is for append-style tables; a "
-            f"{man['partition_col']!r}-partitioned table folds "
+            f"{partition_cols(man)!r}-partitioned table folds "
             "per-partition through compact_snapshot"
         )
     sized = {
@@ -551,19 +554,10 @@ def binpack_snapshot(
     # an intervening commit collides -> SnapshotConflict, never a
     # silent drop of its entries from the folded manifest.
     next_id = man["snapshot_id"] + 1
-    from big_data_spark.io.snapshot import _claim_check
-
     _claim_check(spark, table_dir, next_id)
     # _pad_to_schema: TYPED null-pad to the committed schema — a
     # small tail that entirely predates an added column must not
     # produce a void column parquet refuses to write.
-    from big_data_spark.io.snapshot import (
-        SnapshotConflict,
-        _pad_to_schema,
-        _stage_and_claim,
-        _unclaim,
-    )
-
     # Merge-on-read vectors apply to the folded data; the list is
     # carried VERBATIM in the commit — rows referencing the folded
     # (now dropped) generations become inert, rows for kept
@@ -573,14 +567,14 @@ def binpack_snapshot(
             spark,
             table_dir,
             small,
-            deletes=man.get("deletes") or None,
-            schema_fields=man.get("schema"),
-            rename_log=man.get("rename_log"),
-            partition_cols=_dir_cols(man),
+            deletes=man["deletes"],
+            schema_fields=man["schema"],
+            rename_log=man["rename_log"],
+            partition_cols=dir_cols(man),
         ),
-        man.get("schema"),
+        man["schema"],
     )
-    layout = man.get("layout_by")
+    layout = man["layout_by"]
     # write_snapshot would commit entries = {"": gen} (full table);
     # here the folded generation joins the carried-forward big ones,
     # so write the data through the generation layout and commit the
@@ -617,13 +611,7 @@ def binpack_snapshot(
         commit_manifest(
             spark,
             table_dir,
-            next_id,
-            entries,
-            schema_fields=man.get("schema"),
-            layout_by=layout,
-            maintenance=True,
-            deletes=man.get("deletes"),
-            rename_log=man.get("rename_log"),
+            successor(man, next_id, entries, maintenance=True),
             prev_man=man,
         )
     except SnapshotConflict:
@@ -665,29 +653,26 @@ def maintain_table(
     retention contract (longest reader / feed-cursor lag).
     """
     from big_data_spark.io.fileindex import write_bloom_index
-    from big_data_spark.io.snapshot import (
+    from big_data_spark.io.dml import fold_deletes
+    from big_data_spark.io.layout import _live_gens
+    from big_data_spark.io.manifest import (
         latest_manifest,
-        read_snapshot,
+        partition_cols,
         snapshot_ids,
-        vacuum_snapshots,
     )
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import vacuum_snapshots
 
     man = latest_manifest(spark, table_dir)
     if man is None:
         raise ValueError(f"no committed snapshots under {table_dir!r}")
     report: dict = {}
-    gens = {
-        rel.split("/")[1]
-        for rel in man["entries"].values()
-        if rel.startswith("_data/")
-    }
+    gens = _live_gens(man["entries"])
     # Materialize merge-on-read delete vectors FIRST: the rewrite
     # passes below then see a mask-free table, and the Bloom index
     # rebuild cannot index masked rows.
-    from big_data_spark.io.snapshot import fold_deletes
-
     report["deletes_folded"] = fold_deletes(spark, table_dir)
-    if man.get("partition_col") is not None:
+    if partition_cols(man) is not None:
         if len(gens) > max_generations:
             report["compacted"] = compact_snapshot(spark, table_dir)
         else:

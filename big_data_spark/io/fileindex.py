@@ -50,7 +50,7 @@ def bloom_index_path(table_dir: str, item_col: str) -> str:
 def _bare(uri: str) -> str:
     """Scheme-insensitive path form — the shared snapshot-layer
     normalizer (comparison only, never I/O)."""
-    from big_data_spark.io.snapshot import bare_path
+    from big_data_spark.io.layout import bare_path
 
     return bare_path(uri)
 
@@ -90,11 +90,9 @@ def write_bloom_index(
     """Build and atomically publish the Bloom index for the CURRENT
     snapshot of ``table_dir`` on ``item_col``. Returns the table
     snapshot id the index covers."""
-    from big_data_spark.io.snapshot import (
-        read_snapshot,
-        snapshot_ids,
-        write_snapshot,
-    )
+    from big_data_spark.io.manifest import snapshot_ids
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import write_snapshot
 
     covers = snapshot_ids(spark, table_dir)[-1]
     base = read_snapshot(spark, table_dir, as_of=covers)
@@ -157,14 +155,13 @@ def read_snapshot_point(
     (conservatively read in full). Falls back to a plain filtered
     read when no index exists. ``residual=False`` is the audit view
     (every row of every kept file)."""
-    from big_data_spark.io.snapshot import (
-        _dir_cols,
+    from big_data_spark.io.manifest import (
+        dir_cols,
         latest_manifest,
-        read_entries,
         read_manifest,
-        read_snapshot,
         snapshot_ids,
     )
+    from big_data_spark.io.table_reads import read_entries, read_snapshot
 
     ipath = bloom_index_path(table_dir, item_col)
     if not snapshot_ids(spark, ipath):
@@ -207,7 +204,7 @@ def read_snapshot_point(
     # tables resolve against their own filesystem, not the default.
     maybe = {_bare(f): f for f in _maybe_files(index, item_col, value)}
     parts: list[DataFrame] = []
-    order = [f["name"] for f in man.get("schema") or []] or None
+    order = [f["name"] for f in man["schema"]] or None
     # Group covered entries by GENERATION and read kept files with the
     # generation dir as basePath — same as read_entries, so hive
     # partition columns survive the file-list read.
@@ -216,7 +213,7 @@ def read_snapshot_point(
         parts_ = rel.split("/")
         gen = "/".join(parts_[:2]) if parts_[0] == "_data" else rel
         by_gen.setdefault(gen, []).append(rel)
-    dv = man.get("deletes") or None
+    dv = man["deletes"]
     for gen, rels in sorted(by_gen.items()):
         # Index-recorded URIs are URI-ENCODED (input_file_name), rels
         # are raw disk names: match the once-unquoted form first, raw
@@ -244,9 +241,7 @@ def read_snapshot_point(
             )
         )
         if kept:
-            from big_data_spark.io.snapshot import (
-                _declared_partition_types,
-            )
+            from big_data_spark.io.table_reads import _declared_partition_types
 
             with _declared_partition_types(spark):
                 # Same no-inference discipline as read_entries: dir
@@ -261,19 +256,14 @@ def read_snapshot_point(
                     F.col("_metadata.file_path").alias("_dv_path"),
                     F.col("_metadata.row_index").alias("_dv_pos"),
                 )
-            if man.get("schema") or man.get("rename_log"):
-                from big_data_spark.io.snapshot import (
-                    _gen_id_of,
-                    _normalize_scan,
-                )
+            from big_data_spark.io.layout import _gen_id_of
+            from big_data_spark.io.table_reads import _normalize_scan
 
-                part = _normalize_scan(
-                    part,
-                    man.get("schema"),
-                    man.get("rename_log"),
-                    _gen_id_of(gen),
+            parts.append(
+                _normalize_scan(
+                    part, man["schema"], man["rename_log"], _gen_id_of(gen)
                 )
-            parts.append(part)
+            )
     if uncovered:
         parts.append(
             read_entries(
@@ -281,9 +271,9 @@ def read_snapshot_point(
                 table_dir,
                 uncovered,
                 with_positions=bool(dv),
-                schema_fields=man.get("schema"),
-                rename_log=man.get("rename_log"),
-                partition_cols=_dir_cols(man),
+                schema_fields=man["schema"],
+                rename_log=man["rename_log"],
+                partition_cols=dir_cols(man),
             )
         )
     if not parts:
@@ -294,10 +284,8 @@ def read_snapshot_point(
     if dv:
         # Merge-on-read masks apply to point reads too — a deleted
         # row must not resurrect through the Bloom path.
-        from big_data_spark.io.snapshot import (
-            _bare_expr,
-            read_delete_positions,
-        )
+        from big_data_spark.io.layout import _bare_expr
+        from big_data_spark.io.table_reads import read_delete_positions
 
         pos = read_delete_positions(spark, table_dir, dv)
         df = df.join(
@@ -310,9 +298,9 @@ def read_snapshot_point(
         # TYPED null-pad to the committed schema (an untyped
         # F.lit(None) is a void column) — same contract as
         # read_snapshot / read_changes.
-        from big_data_spark.io.snapshot import _pad_to_schema
+        from big_data_spark.io.table_reads import _pad_to_schema
 
-        df = _pad_to_schema(df, man.get("schema"))
+        df = _pad_to_schema(df, man["schema"])
     if residual:
         df = df.where(F.col(item_col) == F.lit(value))
     return df

@@ -1,0 +1,865 @@
+"""Per-generation column-stats sidecars: the commit-time footer and
+integer-sum sweeps, the immutable sidecar files under
+``_manifests/stats/`` and their process cache, lazy per-generation
+loads with rename-log replay, and consolidated shards.
+
+The manifest carries only ``{generation: sidecar rel path}``
+(``stats.sidecars``); per-file min/max, row counts and integer sums
+live here — the Iceberg manifest-file / manifest-list split, which
+keeps the manifest O(#generations). ``_auto_commit_stats`` builds
+each commit's stats block; ANALYZE and consolidation (io/aggregates.py)
+reuse the same pieces."""
+
+from __future__ import annotations
+
+import json
+import re
+import threading
+import uuid
+from urllib.parse import unquote
+
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from big_data_spark.io.compact import hadoop_fs
+from big_data_spark.io.layout import (
+    _BULK_MANIFEST_THRESHOLD,
+    _DATA_DIR,
+    _STATS_SIDE_DIR,
+    _gen_id_of,
+    _live_gens,
+    _read_json,
+    _write_text,
+    bare_path,
+)
+
+
+# Sidecar files are IMMUTABLE (a fresh uuid name per write, the
+# manifest references them by path), so a small per-process cache is
+# always coherent — it saves the JSON read when many queries touch
+# the same generations, and the write path primes it so the writing
+# session never re-reads its own sidecars.
+_SIDECAR_CACHE: dict[tuple[str, str], dict] = {}
+_SIDECAR_CACHE_LOCK = threading.Lock()
+# Sized so tables up to a few hundred live generations reach pure
+# cache hits on repeated aggregates/pruned reads (each doc is
+# O(files-per-generation) — bounded driver memory); beyond it the
+# bulk prefetch re-reads per query, trading repeat cost for a
+# bounded footprint.
+_SIDECAR_CACHE_MAX = 512
+
+
+def _write_stats_sidecar(
+    spark: SparkSession,
+    table_dir: str,
+    gen: str,
+    files: dict[str, dict],
+    rows: dict[str, int],
+    names_at: int,
+    sums: dict[str, dict],
+    nonnull: dict[str, dict],
+) -> str:
+    """Persist one generation's per-file stats as an immutable sidecar
+    under ``_manifests/stats/`` and return its table-relative path.
+    ``names_at`` pins which rename-log events are already reflected
+    in the column keys (the max event commit id at sweep time);
+    readers replay only LATER events, so a rename after the sweep
+    stays metadata-only — no sidecar rewrite (Iceberg gets the same
+    via field ids).
+
+    No temp-then-rename: the name is unique (uuid) and the file is
+    referenced only by a manifest committed strictly AFTER this write
+    returns — a crash mid-write leaves an unreferenced orphan that
+    vacuum reclaims, never a torn live file."""
+    rel = f"{_STATS_SIDE_DIR}/{gen}-{uuid.uuid4().hex}.json"
+    doc = {
+        "gen": gen,
+        "files": files,
+        "rows": rows,
+        "names_at": names_at,
+        # Per-file exact integer sums + non-null counts; {} = swept
+        # with no sum-capable columns.
+        "sums": sums,
+        "nonnull": nonnull,
+    }
+    _put_sidecar(spark, table_dir, rel, json.dumps(doc, sort_keys=True), doc)
+    return rel
+
+
+def _put_sidecar(
+    spark: SparkSession, table_dir: str, rel: str, body: str, doc: dict
+) -> None:
+    """Write one immutable sidecar file and prime the process cache
+    with its parsed ``doc`` (the writing session never re-reads it)."""
+    fs, dpath = hadoop_fs(spark, f"{table_dir}/{_STATS_SIDE_DIR}")
+    fs.mkdirs(dpath)
+    _, fpath = hadoop_fs(spark, f"{table_dir}/{rel}")
+    _write_text(fs, fpath, body)
+    with _SIDECAR_CACHE_LOCK:
+        _cache_put((table_dir, rel), doc)
+
+
+def _cache_put(key: tuple[str, str], doc: dict) -> None:
+    """Insert under ``_SIDECAR_CACHE_LOCK``, evicting the oldest entry
+    at the cap."""
+    if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
+        _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
+    _SIDECAR_CACHE[key] = doc
+
+
+# Cache-miss sidecar file reads this process has paid (monotonic;
+# tests and the consolidation probe read it — a consolidated table's
+# repeat aggregate must stay at O(1) reads, not O(generations)).
+_SIDECAR_FS_READS = 0
+
+
+def _read_sidecar(spark: SparkSession, table_dir: str, rel: str) -> dict:
+    global _SIDECAR_FS_READS
+    key = (table_dir, rel)
+    with _SIDECAR_CACHE_LOCK:
+        hit = _SIDECAR_CACHE.get(key)
+    if hit is not None:
+        return hit
+    doc = _read_json(spark, f"{table_dir}/{rel}")
+    with _SIDECAR_CACHE_LOCK:
+        _SIDECAR_FS_READS += 1
+        _cache_put(key, doc)
+    return doc
+
+
+def _rlog_max_id(rename_log: list | None) -> int:
+    """Newest schema-evolution event commit id — the ``names_at``
+    stamp for sidecars swept now: every event <= it is already
+    reflected in the swept column keys."""
+    return max((int(ev[0]) for ev in rename_log or []), default=0)
+
+
+def _replay_sidecar_names(
+    files: dict[str, dict], rename_log: list | None, names_at: int
+) -> dict[str, dict]:
+    """Remap a sidecar's per-file column keys through the evolution
+    events committed AFTER its ``names_at`` stamp — renames follow,
+    drops disappear. Keyed per event id, so a NEW column re-using a
+    dropped/renamed column's former name is never confused with it:
+    newer sidecars carry a higher names_at and skip the old events."""
+    events = [
+        ev for ev in (rename_log or []) if int(ev[0]) > names_at
+    ]
+    if not events:
+        return files
+    keys = {c for per_col in files.values() for c in per_col}
+    key_map: dict[str, str | None] = {}
+    for k in keys:
+        name: str | None = k
+        for cid, kind, old, new in events:
+            if kind == "rename" and name == old:
+                name = new
+            elif kind == "drop" and name == old:
+                name = None
+                break
+        key_map[k] = name
+    if all(key_map[k] == k for k in keys):
+        return files
+    return {
+        f: {
+            key_map[c]: v
+            for c, v in per_col.items()
+            if key_map[c] is not None
+        }
+        for f, per_col in files.items()
+    }
+
+
+def _stats_covered(stats: dict | None) -> set[str]:
+    """Generations the stats block covers with per-file MIN/MAX."""
+    return set((stats or {}).get("sidecars") or {})
+
+
+def _prefetch_sidecars(
+    spark: SparkSession,
+    table_dir: str,
+    stats: dict | None,
+    gens,
+) -> dict[str, dict]:
+    """Bulk-read the UNCACHED sidecars of many generations in ONE
+    distributed whole-file text scan (the _read_manifests trade, same
+    threshold): metadata aggregates touch every live generation, and
+    a 10k-generation table would otherwise pay 10k serial object-
+    store round trips before answering. Returns {gen: doc}; below the
+    threshold returns {} and callers fall back to the serial cached
+    loop."""
+    side = (stats or {}).get("sidecars") or {}
+    with _SIDECAR_CACHE_LOCK:
+        # DISTINCT uncached files: a consolidated sidecar is
+        # referenced by MANY generations but read once.
+        need: list[str] = []
+        seen: set[str] = set()
+        for g in gens:
+            rel = side.get(g)
+            if (
+                rel is not None
+                and rel not in seen
+                and (table_dir, rel) not in _SIDECAR_CACHE
+            ):
+                seen.add(rel)
+                need.append(rel)
+    if len(need) <= _BULK_MANIFEST_THRESHOLD:
+        return {}
+    rows = (
+        spark.read.option("wholetext", "true")
+        .text([f"{table_dir}/{r}" for r in need])
+        # The rel each doc was READ FROM travels with the row:
+        # recovering it by searching side[] for any gen the doc
+        # carries mis-attributed stale consolidated files (an older
+        # consolidated doc still naming a gen whose side[] now points
+        # at a fresher per-gen sidecar could be cached under the NEW
+        # rel and overwrite the fresh read in this very bulk — row
+        # order is arbitrary), silently dropping an ANALYZE backfill.
+        .select(F.input_file_name().alias("path"), "value")
+        .collect()
+    )
+    by_base = {r.rsplit("/", 1)[-1]: r for r in need}
+    out: dict[str, dict] = {}
+    raw_by_rel: dict[str, dict] = {}
+    for r in rows:
+        # input_file_name is a URI (percent-encoded); sidecar
+        # basenames are uuid-unique hex so they round-trip exactly.
+        rel = by_base.get(unquote(r["path"].rsplit("/", 1)[-1]))
+        if rel is None:
+            continue  # defensive: a path we did not ask for
+        doc = json.loads(r["value"])
+        raw_by_rel[rel] = doc
+        if "gens" in doc:
+            # Consolidated file: expand ONLY the generations whose
+            # sidecar reference actually points here — a gen carried
+            # by an old shard but re-swept since must come from its
+            # fresher per-gen file, never this copy.
+            for g, d in doc["gens"].items():
+                if side.get(g) == rel:
+                    out[g] = d
+        elif side.get(doc.get("gen")) == rel:
+            out[doc["gen"]] = doc
+    # Prime the cache from the bulk read (up to the cap): tables
+    # whose generations fit become pure cache hits on every repeat
+    # query — without this the bulk scan re-ran per aggregate forever
+    # (review finding); oversized tables keep the bounded footprint.
+    with _SIDECAR_CACHE_LOCK:
+        for rel, doc in raw_by_rel.items():
+            if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
+                break
+            _SIDECAR_CACHE.setdefault((table_dir, rel), doc)
+    return out
+
+
+def _load_gen_stats(
+    spark: SparkSession,
+    table_dir: str,
+    stats: dict | None,
+    gen: str,
+    rename_log: list | None = None,
+    _doc: dict | None = None,
+) -> dict | None:
+    """One generation's recorded stats from the stats block — LAZILY:
+    one small sidecar JSON (cached) read only when a query actually
+    needs this generation. None = uncovered (or a consolidated shard
+    that lost this generation's doc); otherwise a dict with:
+
+    - ``files``: {file_rel: {col: [min,max] | "allnull" | None}}
+    - ``rows``:  {file_rel: n_rows}
+    - ``sums``:  {file_rel: {col: exact-int-string | None}} for the
+      INTEGER stat columns
+    - ``nonnull``: {file_rel: {col: non-null count}}, paired with
+      ``sums``
+
+    Column keys in every per-file dict are replayed through the
+    evolution events committed after the sidecar's names_at stamp."""
+    side = (stats or {}).get("sidecars") or {}
+    if gen not in side:
+        return None
+    doc = (
+        _doc
+        if _doc is not None
+        else _read_sidecar(spark, table_dir, side[gen])
+    )
+    if "gens" in doc:
+        # Consolidated sidecar: ONE file carries many generations'
+        # docs — extract this generation's. The raw file is what's
+        # cached, so every sibling generation is a pure cache hit
+        # after the first read.
+        doc = doc["gens"].get(gen)
+        if doc is None:
+            return None  # torn consolidation: behave as uncovered
+    at = int(doc["names_at"])
+    return {
+        "files": _replay_sidecar_names(doc["files"], rename_log, at),
+        "rows": doc["rows"],
+        "sums": _replay_sidecar_names(doc["sums"], rename_log, at),
+        "nonnull": _replay_sidecar_names(doc["nonnull"], rename_log, at),
+    }
+
+
+def load_generation_stats(
+    spark: SparkSession, table_dir: str, man: dict, gen: str
+) -> tuple[dict | None, dict | None]:
+    """Public spelling of the lazy per-generation stats load — the
+    (per-file column stats, per-file row counts) a manifest records
+    for ``gen``, resolved through its sidecar. Tools and tests use
+    this instead of reaching into the manifest dict, so the storage
+    layout can evolve freely."""
+    doc = _load_gen_stats(
+        spark,
+        table_dir,
+        man["stats"],
+        gen,
+        rename_log=man["rename_log"],
+    )
+    if doc is None:
+        return None, None
+    return doc["files"], doc["rows"]
+
+
+_STATS_MAX_COLS = 4
+# Generations at or under this many files sweep footers in a driver
+# loop (ms per local file); larger or remote ones fan out through the
+# distributed kernel. Patchable in tests to force the distributed
+# path on small fixtures.
+_LOCAL_SWEEP_MAX_FILES = 64
+
+
+def _default_stats_columns(
+    schema_fields: list[dict], dir_cols: list[str]
+) -> list[str]:
+    """The LEADING stat-capable columns (schema order, capped) stats
+    are recorded for by default — numeric, string, date and timestamp
+    types (round 11: typed skipping; io/stats.stat_kind is the one
+    type→kind mapping). Partition/layout columns excluded (they live
+    in dir names, not file footers, and manifest entries already
+    prune them)."""
+    from big_data_spark.io.stats import stat_kind
+
+    out: list[str] = []
+    for f in schema_fields:
+        if f["name"] in dir_cols:
+            continue
+        if stat_kind(f["type"]) is not None:
+            out.append(f["name"])
+            if len(out) == _STATS_MAX_COLS:
+                break
+    return out
+
+
+def _gen_files(spark: SparkSession, table_dir: str, gen_rel: str):
+    """(data file URIs, uri -> table-relative path, is-local-FS) for one
+    generation — the listing both commit-time sweeps share (hidden
+    ``_``/``.`` files skipped; no files for a missing dir)."""
+    fs, gp = hadoop_fs(spark, f"{table_dir}/{gen_rel}")
+    files: list[str] = []
+    if fs.exists(gp):
+        it = fs.listFiles(gp, True)
+        while it.hasNext():
+            st = it.next()
+            name = st.getPath().getName()
+            if not (name.startswith("_") or name.startswith(".")):
+                files.append(st.getPath().toString())
+    prefix = bare_path(f"{table_dir}/").rstrip("/") + "/"
+
+    def rel(uri: str) -> str:
+        b = bare_path(uri)
+        return b[len(prefix):] if b.startswith(prefix) else uri
+
+    return files, rel, (fs.getUri().getScheme() or "file") == "file"
+
+
+def _physical_names(
+    columns: list[str], rename_log: list | None, gen_rel: str
+) -> dict[str, str | None]:
+    """Each logical column's physical name inside the generation at
+    ``gen_rel`` (None = dropped), replaying the evolution events
+    committed after it was written."""
+    if not rename_log:
+        return {c: c for c in columns}
+    from big_data_spark.io.stats import _physical_name
+
+    gen_id = _gen_id_of(gen_rel)
+    log = [list(e) for e in rename_log]
+    return {c: _physical_name(c, log, gen_id) for c in columns}
+
+
+def _sweep_generation_stats(
+    spark: SparkSession,
+    table_dir: str,
+    gen_rel: str,
+    columns: list[str],
+    rename_log: list | None = None,
+) -> tuple[dict[str, dict], dict[str, int]]:
+    """Per-FILE min/max for one (immutable, just-written) data
+    generation — ``({file_rel: {col: [min_str, max_str] | "allnull"
+    | None}}, {file_rel: n_rows})`` (None = no usable footer stats
+    for that column in some row group — unprunable, never a false
+    drop; the row counts back metadata-only COUNT(*), round 11).
+    Small local generations read their footers in a driver loop (ms
+    per file); larger or remote ones fan out through the distributed
+    footer sweep (io/stats.parquet_column_stats). Swept ONCE at
+    commit time — generations are immutable, so every later commit
+    carries the result forward as metadata."""
+    gen_dir = f"{table_dir}/{gen_rel}"
+    files, _rel, local = _gen_files(spark, table_dir, gen_rel)
+    if not files:
+        return {}, {}
+    out: dict[str, dict] = {}
+    # A generation committed without stats and backfilled later may
+    # carry a stat column under a former physical name (renamed after
+    # it was written) — resolve through the evolution log exactly
+    # like the read-path footer sweep, or the backfilled stats would
+    # record the column as permanently unprunable.
+    phys = _physical_names(columns, rename_log, gen_rel)
+    if local and len(files) <= _LOCAL_SWEEP_MAX_FILES:
+        # Same primitive as the distributed kernel (footer_file_stats
+        # normalizes values + tags kinds; fold_footer_rows replays the
+        # kernel path's Spark-SQL aggregation) — ONE implementation of
+        # the all-null / no-stats / canonicalization rules, pinned
+        # equal across the two paths in tests.
+        from big_data_spark.io.stats import (
+            file_row_count,
+            fold_footer_rows,
+            footer_file_stats,
+        )
+
+        nrows: dict[str, int] = {}
+        for f in files:
+            rows = footer_file_stats(bare_path(f), columns, phys)
+            out[_rel(f)] = fold_footer_rows(rows, columns)
+            nrows[_rel(f)] = file_row_count(rows)
+        return out, nrows
+    from big_data_spark.io.stats import parquet_column_stats
+
+    rows = (
+        parquet_column_stats(
+            spark,
+            [gen_dir],
+            columns,
+            rename_log=rename_log,
+            missing_ok=True,
+        )
+        .groupBy("file", "column")
+        .agg(
+            # numeric fold (double order) and lexicographic fold of
+            # the kernel's canonical strings side by side — the row's
+            # KIND picks the meaningful one, exactly as in
+            # prune_files_multi.
+            F.min(F.col("min_value").try_cast("double")).alias("mn_d"),
+            F.max(F.col("max_value").try_cast("double")).alias("mx_d"),
+            F.min("min_value").alias("mn_s"),
+            F.max("max_value").alias("mx_s"),
+            # 'allnull' row groups are not stat-less: they fail every
+            # range predicate, so they neither widen bounds nor block
+            # pruning (round 11: null-count skipping).
+            F.max(
+                (
+                    F.col("min_value").isNull()
+                    & F.col("kind").isNull()
+                ).cast("int")
+            ).alias("nostats"),
+            F.min(
+                F.coalesce(
+                    (F.col("kind") == "allnull").cast("int"), F.lit(0)
+                )
+            ).alias("allnull"),
+            F.first(
+                F.when(F.col("kind") != "allnull", F.col("kind")),
+                ignorenulls=True,
+            ).alias("kind"),
+            # every column's rows repeat the row-group counts, so any
+            # single column's sum is the file's row count
+            F.sum("n_rows").alias("rows_sum"),
+        )
+        .collect()
+    )
+    nrows: dict[str, int] = {}
+    for r in rows:
+        nrows.setdefault(_rel(r["file"]), int(r["rows_sum"] or 0))
+        per_col = out.setdefault(_rel(r["file"]), {})
+        if r["nostats"] == 1:
+            per_col[r["column"]] = None
+        elif r["allnull"] == 1:
+            per_col[r["column"]] = "allnull"
+        elif r["kind"] is None:
+            per_col[r["column"]] = None
+        elif r["kind"] == "numeric":
+            per_col[r["column"]] = [str(r["mn_d"]), str(r["mx_d"])]
+        else:
+            per_col[r["column"]] = [r["mn_s"], r["mx_s"]]
+    return out, nrows
+
+
+_SUM_INT_HEADS = ("tinyint", "smallint", "int", "bigint")
+
+
+def _sum_columns(
+    columns: list[str], schema_fields: list[dict] | None
+) -> list[str]:
+    """The stats columns metadata SUM/AVG covers: INTEGER types only
+    (round 12). Exactness is the contract — integer sums fold in
+    unbounded Python ints; float/double sums are order-dependent in
+    Spark itself and decimals are already refused by the stats
+    fold — so non-integer columns simply never record sums."""
+    types = {f["name"]: f["type"] for f in schema_fields or []}
+    return [
+        c
+        for c in columns
+        if types.get(c, "").split("(")[0].strip().lower()
+        in _SUM_INT_HEADS
+    ]
+
+
+def _sweep_generation_sums(
+    spark: SparkSession,
+    table_dir: str,
+    gen_rel: str,
+    sum_cols: list[str],
+    rename_log: list | None = None,
+) -> tuple[dict[str, dict], dict[str, dict]]:
+    """Per-FILE exact column sums + non-null counts for the INTEGER
+    stat columns of one just-written generation —
+    ``({file_rel: {col: sum_str | None}}, {file_rel: {col: n}})``.
+    Parquet footers carry no sums, so this is the one stats sweep
+    that reads DATA — column-pruned to the integer stat columns of
+    the NEW generation only, once, at commit time (round-12 directive
+    #8; Delta records per-file sums the same way at write time).
+    Sums accumulate as decimal(38,0) (exact; an overflowing file
+    records None and the aggregate refuses); a file's all-null column
+    records (None, 0) — zero non-null rows, distinguishable from
+    overflow by the count. Columns a generation physically lacks
+    (pre-evolution) are simply unrecorded — the aggregate omits or
+    refuses, never guesses."""
+    gen_dir = f"{table_dir}/{gen_rel}"
+    if not sum_cols:
+        return {}, {}
+    files, _rel, local = _gen_files(spark, table_dir, gen_rel)
+    if not files:
+        return {}, {}
+    phys = {
+        c: p
+        for c, p in _physical_names(sum_cols, rename_log, gen_rel).items()
+        if p is not None
+    }
+    if not phys:
+        return {}, {}
+    sums: dict[str, dict] = {}
+    nnn: dict[str, dict] = {}
+    if local and len(files) <= _LOCAL_SWEEP_MAX_FILES:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        for f in files:
+            rel = _rel(f)
+            sums[rel] = {}
+            nnn[rel] = {}
+            pqf = pq.ParquetFile(bare_path(f))
+            names = set(pqf.schema_arrow.names)
+            want = [p for p in phys.values() if p in names]
+            if not want or pqf.metadata.num_rows == 0:
+                continue
+            tbl = pq.read_table(bare_path(f), columns=want)
+            for c, p in phys.items():
+                if p not in names:
+                    continue
+                col = tbl.column(p)
+                n = len(col) - col.null_count
+                nnn[rel][c] = int(n)
+                if n == 0:
+                    sums[rel][c] = None  # all-null: contributes nothing
+                    continue
+                s = pc.sum(col.cast(pa.decimal128(38, 0))).as_py()
+                sums[rel][c] = str(int(s))
+        return sums, nnn
+    df = spark.read.parquet(gen_dir)
+    present = {c: p for c, p in phys.items() if p in df.columns}
+    if not present:
+        return {}, {}
+    aggs = []
+    for c, p in present.items():
+        aggs.append(
+            F.sum(F.col(p).cast("decimal(38,0)")).alias(f"__s_{c}")
+        )
+        aggs.append(F.count(F.col(p)).alias(f"__n_{c}"))
+    rows = (
+        df.groupBy(F.col("_metadata.file_path").alias("__f"))
+        .agg(*aggs)
+        .collect()
+    )
+    for r in rows:
+        rel = _rel(r["__f"])
+        per_s = sums.setdefault(rel, {})
+        per_n = nnn.setdefault(rel, {})
+        for c in present:
+            n = int(r[f"__n_{c}"] or 0)
+            per_n[c] = n
+            s = r[f"__s_{c}"]
+            # decimal(38,0) overflow folds to NULL with n > 0 —
+            # recorded as None so the aggregate refuses, never wraps.
+            per_s[c] = None if (s is None or n == 0) else str(int(s))
+    # Empty part files (0 rows) emit no groupBy row: record them
+    # explicitly so coverage checks see the generation as complete.
+    for f in files:
+        rel = _rel(f)
+        sums.setdefault(rel, {})
+        nnn.setdefault(rel, {})
+    return sums, nnn
+
+
+def _auto_commit_stats(
+    spark: SparkSession,
+    table_dir: str,
+    entries: dict[str, str],
+    prev_stats: dict | None,
+    schema_fields: list[dict],
+    dir_cols: list[str],
+    stats_columns: list[str] | None,
+    rename_log: list,
+    repair_torn: bool = False,
+) -> dict | None:
+    """The commit's ``stats`` block: carry every already-covered live
+    generation forward (an O(1) sidecar-path copy per generation —
+    pure metadata, nothing loaded), sweep only the NEW ones into
+    fresh sidecars — O(new files) per commit, the Iceberg write-side
+    trade, and the manifest itself stays O(#generations). Returns
+    None when no stat-worthy columns exist.
+
+    ``repair_torn`` (ANALYZE) also loads each carried sidecar and
+    re-sweeps a generation whose doc is missing from its consolidated
+    shard."""
+    gens = sorted(_live_gens(entries))
+    prev_side = (prev_stats or {}).get("sidecars") or {}
+    if stats_columns is not None:
+        columns = list(stats_columns)
+        if (
+            prev_stats
+            and prev_stats.get("columns") != columns
+            and any(g in prev_side for g in gens)
+        ):
+            raise ValueError(
+                "stats_columns differ from the table's recorded stats "
+                f"columns {prev_stats['columns']!r} while carried "
+                "generations keep the old set — change columns on a "
+                "full rewrite (no carried generations) only"
+            )
+    elif prev_stats:
+        columns = prev_stats["columns"]
+    else:
+        columns = _default_stats_columns(schema_fields, dir_cols)
+    if not columns:
+        return None
+    names_at = _rlog_max_id(rename_log)
+    sum_cols = _sum_columns(columns, schema_fields)
+    out_side: dict[str, str] = {}
+
+    def sweep(g: str) -> str:
+        files, nrows = _sweep_generation_stats(
+            spark,
+            table_dir,
+            f"{_DATA_DIR}/{g}",
+            columns,
+            rename_log=rename_log,
+        )
+        sums, nnn = (
+            _sweep_generation_sums(
+                spark,
+                table_dir,
+                f"{_DATA_DIR}/{g}",
+                sum_cols,
+                rename_log=rename_log,
+            )
+            if sum_cols and files
+            else ({}, {})
+        )
+        return _write_stats_sidecar(
+            spark, table_dir, g, files, nrows, names_at,
+            sums=sums, nonnull=nnn,
+        )
+
+    for g in gens:
+        if g in prev_side and not (
+            repair_torn
+            and _load_gen_stats(spark, table_dir, prev_stats, g) is None
+        ):
+            # Ordinary commits carry covered generations by PATH —
+            # O(1) per generation, nothing loaded, never a surprise
+            # full-table re-sweep.
+            out_side[g] = prev_side[g]
+        else:
+            out_side[g] = sweep(g)
+    return {"columns": columns, "sidecars": out_side}
+# Per consolidated SHARD caps (round-14 directive #1): one shard
+# carries at most this many generations' docs, and is cut early when
+# its serialized body would exceed the byte cap (per-gen docs are
+# O(files-per-generation), so a gen count alone could still build a
+# monolithic file on a wide table). Size-capped shards keep every
+# consolidation pass — and every driver read — bounded: the round-13
+# single consolidated JSON was itself an O(live files) driver
+# read-parse-rewrite at 10^5-10^6 files, the exact monolithic-
+# metadata shape the manifest/sidecar splits exist to kill.
+_CONSOLIDATE_SHARD_GENS = 4096
+_CONSOLIDATE_SHARD_BYTES = 8 << 20
+
+# Shard filenames are self-describing: ``consolidated-f<N>-<uuid>``
+# is a FULL (sealed) shard written with N generations — never
+# rewritten while at least half of them stay live — while
+# ``consolidated-t<N>-<uuid>`` is the TAIL shard that keeps absorbing
+# the loose per-gen files until it seals. Sealed-ness must be
+# decidable from the manifest's sidecar map ALONE (no reads), so the
+# writer stamps it into the name. Legacy round-13 names
+# (``consolidated-<hex>``) carry no stamp and refold as tails.
+_SHARD_NAME_RE = re.compile(
+    r"consolidated-([ft])(\d+)-[0-9a-f]+\.json$"
+)
+
+
+def _shard_is_sealed(rel: str, live_count: int) -> bool:
+    """A shard stays untouched while it still earns its keep: a FULL
+    shard whose live generations dropped below half its written count
+    (mass deletes/rewrites) gets compacted with the tail instead of
+    bloating every future bulk read with dead docs."""
+    m = _SHARD_NAME_RE.search(rel)
+    if m is None or m.group(1) != "f":
+        return False
+    return live_count >= max(1, int(m.group(2)) // 2)
+
+
+def _write_consolidated_shard(
+    spark: SparkSession,
+    table_dir: str,
+    gens_doc: dict[str, dict],
+    full: bool,
+    ser: dict[str, str] | None = None,
+) -> str:
+    """Write one immutable consolidated shard and prime the cache;
+    returns its table-relative path. Same crash contract as per-gen
+    sidecars: unique name, referenced only by a later manifest commit,
+    so a mid-write death leaves an orphan for vacuum. ``ser`` carries
+    per-gen docs already serialized by the binpack's size pass — the
+    body is assembled from those strings instead of re-dumping every
+    doc (the docs dominate consolidation CPU at scale)."""
+    kind = "f" if full else "t"
+    rel = (
+        f"{_STATS_SIDE_DIR}/consolidated-{kind}{len(gens_doc)}-"
+        f"{uuid.uuid4().hex}.json"
+    )
+    if ser is not None:
+        body = (
+            '{"gens": {'
+            + ", ".join(
+                f"{json.dumps(g)}: {ser[g]}" for g in sorted(gens_doc)
+            )
+            + "}}"
+        )
+    else:
+        body = json.dumps({"gens": gens_doc}, sort_keys=True)
+    _put_sidecar(spark, table_dir, rel, body, {"gens": gens_doc})
+    return rel
+
+
+def _consolidated_stats_block(
+    spark: SparkSession,
+    table_dir: str,
+    stats: dict,
+    live_gens: set[str],
+    max_sidecars: int,
+    shard_gens: int | None = None,
+    shard_bytes: int | None = None,
+) -> tuple[dict, int]:
+    """(new stats block, merged file count): fold the live
+    generations' loose per-generation sidecar FILES — plus the
+    current tail shard and any full shard gone mostly-dead — into
+    size-capped consolidated shards when more than ``max_sidecars``
+    refoldable files are referenced, else return the block unchanged
+    with 0. INCREMENTAL by construction (round-14 directive #1):
+    sealed full shards are carried by reference, so a repeat pass
+    rewrites only the tail — each generation is re-copied O(shard
+    cap / threshold) times over its whole life, never O(passes).
+    Docs are copied RAW (names_at stamps preserved) so rename replay
+    semantics are untouched; refolded files become unreferenced once
+    the new manifest commits and fall to vacuum."""
+    if shard_gens is None:
+        shard_gens = _CONSOLIDATE_SHARD_GENS
+    if shard_bytes is None:
+        shard_bytes = _CONSOLIDATE_SHARD_BYTES
+    side = (stats or {}).get("sidecars") or {}
+    covered = [g for g in sorted(live_gens) if g in side]
+    by_rel: dict[str, list[str]] = {}
+    for g in covered:
+        by_rel.setdefault(side[g], []).append(g)
+    refold_rels = [
+        rel
+        for rel, gens_in in by_rel.items()
+        if not _shard_is_sealed(rel, len(gens_in))
+    ]
+    if len(refold_rels) <= max_sidecars:
+        return stats, 0
+    refold_set = set(refold_rels)
+    refold_gens = sorted(
+        g for rel in refold_rels for g in by_rel[rel]
+    )
+    pre = _prefetch_sidecars(spark, table_dir, stats, refold_gens)
+    gens_doc: dict[str, dict] = {}
+    for g in refold_gens:
+        doc = pre.get(g)
+        if doc is None:
+            raw = _read_sidecar(spark, table_dir, side[g])
+            doc = raw["gens"].get(g) if "gens" in raw else raw
+        if doc is None:
+            # Torn reference: leave the block alone — analyze_table's
+            # backfill is the repair path, not consolidation.
+            return stats, 0
+        gens_doc[g] = doc
+    new_side = dict(side)
+    # Greedy binpack over the sorted refold set: cut a FULL shard at
+    # the gen cap or the byte cap; the remainder becomes the tail.
+    # Docs serialize ONCE — the size pass's strings are reused as the
+    # shard body fragments.
+    ser = {
+        g: json.dumps(doc, sort_keys=True)
+        for g, doc in gens_doc.items()
+    }
+    chunk: list[str] = []
+    chunk_bytes = 0
+    for g in refold_gens:
+        sz = len(ser[g])
+        if chunk and (
+            len(chunk) >= shard_gens
+            or chunk_bytes + sz > shard_bytes
+        ):
+            rel = _write_consolidated_shard(
+                spark,
+                table_dir,
+                {c: gens_doc[c] for c in chunk},
+                full=True,
+                ser=ser,
+            )
+            for c in chunk:
+                new_side[c] = rel
+            chunk, chunk_bytes = [], 0
+        chunk.append(g)
+        chunk_bytes += sz
+    if chunk:
+        rel = _write_consolidated_shard(
+            spark,
+            table_dir,
+            {c: gens_doc[c] for c in chunk},
+            full=len(chunk) >= shard_gens,
+            ser=ser,
+        )
+        for c in chunk:
+            new_side[c] = rel
+    # A gen in a refolded shard that is no longer LIVE must not keep
+    # pointing at the dropped file: remap it to the shard that now
+    # carries its generation's nearest surviving reference — simplest
+    # correct move is to drop dead-gen references to refolded rels
+    # (readers only ever resolve LIVE generations).
+    for g, rel in list(new_side.items()):
+        if rel in refold_set and g not in gens_doc:
+            del new_side[g]
+    out = dict(stats)
+    out["sidecars"] = new_side
+    return out, len(refold_rels)

@@ -1,6163 +1,79 @@
-"""Atomic snapshot publication for plain-parquet tables — the
-manifest-commit layer the batch lakehouse sinks write through.
+"""Atomic snapshot publication for plain-parquet tables — the public
+surface of the table format, re-exported from the modules that
+implement it:
 
-Why: a multi-file (or multi-bucket) rewrite on raw parquet is not
-atomic — a reader concurrent with the rewrite, or a crash between
-bucket writes, sees mixed old/new files. Table formats solve this
-with a MANIFEST: data files are immutable once written, and a
-snapshot becomes visible only when a tiny manifest file naming its
-live data directories is published with one atomic rename. This
-module is that pattern (the reference's blind ``mode="overwrite"``
-sinks, /root/reference/Src/processes.py:258-260, never had it),
-scoped to what the engine needs — not a full Iceberg:
+- ``io/layout.py``     — the table directory's on-disk layout, path
+  helpers and the metadata-file reader;
+- ``io/manifest.py``   — the manifest: its ``Manifest`` shape, the one
+  reader, the carry-forward rule (``successor``) and the commit;
+- ``io/sidecars.py``   — per-generation stats sidecars: sweeps, cache,
+  consolidated shards;
+- ``io/tags.py``       — named version pins;
+- ``io/reads.py``      — snapshot reads, schema replay and evolution;
+- ``io/changes.py``    — the change feed and history;
+- ``io/writers.py``    — write, append, partial, repartition, stage /
+  publish, rollback and vacuum;
+- ``io/dml.py``        — DELETE / UPDATE (copy-on-write and
+  merge-on-read) and ``fold_deletes``;
+- ``io/aggregates.py`` — metadata-only aggregates, DESCRIBE DETAIL /
+  SHOW PARTITIONS, ANALYZE and stats consolidation.
 
-- ``table_dir/_manifests/manifest-<id>.json`` — one per snapshot,
-  listing ``entries``: partition-key -> data directory (relative to
-  ``table_dir``). The highest id is the current table.
-- ``table_dir/_data/s=<id>/...`` — immutable data generations. A
-  partial rewrite's manifest carries forward untouched entries from
-  its predecessor, so one generation dir can stay live across many
-  snapshots (no write amplification for untouched buckets).
-- Commit = write the manifest body to a hidden temp name, then
-  ``FileSystem.rename`` to its final name. Rename is atomic on HDFS
-  and local filesystems and refuses an existing destination, so two
-  concurrent committers of the same snapshot id cannot both win
-  (optimistic concurrency — the loser retries on a fresh id).
-  ``replace=True`` (delete-then-rename) is reserved for DETERMINISTIC
-  replays — a foreachBatch retry recomputing the same batch id from
-  the same inputs — where last-wins is correct by construction.
-
-Crash safety: a writer that dies mid-generation leaves orphan files
-under ``_data/s=<id>`` but NO manifest — readers never see them, and
-the replay deletes and rewrites the generation before committing.
-``vacuum_snapshots`` reclaims expired manifests and unreferenced
-generations.
-
-Scale: the manifest is O(#partitions + #generations) driver-side
-JSON — the same bounded-metadata budget as a table format's manifest
-list; per-FILE column stats live in immutable per-generation sidecar
-files under ``_manifests/stats/`` referenced by path (the Iceberg
-manifest-file split), loaded lazily and only for generations a query
-actually touches. Data moves only through normal distributed writes.
-Readers open one parquet scan per live generation (partition pruning
-and pushdown intact via ``basePath``) and union them; compaction
-folds many generations back into one.
-
-Format version: every manifest carries ``format_version`` =
-``FORMAT_VERSION`` (Iceberg's ``format-version``). Both manifest
-parsers refuse a missing or different stamp with one ValueError that
-names the table dir and says to rebuild it from source — tables are
-rebuilt, never migrated. Stats sidecars are reachable only through a
-manifest, so that one check covers them too.
+Package code imports each name from its defining module; this module
+keeps ``from big_data_spark.io.snapshot import ...`` working for
+callers outside the package.
 """
 
-from __future__ import annotations
+# ruff: noqa: F401
 
-import json
-import posixpath
-import re
-import threading
-import uuid
-from contextlib import contextmanager
-from urllib.parse import unquote
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
+from big_data_spark.io.aggregates import (
+    analyze_table,
+    consolidate_stats,
+    metadata_aggregate,
+    metadata_group_aggregate,
+    show_partitions,
+    table_detail,
+)
+from big_data_spark.io.changes import (
+    follow_changes,
+    read_changes,
+    table_history,
+)
 from big_data_spark.io.compact import hadoop_fs
-
-_MANIFEST_DIR = "_manifests"
-_DATA_DIR = "_data"
-_DELETES_DIR = "_deletes"
-_CDF_DIR = "_cdf"
-# Per-generation column-stats sidecars: the manifest itself carries
-# only {generation: sidecar rel path} — the per-FILE min/max + row
-# counts live in one immutable JSON per generation under this dir,
-# written once when the generation is first swept and referenced by
-# path forever after. This keeps the manifest O(#generations) instead
-# of O(live files) serialized per commit and parsed per read (the
-# Iceberg manifest-file / manifest-list split, Delta's checkpoint
-# sidecars).
-_STATS_SIDE_DIR = f"{_MANIFEST_DIR}/stats"
-# The on-disk format every writer stamps into each manifest. Bump it
-# whenever what a writer puts on disk changes; readers accept only
-# this value.
-FORMAT_VERSION = 1
-
-
-def _bare_expr(col):
-    """Column-level twin of bare_path: scheme-insensitive file path
-    for joining delete-vector positions against scan metadata."""
-    return F.regexp_replace(col, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
-
-_PART_TYPES_LOCK = threading.RLock()
-# Depth/previous-value PER SparkSession (keyed by id): the conf is
-# per-session SQLConf, so a process-global counter would skip
-# disabling inference on a second session entered while the first
-# holds the guard — and restore one session's previous value onto
-# another.
-_PART_TYPES_STATE: dict[int, list] = {}
-
-
-@contextmanager
-def _declared_partition_types(spark: SparkSession):
-    """Scope a scan so hive partition-column values stay STRINGS and
-    cast to the COMMITTED type downstream (_normalize_scan), instead
-    of being type-INFERRED first. Inference-then-cast is lossy for
-    numeric-looking string keys: a '00123' dir value infers as 123
-    and casts back to '123' — the read would diverge from the raw
-    value the manifest keys and DML attribution use (round-10 advice,
-    generalized from read_staged to every manifest-driven scan).
-    Partition discovery runs eagerly at DataFrame creation, so the
-    conf only needs to cover the spark.read call. The conf is
-    SESSION-GLOBAL, so entries are counted under a lock: concurrent
-    guarded readers (two-thread DML/maintenance walks) keep inference
-    off until the LAST one exits and the original value restores
-    exactly once — an unsynchronized save/restore pair could
-    re-enable inference under a racing reader (mistyping a '00123'
-    key mid-scan) or leave it off for the whole session. State is
-    kept per session (newSession() clones carry their own SQLConf).
-
-    KNOWN TRADE: an UNGUARDED concurrent reader on the same session —
-    a plain spark.read.parquet over its own hive layout in another
-    thread — sees inference off during the guarded window (its
-    partition columns come back string-typed for that read). The
-    alternatives are worse: a dedicated newSession() per scan costs a
-    SQLConf clone per read and breaks temp-view visibility, and an
-    explicit user schema can't be derived for legacy tables without a
-    committed schema. Callers mixing threads on one session should
-    route their own hive reads through these guarded readers or a
-    cloned session."""
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    sid = id(spark)
-    with _PART_TYPES_LOCK:
-        state = _PART_TYPES_STATE.get(sid)
-        if state is None:
-            state = [0, spark.conf.get(key)]
-            _PART_TYPES_STATE[sid] = state
-            spark.conf.set(key, "false")
-        state[0] += 1
-    try:
-        yield
-    finally:
-        with _PART_TYPES_LOCK:
-            state[0] -= 1
-            if state[0] == 0:
-                del _PART_TYPES_STATE[sid]
-                spark.conf.set(key, state[1])
-
-
-class SnapshotConflict(Exception):
-    """Another committer published this snapshot id first."""
-
-
-def _manifest_path(table_dir: str, snapshot_id: int) -> str:
-    return f"{table_dir}/{_MANIFEST_DIR}/manifest-{snapshot_id:012d}.json"
-
-
-def _claim_check(spark: SparkSession, table_dir: str, snapshot_id: int):
-    """Fail fast BEFORE touching the generation dir when
-    ``snapshot_id`` is already committed — ``clear_generation`` would
-    otherwise delete a racing committer's PUBLISHED data on the way
-    to a commit that was going to conflict anyway. This narrows (does
-    not eliminate) the claim window; ``commit_manifest``'s atomic
-    rename stays the final arbiter."""
-    fs, p = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
-    if fs.exists(p):
-        raise SnapshotConflict(
-            f"snapshot {snapshot_id} already committed under "
-            f"{table_dir!r} — re-read the table and retry"
-        )
-
-
-# Whether a session's fs.defaultFS is the LOCAL filesystem, cached
-# per session id (one py4j round trip to find out, then free).
-_LOCAL_DEFAULT_FS: dict[int, bool] = {}
-
-
-def _os_path(spark: SparkSession, path: str) -> str | None:
-    """A plain-OS path for ``path`` when it PROVABLY lives on the
-    local filesystem — else None (caller stays on the Hadoop FS API).
-    ``file:`` URIs with no authority qualify outright; scheme-less
-    paths qualify only when the session's ``fs.defaultFS`` is the
-    local FS (a scheme-less path on an HDFS-defaulted cluster names a
-    REMOTE file — never fast-path it). Why: the metadata layer reads
-    many small JSON files (manifests, sidecars, tag pins) per
-    operation, and each Hadoop-API read costs 4-6 py4j round trips
-    (~60 ms measured on this host) where the OS read is ~0.1 ms —
-    O(versions) driver wall per catalog refresh at stake. METADATA
-    READS ONLY: writes stay on the Hadoop API, whose atomic-rename
-    CAS and crc handling are the commit protocol's arbiter."""
-    if path.startswith("file://"):
-        rest = path[len("file://") :]
-        # Empty authority (file:///x) is local; a host component is
-        # somebody else's filesystem.
-        return rest if rest.startswith("/") else None
-    if path.startswith("file:/"):
-        return path[len("file:") :]
-    if "://" in path or path.startswith("file:"):
-        return None
-    key = id(spark)
-    loc = _LOCAL_DEFAULT_FS.get(key)
-    if loc is None:
-        try:
-            loc = str(
-                spark.sparkContext._jsc.hadoopConfiguration().get(
-                    "fs.defaultFS", "file:///"
-                )
-            ).startswith("file:")
-        except Exception:  # noqa: BLE001 — any doubt: Hadoop path
-            loc = False
-        _LOCAL_DEFAULT_FS[key] = loc
-    return path if loc else None
-
-
-def snapshot_ids(spark: SparkSession, table_dir: str) -> list[int]:
-    """Committed snapshot ids, ascending (directory listing of the
-    manifest dir — bounded metadata, no data scan)."""
-    mdir = f"{table_dir}/{_MANIFEST_DIR}"
-    lp = _os_path(spark, mdir)
-    if lp is not None:
-        import os as _os
-
-        try:
-            names = _os.listdir(lp)
-        except (FileNotFoundError, NotADirectoryError):
-            return []
-        return sorted(
-            int(n[len("manifest-") : -len(".json")])
-            for n in names
-            if n.startswith("manifest-") and n.endswith(".json")
-        )
-    fs, hpath = hadoop_fs(spark, mdir)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("manifest-") and name.endswith(".json"):
-            out.append(int(name[len("manifest-") : -len(".json")]))
-    return sorted(out)
-
-
-def _read_json(spark: SparkSession, path: str) -> dict:
-    """One small JSON file — the shared reader for manifests, tag
-    pins, and cursors-style metadata. Local files read in-process
-    (no py4j); everything else off the Hadoop FS. Both paths raise
-    on a missing file (FileNotFoundError / Py4JJavaError — callers
-    probe existence first or catch broadly)."""
-    lp = _os_path(spark, path)
-    if lp is not None:
-        with open(lp, encoding="utf-8") as f:
-            return json.load(f)
-    fs, hpath = hadoop_fs(spark, path)
-    stream = fs.open(hpath)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def format_version_error(where: str, found, expected: int) -> ValueError:
-    """The one refusal for an on-disk structure whose format stamp is
-    missing or unknown — shared by the manifest and catalog-binding
-    readers so the message and the recovery read the same."""
-    return ValueError(
-        f"{where!r} has on-disk format version {found!r}, but this "
-        f"engine reads only version {expected} — rebuild it from source"
-    )
-
-
-def _checked_manifest(table_dir: str, man: dict) -> dict:
-    found = man.get("format_version")
-    if found != FORMAT_VERSION:
-        raise format_version_error(table_dir, found, FORMAT_VERSION)
-    return man
-
-
-def read_manifest(
-    spark: SparkSession, table_dir: str, snapshot_id: int
-) -> dict:
-    return _checked_manifest(
-        table_dir, _read_json(spark, _manifest_path(table_dir, snapshot_id))
-    )
-
-
-# Below this many manifests a serial driver loop beats a Spark job
-# (one job costs ~100ms of scheduling; a local metadata read ~1ms —
-# the crossover on an object store is far lower, so this is
-# conservative toward the distributed path where it matters).
-_BULK_MANIFEST_THRESHOLD = 32
-
-
-def _read_manifests(
-    spark: SparkSession, table_dir: str, ids: list[int]
-) -> dict[int, dict]:
-    """Manifests for ``ids`` as {id: manifest dict}. A handful reads
-    serially on the driver; above the threshold ONE distributed
-    whole-file text scan fetches every manifest in parallel on the
-    executors — at 10k commits (a year of 15-minute micro-batches)
-    the serial walk was 10k sequential object-store round trips
-    before the first data read. The JSON parse stays driver-side
-    (exact dicts, no schema coercion); only the I/O distributes. A manifest vacuumed between the listing
-    and the scan fails the job loudly, same as the serial path."""
-    if len(ids) <= _BULK_MANIFEST_THRESHOLD:
-        return {i: read_manifest(spark, table_dir, i) for i in ids}
-    paths = [_manifest_path(table_dir, i) for i in ids]
-    rows = (
-        spark.read.option("wholetext", "true").text(paths).collect()
-    )
-    out: dict[int, dict] = {}
-    for r in rows:
-        man = _checked_manifest(table_dir, json.loads(r["value"]))
-        out[int(man["snapshot_id"])] = man
-    missing = set(ids) - set(out)
-    if missing:
-        raise ValueError(
-            f"manifest scan under {table_dir!r} lost ids "
-            f"{sorted(missing)} — vacuumed mid-read?"
-        )
-    return out
-
-
-def latest_manifest(
-    spark: SparkSession, table_dir: str, below: int | None = None
-) -> dict | None:
-    """The newest committed manifest, optionally restricted to ids
-    strictly below ``below`` — the replay primitive: a re-run of
-    batch N must read the state as of N-1 even if N's first attempt
-    already committed."""
-    ids = snapshot_ids(spark, table_dir)
-    if below is not None:
-        ids = [i for i in ids if i < below]
-    if not ids:
-        return None
-    return read_manifest(spark, table_dir, ids[-1])
-
-
-# Sidecar files are IMMUTABLE (a fresh uuid name per write, the
-# manifest references them by path), so a small per-process cache is
-# always coherent — it saves the JSON read when many queries touch
-# the same generations, and the write path primes it so the writing
-# session never re-reads its own sidecars.
-_SIDECAR_CACHE: dict[tuple[str, str], dict] = {}
-_SIDECAR_CACHE_LOCK = threading.Lock()
-# Sized so tables up to a few hundred live generations reach pure
-# cache hits on repeated aggregates/pruned reads (each doc is
-# O(files-per-generation) — bounded driver memory); beyond it the
-# bulk prefetch re-reads per query, trading repeat cost for a
-# bounded footprint.
-_SIDECAR_CACHE_MAX = 512
-
-
-def _write_stats_sidecar(
-    spark: SparkSession,
-    table_dir: str,
-    gen: str,
-    files: dict[str, dict],
-    rows: dict[str, int],
-    names_at: int,
-    sums: dict[str, dict],
-    nonnull: dict[str, dict],
-) -> str:
-    """Persist one generation's per-file stats as an immutable sidecar
-    under ``_manifests/stats/`` and return its table-relative path.
-    ``names_at`` pins which rename-log events are already reflected
-    in the column keys (the max event commit id at sweep time);
-    readers replay only LATER events, so a rename after the sweep
-    stays metadata-only — no sidecar rewrite (Iceberg gets the same
-    via field ids).
-
-    No temp-then-rename: the name is unique (uuid) and the file is
-    referenced only by a manifest committed strictly AFTER this write
-    returns — a crash mid-write leaves an unreferenced orphan that
-    vacuum reclaims, never a torn live file."""
-    rel = f"{_STATS_SIDE_DIR}/{gen}-{uuid.uuid4().hex}.json"
-    doc = {
-        "gen": gen,
-        "files": files,
-        "rows": rows,
-        "names_at": names_at,
-        # Per-file exact integer sums + non-null counts; {} = swept
-        # with no sum-capable columns.
-        "sums": sums,
-        "nonnull": nonnull,
-    }
-    body = json.dumps(doc, sort_keys=True)
-    fs, dpath = hadoop_fs(spark, f"{table_dir}/{_STATS_SIDE_DIR}")
-    fs.mkdirs(dpath)
-    _, fpath = hadoop_fs(spark, f"{table_dir}/{rel}")
-    out = fs.create(fpath, True)
-    try:
-        out.write(bytearray(body.encode("utf-8")))
-    finally:
-        out.close()
-    with _SIDECAR_CACHE_LOCK:
-        if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-            _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
-        _SIDECAR_CACHE[(table_dir, rel)] = doc
-    return rel
-
-
-# Cache-miss sidecar file reads this process has paid (monotonic;
-# tests and the consolidation probe read it — a consolidated table's
-# repeat aggregate must stay at O(1) reads, not O(generations)).
-_SIDECAR_FS_READS = 0
-
-
-def _read_sidecar(spark: SparkSession, table_dir: str, rel: str) -> dict:
-    global _SIDECAR_FS_READS
-    key = (table_dir, rel)
-    with _SIDECAR_CACHE_LOCK:
-        hit = _SIDECAR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    doc = _read_json(spark, f"{table_dir}/{rel}")
-    with _SIDECAR_CACHE_LOCK:
-        _SIDECAR_FS_READS += 1
-        if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-            _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
-        _SIDECAR_CACHE[key] = doc
-    return doc
-
-
-def _rlog_max_id(rename_log: list | None) -> int:
-    """Newest schema-evolution event commit id — the ``names_at``
-    stamp for sidecars swept now: every event <= it is already
-    reflected in the swept column keys."""
-    return max((int(ev[0]) for ev in rename_log or []), default=0)
-
-
-def _replay_sidecar_names(
-    files: dict[str, dict], rename_log: list | None, names_at: int
-) -> dict[str, dict]:
-    """Remap a sidecar's per-file column keys through the evolution
-    events committed AFTER its ``names_at`` stamp — renames follow,
-    drops disappear. Keyed per event id, so a NEW column re-using a
-    dropped/renamed column's former name is never confused with it:
-    newer sidecars carry a higher names_at and skip the old events."""
-    events = [
-        ev for ev in (rename_log or []) if int(ev[0]) > names_at
-    ]
-    if not events:
-        return files
-    keys = {c for per_col in files.values() for c in per_col}
-    key_map: dict[str, str | None] = {}
-    for k in keys:
-        name: str | None = k
-        for cid, kind, old, new in events:
-            if kind == "rename" and name == old:
-                name = new
-            elif kind == "drop" and name == old:
-                name = None
-                break
-        key_map[k] = name
-    if all(key_map[k] == k for k in keys):
-        return files
-    return {
-        f: {
-            key_map[c]: v
-            for c, v in per_col.items()
-            if key_map[c] is not None
-        }
-        for f, per_col in files.items()
-    }
-
-
-def _stats_covered(stats: dict | None) -> set[str]:
-    """Generations the stats block covers with per-file MIN/MAX."""
-    return set((stats or {}).get("sidecars") or {})
-
-
-def _prefetch_sidecars(
-    spark: SparkSession,
-    table_dir: str,
-    stats: dict | None,
-    gens,
-) -> dict[str, dict]:
-    """Bulk-read the UNCACHED sidecars of many generations in ONE
-    distributed whole-file text scan (the _read_manifests trade, same
-    threshold): metadata aggregates touch every live generation, and
-    a 10k-generation table would otherwise pay 10k serial object-
-    store round trips before answering. Returns {gen: doc}; below the
-    threshold returns {} and callers fall back to the serial cached
-    loop."""
-    side = (stats or {}).get("sidecars") or {}
-    with _SIDECAR_CACHE_LOCK:
-        # DISTINCT uncached files: a consolidated sidecar is
-        # referenced by MANY generations but read once.
-        need: list[str] = []
-        seen: set[str] = set()
-        for g in gens:
-            rel = side.get(g)
-            if (
-                rel is not None
-                and rel not in seen
-                and (table_dir, rel) not in _SIDECAR_CACHE
-            ):
-                seen.add(rel)
-                need.append(rel)
-    if len(need) <= _BULK_MANIFEST_THRESHOLD:
-        return {}
-    rows = (
-        spark.read.option("wholetext", "true")
-        .text([f"{table_dir}/{r}" for r in need])
-        # The rel each doc was READ FROM travels with the row:
-        # recovering it by searching side[] for any gen the doc
-        # carries mis-attributed stale consolidated files (an older
-        # consolidated doc still naming a gen whose side[] now points
-        # at a fresher per-gen sidecar could be cached under the NEW
-        # rel and overwrite the fresh read in this very bulk — row
-        # order is arbitrary), silently dropping an ANALYZE backfill.
-        .select(F.input_file_name().alias("path"), "value")
-        .collect()
-    )
-    by_base = {r.rsplit("/", 1)[-1]: r for r in need}
-    out: dict[str, dict] = {}
-    raw_by_rel: dict[str, dict] = {}
-    for r in rows:
-        # input_file_name is a URI (percent-encoded); sidecar
-        # basenames are uuid-unique hex so they round-trip exactly.
-        rel = by_base.get(unquote(r["path"].rsplit("/", 1)[-1]))
-        if rel is None:
-            continue  # defensive: a path we did not ask for
-        doc = json.loads(r["value"])
-        raw_by_rel[rel] = doc
-        if "gens" in doc:
-            # Consolidated file: expand ONLY the generations whose
-            # sidecar reference actually points here — a gen carried
-            # by an old shard but re-swept since must come from its
-            # fresher per-gen file, never this copy.
-            for g, d in doc["gens"].items():
-                if side.get(g) == rel:
-                    out[g] = d
-        elif side.get(doc.get("gen")) == rel:
-            out[doc["gen"]] = doc
-    # Prime the cache from the bulk read (up to the cap): tables
-    # whose generations fit become pure cache hits on every repeat
-    # query — without this the bulk scan re-ran per aggregate forever
-    # (review finding); oversized tables keep the bounded footprint.
-    with _SIDECAR_CACHE_LOCK:
-        for rel, doc in raw_by_rel.items():
-            if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-                break
-            _SIDECAR_CACHE.setdefault((table_dir, rel), doc)
-    return out
-
-
-def _load_gen_stats(
-    spark: SparkSession,
-    table_dir: str,
-    stats: dict | None,
-    gen: str,
-    rename_log: list | None = None,
-    _doc: dict | None = None,
-) -> dict | None:
-    """One generation's recorded stats from the stats block — LAZILY:
-    one small sidecar JSON (cached) read only when a query actually
-    needs this generation. None = uncovered (or a consolidated shard
-    that lost this generation's doc); otherwise a dict with:
-
-    - ``files``: {file_rel: {col: [min,max] | "allnull" | None}}
-    - ``rows``:  {file_rel: n_rows}
-    - ``sums``:  {file_rel: {col: exact-int-string | None}} for the
-      INTEGER stat columns
-    - ``nonnull``: {file_rel: {col: non-null count}}, paired with
-      ``sums``
-
-    Column keys in every per-file dict are replayed through the
-    evolution events committed after the sidecar's names_at stamp."""
-    side = (stats or {}).get("sidecars") or {}
-    if gen not in side:
-        return None
-    doc = (
-        _doc
-        if _doc is not None
-        else _read_sidecar(spark, table_dir, side[gen])
-    )
-    if "gens" in doc:
-        # Consolidated sidecar: ONE file carries many generations'
-        # docs — extract this generation's. The raw file is what's
-        # cached, so every sibling generation is a pure cache hit
-        # after the first read.
-        doc = doc["gens"].get(gen)
-        if doc is None:
-            return None  # torn consolidation: behave as uncovered
-    at = int(doc["names_at"])
-    return {
-        "files": _replay_sidecar_names(doc["files"], rename_log, at),
-        "rows": doc["rows"],
-        "sums": _replay_sidecar_names(doc["sums"], rename_log, at),
-        "nonnull": _replay_sidecar_names(doc["nonnull"], rename_log, at),
-    }
-
-
-def load_generation_stats(
-    spark: SparkSession, table_dir: str, man: dict, gen: str
-) -> tuple[dict | None, dict | None]:
-    """Public spelling of the lazy per-generation stats load — the
-    (per-file column stats, per-file row counts) a manifest records
-    for ``gen``, resolved through its sidecar. Tools and tests use
-    this instead of reaching into the manifest dict, so the storage
-    layout can evolve freely."""
-    doc = _load_gen_stats(
-        spark,
-        table_dir,
-        man.get("stats"),
-        gen,
-        rename_log=man.get("rename_log"),
-    )
-    if doc is None:
-        return None, None
-    return doc["files"], doc["rows"]
-
-
-_TAGS_DIR = "_tags"
-
-
-def _atomic_overwrite_local(
-    spark: SparkSession, fs, parent_dir: str, tmp_path, final_path, tag: str
-) -> bool:
-    """Replace ``final_path`` with ``tmp_path`` in ONE atomic
-    same-directory rename on a local (file://) filesystem — java.nio
-    ``ATOMIC_MOVE|REPLACE_EXISTING``, the overwrite-rename Hadoop's
-    ``FileSystem.rename`` lacks. Checksum sidecars need care: the
-    local FS is a ChecksumFileSystem, so a stale ``.{name}.crc``
-    beside the swapped-in data would fail readers' verification.
-    The crcs are DELETED, never moved: a delete-crc / move-data /
-    move-crc sequence lets two concurrent movers pair one mover's
-    data with the OTHER's crc (ChecksumException on every later
-    read); with both sidecars removed the moved pin simply reads
-    unverified — the safe state a missing crc means — and
-    last-data-move-wins holds for any interleaving."""
-    jvm = spark._jvm
-    gw = spark.sparkContext._gateway
-
-    def _nio_move(src: str, dst: str) -> None:
-        opts = gw.new_array(jvm.java.nio.file.CopyOption, 2)
-        opts[0] = jvm.java.nio.file.StandardCopyOption.REPLACE_EXISTING
-        opts[1] = jvm.java.nio.file.StandardCopyOption.ATOMIC_MOVE
-        jvm.java.nio.file.Files.move(
-            jvm.java.io.File(src).toPath(),
-            jvm.java.io.File(dst).toPath(),
-            opts,
-        )
-
-    tmp_name = tmp_path.getName()
-    dst_crc = f"{parent_dir}/.{tag}.json.crc"
-    _, dst_crc_p = hadoop_fs(spark, dst_crc)
-    if fs.exists(dst_crc_p):
-        fs.delete(dst_crc_p, False)
-    try:
-        _nio_move(tmp_path.toUri().getPath(), final_path.toUri().getPath())
-    except Exception:
-        # A failed move (permissions, FS without real atomic replace)
-        # must not strand the temp pin + its crc sidecar in _tags/ —
-        # nothing vacuums there. The existing pin is untouched by a
-        # failed ATOMIC_MOVE, so cleanup is safe.
-        if fs.exists(tmp_path):
-            fs.delete(tmp_path, False)
-        raise
-    src_crc = f"{parent_dir}/.{tmp_name}.crc"
-    _, src_crc_p = hadoop_fs(spark, src_crc)
-    if fs.exists(src_crc_p):
-        fs.delete(src_crc_p, False)
-    return True
-
-
-def tag_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    tag: str,
-    snapshot_id: int | None = None,
-    replace: bool = False,
-) -> int:
-    """Pin a NAME to a snapshot id (Iceberg-style tag): readers can
-    `read_snapshot(tag=...)` it, and ``vacuum_snapshots`` keeps a
-    tagged version's manifest + data alive past the keep_last window
-    — the retention handle for audits, eval-set freezes, and
-    release baselines ("train v3 read exactly THIS"). Defaults to
-    the newest snapshot. Write-temp-then-rename under ``_tags/``:
-    first writer wins unless ``replace=True`` (moving a tag is an
-    explicit act). Returns the pinned id."""
-    import re as _re
-
-    if not _re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]{0,63}", tag):
-        raise ValueError(
-            f"tag {tag!r} must be 1-64 chars of [A-Za-z0-9._-] "
-            "starting alphanumeric"
-        )
-    ids = snapshot_ids(spark, table_dir)
-    if not ids:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    sid = ids[-1] if snapshot_id is None else snapshot_id
-    if sid not in ids:
-        raise ValueError(
-            f"snapshot {sid} not found under {table_dir!r} "
-            f"(committed: {ids})"
-        )
-    tdir = f"{table_dir}/{_TAGS_DIR}"
-    fs, tpath = hadoop_fs(spark, tdir)
-    fs.mkdirs(tpath)
-    tmp = f"{tdir}/.tmp-{uuid.uuid4().hex}"
-    _, tmp_path = hadoop_fs(spark, tmp)
-    out = fs.create(tmp_path, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"tag": tag, "snapshot_id": sid}, sort_keys=True
-                ).encode("utf-8")
-            )
-        )
-    finally:
-        out.close()
-    _, final = hadoop_fs(spark, f"{tdir}/{tag}.json")
-    # replace=True on a LOCAL filesystem moves the pin with ONE atomic
-    # overwrite-rename (java.nio ATOMIC_MOVE): no transient not-found
-    # window for readers, and a crash can never release the pin —
-    # either the old pin or the new one exists at every instant. Two
-    # concurrent movers are last-completed-wins, both succeed.
-    if (
-        replace
-        and fs.exists(final)
-        and (fs.getUri().getScheme() or "file") == "file"
-    ):
-        renamed = _atomic_overwrite_local(
-            spark, fs, tdir, tmp_path, final, tag
-        )
-    else:
-        # Non-local FS without an overwrite-rename primitive keeps the
-        # documented delete-then-rename fallback: readers can hit a
-        # transient not-found between the two ops, and a crash between
-        # them RELEASES the pin (the next vacuum may expire the
-        # formerly pinned version's data) — re-tag after recovering.
-        # Two concurrent replace=True movers are last-completed-wins:
-        # the loser's rename fails because the winner's file landed
-        # after our delete, so retry ONCE after re-deleting (round-10
-        # advice: without the retry the loser got the misleading
-        # first-writer-conflict error).
-        if replace and fs.exists(final):
-            fs.delete(final, False)
-        renamed = fs.rename(tmp_path, final)
-        if not renamed and replace:
-            if fs.exists(final):
-                fs.delete(final, False)
-            renamed = fs.rename(tmp_path, final)
-    if not renamed:
-        fs.delete(tmp_path, False)
-        raise SnapshotConflict(
-            f"tag {tag!r} already exists under {table_dir!r} — "
-            "pass replace=True to move it"
-        )
-    # Pin-vs-vacuum race check: a vacuum running between the id
-    # validation above and the rename landing may have expired the
-    # target (the tag wasn't visible to its list_tags yet). Verify
-    # the pinned manifest still exists AFTER the pin is visible.
-    # vacuum_snapshots re-reads the tags AFTER computing its kill
-    # list and rescues late pins, so the two checks overlap: the only
-    # losing interleaving left is a pin landing in the instant
-    # between vacuum's re-read and its manifest delete AND the vacuum
-    # deleting in the instant after this check passes — two
-    # check-vs-delete instants that would both have to line up.
-    _, mp = hadoop_fs(spark, _manifest_path(table_dir, sid))
-    if not fs.exists(mp):
-        fs.delete(final, False)
-        raise SnapshotConflict(
-            f"snapshot {sid} was vacuumed while tagging {tag!r} — "
-            "re-tag from a currently kept version"
-        )
-    return sid
-
-
-def delete_tag(spark: SparkSession, table_dir: str, tag: str) -> None:
-    fs, p = hadoop_fs(spark, f"{table_dir}/{_TAGS_DIR}/{tag}.json")
-    if not fs.exists(p):
-        raise ValueError(f"tag {tag!r} not found under {table_dir!r}")
-    fs.delete(p, False)
-
-
-def list_tags(spark: SparkSession, table_dir: str) -> dict[str, int]:
-    """tag -> pinned snapshot id (directory listing, no data reads)."""
-    fs, p = hadoop_fs(spark, f"{table_dir}/{_TAGS_DIR}")
-    if not fs.exists(p):
-        return {}
-    out: dict[str, int] = {}
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if not name.endswith(".json") or name.startswith("."):
-            continue
-        body = _read_json(spark, st.getPath().toString())
-        out[body["tag"]] = int(body["snapshot_id"])
-    return out
-
-
-def _pcols(val) -> list[str] | None:
-    """Normalize a manifest ``partition_col`` (string = legacy single
-    column, list = multi-column, round 11) to an ordered list. The
-    manifest stores whatever the writer declared, so old single-column
-    tables keep their string field and their raw-value entry keys
-    unchanged."""
-    if val is None:
-        return None
-    return [val] if isinstance(val, str) else list(val)
-
-
-def _dir_cols(man: dict) -> list[str]:
-    """The manifest's dir-valued columns — entry partition columns
-    plus the generation layout column — i.e. every committed column
-    whose values live in directory names rather than parquet data.
-    This is the ``partition_cols`` read_entries needs to build an
-    explicit per-generation read schema (footer-inference-free)."""
-    cols = list(_pcols(man.get("partition_col")) or [])
-    lb = man.get("layout_by")
-    if lb and lb not in cols:
-        cols.append(lb)
-    return cols
-
-
-def _hive_escape(spark: SparkSession):
-    return (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName
-    )
-
-
-def _hive_unescape(spark: SparkSession):
-    return (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.unescapePathName
-    )
-
-
-_HEX = set("0123456789abcdefABCDEF")
-
-
-def _unescape_path_py(s: str) -> str:
-    """Pure-Python port of ExternalCatalogUtils.unescapePathName: a
-    '%' followed by two hex digits decodes to that char, anything
-    else stays literal (Hive only ever escapes single ASCII chars, so
-    per-char decode equals the JVM's). Exists because the hot callers
-    (entry_partition_values on every partitions= read,
-    show_partitions) would otherwise pay one py4j round trip PER
-    SEGMENT — ~10k driver->JVM calls on a 5k-leaf table for what is
-    advertised as metadata-only pruning. tests pin equality against
-    the JVM implementation over the escaping corpus."""
-    if "%" not in s:
-        return s
-    out = []
-    i = 0
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if (
-            c == "%"
-            and i + 2 < n
-            and s[i + 1] in _HEX
-            and s[i + 2] in _HEX
-        ):
-            out.append(chr(int(s[i + 1 : i + 3], 16)))
-            i += 3
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _render_part_value(v) -> str:
-    """Spark's dir-value rendering where Python's str() diverges —
-    the ONE renderer shared by entry keys and the partitions=
-    manifest filter, so a key matches its dir value on both the
-    write and read sides. Booleans write as 'true'/'false'.
-    Timestamps write session-wall-clock with the fractional part
-    TRIMMED of trailing zeros and omitted when zero (pinned against
-    Spark's actual dir names in tests) — Python's str() would render
-    '...05.500000' while Spark writes '...05.5', silently matching
-    nothing. float keys REFUSE: Java's Double.toString ('1.0E-7')
-    and Python's repr ('1e-07') disagree in the exponent range, and
-    a silently-empty partition filter is worse than an error — use
-    int/string/date partition keys (float partition keys are an
-    antipattern everywhere)."""
-    import datetime as _dt
-
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        # Python repr and Java's Double.toString agree in the
-        # plain-decimal range (both print the shortest decimal
-        # there), so common float keys like 1.5 keep working on
-        # existing tables. Outside it Java switches to E-notation at
-        # different thresholds ('1.0E-7' vs '1e-07') — refuse rather
-        # than silently match nothing. NaN/inf refuse too.
-        if v == v and (v == 0.0 or 1e-3 <= abs(v) < 1e7):
-            return repr(v)
-        raise ValueError(
-            f"float partition key value {v!r} is outside the "
-            "plain-decimal range where Python and Spark render dirs "
-            "identically (Java E-notation diverges) — pass the "
-            "exact dir string instead, or partition on "
-            "int/string/date columns"
-        )
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            raise ValueError(
-                "timestamp partition key values must be naive "
-                "(session wall clock, matching Spark's dir rendering)"
-            )
-        s = v.strftime("%Y-%m-%d %H:%M:%S")
-        if v.microsecond:
-            s += f".{v.microsecond:06d}".rstrip("0")
-        return s
-    return str(v)
-
-
-def partition_entry_key(spark: SparkSession, pcols: list[str], values) -> str:
-    """Canonical manifest entry key for ONE partition. A single-column
-    table keys on the RAW value (the legacy format — unchanged, so
-    existing tables read on). A multi-column table keys on the
-    hive-ESCAPED dir suffix ``c1=v1/c2=v2``: self-describing,
-    unambiguous for values containing '/' or '=', and exactly the
-    generation-relative subdir the entry's rel path ends with.
-    ``values``: one scalar, or an ordered tuple/list matching
-    ``pcols``; for a multi-column table a plain STRING is accepted as
-    an already-canonical key (the form entries/DML hand back) — but
-    only after validating its shape, so a malformed string raises
-    instead of silently popping nothing from the entry map."""
-    if len(pcols) > 1 and isinstance(values, str):
-        segs = values.split("/")
-        if len(segs) != len(pcols) or any(
-            not s.startswith(f"{c}=") for s, c in zip(segs, pcols)
-        ):
-            raise ValueError(
-                f"touched key {values!r} is neither a value tuple nor "
-                f"a canonical 'c1=v1/c2=v2' key for partition columns "
-                f"{pcols!r}"
-            )
-        return values  # canonical (came from a manifest key)
-    if not isinstance(values, (list, tuple)):
-        values = [values]
-    if len(values) != len(pcols):
-        raise ValueError(
-            f"partition key {values!r} has {len(values)} value(s) for "
-            f"partition columns {pcols!r}"
-        )
-    if any(v is None for v in values):
-        raise ValueError(
-            "null partition keys are not supported (Spark writes them "
-            "as __HIVE_DEFAULT_PARTITION__, which cannot round-trip "
-            "through the manifest keys)"
-        )
-
-    if len(pcols) == 1:
-        return _render_part_value(values[0])
-    esc = _hive_escape(spark)
-    return "/".join(
-        f"{c}={esc(_render_part_value(v))}" for c, v in zip(pcols, values)
-    )
-
-
-def entry_partition_values(
-    spark: SparkSession, pcols: list[str], key: str
-) -> dict[str, str]:
-    """Raw partition value per column, parsed back from a canonical
-    entry key — the manifest-level partition-pruning primitive (each
-    value as the string Spark wrote; readers cast via the committed
-    schema)."""
-    if len(pcols) == 1:
-        return {pcols[0]: key}
-    unesc = _unescape_path_py
-    out: dict[str, str] = {}
-    for seg, col in zip(key.split("/"), pcols):
-        name, escaped = seg.split("=", 1)
-        if name != col:
-            raise ValueError(
-                f"entry key {key!r} does not match partition columns "
-                f"{pcols!r}"
-            )
-        out[col] = unesc(escaped)
-    return out
-
-
-def _walk_partition_leaves(
-    spark: SparkSession, root_dir: str, pcols: list[str]
-) -> dict[str, str]:
-    """Map canonical entry key -> hive-escaped rel suffix
-    (``c1=e1/c2=e2``) for every partition LEAF dir written under
-    ``root_dir`` — the one reconciler of disk layout to manifest
-    entries, shared by write_snapshot_partial and publish_staged.
-    Driver-side metadata listing only (O(#partitions) statuses, the
-    same budget as the manifest itself). Raises on a
-    ``__HIVE_DEFAULT_PARTITION__`` dir at any level: null keys cannot
-    round-trip through the manifest keys."""
-    fs, rp = hadoop_fs(spark, root_dir)
-    if not fs.exists(rp):
-        return {}
-    unesc = _unescape_path_py
-    out: dict[str, str] = {}
-
-    def rec(path, level: int, suffix: list[str], raw: list[str]) -> None:
-        if level == len(pcols):
-            joined = "/".join(suffix)
-            key = raw[0] if len(pcols) == 1 else joined
-            out[key] = joined
-            return
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if not st.isDirectory() or not name.startswith(
-                f"{pcols[level]}="
-            ):
-                continue
-            escaped = name.split("=", 1)[1]
-            if escaped == "__HIVE_DEFAULT_PARTITION__":
-                raise ValueError(
-                    "null partition keys are not supported (they "
-                    "cannot round-trip through the manifest keys)"
-                )
-            rec(
-                st.getPath(),
-                level + 1,
-                suffix + [name],
-                raw + [unesc(escaped)],
-            )
-
-    rec(rp, 0, [], [])
-    return out
-
-
-def stage_snapshot(
-    df: DataFrame,
-    table_dir: str,
-    partition_by: str | list[str] | None = None,
-) -> str:
-    """WRITE-AUDIT-PUBLISH step 1: write ``df`` to a private
-    ``_staging/<token>`` dir — invisible to every reader (staging is
-    unreferenced by manifests) and schema-checked against the table
-    NOW so an incompatible batch fails before any audit work.
-    Returns the token; ``read_staged`` audits it (dq_report /
-    assert_suite / ad-hoc queries), then ``publish_staged`` makes it
-    visible as one atomic commit or ``abandon_staged`` discards it.
-    A crashed audit leaves only staging residue for vacuum's TTL.
-
-    On a table whose manifest entries are keyed per partition
-    (``partition_col`` set — the write_snapshot_partial family), the
-    batch is automatically staged partitioned on that column (an
-    explicit different ``partition_by`` is refused) so publish can
-    reconcile manifest entries per touched partition — the dq-gated
-    ingest path for partitioned fact tables (round-9 verdict
-    directive #1)."""
-    spark = df.sparkSession
-    prev = latest_manifest(spark, table_dir)
-    pcols = _pcols((prev or {}).get("partition_col"))
-    by = _pcols(partition_by)
-    if pcols is not None:
-        if by is None:
-            by = pcols
-        elif by != pcols:
-            raise ValueError(
-                f"stage_snapshot: table is partitioned on {pcols!r} "
-                f"but the batch is staged on {by!r} — manifest "
-                "entries reconcile per partition, so the layouts must "
-                "agree."
-            )
-    elif by is not None and len(by) > 1:
-        raise ValueError(
-            "stage_snapshot: a multi-column staging layout is only "
-            "supported on a table partitioned on those columns (an "
-            "unpartitioned table's layout_by is one column)"
-        )
-    fields = _schema_fields(df)
-    check_schema_evolution((prev or {}).get("schema"), fields)
-    token = uuid.uuid4().hex
-    staging = f"{table_dir}/_staging/{token}"
-    writer = df.write.mode("error")
-    if by:
-        writer = writer.partitionBy(*by)
-    writer.parquet(staging)
-    # Record the writer's DECLARED schema beside the data: a read-back
-    # of the staged dir re-INFERS hive partition column types (a
-    # '2026-08-15' string key comes back as date), which would make
-    # publish commit — or refuse on — a schema the writer never had.
-    # Hidden file ('_' prefix): every parquet scan ignores it.
-    fs, _sp = hadoop_fs(spark, staging)
-    _, sidecar = hadoop_fs(spark, f"{staging}/_schema.json")
-    out = fs.create(sidecar, True)
-    try:
-        out.write(bytearray(json.dumps(fields).encode("utf-8")))
-    finally:
-        out.close()
-    if pcols is not None:
-        # Null partition keys cannot round-trip through the manifest
-        # keys (same contract as write_snapshot_partial) — refuse at
-        # stage time, from the dir listing alone (metadata-only; the
-        # walk raises on __HIVE_DEFAULT_PARTITION__ at ANY level).
-        try:
-            _walk_partition_leaves(spark, staging, pcols)
-        except ValueError:
-            fs, spath = hadoop_fs(spark, staging)
-            fs.delete(spath, True)
-            raise
-    return token
-
-
-def read_staged(
-    spark: SparkSession, table_dir: str, token: str
-) -> DataFrame:
-    """The staged batch, for auditing BEFORE it becomes visible —
-    pair with dq assert_suite / profile_table. Reads the raw staged
-    files; the batch is by construction in the current schema
-    (stage_snapshot checked it)."""
-    staging = f"{table_dir}/_staging/{token}"
-    fs, p = hadoop_fs(spark, staging)
-    if not fs.exists(p):
-        raise ValueError(
-            f"no staged batch {token!r} under {table_dir!r} — "
-            "published, abandoned, or vacuumed"
-        )
-    fields = _staged_fields(spark, staging)
-    if fields:
-        # Read with the writer's DECLARED schema as an EXPLICIT user
-        # schema: partition dir strings then cast directly to the
-        # declared type. Inferring first and casting back is lossy for
-        # numeric-looking string keys — '00123' infers as 123 and
-        # casts back to '123', so the audited frame would diverge from
-        # the raw dir value publish_staged keys the manifest on
-        # (round-10 advice).
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
-        return spark.read.schema(ddl).parquet(staging).select(
-            *[f["name"] for f in fields]
-        )
-    return spark.read.parquet(staging)
-
-
-def _staged_fields(spark: SparkSession, staging: str) -> list[dict] | None:
-    """The declared-schema sidecar stage_snapshot wrote beside the
-    staged data (None for a staging dir that predates it)."""
-    path = f"{staging}/_schema.json"
-    fs, p = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return None
-    return _read_json(spark, path)
-
-
-def _refresh_claim_mtime(spark: SparkSession, fs, dest_path) -> None:
-    """Stamp a just-claimed generation dir with the CLAIM time: rename
-    preserves mtime, so a WAP batch staged longer ago than vacuum's
-    ``staging_ttl_hours`` (arbitrarily heavy audits are blessed) would
-    look like stale crash residue during its claim->commit window — a
-    concurrent vacuum would delete the just-claimed data and the
-    commit would publish a manifest pointing at vanished files
-    (round-10 advice, medium). setTimes is metadata-only."""
-    import time as _time
-
-    try:
-        fs.setTimes(dest_path, int(_time.time() * 1000), -1)
-    except Exception:
-        # A FS without setTimes support: the post-commit existence
-        # verify in the claim loops still turns the (now wider) race
-        # into a loud SnapshotConflict instead of silent corruption.
-        pass
-
-
-def _claim_commit_loop(
-    spark: SparkSession,
-    table_dir: str,
-    staging: str,
-    fields: list[dict],
-    attempts: int,
-    build,
-    origin: str,
-) -> int:
-    """THE staged-data publish loop shared by append_with_retry and
-    publish_staged: each attempt rebases on the freshest manifest,
-    claims ``_data/s=<id>`` by ONE atomic rename of the staged dir,
-    and commits; losing either race (dir claim or manifest rename)
-    renames the data back to staging and retries — a retry costs a
-    directory rename, never a data rewrite. ``build(prev, sid,
-    has_data)`` returns ``(entries, commit_kwargs)``: the FULL entry
-    map to commit (including the claimed generation's own entries —
-    one whole-generation key, or per-partition keys pointing into
-    ``_data/s=<sid>/<col>=<val>`` subdirs for a partitioned publish)
-    and the extra commit_manifest kwargs. It runs per attempt against
-    the freshest predecessor, so table-shape refusals rebase too."""
-    import random as _random
-    import time as _time
-
-    fs, staging_path = hadoop_fs(spark, staging)
-    has_data = _generation_has_data(spark, staging)
-    _, data_root = hadoop_fs(spark, f"{table_dir}/{_DATA_DIR}")
-    fs.mkdirs(data_root)
-    last_err: Exception | None = None
-    for attempt in range(attempts):
-        if attempt:
-            # Jittered backoff: a loser re-reading the manifest before
-            # the winner's commit lands recomputes the SAME id and
-            # burns attempts in a tight spin — the commit window now
-            # includes the stats sweep, so give the winner time to
-            # land instead of exhausting the budget (round-11 two-
-            # writer thread test caught exactly this).
-            _time.sleep(
-                min(0.05 * (2 ** (attempt - 1)), 1.0)
-                * (0.5 + _random.random())
-            )
-        prev = latest_manifest(spark, table_dir)
-        check_schema_evolution((prev or {}).get("schema"), fields)
-        sid = (prev["snapshot_id"] + 1) if prev else 0
-        entries, kwargs = build(prev, sid, has_data)
-        if has_data:
-            _, dest_path = hadoop_fs(spark, generation_dir(table_dir, sid))
-            if fs.exists(dest_path) or not fs.rename(
-                staging_path, dest_path
-            ):
-                # Another writer holds this id's dir (in-flight or a
-                # crash orphan). If its manifest lands, the next loop
-                # rebases past it; an orphan exhausts the budget and
-                # raises with the blocking dir named.
-                last_err = SnapshotConflict(
-                    f"generation dir s={sid} under {table_dir!r} is "
-                    "held by another writer (or a crash orphan — "
-                    "vacuum reclaims it after the staging TTL)"
-                )
-                continue
-            _refresh_claim_mtime(spark, fs, dest_path)
-        try:
-            commit_manifest(
-                spark,
-                table_dir,
-                sid,
-                entries,
-                schema_fields=fields,
-                prev_man=prev,
-                **kwargs,
-            )
-        except SnapshotConflict as exc:
-            last_err = exc
-            if has_data and not fs.rename(dest_path, staging_path):
-                # A non-staging committer took the manifest id after
-                # our dir claim; the loser's generation must not sit
-                # under a committed id it doesn't belong to.
-                raise SnapshotConflict(
-                    f"lost commit race for snapshot {sid} AND the "
-                    f"rename-back of {generation_dir(table_dir, sid)!r} "
-                    "failed — manual cleanup required"
-                ) from exc
-            continue
-        if not has_data:
-            fs.delete(staging_path, True)
-        elif not fs.exists(dest_path):
-            # The claim was reclaimed between rename and commit (a
-            # vacuum that listed before the mtime stamp landed) —
-            # the committed manifest points at vanished data. Loud
-            # beats silent: name the corrupted id for recovery.
-            raise SnapshotConflict(
-                f"generation dir s={sid} under {table_dir!r} vanished "
-                "between claim and commit — a concurrent vacuum "
-                f"reclaimed it; manifest {sid} points at missing data "
-                "and must be rolled back"
-            )
-        return sid
-    raise SnapshotConflict(
-        f"{origin} exhausted {attempts} attempts under "
-        f"{table_dir!r}: {last_err}"
-    )
-
-
-def publish_staged(
-    spark: SparkSession,
-    table_dir: str,
-    token: str,
-    mode: str = "append",
-    attempts: int = 5,
-) -> int:
-    """WRITE-AUDIT-PUBLISH step 3: make the audited staged batch
-    visible as ONE atomic commit — ``mode="append"`` keeps every
-    prior entry (the ingest shape), ``mode="replace"`` publishes the
-    batch as the table's full new content. Claim-and-rebase like
-    append_with_retry: each attempt renames the staged dir to
-    ``_data/s=<id>`` and commits a manifest rebased on the freshest
-    predecessor; losing either race re-stages and retries — a retry
-    costs a directory rename, never a data rewrite, and the audited
-    BYTES are exactly the published bytes (never recomputed).
-
-    On a PARTITIONED table (manifest entries keyed per partition —
-    the write_snapshot_partial family) the staged batch's partitions
-    publish through the partial-write reconcile as the same one
-    atomic commit: ``mode="append"`` REPLACES exactly the touched
-    partitions (the staged batch is by contract each touched
-    partition's full new content — partial-write semantics, the
-    dq-gated ingest shape for date-partitioned fact tables) and
-    carries every untouched partition forward by reference;
-    ``mode="replace"`` publishes the batch as the whole table. The
-    hive subdirs travel with the one generation rename, so per-
-    partition byte identity holds: the audited files ARE the
-    published files."""
-    if mode not in ("append", "replace"):
-        raise ValueError(f"mode must be append|replace, got {mode!r}")
-    staging = f"{table_dir}/_staging/{token}"
-    fs, staging_path = hadoop_fs(spark, staging)
-    if not fs.exists(staging_path):
-        raise ValueError(
-            f"no staged batch {token!r} under {table_dir!r} — "
-            "published, abandoned, or vacuumed"
-        )
-    # The declared schema travels in the staging sidecar — a read-back
-    # would re-infer hive partition column types (string date keys
-    # come back as DATE) and commit a schema the writer never had.
-    fields = _staged_fields(spark, staging) or _schema_fields(
-        spark.read.parquet(staging)
-    )
-    # The staged batch's own hive layout (stage_snapshot's
-    # partition_by materializes as one level of col=val dirs). For an
-    # unpartitioned table it commits as layout_by so maintenance
-    # preserves it and DML hint-skipping knows the column lives in
-    # dir names; for a partitioned table the col=val dirs BECOME the
-    # per-partition manifest entries.
-    layout: str | None = None
-    layout_cols = set()
-    for st in fs.listStatus(staging_path):
-        name = st.getPath().getName()
-        if st.isDirectory() and "=" in name:
-            layout_cols.add(name.split("=", 1)[0])
-    if len(layout_cols) == 1:
-        layout = next(iter(layout_cols))
-
-    def build(prev, sid, has_data):
-        pcols = _pcols((prev or {}).get("partition_col"))
-        if pcols is not None:
-            # Partitioned table: per-partition entry reconcile, the
-            # write_snapshot_partial contract behind one rename. The
-            # leaf walk raises on __HIVE_DEFAULT_PARTITION__ at any
-            # level (null keys cannot round-trip).
-            written = _walk_partition_leaves(spark, staging, pcols)
-            if has_data and not written:
-                raise ValueError(
-                    f"staged batch is laid out on "
-                    f"{sorted(layout_cols) or None!r} but the table "
-                    f"is partitioned on {pcols!r} — re-stage through "
-                    "stage_snapshot (it partitions on the table's "
-                    "columns automatically)."
-                )
-            entries = (
-                dict(prev["entries"]) if mode == "append" else {}
-            )
-            for key, suffix in written.items():
-                entries[key] = posixpath.join(
-                    _DATA_DIR, f"s={sid}", suffix
-                )
-            kwargs = {
-                "partition_col": (prev or {}).get("partition_col"),
-                # Appends never touch rows of carried partitions:
-                # prior masks stay valid (rows of replaced partitions
-                # go inert); the rename log keeps mapping carried
-                # pre-evolution generations. A replace publishes a
-                # fresh table with nothing old to mask or map.
-                "deletes": (prev or {}).get("deletes")
-                if mode == "append"
-                else None,
-                "rename_log": (prev or {}).get("rename_log")
-                if mode == "append"
-                else None,
-            }
-            return entries, kwargs
-        entries = (
-            dict(prev["entries"]) if (prev and mode == "append") else {}
-        )
-        # In append mode an unpartitioned batch keeps the table's
-        # declared layout (same contract as append_snapshot); a
-        # DIFFERENT staged layout is REFUSED — one layout_by cannot
-        # represent a mixed-layout table, and silently replacing the
-        # declared column would un-skip DML range hints on the old
-        # layout column (which lives only in dir names) and crash
-        # the footer sweep. A replace never inherits a stale layout.
-        # Appends never touch existing rows: prior masks and the
-        # rename log stay valid; a replace publishes a fresh table
-        # with nothing old to mask or map.
-        prev_layout = (prev or {}).get("layout_by")
-        if (
-            mode == "append"
-            and layout is not None
-            and prev_layout is not None
-            and layout != prev_layout
-        ):
-            raise ValueError(
-                f"staged batch is partitioned on {layout!r} but the "
-                f"table's declared layout is {prev_layout!r} — a "
-                "mixed-layout append is unrepresentable; re-stage "
-                "with the table's layout or publish mode='replace'."
-            )
-        if has_data:
-            entries["" if mode == "replace" else f"b{sid}"] = (
-                f"{_DATA_DIR}/s={sid}"
-            )
-        kwargs = {
-            "layout_by": layout
-            or (prev_layout if mode == "append" else None),
-            "deletes": (prev or {}).get("deletes")
-            if mode == "append"
-            else None,
-            "rename_log": (prev or {}).get("rename_log")
-            if mode == "append"
-            else None,
-        }
-        return entries, kwargs
-
-    return _claim_commit_loop(
-        spark, table_dir, staging, fields, attempts, build,
-        "publish_staged",
-    )
-
-
-def abandon_staged(
-    spark: SparkSession, table_dir: str, token: str
-) -> None:
-    """Discard a staged batch that failed its audit — explicit and
-    immediate (vacuum's staging TTL is the crash backstop)."""
-    fs, p = hadoop_fs(spark, f"{table_dir}/_staging/{token}")
-    if not fs.exists(p):
-        raise ValueError(
-            f"no staged batch {token!r} under {table_dir!r}"
-        )
-    fs.delete(p, True)
-
-
-def rollback_snapshot(
-    spark: SparkSession, table_dir: str, to_id: int
-) -> int:
-    """Restore the table to version ``to_id`` AS A NEW COMMIT
-    (Delta RESTORE / Iceberg rollback): the new manifest carries the
-    old version's entries, schema, delete vectors and evolution log,
-    so content, names and types all revert — while history stays
-    intact (the undone commits remain time-travelable until vacuum).
-    The change feed reports the rollback faithfully: rows the undone
-    commits added show as deletes, rows they removed show as
-    re-inserts. Fails loudly when ``to_id`` is expired (its manifest
-    is gone) — tag versions you may need to restore. Metadata-only:
-    zero data movement."""
-    man = read_manifest(spark, table_dir, to_id)
-    latest = latest_manifest(spark, table_dir)
-    if latest["snapshot_id"] == to_id:
-        return to_id  # already there — no empty commit
-    next_id = latest["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    commit_manifest(
-        spark,
-        table_dir,
-        next_id,
-        dict(man["entries"]),
-        partition_col=man.get("partition_col"),
-        schema_fields=man.get("schema"),
-        layout_by=man.get("layout_by"),
-        deletes=man.get("deletes"),
-        rename_log=man.get("rename_log"),
-        prev_man=latest,
-        # The restored version's OWN stats cover exactly its
-        # generations — carrying them keeps the rollback metadata-only
-        # (auto would re-sweep generations the latest version dropped).
-        stats=man.get("stats"),
-    )
-    return next_id
-
-
-def resolve_as_of_ts(
-    spark: SparkSession, table_dir: str, ts_ms: int
-) -> int:
-    """The newest snapshot id committed at or before ``ts_ms``
-    (epoch millis) — timestamp time travel. Manifest reads go
-    through the bulk scan (_read_manifests): one parallel job, not
-    O(#commits) serial driver round trips."""
-    ids = snapshot_ids(spark, table_dir)
-    mans = _read_manifests(spark, table_dir, ids)
-    best: int | None = None
-    for sid in ids:
-        if int(mans[sid]["committed_at_ms"]) <= ts_ms:
-            best = sid
-    if best is None:
-        raise ValueError(
-            f"no snapshot under {table_dir!r} committed at or before "
-            f"ts {ts_ms} (oldest kept may have been vacuumed)"
-        )
-    return best
-
-
-def _schema_fields(df: DataFrame) -> list[dict[str, str]]:
-    return [
-        {"name": f.name, "type": f.dataType.simpleString()}
-        for f in df.schema.fields
-    ]
-
-
-def bare_path(uri: str) -> str:
-    """Scheme-insensitive path form ('file:///tmp/x' == '/tmp/x') —
-    for COMPARISON only; I/O always uses original URIs."""
-    import re
-
-    return re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/", uri)
-
-
-def _pad_to_schema(
-    df: DataFrame, schema_fields: list[dict] | None
-) -> DataFrame:
-    """Present ``df`` in the committed schema: columns an older
-    generation lacks appear as TYPED nulls (an untyped F.lit(None)
-    is a void column parquet refuses to write), in committed order."""
-    if not schema_fields:
-        return df
-    for f in schema_fields:
-        if f["name"] not in df.columns:
-            df = df.withColumn(f["name"], F.lit(None).cast(f["type"]))
-    return df.select(*[f["name"] for f in schema_fields])
-
-
-def _gen_id_of(path: str) -> int | None:
-    """Snapshot id a generation was committed at, parsed from the
-    ``_data/s=<id>`` segment of a path — accepts both manifest-
-    relative entry paths and full file URIs (the ONE parser of this
-    layout, shared with io/stats.py's footer-sweep kernel). None for
-    paths outside the generation layout (legacy entries; treated as
-    predating every evolution event)."""
-    import re
-
-    m = re.search(rf"(?:^|/){_DATA_DIR}/s=(\d+)(?:/|$)", path)
-    return int(m.group(1)) if m else None
-
-
-def _gen_read_ddl(
-    schema_fields: list[dict] | None,
-    rename_log: list | None,
-    gen_id: int | None,
-    partition_cols: list[str] | None,
-) -> str | None:
-    """DDL string for an EXPLICIT per-generation read schema, or None
-    when only footer inference is sound. Passing a user schema to the
-    parquet reader skips the footer-inference job Spark otherwise runs
-    per ``spark.read.parquet`` call — one driver round-trip per live
-    generation on every snapshot read (8 of lake_merge's 13 jobs at
-    bench scale were these single-task footer reads).
-
-    The generation's PHYSICAL schema is derived from the committed
-    one: each committed field's physical name reverse-replays the
-    rename events committed after the generation was written, and its
-    physical type may only be a ``_WIDEN_OK`` widening of the
-    committed type — which the Spark 4 parquet readers promote
-    natively (probed: tinyint/smallint/int -> wider ints, float ->
-    double), so declaring the committed type is exact. Columns added
-    after the generation read back as typed NULLs (probed), matching
-    the allowMissingColumns union; later-dropped columns are simply
-    absent from the schema, matching the drop replay. Dir-valued
-    columns (entry partitions + generation layout; never renamed —
-    protected by evolve_schema) are declared STRING so raw values like
-    '00123' survive exactly as with inference disabled, cast to the
-    committed type downstream in _normalize_scan as before.
-
-    Falls back to inference (None) when: the caller has no committed
-    schema or didn't affirm the dir-column set; two committed fields
-    derive the SAME physical name (a later column re-using a renamed-
-    away name: the physical bytes belong to the OLD column and only
-    the forward replay resolves it); or a later drop event's physical
-    name collides with a derived one (drop-then-re-add: the file's
-    column is dead data)."""
-    if not schema_fields or partition_cols is None:
-        return None
-    evs = [
-        ev
-        for ev in (rename_log or [])
-        if gen_id is None or ev[0] > gen_id
-    ]
-    pset = set(partition_cols)
-    phys: dict[str, str] = {}
-    for f in schema_fields:
-        if f["name"] in pset:
-            continue
-        p = f["name"]
-        for ev in reversed(evs):
-            if ev[1] == "rename" and ev[3] == p:
-                p = ev[2]
-        phys[f["name"]] = p
-    vals = list(phys.values())
-    if len(set(vals)) != len(vals):
-        return None
-    if {ev[2] for ev in evs if ev[1] == "drop"} & set(vals):
-        return None
-    parts = []
-    for f in schema_fields:
-        if f["name"] in pset:
-            parts.append(f"`{f['name']}` string")
-        else:
-            parts.append(f"`{phys[f['name']]}` {f['type']}")
-    return ", ".join(parts)
-
-
-def _normalize_scan(
-    df: DataFrame,
-    schema_fields: list[dict] | None,
-    rename_log: list | None,
-    gen_id: int | None = None,
-) -> DataFrame:
-    """Present ONE generation's physical columns in the committed
-    logical schema by REPLAYING the manifest's evolution event log
-    (``rename_log``: ordered ``[commit_id, kind, old, new]`` rows,
-    kind 'rename' | 'drop') — only events committed AFTER this
-    generation was written (``commit_id > gen_id``) apply, which
-    resolves every name exactly: a later column reusing a former
-    physical name, swaps across evolve calls, and drop-then-re-add
-    (the old physical column is dropped by its event, never
-    resurrected into the re-added column). Each rename was validated
-    collision-free against the then-current schema at its commit, so
-    sequential replay in commit order can never collide. Types then
-    cast to the committed schema (evolve_schema admits only lossless
-    widenings, so the cast cannot truncate). ``gen_id=None`` (a
-    non-generation entry path) replays the full log — such entries
-    can only predate evolution."""
-    if not schema_fields:
-        return df
-    for ev in rename_log or []:
-        cid, kind, old, new = ev[0], ev[1], ev[2], ev[3]
-        if gen_id is not None and cid <= gen_id:
-            continue
-        if old not in df.columns:
-            continue
-        if kind == "rename":
-            if new in df.columns:
-                raise ValueError(
-                    f"rename replay collision: generation (id={gen_id}) "
-                    f"carries both {old!r} and {new!r} at event "
-                    f"commit {cid} — manifest log corrupt"
-                )
-            df = df.withColumnRenamed(old, new)
-        elif kind == "drop":
-            df = df.drop(old)
-    dtypes = dict(df.dtypes)
-    for f in schema_fields:
-        if f["name"] in dtypes and dtypes[f["name"]] != f["type"]:
-            df = df.withColumn(f["name"], F.col(f["name"]).cast(f["type"]))
-    return df
-
-
-# Lossless widenings evolve_schema admits (reader-side cast of old
-# generations can therefore never truncate).
-_WIDEN_OK = {
-    "tinyint": {"smallint", "int", "bigint"},
-    "smallint": {"int", "bigint"},
-    "int": {"bigint"},
-    "float": {"double"},
-}
-
-
-def evolve_schema(
-    spark: SparkSession,
-    table_dir: str,
-    renames: dict[str, str] | None = None,
-    drops: list[str] | None = None,
-    widens: dict[str, str] | None = None,
-) -> int:
-    """NON-additive schema evolution as a METADATA-ONLY commit
-    (round-7 verdict gap #5: check_schema_evolution admits adds
-    only): rename columns, drop columns, and widen integer/float
-    types without touching a single data file. The manifest carries
-    a VERSIONED event log (``rename_log``: ordered
-    ``[commit_id, 'rename'|'drop', old, new]`` rows); readers replay
-    onto each generation exactly the events committed after it was
-    written and cast to the committed type, so a table evolved N
-    times — including name swaps and a column re-using a former
-    name — still reads every generation correctly. Entries, delete
-    vectors and layout carry forward untouched; time travel to
-    pre-evolution versions sees the old schema (each manifest carries
-    only the events committed up to it).
-
-    Refused loudly: evolving the partition/layout column (its values
-    live in directory names), renaming onto an existing column,
-    narrowing or any non-listed type change, unknown columns. The
-    regular writers keep the ADDITIVE contract against the evolved
-    schema — an old producer still writing the pre-rename schema
-    fails at commit time rather than silently forking the table."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    if not man.get("schema"):
-        raise ValueError(
-            f"table under {table_dir!r} has no committed schema to evolve"
-        )
-    fields = [dict(f) for f in man["schema"]]
-    log = [list(ev) for ev in (man.get("rename_log") or [])]
-    next_id = man["snapshot_id"] + 1
-    protected = set(_pcols(man.get("partition_col")) or []) | (
-        {man.get("layout_by")} - {None}
-    )
-    by_name = {f["name"]: f for f in fields}
-
-    for col in drops or []:
-        if col in protected:
-            raise ValueError(f"cannot drop partition/layout column {col!r}")
-        if col not in by_name:
-            raise ValueError(f"drop: unknown column {col!r}")
-        fields.remove(by_name.pop(col))
-        log.append([next_id, "drop", col, None])
-    for old, new in (renames or {}).items():
-        if old in protected:
-            raise ValueError(
-                f"cannot rename partition/layout column {old!r}"
-            )
-        if old not in by_name:
-            raise ValueError(f"rename: unknown column {old!r}")
-        if new in by_name:
-            raise ValueError(f"rename: column {new!r} already exists")
-        f = by_name.pop(old)
-        f["name"] = new
-        by_name[new] = f
-        log.append([next_id, "rename", old, new])
-    for col, new_type in (widens or {}).items():
-        if col in protected:
-            raise ValueError(f"cannot widen partition/layout column {col!r}")
-        if col not in by_name:
-            raise ValueError(f"widen: unknown column {col!r}")
-        cur = by_name[col]["type"]
-        if new_type not in _WIDEN_OK.get(cur, set()):
-            raise ValueError(
-                f"widen: {cur} -> {new_type} is not a lossless widening "
-                f"(allowed: {sorted(_WIDEN_OK.get(cur, set()))})"
-            )
-        by_name[col]["type"] = new_type
-    _claim_check(spark, table_dir, next_id)
-    # Stats follow the evolution: only the COLUMNS list remaps eagerly
-    # (renamed to the new logical names, dropped columns removed). The
-    # immutable per-generation sidecars carry forward by path, and
-    # readers replay the rename-log events committed after each
-    # sidecar's names_at stamp onto its keys at load time — a rename
-    # on a million-file table rewrites zero stats bytes.
-    stats = man.get("stats")
-    if stats:
-        key_map = {c: c for c in stats["columns"]}
-        for col in drops or []:
-            key_map.pop(col, None)
-        for old, new in (renames or {}).items():
-            if old in key_map:
-                key_map[old] = new
-        stats = {
-            "columns": [
-                key_map[c] for c in stats["columns"] if c in key_map
-            ],
-            "sidecars": dict(stats["sidecars"]),
-        }
-    commit_manifest(
-        spark,
-        table_dir,
-        next_id,
-        dict(man["entries"]),
-        partition_col=man.get("partition_col"),
-        schema_fields=fields,
-        layout_by=man.get("layout_by"),
-        deletes=man.get("deletes"),
-        rename_log=log,
-        prev_man=man,
-        stats=stats,
-    )
-    return next_id
-
-
-def check_schema_evolution(
-    prev_fields: list[dict] | None, new_fields: list[dict]
-) -> None:
-    """Enforce the ADDITIVE evolution contract at commit time: every
-    column of the predecessor snapshot must still exist with the same
-    type; new columns may appear (older generations read them as
-    NULL). Drops, renames and type changes raise — silently narrowing
-    a 100 TB table's schema is how readers discover data loss months
-    later; an explicit rewrite (write_snapshot of a transformed read)
-    is the loud way to do those."""
-    if not prev_fields:
-        return
-    new_by_name = {f["name"]: f["type"] for f in new_fields}
-    missing = [f["name"] for f in prev_fields if f["name"] not in new_by_name]
-    changed = [
-        f"{f['name']}: {f['type']} -> {new_by_name[f['name']]}"
-        for f in prev_fields
-        if f["name"] in new_by_name and new_by_name[f["name"]] != f["type"]
-    ]
-    if missing or changed:
-        raise ValueError(
-            "snapshot schema evolution must be additive — "
-            f"dropped: {missing}, type-changed: {changed}. "
-            "Rewrite the table through a full write_snapshot of an "
-            "explicitly transformed read to do this on purpose."
-        )
-
-
-_STATS_MAX_COLS = 4
-# Generations at or under this many files sweep footers in a driver
-# loop (ms per local file); larger or remote ones fan out through the
-# distributed kernel. Patchable in tests to force the distributed
-# path on small fixtures.
-_LOCAL_SWEEP_MAX_FILES = 64
-
-
-def _default_stats_columns(
-    schema_fields: list[dict] | None,
-    partition_col,
-    layout_by: str | None,
-) -> list[str]:
-    """The LEADING stat-capable columns (schema order, capped) stats
-    are recorded for by default — numeric, string, date and timestamp
-    types (round 11: typed skipping; io/stats.stat_kind is the one
-    type→kind mapping). Partition/layout columns excluded (they live
-    in dir names, not file footers, and manifest entries already
-    prune them)."""
-    from big_data_spark.io.stats import stat_kind
-
-    skip = set(_pcols(partition_col) or []) | ({layout_by} - {None})
-    out: list[str] = []
-    for f in schema_fields or []:
-        if f["name"] in skip:
-            continue
-        if stat_kind(f["type"]) is not None:
-            out.append(f["name"])
-            if len(out) == _STATS_MAX_COLS:
-                break
-    return out
-
-
-def _sweep_generation_stats(
-    spark: SparkSession,
-    table_dir: str,
-    gen_rel: str,
-    columns: list[str],
-    rename_log: list | None = None,
-) -> tuple[dict[str, dict], dict[str, int]]:
-    """Per-FILE min/max for one (immutable, just-written) data
-    generation — ``({file_rel: {col: [min_str, max_str] | "allnull"
-    | None}}, {file_rel: n_rows})`` (None = no usable footer stats
-    for that column in some row group — unprunable, never a false
-    drop; the row counts back metadata-only COUNT(*), round 11).
-    Small local generations read their footers in a driver loop (ms
-    per file); larger or remote ones fan out through the distributed
-    footer sweep (io/stats.parquet_column_stats). Swept ONCE at
-    commit time — generations are immutable, so every later commit
-    carries the result forward as metadata."""
-    gen_dir = f"{table_dir}/{gen_rel}"
-    fs, gp = hadoop_fs(spark, gen_dir)
-    if not fs.exists(gp):
-        return {}, {}
-    files: list[str] = []
-    it = fs.listFiles(gp, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        files.append(st.getPath().toString())
-    if not files:
-        return {}, {}
-    prefix = bare_path(f"{table_dir}/").rstrip("/") + "/"
-
-    def _rel(uri: str) -> str:
-        b = bare_path(uri)
-        return b[len(prefix):] if b.startswith(prefix) else uri
-
-    out: dict[str, dict] = {}
-    local = (fs.getUri().getScheme() or "file") == "file"
-    # A generation committed without stats and backfilled later may
-    # carry a stat column under a former physical name (renamed after
-    # it was written) — resolve through the evolution log exactly
-    # like the read-path footer sweep, or the backfilled stats would
-    # record the column as permanently unprunable.
-    gen_id = _gen_id_of(gen_rel)
-    if rename_log:
-        from big_data_spark.io.stats import _physical_name
-
-        phys = {
-            c: _physical_name(c, [list(e) for e in rename_log], gen_id)
-            for c in columns
-        }
-    else:
-        phys = {c: c for c in columns}
-    if local and len(files) <= _LOCAL_SWEEP_MAX_FILES:
-        # Same primitive as the distributed kernel (footer_file_stats
-        # normalizes values + tags kinds; fold_footer_rows replays the
-        # kernel path's Spark-SQL aggregation) — ONE implementation of
-        # the all-null / no-stats / canonicalization rules, pinned
-        # equal across the two paths in tests.
-        from big_data_spark.io.stats import (
-            file_row_count,
-            fold_footer_rows,
-            footer_file_stats,
-        )
-
-        nrows: dict[str, int] = {}
-        for f in files:
-            rows = footer_file_stats(bare_path(f), columns, phys)
-            out[_rel(f)] = fold_footer_rows(rows, columns)
-            nrows[_rel(f)] = file_row_count(rows)
-        return out, nrows
-    from big_data_spark.io.stats import parquet_column_stats
-
-    rows = (
-        parquet_column_stats(
-            spark,
-            [gen_dir],
-            columns,
-            rename_log=rename_log,
-            missing_ok=True,
-        )
-        .groupBy("file", "column")
-        .agg(
-            # numeric fold (double order) and lexicographic fold of
-            # the kernel's canonical strings side by side — the row's
-            # KIND picks the meaningful one, exactly as in
-            # prune_files_multi.
-            F.min(F.col("min_value").try_cast("double")).alias("mn_d"),
-            F.max(F.col("max_value").try_cast("double")).alias("mx_d"),
-            F.min("min_value").alias("mn_s"),
-            F.max("max_value").alias("mx_s"),
-            # 'allnull' row groups are not stat-less: they fail every
-            # range predicate, so they neither widen bounds nor block
-            # pruning (round 11: null-count skipping).
-            F.max(
-                (
-                    F.col("min_value").isNull()
-                    & F.col("kind").isNull()
-                ).cast("int")
-            ).alias("nostats"),
-            F.min(
-                F.coalesce(
-                    (F.col("kind") == "allnull").cast("int"), F.lit(0)
-                )
-            ).alias("allnull"),
-            F.first(
-                F.when(F.col("kind") != "allnull", F.col("kind")),
-                ignorenulls=True,
-            ).alias("kind"),
-            # every column's rows repeat the row-group counts, so any
-            # single column's sum is the file's row count
-            F.sum("n_rows").alias("rows_sum"),
-        )
-        .collect()
-    )
-    nrows: dict[str, int] = {}
-    for r in rows:
-        nrows.setdefault(_rel(r["file"]), int(r["rows_sum"] or 0))
-        per_col = out.setdefault(_rel(r["file"]), {})
-        if r["nostats"] == 1:
-            per_col[r["column"]] = None
-        elif r["allnull"] == 1:
-            per_col[r["column"]] = "allnull"
-        elif r["kind"] is None:
-            per_col[r["column"]] = None
-        elif r["kind"] == "numeric":
-            per_col[r["column"]] = [str(r["mn_d"]), str(r["mx_d"])]
-        else:
-            per_col[r["column"]] = [r["mn_s"], r["mx_s"]]
-    return out, nrows
-
-
-_SUM_INT_HEADS = ("tinyint", "smallint", "int", "bigint")
-
-
-def _sum_columns(
-    columns: list[str], schema_fields: list[dict] | None
-) -> list[str]:
-    """The stats columns metadata SUM/AVG covers: INTEGER types only
-    (round 12). Exactness is the contract — integer sums fold in
-    unbounded Python ints; float/double sums are order-dependent in
-    Spark itself and decimals are already refused by the stats
-    fold — so non-integer columns simply never record sums."""
-    types = {f["name"]: f["type"] for f in schema_fields or []}
-    return [
-        c
-        for c in columns
-        if types.get(c, "").split("(")[0].strip().lower()
-        in _SUM_INT_HEADS
-    ]
-
-
-def _sweep_generation_sums(
-    spark: SparkSession,
-    table_dir: str,
-    gen_rel: str,
-    sum_cols: list[str],
-    rename_log: list | None = None,
-) -> tuple[dict[str, dict], dict[str, dict]]:
-    """Per-FILE exact column sums + non-null counts for the INTEGER
-    stat columns of one just-written generation —
-    ``({file_rel: {col: sum_str | None}}, {file_rel: {col: n}})``.
-    Parquet footers carry no sums, so this is the one stats sweep
-    that reads DATA — column-pruned to the integer stat columns of
-    the NEW generation only, once, at commit time (round-12 directive
-    #8; Delta records per-file sums the same way at write time).
-    Sums accumulate as decimal(38,0) (exact; an overflowing file
-    records None and the aggregate refuses); a file's all-null column
-    records (None, 0) — zero non-null rows, distinguishable from
-    overflow by the count. Columns a generation physically lacks
-    (pre-evolution) are simply unrecorded — the aggregate omits or
-    refuses, never guesses."""
-    gen_dir = f"{table_dir}/{gen_rel}"
-    fs, gp = hadoop_fs(spark, gen_dir)
-    if not fs.exists(gp) or not sum_cols:
-        return {}, {}
-    files: list[str] = []
-    it = fs.listFiles(gp, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        files.append(st.getPath().toString())
-    if not files:
-        return {}, {}
-    prefix = bare_path(f"{table_dir}/").rstrip("/") + "/"
-
-    def _rel(uri: str) -> str:
-        b = bare_path(uri)
-        return b[len(prefix):] if b.startswith(prefix) else uri
-
-    gen_id = _gen_id_of(gen_rel)
-    if rename_log:
-        from big_data_spark.io.stats import _physical_name
-
-        phys = {
-            c: _physical_name(c, [list(e) for e in rename_log], gen_id)
-            for c in sum_cols
-        }
-    else:
-        phys = {c: c for c in sum_cols}
-    phys = {c: p for c, p in phys.items() if p is not None}
-    if not phys:
-        return {}, {}
-    sums: dict[str, dict] = {}
-    nnn: dict[str, dict] = {}
-    local = (fs.getUri().getScheme() or "file") == "file"
-    if local and len(files) <= _LOCAL_SWEEP_MAX_FILES:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        for f in files:
-            rel = _rel(f)
-            sums[rel] = {}
-            nnn[rel] = {}
-            pqf = pq.ParquetFile(bare_path(f))
-            names = set(pqf.schema_arrow.names)
-            want = [p for p in phys.values() if p in names]
-            if not want or pqf.metadata.num_rows == 0:
-                continue
-            tbl = pq.read_table(bare_path(f), columns=want)
-            for c, p in phys.items():
-                if p not in names:
-                    continue
-                col = tbl.column(p)
-                n = len(col) - col.null_count
-                nnn[rel][c] = int(n)
-                if n == 0:
-                    sums[rel][c] = None  # all-null: contributes nothing
-                    continue
-                s = pc.sum(col.cast(pa.decimal128(38, 0))).as_py()
-                sums[rel][c] = str(int(s))
-        return sums, nnn
-    df = spark.read.parquet(gen_dir)
-    present = {c: p for c, p in phys.items() if p in df.columns}
-    if not present:
-        return {}, {}
-    aggs = []
-    for c, p in present.items():
-        aggs.append(
-            F.sum(F.col(p).cast("decimal(38,0)")).alias(f"__s_{c}")
-        )
-        aggs.append(F.count(F.col(p)).alias(f"__n_{c}"))
-    rows = (
-        df.groupBy(F.col("_metadata.file_path").alias("__f"))
-        .agg(*aggs)
-        .collect()
-    )
-    for r in rows:
-        rel = _rel(r["__f"])
-        per_s = sums.setdefault(rel, {})
-        per_n = nnn.setdefault(rel, {})
-        for c in present:
-            n = int(r[f"__n_{c}"] or 0)
-            per_n[c] = n
-            s = r[f"__s_{c}"]
-            # decimal(38,0) overflow folds to NULL with n > 0 —
-            # recorded as None so the aggregate refuses, never wraps.
-            per_s[c] = None if (s is None or n == 0) else str(int(s))
-    # Empty part files (0 rows) emit no groupBy row: record them
-    # explicitly so coverage checks see the generation as complete.
-    for f in files:
-        rel = _rel(f)
-        sums.setdefault(rel, {})
-        nnn.setdefault(rel, {})
-    return sums, nnn
-
-
-def _auto_commit_stats(
-    spark: SparkSession,
-    table_dir: str,
-    entries: dict[str, str],
-    prev_stats: dict | None,
-    schema_fields: list[dict] | None,
-    partition_col,
-    layout_by: str | None,
-    stats_columns: list[str] | None,
-    rename_log: list | None = None,
-    repair_torn: bool = False,
-) -> dict | None:
-    """The commit's ``stats`` block: carry every already-covered live
-    generation forward (an O(1) sidecar-path copy per generation —
-    pure metadata, nothing loaded), sweep only the NEW ones into
-    fresh sidecars — O(new files) per commit, the Iceberg write-side
-    trade, and the manifest itself stays O(#generations). Returns
-    None when no stat-worthy columns exist.
-
-    ``repair_torn`` (ANALYZE) also loads each carried sidecar and
-    re-sweeps a generation whose doc is missing from its consolidated
-    shard."""
-    gens = sorted(_live_gens(entries))
-    prev_side = (prev_stats or {}).get("sidecars") or {}
-    if stats_columns is not None:
-        columns = list(stats_columns)
-        if (
-            prev_stats
-            and prev_stats.get("columns") != columns
-            and any(g in prev_side for g in gens)
-        ):
-            raise ValueError(
-                "stats_columns differ from the table's recorded stats "
-                f"columns {prev_stats['columns']!r} while carried "
-                "generations keep the old set — change columns on a "
-                "full rewrite (no carried generations) only"
-            )
-    elif prev_stats:
-        columns = prev_stats["columns"]
-    else:
-        columns = _default_stats_columns(
-            schema_fields, partition_col, layout_by
-        )
-    if not columns:
-        return None
-    names_at = _rlog_max_id(rename_log)
-    sum_cols = _sum_columns(columns, schema_fields)
-    out_side: dict[str, str] = {}
-
-    def sweep(g: str) -> str:
-        files, nrows = _sweep_generation_stats(
-            spark,
-            table_dir,
-            f"{_DATA_DIR}/{g}",
-            columns,
-            rename_log=rename_log,
-        )
-        sums, nnn = (
-            _sweep_generation_sums(
-                spark,
-                table_dir,
-                f"{_DATA_DIR}/{g}",
-                sum_cols,
-                rename_log=rename_log,
-            )
-            if sum_cols and files
-            else ({}, {})
-        )
-        return _write_stats_sidecar(
-            spark, table_dir, g, files, nrows, names_at,
-            sums=sums, nonnull=nnn,
-        )
-
-    for g in gens:
-        if g in prev_side and not (
-            repair_torn
-            and _load_gen_stats(spark, table_dir, prev_stats, g) is None
-        ):
-            # Ordinary commits carry covered generations by PATH —
-            # O(1) per generation, nothing loaded, never a surprise
-            # full-table re-sweep.
-            out_side[g] = prev_side[g]
-        else:
-            out_side[g] = sweep(g)
-    return {"columns": columns, "sidecars": out_side}
-
-
-def commit_manifest(
-    spark: SparkSession,
-    table_dir: str,
-    snapshot_id: int,
-    entries: dict[str, str],
-    partition_col: str | list[str] | None = None,
-    replace: bool = False,
-    schema_fields: list[dict] | None = None,
-    layout_by: str | None = None,
-    maintenance: bool = False,
-    deletes: list[str] | None = None,
-    rename_log: list | None = None,
-    prev_man: dict | None = None,
-    cdf: str | None = None,
-    stats: dict | None | str = "auto",
-    stats_columns: list[str] | None = None,
-) -> None:
-    """Atomically publish ``entries`` as snapshot ``snapshot_id``.
-
-    ``cdf`` names THIS commit's row-level change sidecar (a relative
-    ``_cdf/c=<id>`` dir of rows tagged ``_change_type``) — recorded
-    only on the commit that produced it, never carried forward: it
-    describes one commit's delta, not table state. read_changes emits
-    it instead of the commit's file-level generation diff.
-
-    ``prev_man``: the predecessor manifest when the caller already
-    holds it — spares the timestamp clamp below its own
-    latest_manifest read (one listStatus + one JSON read per commit
-    on an object store; the retry loops pay it per attempt).
-
-    ``rename_log`` is the ordered schema-evolution event log
-    (``[commit_id, 'rename'|'drop', old, new]`` rows) that lets
-    readers replay onto each generation exactly the events committed
-    after it was written; carried forward by every writer that keeps
-    old generations live, cleared by full rewrites (the new
-    generation is written in current names).
-
-    ``deletes`` lists live DELETE-VECTOR dirs (relative paths under
-    ``_deletes/``): small parquet files of (file_path, row_index)
-    positions that merge-on-read DELETEs published instead of
-    rewriting data (Iceberg v2-style position deletes). Readers
-    anti-join them out; maintenance (fold_deletes / compaction)
-    rewrites them away. Rows referencing data files no kept manifest
-    lists are INERT (their anti-join never matches), which is what
-    lets copy-on-write rewrites and bin-packs carry the list forward
-    verbatim without O(deletes) rewrites.
-
-    ``layout_by`` records a hive-partitioned GENERATION layout (set by
-    append_snapshot's ``partition_by``) — distinct from
-    ``partition_col``, which keys manifest ENTRIES. Maintenance
-    (compact_snapshot) reads it to preserve the layout on rewrite.
-
-    ``maintenance=True`` marks a commit that rewrites files WITHOUT
-    changing table content (compaction) — the change feed
-    (read_changes) skips such commits instead of reporting a spurious
-    full delete+insert.
-
-    Write-temp-then-rename: the manifest is never visible half
-    written. Without ``replace`` an existing manifest for the id
-    makes the rename fail -> ``SnapshotConflict`` (first committer
-    wins); with ``replace`` the existing one is deleted first — only
-    valid for deterministic replays of the same inputs.
-
-    ``schema_fields`` (ordered name/type pairs) records the
-    snapshot's committed schema so readers can present one canonical
-    column order across mixed-schema generations.
-    """
-    import time as _time
-
-    # Commit wall time — the key timestamp time travel (`as_of_ts`)
-    # and retention policies resolve against; CLAMPED to strictly
-    # above the predecessor's (Delta/Iceberg do the same), so the
-    # per-table timestamp sequence stays monotone under clock skew
-    # between multi-writer drivers and as_of_ts can never resolve a
-    # version that includes later-stamped commits. Not part of any
-    # content hash; a deterministic replay converges on content, not
-    # on this.
-    ts = int(_time.time() * 1000)
-    prev_for_ts = (
-        prev_man
-        if prev_man is not None
-        else latest_manifest(spark, table_dir, below=snapshot_id)
-    )
-    if prev_for_ts is not None:
-        ts = max(ts, int(prev_for_ts["committed_at_ms"]) + 1)
-    if stats == "auto":
-        # Manifest-embedded per-file column stats: covered
-        # generations carry as pure metadata; only NEW generations get
-        # their footers swept — so pruned reads on a stats-bearing
-        # table never open a footer (Iceberg/Delta's commit-time
-        # trade). Callers pass an explicit dict (rollback: the
-        # restored version's own stats; evolve: the remapped column
-        # list) or None (no stats recorded).
-        # KNOWN COST under commit contention: a retrying writer
-        # re-sweeps its (identical, renamed per attempt) new
-        # generation's footers on every attempt — O(attempts x new
-        # files), driver-ms for small local generations. A contended
-        # high-throughput writer can precompute the stats once
-        # against its staged files and pass the dict explicitly.
-        stats = _auto_commit_stats(
-            spark,
-            table_dir,
-            entries,
-            (prev_for_ts or {}).get("stats"),
-            schema_fields,
-            partition_col,
-            layout_by,
-            stats_columns,
-            rename_log=rename_log,
-        )
-    if replace:
-        # A crash-replayed commit of an ALREADY-COMMITTED id carries
-        # the ORIGINAL timestamp forward: re-stamping with the current
-        # wall clock would put manifest N's timestamp above an
-        # existing successor N+1's, breaking the per-table monotone
-        # sequence resolve_as_of_ts depends on. The original was
-        # clamped above ITS predecessor at first commit.
-        _, probe = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
-        fs_probe, _ = hadoop_fs(spark, table_dir)
-        if fs_probe.exists(probe):
-            ts = int(
-                read_manifest(spark, table_dir, snapshot_id)[
-                    "committed_at_ms"
-                ]
-            )
-    body = json.dumps(
-        {
-            "format_version": FORMAT_VERSION,
-            "snapshot_id": snapshot_id,
-            "entries": entries,
-            "partition_col": partition_col,
-            "schema": schema_fields,
-            "layout_by": layout_by,
-            "maintenance": maintenance,
-            "deletes": sorted(deletes or []),
-            "rename_log": rename_log or [],
-            "cdf": cdf,
-            "stats": stats,
-            "committed_at_ms": ts,
-        },
-        sort_keys=True,
-    )
-    mdir = f"{table_dir}/{_MANIFEST_DIR}"
-    fs, mpath = hadoop_fs(spark, mdir)
-    fs.mkdirs(mpath)
-    tmp = f"{mdir}/.tmp-{snapshot_id:012d}-{uuid.uuid4().hex}"
-    _, tmp_path = hadoop_fs(spark, tmp)
-    out = fs.create(tmp_path, True)
-    try:
-        out.write(bytearray(body.encode("utf-8")))
-    finally:
-        out.close()
-    _, final_path = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
-    if replace and fs.exists(final_path):
-        fs.delete(final_path, False)
-    if not fs.rename(tmp_path, final_path):
-        fs.delete(tmp_path, False)
-        raise SnapshotConflict(
-            f"snapshot {snapshot_id} already committed under {table_dir!r}"
-        )
-
-
-def select_partition_entries(
-    spark: SparkSession, man: dict, partitions: dict
-) -> tuple[dict[str, str], dict[str, set]]:
-    """The manifest entries whose partition values match
-    ``{col: value | list-of-values}`` (conjunction over columns,
-    disjunction within a list), plus the rendered want-sets for
-    row-level residual checks — the ONE manifest-level partition
-    filter shared by read_snapshot and partition-scoped maintenance
-    (values compare as the string forms Spark wrote to dir names)."""
-    pcols = _pcols(man.get("partition_col"))
-    if pcols is None:
-        raise ValueError(
-            "partitions=: table is not partitioned "
-            "— use predicate= (footer skipping) or a plain filter"
-        )
-    unknown = sorted(set(partitions) - set(pcols))
-    if unknown:
-        raise ValueError(
-            f"partitions=: {unknown} not in the "
-            f"table's partition columns {pcols!r}"
-        )
-    want = {
-        c: {
-            _render_part_value(x)
-            for x in (v if isinstance(v, (list, tuple, set)) else [v])
-        }
-        for c, v in partitions.items()
-    }
-    kept: dict[str, str] = {}
-    for key, rel in man["entries"].items():
-        vals = entry_partition_values(spark, pcols, key)
-        if all(vals[c] in want[c] for c in want):
-            kept[key] = rel
-    return kept, want
-
-
-def read_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    below: int | None = None,
-    as_of: int | None = None,
-    predicate: dict[str, tuple] | None = None,
-    residual: bool = True,
-    as_of_ts: int | None = None,
-    tag: str | None = None,
-    partitions: dict | None = None,
-) -> DataFrame:
-    """The table as of its newest snapshot (or ``as_of`` a specific
-    id / strictly ``below`` an id / ``as_of_ts`` an epoch-millis
-    commit timestamp / ``tag`` a pinned name — one selector at most;
-    time travel and replays).
-
-    ``partitions`` ({col: value | list-of-values}, conjunction over
-    columns, disjunction within a list) prunes a PARTITIONED table at
-    the MANIFEST level: only entries whose keys match enter the scan,
-    so excluded partitions cost zero file listings — metadata-only
-    pruning over any subset of the partition columns, the first level
-    of a two-level (manifest -> footer) pruned read. Values compare
-    as their string forms (the form Spark wrote to the dir names);
-    the matching rows are additionally re-filtered row-level, so the
-    result is exactly ``read_snapshot(...).filter(col.isin(values))``.
-
-    One parquet scan per live data GENERATION (entries pointing into
-    the same ``_data/s=<id>`` dir share a scan with ``basePath`` set,
-    so hive-style partition columns written by ``partitionBy`` come
-    back typed and partition-prunable), unioned by name. Pushdown and
-    pruning reach every scan; compaction collapses generations.
-
-    ``predicate`` ({col: (lo, hi)} ranges or {col: [v1, v2, ...]}
-    IN-lists, conjunction; bounds numeric, string, ``datetime.date``
-    or ``datetime.datetime`` — round 11: typed skipping; IN-lists
-    prune by their min/max envelope with exact ``isin`` membership in
-    the residual) composes MANIFEST resolution with
-    FOOTER-statistics data skipping (io/stats.py):
-    only the live files whose min/max intervals can intersect the
-    ranges enter the scan — the double pruning a table-format reader
-    performs, previously available only for raw dirs via
-    ``read_pruned`` (round-6 verdict gap). ``residual=True`` (default)
-    re-applies the predicate row-level, so the result is EXACTLY
-    ``read_snapshot(...).filter(pred)`` (lossless; proven in
-    tests/test_snapshot.py); ``residual=False`` is the audit view.
-    """
-    if sum(x is not None for x in (as_of, below, as_of_ts, tag)) > 1:
-        raise ValueError(
-            "read_snapshot takes at most ONE of as_of / below / "
-            "as_of_ts / tag"
-        )
-    if tag is not None:
-        # O(1): read the single tag file, not a listing of every tag
-        # (the listing only feeds the not-found error message).
-        tag_path = f"{table_dir}/{_TAGS_DIR}/{tag}.json"
-        try:
-            pin = _read_json(spark, tag_path)
-        except Exception as exc:
-            # Only a genuinely MISSING pin (never created, or deleted
-            # mid-read) becomes the friendly not-found; a transient
-            # I/O failure on an existing file must propagate, or a
-            # caller treating not-found as permanent falls back to
-            # the wrong version on an infra blip.
-            fs_, tp_ = hadoop_fs(spark, tag_path)
-            if fs_.exists(tp_):
-                raise
-            raise ValueError(
-                f"tag {tag!r} not found under {table_dir!r} "
-                f"(tags: {sorted(list_tags(spark, table_dir))})"
-            ) from exc
-        as_of = int(pin["snapshot_id"])
-    elif as_of_ts is not None:
-        as_of = resolve_as_of_ts(spark, table_dir, as_of_ts)
-    if as_of is not None:
-        man = read_manifest(spark, table_dir, as_of)
-    else:
-        man = latest_manifest(spark, table_dir, below=below)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    residual_parts = None
-    if partitions:
-        kept_entries, want = select_partition_entries(
-            spark, man, partitions
-        )
-        man = {**man, "entries": kept_entries}
-        # Row-level re-check (cheap: partition columns are constant
-        # per dir) so the contract is exact even if a dir value's
-        # string form differs from the typed column's render.
-        residual_parts = [
-            F.col(c).cast("string").isin(*sorted(vs))
-            for c, vs in want.items()
-        ]
-    order = [f["name"] for f in man.get("schema") or []] or None
-    if not man["entries"] and man.get("schema"):
-        # A legitimately EMPTY committed snapshot (e.g. a table whose
-        # first append was an empty batch, or fully emptied partial
-        # writes): readable as zero rows with the committed schema —
-        # the writer published it, so the reader must not refuse it.
-        ddl = ", ".join(
-            f"`{f['name']}` {f['type']}" for f in man["schema"]
-        )
-        return spark.createDataFrame([], ddl)
-    df = read_entries(
-        spark,
-        table_dir,
-        man["entries"],
-        column_order=order,
-        predicate=predicate,
-        residual=residual,
-        deletes=man.get("deletes"),
-        schema_fields=man.get("schema"),
-        rename_log=man.get("rename_log"),
-        stats=man.get("stats"),
-        partition_cols=_dir_cols(man),
-    )
-    if residual_parts:
-        for cond in residual_parts:
-            df = df.filter(cond)
-    return df
-
-
-def read_delete_positions(
-    spark: SparkSession, table_dir: str, deletes: list[str]
-) -> DataFrame:
-    """(file_path, row_index) union of the live delete vectors, with
-    file_path in scheme-insensitive form — the anti-join side of a
-    merge-on-read scan. Small by contract (positions, not rows).
-    The vector schema is fixed by the MOR writer, so the read passes
-    it explicitly — no footer-inference job."""
-    df = spark.read.schema("file_path string, row_index bigint").parquet(
-        *[f"{table_dir}/{d}" for d in sorted(set(deletes))]
-    )
-    if not df.inputFiles():
-        # Same loud-or-exact guard as the data scan: a live vector
-        # dir always holds a file (empty vectors are unclaimed at
-        # commit), so an empty listing is a racing vacuum/drop — the
-        # inference path raised here; silently returning zero
-        # positions would UNMASK deleted rows.
-        raise ValueError(
-            f"delete vectors {sorted(set(deletes))!r} under "
-            f"{table_dir!r} list no files — concurrently removed "
-            "during the read"
-        )
-    return df.select(
-        _bare_expr(F.col("file_path")).alias("file_path"), "row_index"
-    )
-
-
-def read_entries(
-    spark: SparkSession,
-    table_dir: str,
-    entries: dict[str, str],
-    column_order: list[str] | None = None,
-    predicate: dict[str, tuple] | None = None,
-    residual: bool = True,
-    deletes: list[str] | None = None,
-    with_positions: bool = False,
-    schema_fields: list[dict] | None = None,
-    rename_log: list | None = None,
-    stats: dict | None = None,
-    partition_cols: list[str] | None = None,
-) -> DataFrame:
-    """``partition_cols`` (the manifest's dir-valued columns: entry
-    partition columns + generation layout column) lets each
-    generation read with an EXPLICIT schema (_gen_read_ddl) — zero
-    footer-inference jobs; ``None`` (callers without the manifest)
-    keeps the inference path.
-
-    ``stats`` (the manifest's per-file column-stats block) routes
-    ``predicate`` pruning through COMMIT-TIME metadata for covered
-    generations — zero footer opens — with the distributed footer
-    sweep as the fallback for stat-less legacy generations.
-    ``schema_fields`` + ``rename_log`` normalize each generation's
-    physical columns into the committed logical schema (evolution
-    event replay keyed on the generation's own commit id, widening
-    cast) BEFORE the union — the evolve_schema read path.
-    ``deletes`` applies merge-on-read delete vectors: every scan
-    also projects the parquet ``_metadata`` (file_path, row_index)
-    pair, and the union anti-joins the (broadcast) position set out —
-    deleted rows never reach the caller. ``with_positions=True``
-    keeps the ``_dv_path`` / ``_dv_pos`` columns on the result (the
-    MOR writer and the change feed need them); default drops them."""
-    if not entries:
-        raise ValueError(
-            f"snapshot has no live data under {table_dir!r} "
-            "(fully emptied table) — handle the empty case upstream"
-        )
-    want_meta = bool(deletes) or with_positions
-    by_gen: dict[str, list[str]] = {}
-    for rel in entries.values():
-        parts = rel.split("/")
-        gen = "/".join(parts[:2]) if parts[0] == _DATA_DIR else rel
-        by_gen.setdefault(gen, []).append(rel)
-    kept_by_dir: dict[str, list[str]] | None = None
-    if predicate:
-        all_paths = sorted(
-            {f"{table_dir}/{r}" for rels in by_gen.values() for r in rels}
-        )
-        kept_by_dir = {}
-        # MANIFEST stats first: entry paths whose generation is
-        # covered by the commit-time stats block prune as pure
-        # driver-side metadata — zero footer opens, zero file
-        # listings. Only generations committed without stats fall back
-        # to the distributed footer sweep. The per-file stats live in
-        # per-generation SIDECARS loaded lazily below — only for
-        # generations that actually reach this read (entries are
-        # already partition-pruned upstream), so a
-        # partition-selective query on a million-file table touches
-        # only its own generations' sidecar JSONs.
-        covered_gens = _stats_covered(stats)
-        stat_cols = (stats or {}).get("columns") or []
-        # Typed compares need the committed schema's kind per column.
-        from big_data_spark.io.stats import stat_kind
-
-        stat_kinds = {
-            f["name"]: k
-            for f in (schema_fields or [])
-            if (k := stat_kind(f["type"])) is not None
-        }
-        session_tz = (
-            spark.conf.get("spark.sql.session.timeZone", "UTC") or "UTC"
-        )
-        # A predicate column OUTSIDE the recorded stats set can only
-        # prune through footers — routing covered paths through the
-        # metadata would silently keep every file for that column (a
-        # pruning regression vs the footer path). All-or-nothing per
-        # read: stats serve only when they can answer every hinted
-        # column.
-        if not set(predicate) <= set(stat_cols):
-            covered_gens = set()
-        swept_paths: list[str] = []
-        rels_by_gen: dict[str, set[str]] = {}
-        path_of: dict[str, str] = {}
-        for p in all_paths:
-            rel = p[len(table_dir) + 1 :]
-            gen = rel.split("/")[1] if rel.startswith(
-                f"{_DATA_DIR}/"
-            ) else None
-            if gen is None or gen not in covered_gens:
-                swept_paths.append(p)
-                continue
-            rels_by_gen.setdefault(gen, set()).add(rel)
-            path_of[rel] = p
-        # Owner resolution per PARENT dir (cached), walking path
-        # segments UP to the deepest live entry rel — O(#files +
-        # #parents x depth), not O(#entries x #files): a 5k-leaf
-        # partitioned generation would otherwise cost ~25M substring
-        # probes per pruned read on the driver. ONE shared walk
-        # (_owning_entry_rel) with metadata_aggregate's liveness, so
-        # the two can never drift.
-        pre = _prefetch_sidecars(spark, table_dir, stats, rels_by_gen)
-        for g, rels_here in rels_by_gen.items():
-            owner_cache: dict[str, str | None] = {}
-            gen_doc = _load_gen_stats(
-                spark, table_dir, stats, g, rename_log, _doc=pre.get(g)
-            )
-            gen_files = (gen_doc or {}).get("files") or {}
-            for file_rel, per_col in gen_files.items():
-                owner = _owning_entry_rel(file_rel, rels_here, owner_cache)
-                if owner is None:
-                    continue  # dead leaf of a partially-live generation
-                if _stats_keep(
-                    per_col,
-                    predicate,
-                    stat_cols,
-                    kinds=stat_kinds,
-                    tz=session_tz,
-                ):
-                    kept_by_dir.setdefault(path_of[owner], []).append(
-                        f"{table_dir}/{file_rel}"
-                    )
-        if swept_paths:
-            from big_data_spark.io.stats import prune_files_multi
-
-            # ONE footer sweep over the uncovered paths (executor-
-            # side), then regroup the kept files under their
-            # generation dir so each generation still reads through
-            # its own basePath. missing_ok + the rename log: a hinted
-            # column may be absent from pre-evolution files (added
-            # later) or live there under a former physical name — the
-            # sweep resolves names per file and treats truly-missing
-            # columns as unprunable instead of raising.
-            decisions = (
-                prune_files_multi(
-                    spark,
-                    swept_paths,
-                    predicate,
-                    rename_log=rename_log,
-                    missing_ok=True,
-                )
-                .select("file", "keep")
-                .distinct()
-                .collect()
-            )
-            for r in decisions:
-                if r["keep"]:
-                    kept_by_dir.setdefault(
-                        _owning_path(r["file"], swept_paths), []
-                    ).append(r["file"])
-    dfs = []
-    for gen, rels in sorted(by_gen.items()):
-        paths = sorted(f"{table_dir}/{r}" for r in set(rels))
-        if kept_by_dir is not None:
-            paths = sorted(
-                f for p in paths for f in kept_by_dir.get(p, [])
-            )
-            if not paths:
-                continue  # every file of this generation pruned away
-        with _declared_partition_types(spark):
-            # Partition dir values read as strings and cast to the
-            # COMMITTED types in _normalize_scan below — inference
-            # would corrupt numeric-looking string keys ('00123' ->
-            # '123'). Tables without a committed schema (legacy) keep
-            # string partition columns, matching their raw dir values.
-            # With a derivable physical schema the read skips footer
-            # inference entirely (one driver job per generation saved)
-            # and dir values are declared string directly.
-            ddl = _gen_read_ddl(
-                schema_fields, rename_log, _gen_id_of(gen), partition_cols
-            )
-            rdr = spark.read if ddl is None else spark.read.schema(ddl)
-            if kept_by_dir is None and len(rels) == 1 and rels[0] == gen:
-                part = rdr.parquet(*paths)
-            else:
-                part = rdr.option(
-                    "basePath", f"{table_dir}/{gen}"
-                ).parquet(*paths)
-            if ddl is not None and not part.inputFiles():
-                # LOUD-OR-EXACT: a committed generation always holds
-                # >= 1 data file, so an empty listing means a racing
-                # destructive op emptied the dir between manifest read
-                # and scan. The inference path failed here naturally
-                # ("unable to infer schema"); the explicit-schema path
-                # would otherwise return a silently EMPTY scan — the
-                # torn result the snapshot contract forbids.
-                raise ValueError(
-                    f"snapshot generation {gen!r} under {table_dir!r} "
-                    "lists no data files — concurrently dropped or "
-                    "vacuumed during the read"
-                )
-        if want_meta:
-            # _metadata must be projected AT SCAN level (it is a
-            # hidden per-file source column, not join-survivable).
-            part = part.select(
-                "*",
-                F.col("_metadata.file_path").alias("_dv_path"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
-            )
-        if schema_fields or rename_log:
-            part = _normalize_scan(
-                part, schema_fields, rename_log, _gen_id_of(gen)
-            )
-        dfs.append(part)
-    if not dfs:
-        # Every live file provably misses the predicate: empty result
-        # with the real schema (and no data IO). Normalization params
-        # carry through so an evolved table's empty result still
-        # presents the COMMITTED names/types.
-        df = read_entries(
-            spark,
-            table_dir,
-            entries,
-            column_order,
-            schema_fields=schema_fields,
-            rename_log=rename_log,
-            partition_cols=partition_cols,
-        ).where(F.lit(False))
-        return df
-    df = dfs[0]
-    for other in dfs[1:]:
-        # allowMissingColumns: generations written before an additive
-        # schema change lack the new columns — they read as NULL, the
-        # standard mergeSchema semantics. Commit-time validation
-        # (check_schema_evolution) guarantees the surviving columns
-        # agree in type, so the union can never silently coerce.
-        df = df.unionByName(other, allowMissingColumns=True)
-    if deletes:
-        pos = read_delete_positions(spark, table_dir, deletes)
-        df = df.join(
-            F.broadcast(pos),
-            (_bare_expr(F.col("_dv_path")) == pos["file_path"])
-            & (F.col("_dv_pos") == pos["row_index"]),
-            "left_anti",
-        )
-    if schema_fields:
-        # Typed-NULL-pad committed columns the SURVIVING generations
-        # all lack — footer pruning can drop every generation that
-        # physically carries a later-added column, and the residual
-        # filter / column_order select below must still resolve it
-        # (an all-NULL column correctly fails the range predicate:
-        # same rows as full-scan-then-filter).
-        df = _pad_to_schema(
-            df,
-            list(schema_fields)
-            + (
-                [
-                    {"name": "_dv_path", "type": "string"},
-                    {"name": "_dv_pos", "type": "bigint"},
-                ]
-                if want_meta
-                else []
-            ),
-        )
-    if column_order:
-        # Canonical column order = the snapshot's committed schema
-        # (generation iteration order is an implementation detail).
-        keep = list(column_order) + (
-            ["_dv_path", "_dv_pos"] if with_positions else []
-        )
-        df = df.select(*keep)
-    elif want_meta and not with_positions:
-        df = df.drop("_dv_path", "_dv_pos")
-    if predicate and residual:
-        from big_data_spark.io.stats import range_predicate
-
-        df = df.filter(range_predicate(predicate))
-    return df
-
-
-def _stats_keep(
-    per_col: dict,
-    ranges: dict[str, tuple],
-    stat_cols: list[str],
-    kinds: dict[str, str] | None = None,
-    tz: str = "UTC",
-) -> bool:
-    """prune_files_multi's keep decision, replayed from STORED
-    per-file stats: a file drops only when some hinted column's
-    recorded [min, max] provably misses its range; columns without
-    recorded stats (absent from the stats set, no footer stats, or
-    values the column's kind can't order) never veto — lossless by
-    the same argument as the footer path (tested equivalent).
-
-    ``kinds`` (column → io/stats comparison kind, derived from the
-    COMMITTED schema — authoritative over bound python types) selects
-    the comparison: numeric as float, string/date/timestamp
-    lexicographically on the canonical forms both sweep paths store
-    (round 11: typed skipping). A bound that can't soundly compare
-    under its column's kind skips — unprunable, never a false drop.
-    ``tz`` is the Spark session timezone, interpreting naive
-    timestamp bounds exactly as the residual filter will."""
-    from big_data_spark.io.stats import (
-        inlist_bounds,
-        is_in_list,
-        norm_bound,
-    )
-
-    for c, spec in ranges.items():
-        if c not in stat_cols:
-            continue
-        # IN-lists compare by their conservative (min, max) envelope
-        # — exact membership is the residual's job (round 11).
-        lo, hi = inlist_bounds(spec) if is_in_list(spec) else spec
-        v = per_col.get(c)
-        if v is None:
-            continue
-        if v == "allnull":
-            # Entirely-null column (round 11: null-count skipping):
-            # every row fails every bounded range predicate.
-            if lo is not None or hi is not None:
-                return False
-            continue
-        kind = (kinds or {}).get(c, "numeric")
-        if kind == "numeric":
-            try:
-                mn, mx = float(v[0]), float(v[1])
-            except (TypeError, ValueError):
-                continue
-            lo_n = None if lo is None else norm_bound("numeric", lo, tz)
-            hi_n = None if hi is None else norm_bound("numeric", hi, tz)
-            if (lo is not None and lo_n is None) or (
-                hi is not None and hi_n is None
-            ):
-                continue  # non-numeric bound on a numeric column
-            if hi_n is not None and mn > hi_n:
-                return False
-            if lo_n is not None and mx < lo_n:
-                return False
-            continue
-        lo_n = None if lo is None else norm_bound(kind, lo, tz)
-        hi_n = None if hi is None else norm_bound(kind, hi, tz)
-        if (lo is not None and lo_n is None) or (
-            hi is not None and hi_n is None
-        ):
-            continue  # bound unorderable under this kind: unprunable
-        if not isinstance(v[0], str) or not isinstance(v[1], str):
-            continue
-        if hi_n is not None and v[0] > hi_n:
-            return False
-        if lo_n is not None and v[1] < lo_n:
-            return False
-    return True
-
-
-def _owning_path(file_uri: str, paths: list[str]) -> str:
-    """Map a footer-sweep file URI back to the entry path that listed
-    it (URI schemes may differ: the sweep returns ``file:/...`` for
-    local paths; bare_path is the one shared normalizer)."""
-    bare = bare_path(file_uri)
-    for p in paths:
-        pb = bare_path(p)
-        if bare.startswith(pb.rstrip("/") + "/") or bare == pb:
-            return p
-    raise ValueError(f"pruned file {file_uri!r} under no entry path")
-
-
-def read_changes(
-    spark: SparkSession,
-    table_dir: str,
-    after_id: int,
-    until_id: int | None = None,
-    predicate: dict | None = None,
-) -> DataFrame:
-    """Change feed between table versions: every row inserted or
-    deleted by the commits in ``(after_id, until_id]`` (``until_id``
-    defaults to the newest snapshot), tagged with ``_change_type``
-    ('insert' | 'delete') and ``_commit_id`` — the incremental-
-    consumption primitive (downstream sync, incremental MV feeds,
-    audit) a table format pairs with time travel.
-
-    Granularity is FILE-LEVEL, derived purely from manifest diffs
-    (bounded driver metadata; zero data reads beyond the changed
-    entries themselves):
-
-    - an appended generation's rows are inserts;
-    - a dropped entry's rows are deletes;
-    - a partial rewrite of partition k reports k's old rows as
-      deletes and its new rows as inserts (an in-place row update
-      therefore appears as delete+insert, like a table format
-      without row-level CDF enabled);
-    - maintenance commits (compact_snapshot) are SKIPPED — they
-      rewrite files without changing content, and reporting them
-      would fabricate a full delete+insert;
-    - replaying the feed onto a copy of version ``after_id``
-      (apply deletes, then inserts, per commit) reproduces version
-      ``until_id`` exactly (tested).
-
-    Retention: the feed reads OLD generations, so ``after_id`` must
-    still be within ``vacuum_snapshots``' kept window — expired
-    ranges raise on read like any other time travel.
-
-    ``predicate`` (round 11; same shape as ``read_snapshot`` — {col:
-    (lo, hi)} ranges or {col: [v1, ...]} IN-lists, typed bounds)
-    restricts the feed to matching CHANGE ROWS, exactly
-    ``read_changes(...).filter(...)`` — the range-shard consumer's
-    primitive (a downstream sync holding keys [a, b) reads only its
-    slice). File-level skipping applies through each side's OWN
-    manifest stats before any scan; rows whose side lacks the column
-    (pre-evolution) read as NULL and are excluded, like any filter.
-    An update-CDF commit whose row moves INTO the range shows only
-    the postimage insert (and out-of-range preimages drop) — the
-    shard consumer's correct view of a row migrating across shards.
-    """
-    ids = snapshot_ids(spark, table_dir)
-    if until_id is None:
-        until_id = ids[-1] if ids else -1
-    window = [i for i in ids if after_id < i <= until_id]
-    if after_id not in ids and after_id != -1:
-        raise ValueError(
-            f"snapshot {after_id} not found under {table_dir!r} "
-            f"(committed: {ids}) — expired by vacuum, or never existed; "
-            "pass after_id=-1 for 'since table creation'"
-        )
-    parts: list[DataFrame] = []
-    # Window manifests in ONE bulk fetch (parallel above the
-    # threshold): a since-creation feed over a long-lived table was
-    # O(#commits) serial driver round trips (round-9 verdict #4).
-    mans = _read_manifests(
-        spark,
-        table_dir,
-        window + ([after_id] if after_id != -1 else []),
-    )
-    if after_id == -1:
-        prev_man: dict | None = None
-        prev_entries: dict[str, str] = {}
-        prev_deletes: list[str] = []
-    else:
-        prev_man = mans[after_id]
-        prev_entries = prev_man["entries"]
-        prev_deletes = prev_man.get("deletes") or []
-
-    def _vector_rows(
-        vecs, entries_map, schema, rlog, masked_by, stats, pcols
-    ):
-        """Rows the position vectors in ``vecs`` name, read from the
-        LIVE entries of ``entries_map`` (touched generations only —
-        the vectors name their files, so this is O(masked
-        generations), not O(table); round-8 advice), minus rows still
-        masked by ``masked_by``. None when every position is inert
-        (its files are no longer live)."""
-        pos = read_delete_positions(spark, table_dir, vecs)
-        hit_dirs = {
-            r["_g"]
-            for r in pos.select(
-                F.regexp_extract(
-                    "file_path",
-                    r"(_data/s=\d+(?:/[^/]*=[^/]*)*)/",
-                    1,
-                ).alias("_g")
-            )
-            .distinct()
-            .collect()
-            if r["_g"]
-        }
-        owned = _match_rels(hit_dirs, set(entries_map.values()))
-        touched = {
-            k: rel for k, rel in entries_map.items() if rel in owned
-        }
-        if not touched:
-            return None
-        rows = read_entries(
-            spark,
-            table_dir,
-            touched,
-            predicate=predicate,
-            deletes=masked_by or None,
-            with_positions=True,
-            schema_fields=schema,
-            rename_log=rlog,
-            stats=stats,
-            partition_cols=pcols,
-        )
-        out = rows.join(
-            F.broadcast(pos),
-            (_bare_expr(F.col("_dv_path")) == pos["file_path"])
-            & (F.col("_dv_pos") == pos["row_index"]),
-        ).drop("_dv_path", "_dv_pos", "file_path", "row_index")
-        return _pad_to_schema(out, schema) if schema else out
-
-    # Simple-append RUN state (round-15 directive #3): a maximal run
-    # of consecutive pure-append commits under ONE committed schema
-    # collapses into a single multi-generation scan instead of one
-    # read_entries plan per commit — the `_changes` view over an
-    # N-append table was an N-part union whose construction and
-    # analysis both grew linearly with table age (probed at 600
-    # appends: ~35 s to build + ~20 s first action). The run scan
-    # reads every added entry through basePath=_data, so the `s=<gen>`
-    # layout dir surfaces as a partition column and maps to
-    # `_commit_id` through a constant-folded literal map — per-row
-    # attribution identical to the per-commit path. Qualification is
-    # strict (anything else keeps the existing per-commit plan):
-    # no predicate (file pruning stays on the read_entries path), no
-    # removals, no delete vectors on EITHER side (a vector can name a
-    # rollback-restored generation's files), no rename log (the
-    # per-generation replay is gen-keyed), a committed schema with a
-    # derivable explicit read DDL, no column named `s` (it would
-    # collide with the layout dir), and standard `_data/s=<id>` rels.
-    run_state: dict | None = None
-
-    def _flush_run() -> None:
-        nonlocal run_state
-        if run_state is None:
-            return
-        r, run_state = run_state, None
-        schema = r["schema"]
-        names = [f["name"] for f in schema]
-        if "_change_type" in names or "_commit_id" in names:
-            raise ValueError(
-                "read_changes: table already has a _change_type/"
-                "_commit_id column — rename it to read the feed"
-            )
-        paths = sorted({f"{table_dir}/{rel}" for rel in r["rels"]})
-        with _declared_partition_types(spark):
-            part = (
-                spark.read.schema(r["ddl"] + ", `s` string")
-                .option("basePath", f"{table_dir}/{_DATA_DIR}")
-                .parquet(*paths)
-            )
-        if not part.inputFiles():
-            # LOUD-OR-EXACT, same contract as read_entries' explicit-
-            # schema scan: a committed generation always holds >= 1
-            # data file.
-            raise ValueError(
-                f"append-run generations {sorted(r['gen_sid'])!r} under "
-                f"{table_dir!r} list no data files — concurrently "
-                "dropped or vacuumed during the read"
-            )
-        sid_map = F.create_map(
-            *[
-                F.lit(x)
-                for g, gsid in sorted(r["gen_sid"].items())
-                for x in (str(g), gsid)
-            ]
-        )
-        part = (
-            _normalize_scan(part, schema, None)
-            .withColumn(
-                "_commit_id", F.element_at(sid_map, F.col("s")).cast("int")
-            )
-            .withColumn("_change_type", F.lit("insert"))
-        )
-        parts.append(part.select(*names, "_change_type", "_commit_id"))
-
-    for sid in window:
-        man = mans[sid]
-        cur = man["entries"]
-        cur_deletes = man.get("deletes") or []
-        if man.get("cdf") and not man.get("maintenance"):
-            _flush_run()
-            # Row-level CDF commit (update_where/delete_where
-            # row_cdf=True): the sidecar IS the commit's exact change
-            # set (update_preimage/update_postimage/delete rows in
-            # the commit's own schema) — emit it and SKIP the
-            # file-level generation diff, which would report every
-            # carried row of the rewritten generations as
-            # delete+insert. Replay: preimage/delete rows remove,
-            # postimage rows insert — reproduces the next version
-            # because non-matched rows of rewritten generations are
-            # carried unchanged.
-            cdf_df = spark.read.parquet(f"{table_dir}/{man['cdf']}")
-            if predicate:
-                from big_data_spark.io.stats import range_predicate
-
-                # The sidecar is one commit's bounded change set —
-                # a row filter is the right grain (no file pruning
-                # to win).
-                cdf_df = cdf_df.filter(range_predicate(predicate))
-            parts.append(
-                cdf_df.withColumn("_commit_id", F.lit(sid).cast("int"))
-            )
-            prev_entries = cur
-            prev_deletes = cur_deletes
-            prev_man = man
-            continue
-        if not man.get("maintenance"):
-            # DELETE-kind rows present in the schema they were LAST
-            # VISIBLE under (the predecessor's); INSERT-kind rows in
-            # the committing version's own schema — a rollback across
-            # an evolution must not NULL-pad the rows it reports.
-            prev_schema = prev_man.get("schema") if prev_man else None
-            prev_rlog = prev_man.get("rename_log") if prev_man else None
-            prev_vals, cur_vals = (
-                set(prev_entries.values()),
-                set(cur.values()),
-            )
-            added = {
-                k: v for k, v in cur.items() if v not in prev_vals
-            }
-            removed = {
-                k: v for k, v in prev_entries.items() if v not in cur_vals
-            }
-            # Merge-on-read DELETE commits change no entries; their
-            # change set is the rows the NEW delete vectors mask —
-            # emitted as deletes. Vectors REMOVED by a non-maintenance
-            # commit (rollback_snapshot undoing a MOR delete) UNMASK
-            # their rows — emitted as inserts, minus rows a remaining
-            # vector still masks, so feed replay reproduces the
-            # target version (fold_deletes also clears vectors, but
-            # commits maintenance=True and is skipped: content
-            # unchanged).
-            new_dv = [d for d in cur_deletes if d not in set(prev_deletes)]
-            dropped_dv = [
-                d for d in prev_deletes if d not in set(cur_deletes)
-            ]
-            # Simple-append run qualification (see _flush_run above).
-            if (
-                predicate is None
-                and added
-                and not removed
-                and not new_dv
-                and not dropped_dv
-                and not cur_deletes
-                and not prev_deletes
-                and man.get("schema")
-                and not man.get("rename_log")
-            ):
-                pcols = _dir_cols(man)
-                gen_sid: dict[int, int] = {}
-                ok = "s" not in {
-                    f["name"] for f in man["schema"]
-                } and "s" not in pcols
-                if ok:
-                    for rel in added.values():
-                        g = _gen_id_of(rel)
-                        if g is None:
-                            ok = False
-                            break
-                        gen_sid[g] = sid
-                ddl = (
-                    _gen_read_ddl(man["schema"], None, None, pcols)
-                    if ok
-                    else None
-                )
-                if ddl is not None:
-                    key = (
-                        json.dumps(man["schema"], sort_keys=True),
-                        tuple(pcols),
-                    )
-                    if run_state is not None and (
-                        run_state["key"] != key
-                        # A generation re-added under a NEW commit
-                        # (partition entries landing in an existing
-                        # gen dir across commits) must not overwrite
-                        # the run's gen->commit attribution: split
-                        # the run so each part's map stays 1:1.
-                        or any(g in run_state["gen_sid"] for g in gen_sid)
-                    ):
-                        _flush_run()
-                    if run_state is None:
-                        run_state = {
-                            "key": key,
-                            "schema": man["schema"],
-                            "ddl": ddl,
-                            "gen_sid": {},
-                            "rels": set(),
-                        }
-                    run_state["gen_sid"].update(gen_sid)
-                    run_state["rels"].update(added.values())
-                    prev_entries = cur
-                    prev_deletes = cur_deletes
-                    prev_man = man
-                    continue
-            # Anything below emits this commit's parts directly —
-            # flush first so parts keep commit order.
-            _flush_run()
-            # Vector-side rows count only for entries live in BOTH
-            # versions: a vector row whose file is cur-only is
-            # covered by the entry-diff insert side (with cur's masks
-            # applied), and one whose file is prev-only by the delete
-            # side — reading them here would emit phantom changes
-            # for rows invisible on one side of the commit (e.g. a
-            # rollback restoring a pre-fold vector over entries the
-            # fold replaced: the vector's files are no longer the
-            # live ones).
-            both = {
-                k: v for k, v in cur.items() if v in prev_vals
-            }
-            for vecs, kind, schema, rlog, masked_by, side_stats, pcs in (
-                (
-                    new_dv,
-                    "delete",
-                    prev_schema,
-                    prev_rlog,
-                    prev_deletes,
-                    (prev_man or {}).get("stats"),
-                    _dir_cols(prev_man or {}),
-                ),
-                (
-                    dropped_dv,
-                    "insert",
-                    man.get("schema"),
-                    man.get("rename_log"),
-                    cur_deletes,
-                    man.get("stats"),
-                    _dir_cols(man),
-                ),
-            ):
-                if not vecs or not both:
-                    continue
-                dv_rows = _vector_rows(
-                    vecs, both, schema, rlog, masked_by, side_stats, pcs
-                )
-                if dv_rows is None:
-                    continue
-                parts.append(
-                    dv_rows.withColumn(
-                        "_change_type", F.lit(kind)
-                    ).withColumn("_commit_id", F.lit(sid).cast("int"))
-                )
-            for entries, kind, dv, schema, rlog, side_stats, pcs in (
-                (
-                    removed,
-                    "delete",
-                    prev_deletes,
-                    prev_schema,
-                    prev_rlog,
-                    (prev_man or {}).get("stats"),
-                    _dir_cols(prev_man or {}),
-                ),
-                (
-                    added,
-                    "insert",
-                    cur_deletes,
-                    man.get("schema"),
-                    man.get("rename_log"),
-                    man.get("stats"),
-                    _dir_cols(man),
-                ),
-            ):
-                if not entries:
-                    continue
-                # Apply the masking delete vectors of the side's OWN
-                # version: removed rows were visible under the PREV
-                # manifest's deletes, added rows under the CURRENT's.
-                df = read_entries(
-                    spark,
-                    table_dir,
-                    entries,
-                    predicate=predicate,
-                    deletes=dv or None,
-                    schema_fields=schema,
-                    rename_log=rlog,
-                    stats=side_stats,
-                    partition_cols=pcs,
-                )
-                if schema:
-                    # Present each side in ITS version's schema,
-                    # padding pre-evolution generations with TYPED
-                    # nulls the same way read_snapshot does (an
-                    # untyped F.lit(None) is a void column parquet
-                    # refuses to write — a feed window consisting
-                    # only of pre-evolution deletes must still be
-                    # writable/arithmetic-safe downstream).
-                    df = _pad_to_schema(df, schema)
-                if "_change_type" in df.columns or "_commit_id" in df.columns:
-                    raise ValueError(
-                        "read_changes: table already has a _change_type/"
-                        "_commit_id column — rename it to read the feed"
-                    )
-                parts.append(
-                    df.withColumn("_change_type", F.lit(kind)).withColumn(
-                        "_commit_id", F.lit(sid).cast("int")
-                    )
-                )
-        prev_entries = cur
-        prev_deletes = cur_deletes
-        prev_man = man
-    _flush_run()
-    if not parts:
-        # No content changes in the window: empty feed with the
-        # table's current schema.
-        base = read_snapshot(spark, table_dir, as_of=until_id)
-        return (
-            base.withColumn("_change_type", F.lit("insert"))
-            .withColumn("_commit_id", F.lit(0).cast("int"))
-            .where(F.lit(False))
-        )
-    out = parts[0]
-    for other in parts[1:]:
-        out = out.unionByName(other, allowMissingColumns=True)
-    return out
-
-
-def _retry_conflicts(fn, attempts: int):
-    """Run ``fn`` (a full-recompute DML attempt: every input derives
-    from a fresh latest_manifest) up to ``attempts`` times, retrying
-    on SnapshotConflict — the rebase loop a concurrent committer
-    forces. Each retry recomputes against the NEW table state, so
-    the result is always a serializable outcome."""
-    if attempts < 1:
-        raise ValueError(f"attempts must be >= 1, got {attempts}")
-    for i in range(attempts):
-        try:
-            return fn()
-        except SnapshotConflict as exc:
-            if i == attempts - 1:
-                if attempts == 1:
-                    raise  # default: surface the conflict unchanged
-                raise SnapshotConflict(
-                    f"DML exhausted {attempts} rebase attempts: {exc}"
-                ) from exc
-
-
-def delete_where(
-    spark: SparkSession,
-    table_dir: str,
-    condition,
-    mode: str = "cow",
-    attempts: int = 1,
-    row_cdf: bool = False,
-) -> dict:
-    """SQL ``DELETE FROM table WHERE condition`` as copy-on-write over
-    the manifest: ONE scan counts matching rows per data generation
-    (grouped by ``input_file_name`` prefix — bounded driver metadata,
-    one row per generation); generations with NO matches carry
-    forward in the new manifest BY REFERENCE (zero data movement);
-    only generations holding matches are rewritten without the
-    matching rows. An emptied generation drops out of the manifest.
-
-    Commits as a NORMAL snapshot (not maintenance): the change feed
-    reports each rewritten generation's old rows as deletes and its
-    surviving rows as inserts — the file-level CDF granularity every
-    other writer here has. Old versions stay time-travelable until
-    vacuum. ``condition`` is a Column or SQL string. Returns
-    {deleted_rows, rewritten, carried, snapshot_id}.
-
-    Scale: cost is O(affected generations), so a clustered layout
-    (generation-per-time-window appends, z-ordered rewrites) makes a
-    selective DELETE touch few generations; the worst case equals a
-    full rewrite, the same as any copy-on-write format without
-    deletion vectors.
-
-    ``mode="mor"`` (merge-on-read) writes a POSITION DELETE VECTOR
-    instead of rewriting data: one scan records the (file, row_index)
-    of matching rows under ``_deletes/d=<id>`` and the commit carries
-    every data entry forward by reference — write cost is O(matches),
-    the hot-update regime where copy-on-write's rewrite amplification
-    dominates (the r7 write-amp A/B measures exactly that term).
-    Readers anti-join the (broadcast, tiny) position set out;
-    ``fold_deletes`` / compaction / ``maintain_table`` rewrite the
-    vectors away. Same change-feed semantics: the feed reports the
-    deleted rows at the delete commit.
-
-    ``row_cdf=True`` (cow mode only; mor is row-level by nature)
-    records the matched rows in a ``_cdf/c=<id>`` sidecar so the
-    change feed reports EXACTLY the deleted rows instead of the
-    file-level whole-generation delete+insert of the rewrite — see
-    :func:`update_where`.
-    """
-    if mode == "mor":
-        if row_cdf:
-            # Loud refusal over silent ignore: a caller opting into the
-            # sidecar would otherwise get a file-position-vector feed
-            # and could misread it as the sidecar having been written
-            # (round-10 advice). MOR's feed is already row-level.
-            raise ValueError(
-                "delete_where: row_cdf=True is cow-only — mode='mor' "
-                "already produces a row-level change feed (the position "
-                "vector IS the per-row delete record)"
-            )
-        return _retry_conflicts(
-            lambda: _delete_mor(spark, table_dir, condition), attempts
-        )
-    if mode != "cow":
-        raise ValueError(f"mode must be 'cow'|'mor', got {mode!r}")
-    st = _retry_conflicts(
-        lambda: _rewrite_where(
-            spark, table_dir, condition, None, row_cdf=row_cdf
-        ),
-        attempts,
-    )
-    st["deleted_rows"] = st.pop("matched_rows")
-    return st
-
-
-def _delete_mor(spark: SparkSession, table_dir: str, condition) -> dict:
-    """Merge-on-read DELETE: publish matched row POSITIONS, carry all
-    data entries (and prior delete vectors) forward."""
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    if not man["entries"]:
-        return {
-            "deleted_rows": 0,
-            "delete_vectors": 0,
-            "carried": 0,
-            "snapshot_id": man["snapshot_id"],
-        }
-    next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    hints = _usable_hints(condition, man)
-    scan = read_entries(
-        spark,
-        table_dir,
-        man["entries"],
-        predicate=hints,
-        deletes=man.get("deletes"),
-        with_positions=True,
-        schema_fields=man.get("schema"),
-        rename_log=man.get("rename_log"),
-        stats=man.get("stats"),
-        partition_cols=_dir_cols(man),
-    )
-    if man.get("schema"):
-        # Pad to the committed schema (the predicate may reference a
-        # post-evolution column old generations lack), keeping the
-        # position columns alongside.
-        scan = _pad_to_schema(
-            scan,
-            man["schema"]
-            + [
-                {"name": "_dv_path", "type": "string"},
-                {"name": "_dv_pos", "type": "bigint"},
-            ],
-        )
-    # SQL DELETE 3VL: only predicate-TRUE rows are marked deleted.
-    positions = scan.where(F.coalesce(cond, F.lit(False))).select(
-        F.col("_dv_path").alias("file_path"),
-        F.col("_dv_pos").alias("row_index"),
-    )
-    # Stage the vector, then CLAIM _deletes/d=<id> by atomic rename —
-    # two racing MOR writers at the same next_id would otherwise
-    # interleave on the vector dir (A writes, B delete-rewrites, A's
-    # manifest wins pointing at B's positions: wrong rows deleted).
-    ddir = _stage_and_claim(
-        spark,
-        table_dir,
-        next_id,
-        lambda to: positions.coalesce(1).write.mode("error").parquet(to),
-        dest_rel=f"{_DELETES_DIR}/d={next_id}",
-    )
-    if ddir is None:
-        n = 0
-    else:
-        n = spark.read.parquet(ddir).count()
-        if n == 0:
-            _unclaim(spark, ddir)
-    if n == 0:
-        return {
-            "deleted_rows": 0,
-            "delete_vectors": len(man.get("deletes") or []),
-            "carried": len(man["entries"]),
-            "snapshot_id": man["snapshot_id"],
-        }
-    new_deletes = sorted(
-        set(man.get("deletes") or []) | {f"{_DELETES_DIR}/d={next_id}"}
-    )
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            next_id,
-            dict(man["entries"]),
-            partition_col=man.get("partition_col"),
-            schema_fields=man.get("schema"),
-            layout_by=man.get("layout_by"),
-            deletes=new_deletes,
-            rename_log=man.get("rename_log"),
-            prev_man=man,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, ddir)
-        raise
-    return {
-        "deleted_rows": int(n),
-        "delete_vectors": len(new_deletes),
-        "carried": len(man["entries"]),
-        "snapshot_id": next_id,
-    }
-
-
-def update_where(
-    spark: SparkSession,
-    table_dir: str,
-    condition,
-    set_exprs: dict[str, object],
-    attempts: int = 1,
-    row_cdf: bool = False,
-) -> dict:
-    """SQL ``UPDATE table SET col = expr, ... WHERE condition`` —
-    the copy-on-write sibling of :func:`delete_where` (same one-scan
-    affected-generation discovery, same carry-by-reference for
-    untouched generations, same change-feed/time-travel semantics;
-    stats report ``updated_rows``).
-    ``set_exprs`` maps existing column names to Columns or SQL
-    strings evaluated against the matching row; non-matching rows
-    pass through unchanged. New columns are refused — additive
-    schema evolution goes through append/write, not UPDATE.
-    ``attempts`` > 1 rebase-retries on SnapshotConflict (each attempt
-    recomputes from the fresh manifest).
-
-    ``row_cdf=True`` (opt-in, Delta-style) additionally records the
-    MATCHED rows' pre/post images in a ``_cdf/c=<id>`` sidecar the
-    commit's manifest points at, so ``read_changes`` reports the
-    update as ``update_preimage``/``update_postimage`` rows instead
-    of the file-level whole-generation delete+insert — what an
-    incremental consumer of an UPDATE-heavy table wants (round-9
-    verdict directive #2). Costs one extra scan of the affected
-    generations (O(matches) written)."""
-    st = _retry_conflicts(
-        lambda: _rewrite_where(
-            spark, table_dir, condition, set_exprs, row_cdf=row_cdf
-        ),
-        attempts,
-    )
-    st["updated_rows"] = st.pop("matched_rows")
-    return st
-
-
-def _strip_parens(term: str) -> str:
-    """Remove a BALANCED outer paren pair (only when the first '('
-    really closes at the last char — '(a) = (b)' stays intact)."""
-    term = term.strip()
-    while term.startswith("(") and term.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(term):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(term) - 1:
-                    return term
-        term = term[1:-1].strip()
-    return term
-
-
-_HINT_LIT = (
-    r"(-?\d+(?:\.\d+)?"
-    r"|DATE\s*'[^']*'"
-    r"|TIMESTAMP\s*'[^']*'"
-    r"|'(?:[^']|'')*')"
+from big_data_spark.io.dml import delete_where, fold_deletes, update_where
+from big_data_spark.io.layout import bare_path, generation_dir
+from big_data_spark.io.manifest import (
+    FORMAT_VERSION,
+    SnapshotConflict,
+    commit_manifest,
+    entry_partition_values,
+    format_version_error,
+    latest_manifest,
+    partition_entry_key,
+    read_manifest,
+    select_partition_entries,
+    snapshot_ids,
 )
-
-
-def _parse_hint_lit(tok: str):
-    """One SQL literal token from a hintable conjunct → the typed
-    Python bound (float | str | date | datetime), or None when the
-    DATE/TIMESTAMP body is not ISO-parseable (the term then skips —
-    unprunable, never wrong; Spark will still error or coerce it in
-    the condition's own row filter, which stays authoritative)."""
-    import datetime as _dt
-
-    tok = tok.strip()
-    up = tok.upper()
-    if up.startswith("DATE"):
-        try:
-            return _dt.date.fromisoformat(tok[4:].strip()[1:-1])
-        except ValueError:
-            return None
-    if up.startswith("TIMESTAMP"):
-        try:
-            return _dt.datetime.fromisoformat(tok[9:].strip()[1:-1])
-        except ValueError:
-            return None
-    if tok.startswith("'"):
-        return tok[1:-1].replace("''", "'")
-    return float(tok)
-
-
-def _hint_family(v) -> str:
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        return "datetime"
-    if isinstance(v, _dt.date):
-        return "date"
-    if isinstance(v, str):
-        return "string"
-    return "numeric"
-
-
-def _range_hints(cond: str) -> dict[str, tuple] | None:
-    """Range bounds PROVABLY IMPLIED by a conjunctive SQL condition
-    string — the bridge that lets DML compose with footer data
-    skipping. Only plain ``col (>=|>|<=|<|=) literal``,
-    ``col BETWEEN a AND b`` and all-literal ``col IN (a, b, ...)``
-    (min/max envelope) conjuncts contribute, where literal is a
-    number, a ``'string'`` (round 11: typed skipping — this is what
-    lets ``WHERE region = 'EUROPE'`` or ``ts >= '2026-01-01'`` prune),
-    a ``DATE '...'`` or a ``TIMESTAMP '...'``; every other term is
-    skipped, which stays sound (pruning by a SUBSET of conjuncts
-    keeps a superset of the matching files). A column whose conjuncts
-    mix literal families (``c >= 5 AND c <= 'x'``) drops out of the
-    hints entirely — unprunable beats a wrong cross-type fold. Any
-    top-level OR / NOT disables hinting (None). Strict bounds use the
-    closed interval — conservative at file level, exact after the
-    condition's own row filter."""
-    import re as _re
-
-    if _re.search(r"\bOR\b|\bNOT\b", cond, _re.IGNORECASE):
-        return None
-    bounds: dict[str, list] = {}
-    families: dict[str, str] = {}
-    poisoned: set[str] = set()
-
-    def _fold(col: str, lo, hi) -> None:
-        fam = _hint_family(lo if lo is not None else hi)
-        if families.setdefault(col, fam) != fam:
-            poisoned.add(col)
-            return
-        cur = bounds.setdefault(col, [None, None])
-        if lo is not None:
-            cur[0] = lo if cur[0] is None else max(cur[0], lo)
-        if hi is not None:
-            cur[1] = hi if cur[1] is None else min(cur[1], hi)
-
-    # Shield BETWEEN's inner AND from the conjunction split.
-    shielded = _re.sub(
-        rf"(\bBETWEEN\b\s*{_HINT_LIT})\s+AND\b",
-        r"\1 __BTWN__",
-        cond,
-        flags=_re.IGNORECASE,
-    )
-    for raw in _re.split(r"\bAND\b", shielded, flags=_re.IGNORECASE):
-        term = _strip_parens(raw.replace("__BTWN__", "AND"))
-        m = _re.match(
-            rf"^`?(\w+)`?\s*(>=|<=|==|=|<|>)\s*{_HINT_LIT}$", term
-        )
-        if m:
-            col, op = m.group(1), m.group(2)
-            val = _parse_hint_lit(m.group(3))
-            if val is None:
-                continue
-            if op in (">=", ">"):
-                _fold(col, val, None)
-            elif op in ("<=", "<"):
-                _fold(col, None, val)
-            else:
-                _fold(col, val, val)
-            continue
-        m = _re.match(
-            rf"^`?(\w+)`?\s+BETWEEN\s+{_HINT_LIT}\s+AND\s+{_HINT_LIT}$",
-            term,
-            _re.IGNORECASE,
-        )
-        if m:
-            lo = _parse_hint_lit(m.group(2))
-            hi = _parse_hint_lit(m.group(3))
-            if lo is None or hi is None:
-                continue
-            if _hint_family(lo) != _hint_family(hi):
-                poisoned.add(m.group(1))
-                continue
-            _fold(m.group(1), lo, hi)
-            continue
-        # col IN (lit, lit, ...) implies min <= col <= max — the
-        # conservative envelope (round 11); the condition's own row
-        # filter applies exact membership. Only all-literal lists
-        # hint (an IN (SELECT ...) fails the fullmatch and skips).
-        m = _re.match(
-            r"^`?(\w+)`?\s+IN\s*\((.*)\)$",
-            term,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m and _re.fullmatch(
-            rf"\s*{_HINT_LIT}(?:\s*,\s*{_HINT_LIT})*\s*",
-            m.group(2),
-            _re.IGNORECASE,
-        ):
-            vals = [
-                _parse_hint_lit(t)
-                for t in _re.findall(_HINT_LIT, m.group(2), _re.IGNORECASE)
-            ]
-            if any(v is None for v in vals):
-                continue
-            if len({_hint_family(v) for v in vals}) != 1:
-                continue  # mixed families: unprunable, not wrong
-            _fold(m.group(1), min(vals), max(vals))
-    out = {
-        c: (lo, hi)
-        for c, (lo, hi) in bounds.items()
-        if c not in poisoned
-    }
-    return out or None
-
-
-def _usable_hints(condition, man: dict):
-    """Range hints restricted to columns footer statistics can
-    actually prune on: hive partition/layout columns live in dir
-    names, not file footers — hinting them would make the footer
-    sweep raise 'column not in file schema'."""
-    if not isinstance(condition, str):
-        return None
-    hints = _range_hints(condition)
-    if not hints:
-        return None
-    skip = set(_pcols(man.get("partition_col")) or []) | (
-        {man.get("layout_by")} - {None}
-    )
-    hints = {c: b for c, b in hints.items() if c not in skip}
-    return hints or None
-
-
-def _rewrite_where(
-    spark: SparkSession,
-    table_dir: str,
-    condition,
-    set_exprs: dict[str, object] | None,
-    row_cdf: bool = False,
-) -> dict:
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    entries = man["entries"]
-    pcols = _pcols(man.get("partition_col"))
-    if set_exprs is not None and pcols is not None:
-        moved = sorted(set(set_exprs) & set(pcols))
-        if moved:
-            raise ValueError(
-                f"update_where: SET on partition column(s) {moved} "
-                "moves rows between partitions, which a touched-"
-                "partition rewrite cannot express — route key moves "
-                "through delete + append (or a full write_snapshot)."
-            )
-    # ONE scan counts matching rows per ENTRY: the owning dir is
-    # derived EXECUTOR-side from the file path (the _data/s=N[/p=v]
-    # shape every writer here produces), so the driver receives one
-    # row per generation/partition dir — bounded metadata even when a
-    # broad predicate matches rows in millions of files.
-    #
-    # Footer data skipping composes in: range bounds provably implied
-    # by a STRING condition (a conjunct subset — always sound) route
-    # the counting scan through the same prune_files_multi path as
-    # read_snapshot(predicate=), so a selective DELETE on a clustered
-    # layout opens only the files whose min/max can hold matches.
-    # The survivors read below stays UNPRUNED — it must keep the
-    # non-matching rows of affected generations.
-    hints = _usable_hints(condition, man)
-    by_entry_rel = sorted(set(entries.values()))
-    dv = man.get("deletes") or None
-    scan = read_entries(
-        spark,
-        table_dir,
-        entries,
-        predicate=hints,
-        deletes=dv,
-        with_positions=bool(dv),
-        schema_fields=man.get("schema"),
-        rename_log=man.get("rename_log"),
-        stats=man.get("stats"),
-        partition_cols=_dir_cols(man),
-    )
-    if man.get("schema"):
-        pad_fields = list(man["schema"]) + (
-            [
-                {"name": "_dv_path", "type": "string"},
-                {"name": "_dv_pos", "type": "bigint"},
-            ]
-            if dv
-            else []
-        )
-        scan = _pad_to_schema(scan, pad_fields)
-    # File attribution: input_file_name() is only reliable on a pure
-    # scan pipeline; under merge-on-read the anti-join sits between
-    # the scan and this projection, so use the scan-level _dv_path
-    # column instead.
-    file_col = F.col("_dv_path") if dv else F.input_file_name()
-    counts_rows = (
-        scan.where(cond)
-        .select(
-            F.regexp_extract(
-                file_col,
-                r"(_data/s=\d+(?:/[^/]*=[^/]*)*)/",
-                1,
-            ).alias("_d")
-        )
-        .groupBy("_d")
-        .count()
-        .collect()
-    )
-    hit_rels: dict[str, int] = {}
-    for r in counts_rows:
-        rel = _owning_rel(
-            f"{table_dir}/{r['_d']}/x" if r["_d"] else r["_d"],
-            table_dir,
-            by_entry_rel,
-        )
-        hit_rels[rel] = hit_rels.get(rel, 0) + r["count"]
-    if not hit_rels:
-        return {
-            "matched_rows": 0,
-            "rewritten": 0,
-            "carried": len(entries),
-            "snapshot_id": man["snapshot_id"],
-        }
-    # next_id derives from the SAME manifest whose entries are carried
-    # forward — never from a fresh snapshot_ids() listing. A commit
-    # landing between our manifest read and our commit then collides
-    # on the id and surfaces as SnapshotConflict (retryable), instead
-    # of being silently dropped from the new manifest and later
-    # vacuumed away (lost update).
-    next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    affected = {k: v for k, v in entries.items() if v in hit_rels}
-    carried = {k: v for k, v in entries.items() if v not in hit_rels}
-    # Pad to the COMMITTED schema (typed) BEFORE evaluating the
-    # condition / SET exprs: affected generations may predate an
-    # additive column the predicate or assignment references. Deletes
-    # apply here too — already-MOR-deleted rows must not resurrect
-    # into the rewritten generation.
-    base = _pad_to_schema(
-        read_entries(
-            spark,
-            table_dir,
-            affected,
-            deletes=dv,
-            schema_fields=man.get("schema"),
-            rename_log=man.get("rename_log"),
-            partition_cols=_dir_cols(man),
-        ),
-        man.get("schema"),
-    )
-    if set_exprs is not None:
-        unknown = set(set_exprs) - set(base.columns)
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {sorted(unknown)} — "
-                "additive evolution goes through append/write"
-            )
-    cdf_rel: str | None = None
-    cdf_dir: str | None = None
-    if row_cdf:
-        # Row-level CDF sidecar (opt-in): the MATCHED rows, as
-        # pre/post images for an UPDATE (evaluated from `base`, the
-        # PRE-update values — a post-image over the updated frame
-        # would re-evaluate the predicate on updated values) or as
-        # plain deletes for a DELETE. One extra scan of the affected
-        # generations; O(matches) rows written. The commit's manifest
-        # points at it and read_changes emits it INSTEAD of the
-        # file-level generation diff. The predicate itself must be
-        # deterministic (true of any sane DML WHERE); non-
-        # deterministic SET expressions are handled below.
-        if {"_change_type", "_commit_id"} & set(base.columns):
-            raise ValueError(
-                "row_cdf: table already has a _change_type/_commit_id "
-                "column — rename it to record a row-level feed (the "
-                "sidecar rows carry those names)"
-            )
-        matched = base.where(F.coalesce(cond, F.lit(False)))
-        if set_exprs is None:
-            images = matched.withColumn("_change_type", F.lit("delete"))
-        else:
-            post = matched
-            for col, expr in set_exprs.items():
-                val = F.expr(expr) if isinstance(expr, str) else expr
-                post = post.withColumn(
-                    col, val.cast(dict(base.dtypes)[col])
-                )
-            images = matched.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
-        cdf_rel = f"{_CDF_DIR}/c={next_id}"
-        cdf_dir = _stage_and_claim(
-            spark,
-            table_dir,
-            next_id,
-            lambda to: images.write.mode("error").parquet(to),
-            dest_rel=cdf_rel,
-        )
-        if cdf_dir is None:
-            cdf_rel = None  # defensive: hit_rels guarantees matches
-    if set_exprs is None:
-        # SQL DELETE three-valued logic: only rows where the
-        # predicate is TRUE are deleted; NULL-valued predicates keep
-        # their row (a bare ~cond would drop them too).
-        survivors = base.where(~F.coalesce(cond, F.lit(False)))
-    elif row_cdf and cdf_dir is not None:
-        # The rewritten generation's updated rows are the JUST-WRITTEN
-        # sidecar post-images read back from disk — the single
-        # evaluation of the SET expressions. A persist() would only
-        # pin them as strongly as the block cache: a lost executor
-        # recomputes from lineage with fresh rand(), committing rows
-        # that differ from the feed's update_postimage (the
-        # audit-vs-commit double-execution class). Bytes on disk
-        # cannot diverge.
-        committed_post = (
-            spark.read.parquet(cdf_dir)
-            .where(F.col("_change_type") == "update_postimage")
-            .drop("_change_type")
-        )
-        survivors = base.where(
-            ~F.coalesce(cond, F.lit(False))
-        ).unionByName(committed_post)
-    else:
-        survivors = base
-        for col, expr in set_exprs.items():
-            val = F.expr(expr) if isinstance(expr, str) else expr
-            survivors = survivors.withColumn(
-                col,
-                F.when(cond, val.cast(dict(base.dtypes)[col])).otherwise(
-                    F.col(col)
-                ),
-            )
-    stats = {
-        "matched_rows": int(sum(hit_rels.values())),
-        "rewritten": len(set(affected.values())),
-        "carried": len(carried),
-        "snapshot_id": next_id,
-    }
-    if pcols:
-        # Partitioned table: the affected entries ARE partitions —
-        # route through the partial writer so manifest keys reconcile
-        # per partition (and emptied partitions drop). affected's keys
-        # are already canonical entry keys (scalar or escaped suffix).
-        try:
-            write_snapshot_partial(
-                survivors,
-                table_dir,
-                next_id,
-                man.get("partition_col"),
-                list(affected.keys()),
-                deletes=dv,
-                rename_log=man.get("rename_log"),
-                claim=True,
-                cdf=cdf_rel,
-            )
-        except SnapshotConflict:
-            _unclaim(spark, cdf_dir)
-            raise
-        return stats
-    layout = man.get("layout_by")
-
-    def _write(to: str) -> None:
-        writer = (
-            survivors.repartition(layout) if layout else survivors
-        ).write.mode("error")
-        if layout:
-            writer = writer.partitionBy(layout)
-        writer.parquet(to)
-
-    # Staged-rename dir claim, never delete-then-write: a concurrent
-    # retry-appender holding _data/s=<next_id> surfaces as a
-    # retryable SnapshotConflict instead of losing its claimed data.
-    try:
-        gdir = _stage_and_claim(spark, table_dir, next_id, _write)
-    except SnapshotConflict:
-        _unclaim(spark, cdf_dir)
-        raise
-    new_entries = dict(carried)
-    if gdir is not None:
-        new_entries[f"b{next_id}"] = f"{_DATA_DIR}/s={next_id}"
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            next_id,
-            new_entries,
-            schema_fields=man.get("schema"),
-            layout_by=layout,
-            # Carried verbatim: rows referencing the rewritten
-            # (dropped) generations are inert; rows for carried
-            # generations still mask. fold_deletes / maintenance
-            # clears the list.
-            deletes=dv,
-            rename_log=man.get("rename_log"),
-            prev_man=man,
-            cdf=cdf_rel,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir)
-        _unclaim(spark, cdf_dir)
-        raise
-    return stats
-
-
-def analyze_table(
-    spark: SparkSession,
-    table_dir: str,
-    stats_columns: list[str] | None = None,
-) -> dict:
-    """Maintenance: backfill the manifest's per-file column stats for
-    every live generation that lacks them — the explicit spelling of
-    the backfill that otherwise rides along with the NEXT data commit
-    (a read-mostly table could wait forever, paying the footer sweep
-    on every pruned read). A generation whose doc went missing from
-    its consolidated shard is re-swept too, and a table whose recorded
-    column set should change re-sweeps from scratch.
-
-    Commits ``maintenance=True`` with entries/schema/deletes carried
-    verbatim — content is unchanged, the change feed skips it, and a
-    concurrent writer's rename still wins the commit race (the caller
-    retries like any maintenance op). Returns
-    ``{analyzed_generations, covered_generations, stats_columns,
-    snapshot_id}``; a fully-covered table is a NO-OP (no commit)."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    if stats_columns is not None:
-        # Validate against the committed schema BEFORE committing: a
-        # typo'd column would otherwise silently replace a working
-        # stats block with an all-None one that every later commit
-        # carries forward. Spark's own ANALYZE validates column
-        # existence the same way.
-        known = {f["name"] for f in man.get("schema") or []}
-        bad = [c for c in stats_columns if not c or c not in known]
-        if bad or not stats_columns:
-            raise ValueError(
-                f"analyze_table: unknown stats column(s) {bad!r} — "
-                f"committed schema has {sorted(known)!r}"
-            )
-    prev_stats = man.get("stats")
-    live_gens = sorted(_live_gens(man["entries"]))
-    fresh = prev_stats is None or (
-        stats_columns is not None
-        and list(stats_columns) != prev_stats["columns"]
-    )
-    covered_before = 0
-    if not fresh:
-        # Covered = a loadable sidecar doc. ANALYZE is the explicit
-        # gap-closer, so O(live generations) cached loads here are
-        # its job, never the ordinary commit path's.
-        for g in _stats_covered(prev_stats) & set(live_gens):
-            if _load_gen_stats(spark, table_dir, prev_stats, g) is not None:
-                covered_before += 1
-    if not fresh and covered_before == len(live_gens):
-        # Fully covered: the one remaining maintenance is sidecar
-        # FRAGMENTATION — an append-heavy table holds one file per
-        # commit, and past the process cache cap every aggregate
-        # re-pays the bulk scan. Fold them into one consolidated
-        # file; below the threshold, a true no-op.
-        con = consolidate_stats(spark, table_dir)
-        return {
-            "analyzed_generations": 0,
-            "covered_generations": covered_before,
-            "stats_columns": list(prev_stats["columns"]),
-            "snapshot_id": con["snapshot_id"],
-            "merged_sidecars": con["merged_sidecars"],
-        }
-    stats = _auto_commit_stats(
-        spark,
-        table_dir,
-        man["entries"],
-        None if fresh else prev_stats,
-        man.get("schema"),
-        man.get("partition_col"),
-        man.get("layout_by"),
-        stats_columns,
-        rename_log=man.get("rename_log"),
-        repair_torn=True,  # ANALYZE is the explicit gap-closer
-    )
-    if stats is None:
-        # No stat-capable columns: nothing to record, nothing to commit.
-        return {
-            "analyzed_generations": 0,
-            "covered_generations": 0,
-            "stats_columns": [],
-            "snapshot_id": man["snapshot_id"],
-            "merged_sidecars": 0,
-        }
-    # Consolidate the freshly built block in the SAME commit when the
-    # sidecar file count crossed the threshold — one metadata commit
-    # covers backfill AND defragmentation.
-    stats, merged = _consolidated_stats_block(
-        spark,
-        table_dir,
-        stats,
-        set(live_gens),
-        _CONSOLIDATE_MAX_SIDECARS,
-    )
-    next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    commit_manifest(
-        spark,
-        table_dir,
-        next_id,
-        man["entries"],
-        partition_col=man.get("partition_col"),
-        schema_fields=man.get("schema"),
-        layout_by=man.get("layout_by"),
-        maintenance=True,
-        deletes=man.get("deletes"),
-        rename_log=man.get("rename_log"),
-        prev_man=man,
-        stats=stats,
-    )
-    return {
-        "analyzed_generations": len(live_gens) - covered_before,
-        "covered_generations": len(live_gens),
-        "stats_columns": list(stats["columns"]),
-        "snapshot_id": next_id,
-        "merged_sidecars": merged,
-    }
-
-
-# Live sidecar FILES past this, ANALYZE folds them into consolidated
-# shards (same bound as the bulk-prefetch threshold: below it the
-# serial cached loop is already cheap).
-_CONSOLIDATE_MAX_SIDECARS = _BULK_MANIFEST_THRESHOLD
-# Per consolidated SHARD caps (round-14 directive #1): one shard
-# carries at most this many generations' docs, and is cut early when
-# its serialized body would exceed the byte cap (per-gen docs are
-# O(files-per-generation), so a gen count alone could still build a
-# monolithic file on a wide table). Size-capped shards keep every
-# consolidation pass — and every driver read — bounded: the round-13
-# single consolidated JSON was itself an O(live files) driver
-# read-parse-rewrite at 10^5-10^6 files, the exact monolithic-
-# metadata shape the manifest/sidecar splits exist to kill.
-_CONSOLIDATE_SHARD_GENS = 4096
-_CONSOLIDATE_SHARD_BYTES = 8 << 20
-
-# Shard filenames are self-describing: ``consolidated-f<N>-<uuid>``
-# is a FULL (sealed) shard written with N generations — never
-# rewritten while at least half of them stay live — while
-# ``consolidated-t<N>-<uuid>`` is the TAIL shard that keeps absorbing
-# the loose per-gen files until it seals. Sealed-ness must be
-# decidable from the manifest's sidecar map ALONE (no reads), so the
-# writer stamps it into the name. Legacy round-13 names
-# (``consolidated-<hex>``) carry no stamp and refold as tails.
-_SHARD_NAME_RE = re.compile(
-    r"consolidated-([ft])(\d+)-[0-9a-f]+\.json$"
+from big_data_spark.io.table_reads import (
+    evolve_schema,
+    read_delete_positions,
+    read_entries,
+    read_snapshot,
+    resolve_as_of_ts,
 )
-
-
-def _shard_is_sealed(rel: str, live_count: int) -> bool:
-    """A shard stays untouched while it still earns its keep: a FULL
-    shard whose live generations dropped below half its written count
-    (mass deletes/rewrites) gets compacted with the tail instead of
-    bloating every future bulk read with dead docs."""
-    m = _SHARD_NAME_RE.search(rel)
-    if m is None or m.group(1) != "f":
-        return False
-    return live_count >= max(1, int(m.group(2)) // 2)
-
-
-def _write_consolidated_shard(
-    spark: SparkSession,
-    table_dir: str,
-    gens_doc: dict[str, dict],
-    full: bool,
-    ser: dict[str, str] | None = None,
-) -> str:
-    """Write one immutable consolidated shard and prime the cache;
-    returns its table-relative path. Same crash contract as per-gen
-    sidecars: unique name, referenced only by a later manifest commit,
-    so a mid-write death leaves an orphan for vacuum. ``ser`` carries
-    per-gen docs already serialized by the binpack's size pass — the
-    body is assembled from those strings instead of re-dumping every
-    doc (the docs dominate consolidation CPU at scale)."""
-    kind = "f" if full else "t"
-    rel = (
-        f"{_STATS_SIDE_DIR}/consolidated-{kind}{len(gens_doc)}-"
-        f"{uuid.uuid4().hex}.json"
-    )
-    if ser is not None:
-        body = (
-            '{"gens": {'
-            + ", ".join(
-                f"{json.dumps(g)}: {ser[g]}" for g in sorted(gens_doc)
-            )
-            + "}}"
-        )
-    else:
-        body = json.dumps({"gens": gens_doc}, sort_keys=True)
-    fs, dpath = hadoop_fs(spark, f"{table_dir}/{_STATS_SIDE_DIR}")
-    fs.mkdirs(dpath)
-    _, fpath = hadoop_fs(spark, f"{table_dir}/{rel}")
-    out_stream = fs.create(fpath, True)
-    try:
-        out_stream.write(bytearray(body.encode("utf-8")))
-    finally:
-        out_stream.close()
-    with _SIDECAR_CACHE_LOCK:
-        if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-            _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
-        _SIDECAR_CACHE[(table_dir, rel)] = {"gens": gens_doc}
-    return rel
-
-
-def _consolidated_stats_block(
-    spark: SparkSession,
-    table_dir: str,
-    stats: dict,
-    live_gens: set[str],
-    max_sidecars: int,
-    shard_gens: int | None = None,
-    shard_bytes: int | None = None,
-) -> tuple[dict, int]:
-    """(new stats block, merged file count): fold the live
-    generations' loose per-generation sidecar FILES — plus the
-    current tail shard and any full shard gone mostly-dead — into
-    size-capped consolidated shards when more than ``max_sidecars``
-    refoldable files are referenced, else return the block unchanged
-    with 0. INCREMENTAL by construction (round-14 directive #1):
-    sealed full shards are carried by reference, so a repeat pass
-    rewrites only the tail — each generation is re-copied O(shard
-    cap / threshold) times over its whole life, never O(passes).
-    Docs are copied RAW (names_at stamps preserved) so rename replay
-    semantics are untouched; refolded files become unreferenced once
-    the new manifest commits and fall to vacuum."""
-    if shard_gens is None:
-        shard_gens = _CONSOLIDATE_SHARD_GENS
-    if shard_bytes is None:
-        shard_bytes = _CONSOLIDATE_SHARD_BYTES
-    side = (stats or {}).get("sidecars") or {}
-    covered = [g for g in sorted(live_gens) if g in side]
-    by_rel: dict[str, list[str]] = {}
-    for g in covered:
-        by_rel.setdefault(side[g], []).append(g)
-    refold_rels = [
-        rel
-        for rel, gens_in in by_rel.items()
-        if not _shard_is_sealed(rel, len(gens_in))
-    ]
-    if len(refold_rels) <= max_sidecars:
-        return stats, 0
-    refold_set = set(refold_rels)
-    refold_gens = sorted(
-        g for rel in refold_rels for g in by_rel[rel]
-    )
-    pre = _prefetch_sidecars(spark, table_dir, stats, refold_gens)
-    gens_doc: dict[str, dict] = {}
-    for g in refold_gens:
-        doc = pre.get(g)
-        if doc is None:
-            raw = _read_sidecar(spark, table_dir, side[g])
-            doc = raw["gens"].get(g) if "gens" in raw else raw
-        if doc is None:
-            # Torn reference: leave the block alone — analyze_table's
-            # backfill is the repair path, not consolidation.
-            return stats, 0
-        gens_doc[g] = doc
-    new_side = dict(side)
-    # Greedy binpack over the sorted refold set: cut a FULL shard at
-    # the gen cap or the byte cap; the remainder becomes the tail.
-    # Docs serialize ONCE — the size pass's strings are reused as the
-    # shard body fragments.
-    ser = {
-        g: json.dumps(doc, sort_keys=True)
-        for g, doc in gens_doc.items()
-    }
-    chunk: list[str] = []
-    chunk_bytes = 0
-    for g in refold_gens:
-        sz = len(ser[g])
-        if chunk and (
-            len(chunk) >= shard_gens
-            or chunk_bytes + sz > shard_bytes
-        ):
-            rel = _write_consolidated_shard(
-                spark,
-                table_dir,
-                {c: gens_doc[c] for c in chunk},
-                full=True,
-                ser=ser,
-            )
-            for c in chunk:
-                new_side[c] = rel
-            chunk, chunk_bytes = [], 0
-        chunk.append(g)
-        chunk_bytes += sz
-    if chunk:
-        rel = _write_consolidated_shard(
-            spark,
-            table_dir,
-            {c: gens_doc[c] for c in chunk},
-            full=len(chunk) >= shard_gens,
-            ser=ser,
-        )
-        for c in chunk:
-            new_side[c] = rel
-    # A gen in a refolded shard that is no longer LIVE must not keep
-    # pointing at the dropped file: remap it to the shard that now
-    # carries its generation's nearest surviving reference — simplest
-    # correct move is to drop dead-gen references to refolded rels
-    # (readers only ever resolve LIVE generations).
-    for g, rel in list(new_side.items()):
-        if rel in refold_set and g not in gens_doc:
-            del new_side[g]
-    out = dict(stats)
-    out["sidecars"] = new_side
-    return out, len(refold_rels)
-
-
-def consolidate_stats(
-    spark: SparkSession,
-    table_dir: str,
-    max_sidecars: int | None = None,
-    shard_gens: int | None = None,
-    shard_bytes: int | None = None,
-) -> dict:
-    """Maintenance: fold the live generations' LOOSE stats sidecar
-    FILES (plus the tail shard) into size-capped consolidated shards
-    and commit a metadata-only manifest referencing them (round-13
-    directive #6; sharded + incremental per round-14 directive #1).
-    An append-heavy table accumulates one sidecar per commit; past
-    the process cache cap (``_SIDECAR_CACHE_MAX``) every metadata
-    aggregate re-pays a bulk distributed scan of them ALL — after
-    consolidation the working set is ceil(live gens / shard cap)
-    shard files, each read once per process, and a REPEAT pass
-    rewrites only the unsealed tail (sealed full shards carry by
-    reference — no O(live files) rewrite, ever). ``analyze_table``
-    runs this automatically; this is the explicit spelling. At or
-    below ``max_sidecars`` refoldable files it is a NO-OP (no
-    commit). Returns ``{merged_sidecars, snapshot_id}``."""
-    if max_sidecars is None:
-        # Resolved at CALL time so tests (and operators) can tune the
-        # module threshold without re-binding a default.
-        max_sidecars = _CONSOLIDATE_MAX_SIDECARS
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    stats = man.get("stats")
-    if not stats or not stats.get("sidecars"):
-        return {"merged_sidecars": 0, "snapshot_id": man["snapshot_id"]}
-    new_stats, merged = _consolidated_stats_block(
-        spark,
-        table_dir,
-        stats,
-        _live_gens(man["entries"]),
-        max_sidecars,
-        shard_gens=shard_gens,
-        shard_bytes=shard_bytes,
-    )
-    if merged == 0:
-        return {"merged_sidecars": 0, "snapshot_id": man["snapshot_id"]}
-    next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    commit_manifest(
-        spark,
-        table_dir,
-        next_id,
-        man["entries"],
-        partition_col=man.get("partition_col"),
-        schema_fields=man.get("schema"),
-        layout_by=man.get("layout_by"),
-        maintenance=True,
-        deletes=man.get("deletes"),
-        rename_log=man.get("rename_log"),
-        prev_man=man,
-        stats=new_stats,
-    )
-    return {"merged_sidecars": merged, "snapshot_id": next_id}
-
-
-def fold_deletes(spark: SparkSession, table_dir: str) -> dict:
-    """Maintenance: materialize the merge-on-read delete vectors —
-    rewrite ONLY the generations that still have live masked rows
-    (O(affected), like a selective COW delete), carry the rest by
-    reference, and commit with an EMPTY delete list. Content is
-    unchanged (the masks were already applied at read), so the commit
-    is maintenance=True and invisible to the change feed; the freed
-    vector dirs fall to vacuum once their manifests expire."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    dv = man.get("deletes") or []
-    if not dv:
-        return {"folded_vectors": 0, "rewritten": 0, "snapshot_id": man["snapshot_id"]}
-    next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    entries = man["entries"]
-    # Which LIVE generations do the vectors still mask? Executor-side
-    # dir extraction over the (small) position set; the driver sees
-    # distinct dirs only.
-    hit_dirs = {
-        r["_g"]
-        for r in read_delete_positions(spark, table_dir, dv)
-        .select(
-            F.regexp_extract(
-                "file_path", r"(_data/s=\d+(?:/[^/]*=[^/]*)*)/", 1
-            ).alias("_g")
-        )
-        .distinct()
-        .collect()
-        if r["_g"]
-    }
-    owned = _match_rels(hit_dirs, set(entries.values()))
-    affected = {k: rel for k, rel in entries.items() if rel in owned}
-    stats = {
-        "folded_vectors": len(dv),
-        "rewritten": len(set(affected.values())),
-        "carried": len(entries) - len(affected),
-        "snapshot_id": next_id,
-    }
-    if not affected:
-        # Every vector row references dropped generations (inert):
-        # metadata-only commit clears the list.
-        commit_manifest(
-            spark,
-            table_dir,
-            next_id,
-            dict(entries),
-            partition_col=man.get("partition_col"),
-            schema_fields=man.get("schema"),
-            layout_by=man.get("layout_by"),
-            maintenance=True,
-            rename_log=man.get("rename_log"),
-            prev_man=man,
-        )
-        return stats
-    base = _pad_to_schema(
-        read_entries(
-            spark,
-            table_dir,
-            affected,
-            deletes=dv,
-            schema_fields=man.get("schema"),
-            rename_log=man.get("rename_log"),
-            partition_cols=_dir_cols(man),
-        ),
-        man.get("schema"),
-    )
-    pcol = man.get("partition_col")
-    if pcol:
-        write_snapshot_partial(
-            base,
-            table_dir,
-            next_id,
-            pcol,
-            list(affected.keys()),
-            maintenance=True,
-            # Explicit clear: the fold's whole point — the rewritten
-            # partitions materialized their masks, the carried ones
-            # were never masked (hit_dirs chose affected).
-            deletes=None,
-            rename_log=man.get("rename_log"),
-            claim=True,
-        )
-        return stats
-    layout = man.get("layout_by")
-
-    def _write(to: str) -> None:
-        writer = (base.repartition(layout) if layout else base).write.mode(
-            "error"
-        )
-        if layout:
-            writer = writer.partitionBy(layout)
-        writer.parquet(to)
-
-    gdir = _stage_and_claim(spark, table_dir, next_id, _write)
-    new_entries = {
-        k: v for k, v in entries.items() if v not in set(affected.values())
-    }
-    if gdir is not None:
-        new_entries[f"b{next_id}"] = f"{_DATA_DIR}/s={next_id}"
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            next_id,
-            new_entries,
-            schema_fields=man.get("schema"),
-            layout_by=layout,
-            maintenance=True,
-            rename_log=man.get("rename_log"),
-            prev_man=man,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir)
-        raise
-    return stats
-
-
-def _owning_rel(file_uri: str, table_dir: str, rels: list[str]) -> str:
-    """Map a scanned file URI to the manifest entry whose dir holds
-    it (scheme-insensitive via bare_path — the one normalizer, shared
-    with io/fileindex — longest prefix wins, so nested entry dirs
-    like _data/s=0 vs _data/s=0/_kb=1 resolve to the deeper one).
-
-    Scan-provenance strings (input_file_name / _metadata.file_path)
-    are URI-ENCODED by construction (Spark's urlEncodedPath) — a disk
-    dir ``part=p 2%3Ax`` arrives as ``part=p%202%253Ax`` — while
-    manifest rels hold raw disk names (round-10 model-walk finding:
-    DML on a partition value with a space or '%' matched no entry).
-    The ONCE-UNQUOTED form is therefore tried first, COMPLETELY
-    (longest prefix across all rels); trying the raw form first would
-    mis-attribute a file whenever one partition's raw hive-escaped
-    dir equals a sibling's encoded provenance ('a:b' vs 'a%3Ab' —
-    review-probe confirmed). The raw pass survives only as a global
-    fallback for a hypothetical unencoded provenance source, where it
-    still raises loudly rather than matching nothing."""
-    best: str | None = None
-    for bare in (unquote(bare_path(file_uri)), bare_path(file_uri)):
-        for rel in rels:
-            pb = bare_path(f"{table_dir}/{rel}").rstrip("/") + "/"
-            if bare.startswith(pb) and (
-                best is None or len(rel) > len(best)
-            ):
-                best = rel
-        if best is not None:
-            return best
-    raise ValueError(f"file {file_uri!r} under no manifest entry")
-
-
-def _match_rels(hit_dirs, rels) -> set:
-    """The manifest rels that own any of the scan-provenance dirs in
-    ``hit_dirs`` (URI-encoded, see _owning_rel). The unquoted form
-    matches first across ALL rels; the raw form is a global fallback
-    PER DIR, only when the unquoted pass owned nothing — a per-pair
-    fallback would alias an encoded dir onto a sibling partition's
-    raw hive-escaped name even after the unquoted pass had already
-    found the true owner."""
-    owned: set = set()
-    for g in hit_dirs:
-        uq = unquote(g)
-        hit = {
-            rel for rel in rels if uq == rel or uq.startswith(rel + "/")
-        }
-        if not hit:
-            hit = {
-                rel for rel in rels if g == rel or g.startswith(rel + "/")
-            }
-        owned |= hit
-    return owned
-
-
-def follow_changes(
-    spark: SparkSession,
-    table_dir: str,
-    cursor_dir: str,
-    predicate: dict | None = None,
-):
-    """Incremental-consumer loop step over the change feed: read the
-    durable cursor under ``cursor_dir`` (last commit consumed; -1 =
-    since creation on first call), return ``(feed_df, commit)`` where
-    ``feed_df`` is ``read_changes(after_id=cursor, until_id=latest)``
-    and ``commit()`` atomically advances the cursor to that latest id
-    — call it only AFTER the consumer durably applied the feed, so a
-    crash between read and commit replays the same window
-    (at-least-once, the same contract as a streaming checkpoint).
-    Returns ``(None, None)`` when the table has no new commits.
-
-    The cursor is MONOTONIC by construction: each commit publishes an
-    immutable ``cursor-<id>.json`` (write-temp-then-rename; rename
-    refuses an existing destination, so re-publishing the same id is
-    a detected no-op) and readers take the MAXIMUM published id —
-    a slow consumer instance can therefore never regress the cursor
-    below a faster one's commit; its stale window re-applies, which
-    the at-least-once contract already requires consumers to
-    tolerate.
-    """
-    ids = snapshot_ids(spark, table_dir)
-    if not ids:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    fs, cdir = hadoop_fs(spark, cursor_dir)
-    fs.mkdirs(cdir)
-    committed = []
-    for st in fs.listStatus(cdir):
-        name = st.getPath().getName()
-        if name.startswith("cursor-") and name.endswith(".json"):
-            committed.append(int(name[len("cursor-") : -len(".json")]))
-    cursor = max(committed) if committed else -1
-    until = ids[-1]
-    if until <= cursor:
-        return None, None
-    feed = read_changes(
-        spark, table_dir, after_id=cursor, until_id=until,
-        predicate=predicate,
-    )
-
-    def commit() -> int:
-        body = json.dumps({"last_commit": until})
-        tmp = f"{cursor_dir}/.tmp-{uuid.uuid4().hex}"
-        _, tmp_path = hadoop_fs(spark, tmp)
-        out = fs.create(tmp_path, True)
-        try:
-            out.write(bytearray(body.encode("utf-8")))
-        finally:
-            out.close()
-        _, cpath = hadoop_fs(
-            spark, f"{cursor_dir}/cursor-{until:012d}.json"
-        )
-        if not fs.rename(tmp_path, cpath):
-            # Another instance already committed this exact window —
-            # idempotent; the cursor is where we wanted it.
-            fs.delete(tmp_path, False)
-        # Prune superseded cursor files (keep a short trail): readers
-        # take the max, so removing older ids never regresses.
-        stale = sorted(committed)[:-3]
-        for sid in stale:
-            _, sp = hadoop_fs(
-                spark, f"{cursor_dir}/cursor-{sid:012d}.json"
-            )
-            fs.delete(sp, False)
-        return until
-
-    # The window's bounds, readable BEFORE committing — until_id is
-    # the epoch / idempotency key a streaming consumer
-    # (stream_changes) hands to its process function; after_id is the
-    # cursor the window resumed from (per-batch metrics).
-    commit.until_id = until
-    commit.after_id = cursor
-    return feed, commit
-
-
-def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
-    """DESCRIBE HISTORY for a snapshot table: one row per committed
-    snapshot — (snapshot_id, n_entries, n_generations, maintenance,
-    partition_col, layout_by, n_columns, added_columns) — from
-    manifest metadata alone (no data reads). ``added_columns`` names
-    the columns this commit introduced over its predecessor: the
-    audit view of the additive-evolution contract."""
-    ids = snapshot_ids(spark, table_dir)
-    if not ids:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    mans = _read_manifests(spark, table_dir, ids)
-    rows = []
-    prev_cols: set[str] = set()
-    for sid in ids:
-        man = mans[sid]
-        cols = [f["name"] for f in man.get("schema") or []]
-        gens = {
-            rel.split("/")[1]
-            for rel in man["entries"].values()
-            if rel.startswith(f"{_DATA_DIR}/")
-        }
-        rows.append(
-            (
-                sid,
-                len(man["entries"]),
-                len(gens),
-                bool(man.get("maintenance")),
-                # Multi-column partitioning renders comma-joined in
-                # the (string) history column.
-                ",".join(_pcols(man.get("partition_col")) or [])
-                or None,
-                man.get("layout_by"),
-                len(cols),
-                sorted(set(cols) - prev_cols) if prev_cols else [],
-                int(man["committed_at_ms"]),
-            )
-        )
-        prev_cols |= set(cols)
-    return spark.createDataFrame(
-        rows,
-        "snapshot_id int, n_entries int, n_generations int, "
-        "maintenance boolean, partition_col string, layout_by string, "
-        "n_columns int, added_columns array<string>, "
-        "committed_at_ms long",
-    )
-
-
-def _owning_entry_rel(
-    file_rel: str, rels_here: set[str], cache: dict[str, str | None]
-) -> str | None:
-    """The deepest live entry rel owning ``file_rel`` (walking parent
-    segments up), or None for a dead leaf of a partially-live
-    generation — THE liveness resolution, shared by read_entries'
-    pruning and metadata_aggregate so the two can never disagree.
-    ``cache`` memoizes per parent dir (caller-owned, per
-    generation)."""
-    parent = file_rel.rsplit("/", 1)[0]
-    if parent not in cache:
-        probe, owner = parent, None
-        while True:
-            if probe in rels_here:
-                owner = probe
-                break
-            if "/" not in probe:
-                break
-            probe = probe.rsplit("/", 1)[0]
-        cache[parent] = owner
-    return cache[parent]
-
-
-def _live_gens(entries: dict[str, str]) -> set[str]:
-    """Live ``s=<id>`` generation names referenced by manifest
-    entries — ONE derivation for commit stats, ANALYZE coverage,
-    metadata aggregates and DESCRIBE DETAIL."""
-    return {
-        rel.split("/")[1]
-        for rel in entries.values()
-        if rel.startswith(f"{_DATA_DIR}/")
-    }
-
-
-def _live_stat_files(
-    man: dict, gen_files: dict[str, dict]
-) -> list[tuple[str, str]]:
-    """(generation, file_rel) for every stats-covered file (per-gen
-    file dicts in ``gen_files``, already lazily loaded) that lies
-    under a LIVE entry — the same parent-walk owner resolution
-    (_owning_entry_rel) read_entries uses, so metadata aggregates and
-    pruned reads agree on liveness (a partially-live partitioned
-    generation keeps only its live leaves)."""
-    live_rels = set(man["entries"].values())
-    out: list[tuple[str, str]] = []
-    for g, files in gen_files.items():
-        prefix = f"{_DATA_DIR}/{g}/"
-        rels_here = {
-            r
-            for r in live_rels
-            if r == f"{_DATA_DIR}/{g}" or r.startswith(prefix)
-        }
-        if not rels_here:
-            continue
-        cache: dict[str, str | None] = {}
-        for file_rel in files or {}:
-            if _owning_entry_rel(file_rel, rels_here, cache) is not None:
-                out.append((g, file_rel))
-    return out
-
-
-def metadata_aggregate(
-    spark: SparkSession,
-    table_dir: str,
-    columns: list[str] | None = None,
-    as_of: int | None = None,
-    partitions: dict | None = None,
-    _man: dict | None = None,
-) -> dict:
-    """COUNT(*), per-column MIN/MAX, and SUM/AVG for integer columns,
-    answered from the manifest plus its per-generation stats sidecars
-    — zero data reads, zero footer opens (the Iceberg/Delta
-    metadata-aggregate trick). Returns
-    ``{"rows": N, "min": {col: value}, "max": {col: value},
-    "sum": {col: int|None}, "avg": {col: float|None},
-    "nonnull": {col: n}, "files": n, "snapshot_id": id,
-    "types": {col: committed type string}}`` with values parsed back
-    to Python types per the committed schema kind.
-
-    SUM/AVG cover only columns whose CURRENT committed type is an
-    integer kind (exact unbounded-int folding; float sums are
-    order-dependent in Spark itself and decimals are refused
-    upstream). A column appears in ``sum``/``avg``/``nonnull`` only
-    when every live file recorded its sum — a column physically
-    absent from some files (added by schema evolution) is left out,
-    since only a real query can NULL-pad it. A per-file decimal(38,0)
-    overflow at sweep time, or a fold total at/beyond 2^63 (where the
-    real query's bigint SUM itself overflows), always raises —
-    exactness over availability. SUM of an all-NULL column is None
-    (SQL semantics); ``avg`` is the exact integer sum divided once in
-    float — identical to Spark for totals inside 2^53, and within one
-    ulp of Spark's double accumulation beyond it.
-
-    REFUSES (ValueError) whenever metadata cannot answer EXACTLY —
-    callers fall back to the real query:
-    - merge-on-read delete vectors present (masked rows would count,
-      and a masked row may hold a column's extreme) — fold_deletes
-      first;
-    - a live file without recorded stats/row counts (a generation
-      committed without stats: run ``analyze_table``);
-    - a requested column outside the recorded stats set, or without
-      footer stats in some file;
-    - a TIMESTAMP partition column (dir values render through the
-      session; other partition columns answer MIN/MAX from the live
-      entry keys themselves — and never enter SUM/AVG).
-    ``columns=None`` aggregates every recorded stats column. An
-    entirely-NULL column returns None min/max (SQL's MIN/MAX over
-    all-NULL). Deleted-but-carried generations never count: liveness
-    follows the same owner walk as pruned reads.
-
-    ``partitions`` ({col: value | list-of-values}, the read_snapshot
-    shape) scopes the whole fold to the MATCHING live entries:
-    ``COUNT(*) ... WHERE date = '2026-08-15'`` on a partitioned fact
-    table answers from the matching partitions' stats alone. Exact because a data file
-    lives entirely inside one partition leaf, so partition-level
-    pruning loses no rows and admits no extras. An empty match
-    returns SQL's empty-aggregate row (0 / NULLs); an unknown or
-    non-partition column refuses (ValueError) like any other
-    unanswerable shape."""
-    import datetime as _dt
-
-    if _man is not None:
-        # Caller already holds the manifest (metadata_group_aggregate
-        # folds many groups off ONE read) — trust it verbatim.
-        man = _man
-    elif as_of is not None:
-        # Time travel: the fold's math works on ANY manifest — a
-        # pinned version's stats sidecars stay referenced (and
-        # vacuum-protected) as long as its manifest is retained. Raises the standard refusal on an expired or
-        # never-committed id so callers fall back to a real query.
-        try:
-            man = read_manifest(spark, table_dir, as_of)
-        except Exception as exc:  # noqa: BLE001 — normalize refusal
-            raise ValueError(
-                f"metadata_aggregate: no readable manifest for "
-                f"snapshot {as_of} under {table_dir!r}"
-            ) from exc
-    else:
-        man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    if man.get("deletes"):
-        raise ValueError(
-            "metadata_aggregate: merge-on-read delete vectors present "
-            "— masked rows would be counted (and could hold extremes); "
-            "run fold_deletes first or use a real query"
-        )
-    entries = man["entries"]
-    if partitions is not None:
-        # Manifest-level partition pruning (the read_snapshot
-        # machinery): the fold below sees only matching entries, so
-        # coverage checks, row counts, MIN/MAX and SUM/AVG all scope
-        # to the selected partitions.
-        entries, _ = select_partition_entries(spark, man, partitions)
-    stats = man.get("stats") or {}
-    stat_cols = stats.get("columns") or []
-    from big_data_spark.io.stats import stat_kind
-
-    # Column validation FIRST — an empty table must refuse unknown /
-    # partition / unanswerable columns exactly like a populated one
-    # (a None "min" for a column that does not exist would read as a
-    # real SQL NULL).
-    cols = list(columns) if columns is not None else list(stat_cols)
-    pcols = set(_pcols(man.get("partition_col")) or [])
-    kinds: dict[str, str] = {}
-    types = {f["name"]: f["type"] for f in man.get("schema") or []}
-    part_cols: list[str] = []
-    for c in cols:
-        if c in pcols:
-            # Partition columns answer MIN/MAX from the ENTRY KEYS
-            # themselves (composing show_partitions' source instead
-            # of refusing): every live entry IS a value occurrence.
-            # Kinds that order reliably from the raw dir strings only; timestamp partition values render
-            # through the session and are refused (rare; loud).
-            k = stat_kind(types.get(c, ""))
-            if k not in ("numeric", "string", "date"):
-                raise ValueError(
-                    f"metadata_aggregate: partition column {c!r} has "
-                    f"type {types.get(c)!r} — only numeric/string/"
-                    "date partition keys order reliably from entry "
-                    "values; use a real query"
-                )
-            kinds[c] = k
-            part_cols.append(c)
-            continue
-        if c not in stat_cols:
-            raise ValueError(
-                f"metadata_aggregate: {c!r} not in the recorded stats "
-                f"columns {stat_cols!r} — run analyze_table with "
-                "stats_columns"
-            )
-        if types.get(c, "").split("(")[0].strip().lower() == "decimal":
-            raise ValueError(
-                f"metadata_aggregate: {c!r} is decimal-typed — the "
-                "stats fold stores doubles, which cannot represent "
-                "every decimal exactly; use a real query"
-            )
-        k = stat_kind(types.get(c, ""))
-        if k is None:
-            raise ValueError(
-                f"metadata_aggregate: column {c!r} has no orderable "
-                "stats kind"
-            )
-        kinds[c] = k
-    int_cols = [
-        c
-        for c in cols
-        if c not in pcols
-        and types.get(c, "").split("(")[0].strip().lower()
-        in _SUM_INT_HEADS
-    ]
-    if not entries:
-        return {
-            "rows": 0,
-            "min": {c: None for c in cols},
-            "max": {c: None for c in cols},
-            "sum": {c: None for c in int_cols},
-            "avg": {c: None for c in int_cols},
-            "nonnull": {c: 0 for c in int_cols},
-            "files": 0,
-            "snapshot_id": man["snapshot_id"],
-            "types": {c: types.get(c) for c in cols},
-        }
-    if not _stats_covered(stats):
-        raise ValueError(
-            "metadata_aggregate: no per-file stats/row counts in the "
-            "manifest — run analyze_table (or commit once) to record "
-            "them"
-        )
-    # Every live data file must be covered by stats AND row counts.
-    if any(
-        not rel.startswith(f"{_DATA_DIR}/")
-        for rel in entries.values()
-    ):
-        raise ValueError(
-            "metadata_aggregate: table has entries outside the "
-            "standard generation layout — stats cannot prove "
-            "coverage; use a real query"
-        )
-    covered_gens = _stats_covered(stats)
-    live_gen_set = _live_gens(entries)
-    if not live_gen_set <= covered_gens:
-        raise ValueError(
-            "metadata_aggregate: generations without recorded stats "
-            f"{sorted(live_gen_set - covered_gens)!r} — "
-            "run analyze_table"
-        )
-    # Load every LIVE generation's stats — for sidecar layouts this
-    # is the one place that reads them all (COUNT(*) needs every
-    # file's row count); each is a small cached JSON, and the
-    # manifest parse itself stayed O(#generations).
-    pre = _prefetch_sidecars(spark, table_dir, stats, live_gen_set)
-    loaded = {
-        g: _load_gen_stats(
-            spark,
-            table_dir,
-            stats,
-            g,
-            man.get("rename_log"),
-            _doc=pre.get(g),
-        )
-        for g in sorted(live_gen_set)
-    }
-    # A covered-but-unloadable generation (its consolidated file lost
-    # this gen's doc: partial replication, hand-restored backup) must
-    # REFUSE — silently dropping the generation from the fold would
-    # serve a wrong COUNT/MIN/MAX while the coverage gate above
-    # passed.
-    torn = [g for g, doc in loaded.items() if doc is None]
-    if torn:
-        raise ValueError(
-            f"metadata_aggregate: generations {torn!r} are referenced "
-            "by the stats block but their recorded docs are missing — "
-            "run analyze_table to re-sweep; use a real query meanwhile"
-        )
-    pman = man if partitions is None else {**man, "entries": entries}
-    live = _live_stat_files(
-        pman,
-        {g: (doc or {}).get("files") or {} for g, doc in loaded.items()},
-    )
-
-    int_heads = {"tinyint", "smallint", "int", "bigint"}
-
-    def parse(k: str, s: str, col: str):
-        if k == "numeric":
-            v = float(s)
-            # doubles hold integers exactly only below 2^53: a
-            # snowflake-style bigint id would silently round —
-            # exactness over availability (review finding).
-            if abs(v) >= 2**53:
-                raise ValueError(
-                    f"metadata_aggregate: {col!r} value {s} exceeds "
-                    "exact double range (2^53) — use a real query"
-                )
-            # Integer-kind columns parse back to Python int — the
-            # contract is "what collect() on the equivalent real query
-            # returns", and a bigint's MIN is 5, not 5.0. The 2^53
-            # refusal above guarantees the intermediate double is
-            # exact.
-            head = types.get(col, "").split("(")[0].strip().lower()
-            if head in int_heads:
-                return int(v)
-            return v
-        if k == "date":
-            return _dt.date.fromisoformat(s)
-        if k == "timestamp":
-            # Stats store canonical naive-UTC; PySpark's collect()
-            # renders session timestamps in the DRIVER's local zone —
-            # convert so metadata and real-query results agree on
-            # non-UTC drivers (review finding).
-            return (
-                _dt.datetime.fromisoformat(s)
-                .replace(tzinfo=_dt.timezone.utc)
-                .astimezone()
-                .replace(tzinfo=None)
-            )
-        if k == "timestamp_ntz":
-            return _dt.datetime.fromisoformat(s)
-        return s
-
-    total = 0
-    mins: dict[str, object] = {c: None for c in cols}
-    maxs: dict[str, object] = {c: None for c in cols}
-    for g, file_rel in live:
-        doc = loaded[g]
-        nr = doc["rows"].get(file_rel)
-        per_col = doc["files"].get(file_rel)
-        if nr is None or per_col is None:
-            raise ValueError(
-                f"metadata_aggregate: live file {file_rel!r} has no "
-                "recorded stats/row count — run analyze_table"
-            )
-        total += int(nr)
-        if int(nr) == 0:
-            continue  # empty file: no row groups, nothing to fold
-        for c in cols:
-            if c in part_cols:
-                continue  # folded from entry keys below
-            v = per_col.get(c)
-            if v == "allnull":
-                continue  # contributes nothing to MIN/MAX (SQL NULLs)
-            if v is None:
-                raise ValueError(
-                    f"metadata_aggregate: file {file_rel!r} has no "
-                    f"usable footer stats for {c!r} — fall back to a "
-                    "real query"
-                )
-            k = kinds[c]
-            lo, hi = parse(k, v[0], c), parse(k, v[1], c)
-            if mins[c] is None or lo < mins[c]:
-                mins[c] = lo
-            if maxs[c] is None or hi > maxs[c]:
-                maxs[c] = hi
-    # Partition-column MIN/MAX from the live entry keys: one parsed
-    # value per LIVE entry — every entry has data by construction
-    # (empty partitions drop out of the manifest).
-    if part_cols:
-        pcols_list = _pcols(man.get("partition_col")) or []
-        for key in entries:
-            vals = entry_partition_values(spark, pcols_list, key)
-            for c in part_cols:
-                pv = parse(kinds[c], vals[c], c)
-                if mins[c] is None or pv < mins[c]:
-                    mins[c] = pv
-                if maxs[c] is None or pv > maxs[c]:
-                    maxs[c] = pv
-    # SUM/AVG fold: exact Python-int accumulation over the per-file
-    # decimal sums; a column is answered only when EVERY live file
-    # recorded it.
-    sums_out: dict[str, object] = {}
-    avg_out: dict[str, object] = {}
-    nnn_out: dict[str, int] = {}
-    for c in int_cols:
-        tot = 0
-        n_tot = 0
-        covered = True
-        for g, file_rel in live:
-            doc = loaded[g]
-            if int(doc["rows"][file_rel]) == 0:
-                continue  # empty file: contributes nothing
-            per_s = doc["sums"].get(file_rel, {})
-            per_n = doc["nonnull"].get(file_rel, {})
-            if c not in per_s or c not in per_n:
-                # The sweep could not record THIS column for THIS
-                # file (physically absent: added by a later schema
-                # evolution) — no maintenance can conjure the values;
-                # only a real query (NULL-padding the column) answers.
-                covered = False
-                break
-            n = int(per_n[c])
-            s = per_s[c]
-            if n == 0:
-                continue  # all-null column in this file
-            if s is None:
-                raise ValueError(
-                    f"metadata_aggregate: {c!r} overflowed the exact "
-                    f"sum range in file {file_rel!r} at sweep time — "
-                    "use a real query"
-                )
-            tot += int(s)
-            n_tot += n
-        if not covered:
-            continue  # omitted: metadata cannot answer this column
-        if n_tot == 0:
-            sums_out[c] = None  # SQL SUM/AVG over all NULLs
-            avg_out[c] = None
-            nnn_out[c] = 0
-            continue
-        if abs(tot) >= 2**63:
-            # The real query's bigint SUM would overflow here too —
-            # both sides must go through a wider explicit cast.
-            raise ValueError(
-                f"metadata_aggregate: SUM({c!r}) = {tot} exceeds "
-                "bigint range — use a real query with a decimal cast"
-            )
-        sums_out[c] = tot
-        avg_out[c] = float(tot) / n_tot
-        nnn_out[c] = n_tot
-    return {
-        "rows": total,
-        "min": mins,
-        "max": maxs,
-        "sum": sums_out,
-        "avg": avg_out,
-        "nonnull": nnn_out,
-        "files": len(live),
-        "snapshot_id": man["snapshot_id"],
-        # Committed type per requested column — callers rendering the
-        # answer as a literal row (the SQL-door fast path) need the
-        # exact output dtype of the equivalent real aggregate.
-        "types": {c: types.get(c) for c in cols},
-    }
-
-
-def metadata_group_aggregate(
-    spark: SparkSession,
-    table_dir: str,
-    group_cols: list[str],
-    columns: list[str] | None = None,
-    partitions: dict | None = None,
-    as_of: int | None = None,
-    _man: dict | None = None,
-) -> dict:
-    """Partition-wise GROUP BY rollup from metadata only (round 14):
-    one ``metadata_aggregate`` result PER DISTINCT live combination
-    of ``group_cols`` values — ``SELECT date, COUNT(*), MAX(v) FROM t
-    GROUP BY date`` without touching a data file (the Iceberg
-    partition-stats planning shape). ``group_cols`` must be partition
-    columns; ``partitions`` pre-filters the entries exactly like
-    ``metadata_aggregate(partitions=)`` (the WHERE clause). Returns
-    ``{"groups": [{"values": {col: raw str}, "agg": <dict>}...],
-    "snapshot_id": id}`` with groups sorted by their raw key values
-    for determinism; the typed group-key value is ``agg["min"][col]``
-    when ``col`` is requested in ``columns`` (one partition value per
-    group, so min == max == the key).
-
-    REFUSES (ValueError) whenever any group's fold refuses — the
-    all-or-nothing contract callers need to fall back to one real
-    query. Cost: ONE manifest read (or zero with ``_man``), ONE pass
-    over the entry keys to bucket them per group, each generation's
-    sidecar read once (process cache), then per-group dict folds
-    over each group's OWN pre-filtered entries — per-group work is
-    bounded by the files of the generations that own that partition,
-    never a rescan of the full entry map per group. No data reads."""
-    if _man is not None:
-        man = _man
-    elif as_of is not None:
-        try:
-            man = read_manifest(spark, table_dir, as_of)
-        except Exception as exc:  # noqa: BLE001 — normalize refusal
-            raise ValueError(
-                f"metadata_group_aggregate: no readable manifest for "
-                f"snapshot {as_of} under {table_dir!r}"
-            ) from exc
-    else:
-        man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    pcols = _pcols(man.get("partition_col")) or []
-    unknown = sorted(set(group_cols) - set(pcols))
-    if unknown:
-        raise ValueError(
-            f"metadata_group_aggregate: {unknown} not in the table's "
-            f"partition columns {pcols!r} — only partition-wise "
-            "rollups answer from metadata; use a real query"
-        )
-    entries = man["entries"]
-    if partitions is not None:
-        entries, _ = select_partition_entries(spark, man, partitions)
-    groups: dict[tuple, dict[str, str]] = {}
-    group_entries: dict[tuple, dict[str, str]] = {}
-    for key, rel in entries.items():
-        vals = entry_partition_values(spark, pcols, key)
-        gkey = tuple(vals[c] for c in group_cols)
-        groups.setdefault(gkey, {c: vals[c] for c in group_cols})
-        group_entries.setdefault(gkey, {})[key] = rel
-    out = []
-    for gkey in sorted(groups):
-        # Each group's fold sees ONLY its own already-bucketed
-        # entries (threaded through the manifest-reuse door), so the
-        # per-group cost never includes re-filtering the full entry
-        # map (review r14).
-        agg = metadata_aggregate(
-            spark,
-            table_dir,
-            columns=columns,
-            _man={**man, "entries": group_entries[gkey]},
-        )
-        out.append({"values": groups[gkey], "agg": agg})
-    return {"groups": out, "snapshot_id": man["snapshot_id"]}
-
-
-def show_partitions(spark: SparkSession, table_dir: str) -> DataFrame:
-    """SHOW PARTITIONS for a snapshot table: one row per LIVE
-    partition leaf — the partition columns cast to the COMMITTED
-    schema types (a '00123' string key stays '00123'), plus n_files /
-    total_bytes so a user can spot skewed or fragmented leaves at a
-    glance. Values come from manifest entry keys, counts from listing
-    only live entry dirs — O(live files) driver metadata, no data
-    reads. Spark's own SHOW PARTITIONS cannot answer this for these
-    tables (they register as temp views), and like Spark it refuses
-    unpartitioned tables loudly."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    pcols = _pcols(man.get("partition_col"))
-    if pcols is None:
-        raise ValueError(
-            f"SHOW PARTITIONS: table at {table_dir!r} is not "
-            "partitioned"
-        )
-    fs, _ = hadoop_fs(spark, table_dir)
-    agg: dict[tuple, list[int]] = {}
-    for key, rel in man["entries"].items():
-        vals = entry_partition_values(spark, pcols, key)
-        vkey = tuple(vals[c] for c in pcols)
-        cur = agg.setdefault(vkey, [0, 0])
-        _, p = hadoop_fs(spark, f"{table_dir}/{rel}")
-        if not fs.exists(p):
-            continue
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue
-            cur[0] += 1
-            cur[1] += st.getLen()
-    types = {
-        f["name"]: f["type"] for f in man.get("schema") or []
-    }
-    rows = [
-        (*vkey, int(n), int(b))
-        for vkey, (n, b) in sorted(agg.items())
-    ]
-    ddl = ", ".join(f"`{c}` string" for c in pcols)
-    out = spark.createDataFrame(
-        rows, f"{ddl}, n_files long, total_bytes long"
-    )
-    return out.select(
-        *[
-            F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
-            for c in pcols
-        ],
-        "n_files",
-        "total_bytes",
-    )
-
-
-def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
-    """DESCRIBE DETAIL for a snapshot table (Delta's spelling): ONE
-    row summarizing the CURRENT version — location, snapshot id,
-    commit timestamp, partition columns, entry/generation counts,
-    live data file count + total bytes, delete-vector / row-CDF
-    presence, stats coverage (generations with manifest-embedded
-    column stats / total), tag count, schema column count. File
-    counts come from listing only the LIVE entry dirs — O(live files)
-    driver metadata, no data reads."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    fs, _ = hadoop_fs(spark, table_dir)
-    n_files = 0
-    total_bytes = 0
-    for rel in sorted(set(man["entries"].values())):
-        _, p = hadoop_fs(spark, f"{table_dir}/{rel}")
-        if not fs.exists(p):
-            continue
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue
-            n_files += 1
-            total_bytes += st.getLen()
-    gens = {
-        rel.split("/")[1]
-        for rel in man["entries"].values()
-        if rel.startswith(f"{_DATA_DIR}/")
-    }
-    stats = man.get("stats") or {}
-    covered = len(_stats_covered(stats) & gens)
-    # Distinct sidecar FILES serving the live generations: the
-    # fragmentation signal behind metadata-aggregate latency —
-    # `consolidate_stats`/`ANALYZE` folds a large count to 1. Cheap: manifest values only, nothing loaded.
-    side = stats.get("sidecars") or {}
-    live_rels = {side[g] for g in side if g in gens}
-    n_side_files = len(live_rels)
-    # Consolidated SHARDS among them: a user reading WHY a
-    # metadata aggregate is slow (or refused) sees the shard/loose
-    # split at a glance — many loose files = consolidation due.
-    n_shards = sum(
-        1
-        for r in live_rels
-        if r.rsplit("/", 1)[-1].startswith("consolidated-")
-    )
-    # SUM/AVG coverage: live generations whose sidecar docs load (a
-    # doc lost from its consolidated shard refuses SUM/AVG until
-    # ANALYZE re-sweeps it). DESCRIBE is the diagnostic surface, so
-    # the O(live generations) cached loads are its job (same trade
-    # analyze_table makes).
-    sums_covered = sum(
-        _load_gen_stats(spark, table_dir, stats, g) is not None
-        for g in sorted(_stats_covered(stats) & gens)
-    )
-    row = (
-        table_dir,
-        int(man["snapshot_id"]),
-        int(man["committed_at_ms"]),
-        _pcols(man.get("partition_col")) or [],
-        man.get("layout_by"),
-        len(man["entries"]),
-        len(gens),
-        int(n_files),
-        int(total_bytes),
-        len(man.get("deletes") or []),
-        bool(man.get("cdf")),
-        covered,
-        list(stats.get("columns") or []),
-        n_side_files,
-        n_shards,
-        sums_covered,
-        len(list_tags(spark, table_dir)),
-        len(man.get("schema") or []),
-    )
-    return spark.createDataFrame(
-        [row],
-        "location string, snapshot_id int, committed_at_ms long, "
-        "partition_columns array<string>, layout_by string, "
-        "n_entries int, n_generations int, n_data_files int, "
-        "total_bytes long, n_delete_vectors int, has_row_cdf boolean, "
-        "stats_covered_generations int, stats_columns array<string>, "
-        "stats_sidecar_files int, stats_consolidated_shards int, "
-        "sums_covered_generations int, "
-        "n_tags int, n_columns int",
-    )
-
-
-def generation_dir(table_dir: str, snapshot_id: int) -> str:
-    return f"{table_dir}/{_DATA_DIR}/s={snapshot_id}"
-
-
-def clear_generation(
-    spark: SparkSession, table_dir: str, snapshot_id: int
-) -> str:
-    """Delete any half-written data generation from a crashed prior
-    attempt of the same snapshot id — call before rewriting it."""
-    gdir = generation_dir(table_dir, snapshot_id)
-    fs, hpath = hadoop_fs(spark, gdir)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-    return gdir
-
-
-def _generation_has_data(spark: SparkSession, gdir: str) -> bool:
-    """True if any data file (non-hidden, non-marker) exists anywhere
-    under the generation dir — driver-side metadata listing only."""
-    fs, hpath = hadoop_fs(spark, gdir)
-    if not fs.exists(hpath):
-        return False
-    stack = [hpath]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            # Spark's hidden-path rule: "." always hidden; "_" hidden
-            # unless it's a partition dir (contains "=", e.g. _bb=3).
-            if name.startswith(".") or (
-                name.startswith("_") and "=" not in name
-            ):
-                continue
-            if st.isDirectory():
-                stack.append(st.getPath())
-            else:
-                return True
-    return False
-
-
-def _stage_and_claim(
-    spark: SparkSession,
-    table_dir: str,
-    snapshot_id: int,
-    write_fn,
-    dest_rel: str | None = None,
-) -> str | None:
-    """Write a new data generation CONTENTION-FREE to a private
-    ``_staging`` dir, then CLAIM its destination (``_data/s=<id>``,
-    or ``dest_rel``) with ONE atomic rename — the same dir-claim
-    protocol append_with_retry uses. The rewrite paths (DML,
-    fold_deletes, bin-pack) previously used clear_generation's
-    delete-then-write, which could delete a concurrent retry-
-    appender's claimed-but-uncommitted dir and leave the appender's
-    committed manifest pointing at foreign data (round-8 advice,
-    medium). Returns the claimed dir, or None when the staged write
-    produced no data files (staging removed, nothing claimed). An
-    existing destination raises SnapshotConflict: an in-flight writer
-    holds it, or a crashed claimant left it — vacuum_snapshots
-    reclaims such orphans after its staging TTL."""
-    staging = f"{table_dir}/_staging/{uuid.uuid4().hex}"
-    write_fn(staging)
-    fs, staging_path = hadoop_fs(spark, staging)
-    if not _generation_has_data(spark, staging):
-        fs.delete(staging_path, True)
-        return None
-    dest = (
-        f"{table_dir}/{dest_rel}"
-        if dest_rel
-        else generation_dir(table_dir, snapshot_id)
-    )
-    _, parent = hadoop_fs(spark, dest.rsplit("/", 1)[0])
-    fs.mkdirs(parent)  # rename needs the parent to exist
-    _, dest_path = hadoop_fs(spark, dest)
-    if fs.exists(dest_path) or not fs.rename(staging_path, dest_path):
-        fs.delete(staging_path, True)
-        raise SnapshotConflict(
-            f"{dest_rel or f'generation dir s={snapshot_id}'} under "
-            f"{table_dir!r} is held by another writer (or a crash "
-            "orphan — vacuum reclaims it after the staging TTL)"
-        )
-    _refresh_claim_mtime(spark, fs, dest_path)
-    return dest
-
-
-def _unclaim(spark: SparkSession, dest: str | None) -> None:
-    """Drop a dir claimed by _stage_and_claim after losing the
-    manifest race — the data is ours and uncommitted, so deleting it
-    can never orphan a committed entry (the race winner never wrote
-    into a dir we hold)."""
-    if dest is None:
-        return
-    fs, p = hadoop_fs(spark, dest)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def _check_layout_compatible(
-    new_layout: str | None, prev_layout: str | None, origin: str
-) -> None:
-    """Refuse an APPEND whose hive layout differs from the table's
-    declared one: a single layout_by cannot represent a mixed-layout
-    table, and silently replacing the declared column would un-skip
-    DML range hints on the old layout column (whose values live only
-    in dir names) and crash the footer sweep. Full rewrites
-    (write_snapshot / compact) re-declare the layout on purpose."""
-    if (
-        new_layout is not None
-        and prev_layout is not None
-        and new_layout != prev_layout
-    ):
-        raise ValueError(
-            f"{origin}: batch partitioned on {new_layout!r} but the "
-            f"table's declared layout is {prev_layout!r} — a "
-            "mixed-layout append is unrepresentable; use the "
-            "table's layout or re-layout with a full rewrite."
-        )
-
-
-def write_snapshot(
-    df: DataFrame,
-    table_dir: str,
-    snapshot_id: int | None = None,
-    replace: bool = False,
-    partition_by: str | None = None,
-    maintenance: bool = False,
-    claim: bool = False,
-    stats_columns: list[str] | None = None,
-) -> int:
-    """Full-table publish: write ``df`` as a fresh data generation,
-    then commit a manifest pointing only at it. Readers see the old
-    table until the commit, the new one after — never a mix; a crash
-    before the commit leaves the table untouched.
-
-    ``snapshot_id`` defaults to latest+1 (0 for a new table). Pass an
-    explicit id + ``replace=True`` only from deterministic replay
-    loops (foreachBatch). ``partition_by`` hive-partitions the
-    generation layout (same contract as append_snapshot's).
-
-    ``claim=True`` routes the write through the staged-rename dir
-    claim (_stage_and_claim) instead of clear_generation — required
-    of any writer that may run CONCURRENTLY with append_with_retry
-    (maintenance/compaction); the default delete-then-write path is
-    for single-writer / deterministic-replay callers, which need a
-    crashed same-id attempt overwritten, not refused.
-    """
-    spark = df.sparkSession
-    if snapshot_id is None:
-        ids = snapshot_ids(spark, table_dir)
-        snapshot_id = (ids[-1] + 1) if ids else 0
-    fields = _schema_fields(df)
-    prev = latest_manifest(spark, table_dir, below=snapshot_id)
-    check_schema_evolution((prev or {}).get("schema"), fields)
-
-    def _write(to: str) -> None:
-        writer = df.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(to)
-
-    if claim:
-        gdir = _stage_and_claim(spark, table_dir, snapshot_id, _write)
-        has = gdir is not None
-    else:
-        gdir = clear_generation(spark, table_dir, snapshot_id)
-        _write(gdir)
-        has = _generation_has_data(spark, gdir)
-    entries = {"": f"{_DATA_DIR}/s={snapshot_id}"} if has else {}
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            snapshot_id,
-            entries,
-            replace=replace,
-            schema_fields=fields,
-            layout_by=partition_by,
-            maintenance=maintenance,
-            prev_man=prev,
-            stats_columns=stats_columns,
-        )
-    except SnapshotConflict:
-        if claim:
-            _unclaim(spark, gdir if has else None)
-        raise
-    return snapshot_id
-
-
-def append_snapshot(
-    df: DataFrame,
-    table_dir: str,
-    snapshot_id: int | None = None,
-    replace: bool = False,
-    partition_by: str | None = None,
-) -> int:
-    """Append-only publish: write ``df`` as a fresh data generation
-    and commit a manifest keeping EVERY predecessor entry plus the new
-    generation — the incremental-index primitive (per-batch cost is
-    O(batch), never a rewrite of prior generations; compaction
-    (io/compact.py compact_snapshot) folds generations back together
-    when the union fan-in grows).
-
-    Same replay contract as write_snapshot_partial: pass the batch id
-    as ``snapshot_id`` (+ ``replace=True``) from deterministic replay
-    loops — the predecessor is the newest manifest STRICTLY BELOW the
-    id, so recomputing a crashed batch converges. Refuses a
-    hive-partitioned predecessor (mixing per-partition entries with
-    whole-generation appends would double-count touched partitions).
-
-    ``partition_by`` lays each generation out hive-partitioned on one
-    column WITHOUT changing the manifest contract (the entry still
-    names the whole generation; the manifest's ``partition_col``
-    stays None because entries are not keyed by partition): readers
-    filtering on that column get partition pruning inside every
-    generation — the band-index probe pattern
-    (streaming/neardup_ingest.py).
-    """
-    spark = df.sparkSession
-    if snapshot_id is None:
-        ids = snapshot_ids(spark, table_dir)
-        snapshot_id = (ids[-1] + 1) if ids else 0
-    prev = latest_manifest(spark, table_dir, below=snapshot_id)
-    if prev is not None and prev.get("partition_col") is not None:
-        raise ValueError(
-            "append_snapshot on a table partitioned on "
-            f"{prev['partition_col']!r} — appends are whole-generation "
-            "entries; use write_snapshot_partial for partitioned tables."
-        )
-    fields = _schema_fields(df)
-    check_schema_evolution((prev or {}).get("schema"), fields)
-    _check_layout_compatible(
-        partition_by, (prev or {}).get("layout_by"), "append_snapshot"
-    )
-    entries = dict(prev["entries"]) if prev else {}
-    gdir = clear_generation(spark, table_dir, snapshot_id)
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(gdir)
-    if _generation_has_data(spark, gdir):
-        entries[f"b{snapshot_id}"] = f"{_DATA_DIR}/s={snapshot_id}"
-    else:
-        # An empty df under partitionBy writes NO part files (dynamic
-        # partition dirs only materialize for existing rows); an entry
-        # pointing at that dir would poison every later read with
-        # UNABLE_TO_INFER_SCHEMA. Commit the manifest anyway — the id
-        # advances and replay converges — just without a new entry.
-        clear_generation(spark, table_dir, snapshot_id)
-    commit_manifest(
-        spark,
-        table_dir,
-        snapshot_id,
-        entries,
-        replace=replace,
-        schema_fields=fields,
-        # Carry the layout forward so a plain (or empty) append never
-        # erases the table's declared layout from maintenance's view.
-        layout_by=partition_by or (prev or {}).get("layout_by"),
-        # Appends never touch existing rows: prior delete vectors
-        # keep masking exactly the rows they masked, and the rename
-        # log keeps mapping pre-evolution generations.
-        deletes=(prev or {}).get("deletes"),
-        rename_log=(prev or {}).get("rename_log"),
-        prev_man=prev,
-    )
-    return snapshot_id
-
-
-def append_with_retry(
-    df: DataFrame,
-    table_dir: str,
-    partition_by: str | None = None,
-    attempts: int = 5,
-) -> int:
-    """Multi-writer append: commit with RETRY-AND-REBASE instead of
-    append_snapshot's first-committer-wins failure (round-7 verdict
-    gap #4 — two independent appenders couldn't both land without
-    caller-side logic).
-
-    The data is written ONCE to a private ``_staging/<uuid>`` dir (no
-    contention), then each attempt claims the next id by atomically
-    RENAMING the staged dir to ``_data/s=<id>`` — rename refuses an
-    existing destination, so two retry-writers can never interleave
-    into one generation dir — and commits a manifest rebased on the
-    freshest predecessor. Losing a race at either step (dir claim or
-    manifest rename) rebases and retries with the data untouched: a
-    retry costs a directory rename, never a data rewrite.
-
-    Concurrency contract (RUNBOOK): concurrent appenders on one table
-    should ALL use this helper. Plain ``append_snapshot`` writes
-    straight into ``_data/s=<id>`` and stays the single-writer /
-    deterministic-replay path — mixing it with concurrent retry
-    appenders can collide inside a generation dir before any commit.
-    A crashed writer's staged dir is invisible to readers and falls
-    to ``vacuum_snapshots`` (staging is unreferenced by manifests).
-    """
-    spark = df.sparkSession
-    fields = _schema_fields(df)
-    staging = f"{table_dir}/_staging/{uuid.uuid4().hex}"
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(staging)
-
-    def build(prev, sid, has_data):
-        if prev is not None and prev.get("partition_col") is not None:
-            raise ValueError(
-                "append_with_retry on a table partitioned on "
-                f"{prev['partition_col']!r} — appends are whole-"
-                "generation entries; use write_snapshot_partial (or "
-                "stage_snapshot/publish_staged, which reconcile per "
-                "partition) for partitioned tables."
-            )
-        entries = dict(prev["entries"]) if prev else {}
-        _check_layout_compatible(
-            partition_by, (prev or {}).get("layout_by"), "append_with_retry"
-        )
-        if has_data:
-            entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
-        kwargs = {
-            "layout_by": partition_by or (prev or {}).get("layout_by"),
-            "deletes": (prev or {}).get("deletes"),
-            "rename_log": (prev or {}).get("rename_log"),
-        }
-        return entries, kwargs
-
-    return _claim_commit_loop(
-        spark, table_dir, staging, fields, attempts, build,
-        "append_with_retry",
-    )
-
-
-def write_snapshot_partial(
-    df: DataFrame,
-    table_dir: str,
-    snapshot_id: int,
-    partition_col: str | list[str],
-    touched_keys: list,
-    replace: bool = False,
-    maintenance: bool = False,
-    deletes: list[str] | None | str = "carry",
-    rename_log: list | None | str = "carry",
-    claim: bool = False,
-    cdf: str | None = None,
-    stats_columns: list[str] | None = None,
-) -> None:
-    """Partial publish for a partitioned table: ``df`` holds the NEW
-    full contents of exactly the ``touched_keys`` partitions (its
-    ``partition_col`` values must be a subset of them). Untouched
-    partitions carry forward from the predecessor manifest by
-    reference — no data movement. A touched partition that ends up
-    with no rows simply drops out of the manifest: atomically-visible
-    partition deletion, no stale files, no empty-dir sentinel.
-
-    ``partition_col`` may be an ordered LIST of columns (round 11):
-    the table then partitions hive-style on every column — (date,
-    region) fact layouts — with one manifest entry per leaf
-    combination, keyed by the escaped ``c1=v1/c2=v2`` suffix
-    (:func:`partition_entry_key`). ``touched_keys`` elements are then
-    ordered value tuples (or canonical key strings, the form DML
-    hands back from the entry map); single-column tables keep the
-    legacy scalar keys and raw-value entry format unchanged.
-
-    ``deletes`` / ``rename_log`` default to ``"carry"``: the
-    predecessor's delete vectors and evolution log carry forward, so
-    a caller that doesn't manage them (the CDC mirrors, any ad-hoc
-    partial write) can never silently RESURRECT merge-on-read-deleted
-    rows of carried partitions or strip the schema-evolution replay
-    (found by the round-10 model walk: a partial write after a MOR
-    delete brought the masked rows back). Touched partitions' vector
-    rows go inert with their replaced generations. Pass ``None``
-    explicitly to clear — only correct when the written content
-    already materialized the masks and current names (fold_deletes,
-    compaction).
-
-    The replay contract mirrors foreachBatch: the predecessor is the
-    newest manifest STRICTLY BELOW ``snapshot_id``, so recomputing a
-    crashed (or even already-committed) snapshot id from the same
-    inputs converges to the same table.
-    """
-    spark = df.sparkSession
-    pcols = _pcols(partition_col)
-    prev = latest_manifest(spark, table_dir, below=snapshot_id)
-    deletes = _resolve_carry(deletes, prev, "deletes")
-    rename_log = _resolve_carry(rename_log, prev, "rename_log")
-    fields = _schema_fields(df)
-    check_schema_evolution((prev or {}).get("schema"), fields)
-    # Layout-compatibility gate (round-6 advice): carrying forward a
-    # predecessor that is unpartitioned (a "" whole-table entry from
-    # write_snapshot/merge_snapshot) or partitioned on DIFFERENT
-    # columns would leave the old generation live alongside the new
-    # per-partition entries — readers would silently see duplicate /
-    # stale rows for every touched partition. Force the explicit
-    # full rewrite instead.
-    if prev is not None:
-        prev_cols = _pcols(prev.get("partition_col"))
-        if "" in prev["entries"] or prev_cols != pcols:
-            raise ValueError(
-                "write_snapshot_partial on a table whose current "
-                f"snapshot is {'unpartitioned' if '' in prev['entries'] else f'partitioned on {prev_cols!r}'} "
-                f"(requested partition_col={partition_col!r}) — a "
-                "partial write cannot atomically re-layout; publish a "
-                "full write_snapshot of the re-partitioned table first."
-            )
-    # Canonicalize touched keys up front (scalars / value tuples /
-    # canonical strings): raises on nulls and wrong arity before any
-    # data is written.
-    canon_keys = [
-        partition_entry_key(spark, pcols, k) for k in touched_keys
-    ]
-    entries = dict(prev["entries"]) if prev else {}
-    if claim:
-        gdir = _stage_and_claim(
-            spark,
-            table_dir,
-            snapshot_id,
-            lambda to: df.write.mode("error")
-            .partitionBy(*pcols)
-            .parquet(to),
-        )
-    else:
-        gdir = clear_generation(spark, table_dir, snapshot_id)
-        df.write.mode("error").partitionBy(*pcols).parquet(gdir)
-    # Written dir names are hive-ESCAPED (%, /, ':', '=', ... become
-    # %XX); single-column entry keys are the RAW partition values and
-    # multi-column keys the escaped suffix, so the reconcile below
-    # (pop canonical key / insert written key) stays consistent for
-    # values Spark escapes (round-6 advice).
-    try:
-        written: dict[str, str] = (
-            _walk_partition_leaves(spark, gdir, pcols) if gdir else {}
-        )
-    except ValueError:
-        # Null partition values in df (caller bug — the touched_keys
-        # contract): release the claimed dir before raising so the
-        # loud refusal doesn't also orphan a generation claim.
-        if claim:
-            _unclaim(spark, gdir)
-        raise
-    for key in canon_keys:
-        entries.pop(key, None)
-    for key, suffix in written.items():
-        entries[key] = posixpath.join(
-            _DATA_DIR, f"s={snapshot_id}", suffix
-        )
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            snapshot_id,
-            entries,
-            partition_col=partition_col,
-            replace=replace,
-            schema_fields=fields,
-            maintenance=maintenance,
-            deletes=deletes,
-            rename_log=rename_log,
-            prev_man=prev,
-            cdf=cdf,
-            stats_columns=stats_columns,
-        )
-    except SnapshotConflict:
-        if claim:
-            _unclaim(spark, gdir)
-        raise
-
-
-def repartition_table(
-    spark: SparkSession,
-    table_dir: str,
-    partition_by: str | list[str] | None,
-) -> dict:
-    """Partition-SPEC evolution as ONE explicit, atomic maintenance
-    rewrite (round-12 directive #4 — option b, decided over Iceberg's
-    metadata-forward per-generation specs): read the current
-    snapshot, rewrite it hive-partitioned on the NEW column list (or
-    unpartitioned for None), and publish with a single manifest
-    rename carrying the new ``partition_col``.
-
-    Why the rewrite, not metadata-forward: manifests here key ENTRIES
-    by partition value, and partial replaces / WAP / DML reconcile
-    against those keys — generations keyed under two specs at once
-    would make "replace partition (ds=1, region=eu)" ambiguous
-    against an old ds=1 entry that spans every region. Iceberg avoids
-    the rewrite via field-id partition specs per manifest file, at
-    the cost of per-spec split planning and residual-filter
-    complexity on every read. This engine already carries the spec
-    PER MANIFEST, so history is naturally preserved: time travel to
-    pre-change versions reads (and prunes) under their own old spec,
-    with zero read-side reconciliation code. The rewrite cost is
-    explicit, one-shot, and O(table) — the same bill Iceberg defers
-    to its slow path; a 100 TB table pays it as one partitioned
-    distributed write.
-
-    Contract: content is UNCHANGED (the change feed skips the commit
-    — maintenance=True); merge-on-read delete vectors are
-    materialized into the rewrite and cleared; the evolution log is
-    cleared (files are written in current names); stats re-derive for
-    the new layout (recorded columns minus the new partition
-    columns). Concurrent commits during the rewrite lose nothing:
-    the id is derived from the manifest read BEFORE the rewrite, so
-    a racing writer makes this raise SnapshotConflict — retry.
-    Returns {snapshot_id, partition_col, n_entries}."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        raise ValueError(f"no committed snapshots under {table_dir!r}")
-    new_pcols = _pcols(partition_by)
-    cur_pcols = _pcols(man.get("partition_col"))
-    if new_pcols == cur_pcols and not (
-        new_pcols is None and man.get("layout_by")
-    ):
-        raise ValueError(
-            f"repartition_table: table is already partitioned on "
-            f"{cur_pcols!r} — nothing to change"
-        )
-    next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
-    prev_stats = man.get("stats")
-    if prev_stats:
-        # Keep an EMPTY filtered list as [] (meaning: record no
-        # stats), never collapse it to None: None means "derive
-        # defaults", and _auto_commit_stats would fall back to
-        # prev_stats['columns'] — re-recording stats for the very
-        # partition columns this filter excludes (footerless in the
-        # hive-partitioned data files; round-12 advice).
-        stats_columns = [
-            c
-            for c in prev_stats["columns"]
-            if c not in set(new_pcols or [])
-        ]
-    else:
-        stats_columns = None
-    if not man["entries"]:
-        # Fully-emptied table: the spec change is pure metadata.
-        commit_manifest(
-            spark,
-            table_dir,
-            next_id,
-            {},
-            partition_col=partition_by,
-            schema_fields=man.get("schema"),
-            maintenance=True,
-            deletes=None,
-            rename_log=None,
-            prev_man=man,
-            stats_columns=stats_columns,
-        )
-        return {
-            "snapshot_id": next_id,
-            "partition_col": new_pcols,
-            "n_entries": 0,
-        }
-    df = read_snapshot(spark, table_dir, as_of=man["snapshot_id"])
-    fields = _schema_fields(df)
-    if new_pcols:
-        missing = [c for c in new_pcols if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"repartition_table: partition column(s) {missing} "
-                f"not in the table's columns {df.columns}"
-            )
-        gdir = _stage_and_claim(
-            spark,
-            table_dir,
-            next_id,
-            lambda to: df.write.mode("error")
-            .partitionBy(*new_pcols)
-            .parquet(to),
-        )
-        try:
-            written = (
-                _walk_partition_leaves(spark, gdir, new_pcols)
-                if gdir
-                else {}
-            )
-        except ValueError:
-            # NULL partition values: loud refusal, claim released.
-            _unclaim(spark, gdir)
-            raise
-        entries = {
-            key: posixpath.join(_DATA_DIR, f"s={next_id}", suffix)
-            for key, suffix in written.items()
-        }
-    else:
-        gdir = _stage_and_claim(
-            spark,
-            table_dir,
-            next_id,
-            lambda to: df.write.mode("error").parquet(to),
-        )
-        entries = (
-            {"": f"{_DATA_DIR}/s={next_id}"} if gdir is not None else {}
-        )
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            next_id,
-            entries,
-            partition_col=partition_by,
-            schema_fields=fields,
-            maintenance=True,
-            deletes=None,
-            rename_log=None,
-            prev_man=man,
-            stats_columns=stats_columns,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir if entries else None)
-        raise
-    return {
-        "snapshot_id": next_id,
-        "partition_col": new_pcols,
-        "n_entries": len(entries),
-    }
-
-
-def _resolve_carry(value, prev: dict | None, key: str):
-    """Resolve a ``"carry"``-defaulted manifest-metadata parameter:
-    the sentinel takes the predecessor's value, a list/None is used
-    verbatim, anything else is refused loudly."""
-    if isinstance(value, str):
-        if value != "carry":
-            raise ValueError(f"{key} must be a list, None or 'carry'")
-        return (prev or {}).get(key)
-    return value
-
-
-def vacuum_snapshots(
-    spark: SparkSession,
-    table_dir: str,
-    keep_last: int = 2,
-    staging_ttl_hours: float = 24.0,
-    retain_hours: float | None = None,
-) -> dict:
-    """Expire all but the newest ``keep_last`` manifests and delete
-    data generations no kept manifest references. ``keep_last >= 2``
-    so a replayed batch can still read its predecessor; larger values
-    keep time travel. ``retain_hours`` (round 11, Delta's retention
-    spelling) ADDITIONALLY keeps every version committed inside the
-    trailing window — commit-count and wall-clock retention compose,
-    a version expires only when it fails BOTH. ``_staging`` dirs
-    (append_with_retry) older than ``staging_ttl_hours`` are crash
-    residue and reclaimed; the TTL protects live writers mid-stage."""
-    if keep_last < 2:
-        raise ValueError("keep_last must be >= 2 (replay reads n-1)")
-    ids = snapshot_ids(spark, table_dir)
-    # Tagged snapshots are PINNED: their manifests stay readable and
-    # their generations/vectors stay live past the keep_last window —
-    # delete_tag releases them to the next vacuum.
-    tagged = set(list_tags(spark, table_dir).values())
-    expired = [i for i in ids[:-keep_last] if i not in tagged]
-    retained_mans: dict[int, dict] = {}
-    if retain_hours is not None and expired:
-        import time as _rt
-
-        horizon_ms = (_rt.time() - retain_hours * 3600) * 1000
-        cand = _read_manifests(spark, table_dir, expired)
-        # Keep the rescued manifests in hand — the _mark_live pass
-        # below would otherwise re-read every one of them from
-        # storage (the exact many-recent-versions case retain_hours
-        # exists for).
-        retained_mans = {
-            sid: man
-            for sid, man in cand.items()
-            if int(man["committed_at_ms"]) >= horizon_ms
-        }
-        expired = [i for i in expired if i not in retained_mans]
-    kept = [i for i in ids if i not in set(expired)]
-    newest = ids[-1] if ids else -1
-    live_gens = set()
-    live_deletes = set()
-    live_cdf = set()
-    live_sidecars = set()
-    def _mark_live(man: dict) -> None:
-        for rel in man["entries"].values():
-            parts = rel.split("/")
-            if parts[0] == _DATA_DIR:
-                live_gens.add(parts[1])
-        for rel in man.get("deletes") or []:
-            live_deletes.add(rel.split("/")[1])
-        if man.get("cdf"):
-            live_cdf.add(man["cdf"].split("/")[1])
-        for rel in (
-            (man.get("stats") or {}).get("sidecars") or {}
-        ).values():
-            live_sidecars.add(rel.rsplit("/", 1)[-1])
-
-    for man in {
-        **_read_manifests(
-            spark,
-            table_dir,
-            [i for i in kept if i not in retained_mans],
-        ),
-        **retained_mans,
-    }.values():
-        _mark_live(man)
-    # Close the pin-vs-vacuum race from THIS side (round-9 verdict
-    # directive #5): re-read the tags AFTER computing the kill list —
-    # a pin that landed since the first read pulls its id back into
-    # the kept set before anything is deleted. tag_snapshot's own
-    # post-pin manifest check covers the opposite interleaving, so
-    # the only remaining window is a pin landing between this line
-    # and the manifest delete below — the same check-vs-delete
-    # instant _claim_check accepts.
-    late_pins = set(list_tags(spark, table_dir).values()) - tagged
-    if late_pins:
-        rescued = [i for i in expired if i in late_pins]
-        expired = [i for i in expired if i not in late_pins]
-        for sid in rescued:
-            kept.append(sid)
-            _mark_live(read_manifest(spark, table_dir, sid))
-    fs, _ = hadoop_fs(spark, table_dir)
-    for sid in expired:
-        _, mp = hadoop_fs(spark, _manifest_path(table_dir, sid))
-        fs.delete(mp, False)
-    import time as _time
-
-    stale_cutoff = (_time.time() - staging_ttl_hours * 3600) * 1000
-
-    def _job_in_flight(dir_path) -> bool:
-        # A DIRECT (claim=False) writer's df.write job keeps a
-        # _temporary subdir inside the generation for the job's whole
-        # duration — which can exceed any TTL. Never reclaim such a
-        # dir regardless of age; the TTL applies only to COMPLETE
-        # dirs (a claimant's renamed data, or a direct write whose
-        # job finished but whose manifest never landed — both crash
-        # residue once stale).
-        _, tmp = hadoop_fs(
-            spark, f"{dir_path.toString()}/_temporary"
-        )
-        return fs.exists(tmp)
-
-    removed = []
-    ddir = f"{table_dir}/{_DATA_DIR}"
-    fs, dpath = hadoop_fs(spark, ddir)
-    if fs.exists(dpath):
-        for st in fs.listStatus(dpath):
-            name = st.getPath().getName()
-            if not st.isDirectory() or name in live_gens:
-                continue
-            # In-flight-writer guard (round-6 advice): a generation id
-            # ABOVE the newest committed manifest belongs to a writer
-            # in its df.write -> commit_manifest window (e.g. a running
-            # CDC-mirror batch). Deleting it would either make the
-            # writer commit a manifest pointing at vanished data or
-            # silently shrink a partial write's manifest. Leave such
-            # dirs alone — UNLESS older than the staging TTL: a live
-            # claimant's claim->commit window is seconds, so a stale
-            # above-newest dir is a crashed _stage_and_claim /
-            # append_with_retry claimant whose id would otherwise
-            # block every future committer forever (next_id keeps
-            # resolving to it).
-            try:
-                gen_id = int(name.split("=", 1)[1])
-            except (IndexError, ValueError):
-                gen_id = None
-            if gen_id is not None and gen_id > newest:
-                if (
-                    st.getModificationTime() >= stale_cutoff
-                    or _job_in_flight(st.getPath())
-                ):
-                    continue
-            fs.delete(st.getPath(), True)
-            removed.append(name)
-    removed_dv = []
-    vdir = f"{table_dir}/{_DELETES_DIR}"
-    fs, vpath = hadoop_fs(spark, vdir)
-    if fs.exists(vpath):
-        for st in fs.listStatus(vpath):
-            name = st.getPath().getName()
-            if not st.isDirectory() or name in live_deletes:
-                continue
-            try:
-                dv_id = int(name.split("=", 1)[1])
-            except (IndexError, ValueError):
-                dv_id = None
-            # Same in-flight-writer guard (and stale-claim TTL) as
-            # data generations.
-            if dv_id is not None and dv_id > newest:
-                if (
-                    st.getModificationTime() >= stale_cutoff
-                    or _job_in_flight(st.getPath())
-                ):
-                    continue
-            fs.delete(st.getPath(), True)
-            removed_dv.append(name)
-    removed_cdf = []
-    cdir = f"{table_dir}/{_CDF_DIR}"
-    fs, cpath = hadoop_fs(spark, cdir)
-    if fs.exists(cpath):
-        for st in fs.listStatus(cpath):
-            name = st.getPath().getName()
-            if not st.isDirectory() or name in live_cdf:
-                continue
-            try:
-                c_id = int(name.split("=", 1)[1])
-            except (IndexError, ValueError):
-                c_id = None
-            # Same in-flight-writer guard (and stale-claim TTL) as
-            # data generations: an above-newest sidecar belongs to a
-            # DML writer in its claim->commit window.
-            if c_id is not None and c_id > newest:
-                if (
-                    st.getModificationTime() >= stale_cutoff
-                    or _job_in_flight(st.getPath())
-                ):
-                    continue
-            fs.delete(st.getPath(), True)
-            removed_cdf.append(name)
-    removed_sidecars = []
-    stdir = f"{table_dir}/{_STATS_SIDE_DIR}"
-    fs, stpath = hadoop_fs(spark, stdir)
-    if fs.exists(stpath):
-        for st in fs.listStatus(stpath):
-            name = st.getPath().getName()
-            if st.isDirectory() or name in live_sidecars:
-                continue
-            # A sidecar is written BEFORE the manifest that references
-            # it — a fresh unreferenced file may belong to a committer
-            # mid claim->commit window. The staging TTL that protects
-            # in-flight generations protects these too; older
-            # unreferenced ones are crash/retry orphans.
-            if st.getModificationTime() >= stale_cutoff:
-                continue
-            fs.delete(st.getPath(), False)
-            removed_sidecars.append(name)
-    removed_staging = []
-    sdir = f"{table_dir}/_staging"
-    fs, spath = hadoop_fs(spark, sdir)
-    if fs.exists(spath):
-        for st in fs.listStatus(spath):
-            if st.isDirectory() and st.getModificationTime() < stale_cutoff:
-                fs.delete(st.getPath(), True)
-                removed_staging.append(st.getPath().getName())
-    return {
-        "expired_manifests": expired,
-        "removed_generations": removed,
-        "removed_delete_vectors": removed_dv,
-        "removed_cdf": removed_cdf,
-        "removed_stat_sidecars": removed_sidecars,
-        "removed_staging": removed_staging,
-    }
+from big_data_spark.io.sidecars import load_generation_stats
+from big_data_spark.io.tags import delete_tag, list_tags, tag_snapshot
+from big_data_spark.io.table_writes import (
+    abandon_staged,
+    append_snapshot,
+    append_with_retry,
+    check_schema_evolution,
+    clear_generation,
+    publish_staged,
+    read_staged,
+    repartition_table,
+    rollback_snapshot,
+    stage_snapshot,
+    vacuum_snapshots,
+    write_snapshot,
+    write_snapshot_partial,
+)

@@ -366,12 +366,12 @@ def file_row_count(rows: list[dict]) -> int:
 
 def _file_gen_id(path: str) -> int | None:
     """Snapshot-generation id of a data file — delegates to the ONE
-    parser of the ``_data/s=<id>`` layout (io/snapshot.py), so the
+    parser of the ``_data/s=<id>`` layout (io/layout.py), so the
     evolution replay and the footer-sweep name resolution can never
-    key generations differently. Function-level import: snapshot
-    imports this module lazily, and the kernel closure must stay
-    import-light for executors."""
-    from big_data_spark.io.snapshot import _gen_id_of
+    key generations differently. Function-level import: the table
+    format imports this module lazily, and the kernel closure must
+    stay import-light for executors."""
+    from big_data_spark.io.layout import _gen_id_of
 
     return _gen_id_of(path)
 

@@ -185,12 +185,10 @@ def sync_aggregate(
     additive-aggregate scope as refresh_aggregate (sum/count and
     derivatives; min/max need a rescan under deletes).
     """
-    from big_data_spark.io.snapshot import (
-        read_changes,
-        read_snapshot,
-        snapshot_ids,
-        write_snapshot,
-    )
+    from big_data_spark.io.changes import read_changes
+    from big_data_spark.io.manifest import snapshot_ids
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import write_snapshot
 
     base_ids = snapshot_ids(spark, table_dir)
     if not base_ids:

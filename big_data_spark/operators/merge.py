@@ -224,11 +224,9 @@ def merge_snapshot(
     (streaming/cdc_mirror.py), whose per-snapshot write cost scales
     with the change set. Returns the committed snapshot id.
     """
-    from big_data_spark.io.snapshot import (
-        latest_manifest,
-        read_snapshot,
-        write_snapshot,
-    )
+    from big_data_spark.io.manifest import latest_manifest
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import write_snapshot
 
     # Read AS OF the manifest the id derives from (a commit landing
     # during the merge collides on the id -> SnapshotConflict instead

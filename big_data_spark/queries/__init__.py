@@ -19,204 +19,70 @@ for module in (relational, streaming_q, llm, multimodal):
     QUERIES_ALL.update(module.QUERIES)
     ORACLE_SQL_ALL.update(module.ORACLE_SQL)
 
-# Driver-facing registry: exactly 50 entries. Round 1 registered 51
-# and the correctness gate recorded exactly the first 50, dropping
-# the tail entry (stream_sessionize) even though it is green locally
-# at every sf — consistent with a hard 50-query cap driver-side. Keep
-# the registry at the cap so every registered operator gets a row;
-# the window-idiom variants below stay implemented and oracle-checked
-# in pytest, their §2.5 family keeps two driver rows
-# (window_running_sum, window_latest_order), and the freed slots
-# carry the stream-stream interval join and the range join.
+# Driver-facing registry: exactly 50 entries (the contract's cap).
+# Every query listed here stays implemented and oracle-checked by the
+# pytest gate (tests/test_oracle.py), and its family keeps at least
+# one entry in QUERIES.
 _PYTEST_ONLY = (
     "window_range_trailing",
     "window_ranks",
     "window_lag_gap",
     "corpus_sample_mix",
-    # Swapped out (round 4) for pipeline_part1_groups: the scalar
-    # string-function family keeps driver coverage via case_buckets /
-    # regex_extract / map_roundtrip; the reference-parity pipeline
-    # grouping had no driver row at all (judge's top coverage gap).
-    # Round-5 cap rotation (judge directive: formerly pytest-only
-    # operators earn driver rows over time). Swapped OUT — each family
-    # keeps at least one driver row certifying the same §2 rows:
-    "join_semi",  # J-family: join_left (J2) + join_anti (J3) stay
-    "variant_extract",  # §2.8 JSON: events_json/regex_extract/map_roundtrip stay
-    "large_volume_customers",  # J1/A: join_multiway + shipping_priority stay
-    # Swapped IN: pipeline_part2_groups (the last lifecycle stage with
-    # no independent-engine check), ann_ivf (frozen-centroid IVF),
-    # token_counts (BPE-ish token counting) — all formerly pytest-only
-    # or row-less.
-    # Round-5 additions rotation: quality_gopher (repetition filter)
-    # and dedup_semantic (SemDeDup) take driver slots — they are new
-    # first-class LLM-pipeline operators; swapped OUT two rows whose
-    # §2 lines keep other driver coverage:
-    "shipping_priority",  # J1 keeps join_multiway; A-family keeps pricing_summary etc.
-    # New round-5 operators past the 50-cap: oracle-checked by the
-    # pytest gate (tests/test_oracle.py), candidates for future
-    # driver-slot rotation.
+    "join_semi",
+    "variant_extract",
+    "large_volume_customers",
+    "shipping_priority",
     "corpus_mix_temperature",
     "stream_sliding",
-    # Second round-5 rotation: events_resample (gap/forward fill —
-    # the one new idiom whose float path deserves driver-hash
-    # certification) takes the slot of distinct_counts, whose A6-A8
-    # rows stay driver-certified by set_ops.
     "distinct_counts",
-    # Third round-5 rotation: the lakehouse-maintenance pair
-    # merge_upsert (MERGE INTO: matched-update/-delete +
-    # insert-gated not-matched) and cdc_apply (ordered change fold,
-    # operators/cdc.py) take driver slots — they are the table-write
-    # primitives a 100 TB lake lives on. Swapped OUT: regex_extract
-    # (§2.8 keeps events_json + case_buckets + map_roundtrip driver
-    # rows) and events_hourly (§2.5 keeps window_running_sum +
-    # window_latest_order + events_sessionize; the identical hourly
-    # aggregation stays driver-certified through stream_hourly).
     "regex_extract",
     "events_hourly",
-    # New round-5 graph/analytics rows past the cap — pytest-oracle
-    # gated, future rotation candidates:
-    # Fourth round-5 rotation: dq_report (the single-pass data-quality
-    # gate — six constraint kinds incl. an FK anti-join, a flagship
-    # table-lifecycle operator) takes the slot of text_stats, whose
-    # text-statistics family keeps three driver rows (text_quality,
-    # token_counts, lang_id).
     "text_stats",
-    # Round-6 rotation (judge directive: never-capped operators earn
-    # driver rows). Swapped IN: mv_refresh, scd2_intervals, pii_scrub,
-    # grouping_sets, triangle_count (first driver slots), plus the two
-    # NEW round-6 rows dedup_clusters (pair->component closure) and
-    # pagerank_topn (frozen-iteration PageRank vs an unrolled-CTE
-    # oracle). Swapped OUT — each family keeps at least one driver row:
-    "join_anti",  # J-family: join_left (J2) + join_multiway (J1) + join_expr_key (J4) + join_self_theta (J6) stay
-    "events_json",  # §2.8 JSON/regex: case_buckets + map_roundtrip stay
-    "window_latest_order",  # §2.5: window_running_sum + events_sessionize + events_resample stay
-    "stream_sessionize",  # §2.11: stream_hourly + stream_stream_join stay; batch twin events_sessionize stays
-    "lang_id",  # text family: text_quality + token_counts + quality_gopher stay
-    "vocab_coverage",  # benchmark-postings family: decontaminate stays
-    "embedding_neardup",  # embedding family: embedding_topk + ann_hyperplane_lsh + ann_ivf + dedup_semantic stay
-    # Round-7 rotation (judge directive #4: the never-slotted round-6
-    # rows earn driver slots). Swapped IN: shortest_paths,
-    # community_lpa, sql_portable_revenue, temporal_join,
-    # lm_perplexity, drift_psi, ann_recall, plus the NEW round-7 row
-    # sql_snapshot_asof (SQL time travel over snapshot tables).
-    # Swapped OUT — each family keeps at least one driver row:
-    "graph_components",  # graph family: pagerank_topn + triangle_count + dedup_clusters (runs CC) + shortest_paths + community_lpa stay
-    "asof_join",  # timeseries family: temporal_join IS the as-of operator; range_join_bands + stream_stream_join stay
-    "token_counts",  # text family: text_quality + quality_gopher + lm_perplexity stay
-    "ann_ivf",  # ANN family: ann_recall exercises the same IVF index; embedding_topk + ann_hyperplane_lsh + dedup_semantic stay
-    "join_left",  # J family: join_multiway + join_expr_key + join_self_theta stay
-    "events_outliers",  # §2.5 events family: window_running_sum + events_sessionize + events_resample stay
-    "case_buckets",  # §2.8 scalar family: map_roundtrip stays
-    # Round-9 rotation (round-8 verdict directive #2: the eight
-    # never-slotted round-7 rows — neardup_incremental,
-    # semdedup_incremental, snapshot_changes, point_lookup,
-    # pack_sequences, shard_summary, weighted_sample, snapshot_delete
-    # — ALL take driver slots this round, plus the two NEW round-9
-    # rows sql_dml (DELETE/UPDATE/INSERT statement strings through
-    # SnapshotCatalog.sql) and evolved_read (rename+widen evolution
-    # on the read path). Swapped OUT — each family keeps at least
-    # one driver row:
-    "simhash",  # fingerprint family: doc_fingerprint stays (same HOF fold); dedup_exact/minhash/ngram/semantic stay
-    "embedding_topk",  # embedding family: ann_hyperplane_lsh + ann_recall (exact-rescore top-k inside) + dedup_semantic stay
-    "events_sessionize",  # §2.5: window_running_sum + events_resample + scd2_intervals stay
-    "join_expr_key",  # J-family: join_multiway (J1) + join_self_theta (J6) stay
-    "rollup_revenue",  # rollup family: grouping_sets stays (strict superset idiom)
-    "stream_hourly",  # §2.11: stream_stream_join + mv_refresh + cdc_apply stay; the same hourly agg is events-family covered
-    "media_byte_stats",  # multimodal: media_frame_sample stays (same mapInPandas kernel family)
-    # New round-9 row past the cap (pytest-oracle gated, rotation
-    # candidate): snapshot tags + timestamp time travel, oracle
-    # re-deriving the pinned/timestamped/current states from raw
-    # orders.
-    # doc_chunks (round 9): sliding-window document chunking with
-    # overlap — JVM HOF windows, one posexplode; oracle replays the
-    # policy with range/list_slice.
-    # snapshot_update_cdf (round 10): row-level pre/post-image change
-    # feed for UPDATE commits; oracle re-derives the exact row-level
-    # change set from raw orders.
-    # Round-10 rotation (round-9 verdict directive #6 + optional #9):
-    # swapped IN — snapshot_tag_travel, doc_chunks (round-9 pytest-only
-    # additions), the long-unslotted cohort_retention, dedup_segments,
-    # stratified_sample, bm25_search, semantic_search, community_lpa,
-    # merge_upsert (back per optional #9), and the NEW round-10 row
-    # snapshot_update_cdf (row-level update CDF). Swapped OUT — each
-    # family keeps at least one driver row:
-    "dedup_exact",  # dedup family: dedup_minhash_lsh + dedup_ngram_jaccard + dedup_semantic + dedup_clusters + dedup_segments + both incremental rows stay
-    "cdc_apply",  # lakehouse writes: merge_upsert (same merge_snapshot core) + sql_dml stay
-    "scd2_intervals",  # temporal family: temporal_join (SCD2 temporal join) + window_running_sum stay
-    # hybrid_search (round 10): reciprocal-rank fusion of the BM25 and
-    # IVF-ANN hit lists — the RAG retrieval composition; oracle fuses
-    # the same two oracle lists with identical rank windows.
-    # Round-11 rotation (round-10 verdict directive #5): swapped IN —
-    # hybrid_search (the round-10 pytest-only addition), the
-    # long-unslotted pmi_cooccur, cube_sales, unpivot_metrics,
-    # percentiles, pivot_status, agg_collect_sorted, events_funnel,
-    # string_tokens, and the NEW round-11 row partitioned_prune
-    # (two-level manifest+stats pruned read over a multi-column
-    # partitioned snapshot table). Swapped OUT — each family keeps at
-    # least one driver row:
-    "bm25_search",  # search family: semantic_search + hybrid_search (fuses a BM25 list) stay
-    "doc_fingerprint",  # fingerprint family: dedup_segments (same HOF fold) stays
-    "lm_perplexity",  # text family: text_quality + pii_scrub + doc_chunks stay
-    "snapshot_tag_travel",  # travel family: sql_snapshot_asof (both SQL spellings) stays
-    "grouping_sets",  # rollup family: cube_sales + pivot_status + unpivot_metrics + percentiles stay
-    "map_roundtrip",  # §2.8 scalar family: string_tokens stays
-    "first_min_by",  # A-family: pricing_summary + set_ops + agg_collect_sorted stay
-    "stratified_sample",  # sampling family: weighted_sample stays
-    "evolved_read",  # lakehouse family: sql_snapshot_asof + snapshot_changes + point_lookup + snapshot_update_cdf + sql_dml + merge_upsert + partitioned_prune stay
-    # Round-12 rotation (round-11 verdict directive #5): swapped IN —
-    # typed_prune (the round-11 pytest-only addition) plus the eight
-    # long-unslotted rows snapshot_delete, shortest_paths,
-    # quality_gopher, events_resample, ann_recall, mv_refresh,
-    # decontaminate, cohort_retention (all driver-certified in
-    # earlier rounds, re-certified this round). Swapped OUT — every
-    # family keeps at least one driver row:
-    # Round-13 rotation (round-12 verdict directive #3): the nine rows
-    # released in round 12 come back IN — agg_collect_sorted,
-    # community_lpa, cube_sales, events_funnel, hybrid_search,
-    # percentiles, pmi_cooccur, sql_portable_revenue, unpivot_metrics.
-    # Released: nine twice-plus-slotted rows (2-12 prior driver
-    # rounds each, per the CORRECTNESS_r* history); every family keeps
-    # at least one driver row:
-    # (Round 14 brought back dedup_ngram_jaccard, ann_hyperplane_lsh,
-    # text_quality, join_self_theta and merge_upsert; the remaining
-    # four round-13 releases stay out until round 15:)
-    # (Round 15 brought back stream_stream_join, temporal_join,
-    # pivot_status and triangle_count — the full round-13 release
-    # queue is now re-slotted.)
-    # Round-14 rotation (round-13 verdict directive #3):
-    # metadata_aggregates earns its driver slot, and five of the nine
-    # rows released in round 13 come back IN — ann_hyperplane_lsh,
-    # dedup_ngram_jaccard, join_self_theta, merge_upsert,
-    # text_quality (pivot_status, stream_stream_join, temporal_join,
-    # triangle_count rotated in at round 15 as queued). Released —
-    # six rows with >=2 prior driver rounds each, every family
-    # keeping at least one driver row:
-    "point_lookup",  # lakehouse reads (5 rounds): partitioned_prune + typed_prune + sql_snapshot_asof stay
-    "snapshot_changes",  # CDF family (5 rounds): snapshot_update_cdf (row-level feed) stays
-    "shortest_paths",  # graph family (3 rounds): pagerank_topn + community_lpa + dedup_clusters (CC) stay
-    "semdedup_incremental",  # incremental-dedup family (5 rounds): neardup_incremental + dedup_semantic stay
-    "shard_summary",  # packing family (5 rounds): pack_sequences + weighted_sample stay
-    "doc_chunks",  # text-segmentation family (4 rounds): dedup_segments + pii_scrub + text_quality (IN) stay
-    # NEW round-14 rows past the cap (pytest-oracle gated, r15
-    # driver-slot candidates per the round-13 verdict): partition-
-    # predicate metadata aggregates — WHERE on partition columns
-    # answered from matching live entries + stats, plan-asserted
-    # scan-free — and the partition-wise GROUP BY rollup (one row
-    # per live partition, same zero-scan contract).
-    # Round-15 rotation (round-14 verdict directive #5): the queued
-    # four come IN — pivot_status, stream_stream_join, temporal_join,
-    # triangle_count — plus the two round-14 pytest-only metadata rows
-    # below earn their driver slots (metadata_partition_agg,
-    # metadata_groupby_agg: partition-predicate / partition-wise
-    # GROUP BY aggregates answered scan-free from manifest stats).
-    # Released — six rows with >=2 prior driver rounds each, every
-    # family keeping at least one driver row:
-    "hybrid_search",  # search family (3 rounds): semantic_search + bm25-fused pytest rows stay
-    "cube_sales",  # rollup family (3 rounds): unpivot_metrics + percentiles + pivot_status (IN) stay
-    "events_funnel",  # events family (3 rounds): events_resample + cohort_retention stay
-    "community_lpa",  # graph family (6 rounds): pagerank_topn + dedup_clusters (CC) + triangle_count (IN) stay
-    "ann_recall",  # ANN family (6 rounds): ann_hyperplane_lsh + dedup_semantic + semantic_search stay
-    "mv_refresh",  # MV/streaming family (7 rounds): stream_stream_join (IN) + snapshot_update_cdf + sql_dml stay
+    "join_anti",
+    "events_json",
+    "window_latest_order",
+    "stream_sessionize",
+    "lang_id",
+    "vocab_coverage",
+    "embedding_neardup",
+    "graph_components",
+    "asof_join",
+    "token_counts",
+    "ann_ivf",
+    "join_left",
+    "events_outliers",
+    "case_buckets",
+    "simhash",
+    "embedding_topk",
+    "events_sessionize",
+    "join_expr_key",
+    "rollup_revenue",
+    "stream_hourly",
+    "media_byte_stats",
+    "dedup_exact",
+    "cdc_apply",
+    "scd2_intervals",
+    "bm25_search",
+    "doc_fingerprint",
+    "lm_perplexity",
+    "snapshot_tag_travel",
+    "grouping_sets",
+    "map_roundtrip",
+    "first_min_by",
+    "stratified_sample",
+    "evolved_read",
+    "point_lookup",
+    "snapshot_changes",
+    "shortest_paths",
+    "semdedup_incremental",
+    "shard_summary",
+    "doc_chunks",
+    "hybrid_search",
+    "cube_sales",
+    "events_funnel",
+    "community_lpa",
+    "ann_recall",
+    "mv_refresh",
 )
 
 QUERIES = {k: v for k, v in QUERIES_ALL.items() if k not in _PYTEST_ONLY}

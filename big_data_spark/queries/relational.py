@@ -2510,7 +2510,8 @@ def q_sql_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timezone
 
     from big_data_spark.catalog import SnapshotCatalog
-    from big_data_spark.io.snapshot import read_manifest, write_snapshot
+    from big_data_spark.io.manifest import read_manifest
+    from big_data_spark.io.table_writes import write_snapshot
 
     tdir = fixture_dir("bds_sqlsnap", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -2555,11 +2556,8 @@ def q_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from big_data_spark.io.compact import compact_snapshot
-    from big_data_spark.io.snapshot import (
-        append_snapshot,
-        read_changes,
-        write_snapshot,
-    )
+    from big_data_spark.io.changes import read_changes
+    from big_data_spark.io.table_writes import append_snapshot, write_snapshot
 
     tdir = fixture_dir("bds_feed", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -2642,10 +2640,8 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from big_data_spark.io.snapshot import (
-        read_snapshot,
-        write_snapshot_partial,
-    )
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import write_snapshot_partial
 
     tdir = fixture_dir("bds_pprune", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -2729,7 +2725,8 @@ def q_typed_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from big_data_spark.io.snapshot import read_snapshot, write_snapshot
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import write_snapshot
 
     tdir = fixture_dir("bds_tprune", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -2813,7 +2810,7 @@ def q_metadata_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from big_data_spark.catalog import SnapshotCatalog
-    from big_data_spark.io.snapshot import write_snapshot
+    from big_data_spark.io.table_writes import write_snapshot
 
     tdir = fixture_dir("bds_magg", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -2894,7 +2891,7 @@ def _orders_by_status_fixture(
     import shutil
 
     from big_data_spark.catalog import SnapshotCatalog
-    from big_data_spark.io.snapshot import write_snapshot_partial
+    from big_data_spark.io.table_writes import write_snapshot_partial
 
     tdir = fixture_dir(fixture, sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -3066,7 +3063,7 @@ def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot_point,
         write_bloom_index,
     )
-    from big_data_spark.io.snapshot import write_snapshot
+    from big_data_spark.io.table_writes import write_snapshot
 
     tdir = fixture_dir("bds_point", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -3108,11 +3105,9 @@ def q_snapshot_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from big_data_spark.io.snapshot import (
-        append_snapshot,
-        delete_where,
-        read_snapshot,
-    )
+    from big_data_spark.io.dml import delete_where
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import append_snapshot
 
     tdir = fixture_dir("bds_del", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -3185,11 +3180,9 @@ def q_snapshot_update_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from big_data_spark.io.snapshot import (
-        append_snapshot,
-        read_changes,
-        update_where,
-    )
+    from big_data_spark.io.changes import read_changes
+    from big_data_spark.io.dml import update_where
+    from big_data_spark.io.table_writes import append_snapshot
 
     tdir = fixture_dir("bds_ucdf", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -3254,7 +3247,8 @@ def q_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from big_data_spark.catalog import SnapshotCatalog
-    from big_data_spark.io.snapshot import append_snapshot, read_snapshot
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.table_writes import append_snapshot
 
     tdir = fixture_dir("bds_dml", sf_dir)
     name = os.path.basename(tdir)
@@ -3325,12 +3319,10 @@ def q_snapshot_tag_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from big_data_spark.io.snapshot import (
-        append_snapshot,
-        read_manifest,
-        read_snapshot,
-        tag_snapshot,
-    )
+    from big_data_spark.io.manifest import read_manifest
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.io.tags import tag_snapshot
+    from big_data_spark.io.table_writes import append_snapshot
 
     tdir = fixture_dir("bds_tag", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
@@ -3402,11 +3394,8 @@ def q_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from big_data_spark.io.snapshot import (
-        append_snapshot,
-        evolve_schema,
-        read_snapshot,
-    )
+    from big_data_spark.io.table_reads import evolve_schema, read_snapshot
+    from big_data_spark.io.table_writes import append_snapshot
 
     tdir = fixture_dir("bds_evo", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)

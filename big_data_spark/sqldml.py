@@ -385,7 +385,7 @@ def route_statement(
             # (round 12); checked BEFORE the generic ALTER claim so
             # the clause never reaches _execute_alter's rename/drop/
             # type parser.
-            from big_data_spark.io.snapshot import repartition_table
+            from big_data_spark.io.table_writes import repartition_table
 
             cols = m.group(2)
             spec = (
@@ -405,7 +405,7 @@ def route_statement(
         return None
     m = _HISTORY_RE.match(statement)
     if m and m.group(1) in tables:
-        from big_data_spark.io.snapshot import table_history
+        from big_data_spark.io.changes import table_history
 
         return table_history(spark, tables[m.group(1)])
     m = _DETAIL_RE.match(statement)
@@ -413,7 +413,7 @@ def route_statement(
         # DESCRIBE DETAIL t (round 11, Delta's spelling): one manifest
         # summary row — partition columns, live file count/bytes,
         # stats coverage, tags. Metadata-only.
-        from big_data_spark.io.snapshot import table_detail
+        from big_data_spark.io.aggregates import table_detail
 
         return table_detail(spark, tables[m.group(1)])
     m = _SHOW_PARTS_RE.match(statement)
@@ -423,7 +423,7 @@ def route_statement(
         # manifest entry keys — Spark's own SHOW PARTITIONS errors on
         # these tables (temp views), so claiming the registered names
         # is purely additive.
-        from big_data_spark.io.snapshot import show_partitions
+        from big_data_spark.io.aggregates import show_partitions
 
         return show_partitions(spark, tables[m.group(1)])
     if _SHOW_TABLES_RE.match(statement):
@@ -447,7 +447,7 @@ def route_statement(
         # maintenance commit — Spark's spelling, the snapshot
         # format's semantics. Unregistered names pass through to
         # spark.sql (its catalog-table ANALYZE).
-        from big_data_spark.io.snapshot import analyze_table
+        from big_data_spark.io.aggregates import analyze_table
 
         cols = (
             [
@@ -542,7 +542,7 @@ def route_statement(
         return {"statement_type": "OPTIMIZE", "table": m.group(1), **st}
     m = _VACUUM_RE.match(statement)
     if m and m.group(1) in tables:
-        from big_data_spark.io.snapshot import vacuum_snapshots
+        from big_data_spark.io.table_writes import vacuum_snapshots
 
         unit = (m.group(3) or "SNAPSHOTS").upper()
         # VACUUM t RETAIN n SNAPSHOTS (commit-count retention) or
@@ -566,7 +566,7 @@ def route_statement(
         return {"statement_type": "VACUUM", "table": m.group(1), **st}
     m = _RESTORE_RE.match(statement)
     if m and m.group(1) in tables:
-        from big_data_spark.io.snapshot import rollback_snapshot
+        from big_data_spark.io.table_writes import rollback_snapshot
 
         sid = rollback_snapshot(spark, tables[m.group(1)], int(m.group(2)))
         return {
@@ -627,11 +627,8 @@ def rewrite_time_travel(
         name, kind, val = m.group(1), m.group(2).upper(), m.group(3)
         if name not in tables:
             return m.group(0)
-        from big_data_spark.io.snapshot import (
-            list_tags,
-            read_snapshot,
-            resolve_as_of_ts,
-        )
+        from big_data_spark.io.table_reads import read_snapshot, resolve_as_of_ts
+        from big_data_spark.io.tags import list_tags
 
         table_dir = tables[name]
         if kind == "VERSION":
@@ -734,14 +731,14 @@ def execute_dml(
     unknown tables or unsupported syntax — never a partial apply."""
     m = _DELETE_RE.match(statement)
     if m:
-        from big_data_spark.io.snapshot import delete_where
+        from big_data_spark.io.dml import delete_where
 
         table_dir = _resolve(m.group(1), tables)
         st = delete_where(spark, table_dir, m.group(2), attempts=3)
         return {"statement_type": "DELETE", "table": m.group(1), **st}
     m = _UPDATE_RE.match(statement)
     if m:
-        from big_data_spark.io.snapshot import update_where
+        from big_data_spark.io.dml import update_where
 
         table_dir = _resolve(m.group(1), tables)
         st = update_where(
@@ -773,19 +770,15 @@ def execute_dml(
 def _execute_insert(
     spark: SparkSession, m: re.Match, tables: dict[str, str]
 ) -> dict:
-    from big_data_spark.io.snapshot import (
-        append_with_retry,
-        latest_manifest,
-    )
+    from big_data_spark.io.manifest import latest_manifest
+    from big_data_spark.io.table_writes import append_with_retry
 
     mode, table_name, col_text, body = m.group(1, 2, 3, 4)
     overwrite = mode.upper().startswith("OVERWRITE")
     table_dir = _resolve(table_name, tables)
     man = latest_manifest(spark, table_dir)
-    if man is None or not man.get("schema"):
-        raise ValueError(
-            f"INSERT target {table_name!r} has no committed schema"
-        )
+    if man is None:
+        raise ValueError(f"INSERT target {table_name!r} has no snapshots")
     schema = man["schema"]
     by_name = {f["name"]: f for f in schema}
     targets = (
@@ -833,13 +826,13 @@ def _execute_insert(
         # writers (CDC mirrors, partial DML) keep working (round-10
         # advice: routing through write_snapshot silently re-laid the
         # table out unpartitioned).
-        from big_data_spark.io.snapshot import (
-            _pcols,
+        from big_data_spark.io.manifest import partition_cols
+        from big_data_spark.io.table_writes import (
             write_snapshot,
             write_snapshot_partial,
         )
 
-        if _pcols(man.get("partition_col")):
+        if partition_cols(man):
             sid = man["snapshot_id"] + 1
             write_snapshot_partial(
                 row.select(*cols),
@@ -848,8 +841,8 @@ def _execute_insert(
                 man["partition_col"],
                 list(man["entries"].keys()),
                 # Fresh full content: nothing old to mask or map.
-                deletes=None,
-                rename_log=None,
+                deletes=[],
+                rename_log=[],
                 claim=True,
             )
         else:
@@ -859,7 +852,8 @@ def _execute_insert(
     # Report what actually LANDED: a parquet metadata count of the
     # committed generation — never a re-execution of the row source
     # (a non-deterministic SELECT would report rows it didn't write).
-    from big_data_spark.io.snapshot import generation_dir, hadoop_fs
+    from big_data_spark.io.compact import hadoop_fs
+    from big_data_spark.io.layout import generation_dir
 
     gdir = generation_dir(table_dir, sid)
     fs, gp = hadoop_fs(spark, gdir)
@@ -887,8 +881,8 @@ def _execute_create(
     Refuses an already-registered name and a non-empty target dir —
     CTAS creates, it never adopts or overwrites."""
     from big_data_spark.io.compact import hadoop_fs
-    from big_data_spark.io.snapshot import (
-        generation_dir,
+    from big_data_spark.io.layout import generation_dir
+    from big_data_spark.io.table_writes import (
         write_snapshot,
         write_snapshot_partial,
     )
@@ -926,7 +920,7 @@ def _execute_create(
             "CTAS never adopts or overwrites; register an existing "
             "snapshot table instead, or point at a fresh location"
         )
-    from big_data_spark.io.snapshot import SnapshotConflict
+    from big_data_spark.io.manifest import SnapshotConflict
 
     src = spark.sql(rewrite_time_travel(spark, body, tables))
     try:
@@ -1037,7 +1031,7 @@ def _execute_drop(
 def _execute_alter(
     spark: SparkSession, m: re.Match, tables: dict[str, str]
 ) -> dict:
-    from big_data_spark.io.snapshot import evolve_schema
+    from big_data_spark.io.table_reads import evolve_schema
 
     table_name = m.group(1)
     table_dir = _resolve(table_name, tables)

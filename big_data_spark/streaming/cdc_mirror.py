@@ -53,13 +53,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.snapshot import (
-    _dir_cols,
-    latest_manifest,
-    read_entries,
-    read_snapshot,
-    write_snapshot_partial,
-)
+from big_data_spark.io.manifest import dir_cols, latest_manifest
+from big_data_spark.io.table_reads import read_entries, read_snapshot
+from big_data_spark.io.table_writes import write_snapshot_partial
 from big_data_spark.lineage import truncate_lineage
 from big_data_spark.operators.cdc import latest_changes
 from big_data_spark.operators.merge import merge_into
@@ -128,10 +124,10 @@ def run_cdc_mirror(
                 # evolution log: a MOR delete or evolve on the mirror
                 # must not resurrect/misread rows into the next
                 # rewritten bucket (round-10 model-walk class).
-                deletes=prev.get("deletes"),
-                schema_fields=prev.get("schema"),
-                rename_log=prev.get("rename_log"),
-                partition_cols=_dir_cols(prev),
+                deletes=prev["deletes"],
+                schema_fields=prev["schema"],
+                rename_log=prev["rename_log"],
+                partition_cols=dir_cols(prev),
             )
             # _kb is a hive partition column of every live generation:
             # the isin literal prunes the scan to the touched buckets
@@ -198,10 +194,10 @@ def purge_tombstones(
         spark,
         mirror_dir,
         man["entries"],
-        deletes=man.get("deletes"),
-        schema_fields=man.get("schema"),
-        rename_log=man.get("rename_log"),
-        partition_cols=_dir_cols(man),
+        deletes=man["deletes"],
+        schema_fields=man["schema"],
+        rename_log=man["rename_log"],
+        partition_cols=dir_cols(man),
     )
     purgeable = F.col(_DELETED) & (F.col(seq_col) < F.lit(seq_watermark))
     touched = [
@@ -265,10 +261,10 @@ def run_scd2_mirror(
                 spark,
                 mirror_dir,
                 prev["entries"],
-                deletes=prev.get("deletes"),
-                schema_fields=prev.get("schema"),
-                rename_log=prev.get("rename_log"),
-                partition_cols=_dir_cols(prev),
+                deletes=prev["deletes"],
+                schema_fields=prev["schema"],
+                rename_log=prev["rename_log"],
+                partition_cols=dir_cols(prev),
             ).filter(F.col(_BUCKET).isin(touched))
         new = scd2_apply(
             history,

@@ -27,7 +27,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from big_data_spark.io.snapshot import follow_changes
+from big_data_spark.io.changes import follow_changes
 
 
 def stream_changes(

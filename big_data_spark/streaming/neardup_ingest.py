@@ -58,11 +58,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.snapshot import (
-    append_snapshot,
-    latest_manifest,
-    read_snapshot,
-)
+from big_data_spark.io.manifest import latest_manifest
+from big_data_spark.io.table_reads import read_snapshot
+from big_data_spark.io.table_writes import append_snapshot
 from big_data_spark.lineage import truncate_lineage
 
 
@@ -85,7 +83,7 @@ def _read_state(
         # The probe equi-joins stored buckets against this engine's
         # xxhash64 longs: an index whose bucket column has another
         # type would fail mid-join with Spark's CAST_INVALID_INPUT.
-        types = {f["name"]: f["type"] for f in man.get("schema") or []}
+        types = {f["name"]: f["type"] for f in man["schema"]}
         if types.get("bucket") != "bigint":
             raise ValueError(
                 f"near-dup band index at {index_dir!r} stores bucket as "

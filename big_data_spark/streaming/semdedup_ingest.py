@@ -70,11 +70,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_spark.io.compact import hadoop_fs
-from big_data_spark.io.snapshot import (
-    append_snapshot,
-    read_snapshot,
-    snapshot_ids,
-)
+from big_data_spark.io.manifest import snapshot_ids
+from big_data_spark.io.table_reads import read_snapshot
+from big_data_spark.io.table_writes import append_snapshot
 from big_data_spark.lineage import truncate_lineage
 from big_data_spark.operators.blockpairs import (
     BLOCK_ROW_BUDGET,

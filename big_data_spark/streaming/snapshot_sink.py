@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from big_data_spark.io.snapshot import append_snapshot
+from big_data_spark.io.table_writes import append_snapshot
 
 
 def snapshot_sink(

@@ -12,6 +12,7 @@ import time
 import pytest
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import table_writes, tags
 from big_data_spark.io.snapshot import (
     append_snapshot,
     list_tags,
@@ -43,7 +44,7 @@ def test_long_staged_wap_claim_survives_concurrent_vacuum(
     old = time.time() - 2 * 24 * 3600
     os.utime(f"{t}/_staging/{token}", (old, old))
 
-    real_commit = snap.commit_manifest
+    real_commit = table_writes.commit_manifest
     ran = {"vacuum": None}
 
     def commit_with_racing_vacuum(*args, **kwargs):
@@ -54,7 +55,9 @@ def test_long_staged_wap_claim_survives_concurrent_vacuum(
             )
         return real_commit(*args, **kwargs)
 
-    monkeypatch.setattr(snap, "commit_manifest", commit_with_racing_vacuum)
+    monkeypatch.setattr(
+        table_writes, "commit_manifest", commit_with_racing_vacuum
+    )
     sid = publish_staged(spark, t, token)
     assert sid == 1
     # The claimed generation survived the racing vacuum (the claim
@@ -104,7 +107,7 @@ def test_tag_replace_retries_lost_mover_race(spark, tmp_path, monkeypatch):
         def __getattr__(self, name):
             return getattr(self._fs, name)
 
-    real_hadoop_fs = snap.hadoop_fs
+    real_hadoop_fs = tags.hadoop_fs
     raced: dict = {}
 
     def wrapped(spark_, path):
@@ -114,7 +117,7 @@ def test_tag_replace_retries_lost_mover_race(spark, tmp_path, monkeypatch):
             return proxy, p
         return fs, p
 
-    monkeypatch.setattr(snap, "hadoop_fs", wrapped)
+    monkeypatch.setattr(tags, "hadoop_fs", wrapped)
     assert tag_snapshot(spark, t, "rel", snapshot_id=2, replace=True) == 2
     assert raced["fs"].swallowed  # the race actually happened
     monkeypatch.undo()
@@ -217,7 +220,7 @@ def test_vacuum_rescues_pin_landing_after_kill_list(
             snapshot_id=g,
         )
     tag_snapshot(spark, t, "late", snapshot_id=1)
-    real_list = snap.list_tags
+    real_list = table_writes.list_tags
     calls = {"n": 0}
 
     def late_pin_list(spark_, table_dir):
@@ -226,7 +229,7 @@ def test_vacuum_rescues_pin_landing_after_kill_list(
             return {}  # the pin hasn't landed yet at the first read
         return real_list(spark_, table_dir)
 
-    monkeypatch.setattr(snap, "list_tags", late_pin_list)
+    monkeypatch.setattr(table_writes, "list_tags", late_pin_list)
     res = vacuum_snapshots(spark, t, keep_last=2)
     assert calls["n"] >= 2
     assert 1 not in res["expired_manifests"]

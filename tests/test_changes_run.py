@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import changes
 
 
 def _rows(df):
@@ -23,18 +24,18 @@ def _per_commit_feed(spark, table_dir, **kw):
     qualifier's DDL derivation (the fast path requires an explicit
     read schema; read_entries' own per-generation DDL calls pass a
     non-None gen_id and stay intact)."""
-    orig = snap._gen_read_ddl
+    orig = changes._gen_read_ddl
 
     def no_run_ddl(schema_fields, rename_log, gen_id, partition_cols):
         if gen_id is None and rename_log is None:
             return None
         return orig(schema_fields, rename_log, gen_id, partition_cols)
 
-    snap._gen_read_ddl = no_run_ddl
+    changes._gen_read_ddl = no_run_ddl
     try:
         return snap.read_changes(spark, table_dir, **kw)
     finally:
-        snap._gen_read_ddl = orig
+        changes._gen_read_ddl = orig
 
 
 @pytest.fixture()

@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import dml, manifest, table_writes
+from big_data_spark.io.manifest import successor
 from big_data_spark.io.snapshot import (
     SnapshotConflict,
     append_snapshot,
@@ -42,7 +44,7 @@ def test_delete_where_stale_manifest_conflicts(spark, tmp_path, monkeypatch):
     BEFORE clear_generation)."""
     t = str(tmp_path / "race_del")
     man0 = _two_commits(spark, t)
-    monkeypatch.setattr(snap, "latest_manifest", lambda *a, **k: man0)
+    monkeypatch.setattr(dml, "latest_manifest", lambda *a, **k: man0)
     with pytest.raises(SnapshotConflict):
         snap.delete_where(spark, t, "k >= 0")
     monkeypatch.undo()
@@ -58,7 +60,8 @@ def test_compact_snapshot_stale_manifest_conflicts(
 
     t = str(tmp_path / "race_compact")
     man0 = _two_commits(spark, t)
-    monkeypatch.setattr(snap, "latest_manifest", lambda *a, **k: man0)
+    # compact_snapshot resolves latest_manifest from io/manifest.py.
+    monkeypatch.setattr(manifest, "latest_manifest", lambda *a, **k: man0)
     with pytest.raises(SnapshotConflict):
         compact_snapshot(spark, t)
     monkeypatch.undo()
@@ -80,7 +83,7 @@ def test_binpack_snapshot_stale_manifest_conflicts(
         snapshot_id=2,
     )
     man1 = read_manifest(spark, t, 1)
-    monkeypatch.setattr(snap, "latest_manifest", lambda *a, **k: man1)
+    monkeypatch.setattr(manifest, "latest_manifest", lambda *a, **k: man1)
     with pytest.raises(SnapshotConflict):
         binpack_snapshot(spark, t, small_bytes=1 << 30)
     monkeypatch.undo()
@@ -113,10 +116,10 @@ def test_append_with_retry_two_writer_interleave(
     append_snapshot(
         spark.range(0, 50).selectExpr("id AS k"), t, snapshot_id=0
     )
-    orig = snap.commit_manifest
+    orig = table_writes.commit_manifest
     state = {"fired": False}
 
-    def hook(spark_, table_dir, sid, entries, **kw):
+    def hook(spark_, table_dir, man, **kw):
         # First commit attempt: a METADATA committer (fold_deletes'
         # inert clear, an evolve commit) lands the SAME id first.
         if not state["fired"]:
@@ -125,14 +128,16 @@ def test_append_with_retry_two_writer_interleave(
             orig(
                 spark,
                 table_dir,
-                sid,
-                dict(man0["entries"]),
-                schema_fields=man0.get("schema"),
-                maintenance=True,
+                successor(
+                    man0,
+                    man["snapshot_id"],
+                    dict(man0["entries"]),
+                    maintenance=True,
+                ),
             )
-        return orig(spark_, table_dir, sid, entries, **kw)
+        return orig(spark_, table_dir, man, **kw)
 
-    monkeypatch.setattr(snap, "commit_manifest", hook)
+    monkeypatch.setattr(table_writes, "commit_manifest", hook)
     sid = append_with_retry(
         spark.range(100, 150).selectExpr("id AS k"), t
     )
@@ -321,7 +326,7 @@ def test_dml_loser_leaves_no_orphan_generation(spark, tmp_path, monkeypatch):
     """When the DML claims its dir but loses the MANIFEST race, it
     must unclaim (delete its own staged generation) so the id isn't
     wedged for every later committer."""
-    from big_data_spark.io.snapshot import commit_manifest, hadoop_fs
+    from big_data_spark.io.snapshot import hadoop_fs
 
     t = str(tmp_path / "loser")
     append_snapshot(
@@ -329,25 +334,25 @@ def test_dml_loser_leaves_no_orphan_generation(spark, tmp_path, monkeypatch):
         t,
         snapshot_id=0,
     )
-    real_commit = snap.commit_manifest
+    real_commit = dml.commit_manifest
     state = {"raced": False}
 
-    def race_then_commit(spark_, table_dir, sid, entries, **kw):
+    def race_then_commit(spark_, table_dir, man, **kw):
         if not state["raced"]:
             state["raced"] = True
             # Interloper (e.g. evolve_schema, metadata-only) takes the
             # id first — carrying the PREDECESSOR's entries, never a
             # dir it doesn't hold.
+            prev = read_manifest(spark_, table_dir, man["snapshot_id"] - 1)
             real_commit(
                 spark_,
                 table_dir,
-                sid,
-                dict(read_manifest(spark_, table_dir, sid - 1)["entries"]),
+                {**man, "entries": dict(prev["entries"])},
                 **kw,
             )
-        return real_commit(spark_, table_dir, sid, entries, **kw)
+        return real_commit(spark_, table_dir, man, **kw)
 
-    monkeypatch.setattr(snap, "commit_manifest", race_then_commit)
+    monkeypatch.setattr(dml, "commit_manifest", race_then_commit)
     with pytest.raises(SnapshotConflict):
         snap.delete_where(spark, t, "k < 50")
     monkeypatch.undo()
@@ -521,7 +526,7 @@ def test_dml_attempts_rebase_retries(spark, tmp_path, monkeypatch):
     append_snapshot(
         spark.range(100).selectExpr("id AS k"), t, snapshot_id=0
     )
-    real = snap._rewrite_where
+    real = dml._rewrite_where
     state = {"n": 0}
 
     def flaky(*a, **kw):
@@ -534,14 +539,14 @@ def test_dml_attempts_rebase_retries(spark, tmp_path, monkeypatch):
             raise SnapshotConflict("simulated race")
         return real(*a, **kw)
 
-    monkeypatch.setattr(snap, "_rewrite_where", flaky)
+    monkeypatch.setattr(dml, "_rewrite_where", flaky)
     st = snap.delete_where(spark, t, "k < 10", attempts=3)
     monkeypatch.undo()
     assert st["deleted_rows"] == 10 and state["n"] == 2
     assert read_snapshot(spark, t).count() == 100
     # attempts=1 (default) surfaces the conflict unchanged.
     state["n"] = 0
-    monkeypatch.setattr(snap, "_rewrite_where", flaky)
+    monkeypatch.setattr(dml, "_rewrite_where", flaky)
     with pytest.raises(SnapshotConflict):
         snap.delete_where(spark, t, "k >= 200")
     monkeypatch.undo()

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import aggregates, sidecars
 from big_data_spark.io.snapshot import (
     analyze_table,
     append_snapshot,
@@ -72,14 +73,14 @@ def test_fresh_process_pays_one_sidecar_read(spark, tmp_path):
     t = str(tmp_path / "con2")
     _mk_generations(spark, t, 10)
     consolidate_stats(spark, t, max_sidecars=4)
-    snap._SIDECAR_CACHE.clear()
-    base = snap._SIDECAR_FS_READS
+    sidecars._SIDECAR_CACHE.clear()
+    base = sidecars._SIDECAR_FS_READS
     agg = metadata_aggregate(spark, t, columns=["k"])
     assert agg["rows"] == 50 and agg["min"]["k"] == 0
-    assert snap._SIDECAR_FS_READS - base == 1
+    assert sidecars._SIDECAR_FS_READS - base == 1
     # repeat aggregates are pure cache hits
     metadata_aggregate(spark, t, columns=["k"])
-    assert snap._SIDECAR_FS_READS - base == 1
+    assert sidecars._SIDECAR_FS_READS - base == 1
 
 
 def test_below_threshold_is_noop(spark, tmp_path):
@@ -91,7 +92,7 @@ def test_below_threshold_is_noop(spark, tmp_path):
 
 
 def test_analyze_consolidates_automatically(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(snap, "_CONSOLIDATE_MAX_SIDECARS", 6)
+    monkeypatch.setattr(aggregates, "_CONSOLIDATE_MAX_SIDECARS", 6)
     t = str(tmp_path / "con4")
     _mk_generations(spark, t, 9)
     # fully covered table: ANALYZE's no-op branch now consolidates
@@ -150,7 +151,7 @@ def test_torn_consolidated_reference_refuses_loudly(spark, tmp_path):
         os.remove(crc)
     with open(path, "w") as fh:
         fh.write(json.dumps(doc, sort_keys=True))
-    snap._SIDECAR_CACHE.clear()
+    sidecars._SIDECAR_CACHE.clear()
     with pytest.raises(ValueError, match="docs are missing"):
         metadata_aggregate(spark, t, columns=["k"])
     # ANALYZE re-sweeps the torn generation and the aggregate answers
@@ -277,7 +278,7 @@ def test_consolidation_racing_appender_never_tears(
         f"seed={seed} conflicts={conflicts[0]}: "
         f"(+{sorted(got - want)[:5]} -{sorted(want - got)[:5]})"
     )
-    snap._SIDECAR_CACHE.clear()
+    sidecars._SIDECAR_CACHE.clear()
     agg = metadata_aggregate(spark, t, columns=["k"])
     assert agg["rows"] == len(want) and agg["max"]["k"] == max(want)
 
@@ -347,7 +348,7 @@ def test_repeat_consolidation_rewrites_only_the_tail(spark, tmp_path):
     # Refolded 10 gens cut one new full + nothing left over.
     assert len(rels) == 3 and len(rels - sealed) == 1
     assert "consolidated-f10-" in next(iter(rels - sealed))
-    snap._SIDECAR_CACHE.clear()
+    sidecars._SIDECAR_CACHE.clear()
     agg = metadata_aggregate(spark, t, columns=["k"])
     assert agg["rows"] == 150 and agg["max"]["k"] == 149
 
@@ -358,12 +359,12 @@ def test_fresh_process_reads_at_most_shard_count_files(
     t = str(tmp_path / "shard3")
     _mk_generations(spark, t, 25)
     consolidate_stats(spark, t, max_sidecars=4, shard_gens=10)
-    snap._SIDECAR_CACHE.clear()
-    base = snap._SIDECAR_FS_READS
+    sidecars._SIDECAR_CACHE.clear()
+    base = sidecars._SIDECAR_FS_READS
     agg = metadata_aggregate(spark, t, columns=["k"])
     # 3 shards <= bulk threshold: the serial cached loop reads each
     # shard file exactly once.
-    assert snap._SIDECAR_FS_READS - base <= 3
+    assert sidecars._SIDECAR_FS_READS - base <= 3
     assert agg["rows"] == 125
 
 
@@ -404,7 +405,7 @@ def test_mostly_dead_full_shard_gets_compacted(spark, tmp_path):
         )
     st = consolidate_stats(spark, t, max_sidecars=2, shard_gens=10)
     assert st["merged_sidecars"] >= 2
-    snap._SIDECAR_CACHE.clear()
+    sidecars._SIDECAR_CACHE.clear()
     agg = metadata_aggregate(spark, t, columns=["k"])
     assert agg["rows"] == 20 + 30 and agg["min"]["k"] == 80
 
@@ -426,7 +427,7 @@ def test_prefetch_attributes_docs_to_the_rel_actually_read(
     for i in range(34):
         g = f"s={i}"
         f_rel = f"_data/{g}/part-0.parquet"
-        rel = snap._write_stats_sidecar(
+        rel = sidecars._write_stats_sidecar(
             spark,
             t,
             g,
@@ -467,8 +468,8 @@ def test_prefetch_attributes_docs_to_the_rel_actually_read(
         json.dump({"gens": {"s=0": stale, **own}}, fh)
     for g in own:
         side[g] = con_rel
-    snap._SIDECAR_CACHE.clear()
-    out = snap._prefetch_sidecars(
+    sidecars._SIDECAR_CACHE.clear()
+    out = sidecars._prefetch_sidecars(
         spark, t, {"sidecars": side}, sorted(side)
     )
     # 36 distinct uncached files > threshold: the bulk path ran.
@@ -478,7 +479,7 @@ def test_prefetch_attributes_docs_to_the_rel_actually_read(
     }
     # Cache attribution: the per-gen rel holds the FRESH doc, the
     # consolidated rel holds the raw consolidated doc.
-    assert snap._SIDECAR_CACHE[(t, fresh_rel)]["rows"] == {
+    assert sidecars._SIDECAR_CACHE[(t, fresh_rel)]["rows"] == {
         "_data/s=0/part-0.parquet": 10
     }
-    assert "gens" in snap._SIDECAR_CACHE[(t, con_rel)]
+    assert "gens" in sidecars._SIDECAR_CACHE[(t, con_rel)]

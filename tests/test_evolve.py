@@ -299,7 +299,7 @@ def test_evolve_vs_concurrent_committer_conflicts(spark, tmp_path):
     man = json.load(open(man_path))
     assert man["rename_log"] == [[3, "rename", "amt", "amount"]]
     # Re-claiming the same id conflicts.
-    from big_data_spark.io.snapshot import _claim_check
+    from big_data_spark.io.manifest import _claim_check
 
     with pytest.raises(SnapshotConflict):
         _claim_check(spark, t, 3)

@@ -8,8 +8,9 @@ from __future__ import annotations
 import pytest
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import manifest
+from big_data_spark.io.manifest import commit_manifest, successor
 from big_data_spark.io.snapshot import (
-    commit_manifest,
     read_changes,
     resolve_as_of_ts,
     snapshot_ids,
@@ -29,17 +30,14 @@ def long_table(spark, tmp_path):
         spark.createDataFrame([(1, "a")], "k int, v string"), t, 0
     )
     man = snap.read_manifest(spark, t, 0)
-    fields = man["schema"]
     entries = dict(man["entries"])
     prev = man
     for sid in range(1, N_COMMITS):
         commit_manifest(
             spark,
             t,
-            sid,
-            entries,
-            schema_fields=fields,
-            maintenance=True,  # carry-only: content unchanged
+            # carry-only: content unchanged
+            successor(prev, sid, entries, maintenance=True),
             prev_man=prev,
         )
         prev = snap.read_manifest(spark, t, sid)
@@ -48,13 +46,13 @@ def long_table(spark, tmp_path):
 
 def _counting(monkeypatch):
     calls = {"n": 0}
-    real = snap.read_manifest
+    real = manifest.read_manifest
 
     def counted(spark_, table_dir, sid):
         calls["n"] += 1
         return real(spark_, table_dir, sid)
 
-    monkeypatch.setattr(snap, "read_manifest", counted)
+    monkeypatch.setattr(manifest, "read_manifest", counted)
     return calls
 
 

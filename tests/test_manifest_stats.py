@@ -9,6 +9,7 @@ only new generations are swept, once, at commit time."""
 from __future__ import annotations
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import layout, manifest, sidecars
 import big_data_spark.io.stats as stats_mod
 from big_data_spark.io.snapshot import (
     append_snapshot,
@@ -94,13 +95,13 @@ def test_carry_sweeps_only_new_generations(spark, tmp_path, monkeypatch):
     append_snapshot(_mk(spark, 0, 50), t, snapshot_id=0)
     man0 = latest_manifest(spark, t)
     swept: list[str] = []
-    real = snap._sweep_generation_stats
+    real = sidecars._sweep_generation_stats
 
     def counting(spark_, td, gen_rel, cols, **kw):
         swept.append(gen_rel)
         return real(spark_, td, gen_rel, cols, **kw)
 
-    monkeypatch.setattr(snap, "_sweep_generation_stats", counting)
+    monkeypatch.setattr(sidecars, "_sweep_generation_stats", counting)
     append_snapshot(_mk(spark, 50, 80), t, snapshot_id=1)
     man1 = latest_manifest(spark, t)
     assert swept == ["_data/s=1"]  # the carried generation never re-swept
@@ -145,7 +146,7 @@ def test_rollback_carries_target_stats_metadata_only(
     delete_where(spark, t, "k < 10")
     swept: list = []
     monkeypatch.setattr(
-        snap,
+        sidecars,
         "_sweep_generation_stats",
         lambda *a, **k: swept.append(a) or {},
     )
@@ -209,7 +210,7 @@ def test_statless_backfill_resolves_renamed_columns(
     None-recorded column would be permanently unprunable (round-11
     review)."""
     t = str(tmp_path / "statless_ren")
-    monkeypatch.setattr(snap, "_auto_commit_stats", lambda *a, **k: None)
+    monkeypatch.setattr(manifest, "_auto_commit_stats", lambda *a, **k: None)
     append_snapshot(
         spark.range(0, 100)
         .selectExpr("id AS amount", "id AS other")
@@ -274,7 +275,7 @@ def test_manifest_size_is_o_generations_not_o_files(spark, tmp_path):
         "generations — more than sidecar-path growth"
     )
     man = latest_manifest(spark, t)
-    assert set(snap._stats_covered(man["stats"])) == {
+    assert set(sidecars._stats_covered(man["stats"])) == {
         f"s={i}" for i in range(n_gens)
     }
     # Pruning through the sidecars equals the footer-path decision.
@@ -371,18 +372,18 @@ def test_metadata_aggregate_bulk_prefetches_many_generations(
     from big_data_spark.io.snapshot import metadata_aggregate
 
     t = str(tmp_path / "bulk")
-    n = snap._BULK_MANIFEST_THRESHOLD + 3
+    n = layout._BULK_MANIFEST_THRESHOLD + 3
     for i in range(n):
         append_snapshot(_mk(spark, i * 10, (i + 1) * 10), t, snapshot_id=i)
-    snap._SIDECAR_CACHE.clear()
+    sidecars._SIDECAR_CACHE.clear()
     serial_reads: list = []
-    real = snap._read_sidecar
+    real = sidecars._read_sidecar
 
     def counting(spark_, td, rel):
         serial_reads.append(rel)
         return real(spark_, td, rel)
 
-    monkeypatch.setattr(snap, "_read_sidecar", counting)
+    monkeypatch.setattr(sidecars, "_read_sidecar", counting)
     got = metadata_aggregate(spark, t)
     assert got["rows"] == n * 10
     assert got["min"]["k"] == 0 and got["max"]["k"] == n * 10 - 1
@@ -397,6 +398,6 @@ def test_metadata_aggregate_bulk_prefetches_many_generations(
     man = latest_manifest(spark, t)
     gens = set(man["stats"]["sidecars"])
     assert (
-        snap._prefetch_sidecars(spark, t, man["stats"], gens) == {}
+        sidecars._prefetch_sidecars(spark, t, man["stats"], gens) == {}
     )
     assert metadata_aggregate(spark, t)["rows"] == n * 10

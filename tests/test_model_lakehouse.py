@@ -1116,7 +1116,7 @@ def test_typed_predicate_walk_matches_model(spark, tmp_path, seed):
 def test_analyze_races_writer_gracefully(spark, tmp_path, seed):
     import threading
 
-    import big_data_spark.io.snapshot as snap_mod
+    from big_data_spark.io import manifest
     from big_data_spark.io.snapshot import (
         SnapshotConflict,
         analyze_table,
@@ -1127,8 +1127,8 @@ def test_analyze_races_writer_gracefully(spark, tmp_path, seed):
     rng = random.Random(seed)
     t = str(tmp_path / f"anrace_{seed}")
     # A statless base generation gives ANALYZE real backfill work.
-    orig = snap_mod._auto_commit_stats
-    snap_mod._auto_commit_stats = lambda *a, **k: None
+    orig = manifest._auto_commit_stats
+    manifest._auto_commit_stats = lambda *a, **k: None
     try:
         append_snapshot(
             spark.createDataFrame(
@@ -1138,7 +1138,7 @@ def test_analyze_races_writer_gracefully(spark, tmp_path, seed):
             snapshot_id=0,
         )
     finally:
-        snap_mod._auto_commit_stats = orig
+        manifest._auto_commit_stats = orig
     model = {0: 0.0, 1: 1.0}
     errors: list = []
     analyze_outcomes = {"ok": 0, "lost": 0}

@@ -143,7 +143,7 @@ def test_repartition_all_stats_cols_become_partition_cols(spark, tmp_path):
 def test_repartition_refuses_noop_and_races_loudly(
     spark, tmp_path, monkeypatch
 ):
-    import big_data_spark.io.snapshot as snap
+    from big_data_spark.io import table_writes
 
     t = str(tmp_path / "rp4")
     write_snapshot(_mk(spark), t)
@@ -152,7 +152,7 @@ def test_repartition_refuses_noop_and_races_loudly(
         repartition_table(spark, t, "d")
     # a commit landing DURING the rewrite: the repartition loses the
     # id race loudly instead of dropping the racer's commit
-    real = snap._stage_and_claim
+    real = table_writes._stage_and_claim
 
     def racing(spark_, table_dir, sid, write_fn):
         write_snapshot(
@@ -160,7 +160,7 @@ def test_repartition_refuses_noop_and_races_loudly(
         )
         return real(spark_, table_dir, sid + 1, write_fn)
 
-    monkeypatch.setattr(snap, "_stage_and_claim", racing)
+    monkeypatch.setattr(table_writes, "_stage_and_claim", racing)
     with pytest.raises(SnapshotConflict):
         repartition_table(spark, t, ["d", "region"])
     monkeypatch.undo()

@@ -12,9 +12,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_spark.io.manifest import commit_manifest, successor
 from big_data_spark.io.snapshot import (
     SnapshotConflict,
-    commit_manifest,
     generation_dir,
     latest_manifest,
     read_manifest,
@@ -84,7 +84,9 @@ def test_commit_conflict_first_wins(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "k int, v string")
     sid = write_snapshot(df, t)
     with pytest.raises(SnapshotConflict):
-        commit_manifest(spark, t, sid, {"": "_data/s=0"})
+        commit_manifest(
+            spark, t, successor(latest_manifest(spark, t), sid, {"": "_data/s=0"})
+        )
     # the losing committer's temp file is cleaned up
     assert not glob.glob(f"{t}/_manifests/.tmp-*")
 
@@ -998,7 +1000,7 @@ def test_range_hints_parser():
     """_range_hints: sound bounds from conjunctive SQL text; OR/NOT
     or unparseable terms degrade safely (subset of conjuncts or
     None), never a wrong bound."""
-    from big_data_spark.io.snapshot import _range_hints
+    from big_data_spark.io.dml import _range_hints
 
     assert _range_hints("k >= 250 AND k < 320") == {"k": (250.0, 320.0)}
     assert _range_hints("(k >= 2) AND (v <= 7.5)") == {
@@ -1031,8 +1033,8 @@ def test_delete_where_prunes_files_with_identical_result(
     a range DELETE on a clustered layout opens FEWER files (now
     decided from MANIFEST stats: zero footer opens — round 11), while
     the committed result matches the unpruned path row for row."""
-    import big_data_spark.io.snapshot as snap
     import big_data_spark.io.stats as stats_mod
+    from big_data_spark.io import dml
     from big_data_spark.io.snapshot import append_snapshot, delete_where
 
     def build(tag):
@@ -1048,7 +1050,7 @@ def test_delete_where_prunes_files_with_identical_result(
         return t
 
     scanned = []
-    real_read = snap.read_entries
+    real_read = dml.read_entries
 
     def spy_read(spark_, td, entries, **kw):
         out = real_read(spark_, td, entries, **kw)
@@ -1059,7 +1061,7 @@ def test_delete_where_prunes_files_with_identical_result(
     def no_footers(*a, **k):  # stats-bearing table: footer sweep banned
         raise AssertionError("footer sweep ran despite manifest stats")
 
-    monkeypatch.setattr(snap, "read_entries", spy_read)
+    monkeypatch.setattr(dml, "read_entries", spy_read)
     monkeypatch.setattr(stats_mod, "prune_files_multi", no_footers)
     t_pruned = build("prune_on")
     st1 = delete_where(spark, t_pruned, "k >= 250 AND k < 320")
@@ -1072,7 +1074,7 @@ def test_delete_where_prunes_files_with_identical_result(
     )
 
     # Hints off -> identical table state and stats.
-    monkeypatch.setattr(snap, "_range_hints", lambda cond: None)
+    monkeypatch.setattr(dml, "_range_hints", lambda cond: None)
     t_plain = build("prune_off")
     st2 = delete_where(spark, t_plain, "k >= 250 AND k < 320")
     monkeypatch.undo()
@@ -1085,13 +1087,13 @@ def test_delete_where_prunes_files_with_identical_result(
 # ----------------------------------------------- on-disk format version
 
 
-def _strip_format_version(table_dir, sid):
+def _strip_format_version(table_dir, sid, key="format_version"):
     import json
 
     path = f"{table_dir}/_manifests/manifest-{sid:012d}.json"
     with open(path) as fh:
         man = json.load(fh)
-    del man["format_version"]
+    del man[key]
     with open(path, "w") as fh:
         json.dump(man, fh, sort_keys=True)
     crc = f"{table_dir}/_manifests/.manifest-{sid:012d}.json.crc"
@@ -1108,7 +1110,7 @@ def test_unstamped_manifest_refused_on_serial_and_bulk_reads(
     threshold."""
     import re
 
-    import big_data_spark.io.snapshot as snap
+    from big_data_spark.io import layout
     from big_data_spark.io.snapshot import table_history
 
     t = str(tmp_path / "unstamped")
@@ -1121,17 +1123,125 @@ def test_unstamped_manifest_refused_on_serial_and_bulk_reads(
     t2 = str(tmp_path / "unstamped_bulk")
     write_snapshot(spark.range(5).selectExpr("id AS k"), t2)
     man = latest_manifest(spark, t2)
-    n = snap._BULK_MANIFEST_THRESHOLD + 1
+    n = layout._BULK_MANIFEST_THRESHOLD + 1
     for sid in range(1, n):
-        commit_manifest(
-            spark, t2, sid, man["entries"], schema_fields=man["schema"]
-        )
+        commit_manifest(spark, t2, successor(man, sid, man["entries"]))
     assert len(snapshot_ids(spark, t2)) == n
     table_history(spark, t2)  # every manifest stamped: reads fine
     _strip_format_version(t2, n // 2)
     msg2 = rf"^{re.escape(repr(t2))} has on-disk format version None, .*rebuild it from source$"
     with pytest.raises(ValueError, match=msg2):
         table_history(spark, t2)
+
+
+def test_schemaless_manifest_refused_on_serial_and_bulk_reads(
+    spark, tmp_path
+):
+    """Every commit records a schema, so a v1 manifest without one was
+    not written by this engine: both manifest parsers refuse it with
+    one message naming the table and the recovery."""
+    import re
+
+    from big_data_spark.io import layout
+    from big_data_spark.io.snapshot import table_history
+
+    t = str(tmp_path / "schemaless")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t)
+    _strip_format_version(t, 0, key="schema")
+    msg = rf"^{re.escape(repr(t))} manifest 0 has no committed schema .*rebuild it from source$"
+    with pytest.raises(ValueError, match=msg):
+        read_snapshot(spark, t)
+
+    t2 = str(tmp_path / "schemaless_bulk")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t2)
+    man = latest_manifest(spark, t2)
+    n = layout._BULK_MANIFEST_THRESHOLD + 1
+    for sid in range(1, n):
+        commit_manifest(spark, t2, successor(man, sid, man["entries"]))
+    _strip_format_version(t2, n // 2, key="schema")
+    with pytest.raises(ValueError, match="has no committed schema"):
+        table_history(spark, t2)
+
+
+def test_successor_carries_table_state_but_not_commit_keys():
+    """The one carry-forward rule: table-state keys inherit unless
+    named, per-commit keys never do, and an unknown key is refused."""
+    prev = {
+        "format_version": 1,
+        "snapshot_id": 4,
+        "entries": {"": "_data/s=4"},
+        "partition_col": None,
+        "schema": [{"name": "k", "type": "bigint"}],
+        "layout_by": "b",
+        "maintenance": True,
+        "deletes": ["_deletes/d=3", "_deletes/d=2"],
+        "rename_log": [[3, "rename", "a", "k"]],
+        "cdf": "_cdf/c=4",
+        "stats": None,
+        "committed_at_ms": 7,
+    }
+    nxt = successor(prev, 5, {"b5": "_data/s=5"})
+    assert nxt == {
+        "snapshot_id": 5,
+        "entries": {"b5": "_data/s=5"},
+        "partition_col": None,
+        "schema": prev["schema"],
+        "layout_by": "b",
+        "deletes": ["_deletes/d=2", "_deletes/d=3"],
+        "rename_log": prev["rename_log"],
+        "maintenance": False,
+        "cdf": None,
+    }
+    cleared = successor(
+        prev, 5, {}, deletes=[], layout_by=None, maintenance=True
+    )
+    assert (cleared["deletes"], cleared["layout_by"]) == ([], None)
+    assert cleared["maintenance"] is True
+    assert cleared["rename_log"] == prev["rename_log"]
+    first = successor(None, 0, {}, schema=[])
+    assert (first["deletes"], first["rename_log"]) == ([], [])
+    assert first["partition_col"] is None and first["layout_by"] is None
+    with pytest.raises(TypeError, match="not manifest keys"):
+        successor(prev, 5, {}, stats=None)
+
+
+def test_zero_column_frame_commits_nothing(spark, tmp_path):
+    """A zero-column DataFrame cannot be written as parquet: the write
+    fails before any manifest exists, so no schema-less (``[]``)
+    commit can reach disk."""
+    t = str(tmp_path / "nocols")
+    with pytest.raises(Exception, match="(?i)empty|schema"):
+        write_snapshot(spark.range(3).select(), t)
+    assert snapshot_ids(spark, t) == []
+
+
+def test_snapshot_module_keeps_its_public_names():
+    """``big_data_spark.io.snapshot`` re-exports every public name it
+    defined before the table format was split into modules (plus
+    ``hadoop_fs``, which callers imported through it)."""
+    import big_data_spark.io.snapshot as snap
+
+    frozen = [
+        "FORMAT_VERSION", "SnapshotConflict", "abandon_staged",
+        "analyze_table", "append_snapshot", "append_with_retry",
+        "bare_path", "check_schema_evolution", "clear_generation",
+        "commit_manifest", "consolidate_stats", "delete_tag",
+        "delete_where", "entry_partition_values", "evolve_schema",
+        "fold_deletes", "follow_changes", "format_version_error",
+        "generation_dir", "hadoop_fs", "latest_manifest", "list_tags",
+        "load_generation_stats", "metadata_aggregate",
+        "metadata_group_aggregate", "partition_entry_key",
+        "publish_staged", "read_changes", "read_delete_positions",
+        "read_entries", "read_manifest", "read_snapshot", "read_staged",
+        "repartition_table", "resolve_as_of_ts", "rollback_snapshot",
+        "select_partition_entries", "show_partitions", "snapshot_ids",
+        "stage_snapshot", "table_detail", "table_history",
+        "tag_snapshot", "update_where", "vacuum_snapshots",
+        "write_snapshot", "write_snapshot_partial",
+    ]
+    assert len(frozen) == 47
+    missing = [n for n in frozen if not hasattr(snap, n)]
+    assert missing == []
 
 
 def test_catalog_binding_of_another_version_refused(spark, tmp_path):

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_spark.catalog import SnapshotCatalog, as_of
+from big_data_spark.io import sidecars, table_writes
+from big_data_spark.io.manifest import SnapshotConflict
 from big_data_spark.io.snapshot import append_snapshot, read_snapshot
 from big_data_spark.sqldml import execute_dml, is_dml
 
@@ -610,30 +612,28 @@ def test_losing_concurrent_ctas_spares_the_winners_table(
     3: the failure-cleanup handler deleted on any exception)."""
     import os
 
-    import big_data_spark.io.snapshot as snap
-
     c = SnapshotCatalog(spark, base_dir=str(tmp_path / "lake"))
     spark.range(5).selectExpr("id AS k").createOrReplaceTempView("src_w")
 
-    real_commit = snap.commit_manifest
+    real_commit = table_writes.commit_manifest
     raced = {"done": False}
 
-    def winner_lands_first(spark_, table_dir, sid, entries, **kw):
+    def winner_lands_first(spark_, table_dir, man, **kw):
         if not raced["done"]:
             raced["done"] = True
             # The concurrent winner commits the SAME id first.
             real_commit(
                 spark_,
                 table_dir,
-                sid,
-                {"": "_data/s=999"},
-                schema_fields=kw.get("schema_fields"),
+                {**man, "entries": {"": "_data/s=999"}},
                 stats=None,
             )
-        return real_commit(spark_, table_dir, sid, entries, **kw)
+        return real_commit(spark_, table_dir, man, **kw)
 
-    monkeypatch.setattr(snap, "commit_manifest", winner_lands_first)
-    with pytest.raises(snap.SnapshotConflict):
+    monkeypatch.setattr(
+        table_writes, "commit_manifest", winner_lands_first
+    )
+    with pytest.raises(SnapshotConflict):
         c.sql("CREATE TABLE raced AS SELECT k FROM src_w")
     monkeypatch.undo()
     # The winner's manifest survives the loser's failure.
@@ -1238,7 +1238,6 @@ def test_time_travel_sum_precheck_skips_sidecar_fold(
     alone — zero sidecar reads — instead of paying the full stats
     fold before falling through; an integer column still answers
     scan-free at the pinned version."""
-    import big_data_spark.io.snapshot as snap
 
     t = str(tmp_path / "ttsum")
     for i in range(3):
@@ -1251,10 +1250,10 @@ def test_time_travel_sum_precheck_skips_sidecar_fold(
         )
     cat = SnapshotCatalog(spark)
     cat.register("ttsum", t)
-    snap._SIDECAR_CACHE.clear()
-    base = snap._SIDECAR_FS_READS
+    sidecars._SIDECAR_CACHE.clear()
+    base = sidecars._SIDECAR_FS_READS
     d = cat.sql("SELECT SUM(dec) AS s FROM ttsum VERSION AS OF 1")
-    assert snap._SIDECAR_FS_READS == base  # declined pre-fold
+    assert sidecars._SIDECAR_FS_READS == base  # declined pre-fold
     assert d.inputFiles() != []
     assert str(d.collect()[0]["s"]) == "190.00"
     # integer SUM at a pinned version still answers metadata-only

@@ -20,10 +20,11 @@ import pytest
 from pyspark.sql import functions as F
 
 import big_data_spark.io.snapshot as snap
+from big_data_spark.io import manifest, sidecars
 import big_data_spark.io.stats as stats_mod
 from big_data_spark.io.readers import read_pruned
+from big_data_spark.io.dml import _range_hints
 from big_data_spark.io.snapshot import (
-    _range_hints,
     delete_where,
     read_snapshot,
     write_snapshot,
@@ -397,7 +398,7 @@ def test_analyze_backfills_statless_generations(
 
     t = str(tmp_path / "an")
     df = spark.range(0, 1000).selectExpr("id AS k", "id * 2.0 AS v")
-    monkeypatch.setattr(snap, "_auto_commit_stats", lambda *a, **k: None)
+    monkeypatch.setattr(manifest, "_auto_commit_stats", lambda *a, **k: None)
     write_snapshot(df.repartitionByRange(4, "k"), t)
     monkeypatch.undo()
     assert snap.latest_manifest(spark, t).get("stats") is None
@@ -469,11 +470,11 @@ def test_local_and_distributed_sweep_agree(spark, tmp_path, monkeypatch):
         "/".join(rel.split("/")[:2]) for rel in man["entries"].values()
     }
     # both paths over the SAME immutable generation dir
-    local, local_rows = snap._sweep_generation_stats(
+    local, local_rows = sidecars._sweep_generation_stats(
         spark, t1, gen_rel, cols
     )
-    monkeypatch.setattr(snap, "_LOCAL_SWEEP_MAX_FILES", 0)
-    dist, dist_rows = snap._sweep_generation_stats(
+    monkeypatch.setattr(sidecars, "_LOCAL_SWEEP_MAX_FILES", 0)
+    dist, dist_rows = sidecars._sweep_generation_stats(
         spark, t1, gen_rel, cols
     )
     assert local == dist
@@ -485,7 +486,7 @@ def test_local_and_distributed_sweep_agree(spark, tmp_path, monkeypatch):
 
 
 def test_python_unescape_matches_jvm(spark):
-    from big_data_spark.io.snapshot import (
+    from big_data_spark.io.manifest import (
         _hive_escape,
         _hive_unescape,
         _unescape_path_py,
@@ -813,11 +814,11 @@ def test_sweep_paths_agree_on_empty_files(spark, tmp_path, monkeypatch):
         "/".join(rel.split("/")[:2]) for rel in man["entries"].values()
     }
     cols = man["stats"]["columns"]
-    local, local_rows = snap._sweep_generation_stats(
+    local, local_rows = sidecars._sweep_generation_stats(
         spark, t, gen_rel, cols
     )
-    monkeypatch.setattr(snap, "_LOCAL_SWEEP_MAX_FILES", 0)
-    dist, dist_rows = snap._sweep_generation_stats(
+    monkeypatch.setattr(sidecars, "_LOCAL_SWEEP_MAX_FILES", 0)
+    dist, dist_rows = sidecars._sweep_generation_stats(
         spark, t, gen_rel, cols
     )
     assert local == dist and local_rows == dist_rows
@@ -1009,7 +1010,7 @@ def test_metadata_sum_uncovered_omits_or_refuses(
     assert got["rows"] == 110 and got["sum"]["k"] == sum(range(110))
 
     t2 = str(tmp_path / "msumcov2")
-    real = snap._sweep_generation_sums
+    real = sidecars._sweep_generation_sums
 
     def without_v(*a, **k):
         sums, nnn = real(*a, **k)
@@ -1018,7 +1019,7 @@ def test_metadata_sum_uncovered_omits_or_refuses(
                 cols.pop("v", None)
         return sums, nnn
 
-    monkeypatch.setattr(snap, "_sweep_generation_sums", without_v)
+    monkeypatch.setattr(sidecars, "_sweep_generation_sums", without_v)
     write_snapshot(
         spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v").coalesce(2),
         t2,

@@ -313,3 +313,32 @@ def test_wap_partitioned_refusals(spark, tmp_path):
     import glob
 
     assert glob.glob(f"{t}/_staging/*/day=__HIVE_DEFAULT_PARTITION__") == []
+
+
+def test_staged_batch_without_schema_file_asks_to_restage(
+    spark, tmp_path
+):
+    """stage_snapshot writes ``_schema.json`` before it returns the
+    token; a staged dir without it is refused by both the audit read
+    and the publish — never re-inferred (re-inference would commit a
+    schema the writer never had)."""
+    import os
+
+    t = str(tmp_path / "nosidecar")
+    _base(spark, t)
+    token = stage_snapshot(
+        spark.range(100, 110).selectExpr(
+            "id AS k", "cast(id as double) AS v"
+        ),
+        t,
+    )
+    os.remove(f"{t}/_staging/{token}/_schema.json")
+    crc = f"{t}/_staging/{token}/._schema.json.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+    msg = rf"staged batch {token!r} .*re-stage it"
+    with pytest.raises(ValueError, match=msg):
+        read_staged(spark, t, token)
+    with pytest.raises(ValueError, match=msg):
+        publish_staged(spark, t, token)
+    assert read_snapshot(spark, t).count() == 100
