@@ -145,7 +145,6 @@ def read_snapshot_point(
     table_dir: str,
     item_col: str,
     value,
-    residual: bool = True,
 ) -> DataFrame:
     """Point lookup through the Bloom file index: EXACTLY
     ``read_snapshot(...).filter(col == value)`` (lossless — the
@@ -153,8 +152,7 @@ def read_snapshot_point(
     false positives), but the scan opens only the files whose Bloom
     matches, plus any entries committed after the index was built
     (conservatively read in full). Falls back to a plain filtered
-    read when no index exists. ``residual=False`` is the audit view
-    (every row of every kept file)."""
+    read when no index exists."""
     from big_data_spark.io.manifest import (
         dir_cols,
         latest_manifest,
@@ -301,6 +299,4 @@ def read_snapshot_point(
         from big_data_spark.io.table_reads import _pad_to_schema
 
         df = _pad_to_schema(df, man["schema"])
-    if residual:
-        df = df.where(F.col(item_col) == F.lit(value))
-    return df
+    return df.where(F.col(item_col) == F.lit(value))

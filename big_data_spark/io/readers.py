@@ -310,7 +310,6 @@ def read_pruned(
     column: str | dict[str, tuple[float | None, float | None]],
     lo: float | None = None,
     hi: float | None = None,
-    residual: bool = True,
 ) -> DataFrame:
     """Parquet read with footer-statistics data skipping applied UP
     FRONT: only the files whose [min, max] interval for ``column``
@@ -338,12 +337,11 @@ def read_pruned(
     columns — the multi-dimensional case Z-order layouts exist for
     (any one column's footer interval can veto a file).
 
-    ``residual=True`` (default) applies the predicate as a filter on
-    the result too — pruning is file-granular, so kept files still
-    carry out-of-range rows; the residual makes the result exactly
+    The predicate is applied as a filter on the result too — pruning
+    is file-granular, so kept files still carry out-of-range rows; the
+    residual filter makes the result exactly
     ``read(path).filter(lo <= column <= hi)`` (lossless-ness proven
-    in tests/test_stats.py). ``residual=False`` returns every row of
-    every kept file — the audit view.
+    in tests/test_stats.py).
     """
     from big_data_spark.io.stats import prune_files_multi, range_predicate
 
@@ -365,4 +363,4 @@ def read_pruned(
     # documented full-scan-filter equivalence); harmless when the
     # layout is flat.
     df = spark.read.option("basePath", path).parquet(*kept)
-    return df.filter(cond) if residual else df
+    return df.filter(cond)

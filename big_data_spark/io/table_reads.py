@@ -358,7 +358,6 @@ def read_snapshot(
     below: int | None = None,
     as_of: int | None = None,
     predicate: dict[str, tuple] | None = None,
-    residual: bool = True,
     as_of_ts: int | None = None,
     tag: str | None = None,
     partitions: dict | None = None,
@@ -393,10 +392,9 @@ def read_snapshot(
     only the live files whose min/max intervals can intersect the
     ranges enter the scan — the double pruning a table-format reader
     performs, previously available only for raw dirs via
-    ``read_pruned`` (round-6 verdict gap). ``residual=True`` (default)
-    re-applies the predicate row-level, so the result is EXACTLY
-    ``read_snapshot(...).filter(pred)`` (lossless; proven in
-    tests/test_snapshot.py); ``residual=False`` is the audit view.
+    ``read_pruned`` (round-6 verdict gap). The predicate is re-applied
+    row-level, so the result is EXACTLY ``read_snapshot(...).filter(pred)``
+    (lossless; proven in tests/test_snapshot.py).
     """
     if sum(x is not None for x in (as_of, below, as_of_ts, tag)) > 1:
         raise ValueError(
@@ -460,7 +458,6 @@ def read_snapshot(
         man["entries"],
         column_order=order,
         predicate=predicate,
-        residual=residual,
         deletes=man["deletes"],
         schema_fields=man["schema"],
         rename_log=man["rename_log"],
@@ -506,7 +503,6 @@ def read_entries(
     entries: dict[str, str],
     column_order: list[str] | None = None,
     predicate: dict[str, tuple] | None = None,
-    residual: bool = True,
     deletes: list[str] | None = None,
     with_positions: bool = False,
     *,
@@ -761,7 +757,7 @@ def read_entries(
         df = df.select(*keep)
     elif want_meta and not with_positions:
         df = df.drop("_dv_path", "_dv_pos")
-    if predicate and residual:
+    if predicate:
         from big_data_spark.io.stats import range_predicate
 
         df = df.filter(range_predicate(predicate))

@@ -410,16 +410,18 @@ def publish_staged(
         entries = (
             dict(prev["entries"]) if (prev and mode == "append") else {}
         )
-        # In append mode an unpartitioned batch keeps the table's
-        # declared layout (same contract as append_snapshot); a
-        # replace never inherits a stale layout.
-        if mode == "append":
-            _check_layout_compatible(prev, layout, "publish_staged")
+        # An append's staged layout must match the table's (same rule
+        # as append_snapshot); the bytes are already written, so a
+        # mismatch cannot be repaired by inheriting the table's. An
+        # empty batch has no layout to check and carries the table's;
+        # a replace declares its own.
         if has_data:
+            if mode == "append":
+                _check_layout_compatible(prev, layout, "publish_staged")
             entries["" if mode == "replace" else f"b{sid}"] = (
                 f"{_DATA_DIR}/s={sid}"
             )
-        if layout is not None or mode == "replace":
+        if has_data or mode == "replace":
             fresh["layout_by"] = layout
         return entries, fresh
 
@@ -599,31 +601,25 @@ def _unclaim(spark: SparkSession, dest: str | None) -> None:
 def _check_layout_compatible(
     prev: dict | None, new_layout: str | None, origin: str
 ) -> None:
-    """Refuse an APPEND whose hive layout differs from the table's
-    declared one: a single layout_by cannot represent a mixed-layout
-    table, and silently replacing the declared column would un-skip
-    DML range hints on the old layout column (whose values live only
-    in dir names) and crash the footer sweep. Full rewrites
-    (write_snapshot / compact) re-declare the layout on purpose."""
-    prev_layout = None if prev is None else prev["layout_by"]
-    if (
-        new_layout is not None
-        and prev_layout is not None
-        and new_layout != prev_layout
-    ):
+    """Refuse an APPEND whose hive layout differs from the layout of
+    the table's data — including a plain append onto a laid-out table
+    and a laid-out append onto a plain one. A single layout_by cannot
+    represent a mixed-layout table: the per-generation read schema
+    declares every layout column a dir-valued string, so a generation
+    that stores it as a data column fails to read (and to compact),
+    and silently replacing the declared column would un-skip DML
+    range hints on the old one. A table with no data entries takes
+    any layout. Full rewrites (write_snapshot / compact) re-declare
+    the layout on purpose."""
+    if prev is None or not prev["entries"]:
+        return
+    if new_layout != prev["layout_by"]:
         raise ValueError(
             f"{origin}: batch partitioned on {new_layout!r} but the "
-            f"table's declared layout is {prev_layout!r} — a "
+            f"table's declared layout is {prev['layout_by']!r} — a "
             "mixed-layout append is unrepresentable; use the "
             "table's layout or re-layout with a full rewrite."
         )
-
-
-def _layout_change(partition_by: str | None) -> dict:
-    """An append's manifest change for its ``partition_by``: a declared
-    layout is named, none carries the table's — so a plain (or empty)
-    append never erases the layout from maintenance's view."""
-    return {"layout_by": partition_by} if partition_by else {}
 
 
 def write_snapshot(
@@ -761,14 +757,14 @@ def append_snapshot(
         # UNABLE_TO_INFER_SCHEMA. Commit the manifest anyway — the id
         # advances and replay converges — just without a new entry.
         clear_generation(spark, table_dir, snapshot_id)
-    # Appends never touch existing rows: the layout, delete vectors
-    # and rename log all carry; only a declared layout is named.
+    # Appends never touch existing rows: delete vectors and the
+    # rename log carry; the layout is the one the check above allowed.
     commit_manifest(
         spark,
         table_dir,
         successor(
             prev, snapshot_id, entries, schema=fields,
-            **_layout_change(partition_by),
+            layout_by=partition_by,
         ),
         prev_man=prev,
         replace=replace,
@@ -825,7 +821,7 @@ def append_with_retry(
         _check_layout_compatible(prev, partition_by, "append_with_retry")
         if has_data:
             entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
-        return entries, _layout_change(partition_by)
+        return entries, {"layout_by": partition_by}
 
     return _claim_commit_loop(
         spark, table_dir, staging, fields, attempts, build,

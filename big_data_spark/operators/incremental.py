@@ -156,6 +156,62 @@ def refresh_aggregate(
     )
 
 
+def fold_and_publish(
+    mv: DataFrame | None,
+    changes: DataFrame,
+    mv_dir: str,
+    snapshot_id: int,
+    keys: list[str],
+    measures: list[str],
+    op_col: str | None = None,
+    delete_op: str = "D",
+    count_col: str = "n_rows",
+) -> None:
+    """Fold a change batch into a grouped-aggregate MV
+    (refresh_aggregate) and replace-commit the result as snapshot
+    ``snapshot_id`` of the snapshot table ``mv_dir`` — the one publish
+    step of sync_aggregate and streaming/mv.run_mv_refresh.
+    ``replace=True``: a crashed attempt's retry recomputes from the
+    same immutable predecessor and converges.
+
+    ``mv`` is the committed MV snapshot the batch folds into, or None
+    to start from an empty view typed like ``changes``' key and
+    measure columns. The merge's ``t.m + s.m`` widens decimal sums
+    (28,2 -> 38,2 and so on); a committed MV's types are pinned so its
+    snapshot schema stays stable across refreshes. Values that fit the
+    committed type fit here too — the fold is the same sum."""
+    from big_data_spark.io.table_writes import write_snapshot
+
+    if mv is None:
+        schema = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in changes.schema.fields
+            if f.name in keys or f.name in measures
+        )
+        mv = changes.sparkSession.createDataFrame(
+            [], f"{schema}, `{count_col}` bigint"
+        )
+        pinned = {}
+    else:
+        pinned = dict(mv.dtypes)
+    refreshed = refresh_aggregate(
+        mv,
+        changes,
+        keys,
+        measures,
+        op_col=op_col,
+        delete_op=delete_op,
+        count_col=count_col,
+    )
+    refreshed = refreshed.select(
+        *[
+            F.col(c).cast(pinned[c]).alias(c) if c in pinned else c
+            for c in refreshed.columns
+        ]
+    )
+    write_snapshot(refreshed, mv_dir, snapshot_id=snapshot_id, replace=True)
+
+
 def sync_aggregate(
     spark,
     table_dir: str,
@@ -207,26 +263,15 @@ def sync_aggregate(
     if last >= until:
         return {"bootstrapped": False, "applied_through": last, "from": last}
     feed = read_changes(spark, table_dir, after_id=last, until_id=until)
-    mv = read_snapshot(spark, mv_dir, as_of=last)
-    refreshed = refresh_aggregate(
-        mv,
+    fold_and_publish(
+        read_snapshot(spark, mv_dir, as_of=last),
         feed,
+        mv_dir,
+        until,
         keys,
         measures,
         op_col="_change_type",
         delete_op="delete",
         count_col=count_col,
     )
-    # The merge's t.m + s.m widens decimal sums (28,2 -> 38,2 and so
-    # on); pin the MV's committed types so the snapshot schema stays
-    # stable across refreshes. Values that fit the bootstrap
-    # aggregate's type fit here too — the fold is the same sum.
-    mv_types = dict(mv.dtypes)
-    refreshed = refreshed.select(
-        *[
-            F.col(c).cast(mv_types[c]).alias(c) if c in mv_types else c
-            for c in refreshed.columns
-        ]
-    )
-    write_snapshot(refreshed, mv_dir, snapshot_id=until, replace=True)
     return {"bootstrapped": False, "applied_through": until, "from": last}

@@ -848,7 +848,11 @@ def _execute_insert(
         else:
             sid = write_snapshot(row.select(*cols), table_dir, claim=True)
     else:
-        sid = append_with_retry(row.select(*cols), table_dir)
+        # Appends keep the table's generation layout (a plain append
+        # onto a laid-out table is refused as mixed-layout).
+        sid = append_with_retry(
+            row.select(*cols), table_dir, partition_by=man["layout_by"]
+        )
     # Report what actually LANDED: a parquet metadata count of the
     # committed generation — never a re-execution of the row source
     # (a non-deterministic SELECT would report rows it didn't write).

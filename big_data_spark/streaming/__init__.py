@@ -21,11 +21,7 @@ from big_data_spark.streaming.semdedup_ingest import (
     run_semdedup_ingest,
     semdedup_keep,
 )
-from big_data_spark.streaming.mv import (
-    prune_mv_versions,
-    read_mv,
-    run_mv_refresh,
-)
+from big_data_spark.streaming.mv import run_mv_refresh
 from big_data_spark.streaming.cdc_mirror import (
     purge_tombstones,
     read_mirror,
@@ -42,7 +38,6 @@ from big_data_spark.streaming.events import (
     sessionize_stream,
     sliding_counts_stream,
     user_totals_stateful,
-    write_stream_partitioned_parquet,
 )
 
 __all__ = [
@@ -50,8 +45,6 @@ __all__ = [
     "run_scd2_mirror",
     "read_scd2_mirror",
     "run_mv_refresh",
-    "read_mv",
-    "prune_mv_versions",
     "read_mirror",
     "purge_tombstones",
     "read_events_stream",
@@ -62,7 +55,6 @@ __all__ = [
     "dedup_stream",
     "user_totals_stateful",
     "run_stream_to_table",
-    "write_stream_partitioned_parquet",
     "run_dedup_ingest",
     "read_lake",
     "ingest_neardup_batch",

@@ -331,37 +331,6 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     ).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def write_stream_partitioned_parquet(
-    df: DataFrame, path: str, checkpoint: str, partition_cols: list[str]
-) -> None:
-    """Idempotent partitioned parquet sink via foreachBatch.
-
-    ``_batch_id`` is a leading partition column: a replayed batch
-    (failure/restart) dynamically overwrites exactly its own
-    partitions, while distinct batches land in disjoint partitions —
-    without the batch id in the partitioning, batch N's overwrite
-    would silently delete batch N-1's rows for every shared partition
-    value. Readers see the union (spark.read.parquet(path)); drop or
-    prune ``_batch_id`` downstream."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id", *partition_cols)
-            .parquet(path)
-        )
-
-    query = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
 def run_stream_to_table(
     df: DataFrame,
     name: str,

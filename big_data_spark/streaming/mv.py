@@ -1,17 +1,17 @@
 """Streaming materialized-view maintenance: keep a grouped sum/count
 aggregate current from a live change feed (foreachBatch +
 operators/incremental.refresh_aggregate) — the continuous-MV /
-Delta-Live-Tables shape on plain parquet.
+Delta-Live-Tables shape, persisted as a snapshot table (io/).
 
 Exactly-once by VERSIONING, not hope: additive refresh is not
-idempotent (re-adding a batch double-counts), so each batch writes a
-full MV snapshot under ``_v=<batch_id>`` computed from the highest
-version STRICTLY BELOW its batch id. A crashed attempt's partial
-version is recomputed-and-overwritten on replay (dynamic overwrite
-of exactly that partition); the previous version it reads from is
-immutable. Snapshots are cheap because an MV is an aggregate —
-|groups| rows, not |base| — and old versions double as time travel
-until ``prune_mv_versions`` reclaims them.
+idempotent (re-adding a batch double-counts), so the MV's snapshot
+ids ARE the batch ids. Batch N folds into the newest snapshot
+STRICTLY BELOW N and replace-commits snapshot N: a crashed attempt's
+half-written generation is cleared and recomputed on replay, and the
+predecessor it reads from is immutable. Snapshots are cheap because
+an MV is an aggregate — |groups| rows, not |base| — and old ones
+double as time travel (``read_snapshot(mv_dir, as_of=)``) until
+``vacuum_snapshots(keep_last=)`` reclaims them.
 
 Scale: per batch, cost = one aggregation of the batch + one merge
 join against the |groups|-sized MV + an MV-sized write. The base
@@ -20,39 +20,20 @@ maintenance.
 
 Lifecycle contract: one MV = one checkpoint. Continue ingestion by
 adding files to the same source under the same checkpoint (batch
-ids, and so versions, keep increasing). Starting over with a FRESH
-checkpoint re-delivers the whole source and REBUILDS the MV from
-version 0 — deterministic and correct, but a rebuild, not a
+ids, and so snapshot ids, keep increasing). Starting over with a
+FRESH checkpoint re-delivers the whole source and REBUILDS the MV
+from snapshot 0 — deterministic and correct, but a rebuild, not a
 continuation. Retractions must not precede their inserts across
 batches (refresh_aggregate's CDC ordering contract).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from big_data_spark.io.compact import hadoop_fs
-from big_data_spark.lineage import truncate_lineage
-from big_data_spark.operators.incremental import refresh_aggregate
-
-_VER = "_v"
-
-
-def _versions(spark: SparkSession, data_path: str) -> list[int]:
-    """Version ids from the DIRECTORY listing, not from data rows — a
-    fully-retracted snapshot is an EMPTY version whose rows cannot
-    vouch for it; missing it would silently resurrect the pre-batch
-    state on the next read/refresh."""
-    fs, hpath = hadoop_fs(spark, data_path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{_VER}="):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
+from big_data_spark.io.manifest import snapshot_ids
+from big_data_spark.io.table_reads import read_snapshot
+from big_data_spark.operators.incremental import fold_and_publish
 
 
 def run_mv_refresh(
@@ -66,71 +47,28 @@ def run_mv_refresh(
     count_col: str = "n_rows",
 ) -> None:
     """Drain ``change_stream`` (availableNow), maintaining
-    ``SELECT keys, SUM(measures)..., COUNT(*)`` under
-    ``mv_dir/data/_v=<batch_id>/``. Deletes retract when ``op_col``
-    is given (CDC before-image contract, see refresh_aggregate)."""
-    data_path = f"{mv_dir}/data"
+    ``SELECT keys, SUM(measures)..., COUNT(*)`` as the snapshot table
+    ``mv_dir`` (read it with ``read_snapshot``). Deletes retract when
+    ``op_col`` is given (CDC before-image contract, see
+    refresh_aggregate)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Idempotent replay: a crashed prior attempt may have left a
-        # partially committed _v=<batch_id> directory. Delete it up
-        # front — otherwise an EMPTY recomputed snapshot writes no
-        # partition through the dynamic overwrite, the exists-guard
-        # below sees the stale partial dir and skips the explicit
-        # empty write, and the partial rows become the current MV.
-        vdir = f"{data_path}/{_VER}={batch_id}"
-        fs, hpath = hadoop_fs(spark, vdir)
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-        prior = [v for v in _versions(spark, data_path) if v < batch_id]
-        if prior:
-            current = (
-                spark.read.parquet(data_path)
-                .filter(F.col(_VER) == prior[-1])
-                .drop(_VER)
-            )
+        if any(i < batch_id for i in snapshot_ids(spark, mv_dir)):
+            current = read_snapshot(spark, mv_dir, below=batch_id)
         else:
-            schema = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in batch_df.schema.fields
-                if f.name in keys or f.name in measures
-            )
-            current = (
-                batch_df.sparkSession.createDataFrame(
-                    [], schema + f", {count_col} bigint"
-                )
-            )
-        new = refresh_aggregate(
+            current = None
+        fold_and_publish(
             current,
             batch_df,
+            mv_dir,
+            batch_id,
             keys,
             measures,
             op_col=op_col,
             delete_op=delete_op,
             count_col=count_col,
         )
-        new = truncate_lineage(new)
-        (
-            new.withColumn(_VER, F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(_VER)
-            .parquet(data_path)
-        )
-        # A fully-retracted snapshot has zero rows, so the dynamic
-        # overwrite above creates NO _v=<batch_id> partition and the
-        # previous state would resurrect. Materialize the empty
-        # version explicitly (one 0-row file preserving the schema).
-        vdir = f"{data_path}/{_VER}={batch_id}"
-        fs, hpath = hadoop_fs(spark, vdir)
-        if not fs.exists(hpath):
-            (
-                spark.createDataFrame([], new.schema)
-                .repartition(1)
-                .write.mode("overwrite")
-                .parquet(vdir)
-            )
 
     query = (
         change_stream.writeStream.foreachBatch(apply_batch)
@@ -139,30 +77,3 @@ def run_mv_refresh(
         .start()
     )
     query.awaitTermination()
-
-
-def read_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
-    """The current MV (highest version)."""
-    data_path = f"{mv_dir}/data"
-    vers = _versions(spark, data_path)
-    if not vers:
-        raise ValueError(f"no MV versions under {data_path!r}")
-    return (
-        spark.read.parquet(data_path)
-        .filter(F.col(_VER) == vers[-1])
-        .drop(_VER)
-    )
-
-
-def prune_mv_versions(
-    spark: SparkSession, mv_dir: str, keep_last: int = 2
-) -> None:
-    """Drop all but the newest ``keep_last`` snapshot versions (keep
-    >= 2 so a replayed batch can still read its predecessor)."""
-    if keep_last < 2:
-        raise ValueError("keep_last must be >= 2 (replay needs n-1)")
-    data_path = f"{mv_dir}/data"
-    vers = _versions(spark, data_path)
-    for v in vers[:-keep_last]:
-        fs, hpath = hadoop_fs(spark, f"{data_path}/{_VER}={v}")
-        fs.delete(hpath, True)

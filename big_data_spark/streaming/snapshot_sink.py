@@ -30,6 +30,7 @@ def snapshot_sink(
     checkpoint: str,
     available_now: bool = True,
     checks: list | None = None,
+    partition_by: str | None = None,
 ):
     """Start (and with ``available_now`` drain) a stream into the
     snapshot table at ``table_dir``: one appended generation per
@@ -41,7 +42,11 @@ def snapshot_sink(
     batch stops the stream loudly with NOTHING landed — the batch
     recomputes from the checkpointed offsets on restart (after the
     upstream fix), never a half-published bad version. The audit
-    cost is the suite's one aggregation per batch."""
+    cost is the suite's one aggregation per batch.
+
+    ``partition_by`` lays every batch's generation out hive-partitioned
+    on that column (append_snapshot's layout contract): readers
+    filtering on it prune directories inside each generation."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if checks:
@@ -74,6 +79,7 @@ def snapshot_sink(
                     table_dir,
                     snapshot_id=batch_id,
                     replace=True,
+                    partition_by=partition_by,
                 )
             finally:
                 fs.delete(sp, True)
@@ -83,6 +89,7 @@ def snapshot_sink(
             table_dir,
             snapshot_id=batch_id,
             replace=True,
+            partition_by=partition_by,
         )
 
     writer = stream_df.writeStream.foreachBatch(sink).option(

@@ -268,26 +268,41 @@ def test_fuzz_label_propagation_matches_python_sync_lpa(edges, rounds):
     assert got == _py_lpa(edges, rounds)
 
 
+def _py_components(edges):
+    """Plain-Python union-find: vertex -> min vertex id of its
+    component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
 @given(edges=_edges)
 @settings(max_examples=5, deadline=None)
-def test_fuzz_star_components_match_pointer_doubling(edges):
-    """The large-star/small-star scale path and the pointer-doubling
-    loop agree on every random graph (same min-id contract),
-    including isolated vertices passed as self-loops."""
+def test_fuzz_components_match_python_union_find(edges):
+    """The pointer-doubling loop labels every vertex of a random graph
+    with its component's minimum id, including isolated vertices
+    passed as self-loops."""
     from big_data_spark.operators.components import connected_components
 
     spark = _spark()
-    df = spark.createDataFrame(edges + [(99, 99)], "src long, dst long")
-    native = {
-        r.id: r.component
-        for r in connected_components(df, impl="native").collect()
+    graph = edges + [(99, 99)]
+    df = spark.createDataFrame(graph, "src long, dst long")
+    got = {
+        r.id: r.component for r in connected_components(df).collect()
     }
-    star = {
-        r.id: r.component
-        for r in connected_components(df, impl="star").collect()
-    }
-    assert star == native
-    assert star[99] == 99
+    assert got == _py_components(graph)
+    assert got[99] == 99
 
 
 _nd_docs = st.lists(

@@ -1,17 +1,15 @@
 """Streaming MV maintenance: incremental result equals a full
-recompute, crash replays cannot double-count, versions time-travel
-and prune safely."""
+recompute, crash replays cannot double-count, snapshots time-travel
+and vacuum safely."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from big_data_spark.streaming.mv import (
-    prune_mv_versions,
-    read_mv,
-    run_mv_refresh,
-)
+from big_data_spark.io.manifest import read_manifest, snapshot_ids
+from big_data_spark.io.table_reads import read_snapshot
+from big_data_spark.io.table_writes import vacuum_snapshots
+from big_data_spark.streaming.mv import run_mv_refresh
 
 SCHEMA = "k int, v double, op string"
 
@@ -77,7 +75,7 @@ def _run(spark, tmp_path, rows, tag, n_files=1, mv="mv", ckpt=None):
 
 def test_incremental_equals_recompute_across_batches(spark, tmp_path):
     mv = _run(spark, tmp_path, FEED, "main", n_files=4)
-    got = {tuple(r) for r in read_mv(spark, mv).collect()}
+    got = {tuple(r) for r in read_snapshot(spark, mv).collect()}
     assert got == _expected(FEED)
 
 
@@ -108,50 +106,40 @@ def test_continued_ingestion_same_checkpoint(spark, tmp_path):
         str(tmp_path / "ckpt_a"),  # SAME checkpoint
         op_col="op",
     )
-    got = {tuple(r) for r in read_mv(spark, mv).collect()}
+    got = {tuple(r) for r in read_snapshot(spark, mv).collect()}
     assert got == _expected(FEED)
 
 
 def test_full_replay_fresh_checkpoint_rebuilds_not_doubles(spark, tmp_path):
     mv = _run(spark, tmp_path, FEED, "one", n_files=3)
-    before = {tuple(r) for r in read_mv(spark, mv).collect()}
+    before = {tuple(r) for r in read_snapshot(spark, mv).collect()}
     # Re-deliver the whole feed with a fresh checkpoint: batch ids
     # restart at 0, every version is recomputed from its predecessor
     # below it — the final MV is REBUILT, never added on top.
     _run(spark, tmp_path, FEED, "two", n_files=3, mv="mv")
-    assert {tuple(r) for r in read_mv(spark, mv).collect()} == before
+    assert {tuple(r) for r in read_snapshot(spark, mv).collect()} == before
 
 
 def test_versions_time_travel_and_prune(spark, tmp_path):
     mv = _run(spark, tmp_path, FEED, "vt", n_files=4)
-    data = f"{mv}/data"
-    vers = sorted(
-        r["_v"]
-        for r in spark.read.parquet(data).select("_v").distinct().collect()
-    )
+    vers = snapshot_ids(spark, mv)
     assert len(vers) >= 3  # one snapshot per micro-batch
-    # an early version reflects only its prefix of the feed
-    v0 = (
-        spark.read.parquet(data).filter(F.col("_v") == vers[0]).drop("_v")
-    )
+    assert all(read_manifest(spark, mv, v)["format_version"] == 1 for v in vers)
+    # an early snapshot reflects only its prefix of the feed
+    v0 = read_snapshot(spark, mv, as_of=vers[0])
     assert v0.count() <= len(_expected(FEED)) + 2
-    prune_mv_versions(spark, mv, keep_last=2)
-    left = sorted(
-        r["_v"]
-        for r in spark.read.parquet(data).select("_v").distinct().collect()
-    )
-    assert left == vers[-2:]
-    assert {tuple(r) for r in read_mv(spark, mv).collect()} == _expected(FEED)
+    vacuum_snapshots(spark, mv, keep_last=2)
+    assert snapshot_ids(spark, mv) == vers[-2:]
+    assert {tuple(r) for r in read_snapshot(spark, mv).collect()} == _expected(FEED)
     with pytest.raises(ValueError, match="keep_last"):
-        prune_mv_versions(spark, mv, keep_last=1)
+        vacuum_snapshots(spark, mv, keep_last=1)
 
 
 def test_replayed_crash_partial_version_cannot_survive(spark, tmp_path):
-    """A crashed batch can leave a PARTIALLY committed _v=<batch_id>
-    directory. On replay, the recomputed snapshot must replace it
-    wholesale — even when the recomputed snapshot is EMPTY, where
-    dynamic overwrite alone would write no partition and the stale
-    partial rows would silently become the current MV."""
+    """A crashed batch can leave a half-written generation dir with no
+    manifest. On replay, the recomputed snapshot must replace it
+    wholesale — even when the recomputed snapshot is EMPTY, so the
+    stale partial rows can never become the current MV."""
     import glob
     import os
     import shutil
@@ -159,16 +147,17 @@ def test_replayed_crash_partial_version_cannot_survive(spark, tmp_path):
 
     # batch 0: one insert
     mv = _run(spark, tmp_path, [(1, 5.0, "I")], "crash", n_files=1)
-    # simulate batch 1's crashed attempt: a partial _v=1 directory
-    # holding garbage rows that never got committed to the checkpoint
+    # simulate batch 1's crashed attempt: its generation dir holding
+    # garbage rows, written before the commit that never happened
     stale = str(tmp_path / "stale")
     spark.createDataFrame(
-        [(99, 999.0, 7)], "k int, sum_v double, n_rows bigint"
+        [(99, 999.0, 7)], "k int, v double, n_rows bigint"
     ).coalesce(1).write.parquet(stale)
-    vdir = f"{mv}/data/_v=1"
-    os.makedirs(vdir, exist_ok=True)
+    gdir = f"{mv}/_data/s=1"
+    os.makedirs(gdir, exist_ok=True)
     for pq in glob.glob(f"{stale}/*.parquet"):
-        shutil.copy(pq, vdir)
+        shutil.copy(pq, gdir)
+    assert snapshot_ids(spark, mv) == [0]
     # deliver batch 1 for real: a FULL retraction (empty snapshot)
     src = str(tmp_path / "src_crash")
     part = str(tmp_path / "part_crash1")
@@ -181,13 +170,15 @@ def test_replayed_crash_partial_version_cannot_survive(spark, tmp_path):
         _stream(spark, src), ["k"], ["v"], mv,
         str(tmp_path / "ckpt_crash"), op_col="op",
     )
-    assert read_mv(spark, mv).count() == 0  # not the stale (99, ...) row
+    assert snapshot_ids(spark, mv) == [0, 1]
+    assert read_snapshot(spark, mv).count() == 0  # not the stale (99, ...) row
+    assert read_snapshot(spark, mv, as_of=0).count() == 1
 
 
 def test_full_retraction_yields_empty_mv_not_resurrection(spark, tmp_path):
     """A batch that retracts every group must produce an EMPTY
-    current MV — the empty snapshot version is materialized even
-    though dynamic overwrite writes no rows for it."""
+    current MV — an empty committed snapshot, never the previous
+    state resurrected."""
     mv = _run(
         spark,
         tmp_path,
@@ -195,7 +186,7 @@ def test_full_retraction_yields_empty_mv_not_resurrection(spark, tmp_path):
         "retract_all",
         n_files=2,  # insert in batch 0, retraction in batch 1
     )
-    assert read_mv(spark, mv).count() == 0
+    assert read_snapshot(spark, mv).count() == 0
     # and a later insert starts cleanly from the empty state
     import glob
     import os
@@ -213,5 +204,52 @@ def test_full_retraction_yields_empty_mv_not_resurrection(spark, tmp_path):
         _stream(spark, src), ["k"], ["v"], mv,
         str(tmp_path / "ckpt_retract_all"), op_col="op",
     )
-    got = {tuple(r) for r in read_mv(spark, mv).collect()}
+    got = {tuple(r) for r in read_snapshot(spark, mv).collect()}
     assert got == {(2, 9.0, 1)}
+
+
+def test_decimal_measure_type_is_stable_across_batches(spark, tmp_path):
+    """The first fold widens a decimal(18,2) measure to decimal(38,2);
+    later batches keep the committed type, and a fully-retracted
+    (empty) snapshot still reads back with it."""
+    from decimal import Decimal
+
+    schema = "k int, v decimal(18,2), op string"
+    rows = [
+        (1, Decimal("10.50"), "I"),
+        (2, Decimal("1.25"), "I"),
+        (1, Decimal("10.50"), "D"),
+        (2, Decimal("1.25"), "D"),
+    ]
+    src = str(tmp_path / "src_dec")
+    import glob
+    import os
+    import shutil
+    import time
+
+    os.makedirs(src)
+    for i, chunk in enumerate([rows[:2], rows[2:3], rows[3:]]):
+        part = str(tmp_path / f"part_dec_{i}")
+        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(part)
+        (pq,) = glob.glob(f"{part}/*.parquet")
+        shutil.copy(pq, f"{src}/{i:04d}.parquet")
+        now = time.time() + i
+        os.utime(f"{src}/{i:04d}.parquet", (now, now))
+    mv = str(tmp_path / "mv_dec")
+    run_mv_refresh(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        ["k"], ["v"], mv, str(tmp_path / "ckpt_dec"), op_col="op",
+    )
+    ids = snapshot_ids(spark, mv)
+    assert len(ids) == 3
+    for sid in ids:
+        got = read_snapshot(spark, mv, as_of=sid)
+        assert got.dtypes == [
+            ("k", "int"), ("v", "decimal(38,2)"), ("n_rows", "bigint")
+        ]
+    assert {tuple(r) for r in read_snapshot(spark, mv, as_of=ids[1]).collect()} == {
+        (2, Decimal("1.25"), 1)
+    }
+    assert read_snapshot(spark, mv).count() == 0

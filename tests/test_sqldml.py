@@ -217,6 +217,25 @@ def test_sql_insert_values_and_select(spark, cat):
     assert c.sql("SELECT count(*) AS n FROM orders_t").first()["n"] == 8
 
 
+def test_sql_insert_keeps_generation_layout(spark, tmp_path):
+    """INSERT INTO a table laid out on a column appends in that
+    layout, so the column still reads back from its dirs."""
+    t = str(tmp_path / "laid_out_t")
+    append_snapshot(
+        spark.createDataFrame([(1, 10)], "k int, d int"),
+        t,
+        partition_by="d",
+    )
+    c = SnapshotCatalog(spark)
+    c.register("laid_out_t", t)
+    st = c.sql("INSERT INTO laid_out_t VALUES (2, 20)")
+    assert st["inserted_rows"] == 1
+    assert sorted(map(tuple, read_snapshot(spark, t).collect())) == [
+        (1, 10),
+        (2, 20),
+    ]
+
+
 def test_sql_insert_errors(spark, cat):
     c, t = cat
     with pytest.raises(ValueError, match="not in"):

@@ -152,9 +152,8 @@ def test_read_pruned_end_to_end(spark, tmp_path):
         .collect()[0]
     )
     assert tuple(got) == tuple(want)
-    # Audit view: kept files, no residual filter -> a superset.
-    audit = read_pruned(spark, path, "v", lo=100.0, hi=150.0, residual=False)
-    assert audit.count() >= got[0]
+    # The kept files, read whole, are a superset of the result.
+    assert spark.read.parquet(*pruned.inputFiles()).count() >= got[0]
     # A provably-impossible range returns empty with the real schema.
     none = read_pruned(spark, path, "v", lo=5000.0, hi=6000.0)
     assert none.count() == 0 and none.columns == full.columns

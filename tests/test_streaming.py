@@ -93,31 +93,49 @@ def test_dedup_stream_drops_replayed_ids(spark):
 
 
 def test_foreachbatch_partitioned_sink_idempotent(spark, tmp_path):
-    from big_data_spark.streaming import write_stream_partitioned_parquet
+    from big_data_spark.io.manifest import latest_manifest
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.streaming.snapshot_sink import snapshot_sink
 
     out = str(tmp_path / "out")
     for run in range(2):
-        # Fresh checkpoint each run = a full replay; dynamic partition
-        # overwrite makes the replay idempotent (no duplication).
+        # Fresh checkpoint each run = a full replay; the batch id is
+        # the snapshot id, replace-committed, so the replay converges
+        # (no duplication).
         events = read_events_stream(spark, SF_SMOKE)
-        write_stream_partitioned_parquet(
+        snapshot_sink(
             events.select("event_id", "ts", "event_type"),
             out,
             checkpoint=str(tmp_path / f"ckpt{run}"),
-            partition_cols=["event_type"],
+            partition_by="event_type",
         )
-    written = spark.read.parquet(out)
+    written = read_snapshot(spark, out)
     source = read_table(spark, SF_SMOKE, "events")
     assert written.count() == source.count()
     assert written.select("event_id").distinct().count() == source.count()
+    man = latest_manifest(spark, out)
+    assert man["layout_by"] == "event_type"
+    assert man["format_version"] == 1
+    # Each generation is laid out in one dir per event_type.
+    import glob
+
+    laid_out = {
+        p.rsplit("=", 1)[1]
+        for p in glob.glob(f"{out}/_data/s=*/event_type=*")
+    }
+    assert laid_out == {
+        r["event_type"] for r in source.select("event_type").distinct().collect()
+    }
 
 
 def test_multi_batch_stream_and_sink(spark, tmp_path):
-    """Multiple micro-batches: aggregation parity and the foreachBatch
-    sink keeping every batch's rows (regression: without _batch_id in
-    the partitioning, batch N's dynamic overwrite deleted batch N-1's
-    rows for shared partition values)."""
-    from big_data_spark.streaming import write_stream_partitioned_parquet
+    """Multiple micro-batches: aggregation parity and the snapshot
+    sink keeping every batch's rows (one appended generation per
+    batch, so batch N never replaces batch N-1's rows for shared
+    partition values)."""
+    from big_data_spark.io.manifest import snapshot_ids
+    from big_data_spark.io.table_reads import read_snapshot
+    from big_data_spark.streaming.snapshot_sink import snapshot_sink
 
     src = str(tmp_path / "events_src")
     events = read_table(spark, SF_SMOKE, "events")
@@ -134,18 +152,18 @@ def test_multi_batch_stream_and_sink(spark, tmp_path):
         .withColumn("event_time", F.timestamp_seconds(F.expr("ts div 1000000000")))
     )
     out = str(tmp_path / "sink")
-    write_stream_partitioned_parquet(
+    snapshot_sink(
         stream.select("event_id", "event_type"),
         out,
         checkpoint=str(tmp_path / "ckpt"),
-        partition_cols=["event_type"],
+        partition_by="event_type",
     )
-    written = spark.read.parquet(out)
+    written = read_snapshot(spark, out)
     assert written.count() == events.count()
     assert written.select("event_id").distinct().count() == events.count()
     # event_type partitions certainly overlap across batches; prove
     # more than one batch actually ran.
-    assert written.select("_batch_id").distinct().count() >= 2
+    assert len(snapshot_ids(spark, out)) >= 2
 
 
 def test_stream_stream_join_multi_batch_matches_single(spark, tmp_path):
