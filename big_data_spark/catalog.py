@@ -271,8 +271,9 @@ class SnapshotCatalog:
         committed snapshots keeps its BINDING (so DROP TABLE can
         still clean it up) but registers no view — loud on first
         SELECT rather than silently unlisted."""
-        from big_data_spark.io.compact import hadoop_fs
-        from big_data_spark.io.layout import _read_json
+        import json as _json
+
+        from big_data_spark.io.layout import hadoop_fs, read_docs
         from big_data_spark.io.manifest import (
             format_version_error,
             latest_manifest,
@@ -288,44 +289,17 @@ class SnapshotCatalog:
                 if st.getPath().getName().endswith(".json")
                 and not st.getPath().getName().startswith(".")
             ]  # "." filters temp files / crc sidecars
-            docs: list[dict] = []
-            if len(paths) > 32:
-                # A warehouse with many tables: ONE distributed
-                # whole-file text scan instead of N serial round
-                # trips (the sidecar bulk-prefetch trade — on an
-                # object store the serial loop is the load time).
-                import json as _json
-
-                rows = (
-                    self.spark.read.option("wholetext", "true")
-                    # A file deleted between list and read (a
-                    # concurrent DROP) skips instead of failing the
-                    # whole load — same semantics as the serial loop.
-                    .option("ignoreMissingFiles", "true")
-                    .text(paths)
-                    .collect()
-                )
-                for r in rows:
-                    try:
-                        docs.append(_json.loads(r["value"]))
-                    except ValueError:
-                        # One corrupt binding file skips, matching
-                        # the serial path's per-file tolerance — a
-                        # large warehouse must not degrade WORSE than
-                        # a small one for the same fault.
-                        continue
-            else:
-                for p in paths:
-                    try:
-                        docs.append(_read_json(self.spark, p))
-                    except Exception:  # noqa: BLE001
-                        # Vanished between list and read (a
-                        # concurrent DROP): behaves as dropped.
-                        # Binding files are published by atomic
-                        # rename, so a listed file that READS is
-                        # always complete.
-                        continue
-            for doc in docs:
+            # A file deleted between list and read (a concurrent DROP)
+            # behaves as dropped. Binding files are published by
+            # atomic rename, so a listed file that READS is complete.
+            texts = read_docs(self.spark, paths, missing_ok=True)
+            for text in texts.values():
+                try:
+                    doc = _json.loads(text)
+                except ValueError:
+                    # One corrupt binding file skips: a warehouse must
+                    # not fail to load over one bad file.
+                    continue
                 if doc.get("v") != _BINDING_VERSION:
                     raise format_version_error(
                         self._bindings_dir(), doc.get("v"), _BINDING_VERSION
@@ -348,52 +322,32 @@ class SnapshotCatalog:
                 pass  # dir gone mid-read: binding kept, loud later
 
     def _save_binding(self, name: str) -> None:
-        """Persist ONE name->dir binding as its own file (write-temp
-        + atomic rename, the tag-pin pattern): at every instant the
-        file is either absent, the old binding, or the new one —
-        and no other name's binding is ever touched."""
+        """Persist ONE name->dir binding as its own file (a replace
+        ``layout.publish_doc``): at every instant the file is either
+        absent, the old binding, or the new one — and no other name's
+        binding is ever touched."""
         import json as _json
-        import uuid as _uuid
 
-        from big_data_spark.io.compact import hadoop_fs
-        from big_data_spark.io.tags import _atomic_overwrite_local
+        from big_data_spark.io.layout import publish_doc
 
         body = _json.dumps(
             {"v": _BINDING_VERSION, "name": name, "dir": self.tables[name]},
             sort_keys=True,
         )
         cdir = self._bindings_dir()
-        fs, cpath = hadoop_fs(self.spark, cdir)
-        fs.mkdirs(cpath)
-        fname = self._binding_file(name)
-        tmp = f"{cdir}/.{fname}.tmp-{_uuid.uuid4().hex}"
-        _, tmp_path = hadoop_fs(self.spark, tmp)
-        out = fs.create(tmp_path, True)
-        try:
-            out.write(bytearray(body.encode("utf-8")))
-        finally:
-            out.close()
-        _, final = hadoop_fs(self.spark, f"{cdir}/{fname}")
-        if (fs.getUri().getScheme() or "file") == "file":
-            _atomic_overwrite_local(
-                self.spark, fs, cdir, tmp_path, final, fname[:-5]
+        if not publish_doc(
+            self.spark, f"{cdir}/{self._binding_file(name)}", body,
+            replace=True,
+        ):
+            raise OSError(
+                f"could not publish catalog binding for {name!r} "
+                f"under {cdir!r}"
             )
-        else:
-            # Object stores without overwrite-rename: the documented
-            # delete-then-rename window (same trade as moving a tag).
-            if fs.exists(final):
-                fs.delete(final, False)
-            if not fs.rename(tmp_path, final):
-                fs.delete(tmp_path, False)
-                raise OSError(
-                    f"could not publish catalog binding for {name!r} "
-                    f"under {cdir!r}"
-                )
 
     def _remove_binding(self, name: str) -> None:
         """Unpersist ONE binding: the binding file (and its checksum
         sidecar — ChecksumFileSystem.delete) is removed."""
-        from big_data_spark.io.compact import hadoop_fs
+        from big_data_spark.io.layout import hadoop_fs
 
         cdir = self._bindings_dir()
         fs, fpath = hadoop_fs(

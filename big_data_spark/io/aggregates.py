@@ -9,11 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.layout import (
     _BULK_MANIFEST_THRESHOLD,
     _DATA_DIR,
     _live_gens,
+    data_files,
 )
 from big_data_spark.io.manifest import (
     _claim_check,
@@ -262,17 +262,8 @@ def _agg_manifest(spark, table_dir, as_of, man, who: str) -> dict:
 def _entry_files(spark, table_dir: str, rel: str) -> tuple[int, int]:
     """(data file count, total bytes) under one live entry dir — a
     driver-side listing, no data reads."""
-    fs, p = hadoop_fs(spark, f"{table_dir}/{rel}")
-    n = size = 0
-    if fs.exists(p):
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not (name.startswith("_") or name.startswith(".")):
-                n += 1
-                size += st.getLen()
-    return n, size
+    sizes = [size for _, size in data_files(spark, f"{table_dir}/{rel}")]
+    return len(sizes), sum(sizes)
 
 
 def metadata_aggregate(

@@ -6,18 +6,17 @@ consumer step) and ``table_history`` (DESCRIBE HISTORY)."""
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.layout import (
     _DATA_DIR,
     _bare_expr,
     _gen_id_of,
     _live_gens,
-    _write_text,
+    hadoop_fs,
+    publish_doc,
 )
 from big_data_spark.io.manifest import (
     _read_manifests,
@@ -429,13 +428,12 @@ def follow_changes(
     Returns ``(None, None)`` when the table has no new commits.
 
     The cursor is MONOTONIC by construction: each commit publishes an
-    immutable ``cursor-<id>.json`` (write-temp-then-rename; rename
-    refuses an existing destination, so re-publishing the same id is
-    a detected no-op) and readers take the MAXIMUM published id —
-    a slow consumer instance can therefore never regress the cursor
-    below a faster one's commit; its stale window re-applies, which
-    the at-least-once contract already requires consumers to
-    tolerate.
+    immutable ``cursor-<id>.json`` (``layout.publish_doc``, create-
+    only, so re-publishing the same id is a detected no-op) and
+    readers take the MAXIMUM published id — a slow consumer instance
+    can therefore never regress the cursor below a faster one's
+    commit; its stale window re-applies, which the at-least-once
+    contract already requires consumers to tolerate.
     """
     ids = snapshot_ids(spark, table_dir)
     if not ids:
@@ -457,17 +455,13 @@ def follow_changes(
     )
 
     def commit() -> int:
-        body = json.dumps({"last_commit": until})
-        tmp = f"{cursor_dir}/.tmp-{uuid.uuid4().hex}"
-        _, tmp_path = hadoop_fs(spark, tmp)
-        _write_text(fs, tmp_path, body)
-        _, cpath = hadoop_fs(
-            spark, f"{cursor_dir}/cursor-{until:012d}.json"
+        # False: another instance already committed this exact
+        # window — idempotent; the cursor is where we wanted it.
+        publish_doc(
+            spark,
+            f"{cursor_dir}/cursor-{until:012d}.json",
+            json.dumps({"last_commit": until}),
         )
-        if not fs.rename(tmp_path, cpath):
-            # Another instance already committed this exact window —
-            # idempotent; the cursor is where we wanted it.
-            fs.delete(tmp_path, False)
         # Prune superseded cursor files (keep a short trail): readers
         # take the max, so removing older ids never regresses.
         stale = sorted(committed)[:-3]

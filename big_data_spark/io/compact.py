@@ -33,30 +33,19 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from big_data_spark.io.layout import data_files, hadoop_fs
+
 
 def parquet_inventory(spark: SparkSession, path: str) -> dict:
     """File inventory of a parquet directory: n_files, total_bytes,
     and how many files sit under 1/4 of a healthy 128 MB target —
     the 'is this table fragmented?' probe."""
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    it = fs.listFiles(hpath, True)
-    n_files = 0
-    total = 0
-    small = 0
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue  # _SUCCESS, checksums, hidden metadata
-        n_files += 1
-        size = st.getLen()
-        total += size
-        if size < (128 << 20) // 4:
-            small += 1
-    return {"n_files": n_files, "total_bytes": total, "n_small_files": small}
+    sizes = [size for _, size in data_files(spark, path)]
+    return {
+        "n_files": len(sizes),
+        "total_bytes": sum(sizes),
+        "n_small_files": sum(size < (128 << 20) // 4 for size in sizes),
+    }
 
 
 def zorder_key(cols: list[str], bits: int = 16) -> "F.Column":
@@ -479,16 +468,6 @@ def compact_snapshot(
             out, table_dir, snapshot_id=next_id, maintenance=True, claim=True
         )
     return {**inv, "n_output_files": n_out, "snapshot_id": next_id}
-
-
-def hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` via Hadoop's FS API — the one
-    place the py4j boilerplate lives; works identically for local
-    paths, HDFS and object stores."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath
 
 
 def binpack_snapshot(

@@ -12,12 +12,13 @@ manifest per committed version:
 - ``table_dir/_data/s=<id>/...`` holds immutable data generations. A
   partial rewrite carries its predecessor's untouched entries, so one
   generation dir can stay live across many snapshots.
-- Commit = write the manifest body to a hidden temp name, then
-  ``FileSystem.rename`` it to its final name. Rename is atomic on HDFS
-  and local filesystems and refuses an existing destination, so two
+- Commit = ``layout.publish_doc`` of the manifest body: a hidden
+  temp file renamed to its final name. Rename is atomic on HDFS and
+  local filesystems and refuses an existing destination, so two
   committers of the same id cannot both win (optimistic concurrency —
-  the loser retries on a fresh id). ``replace=True``
-  (delete-then-rename) is reserved for DETERMINISTIC replays.
+  the loser retries on a fresh id). ``replace=True`` (an atomic
+  overwrite-rename on the local FS, delete-then-rename elsewhere) is
+  reserved for DETERMINISTIC replays.
 
 A writer that dies mid-generation leaves orphan files under
 ``_data/s=<id>`` but NO manifest — readers never see them.
@@ -43,18 +44,17 @@ reachable only through a manifest, so that one check covers them too.
 from __future__ import annotations
 
 import json
-import uuid
 from typing import TypedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.layout import (
-    _BULK_MANIFEST_THRESHOLD,
     _MANIFEST_DIR,
     _os_path,
     _read_json,
-    _write_text,
+    hadoop_fs,
+    publish_doc,
+    read_docs,
 )
 from big_data_spark.io.sidecars import _auto_commit_stats
 
@@ -188,31 +188,26 @@ def read_manifest(
 def _read_manifests(
     spark: SparkSession, table_dir: str, ids: list[int]
 ) -> dict[int, Manifest]:
-    """Manifests for ``ids`` as {id: manifest dict}. A handful reads
-    serially on the driver; above the threshold ONE distributed
-    whole-file text scan fetches every manifest in parallel on the
-    executors — at 10k commits (a year of 15-minute micro-batches)
-    the serial walk was 10k sequential object-store round trips
-    before the first data read. The JSON parse stays driver-side
-    (exact dicts, no schema coercion); only the I/O distributes. A manifest vacuumed between the listing
-    and the scan fails the job loudly, same as the serial path."""
-    if len(ids) <= _BULK_MANIFEST_THRESHOLD:
-        return {i: read_manifest(spark, table_dir, i) for i in ids}
-    paths = [_manifest_path(table_dir, i) for i in ids]
-    rows = (
-        spark.read.option("wholetext", "true").text(paths).collect()
-    )
-    out: dict[int, Manifest] = {}
-    for r in rows:
-        man = _checked_manifest(table_dir, json.loads(r["value"]))
-        out[int(man["snapshot_id"])] = man
-    missing = set(ids) - set(out)
+    """Manifests for ``ids`` as {id: manifest dict}, through the one
+    bulk reader (``layout.read_docs``): a handful read serially on the
+    driver, more in ONE distributed whole-file text scan — at 10k
+    commits (a year of 15-minute micro-batches) the serial walk was
+    10k sequential object-store round trips before the first data
+    read. The JSON parse stays driver-side (exact dicts, no schema
+    coercion). A manifest vacuumed between the listing and the read
+    fails loudly."""
+    paths = {i: _manifest_path(table_dir, i) for i in ids}
+    docs = read_docs(spark, list(paths.values()))
+    missing = [i for i, p in paths.items() if p not in docs]
     if missing:
         raise ValueError(
             f"manifest scan under {table_dir!r} lost ids "
             f"{sorted(missing)} — vacuumed mid-read?"
         )
-    return out
+    return {
+        i: _checked_manifest(table_dir, json.loads(docs[p]))
+        for i, p in paths.items()
+    }
 
 
 def latest_manifest(
@@ -497,11 +492,12 @@ def commit_manifest(
     callers pass an explicit block (rollback: the restored version's
     own; evolve: the remapped column list) or None (no stats).
 
-    Write-temp-then-rename: the manifest is never visible half
-    written. Without ``replace`` an existing manifest for the id
-    makes the rename fail -> ``SnapshotConflict`` (first committer
-    wins); with ``replace`` the existing one is deleted first — only
-    valid for deterministic replays of the same inputs.
+    Published by ``layout.publish_doc``: the manifest is never
+    visible half written. Without ``replace`` an existing manifest
+    for the id makes the rename fail -> ``SnapshotConflict`` (first
+    committer wins); with ``replace`` the new body swaps in (one
+    atomic overwrite-rename on the local FS) — only valid for
+    deterministic replays of the same inputs.
     """
     import time as _time
 
@@ -555,9 +551,8 @@ def commit_manifest(
         # existing successor N+1's, breaking the per-table monotone
         # sequence resolve_as_of_ts depends on. The original was
         # clamped above ITS predecessor at first commit.
-        _, probe = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
-        fs_probe, _ = hadoop_fs(spark, table_dir)
-        if fs_probe.exists(probe):
+        fs, probe = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
+        if fs.exists(probe):
             ts = int(
                 read_manifest(spark, table_dir, snapshot_id)[
                     "committed_at_ms"
@@ -572,17 +567,9 @@ def commit_manifest(
         },
         sort_keys=True,
     )
-    mdir = f"{table_dir}/{_MANIFEST_DIR}"
-    fs, mpath = hadoop_fs(spark, mdir)
-    fs.mkdirs(mpath)
-    tmp = f"{mdir}/.tmp-{snapshot_id:012d}-{uuid.uuid4().hex}"
-    _, tmp_path = hadoop_fs(spark, tmp)
-    _write_text(fs, tmp_path, body)
-    _, final_path = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
-    if replace and fs.exists(final_path):
-        fs.delete(final_path, False)
-    if not fs.rename(tmp_path, final_path):
-        fs.delete(tmp_path, False)
+    if not publish_doc(
+        spark, _manifest_path(table_dir, snapshot_id), body, replace=replace
+    ):
         raise SnapshotConflict(
             f"snapshot {snapshot_id} already committed under {table_dir!r}"
         )

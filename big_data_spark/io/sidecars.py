@@ -16,14 +16,11 @@ import json
 import re
 import threading
 import uuid
-from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.layout import (
-    _BULK_MANIFEST_THRESHOLD,
     _DATA_DIR,
     _STATS_SIDE_DIR,
     _gen_id_of,
@@ -31,6 +28,9 @@ from big_data_spark.io.layout import (
     _read_json,
     _write_text,
     bare_path,
+    data_files,
+    hadoop_fs,
+    read_docs,
 )
 
 
@@ -181,13 +181,14 @@ def _prefetch_sidecars(
     stats: dict | None,
     gens,
 ) -> dict[str, dict]:
-    """Bulk-read the UNCACHED sidecars of many generations in ONE
-    distributed whole-file text scan (the _read_manifests trade, same
-    threshold): metadata aggregates touch every live generation, and
-    a 10k-generation table would otherwise pay 10k serial object-
-    store round trips before answering. Returns {gen: doc}; below the
-    threshold returns {} and callers fall back to the serial cached
-    loop."""
+    """Read the UNCACHED sidecars of many generations through the one
+    bulk reader (``layout.read_docs``: serial for a handful, ONE
+    distributed whole-file text scan above the threshold): metadata
+    aggregates touch every live generation, and a 10k-generation
+    table would otherwise pay 10k serial object-store round trips
+    before answering. Returns {gen: doc}; a generation it leaves out
+    falls back to the serial cached ``_read_sidecar``."""
+    global _SIDECAR_FS_READS
     side = (stats or {}).get("sidecars") or {}
     with _SIDECAR_CACHE_LOCK:
         # DISTINCT uncached files: a consolidated sidecar is
@@ -203,31 +204,20 @@ def _prefetch_sidecars(
             ):
                 seen.add(rel)
                 need.append(rel)
-    if len(need) <= _BULK_MANIFEST_THRESHOLD:
-        return {}
-    rows = (
-        spark.read.option("wholetext", "true")
-        .text([f"{table_dir}/{r}" for r in need])
-        # The rel each doc was READ FROM travels with the row:
-        # recovering it by searching side[] for any gen the doc
-        # carries mis-attributed stale consolidated files (an older
-        # consolidated doc still naming a gen whose side[] now points
-        # at a fresher per-gen sidecar could be cached under the NEW
-        # rel and overwrite the fresh read in this very bulk — row
-        # order is arbitrary), silently dropping an ANALYZE backfill.
-        .select(F.input_file_name().alias("path"), "value")
-        .collect()
-    )
-    by_base = {r.rsplit("/", 1)[-1]: r for r in need}
+    texts = read_docs(spark, [f"{table_dir}/{r}" for r in need])
     out: dict[str, dict] = {}
     raw_by_rel: dict[str, dict] = {}
-    for r in rows:
-        # input_file_name is a URI (percent-encoded); sidecar
-        # basenames are uuid-unique hex so they round-trip exactly.
-        rel = by_base.get(unquote(r["path"].rsplit("/", 1)[-1]))
-        if rel is None:
-            continue  # defensive: a path we did not ask for
-        doc = json.loads(r["value"])
+    # Each doc is attributed to the rel it was READ FROM: recovering
+    # it by searching side[] for any gen the doc carries mis-attributed
+    # stale consolidated files (an older consolidated doc still naming
+    # a gen whose side[] now points at a fresher per-gen sidecar could
+    # be cached under the NEW rel and overwrite the fresh read),
+    # silently dropping an ANALYZE backfill.
+    for rel in need:
+        text = texts.get(f"{table_dir}/{rel}")
+        if text is None:
+            continue  # defensive: left to the serial fallback
+        doc = json.loads(text)
         raw_by_rel[rel] = doc
         if "gens" in doc:
             # Consolidated file: expand ONLY the generations whose
@@ -239,11 +229,12 @@ def _prefetch_sidecars(
                     out[g] = d
         elif side.get(doc.get("gen")) == rel:
             out[doc["gen"]] = doc
-    # Prime the cache from the bulk read (up to the cap): tables
-    # whose generations fit become pure cache hits on every repeat
-    # query — without this the bulk scan re-ran per aggregate forever
-    # (review finding); oversized tables keep the bounded footprint.
+    # Prime the cache from the read (up to the cap): tables whose
+    # generations fit become pure cache hits on every repeat query —
+    # without this the bulk scan re-ran per aggregate forever;
+    # oversized tables keep the bounded footprint.
     with _SIDECAR_CACHE_LOCK:
+        _SIDECAR_FS_READS += len(raw_by_rel)
         for rel, doc in raw_by_rel.items():
             if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
                 break
@@ -350,24 +341,17 @@ def _default_stats_columns(
 
 def _gen_files(spark: SparkSession, table_dir: str, gen_rel: str):
     """(data file URIs, uri -> table-relative path, is-local-FS) for one
-    generation — the listing both commit-time sweeps share (hidden
-    ``_``/``.`` files skipped; no files for a missing dir)."""
-    fs, gp = hadoop_fs(spark, f"{table_dir}/{gen_rel}")
-    files: list[str] = []
-    if fs.exists(gp):
-        it = fs.listFiles(gp, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not (name.startswith("_") or name.startswith(".")):
-                files.append(st.getPath().toString())
+    generation — the listing both commit-time sweeps share (no files
+    for a missing dir)."""
+    files = [uri for uri, _ in data_files(spark, f"{table_dir}/{gen_rel}")]
     prefix = bare_path(f"{table_dir}/").rstrip("/") + "/"
 
     def rel(uri: str) -> str:
         b = bare_path(uri)
         return b[len(prefix):] if b.startswith(prefix) else uri
 
-    return files, rel, (fs.getUri().getScheme() or "file") == "file"
+    # Listed URIs are qualified, so the scheme is on each of them.
+    return files, rel, bool(files) and files[0].startswith("file:")
 
 
 def _physical_names(

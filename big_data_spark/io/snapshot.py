@@ -38,9 +38,8 @@ from big_data_spark.io.changes import (
     read_changes,
     table_history,
 )
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.dml import delete_where, fold_deletes, update_where
-from big_data_spark.io.layout import bare_path, generation_dir
+from big_data_spark.io.layout import bare_path, generation_dir, hadoop_fs
 from big_data_spark.io.manifest import (
     FORMAT_VERSION,
     SnapshotConflict,

@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from big_data_spark.io.layout import data_files
+
 _STATS_SCHEMA = StructType(
     [
         StructField("file", StringType()),
@@ -396,18 +398,11 @@ def parquet_column_stats(
     instead of raising when a file lacks the column — the snapshot
     DML / predicate path, where pre-evolution files legitimately miss
     later-added columns."""
-    jvm = spark._jvm
-    files: list[str] = []
-    for p in [path] if isinstance(path, str) else path:
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        it = fs.listFiles(hpath, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue
-            files.append(st.getPath().toString())
+    files = [
+        uri
+        for p in ([path] if isinstance(path, str) else path)
+        for uri, _ in data_files(spark, p)
+    ]
     if not files:
         raise ValueError(f"no parquet data files under {path!r}")
     paths = spark.createDataFrame([(f,) for f in files], "file string")

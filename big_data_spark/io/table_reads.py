@@ -14,7 +14,6 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.layout import (
     _DATA_DIR,
     _GEN_DIR_RE,
@@ -23,6 +22,7 @@ from big_data_spark.io.layout import (
     _gen_id_of,
     _read_json,
     bare_path,
+    hadoop_fs,
 )
 from big_data_spark.io.manifest import (
     _claim_check,

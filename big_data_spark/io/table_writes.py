@@ -12,7 +12,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_spark.io.compact import hadoop_fs
 from big_data_spark.io.layout import (
     _CDF_DIR,
     _DATA_DIR,
@@ -20,7 +19,9 @@ from big_data_spark.io.layout import (
     _STATS_SIDE_DIR,
     _read_json,
     _write_text,
+    data_files,
     generation_dir,
+    hadoop_fs,
 )
 from big_data_spark.io.manifest import (
     SnapshotConflict,
@@ -519,26 +520,10 @@ def clear_generation(
 
 
 def _generation_has_data(spark: SparkSession, gdir: str) -> bool:
-    """True if any data file (non-hidden, non-marker) exists anywhere
-    under the generation dir — driver-side metadata listing only."""
-    fs, hpath = hadoop_fs(spark, gdir)
-    if not fs.exists(hpath):
-        return False
-    stack = [hpath]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            # Spark's hidden-path rule: "." always hidden; "_" hidden
-            # unless it's a partition dir (contains "=", e.g. _bb=3).
-            if name.startswith(".") or (
-                name.startswith("_") and "=" not in name
-            ):
-                continue
-            if st.isDirectory():
-                stack.append(st.getPath())
-            else:
-                return True
-    return False
+    """True if any data file exists anywhere under the generation dir
+    (``layout.data_files``' hidden-path rule) — a driver-side listing
+    that stops at the first file."""
+    return next(data_files(spark, gdir), None) is not None
 
 
 def _stage_and_claim(
@@ -797,8 +782,10 @@ def append_with_retry(
     straight into ``_data/s=<id>`` and stays the single-writer /
     deterministic-replay path — mixing it with concurrent retry
     appenders can collide inside a generation dir before any commit.
-    A crashed writer's staged dir is invisible to readers and falls
-    to ``vacuum_snapshots`` (staging is unreferenced by manifests).
+    A refused or exhausted append deletes its staged dir before
+    raising; a crashed writer's staged dir is invisible to readers and
+    falls to ``vacuum_snapshots`` (staging is unreferenced by
+    manifests).
     """
     spark = df.sparkSession
     fields = _schema_fields(df)
@@ -823,10 +810,18 @@ def append_with_retry(
             entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
         return entries, {"layout_by": partition_by}
 
-    return _claim_commit_loop(
-        spark, table_dir, staging, fields, attempts, build,
-        "append_with_retry",
-    )
+    try:
+        return _claim_commit_loop(
+            spark, table_dir, staging, fields, attempts, build,
+            "append_with_retry",
+        )
+    except Exception:
+        # No caller holds a token for this batch, so nobody else can
+        # abandon it: a refused or exhausted append removes its own
+        # staged data instead of leaving it to vacuum's staging TTL.
+        fs, sp = hadoop_fs(spark, staging)
+        fs.delete(sp, True)
+        raise
 
 
 def write_snapshot_partial(

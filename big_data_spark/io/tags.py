@@ -5,67 +5,20 @@ alive by ``vacuum_snapshots`` past its ``keep_last`` window."""
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import SparkSession
 
-from big_data_spark.io.compact import hadoop_fs
-from big_data_spark.io.layout import _TAGS_DIR, _read_json, _write_text
+from big_data_spark.io.layout import (
+    _TAGS_DIR,
+    _read_json,
+    hadoop_fs,
+    publish_doc,
+)
 from big_data_spark.io.manifest import (
     SnapshotConflict,
     _manifest_path,
     snapshot_ids,
 )
-
-
-def _atomic_overwrite_local(
-    spark: SparkSession, fs, parent_dir: str, tmp_path, final_path, tag: str
-) -> bool:
-    """Replace ``final_path`` with ``tmp_path`` in ONE atomic
-    same-directory rename on a local (file://) filesystem — java.nio
-    ``ATOMIC_MOVE|REPLACE_EXISTING``, the overwrite-rename Hadoop's
-    ``FileSystem.rename`` lacks. Checksum sidecars need care: the
-    local FS is a ChecksumFileSystem, so a stale ``.{name}.crc``
-    beside the swapped-in data would fail readers' verification.
-    The crcs are DELETED, never moved: a delete-crc / move-data /
-    move-crc sequence lets two concurrent movers pair one mover's
-    data with the OTHER's crc (ChecksumException on every later
-    read); with both sidecars removed the moved pin simply reads
-    unverified — the safe state a missing crc means — and
-    last-data-move-wins holds for any interleaving."""
-    jvm = spark._jvm
-    gw = spark.sparkContext._gateway
-
-    def _nio_move(src: str, dst: str) -> None:
-        opts = gw.new_array(jvm.java.nio.file.CopyOption, 2)
-        opts[0] = jvm.java.nio.file.StandardCopyOption.REPLACE_EXISTING
-        opts[1] = jvm.java.nio.file.StandardCopyOption.ATOMIC_MOVE
-        jvm.java.nio.file.Files.move(
-            jvm.java.io.File(src).toPath(),
-            jvm.java.io.File(dst).toPath(),
-            opts,
-        )
-
-    tmp_name = tmp_path.getName()
-    dst_crc = f"{parent_dir}/.{tag}.json.crc"
-    _, dst_crc_p = hadoop_fs(spark, dst_crc)
-    if fs.exists(dst_crc_p):
-        fs.delete(dst_crc_p, False)
-    try:
-        _nio_move(tmp_path.toUri().getPath(), final_path.toUri().getPath())
-    except Exception:
-        # A failed move (permissions, FS without real atomic replace)
-        # must not strand the temp pin + its crc sidecar in _tags/ —
-        # nothing vacuums there. The existing pin is untouched by a
-        # failed ATOMIC_MOVE, so cleanup is safe.
-        if fs.exists(tmp_path):
-            fs.delete(tmp_path, False)
-        raise
-    src_crc = f"{parent_dir}/.{tmp_name}.crc"
-    _, src_crc_p = hadoop_fs(spark, src_crc)
-    if fs.exists(src_crc_p):
-        fs.delete(src_crc_p, False)
-    return True
 
 
 def tag_snapshot(
@@ -99,47 +52,15 @@ def tag_snapshot(
             f"snapshot {sid} not found under {table_dir!r} "
             f"(committed: {ids})"
         )
-    tdir = f"{table_dir}/{_TAGS_DIR}"
-    fs, tpath = hadoop_fs(spark, tdir)
-    fs.mkdirs(tpath)
-    tmp = f"{tdir}/.tmp-{uuid.uuid4().hex}"
-    _, tmp_path = hadoop_fs(spark, tmp)
+    # publish_doc's rules: replace=True moves the pin with ONE atomic
+    # overwrite-rename on the local FS (a crash never releases it);
+    # elsewhere delete-then-rename, where a crash between the two
+    # RELEASES the pin (the next vacuum may expire the formerly pinned
+    # version's data) — re-tag after recovering. Concurrent movers are
+    # last-completed-wins and both succeed.
+    final = f"{table_dir}/{_TAGS_DIR}/{tag}.json"
     pin = json.dumps({"tag": tag, "snapshot_id": sid}, sort_keys=True)
-    _write_text(fs, tmp_path, pin)
-    _, final = hadoop_fs(spark, f"{tdir}/{tag}.json")
-    # replace=True on a LOCAL filesystem moves the pin with ONE atomic
-    # overwrite-rename (java.nio ATOMIC_MOVE): no transient not-found
-    # window for readers, and a crash can never release the pin —
-    # either the old pin or the new one exists at every instant. Two
-    # concurrent movers are last-completed-wins, both succeed.
-    if (
-        replace
-        and fs.exists(final)
-        and (fs.getUri().getScheme() or "file") == "file"
-    ):
-        renamed = _atomic_overwrite_local(
-            spark, fs, tdir, tmp_path, final, tag
-        )
-    else:
-        # Non-local FS without an overwrite-rename primitive keeps the
-        # documented delete-then-rename fallback: readers can hit a
-        # transient not-found between the two ops, and a crash between
-        # them RELEASES the pin (the next vacuum may expire the
-        # formerly pinned version's data) — re-tag after recovering.
-        # Two concurrent replace=True movers are last-completed-wins:
-        # the loser's rename fails because the winner's file landed
-        # after our delete, so retry ONCE after re-deleting (round-10
-        # advice: without the retry the loser got the misleading
-        # first-writer-conflict error).
-        if replace and fs.exists(final):
-            fs.delete(final, False)
-        renamed = fs.rename(tmp_path, final)
-        if not renamed and replace:
-            if fs.exists(final):
-                fs.delete(final, False)
-            renamed = fs.rename(tmp_path, final)
-    if not renamed:
-        fs.delete(tmp_path, False)
+    if not publish_doc(spark, final, pin, replace=replace):
         raise SnapshotConflict(
             f"tag {tag!r} already exists under {table_dir!r} — "
             "pass replace=True to move it"
@@ -154,9 +75,10 @@ def tag_snapshot(
     # between vacuum's re-read and its manifest delete AND the vacuum
     # deleting in the instant after this check passes — two
     # check-vs-delete instants that would both have to line up.
-    _, mp = hadoop_fs(spark, _manifest_path(table_dir, sid))
+    fs, mp = hadoop_fs(spark, _manifest_path(table_dir, sid))
     if not fs.exists(mp):
-        fs.delete(final, False)
+        _, pin_path = hadoop_fs(spark, final)
+        fs.delete(pin_path, False)
         raise SnapshotConflict(
             f"snapshot {sid} was vacuumed while tagging {tag!r} — "
             "re-tag from a currently kept version"

@@ -18,9 +18,9 @@ smaller than the target AQE broadcasts it and the target never
 shuffles; with comparable sizes it is one sort-merge join. Either way
 the whole merge is a single pass over the target — no driver loops,
 no collect. For partitioned targets, pair with ``touched_partitions``
-+ a dynamic-partition-overwrite write so only partitions containing
-changed keys are rewritten (rewrite cost scales with the change set,
-not the table).
++ ``write_snapshot_partial`` so only partitions containing changed
+keys are rewritten (rewrite cost scales with the change set, not the
+table).
 
 Cardinality: SQL MERGE raises when a target row matches more than one
 source row (the result would be nondeterministic). ``strict=True``
@@ -257,11 +257,14 @@ def touched_partitions(
         parts = touched_partitions(changes, ["ds"])
         pruned = target.join(F.broadcast(parts), ["ds"], "left_semi")
         merged = merge_into(pruned, changes, keys)
-        merged.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ds").parquet(path)
+        write_snapshot_partial(
+            merged, table_dir, next_id, "ds",
+            [r["ds"] for r in parts.collect()],
+        )
 
-    With dynamic overwrite, untouched partitions' files are left in
-    place; merge cost is O(|changed partitions|), not O(|table|).
+    ``write_snapshot_partial`` (io/table_writes.py) commits the
+    touched partitions as a new snapshot and carries the untouched
+    ones forward by reference; merge cost is O(|changed partitions|),
+    not O(|table|).
     """
     return source.select(*partition_cols).distinct()

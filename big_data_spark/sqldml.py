@@ -856,7 +856,7 @@ def _execute_insert(
     # Report what actually LANDED: a parquet metadata count of the
     # committed generation — never a re-execution of the row source
     # (a non-deterministic SELECT would report rows it didn't write).
-    from big_data_spark.io.compact import hadoop_fs
+    from big_data_spark.io.layout import hadoop_fs
     from big_data_spark.io.layout import generation_dir
 
     gdir = generation_dir(table_dir, sid)
@@ -884,7 +884,7 @@ def _execute_create(
     write_snapshot_partial, and the name registers into ``tables``.
     Refuses an already-registered name and a non-empty target dir —
     CTAS creates, it never adopts or overwrites."""
-    from big_data_spark.io.compact import hadoop_fs
+    from big_data_spark.io.layout import hadoop_fs
     from big_data_spark.io.layout import generation_dir
     from big_data_spark.io.table_writes import (
         write_snapshot,
@@ -998,7 +998,7 @@ def _execute_drop(
     ``_manifests`` commit log is deleted (the registration could
     point anywhere; an unguarded recursive delete of a mis-registered
     path would be a data-loss foot-gun)."""
-    from big_data_spark.io.compact import hadoop_fs
+    from big_data_spark.io.layout import hadoop_fs
 
     name = m.group(2)
     table_dir = tables[name]

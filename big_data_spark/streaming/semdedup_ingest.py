@@ -64,12 +64,11 @@ and pass them to the first batch.
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.compact import hadoop_fs
+from big_data_spark.io.layout import _read_json, hadoop_fs, publish_doc
 from big_data_spark.io.manifest import snapshot_ids
 from big_data_spark.io.table_reads import read_snapshot
 from big_data_spark.io.table_writes import append_snapshot
@@ -106,14 +105,7 @@ def pinned_centroids(
     path = f"{index_dir}/centroids.json"
     fs, hpath = hadoop_fs(spark, path)
     if fs.exists(hpath):
-        stream = fs.open(hpath)
-        try:
-            text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        pinned = json.loads(text)
+        pinned = _read_json(spark, path)
         if centroids is not None and pinned != centroids:
             raise ValueError(
                 f"index under {index_dir!r} is pinned to "
@@ -126,19 +118,10 @@ def pinned_centroids(
         from big_data_spark.operators.ivf_centroids import IVF_CENTROIDS
 
         centroids = IVF_CENTROIDS
-    fs.mkdirs(hpath.getParent())
-    tmp = f"{index_dir}/.tmp-centroids-{uuid.uuid4().hex}"
-    _, tmp_path = hadoop_fs(spark, tmp)
-    out = fs.create(tmp_path, True)
-    try:
-        out.write(bytearray(json.dumps(centroids).encode("utf-8")))
-    finally:
-        out.close()
-    if not fs.rename(tmp_path, hpath):
+    if not publish_doc(spark, path, json.dumps(centroids)):
         # Another instance pinned first — adopt theirs (idempotent
         # replays write identical bytes; a genuine conflict surfaces
         # on the equality check above next call).
-        fs.delete(tmp_path, False)
         return pinned_centroids(spark, index_dir, centroids)
     return centroids
 

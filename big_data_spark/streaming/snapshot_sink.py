@@ -52,7 +52,7 @@ def snapshot_sink(
         if checks:
             import uuid as _uuid
 
-            from big_data_spark.io.compact import hadoop_fs
+            from big_data_spark.io.layout import hadoop_fs
             from big_data_spark.operators.dq import assert_suite
 
             # The audit and the append are TWO Spark actions over the

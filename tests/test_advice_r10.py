@@ -12,7 +12,7 @@ import time
 import pytest
 
 import big_data_spark.io.snapshot as snap
-from big_data_spark.io import table_writes, tags
+from big_data_spark.io import layout, table_writes
 from big_data_spark.io.snapshot import (
     append_snapshot,
     list_tags,
@@ -107,7 +107,7 @@ def test_tag_replace_retries_lost_mover_race(spark, tmp_path, monkeypatch):
         def __getattr__(self, name):
             return getattr(self._fs, name)
 
-    real_hadoop_fs = tags.hadoop_fs
+    real_hadoop_fs = layout.hadoop_fs
     raced: dict = {}
 
     def wrapped(spark_, path):
@@ -117,7 +117,7 @@ def test_tag_replace_retries_lost_mover_race(spark, tmp_path, monkeypatch):
             return proxy, p
         return fs, p
 
-    monkeypatch.setattr(tags, "hadoop_fs", wrapped)
+    monkeypatch.setattr(layout, "hadoop_fs", wrapped)
     assert tag_snapshot(spark, t, "rel", snapshot_id=2, replace=True) == 2
     assert raced["fs"].swallowed  # the race actually happened
     monkeypatch.undo()

@@ -202,8 +202,8 @@ def test_append_with_retry_two_real_writers_in_threads(spark, tmp_path):
 
 def test_append_with_retry_exhausts_on_orphan_dir(spark, tmp_path):
     """A crash orphan squatting on the next id blocks the dir claim;
-    the helper raises after its budget with the dir named, and the
-    staged data survives for a later retry."""
+    the helper raises after its budget with the dir named. No caller
+    holds a token for the staged batch, so the helper removes it."""
     import glob
     import os
 
@@ -220,7 +220,37 @@ def test_append_with_retry_exhausts_on_orphan_dir(spark, tmp_path):
         append_with_retry(
             spark.range(10, 20).selectExpr("id AS k"), t, attempts=2
         )
-    assert len(glob.glob(f"{t}/_staging/*")) == 1
+    assert glob.glob(f"{t}/_staging/*") == []
+    assert read_snapshot(spark, t).count() == 10
+
+
+def test_refused_or_exhausted_retry_append_leaves_no_staging(
+    spark, tmp_path
+):
+    """append_with_retry stages its batch under a uuid no caller ever
+    sees: a refused append (a laid-out batch onto a plain table) and
+    a single-attempt append blocked by an orphan generation both
+    delete their staged dir before raising."""
+    import glob
+    import os
+
+    from big_data_spark.io.snapshot import append_with_retry
+
+    t = str(tmp_path / "retry_staging")
+    append_snapshot(
+        spark.range(0, 10).selectExpr("id AS k", "id % 2 AS v"), t,
+        snapshot_id=0,
+    )
+    batch = spark.range(10, 20).selectExpr("id AS k", "id % 2 AS v")
+    with pytest.raises(ValueError, match="mixed-layout"):
+        append_with_retry(batch, t, partition_by="v")
+    assert glob.glob(f"{t}/_staging/*") == []
+    os.makedirs(f"{t}/_data/s=1")
+    with open(f"{t}/_data/s=1/part-orphan.parquet", "w") as f:
+        f.write("x")
+    with pytest.raises(SnapshotConflict, match="s=1"):
+        append_with_retry(batch, t, attempts=1)
+    assert glob.glob(f"{t}/_staging/*") == []
     assert read_snapshot(spark, t).count() == 10
 
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 import big_data_spark.io.snapshot as snap
-from big_data_spark.io import manifest
+from big_data_spark.io import layout
 from big_data_spark.io.manifest import commit_manifest, successor
 from big_data_spark.io.snapshot import (
     read_changes,
@@ -45,14 +45,17 @@ def long_table(spark, tmp_path):
 
 
 def _counting(monkeypatch):
+    """Counts serial driver-side manifest reads: every one goes
+    through layout's one small-file reader."""
     calls = {"n": 0}
-    real = manifest.read_manifest
+    real = layout._read_text
 
-    def counted(spark_, table_dir, sid):
-        calls["n"] += 1
-        return real(spark_, table_dir, sid)
+    def counted(spark_, path):
+        if "/_manifests/manifest-" in path:
+            calls["n"] += 1
+        return real(spark_, path)
 
-    monkeypatch.setattr(manifest, "read_manifest", counted)
+    monkeypatch.setattr(layout, "_read_text", counted)
     return calls
 
 

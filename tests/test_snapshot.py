@@ -91,6 +91,127 @@ def test_commit_conflict_first_wins(spark, tmp_path):
     assert not glob.glob(f"{t}/_manifests/.tmp-*")
 
 
+def test_publish_doc_create_only_loser_leaves_winner_and_no_temp(
+    spark, tmp_path
+):
+    """A create-only publish of a name that already exists returns
+    False: the first document stays byte for byte, and the loser's
+    temp file is gone."""
+    from big_data_spark.io.layout import publish_doc
+
+    d = str(tmp_path / "docs")
+    assert publish_doc(spark, f"{d}/pin.json", '{"who": "first"}')
+    assert not publish_doc(spark, f"{d}/pin.json", '{"who": "second"}')
+    with open(f"{d}/pin.json") as fh:
+        assert fh.read() == '{"who": "first"}'
+    assert not glob.glob(f"{d}/.tmp-*")
+
+
+def test_manifest_replace_whose_move_fails_keeps_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """Replace-committing an already-committed id must never lose it:
+    when the final move raises (Hadoop rename or java.nio move alike),
+    manifest N is still there, byte for byte, and no temp file is
+    left. A delete-then-rename publish would drop the table back one
+    version."""
+    from py4j import java_gateway
+
+    t = str(tmp_path / "replace_crash")
+    write_snapshot(spark.range(3).selectExpr("id AS k"), t)
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t)
+    path = f"{t}/_manifests/manifest-000000000001.json"
+    with open(path, "rb") as fh:
+        before = fh.read()
+    prev = read_manifest(spark, t, 0)
+    man = successor(prev, 1, read_manifest(spark, t, 1)["entries"])
+
+    def failing_moves(real):
+        def getattr_(self, name):
+            if name in ("rename", "move"):
+                raise OSError(f"injected failure: {name}")
+            return real(self, name)
+
+        return getattr_
+
+    for cls in (java_gateway.JavaObject, java_gateway.JavaClass):
+        monkeypatch.setattr(cls, "__getattr__", failing_moves(cls.__getattr__))
+    with pytest.raises(Exception, match="injected failure"):
+        commit_manifest(spark, t, man, prev_man=prev, replace=True)
+    monkeypatch.undo()
+    assert snapshot_ids(spark, t) == [0, 1]
+    with open(path, "rb") as fh:
+        assert fh.read() == before
+    assert not glob.glob(f"{t}/_manifests/.tmp-*")
+    assert read_snapshot(spark, t).count() == 5
+
+
+def test_read_docs_keys_by_path_and_skips_missing_only_when_asked(
+    spark, tmp_path
+):
+    """The bulk reader returns {requested path: text} on both sides of
+    its threshold (names with spaces and '%' survive the scan's URI
+    round trip). With ``missing_ok`` a document gone since its listing
+    is left out, also when Spark's up-front path check is the one
+    that notices; without it the read raises."""
+    import json
+
+    from big_data_spark.io import layout
+
+    d = tmp_path / "docs"
+    d.mkdir()
+    want = {}
+    for i in range(layout._BULK_MANIFEST_THRESHOLD + 2):
+        (d / f"doc {i}%20.json").write_text(json.dumps({"i": i}))
+        want[str(d / f"doc {i}%20.json")] = i
+    paths = list(want)
+    got = layout.read_docs(spark, paths)
+    assert {p: json.loads(t)["i"] for p, t in got.items()} == want
+    gone = str(d / "gone.json")
+    for some in (paths[:3], paths):
+        got = layout.read_docs(spark, some + [gone], missing_ok=True)
+        assert sorted(got) == sorted(some)
+        with pytest.raises(Exception):
+            layout.read_docs(spark, some + [gone])
+
+
+def test_data_files_follows_sparks_hidden_path_rule(spark, tmp_path):
+    """A file is data unless a path component below the dir starts
+    with '.', or with '_' without '=': layout dirs like ``_bb=3/``
+    count, ``_SUCCESS``, ``.crc`` files and ``_x/`` do not. The
+    generation has-data probe agrees, and a missing dir is empty."""
+    from big_data_spark.io import table_writes
+    from big_data_spark.io.compact import parquet_inventory
+    from big_data_spark.io.layout import data_files
+
+    g = tmp_path / "gen"
+    for rel in [
+        "_bb=3/part-0.parquet",
+        "part-1.parquet",
+        "_SUCCESS",
+        ".part-1.parquet.crc",
+        "_bb=3/.part-0.parquet.crc",
+        "_x/part-2.parquet",
+        ".hidden/part-3.parquet",
+    ]:
+        (g / rel).parent.mkdir(parents=True, exist_ok=True)
+        (g / rel).write_bytes(b"abc")
+    got = sorted(
+        uri.split("/gen/", 1)[1] for uri, _ in data_files(spark, str(g))
+    )
+    assert got == ["_bb=3/part-0.parquet", "part-1.parquet"]
+    assert parquet_inventory(spark, str(g))["total_bytes"] == 6
+    assert table_writes._generation_has_data(spark, str(g))
+    (g / "_bb=3" / "part-0.parquet").unlink()
+    (g / "part-1.parquet").unlink()
+    assert list(data_files(spark, str(g))) == []
+    assert not table_writes._generation_has_data(spark, str(g))
+    assert list(data_files(spark, str(tmp_path / "missing"))) == []
+    assert not table_writes._generation_has_data(
+        spark, str(tmp_path / "missing")
+    )
+
+
 def test_partial_emptied_bucket_drops_from_manifest(spark, tmp_path):
     t = str(tmp_path / "tbl")
     write_snapshot_partial(

@@ -113,42 +113,42 @@ def main() -> None:
     )
     base_n = ev.count()
     for m in mults:
-        work = tempfile.mkdtemp(prefix="ingest_scale_")
-        # M copies with distinct ids for half, duplicate ids for half:
-        # every batch carries both fresh and already-seen keys.
-        src = (
-            spark.range(m)
-            .crossJoin(ev)
-            .select(
-                F.when(
-                    F.col("id") % 2 == 0,
-                    F.col("event_id") + F.col("id") * base_n,
+        with tempfile.TemporaryDirectory(prefix="ingest_scale_") as work:
+            # M copies with distinct ids for half, duplicate ids for half:
+            # every batch carries both fresh and already-seen keys.
+            src = (
+                spark.range(m)
+                .crossJoin(ev)
+                .select(
+                    F.when(
+                        F.col("id") % 2 == 0,
+                        F.col("event_id") + F.col("id") * base_n,
+                    )
+                    .otherwise(F.col("event_id"))
+                    .alias("event_id"),
+                    "user_id",
+                    "event_type",
+                    "value",
                 )
-                .otherwise(F.col("event_id"))
-                .alias("event_id"),
-                "user_id",
-                "event_type",
-                "value",
             )
-        )
-        src.repartition(4).write.parquet(f"{work}/src")
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, value double"
+            src.repartition(4).write.parquet(f"{work}/src")
+            stream = (
+                spark.readStream.schema(
+                    "event_id bigint, user_id bigint, event_type string, value double"
+                )
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{work}/src")
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/src")
-        )
-        t0 = time.time()
-        run_dedup_ingest(stream, "event_id", f"{work}/lake", f"{work}/ck")
-        dt = time.time() - t0
-        n_in = base_n * m
-        n_out = read_lake(spark, f"{work}/lake").count()
-        print(
-            f"mult={m}: {n_in} rows in, {n_out} unique out, "
-            f"{dt:.1f}s, {int(n_in / dt)} rows/s"
-        )
-        assert n_out == base_n * ((m + 1) // 2), (n_out, m, base_n)
+            t0 = time.time()
+            run_dedup_ingest(stream, "event_id", f"{work}/lake", f"{work}/ck")
+            dt = time.time() - t0
+            n_in = base_n * m
+            n_out = read_lake(spark, f"{work}/lake").count()
+            print(
+                f"mult={m}: {n_in} rows in, {n_out} unique out, "
+                f"{dt:.1f}s, {int(n_in / dt)} rows/s"
+            )
+            assert n_out == base_n * ((m + 1) // 2), (n_out, m, base_n)
     stop_spark(spark)
 
 

@@ -124,35 +124,35 @@ def main() -> int:
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
 
-    work = tempfile.mkdtemp(prefix="skew_stress_")
-    n_docs = build_skewed_corpus(spark, sf_dir, work, hot_frac, clones)
-    print(
-        f"corpus: {n_docs} docs ({hot_frac:.0%} share one hot shingle, "
-        f"{clones} verbatim clones) at {work}"
-    )
-
-    from big_data_spark.queries.llm import (
-        q_dedup_minhash_lsh,
-        q_dedup_ngram_jaccard,
-    )
-
-    results = []
-    failures = []
-    for name, fn in (
-        ("dedup_ngram_jaccard", q_dedup_ngram_jaccard),
-        ("dedup_minhash_lsh", q_dedup_minhash_lsh),
-    ):
-        last_stage = max(
-            (s["stageId"] for s in rest(ui, app_id, "stages")), default=-1
+    with tempfile.TemporaryDirectory(prefix="skew_stress_") as work:
+        n_docs = build_skewed_corpus(spark, sf_dir, work, hot_frac, clones)
+        print(
+            f"corpus: {n_docs} docs ({hot_frac:.0%} share one hot shingle, "
+            f"{clones} verbatim clones) at {work}"
         )
-        t0 = time.perf_counter()
-        n_pairs = fn(spark, work).count()
-        wall = time.perf_counter() - t0
-        rows = heavy_stages(ui, app_id, last_stage)
-        results.append((name, wall, n_pairs, rows))
-        for sid, sname, ntasks, med, mx in rows:
-            if mx >= 1.0 and med > 0 and mx / med > 10.0:
-                failures.append(f"{name} stage {sid} ({sname}): {mx:.2f}s max vs {med:.2f}s median")
+
+        from big_data_spark.queries.llm import (
+            q_dedup_minhash_lsh,
+            q_dedup_ngram_jaccard,
+        )
+
+        results = []
+        failures = []
+        for name, fn in (
+            ("dedup_ngram_jaccard", q_dedup_ngram_jaccard),
+            ("dedup_minhash_lsh", q_dedup_minhash_lsh),
+        ):
+            last_stage = max(
+                (s["stageId"] for s in rest(ui, app_id, "stages")), default=-1
+            )
+            t0 = time.perf_counter()
+            n_pairs = fn(spark, work).count()
+            wall = time.perf_counter() - t0
+            rows = heavy_stages(ui, app_id, last_stage)
+            results.append((name, wall, n_pairs, rows))
+            for sid, sname, ntasks, med, mx in rows:
+                if mx >= 1.0 and med > 0 and mx / med > 10.0:
+                    failures.append(f"{name} stage {sid} ({sname}): {mx:.2f}s max vs {med:.2f}s median")
 
     print("\n| query | wall s | pairs | stage | tasks | task median s | task max s | max/med |")
     print("|---|---|---|---|---|---|---|---|")
