@@ -327,7 +327,8 @@ def read_pruned(
     per query.
 
     Scale: the footer sweep runs ON EXECUTORS (io/stats.py
-    mapInPandas); only the kept FILE NAMES come back to the driver —
+    mapInPandas); only each file's folded bounds come back to the
+    driver, which applies the one skip test (io/stats.keep_file) —
     bounded metadata, the same thing a table-format reader holds in
     memory when planning a scan. For a table re-read many times per
     session, the kept list amortizes exactly like a manifest cache.
@@ -346,21 +347,14 @@ def read_pruned(
     from big_data_spark.io.stats import prune_files_multi, range_predicate
 
     ranges = column if isinstance(column, dict) else {column: (lo, hi)}
-    decisions = (
-        prune_files_multi(spark, path, ranges)
-        .select("file", "keep")
-        .distinct()
-        .collect()
-    )
-    kept = [r["file"] for r in decisions if r["keep"]]
+    kept = [f for f, k in prune_files_multi(spark, path, ranges).items() if k]
     cond = range_predicate(ranges)
     if not kept:
         # Every file provably misses the range: empty result, real schema.
         return spark.read.parquet(path).where(F.lit(False))
     # basePath keeps hive-style partition columns in the schema when
-    # the dataset is partitioned (round-6 advice: without it a
-    # residual filter on a partition column fails / diverges from the
-    # documented full-scan-filter equivalence); harmless when the
-    # layout is flat.
+    # the dataset is partitioned (without it a residual filter on a
+    # partition column fails / diverges from the documented
+    # full-scan-filter equivalence); harmless when the layout is flat.
     df = spark.read.option("basePath", path).parquet(*kept)
     return df.filter(cond)

@@ -1,7 +1,8 @@
-"""Per-generation column-stats sidecars: the commit-time footer and
-integer-sum sweeps, the immutable sidecar files under
-``_manifests/stats/`` and their process cache, lazy per-generation
-loads with rename-log replay, and consolidated shards.
+"""Per-generation column-stats sidecars: the commit-time generation
+sweep (one listing, io/stats.file_stats per file), the immutable
+sidecar files under ``_manifests/stats/`` and their process cache,
+lazy per-generation loads with rename-log replay, and consolidated
+shards.
 
 The manifest carries only ``{generation: sidecar rel path}``
 (``stats.sidecars``); per-file min/max, row counts and integer sums
@@ -18,12 +19,10 @@ import threading
 import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from big_data_spark.io.layout import (
     _DATA_DIR,
     _STATS_SIDE_DIR,
-    _gen_id_of,
     _live_gens,
     _read_json,
     _write_text,
@@ -310,10 +309,10 @@ def load_generation_stats(
 
 
 _STATS_MAX_COLS = 4
-# Generations at or under this many files sweep footers in a driver
-# loop (ms per local file); larger or remote ones fan out through the
-# distributed kernel. Patchable in tests to force the distributed
-# path on small fixtures.
+# Local generations at or under this many files run the per-file
+# stats function in a driver loop (ms per file); larger or remote ones
+# run it on executors. Patchable in tests to force the executor path
+# on small fixtures.
 _LOCAL_SWEEP_MAX_FILES = 64
 
 
@@ -322,10 +321,9 @@ def _default_stats_columns(
 ) -> list[str]:
     """The LEADING stat-capable columns (schema order, capped) stats
     are recorded for by default — numeric, string, date and timestamp
-    types (round 11: typed skipping; io/stats.stat_kind is the one
-    type→kind mapping). Partition/layout columns excluded (they live
-    in dir names, not file footers, and manifest entries already
-    prune them)."""
+    types (io/stats.stat_kind is the one type→kind mapping).
+    Partition/layout columns excluded (they live in dir names, not
+    file footers, and manifest entries already prune them)."""
     from big_data_spark.io.stats import stat_kind
 
     out: list[str] = []
@@ -339,154 +337,17 @@ def _default_stats_columns(
     return out
 
 
-def _gen_files(spark: SparkSession, table_dir: str, gen_rel: str):
-    """(data file URIs, uri -> table-relative path, is-local-FS) for one
-    generation — the listing both commit-time sweeps share (no files
-    for a missing dir)."""
-    files = [uri for uri, _ in data_files(spark, f"{table_dir}/{gen_rel}")]
-    prefix = bare_path(f"{table_dir}/").rstrip("/") + "/"
-
-    def rel(uri: str) -> str:
-        b = bare_path(uri)
-        return b[len(prefix):] if b.startswith(prefix) else uri
-
-    # Listed URIs are qualified, so the scheme is on each of them.
-    return files, rel, bool(files) and files[0].startswith("file:")
-
-
-def _physical_names(
-    columns: list[str], rename_log: list | None, gen_rel: str
-) -> dict[str, str | None]:
-    """Each logical column's physical name inside the generation at
-    ``gen_rel`` (None = dropped), replaying the evolution events
-    committed after it was written."""
-    if not rename_log:
-        return {c: c for c in columns}
-    from big_data_spark.io.stats import _physical_name
-
-    gen_id = _gen_id_of(gen_rel)
-    log = [list(e) for e in rename_log]
-    return {c: _physical_name(c, log, gen_id) for c in columns}
-
-
-def _sweep_generation_stats(
-    spark: SparkSession,
-    table_dir: str,
-    gen_rel: str,
-    columns: list[str],
-    rename_log: list | None = None,
-) -> tuple[dict[str, dict], dict[str, int]]:
-    """Per-FILE min/max for one (immutable, just-written) data
-    generation — ``({file_rel: {col: [min_str, max_str] | "allnull"
-    | None}}, {file_rel: n_rows})`` (None = no usable footer stats
-    for that column in some row group — unprunable, never a false
-    drop; the row counts back metadata-only COUNT(*), round 11).
-    Small local generations read their footers in a driver loop (ms
-    per file); larger or remote ones fan out through the distributed
-    footer sweep (io/stats.parquet_column_stats). Swept ONCE at
-    commit time — generations are immutable, so every later commit
-    carries the result forward as metadata."""
-    gen_dir = f"{table_dir}/{gen_rel}"
-    files, _rel, local = _gen_files(spark, table_dir, gen_rel)
-    if not files:
-        return {}, {}
-    out: dict[str, dict] = {}
-    # A generation committed without stats and backfilled later may
-    # carry a stat column under a former physical name (renamed after
-    # it was written) — resolve through the evolution log exactly
-    # like the read-path footer sweep, or the backfilled stats would
-    # record the column as permanently unprunable.
-    phys = _physical_names(columns, rename_log, gen_rel)
-    if local and len(files) <= _LOCAL_SWEEP_MAX_FILES:
-        # Same primitive as the distributed kernel (footer_file_stats
-        # normalizes values + tags kinds; fold_footer_rows replays the
-        # kernel path's Spark-SQL aggregation) — ONE implementation of
-        # the all-null / no-stats / canonicalization rules, pinned
-        # equal across the two paths in tests.
-        from big_data_spark.io.stats import (
-            file_row_count,
-            fold_footer_rows,
-            footer_file_stats,
-        )
-
-        nrows: dict[str, int] = {}
-        for f in files:
-            rows = footer_file_stats(bare_path(f), columns, phys)
-            out[_rel(f)] = fold_footer_rows(rows, columns)
-            nrows[_rel(f)] = file_row_count(rows)
-        return out, nrows
-    from big_data_spark.io.stats import parquet_column_stats
-
-    rows = (
-        parquet_column_stats(
-            spark,
-            [gen_dir],
-            columns,
-            rename_log=rename_log,
-            missing_ok=True,
-        )
-        .groupBy("file", "column")
-        .agg(
-            # numeric fold (double order) and lexicographic fold of
-            # the kernel's canonical strings side by side — the row's
-            # KIND picks the meaningful one, exactly as in
-            # prune_files_multi.
-            F.min(F.col("min_value").try_cast("double")).alias("mn_d"),
-            F.max(F.col("max_value").try_cast("double")).alias("mx_d"),
-            F.min("min_value").alias("mn_s"),
-            F.max("max_value").alias("mx_s"),
-            # 'allnull' row groups are not stat-less: they fail every
-            # range predicate, so they neither widen bounds nor block
-            # pruning (round 11: null-count skipping).
-            F.max(
-                (
-                    F.col("min_value").isNull()
-                    & F.col("kind").isNull()
-                ).cast("int")
-            ).alias("nostats"),
-            F.min(
-                F.coalesce(
-                    (F.col("kind") == "allnull").cast("int"), F.lit(0)
-                )
-            ).alias("allnull"),
-            F.first(
-                F.when(F.col("kind") != "allnull", F.col("kind")),
-                ignorenulls=True,
-            ).alias("kind"),
-            # every column's rows repeat the row-group counts, so any
-            # single column's sum is the file's row count
-            F.sum("n_rows").alias("rows_sum"),
-        )
-        .collect()
-    )
-    nrows: dict[str, int] = {}
-    for r in rows:
-        nrows.setdefault(_rel(r["file"]), int(r["rows_sum"] or 0))
-        per_col = out.setdefault(_rel(r["file"]), {})
-        if r["nostats"] == 1:
-            per_col[r["column"]] = None
-        elif r["allnull"] == 1:
-            per_col[r["column"]] = "allnull"
-        elif r["kind"] is None:
-            per_col[r["column"]] = None
-        elif r["kind"] == "numeric":
-            per_col[r["column"]] = [str(r["mn_d"]), str(r["mx_d"])]
-        else:
-            per_col[r["column"]] = [r["mn_s"], r["mx_s"]]
-    return out, nrows
-
-
 _SUM_INT_HEADS = ("tinyint", "smallint", "int", "bigint")
 
 
 def _sum_columns(
     columns: list[str], schema_fields: list[dict] | None
 ) -> list[str]:
-    """The stats columns metadata SUM/AVG covers: INTEGER types only
-    (round 12). Exactness is the contract — integer sums fold in
-    unbounded Python ints; float/double sums are order-dependent in
-    Spark itself and decimals are already refused by the stats
-    fold — so non-integer columns simply never record sums."""
+    """The stats columns metadata SUM/AVG covers: INTEGER types only.
+    Exactness is the contract — integer sums fold in unbounded Python
+    ints; float/double sums are order-dependent in Spark itself and
+    decimals are already refused by the stats fold — so non-integer
+    columns simply never record sums."""
     types = {f["name"]: f["type"] for f in schema_fields or []}
     return [
         c
@@ -496,101 +357,55 @@ def _sum_columns(
     ]
 
 
-def _sweep_generation_sums(
+def _sweep_generation(
     spark: SparkSession,
     table_dir: str,
     gen_rel: str,
+    columns: list[str],
     sum_cols: list[str],
     rename_log: list | None = None,
-) -> tuple[dict[str, dict], dict[str, dict]]:
-    """Per-FILE exact column sums + non-null counts for the INTEGER
-    stat columns of one just-written generation —
-    ``({file_rel: {col: sum_str | None}}, {file_rel: {col: n}})``.
-    Parquet footers carry no sums, so this is the one stats sweep
-    that reads DATA — column-pruned to the integer stat columns of
-    the NEW generation only, once, at commit time (round-12 directive
-    #8; Delta records per-file sums the same way at write time).
-    Sums accumulate as decimal(38,0) (exact; an overflowing file
-    records None and the aggregate refuses); a file's all-null column
-    records (None, 0) — zero non-null rows, distinguishable from
-    overflow by the count. Columns a generation physically lacks
-    (pre-evolution) are simply unrecorded — the aggregate omits or
-    refuses, never guesses."""
-    gen_dir = f"{table_dir}/{gen_rel}"
-    if not sum_cols:
-        return {}, {}
-    files, _rel, local = _gen_files(spark, table_dir, gen_rel)
-    if not files:
-        return {}, {}
-    phys = {
-        c: p
-        for c, p in _physical_names(sum_cols, rename_log, gen_rel).items()
-        if p is not None
-    }
-    if not phys:
-        return {}, {}
-    sums: dict[str, dict] = {}
-    nnn: dict[str, dict] = {}
-    if local and len(files) <= _LOCAL_SWEEP_MAX_FILES:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+) -> tuple[dict, dict, dict, dict]:
+    """One (immutable, just-written) data generation's sidecar body —
+    ``(files, rows, sums, nonnull)`` keyed by table-relative file path:
+    ``io/stats.file_stats`` per file (folded min/max per column, row
+    count, exact integer sums + non-null counts of ``sum_cols``).
+    ``sums``/``nonnull`` stay ``{}`` when no sum column resolves to a
+    physical column of this generation. Swept ONCE at commit time —
+    generations are immutable, so every later commit carries the
+    result forward as metadata.
 
-        for f in files:
-            rel = _rel(f)
-            sums[rel] = {}
-            nnn[rel] = {}
-            pqf = pq.ParquetFile(bare_path(f))
-            names = set(pqf.schema_arrow.names)
-            want = [p for p in phys.values() if p in names]
-            if not want or pqf.metadata.num_rows == 0:
-                continue
-            tbl = pq.read_table(bare_path(f), columns=want)
-            for c, p in phys.items():
-                if p not in names:
-                    continue
-                col = tbl.column(p)
-                n = len(col) - col.null_count
-                nnn[rel][c] = int(n)
-                if n == 0:
-                    sums[rel][c] = None  # all-null: contributes nothing
-                    continue
-                s = pc.sum(col.cast(pa.decimal128(38, 0))).as_py()
-                sums[rel][c] = str(int(s))
-        return sums, nnn
-    df = spark.read.parquet(gen_dir)
-    present = {c: p for c, p in phys.items() if p in df.columns}
-    if not present:
-        return {}, {}
-    aggs = []
-    for c, p in present.items():
-        aggs.append(
-            F.sum(F.col(p).cast("decimal(38,0)")).alias(f"__s_{c}")
-        )
-        aggs.append(F.count(F.col(p)).alias(f"__n_{c}"))
-    rows = (
-        df.groupBy(F.col("_metadata.file_path").alias("__f"))
-        .agg(*aggs)
-        .collect()
-    )
-    for r in rows:
-        rel = _rel(r["__f"])
-        per_s = sums.setdefault(rel, {})
-        per_n = nnn.setdefault(rel, {})
-        for c in present:
-            n = int(r[f"__n_{c}"] or 0)
-            per_n[c] = n
-            s = r[f"__s_{c}"]
-            # decimal(38,0) overflow folds to NULL with n > 0 —
-            # recorded as None so the aggregate refuses, never wraps.
-            per_s[c] = None if (s is None or n == 0) else str(int(s))
-    # Empty part files (0 rows) emit no groupBy row: record them
-    # explicitly so coverage checks see the generation as complete.
-    for f in files:
-        rel = _rel(f)
-        sums.setdefault(rel, {})
-        nnn.setdefault(rel, {})
-    return sums, nnn
+    The generation is listed once. Small local generations run the
+    per-file function in a driver loop (ms per file); larger or remote
+    ones run the same function on executors. The rename log resolves
+    each column's physical name in this generation, so a generation
+    backfilled after a rename records its stats under the current
+    name instead of as permanently unprunable."""
+    from big_data_spark.io.stats import file_stats, sweep_file_stats
+
+    uris = [uri for uri, _ in data_files(spark, f"{table_dir}/{gen_rel}")]
+    if not uris:
+        return {}, {}, {}, {}
+    # Listed URIs are qualified, so the scheme is on each of them.
+    if uris[0].startswith("file:") and len(uris) <= _LOCAL_SWEEP_MAX_FILES:
+        per_file = {
+            u: file_stats(u, columns, sum_cols, rename_log) for u in uris
+        }
+    else:
+        per_file = sweep_file_stats(spark, uris, columns, sum_cols, rename_log)
+    prefix = bare_path(f"{table_dir}/").rstrip("/") + "/"
+    files: dict[str, dict] = {}
+    rows: dict[str, int] = {}
+    sums: dict[str, dict] = {}
+    nonnull: dict[str, dict] = {}
+    for uri, st in per_file.items():
+        b = bare_path(uri)
+        rel = b[len(prefix):] if b.startswith(prefix) else uri
+        files[rel] = st["bounds"]
+        rows[rel] = st["rows"]
+        if st["sums"] is not None:
+            sums[rel] = st["sums"]
+            nonnull[rel] = st["nonnull"]
+    return files, rows, sums, nonnull
 
 
 def _auto_commit_stats(
@@ -640,23 +455,13 @@ def _auto_commit_stats(
     out_side: dict[str, str] = {}
 
     def sweep(g: str) -> str:
-        files, nrows = _sweep_generation_stats(
+        files, nrows, sums, nnn = _sweep_generation(
             spark,
             table_dir,
             f"{_DATA_DIR}/{g}",
             columns,
+            sum_cols,
             rename_log=rename_log,
-        )
-        sums, nnn = (
-            _sweep_generation_sums(
-                spark,
-                table_dir,
-                f"{_DATA_DIR}/{g}",
-                sum_cols,
-                rename_log=rename_log,
-            )
-            if sum_cols and files
-            else ({}, {})
         )
         return _write_stats_sidecar(
             spark, table_dir, g, files, nrows, names_at,
@@ -675,15 +480,17 @@ def _auto_commit_stats(
         else:
             out_side[g] = sweep(g)
     return {"columns": columns, "sidecars": out_side}
-# Per consolidated SHARD caps (round-14 directive #1): one shard
-# carries at most this many generations' docs, and is cut early when
-# its serialized body would exceed the byte cap (per-gen docs are
-# O(files-per-generation), so a gen count alone could still build a
-# monolithic file on a wide table). Size-capped shards keep every
-# consolidation pass — and every driver read — bounded: the round-13
-# single consolidated JSON was itself an O(live files) driver
-# read-parse-rewrite at 10^5-10^6 files, the exact monolithic-
-# metadata shape the manifest/sidecar splits exist to kill.
+
+
+# Per consolidated SHARD caps: one shard carries at most this many
+# generations' docs, and is cut early when its serialized body would
+# exceed the byte cap (per-gen docs are O(files-per-generation), so a
+# gen count alone could still build a monolithic file on a wide
+# table). Size-capped shards keep every consolidation pass — and
+# every driver read — bounded: a single consolidated JSON would be an
+# O(live files) driver read-parse-rewrite at 10^5-10^6 files, the
+# exact monolithic-metadata shape the manifest/sidecar splits exist
+# to kill.
 _CONSOLIDATE_SHARD_GENS = 4096
 _CONSOLIDATE_SHARD_BYTES = 8 << 20
 
@@ -693,8 +500,8 @@ _CONSOLIDATE_SHARD_BYTES = 8 << 20
 # ``consolidated-t<N>-<uuid>`` is the TAIL shard that keeps absorbing
 # the loose per-gen files until it seals. Sealed-ness must be
 # decidable from the manifest's sidecar map ALONE (no reads), so the
-# writer stamps it into the name. Legacy round-13 names
-# (``consolidated-<hex>``) carry no stamp and refold as tails.
+# writer stamps it into the name. A name without the stamp is never
+# sealed: it refolds as a tail.
 _SHARD_NAME_RE = re.compile(
     r"consolidated-([ft])(\d+)-[0-9a-f]+\.json$"
 )
@@ -758,7 +565,7 @@ def _consolidated_stats_block(
     current tail shard and any full shard gone mostly-dead — into
     size-capped consolidated shards when more than ``max_sidecars``
     refoldable files are referenced, else return the block unchanged
-    with 0. INCREMENTAL by construction (round-14 directive #1):
+    with 0. INCREMENTAL by construction:
     sealed full shards are carried by reference, so a repeat pass
     rewrites only the tail — each generation is re-copied O(shard
     cap / threshold) times over its whole life, never O(passes).

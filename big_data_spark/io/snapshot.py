@@ -6,13 +6,17 @@ implement it:
   helpers and the metadata-file reader;
 - ``io/manifest.py``   — the manifest: its ``Manifest`` shape, the one
   reader, the carry-forward rule (``successor``) and the commit;
-- ``io/sidecars.py``   — per-generation stats sidecars: sweeps, cache,
-  consolidated shards;
+- ``io/stats.py``     — the footer-stats rule: the one per-file fold
+  (min/max, row count, integer sums) and the one skip test every
+  pruned read applies;
+- ``io/sidecars.py``   — per-generation stats sidecars: the commit-time
+  generation sweep, cache, consolidated shards;
 - ``io/tags.py``       — named version pins;
-- ``io/reads.py``      — snapshot reads, schema replay and evolution;
+- ``io/table_reads.py`` — snapshot reads, schema replay and evolution;
 - ``io/changes.py``    — the change feed and history;
-- ``io/writers.py``    — write, append, partial, repartition, stage /
-  publish, rollback and vacuum;
+- ``io/table_writes.py`` — write, append, partial, repartition, stage /
+  publish, rollback and vacuum (``io/writers.py`` holds the plain
+  sinks);
 - ``io/dml.py``        — DELETE / UPDATE (copy-on-write and
   merge-on-read) and ``fold_deletes``;
 - ``io/aggregates.py`` — metadata-only aggregates, DESCRIBE DETAIL /

@@ -1,23 +1,34 @@
-"""Parquet footer statistics, read distributed — the data-skipping
-audit tool.
+"""Parquet footer statistics — the table format's one footer rule.
 
-Whether a layout investment (Z-order, sort_within, bucketing)
-actually bought prunable files is a question about ROW-GROUP MIN/MAX
-STATISTICS, and reading the data back to check defeats the point. So
-this reads only footers: the file list comes from the same Hadoop FS
-inventory compaction uses, and the footers are opened with pyarrow
-ON EXECUTORS via mapInPandas — a driver loop over a million-file
-table would serialize a million object-store round trips; here they
-fan out across the cluster.
+Two decisions about footers live here, once each:
 
-min/max land as strings (one schema fits every column type; callers
-cast). The per-row-group grain is deliberate: a scan prunes row
-groups, not just files, so that is the grain pruning math needs.
+- the per-file FOLD: how a file's row-group min/max, null counts and
+  row counts become one per-file bound per column (``file_stats``,
+  built on ``footer_file_stats`` + ``fold_footer_rows``), plus the
+  exact integer sums footers cannot carry;
+- the SKIP TEST: whether a file can be skipped for a range / IN-list
+  predicate, given its folded bounds and their comparison kinds
+  (``keep_file``).
+
+The commit-time sidecar sweep (io/sidecars.py), the footer fallback
+of snapshot reads (io/table_reads.py), ``read_pruned``
+(io/readers.py) and the manifest-stats read path all go through
+these, so the footer path and the recorded-stats path can never
+disagree. Footers are opened with pyarrow, ON EXECUTORS for large or
+remote file sets (one mapInPandas fan-out over the file list — a
+driver loop over a million-file table would serialize a million
+object-store round trips).
+
+``parquet_column_stats`` is the public row-group audit tool: min/max
+as strings (one schema fits every column type; callers cast) at the
+per-row-group grain a scan actually prunes at.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+import re
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -45,13 +56,6 @@ _STATS_SCHEMA = StructType(
     ]
 )
 
-# Comparison kinds for data skipping (round 11: typed skipping).
-# ``numeric`` compares as double; the other kinds compare their
-# CANONICAL STRING forms lexicographically — each normalizer below
-# guarantees the string order equals the value order (UTF-8 code-point
-# order for strings, fixed-width ISO forms for date/timestamp).
-_KINDS = ("numeric", "string", "date", "timestamp", "timestamp_ntz")
-
 _NUMERIC_TYPE_HEADS = {
     "tinyint", "smallint", "int", "bigint", "float", "double", "decimal",
 }
@@ -60,7 +64,11 @@ _NUMERIC_TYPE_HEADS = {
 def stat_kind(type_str: str) -> str | None:
     """Comparison kind of a declared schema type (the manifest's type
     strings), or None for types data skipping does not cover (binary,
-    boolean, nested). One mapping shared by the column-selection
+    boolean, nested). ``numeric`` compares as double; every other
+    kind compares its CANONICAL STRING form lexicographically — each
+    normalizer below guarantees string order equals value order
+    (UTF-8 code-point order for strings, fixed-width ISO forms for
+    date/timestamp). One mapping shared by the column-selection
     default, the manifest-stats read path, and the tests — the three
     can never disagree on what a column's stats MEAN."""
     head = type_str.split("(")[0].strip().lower()
@@ -213,32 +221,28 @@ def _physical_name(
 
 
 def footer_file_stats(
-    local_path: str, cols: list[str], phys: dict[str, str | None]
+    pf, cols: list[str], phys: dict[str, str | None]
 ) -> list[dict]:
-    """Per-(row group, column) footer statistics of ONE local parquet
-    file, values already canonical (norm_stat_value) and kind-tagged
-    — the ONE primitive both sweep paths consume: the distributed
-    kernel yields these rows to Spark, the commit-time driver loop
-    folds them with fold_footer_rows. A single implementation of the
-    all-null / no-stats / normalization rules, so the two paths can
-    never diverge (they pinned-equal in tests).
+    """Per-(row group, column) footer statistics of ONE open parquet
+    file (a ``pyarrow.parquet.ParquetFile``), values already canonical
+    (norm_stat_value) and kind-tagged — the primitive under both the
+    per-file fold (``file_stats``) and the row-group audit
+    (``parquet_column_stats``), so the all-null / no-stats /
+    normalization rules exist once.
 
-    Row shape: {row_group, column, n_rows, n_nulls, min, max, kind};
-    kind None = no usable stats (unprunable), kind 'allnull' = every
-    row NULL (fails every range predicate — prunable, round 11)."""
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(local_path).metadata
+    Row shape: {row_group, column, n_rows, n_nulls, min, max, kind,
+    present}; kind None = no usable stats (unprunable), kind
+    'allnull' = every row NULL (fails every range predicate —
+    prunable); present False = the column is not in this file."""
+    meta = pf.metadata
     name_to_idx = {
         meta.schema.column(i).name: i for i in range(meta.num_columns)
     }
     out: list[dict] = []
     if meta.num_row_groups == 0:
         # Spark routinely writes empty part files (0 row groups).
-        # Emit one no-stats row per column so BOTH sweep paths record
-        # the file — with 0 rows and no bounds — instead of the
-        # distributed path silently omitting it (review finding: the
-        # two paths must fold identically).
+        # Emit one no-stats row per column so the file is recorded —
+        # with 0 rows and no bounds — instead of silently omitted.
         for c in cols:
             out.append(
                 {
@@ -292,7 +296,7 @@ def footer_file_stats(
                 # An ALL-NULL row group is not "no stats": its rows
                 # provably fail every range predicate, so it must
                 # neither widen bounds nor veto pruning — Iceberg's
-                # null-count skipping (round 11).
+                # null-count skipping.
                 if (
                     stats is not None
                     and stats.null_count is not None
@@ -321,43 +325,43 @@ def footer_file_stats(
 
 def fold_footer_rows(
     rows: list[dict], cols: list[str]
-) -> dict[str, list | str | None]:
-    """Per-column fold of one file's footer_file_stats rows into the
-    manifest stats value — EXACTLY the aggregation the distributed
-    sweep runs in Spark SQL (min/max as double for numeric kind,
-    lexicographic on canonical strings otherwise; any truly stat-less
-    row group -> None; every row group all-null -> 'allnull')."""
-    out: dict[str, list | str | None] = {}
+) -> tuple[dict[str, list | str | None], dict[str, str | None]]:
+    """Per-column fold of one file's footer_file_stats rows into
+    (bounds, kinds): bounds are the recorded stats value — [min, max]
+    (numeric folds as double, every other kind lexicographically on
+    its canonical strings), None when any row group is truly
+    stat-less, "allnull" when every row group is all-null; kinds are
+    the comparison kind of the valued row groups (None when none)."""
+    bounds: dict[str, list | str | None] = {}
+    kinds: dict[str, str | None] = {}
     for c in cols:
         rs = [r for r in rows if r["column"] == c]
+        valued = [r for r in rs if r["kind"] not in (None, "allnull")]
+        kind = kinds[c] = valued[0]["kind"] if valued else None
         if not rs or any(
             r["min"] is None and r["kind"] is None for r in rs
         ):
-            out[c] = None
-            continue
-        valued = [r for r in rs if r["kind"] not in (None, "allnull")]
-        if not valued:
-            out[c] = "allnull"
-            continue
-        kind = valued[0]["kind"]
-        if kind == "numeric":
-            out[c] = [
+            bounds[c] = None
+        elif not valued:
+            bounds[c] = "allnull"
+        elif kind == "numeric":
+            bounds[c] = [
                 str(min(float(r["min"]) for r in valued)),
                 str(max(float(r["max"]) for r in valued)),
             ]
         else:
-            out[c] = [
+            bounds[c] = [
                 min(r["min"] for r in valued),
                 max(r["max"] for r in valued),
             ]
-    return out
+    return bounds, kinds
 
 
 def file_row_count(rows: list[dict]) -> int:
     """Row count of one file from its footer_file_stats rows: every
     column repeats its row group's n_rows, so summing ONE column's
     entries (the first in scan order) counts the file — the number
-    behind metadata-only COUNT(*) (round 11)."""
+    behind metadata-only COUNT(*)."""
     if not rows:
         return 0
     first_col = rows[0]["column"]
@@ -366,16 +370,166 @@ def file_row_count(rows: list[dict]) -> int:
     )
 
 
+def _int_sums(pf, sum_phys: dict[str, str]) -> tuple[dict, dict]:
+    """({col: exact sum string | None}, {col: non-null count}) of one
+    open parquet file's INTEGER columns (logical -> physical name).
+    Footers carry no sums, so this is the one stats rule that reads
+    DATA — column-pruned, once per file at commit time (Delta records
+    per-file stats the same way at write time). Sums accumulate as
+    decimal(38,0), exact; an all-null column records (None, 0) — zero
+    non-null rows. Columns the file physically lacks (pre-evolution)
+    and empty files record nothing — the aggregate omits or refuses,
+    never guesses."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sums: dict[str, str | None] = {}
+    nonnull: dict[str, int] = {}
+    names = set(pf.schema_arrow.names)
+    want = [p for p in sum_phys.values() if p in names]
+    if not want or pf.metadata.num_rows == 0:
+        return sums, nonnull
+    tbl = pf.read(columns=want)
+    for c, p in sum_phys.items():
+        if p not in names:
+            continue
+        col = tbl.column(p)
+        n = len(col) - col.null_count
+        nonnull[c] = int(n)
+        if n == 0:
+            sums[c] = None  # all-null: contributes nothing
+            continue
+        s = pc.sum(col.cast(pa.decimal128(38, 0))).as_py()
+        sums[c] = str(int(s))
+    return sums, nonnull
+
+
+def _local_path(uri: str) -> str:
+    # Hadoop returns file:/x or file:///x for local paths.
+    return re.sub(r"^file:(//)?", "", uri)
+
+
+def _footer_rows(
+    pf, uri: str, cols: list[str], rename_log: list | None, missing_ok: bool
+):
+    """({logical: physical name}, footer rows) of one open data file.
+    ``rename_log`` (a snapshot table's evolution event log) resolves
+    each LOGICAL column to the physical name it carries in this file,
+    keyed on the file's ``_data/s=<id>`` generation id; rows keep the
+    logical name. ``missing_ok=False`` raises when the file lacks a
+    column; ``missing_ok=True`` keeps it as a no-stats row
+    (unprunable, never a false drop) — the snapshot DML / predicate
+    path, where pre-evolution files legitimately miss later-added
+    columns."""
+    gen_id = _file_gen_id(uri)
+    phys = {c: _physical_name(c, rename_log, gen_id) for c in cols}
+    rows = footer_file_stats(pf, cols, phys)
+    if not missing_ok:
+        for r in rows:
+            if not r["present"]:
+                raise ValueError(
+                    f"{_local_path(uri)}: column {r['column']!r} not in "
+                    "file schema"
+                )
+    return phys, rows
+
+
+def file_stats(
+    uri: str,
+    cols: list[str],
+    sum_cols: list[str] = (),
+    rename_log: list | None = None,
+    missing_ok: bool = True,
+) -> dict:
+    """Everything the table format records or decides about ONE data
+    file, from one open: ``bounds`` and ``kinds`` per stat column
+    (fold_footer_rows), ``rows`` (file_row_count), and ``sums`` /
+    ``nonnull`` for the INTEGER columns ``sum_cols`` (a subset of
+    ``cols``; both None when none of them resolves to a physical
+    column — nothing to record). The ONE per-file function: the
+    commit-time driver loop and the executor fan-out
+    (``sweep_file_stats``) both run it."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(_local_path(uri)) as pf:
+        phys, rows = _footer_rows(pf, uri, cols, rename_log, missing_ok)
+        sum_phys = {c: phys[c] for c in sum_cols if phys[c] is not None}
+        sums, nonnull = (
+            _int_sums(pf, sum_phys) if sum_phys else (None, None)
+        )
+    bounds, kinds = fold_footer_rows(rows, cols)
+    return {
+        "bounds": bounds,
+        "kinds": kinds,
+        "rows": file_row_count(rows),
+        "sums": sums,
+        "nonnull": nonnull,
+    }
+
+
 def _file_gen_id(path: str) -> int | None:
     """Snapshot-generation id of a data file — delegates to the ONE
     parser of the ``_data/s=<id>`` layout (io/layout.py), so the
-    evolution replay and the footer-sweep name resolution can never
-    key generations differently. Function-level import: the table
-    format imports this module lazily, and the kernel closure must
-    stay import-light for executors."""
+    evolution replay and the footer name resolution can never key
+    generations differently. Function-level import: the table format
+    imports this module lazily, and the kernel closure must stay
+    import-light for executors."""
     from big_data_spark.io.layout import _gen_id_of
 
     return _gen_id_of(path)
+
+
+def _listed_files(spark: SparkSession, path: str | list[str]) -> list[str]:
+    """Data file URIs under ``path`` (one directory, or a list of
+    directories/files — the multi-generation snapshot case)."""
+    files = [
+        uri
+        for p in ([path] if isinstance(path, str) else path)
+        for uri, _ in data_files(spark, p)
+    ]
+    if not files:
+        raise ValueError(f"no parquet data files under {path!r}")
+    return files
+
+
+def _fan_out(
+    spark: SparkSession,
+    files: list[str],
+    kernel: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
+    schema,
+) -> DataFrame:
+    """Run ``kernel`` over the file list ON EXECUTORS: one row per
+    file, spread over at most 64 tasks."""
+    paths = spark.createDataFrame([(f,) for f in files], "file string")
+    return paths.repartition(min(len(files), 64)).mapInPandas(
+        kernel, schema
+    )
+
+
+def sweep_file_stats(
+    spark: SparkSession,
+    files: list[str],
+    cols: list[str],
+    sum_cols: list[str] = (),
+    rename_log: list | None = None,
+    missing_ok: bool = True,
+) -> dict[str, dict]:
+    """``{file: file_stats(file, ...)}`` for many files, run on the
+    executors; only the per-file results come back to the driver."""
+    cols, sum_cols = list(cols), list(sum_cols)
+    log = [list(ev) for ev in rename_log or []]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            uris = list(pdf["file"])
+            docs = [
+                json.dumps(file_stats(u, cols, sum_cols, log, missing_ok))
+                for u in uris
+            ]
+            yield pd.DataFrame({"file": uris, "stats": docs}, dtype=object)
+
+    out = _fan_out(spark, files, kernel, "file string, stats string")
+    return {r["file"]: json.loads(r["stats"]) for r in out.collect()}
 
 
 def parquet_column_stats(
@@ -387,52 +541,22 @@ def parquet_column_stats(
 ) -> DataFrame:
     """(file, row_group, column, n_rows, n_nulls, min, max) for every
     row group of every data file under ``path`` (one directory, or a
-    list of directories/files — the multi-generation snapshot case) —
-    footers only, no data pages read.
-
-    ``rename_log`` (a snapshot table's evolution event log) resolves
-    each requested LOGICAL column to the physical name it carries in
-    each file (keyed on the file's ``_data/s=<id>`` generation id);
-    the output ``column`` stays the logical name. ``missing_ok=True``
-    emits a no-stats row (null min/max -> unprunable downstream)
-    instead of raising when a file lacks the column — the snapshot
-    DML / predicate path, where pre-evolution files legitimately miss
-    later-added columns."""
-    files = [
-        uri
-        for p in ([path] if isinstance(path, str) else path)
-        for uri, _ in data_files(spark, p)
-    ]
-    if not files:
-        raise ValueError(f"no parquet data files under {path!r}")
-    paths = spark.createDataFrame([(f,) for f in files], "file string")
+    list of directories/files) — footers only, no data pages read.
+    ``rename_log`` and ``missing_ok`` resolve columns per file as in
+    ``file_stats``; the output ``column`` stays the logical name."""
+    files = _listed_files(spark, path)
     cols = list(columns)
-
     log = [list(ev) for ev in rename_log or []]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
+        import pyarrow.parquet as pq
 
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in _STATS_SCHEMA.names}
             for f in pdf["file"]:
-                # Hadoop returns file:/x or file:///x for local paths.
-                local = re.sub(r"^file:(//)?", "", f)
-                gen_id = _file_gen_id(f)
-                phys = {
-                    c: _physical_name(c, log, gen_id) if log else c
-                    for c in cols
-                }
-                for r in footer_file_stats(local, cols, phys):
-                    if not r["present"] and not missing_ok:
-                        raise ValueError(
-                            f"{local}: column {r['column']!r} not in "
-                            "file schema"
-                        )
-                    # absent column rows (present=False) are no-stats
-                    # rows under missing_ok: the column is missing
-                    # from this (pre-evolution) file — unprunable,
-                    # never a false drop.
+                with pq.ParquetFile(_local_path(f)) as pf:
+                    _, rows = _footer_rows(pf, f, cols, log, missing_ok)
+                for r in rows:
                     out["file"].append(f)
                     out["row_group"].append(r["row_group"])
                     out["column"].append(r["column"])
@@ -454,9 +578,7 @@ def parquet_column_stats(
                 }
             )
 
-    return paths.repartition(min(len(files), 64)).mapInPandas(
-        kernel, _STATS_SCHEMA
-    )
+    return _fan_out(spark, files, kernel, _STATS_SCHEMA)
 
 
 def is_in_list(spec) -> bool:
@@ -504,12 +626,11 @@ def range_predicate(ranges: dict[str, tuple]):
     """The residual Column for a pruning predicate conjunction —
     shared by read_pruned and the snapshot reader so file-level
     skipping and the row-level filter can never disagree. Entries are
-    ``(lo, hi)`` ranges or IN-lists (``[v1, v2, ...]`` — round 11);
-    bounds may be numeric, string, ``datetime.date`` or
-    ``datetime.datetime`` — ``F.lit`` builds the matching literal and
-    Spark's own comparison semantics stay authoritative; the pruning
-    side is normalized to be conservative with respect to exactly
-    these semantics."""
+    ``(lo, hi)`` ranges or IN-lists (``[v1, v2, ...]``); bounds may
+    be numeric, string, ``datetime.date`` or ``datetime.datetime`` —
+    ``F.lit`` builds the matching literal and Spark's own comparison
+    semantics stay authoritative; the pruning side is normalized to
+    be conservative with respect to exactly these semantics."""
     cond = F.lit(True)
     for c, spec in ranges.items():
         if is_in_list(spec):
@@ -523,176 +644,94 @@ def range_predicate(ranges: dict[str, tuple]):
     return cond
 
 
+def keep_file(
+    bounds: dict,
+    ranges: dict[str, tuple],
+    kinds: dict[str, str | None] | None = None,
+    tz: str = "UTC",
+) -> bool:
+    """The ONE skip test: False iff some predicate column's per-file
+    ``bounds`` (a fold_footer_rows value: [min, max], "allnull" or
+    None) provably miss its range — a conjunction, so any column can
+    veto. Lossless: columns without bounds, and bounds the column's
+    kind cannot order, never veto.
+
+    ``kinds`` (column -> comparison kind; "numeric" when absent)
+    selects the comparison: numeric as float, string/date/timestamp
+    lexicographically on the canonical forms. The footer path passes
+    each file's footer kinds, the manifest-stats path the COMMITTED
+    schema's kinds. So a numeric-looking string column ('00123')
+    prunes by STRING order, exactly as the residual filter compares.
+    IN-lists compare by their (min, max) envelope — exact membership
+    is the residual's job. ``tz`` is the Spark session timezone,
+    interpreting naive timestamp bounds exactly as the residual
+    filter will."""
+    for c, spec in ranges.items():
+        lo, hi = inlist_bounds(spec) if is_in_list(spec) else spec
+        v = bounds.get(c)
+        if v is None:
+            continue
+        if v == "allnull":
+            # Entirely-null column: every row fails every bounded
+            # range predicate.
+            if lo is not None or hi is not None:
+                return False
+            continue
+        kind = (kinds or {}).get(c, "numeric")
+        lo_n = None if lo is None else norm_bound(kind, lo, tz)
+        hi_n = None if hi is None else norm_bound(kind, hi, tz)
+        if (lo is not None and lo_n is None) or (
+            hi is not None and hi_n is None
+        ):
+            continue  # bound unorderable under this kind: unprunable
+        if kind == "numeric":
+            try:
+                mn, mx = float(v[0]), float(v[1])
+            except (TypeError, ValueError):
+                continue
+        elif isinstance(v[0], str) and isinstance(v[1], str):
+            mn, mx = v
+        else:
+            continue
+        if (hi_n is not None and mn > hi_n) or (
+            lo_n is not None and mx < lo_n
+        ):
+            return False
+    return True
+
+
 def prune_files_multi(
     spark: SparkSession,
     path: str | list[str],
     ranges: dict[str, tuple],
     rename_log: list | None = None,
     missing_ok: bool = False,
-) -> DataFrame:
-    """Metadata-only data skipping over a CONJUNCTION of range
-    predicates ``lo_c <= c <= hi_c`` — the case Z-order layouts
-    exist for: one clustered rewrite makes min/max narrow on SEVERAL
-    columns at once, and a file is droppable when ANY predicate
-    provably misses it (the AND semantics let each column veto
-    independently). Bounds are numeric, string, ``datetime.date`` or
-    ``datetime.datetime`` (round 11: typed skipping) — the comparison
-    runs under the KIND the footer actually carries (numeric as
-    double; string/date/timestamp lexicographically on canonical
-    forms), so a numeric-looking string column ('00123') prunes by
-    STRING order, matching the residual filter's semantics, and a
-    bound whose type cannot soundly compare under a file's kind
-    leaves that file unprunable rather than wrongly dropped.
-
-    Returns one row per (file, column) with that column's folded
-    [min, max] (canonical strings) plus the file-level ``keep`` —
-    false iff some column's interval provably misses its range.
-    Losslessness per column implies losslessness of the conjunction,
-    proven in tests/test_stats.py. A row group without stats for a
-    column makes that column unprunable for the file (never a false
-    drop).
-    """
+) -> dict[str, bool]:
+    """Metadata-only data skipping over a CONJUNCTION of range /
+    IN-list predicates — the case Z-order layouts exist for: one
+    clustered rewrite makes min/max narrow on SEVERAL columns at once,
+    and a file is droppable when ANY predicate provably misses it.
+    Returns ``{file_uri: keep}`` for every data file under ``path``:
+    list the files, run ``file_stats`` on the executors, and apply
+    ``keep_file`` under each file's FOOTER kinds. Reading only the
+    kept files is lossless (proven in tests/test_stats.py); a row
+    group without stats for a column makes that column unprunable
+    for the file, never a false drop. ``rename_log`` / ``missing_ok``
+    resolve columns per file as in ``file_stats``."""
     if not ranges or all(
         not is_in_list(s) and s[0] is None and s[1] is None
         for s in ranges.values()
     ):
-        raise ValueError("prune_files needs at least one bounded range")
-    # IN-lists prune by their conservative (min, max) envelope; exact
-    # membership is the residual's job (round 11).
-    prune_bounds = {
-        c: inlist_bounds(s) if is_in_list(s) else s
-        for c, s in ranges.items()
-    }
-    cols = list(ranges)
+        raise ValueError(
+            "prune_files_multi needs at least one bounded range"
+        )
+    files = _listed_files(spark, path)
     tz = spark.conf.get("spark.sql.session.timeZone", "UTC") or "UTC"
-    stats = parquet_column_stats(
-        spark, path, cols, rename_log=rename_log, missing_ok=missing_ok
+    per_file = sweep_file_stats(
+        spark, files, list(ranges), rename_log=rename_log,
+        missing_ok=missing_ok,
     )
-    per_file_col = (
-        stats.withColumn("mn_d", F.col("min_value").try_cast("double"))
-        .withColumn("mx_d", F.col("max_value").try_cast("double"))
-        .groupBy("file", "column")
-        .agg(
-            # numeric fold (double order) and lexicographic fold side
-            # by side; the keep expression picks the one the row
-            # group's KIND makes meaningful. The unused fold of the
-            # other family is garbage by construction and never read.
-            F.min("mn_d").alias("mn_d"),
-            F.max("mx_d").alias("mx_d"),
-            F.min("min_value").alias("mn_s"),
-            F.max("max_value").alias("mx_s"),
-            # a row group without stats makes the column unprunable —
-            # but an ALL-NULL row group ('allnull' kind) is excluded:
-            # its rows provably fail every range predicate, so it
-            # neither widens the fold (its min/max are null) nor
-            # blocks pruning (round 11: null-count skipping).
-            F.max(
-                (
-                    F.col("min_value").isNull()
-                    & F.col("kind").isNull()
-                ).cast("int")
-            ).alias("_nostats"),
-            F.min(
-                F.coalesce(
-                    (F.col("kind") == "allnull").cast("int"), F.lit(0)
-                )
-            ).alias("_allnull"),
-            F.first(
-                F.when(F.col("kind") != "allnull", F.col("kind")),
-                ignorenulls=True,
-            ).alias("_kind"),
-        )
-    )
-    col_ok = F.lit(True)
-    for c in cols:
-        lo, hi = prune_bounds[c]
-        bounded = lo is not None or hi is not None
-        ok = F.lit(False)
-        for kind in _KINDS:
-            lo_n = None if lo is None else norm_bound(kind, lo, tz)
-            hi_n = None if hi is None else norm_bound(kind, hi, tz)
-            if (lo is not None and lo_n is None) or (
-                hi is not None and hi_n is None
-            ):
-                # bound type can't soundly compare under this kind:
-                # files of this kind stay unprunable for the column.
-                kind_ok = F.lit(True)
-            else:
-                mn = F.col("mn_d") if kind == "numeric" else F.col("mn_s")
-                mx = F.col("mx_d") if kind == "numeric" else F.col("mx_s")
-                kind_ok = F.lit(True)
-                if hi_n is not None:
-                    kind_ok = kind_ok & (mn <= F.lit(hi_n))
-                if lo_n is not None:
-                    kind_ok = kind_ok & (mx >= F.lit(lo_n))
-                # a numeric-kind row whose values failed the double
-                # cast (never expected; defensive) stays unprunable.
-                if kind == "numeric":
-                    kind_ok = kind_ok | F.col("mn_d").isNull()
-            ok = F.when(F.col("_kind") == kind, kind_ok).otherwise(ok)
-        # Precedence: any truly stat-less row group -> unprunable;
-        # else an entirely-null column -> droppable under any bound;
-        # else no usable kind -> unprunable; else the kind compare.
-        ok_final = (
-            F.when(F.col("_nostats") == 1, F.lit(True))
-            .when(F.col("_allnull") == 1, F.lit(not bounded))
-            .when(F.col("_kind").isNull(), F.lit(True))
-            .otherwise(ok)
-        )
-        col_ok = F.when(F.col("column") == c, ok_final).otherwise(col_ok)
-    flagged = per_file_col.withColumn("_col_keep", col_ok)
-    keep_per_file = flagged.groupBy("file").agg(
-        F.min(F.col("_col_keep").cast("int")).cast("boolean").alias("keep")
-    )
-    is_num = F.col("_kind") == "numeric"
-    return (
-        flagged.withColumn(
-            "min_value",
-            F.when(is_num, F.col("mn_d").cast("string")).otherwise(
-                F.col("mn_s")
-            ),
-        )
-        .withColumn(
-            "max_value",
-            F.when(is_num, F.col("mx_d").cast("string")).otherwise(
-                F.col("mx_s")
-            ),
-        )
-        .withColumn("kind", F.col("_kind"))
-        .drop(
-            "mn_d", "mx_d", "mn_s", "mx_s",
-            "_nostats", "_allnull", "_col_keep", "_kind",
-        )
-        .join(keep_per_file, "file")
-        .orderBy("file", "column")
-    )
-
-
-def prune_files(
-    spark: SparkSession,
-    path: str,
-    column: str,
-    lo=None,
-    hi=None,
-) -> DataFrame:
-    """Metadata-only data skipping: the files under ``path`` a
-    range predicate ``lo <= column <= hi`` (numeric, string, date or
-    timestamp bounds — round 11) could possibly touch, decided from
-    parquet FOOTER min/max alone — the manifest pruning an
-    Iceberg/Delta reader does, as an explicit operator.
-
-    Returns (file, min_value, max_value, keep) — min/max as canonical
-    strings (round 11; numeric columns print as doubles). ``keep`` is
-    false iff the file's [min, max] interval provably misses the
-    predicate range — reading only kept files is guaranteed lossless
-    (rows
-    matching the predicate can only live in kept files; proven in
-    tests/test_stats.py against the full-scan answer). Feed the kept
-    list to ``spark.read.parquet(*files)``. Pair with the z-order /
-    repartitionByRange writers (io/compact.py) — pruning is only as
-    good as the layout's min/max narrowness. Conjunctions over
-    several clustered columns: ``prune_files_multi``.
-    """
-    return prune_files_multi(spark, path, {column: (lo, hi)}).select(
-        "file", "min_value", "max_value", "keep"
-    )
+    return {
+        f: keep_file(per_file[f]["bounds"], ranges, per_file[f]["kinds"], tz)
+        for f in files
+    }

@@ -59,8 +59,8 @@ def _declared_partition_types(spark: SparkSession):
     of being type-INFERRED first. Inference-then-cast is lossy for
     numeric-looking string keys: a '00123' dir value infers as 123
     and casts back to '123' — the read would diverge from the raw
-    value the manifest keys and DML attribution use (round-10 advice,
-    generalized from read_staged to every manifest-driven scan).
+    value the manifest keys and DML attribution use (every
+    manifest-driven scan, read_staged included).
     Partition discovery runs eagerly at DataFrame creation, so the
     conf only needs to cover the spark.read call. The conf is
     SESSION-GLOBAL, so entries are counted under a lock: concurrent
@@ -259,9 +259,9 @@ def evolve_schema(
     widens: dict[str, str] | None = None,
 ) -> int:
     """NON-additive schema evolution as a METADATA-ONLY commit
-    (round-7 verdict gap #5: check_schema_evolution admits adds
-    only): rename columns, drop columns, and widen integer/float
-    types without touching a single data file. The manifest carries
+    (check_schema_evolution admits adds only): rename columns, drop
+    columns, and widen integer/float types without touching a single
+    data file. The manifest carries
     a VERSIONED event log (``rename_log``: ordered
     ``[commit_id, 'rename'|'drop', old, new]`` rows); readers replay
     onto each generation exactly the events committed after it was
@@ -385,14 +385,15 @@ def read_snapshot(
 
     ``predicate`` ({col: (lo, hi)} ranges or {col: [v1, v2, ...]}
     IN-lists, conjunction; bounds numeric, string, ``datetime.date``
-    or ``datetime.datetime`` — round 11: typed skipping; IN-lists
-    prune by their min/max envelope with exact ``isin`` membership in
-    the residual) composes MANIFEST resolution with
-    FOOTER-statistics data skipping (io/stats.py):
+    or ``datetime.datetime``; IN-lists prune by their min/max
+    envelope with exact ``isin`` membership in the residual) composes
+    MANIFEST resolution with per-file data skipping (io/stats.py):
     only the live files whose min/max intervals can intersect the
     ranges enter the scan — the double pruning a table-format reader
-    performs, previously available only for raw dirs via
-    ``read_pruned`` (round-6 verdict gap). The predicate is re-applied
+    performs. Recorded sidecar stats answer first; generations
+    committed without them fall back to a footer sweep. Both apply
+    the one skip test, io/stats.keep_file, as ``read_pruned`` does
+    for raw dirs. The predicate is re-applied
     row-level, so the result is EXACTLY ``read_snapshot(...).filter(pred)``
     (lossless; proven in tests/test_snapshot.py).
     """
@@ -562,7 +563,7 @@ def read_entries(
         covered_gens = _stats_covered(stats)
         stat_cols = (stats or {}).get("columns") or []
         # Typed compares need the committed schema's kind per column.
-        from big_data_spark.io.stats import stat_kind
+        from big_data_spark.io.stats import keep_file, stat_kind
 
         stat_kinds = {
             f["name"]: k
@@ -611,13 +612,7 @@ def read_entries(
                 owner = _owning_entry_rel(file_rel, rels_here, owner_cache)
                 if owner is None:
                     continue  # dead leaf of a partially-live generation
-                if _stats_keep(
-                    per_col,
-                    predicate,
-                    stat_cols,
-                    kinds=stat_kinds,
-                    tz=session_tz,
-                ):
+                if keep_file(per_col, predicate, stat_kinds, session_tz):
                     kept_by_dir.setdefault(path_of[owner], []).append(
                         f"{table_dir}/{file_rel}"
                     )
@@ -632,23 +627,18 @@ def read_entries(
             # later) or live there under a former physical name — the
             # sweep resolves names per file and treats truly-missing
             # columns as unprunable instead of raising.
-            decisions = (
-                prune_files_multi(
-                    spark,
-                    swept_paths,
-                    predicate,
-                    rename_log=rename_log,
-                    missing_ok=True,
-                )
-                .select("file", "keep")
-                .distinct()
-                .collect()
+            keep = prune_files_multi(
+                spark,
+                swept_paths,
+                predicate,
+                rename_log=rename_log,
+                missing_ok=True,
             )
-            for r in decisions:
-                if r["keep"]:
+            for f, k in keep.items():
+                if k:
                     kept_by_dir.setdefault(
-                        _owning_path(r["file"], swept_paths), []
-                    ).append(r["file"])
+                        _owning_path(f, swept_paths), []
+                    ).append(f)
     dfs = []
     for gen, rels in sorted(by_gen.items()):
         paths = sorted(f"{table_dir}/{r}" for r in set(rels))
@@ -764,81 +754,6 @@ def read_entries(
     return df
 
 
-def _stats_keep(
-    per_col: dict,
-    ranges: dict[str, tuple],
-    stat_cols: list[str],
-    kinds: dict[str, str] | None = None,
-    tz: str = "UTC",
-) -> bool:
-    """prune_files_multi's keep decision, replayed from STORED
-    per-file stats: a file drops only when some hinted column's
-    recorded [min, max] provably misses its range; columns without
-    recorded stats (absent from the stats set, no footer stats, or
-    values the column's kind can't order) never veto — lossless by
-    the same argument as the footer path (tested equivalent).
-
-    ``kinds`` (column → io/stats comparison kind, derived from the
-    COMMITTED schema — authoritative over bound python types) selects
-    the comparison: numeric as float, string/date/timestamp
-    lexicographically on the canonical forms both sweep paths store
-    (round 11: typed skipping). A bound that can't soundly compare
-    under its column's kind skips — unprunable, never a false drop.
-    ``tz`` is the Spark session timezone, interpreting naive
-    timestamp bounds exactly as the residual filter will."""
-    from big_data_spark.io.stats import (
-        inlist_bounds,
-        is_in_list,
-        norm_bound,
-    )
-
-    for c, spec in ranges.items():
-        if c not in stat_cols:
-            continue
-        # IN-lists compare by their conservative (min, max) envelope
-        # — exact membership is the residual's job (round 11).
-        lo, hi = inlist_bounds(spec) if is_in_list(spec) else spec
-        v = per_col.get(c)
-        if v is None:
-            continue
-        if v == "allnull":
-            # Entirely-null column (round 11: null-count skipping):
-            # every row fails every bounded range predicate.
-            if lo is not None or hi is not None:
-                return False
-            continue
-        kind = (kinds or {}).get(c, "numeric")
-        if kind == "numeric":
-            try:
-                mn, mx = float(v[0]), float(v[1])
-            except (TypeError, ValueError):
-                continue
-            lo_n = None if lo is None else norm_bound("numeric", lo, tz)
-            hi_n = None if hi is None else norm_bound("numeric", hi, tz)
-            if (lo is not None and lo_n is None) or (
-                hi is not None and hi_n is None
-            ):
-                continue  # non-numeric bound on a numeric column
-            if hi_n is not None and mn > hi_n:
-                return False
-            if lo_n is not None and mx < lo_n:
-                return False
-            continue
-        lo_n = None if lo is None else norm_bound(kind, lo, tz)
-        hi_n = None if hi is None else norm_bound(kind, hi, tz)
-        if (lo is not None and lo_n is None) or (
-            hi is not None and hi_n is None
-        ):
-            continue  # bound unorderable under this kind: unprunable
-        if not isinstance(v[0], str) or not isinstance(v[1], str):
-            continue
-        if hi_n is not None and v[0] > hi_n:
-            return False
-        if lo_n is not None and v[1] < lo_n:
-            return False
-    return True
-
-
 def _owning_path(file_uri: str, paths: list[str]) -> str:
     """Map a footer-sweep file URI back to the entry path that listed
     it (URI schemes may differ: the sweep returns ``file:/...`` for
@@ -860,8 +775,9 @@ def _owning_rel(file_uri: str, table_dir: str, rels: list[str]) -> str:
     Scan-provenance strings (input_file_name / _metadata.file_path)
     are URI-ENCODED by construction (Spark's urlEncodedPath) — a disk
     dir ``part=p 2%3Ax`` arrives as ``part=p%202%253Ax`` — while
-    manifest rels hold raw disk names (round-10 model-walk finding:
-    DML on a partition value with a space or '%' matched no entry).
+    manifest rels hold raw disk names (matching raw names against
+    provenance left DML on a partition value with a space or '%'
+    matching no entry).
     The ONCE-UNQUOTED form is therefore tried first, COMPLETELY
     (longest prefix across all rels); trying the raw form first would
     mis-attribute a file whenever one partition's raw hive-escaped

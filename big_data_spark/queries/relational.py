@@ -35,46 +35,26 @@ def fixture_dir(prefix: str, sf_dir: str) -> str:
     rows build a small table under /tmp, then query it). Keyed by
     (prefix, sf_dir, PROCESS): the per-process component means two
     concurrent harnesses at the same sf — a gate_sim next to a bench
-    — can never shutil.rmtree each other's fixture mid-read (round-12
-    directive #6). ``BDS_FIXTURE_SUFFIX`` overrides the pid for
-    runners that want a stable, resumable location."""
+    — can never shutil.rmtree each other's fixture mid-read."""
     import hashlib
     import os
+    import shutil
     import tempfile
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    # Namespace the suffix by its ORIGIN so the reaper can tell them
-    # apart: pid-derived dirs are "p<pid>", env overrides are
-    # "u<value>". Without the prefix a NUMERIC BDS_FIXTURE_SUFFIX is
-    # indistinguishable from a pid and another process would rmtree
-    # that stable fixture the moment no live process holds that pid
-    # (round-12 advice).
-    override = os.environ.get("BDS_FIXTURE_SUFFIX")
-    suffix = f"u{override}" if override else f"p{os.getpid()}"
+    suffix = f"p{os.getpid()}"
     tmp = tempfile.gettempdir()
-    # Reap DEAD siblings (same prefix+sf, pid-namespaced, pid no
+    # Reap DEAD siblings (same prefix+sf, "p<pid>" suffix, pid no
     # longer alive): the per-process keying means each run leaves its
     # fixtures behind, so without this a long-lived host accumulates
     # one snapshot table per past harness process. Live pids (a
-    # concurrent harness) and "u"-namespaced env-override dirs are
-    # never touched; best-effort — a lost race just leaves the dir
-    # for the next caller.
-    import shutil
-
-    lead = f"{prefix}_{tag}_"
+    # concurrent harness) are never touched; best-effort — a lost
+    # race just leaves the dir for the next caller.
+    lead = f"{prefix}_{tag}_p"
     try:
         for name in os.listdir(tmp):
-            if not name.startswith(lead):
-                continue
-            rest = name[len(lead):]
-            if rest == suffix:
-                continue
-            # "p<pid>" is the current layout; a BARE digit suffix is
-            # the pre-round-13 layout (no namespace) — also
-            # pid-derived, also reapable. Anything else ("u<...>"
-            # overrides) stays.
-            pid_s = rest[1:] if rest.startswith("p") else rest
-            if not pid_s.isdigit():
+            pid_s = name[len(lead):]
+            if not name.startswith(lead) or not pid_s.isdigit():
                 continue
             try:
                 os.kill(int(pid_s), 0)

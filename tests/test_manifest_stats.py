@@ -95,13 +95,13 @@ def test_carry_sweeps_only_new_generations(spark, tmp_path, monkeypatch):
     append_snapshot(_mk(spark, 0, 50), t, snapshot_id=0)
     man0 = latest_manifest(spark, t)
     swept: list[str] = []
-    real = sidecars._sweep_generation_stats
+    real = sidecars._sweep_generation
 
-    def counting(spark_, td, gen_rel, cols, **kw):
+    def counting(spark_, td, gen_rel, *a, **kw):
         swept.append(gen_rel)
-        return real(spark_, td, gen_rel, cols, **kw)
+        return real(spark_, td, gen_rel, *a, **kw)
 
-    monkeypatch.setattr(sidecars, "_sweep_generation_stats", counting)
+    monkeypatch.setattr(sidecars, "_sweep_generation", counting)
     append_snapshot(_mk(spark, 50, 80), t, snapshot_id=1)
     man1 = latest_manifest(spark, t)
     assert swept == ["_data/s=1"]  # the carried generation never re-swept
@@ -112,6 +112,30 @@ def test_carry_sweeps_only_new_generations(spark, tmp_path, monkeypatch):
         == man0["stats"]["sidecars"]["s=0"]
     )
     assert set(man1["stats"]["sidecars"]) == {"s=0", "s=1"}
+
+
+def test_append_lists_new_generation_once(spark, tmp_path, monkeypatch):
+    """One sweep per new generation: footer bounds, row counts and the
+    bigint column's exact sums all come from ONE listing of its dir."""
+    t = str(tmp_path / "once")
+    append_snapshot(_mk(spark, 0, 50), t, snapshot_id=0)
+    listed: list[str] = []
+    real = sidecars.data_files
+
+    def counting(spark_, dir_path):
+        listed.append(dir_path)
+        return real(spark_, dir_path)
+
+    monkeypatch.setattr(sidecars, "data_files", counting)
+    append_snapshot(_mk(spark, 50, 80), t, snapshot_id=1)
+    assert [p for p in listed if p.endswith("_data/s=1")] == [
+        f"{t}/_data/s=1"
+    ]
+    man = latest_manifest(spark, t)
+    doc = sidecars._load_gen_stats(spark, t, man["stats"], "s=1")
+    assert sum(int(pc["k"]) for pc in doc["sums"].values()) == sum(
+        range(50, 80)
+    )
 
 
 def test_stats_follow_schema_evolution(spark, tmp_path, monkeypatch):
@@ -147,7 +171,7 @@ def test_rollback_carries_target_stats_metadata_only(
     swept: list = []
     monkeypatch.setattr(
         sidecars,
-        "_sweep_generation_stats",
+        "_sweep_generation",
         lambda *a, **k: swept.append(a) or {},
     )
     rollback_snapshot(spark, t, 0)

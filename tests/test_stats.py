@@ -96,7 +96,7 @@ def test_prune_files_lossless_and_effective(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from big_data_spark.io.stats import prune_files
+    from big_data_spark.io.stats import prune_files_multi
 
     path = str(tmp_path / "ranged")
     # repartitionByRange on v -> each file covers a narrow v band.
@@ -106,10 +106,9 @@ def test_prune_files_lossless_and_effective(spark, tmp_path):
         .repartitionByRange(10, "v")
         .write.parquet(path)
     )
-    pruned = prune_files(spark, path, "v", lo=100.0, hi=150.0)
-    rows = pruned.collect()
-    kept = [r["file"] for r in rows if r["keep"]]
-    assert 0 < len(kept) < len(rows), "pruning must drop some files"
+    keep = prune_files_multi(spark, path, {"v": (100.0, 150.0)})
+    kept = [f for f, k in keep.items() if k]
+    assert 0 < len(kept) < len(keep), "pruning must drop some files"
 
     local = [re.sub(r"^file:(//)?", "", f) for f in kept]
     got = (

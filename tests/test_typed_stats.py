@@ -154,13 +154,8 @@ def _lossless(spark, src, df, ranges):
     cond = stats_mod.range_predicate(ranges)
     want = df.filter(cond)
     assert got.count() == want.count() > 0
-    dec = (
-        prune_files_multi(spark, src, ranges)
-        .select("file", "keep")
-        .distinct()
-        .collect()
-    )
-    kept = sum(r.keep for r in dec)
+    dec = prune_files_multi(spark, src, ranges)
+    kept = sum(dec.values())
     assert kept < len(dec), "clustered layout must make files prunable"
     return kept, len(dec)
 
@@ -230,8 +225,8 @@ def test_footer_numeric_bound_on_string_column_keeps_all(spark, tmp_path):
     df = spark.createDataFrame([("a",), ("b",)], "s string")
     src = str(tmp_path / "mismatch")
     df.write.parquet(src)
-    dec = prune_files_multi(spark, src, {"s": (1.0, 2.0)}).collect()
-    assert all(r.keep for r in dec)
+    dec = prune_files_multi(spark, src, {"s": (1.0, 2.0)})
+    assert dec and all(dec.values())
 
 
 # ----------------------------------------------------- manifest stats
@@ -344,8 +339,8 @@ def test_all_null_files_prune_under_any_bounded_range(spark, tmp_path):
         src
     )
     ranges = {"v": (2500.0, 2600.0)}
-    dec = prune_files_multi(spark, src, ranges).collect()
-    dropped = [r for r in dec if not r.keep]
+    dec = prune_files_multi(spark, src, ranges)
+    dropped = [f for f, keep in dec.items() if not keep]
     # the two all-null files (k<2000) AND the valued file outside
     # [2500, 2600] must drop
     assert len(dropped) >= 2
@@ -449,13 +444,32 @@ def test_analyze_sql_spelling_and_for_columns(spark, tmp_path):
 
 # ----------------------------------------- path-parity + rendering
 
+def _both_sweeps(spark, t, gen_rel, cols, sum_cols, rename_log, monkeypatch):
+    """The generation sweep's (files, rows, sums, nonnull) from the
+    driver loop and from the executor fan-out, over the SAME
+    immutable generation dir."""
+    local = sidecars._sweep_generation(
+        spark, t, gen_rel, cols, sum_cols, rename_log=rename_log
+    )
+    with monkeypatch.context() as m:
+        m.setattr(sidecars, "_LOCAL_SWEEP_MAX_FILES", 0)
+        dist = sidecars._sweep_generation(
+            spark, t, gen_rel, cols, sum_cols, rename_log=rename_log
+        )
+    return local, dist
+
+
 def test_local_and_distributed_sweep_agree(spark, tmp_path, monkeypatch):
-    """The commit-time driver loop and the distributed kernel share
-    one footer primitive — this pins the FOLDED output equal on a
-    fixture exercising every rule: typed values, an all-null column,
-    a mixed null/valued column, zero-padded strings."""
+    """The commit-time driver loop and the executor fan-out run one
+    per-file function — this pins the WHOLE sidecar body (files, rows,
+    sums, nonnull) equal on a fixture exercising every rule: typed
+    values, bigint sum columns (one entirely NULL), an all-null
+    double, a mixed null/valued column, zero-padded strings, empty
+    part files, and a generation written before a rename plus an
+    added column."""
     df = spark.range(0, 2000).selectExpr(
         "id AS k",
+        "CAST(NULL AS BIGINT) AS nk",
         "CAST(NULL AS DOUBLE) AS dead",
         "CASE WHEN id < 1000 THEN CAST(NULL AS DOUBLE) "
         "ELSE CAST(id AS DOUBLE) END AS v",
@@ -463,25 +477,56 @@ def test_local_and_distributed_sweep_agree(spark, tmp_path, monkeypatch):
         "timestamp_micros(CAST(id * 60000000 AS LONG)) AS ts",
     )
     t1 = str(tmp_path / "loc")
-    write_snapshot(df.repartitionByRange(4, "k"), t1)
+    cols = ["k", "nk", "dead", "v", "s", "ts"]
+    # 5 valued files plus an empty part file: Spark writes one for an
+    # empty task 0, and round-robin leaves task 0 of a one-row frame
+    # empty
+    write_snapshot(
+        df.where("k = 0")
+        .repartition(4)
+        .union(df.where("k > 0").repartitionByRange(4, "k")),
+        t1,
+        stats_columns=cols,
+    )
+    snap.evolve_schema(spark, t1, renames={"k": "key"})
+    snap.append_snapshot(
+        df.withColumnRenamed("k", "key")
+        .withColumn("w", F.col("key") * 3)
+        .repartition(2),
+        t1,
+    )
     man = snap.latest_manifest(spark, t1)
-    cols = man["stats"]["columns"]
-    (gen_rel,) = {
-        "/".join(rel.split("/")[:2]) for rel in man["entries"].values()
-    }
-    # both paths over the SAME immutable generation dir
-    local, local_rows = sidecars._sweep_generation_stats(
-        spark, t1, gen_rel, cols
+    cols = man["stats"]["columns"] + ["w"]
+    sum_cols = sidecars._sum_columns(cols, man["schema"])
+    assert sum_cols == ["key", "nk", "w"]
+    gen_rels = sorted(
+        {"/".join(rel.split("/")[:2]) for rel in man["entries"].values()}
     )
-    monkeypatch.setattr(sidecars, "_LOCAL_SWEEP_MAX_FILES", 0)
-    dist, dist_rows = sidecars._sweep_generation_stats(
-        spark, t1, gen_rel, cols
-    )
-    assert local == dist
-    assert local_rows == dist_rows
-    assert sum(local_rows.values()) == 2000
-    assert any(
-        pc.get("dead") == "allnull" for pc in local.values()
+    swept = []
+    for gen_rel in gen_rels:
+        local, dist = _both_sweeps(
+            spark, t1, gen_rel, cols, sum_cols, man["rename_log"],
+            monkeypatch,
+        )
+        assert local == dist
+        files, rows, sums, nonnull = local
+        assert set(files) == set(rows) == set(sums) == set(nonnull)
+        assert sum(rows.values()) == 2000
+        assert any(pc.get("dead") == "allnull" for pc in files.values())
+        valued = [f for f, n in rows.items() if n]
+        assert all(
+            nonnull[f]["nk"] == 0 and sums[f]["nk"] is None for f in valued
+        )
+        assert sum(int(sums[f]["key"]) for f in valued) == sum(range(2000))
+        swept.append(local)
+    (old_files, old_rows, old_sums, _), (_, _, new_sums, _) = swept
+    # the pre-rename generation: stats under the renamed key, empty
+    # part files recorded, the later-added w unprunable and unsummed
+    assert 0 in old_rows.values(), "fixture must hold empty part files"
+    assert all(pc["w"] is None for pc in old_files.values())
+    assert all("w" not in pc for pc in old_sums.values())
+    assert sum(int(pc["w"]) for pc in new_sums.values()) == 3 * sum(
+        range(2000)
     )
 
 
@@ -622,13 +667,8 @@ def test_read_pruned_in_list_lossless_and_effective(
     got = read_pruned(spark, src, spec)
     want = typed_df.filter(F.col("key").isin("k00011", "k00013"))
     assert got.count() == want.count() > 0
-    dec = (
-        prune_files_multi(spark, src, spec)
-        .select("file", "keep")
-        .distinct()
-        .collect()
-    )
-    assert sum(r.keep for r in dec) < len(dec)
+    dec = prune_files_multi(spark, src, spec)
+    assert sum(dec.values()) < len(dec)
 
 
 def test_manifest_in_list_metadata_only(
@@ -814,16 +854,15 @@ def test_sweep_paths_agree_on_empty_files(spark, tmp_path, monkeypatch):
         "/".join(rel.split("/")[:2]) for rel in man["entries"].values()
     }
     cols = man["stats"]["columns"]
-    local, local_rows = sidecars._sweep_generation_stats(
-        spark, t, gen_rel, cols
+    local, dist = _both_sweeps(
+        spark, t, gen_rel, cols, sidecars._sum_columns(cols, man["schema"]),
+        man["rename_log"], monkeypatch,
     )
-    monkeypatch.setattr(sidecars, "_LOCAL_SWEEP_MAX_FILES", 0)
-    dist, dist_rows = sidecars._sweep_generation_stats(
-        spark, t, gen_rel, cols
-    )
-    assert local == dist and local_rows == dist_rows
+    assert local == dist
+    _, local_rows, sums, _ = local
     # at least one genuinely EMPTY part file must be recorded
     assert 0 in local_rows.values() and sum(local_rows.values()) == 1
+    assert set(sums) == set(local_rows)
     # and the metadata count over them is exact
     from big_data_spark.io.snapshot import metadata_aggregate
 
@@ -1010,16 +1049,16 @@ def test_metadata_sum_uncovered_omits_or_refuses(
     assert got["rows"] == 110 and got["sum"]["k"] == sum(range(110))
 
     t2 = str(tmp_path / "msumcov2")
-    real = sidecars._sweep_generation_sums
+    real = sidecars._sweep_generation
 
     def without_v(*a, **k):
-        sums, nnn = real(*a, **k)
+        files, rows, sums, nnn = real(*a, **k)
         for per_file in (sums, nnn):
             for cols in per_file.values():
                 cols.pop("v", None)
-        return sums, nnn
+        return files, rows, sums, nnn
 
-    monkeypatch.setattr(sidecars, "_sweep_generation_sums", without_v)
+    monkeypatch.setattr(sidecars, "_sweep_generation", without_v)
     write_snapshot(
         spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v").coalesce(2),
         t2,
