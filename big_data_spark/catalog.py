@@ -79,9 +79,8 @@ def register_snapshot_views(
     name: str,
     versions: str = "eager",
 ) -> list[str]:
-    """SQL door into the LAKEHOUSE (round-6 verdict gap: snapshot
-    tables — the engine's own table format, io/snapshot.py — were
-    reachable only programmatically). Registers:
+    """SQL door into the LAKEHOUSE: snapshot tables — the engine's own
+    table format, io/snapshot.py — become queryable views. Registers:
 
     - ``name``          -> the table's newest committed snapshot;
     - ``name_v{N}``     -> every committed snapshot id N (time
@@ -89,7 +88,7 @@ def register_snapshot_views(
       n``, which plain ``spark.sql`` cannot parse for a non-catalog
       format);
     - ``name_tag_<tag>`` -> every tagged (pinned) version — the
-      eval-freeze / release-baseline spelling (round 11; identifier-
+      eval-freeze / release-baseline spelling (identifier-
       unsafe tag characters fold to '_' with a short raw-tag hash
       appended so distinct tags never collide — `_tag_view_name`);
     - ``name_history``  -> the commit log (table_history: one row
@@ -100,8 +99,8 @@ def register_snapshot_views(
       SQL spelling of an incremental read.
 
     ``versions="lazy"`` skips the per-version ``name_v{N}`` loop —
-    O(1) registration for long-lived tables (round-7 verdict
-    cosmetic: the eager loop is O(versions) temp views per call);
+    O(1) registration for long-lived tables (the eager loop is
+    O(versions) temp views per call);
     time travel then goes through :func:`as_of` (or SnapshotCatalog
     .as_of, which also names the view ``name_v{N}`` on demand).
 
@@ -130,7 +129,7 @@ def register_snapshot_views(
                 spark, table_dir, as_of=sid
             ).createOrReplaceTempView(vname)
             names.append(vname)
-        # Tag-named views (round 11): `name_tag_<tag>` reads the
+        # Tag-named views: `name_tag_<tag>` reads the
         # PINNED version — the eval-freeze / release-baseline handle
         # next to the name_v{N} spellings. Eager mode only, like the
         # version views (lazy registration stays O(1) per refresh;
@@ -187,7 +186,7 @@ class SnapshotCatalog:
     statements through the copy-on-write DML primitives
     (big_data_spark/sqldml.py) and refreshes the table's views after
     the commit, and hands everything else to ``spark.sql`` over the
-    registered views — so a SQL user can now round-trip
+    registered views — so a SQL user can round-trip
 
         cat = SnapshotCatalog(spark)
         cat.register("orders_t", "/lake/orders")
@@ -195,8 +194,8 @@ class SnapshotCatalog:
         cat.sql("SELECT count(*) FROM orders_t")          # post-DML
         cat.sql("SELECT count(*) FROM orders_t_v0")       # time travel
 
-    which closes the round-7 'SQL DML doesn't reach the lakehouse'
-    gap. The dispatcher is driver-side statement routing only; all
+    with SQL DML reaching the lakehouse. The dispatcher is
+    driver-side statement routing only; all
     data movement stays in the audited primitives."""
 
     def __init__(
@@ -209,8 +208,8 @@ class SnapshotCatalog:
         self.versions = versions
         self.base_dir = base_dir  # roots CTAS without LOCATION
         self.tables: dict[str, str] = {}
-        # Names whose bindings PERSIST in the warehouse registry file
-        # (round-12 directive #2): CREATE TABLE's effect must survive
+        # Names whose bindings PERSIST in the warehouse registry
+        # file: CREATE TABLE's effect must survive
         # the session — a SQL user who CTAS'd yesterday finds the
         # table today by constructing the catalog on the same
         # base_dir. `register()` stays ad-hoc (session-only) unless
@@ -221,7 +220,7 @@ class SnapshotCatalog:
         # COUNT(*) metadata fast path answers ONLY when the latest
         # manifest still matches this, so it can never disagree with
         # what a simultaneous SELECT * through the pinned view
-        # returns (round-12 review finding).
+        # returns.
         self._view_sid: dict[str, int | None] = {}
         # Tables whose `_history`/`_changes` views lag the newest
         # commit (lazy mode defers their rebuild — see
@@ -363,7 +362,7 @@ class SnapshotCatalog:
             # Spark itself rejects '.foo' as a view name, and a
             # persisted leading-dot binding file would be filtered
             # by the loader's temp/crc guard — refuse up front (the
-            # '_catalog' reservation's sibling; ADVICE r13).
+            # '_catalog' reservation's sibling).
             raise ValueError(
                 f"register: table name {name!r} cannot start with "
                 "'.' (not a valid view name; the registry reserves "
@@ -508,22 +507,25 @@ class SnapshotCatalog:
 
     @staticmethod
     def _partition_filter(man: dict, where) -> dict | None:
-        """parse_metadata_select's WHERE conjuncts as a
+        """parse_metadata_select's WHERE conjuncts (typed literal
+        values from Spark's parse tree) as a
         ``read_snapshot(partitions=)`` dict — or None to decline.
         Claims ONLY predicates metadata answers EXACTLY: every
         column a partition column, every literal canonicalized to
         the string Spark wrote to the dir names. Int-kind columns
-        take integer literals (canonicalized, so '05' matches the
-        '5' dir exactly as SQL's coercion would); string kinds take
-        quoted literals only (a bare numeric would SQL-coerce '05'
-        = 5 true while the dir string misses); date kinds take
-        quoted ISO dates (canonicalized). Anything else — float/
-        decimal/timestamp/boolean keys, non-partition columns —
-        declines: the rendered-string match could diverge from SQL
-        comparison semantics, and the fast path promises exact
-        passthrough agreement. Repeated conjuncts on one column
-        intersect (``a = 1 AND a = 2`` -> empty match, SQL's empty
-        aggregate row)."""
+        take integral literals, and string literals of plain ASCII
+        digits (canonicalized, so '05' matches the '5' dir exactly as
+        SQL's coercion would); string kinds take string literals only
+        (a numeric would SQL-coerce '05' = 5 true while the dir string
+        misses); date kinds take DATE literals or strict ISO-date
+        strings (canonicalized). Anything else — float/decimal/
+        timestamp/boolean keys, non-partition columns — declines: the
+        rendered-string match could diverge from SQL comparison
+        semantics, and the fast path promises exact passthrough
+        agreement. Repeated conjuncts on one column intersect
+        (``a = 1 AND a = 2`` -> empty match, SQL's empty aggregate
+        row)."""
+        import datetime as _dt
         import re as _re
 
         from big_data_spark.io.manifest import partition_cols
@@ -533,7 +535,6 @@ class SnapshotCatalog:
         # underscores, Unicode digits, compact ISO dates) — claiming
         # those would answer scan-free where the passthrough raises
         # CAST_INVALID_INPUT, breaking the exact-agreement contract.
-        int_lit = _re.compile(r"^-?[0-9]+$")
         date_lit = _re.compile(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
         pcols = set(partition_cols(man) or [])
         if not pcols:
@@ -548,28 +549,33 @@ class SnapshotCatalog:
                 return None
             head = types.get(col, "").split("(")[0].strip().lower()
             vals: set[str] = set()
-            for raw, quoted in lits:
+            for v in lits:
                 if head in int_heads:
-                    if not int_lit.match(raw):
+                    if isinstance(v, str):
+                        digits = v.removeprefix("-")
+                        if not (digits.isascii() and digits.isdigit()):
+                            return None
+                        v = int(v)
+                    elif not isinstance(v, int):
                         return None
-                    # Canonicalize to the dir rendering ('05' -> '5',
-                    # '-0' -> '0') — exactly what SQL coercion sees.
-                    vals.add(str(int(raw)))
+                    # The dir rendering ('05' -> '5', '-0' -> '0') —
+                    # exactly what SQL coercion sees.
+                    vals.add(str(v))
                 elif head in ("string", "varchar", "char"):
-                    if not quoted:
+                    if not isinstance(v, str):
                         return None
-                    vals.add(raw)
+                    vals.add(v)
                 elif head == "date":
-                    if not quoted or not date_lit.match(raw):
-                        return None
-                    import datetime as _dt
-
-                    try:
-                        vals.add(
-                            _dt.date.fromisoformat(raw).isoformat()
-                        )
-                    except ValueError:
-                        return None  # e.g. month 13: Spark errors too
+                    if isinstance(v, str):
+                        if not date_lit.match(v):
+                            return None
+                        try:
+                            v = _dt.date.fromisoformat(v)
+                        except ValueError:
+                            return None  # e.g. month 13: Spark errors too
+                    elif type(v) is not _dt.date:
+                        return None  # a TIMESTAMP compares as one
+                    vals.add(v.isoformat())
                 else:
                     return None
             out[col] = vals if col not in out else out[col] & vals
@@ -581,7 +587,7 @@ class SnapshotCatalog:
         mirroring the real aggregate's output schema — the ONE
         func-to-dtype mapping, shared by the per-row renderer and
         the zero-groups branch so the empty and populated schemas
-        can never drift (review r14). ``types`` maps column name to
+        can never drift. ``types`` maps column name to
         committed type (``agg["types"]`` and the manifest schema
         carry identical strings); None = decline (untyped column)."""
         fields: list = []
@@ -680,10 +686,9 @@ class SnapshotCatalog:
         if sum_avg_cols or where is not None or group is not None:
             # The cheap prechecks below decide from the committed
             # schema (one manifest read) BEFORE paying the full
-            # sidecar fold for a shape that can never answer
-            # (round-13 review finding). A pinned version runs the
-            # same prechecks against the PINNED manifest (round-14
-            # directive #6) at the same one-read cost as head.
+            # sidecar fold for a shape that can never answer. A
+            # pinned version runs the same prechecks against the
+            # PINNED manifest at the same one-read cost as head.
             from big_data_spark.io.manifest import read_manifest
 
             try:
@@ -709,7 +714,7 @@ class SnapshotCatalog:
                 if head not in int_heads:
                     return None
         if group is not None:
-            # Partition-wise rollup (round 14): claim ONLY when every
+            # Partition-wise rollup: claim ONLY when every
             # GROUP BY column is a partition column and every bare
             # select item names a group column — anything else is a
             # real aggregation the stats cannot scope.
@@ -726,8 +731,8 @@ class SnapshotCatalog:
             return None  # defensive: parser already unclaims this
         parts = None
         if where is not None:
-            # Partition-predicate aggregates (round-14 directive
-            # #2): `COUNT(*) ... WHERE date = '2026-08-15'` — the
+            # Partition-predicate aggregates:
+            # `COUNT(*) ... WHERE date = '2026-08-15'` — the
             # single most common planning query on a partitioned
             # fact table — answers from the matching live entries'
             # stats; any non-partition or inexactly-renderable
@@ -758,8 +763,8 @@ class SnapshotCatalog:
                     partitions=parts,
                     # Reuse the precheck's manifest — no second read,
                     # and the pcols/_partition_filter prechecks and
-                    # the fold see ONE consistent snapshot (review
-                    # r14; `man` is always read when group is set).
+                    # the fold see ONE consistent snapshot (`man` is
+                    # always read when group is set).
                     _man=man,
                 )
                 snapshot_id = res["snapshot_id"]
@@ -806,7 +811,7 @@ class SnapshotCatalog:
                 for out, typ, nullable in fields
             ]
         )
-        # A local literal relation. Two builders (round 14):
+        # A local literal relation. Two builders:
         #
         # - JVM literals (range(1).select(lit...cast)) whenever every
         #   value is a plain scalar: createDataFrame ships even a
@@ -839,7 +844,7 @@ class SnapshotCatalog:
             # int64-bounded only: F.lit() raises on a wider Python int
             # (an exact driver-side SUM over bigint can overflow long)
             # — out-of-range declines to the createDataFrame path so
-            # the failure mode stays in one place (round-14 advice).
+            # the failure mode stays in one place.
             return isinstance(v, int) and -(2**63) <= v < 2**63
 
         if 0 < len(rows) <= 64 and all(
@@ -867,9 +872,9 @@ class SnapshotCatalog:
                 ]
                 parts.append(
                     # numPartitions=1 for the same defaultParallelism-
-                    # splits reason as the row parts (round-14 advice:
-                    # PruneFilters collapsing the WHERE false branch is
-                    # an optimizer courtesy, not an invariant).
+                    # splits reason as the row parts (PruneFilters
+                    # collapsing the WHERE false branch is an
+                    # optimizer courtesy, not an invariant).
                     self.spark.range(1, numPartitions=1)
                     .select(*null_cols)
                     .where(F.lit(False))
@@ -916,14 +921,12 @@ class SnapshotCatalog:
         )
 
         self._ensure_aux_fresh(statement)
-        parsed = parse_metadata_select(statement)
+        parsed = parse_metadata_select(self.spark, statement)
         if parsed is not None:
-            # Metadata-only fast path (round 12: bare COUNT(*);
-            # round 13 directive #2: any bare COUNT(*)/MIN/MAX/
-            # SUM/AVG list; round 13 optional #9: time travel via
-            # `t VERSION AS OF n` or the `t_vN` view spelling) —
-            # None means fall through to the passthrough below,
-            # which stays authoritative. An exactly-registered name
+            # Metadata-only fast path (any bare COUNT(*)/MIN/MAX/
+            # SUM/AVG list, with time travel via `t VERSION AS OF n`
+            # or the `t_vN` view spelling) — None means fall through
+            # to the passthrough below, which stays authoritative. An exactly-registered name
             # always wins over the `_vN` interpretation (a real
             # table literally named `orders_v2` beside `orders`).
             import re as _re
@@ -969,8 +972,7 @@ class SnapshotCatalog:
                     st.get("statement_type") == "CREATE TABLE"
                     and self.base_dir is not None
                 ):
-                    # CTAS persists: the binding survives the session
-                    # (round-12 directive #2).
+                    # CTAS persists: the binding survives the session.
                     self._persisted.add(st["table"])
                     self._save_binding(st["table"])
                 # CREATE TABLE registered the name into self.tables

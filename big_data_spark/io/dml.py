@@ -31,6 +31,7 @@ from big_data_spark.io.table_reads import (
     read_delete_positions,
     read_entries,
 )
+from big_data_spark.io.stats import literal_family, sql_conjuncts
 from big_data_spark.io.table_writes import (
     _stage_and_claim,
     _unclaim,
@@ -92,7 +93,7 @@ def delete_where(
     of matching rows under ``_deletes/d=<id>`` and the commit carries
     every data entry forward by reference — write cost is O(matches),
     the hot-update regime where copy-on-write's rewrite amplification
-    dominates (the r7 write-amp A/B measures exactly that term).
+    dominates.
     Readers anti-join the (broadcast, tiny) position set out;
     ``fold_deletes`` / compaction / ``maintain_table`` rewrite the
     vectors away. Same change-feed semantics: the feed reports the
@@ -108,8 +109,8 @@ def delete_where(
         if row_cdf:
             # Loud refusal over silent ignore: a caller opting into the
             # sidecar would otherwise get a file-position-vector feed
-            # and could misread it as the sidecar having been written
-            # (round-10 advice). MOR's feed is already row-level.
+            # and could misread it as the sidecar having been written.
+            # MOR's feed is already row-level.
             raise ValueError(
                 "delete_where: row_cdf=True is cow-only — mode='mor' "
                 "already produces a row-level change feed (the position "
@@ -146,7 +147,7 @@ def _delete_mor(spark: SparkSession, table_dir: str, condition) -> dict:
         }
     next_id = man["snapshot_id"] + 1
     _claim_check(spark, table_dir, next_id)
-    hints = _usable_hints(condition, man)
+    hints = _usable_hints(spark, condition, man)
     scan = read_entries(
         spark,
         table_dir,
@@ -247,9 +248,8 @@ def update_where(
     commit's manifest points at, so ``read_changes`` reports the
     update as ``update_preimage``/``update_postimage`` rows instead
     of the file-level whole-generation delete+insert — what an
-    incremental consumer of an UPDATE-heavy table wants (round-9
-    verdict directive #2). Costs one extra scan of the affected
-    generations (O(matches) written)."""
+    incremental consumer of an UPDATE-heavy table wants. Costs one
+    extra scan of the affected generations (O(matches) written)."""
     st = _retry_conflicts(
         lambda: _rewrite_where(
             spark, table_dir, condition, set_exprs, row_cdf=row_cdf
@@ -260,94 +260,26 @@ def update_where(
     return st
 
 
-def _strip_parens(term: str) -> str:
-    """Remove a BALANCED outer paren pair (only when the first '('
-    really closes at the last char — '(a) = (b)' stays intact)."""
-    term = term.strip()
-    while term.startswith("(") and term.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(term):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(term) - 1:
-                    return term
-        term = term[1:-1].strip()
-    return term
-
-
-_HINT_LIT = (
-    r"(-?\d+(?:\.\d+)?"
-    r"|DATE\s*'[^']*'"
-    r"|TIMESTAMP\s*'[^']*'"
-    r"|'(?:[^']|'')*')"
-)
-
-
-def _parse_hint_lit(tok: str):
-    """One SQL literal token from a hintable conjunct → the typed
-    Python bound (float | str | date | datetime), or None when the
-    DATE/TIMESTAMP body is not ISO-parseable (the term then skips —
-    unprunable, never wrong; Spark will still error or coerce it in
-    the condition's own row filter, which stays authoritative)."""
-    import datetime as _dt
-
-    tok = tok.strip()
-    up = tok.upper()
-    if up.startswith("DATE"):
-        try:
-            return _dt.date.fromisoformat(tok[4:].strip()[1:-1])
-        except ValueError:
-            return None
-    if up.startswith("TIMESTAMP"):
-        try:
-            return _dt.datetime.fromisoformat(tok[9:].strip()[1:-1])
-        except ValueError:
-            return None
-    if tok.startswith("'"):
-        return tok[1:-1].replace("''", "'")
-    return float(tok)
-
-
-def _hint_family(v) -> str:
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        return "datetime"
-    if isinstance(v, _dt.date):
-        return "date"
-    if isinstance(v, str):
-        return "string"
-    return "numeric"
-
-
-def _range_hints(cond: str) -> dict[str, tuple] | None:
-    """Range bounds PROVABLY IMPLIED by a conjunctive SQL condition
-    string — the bridge that lets DML compose with footer data
-    skipping. Only plain ``col (>=|>|<=|<|=) literal``,
-    ``col BETWEEN a AND b`` and all-literal ``col IN (a, b, ...)``
-    (min/max envelope) conjuncts contribute, where literal is a
-    number, a ``'string'`` (round 11: typed skipping — this is what
-    lets ``WHERE region = 'EUROPE'`` or ``ts >= '2026-01-01'`` prune),
-    a ``DATE '...'`` or a ``TIMESTAMP '...'``; every other term is
-    skipped, which stays sound (pruning by a SUBSET of conjuncts
-    keeps a superset of the matching files). A column whose conjuncts
-    mix literal families (``c >= 5 AND c <= 'x'``) drops out of the
-    hints entirely — unprunable beats a wrong cross-type fold. Any
-    top-level OR / NOT disables hinting (None). Strict bounds use the
-    closed interval — conservative at file level, exact after the
-    condition's own row filter."""
-    import re as _re
-
-    if _re.search(r"\bOR\b|\bNOT\b", cond, _re.IGNORECASE):
-        return None
+def _range_hints(spark: SparkSession, cond: str) -> dict[str, tuple] | None:
+    """Range bounds PROVABLY IMPLIED by a SQL condition string — the
+    bridge that lets DML compose with footer data skipping. The
+    top-level conjuncts come from Spark's own parse tree
+    (io/stats.sql_conjuncts); ``col (=|<|<=|>|>=) literal``,
+    ``col BETWEEN a AND b`` and all-literal ``col IN (...)`` (min/max
+    envelope) conjuncts contribute, and every other conjunct is
+    skipped, which stays sound (pruning by a SUBSET of conjuncts keeps
+    a superset of the matching files). Numeric literals fold as
+    floats; the tighter of two bounds wins. A column whose literals
+    mix families (``c >= 5 AND c <= 'x'``) drops out of the hints
+    entirely — unprunable beats a wrong cross-type fold. Strict bounds
+    use the closed interval — conservative at file level, exact after
+    the condition's own row filter."""
     bounds: dict[str, list] = {}
     families: dict[str, str] = {}
     poisoned: set[str] = set()
 
     def _fold(col: str, lo, hi) -> None:
-        fam = _hint_family(lo if lo is not None else hi)
+        fam = literal_family(lo if lo is not None else hi)
         if families.setdefault(col, fam) != fam:
             poisoned.add(col)
             return
@@ -357,68 +289,21 @@ def _range_hints(cond: str) -> dict[str, tuple] | None:
         if hi is not None:
             cur[1] = hi if cur[1] is None else min(cur[1], hi)
 
-    # Shield BETWEEN's inner AND from the conjunction split.
-    shielded = _re.sub(
-        rf"(\bBETWEEN\b\s*{_HINT_LIT})\s+AND\b",
-        r"\1 __BTWN__",
-        cond,
-        flags=_re.IGNORECASE,
-    )
-    for raw in _re.split(r"\bAND\b", shielded, flags=_re.IGNORECASE):
-        term = _strip_parens(raw.replace("__BTWN__", "AND"))
-        m = _re.match(
-            rf"^`?(\w+)`?\s*(>=|<=|==|=|<|>)\s*{_HINT_LIT}$", term
-        )
-        if m:
-            col, op = m.group(1), m.group(2)
-            val = _parse_hint_lit(m.group(3))
-            if val is None:
-                continue
-            if op in (">=", ">"):
-                _fold(col, val, None)
-            elif op in ("<=", "<"):
-                _fold(col, None, val)
-            else:
-                _fold(col, val, val)
+    for conj in sql_conjuncts(spark, cond):
+        if conj is None:
             continue
-        m = _re.match(
-            rf"^`?(\w+)`?\s+BETWEEN\s+{_HINT_LIT}\s+AND\s+{_HINT_LIT}$",
-            term,
-            _re.IGNORECASE,
-        )
-        if m:
-            lo = _parse_hint_lit(m.group(2))
-            hi = _parse_hint_lit(m.group(3))
-            if lo is None or hi is None:
-                continue
-            if _hint_family(lo) != _hint_family(hi):
-                poisoned.add(m.group(1))
-                continue
-            _fold(m.group(1), lo, hi)
-            continue
-        # col IN (lit, lit, ...) implies min <= col <= max — the
-        # conservative envelope (round 11); the condition's own row
-        # filter applies exact membership. Only all-literal lists
-        # hint (an IN (SELECT ...) fails the fullmatch and skips).
-        m = _re.match(
-            r"^`?(\w+)`?\s+IN\s*\((.*)\)$",
-            term,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m and _re.fullmatch(
-            rf"\s*{_HINT_LIT}(?:\s*,\s*{_HINT_LIT})*\s*",
-            m.group(2),
-            _re.IGNORECASE,
-        ):
-            vals = [
-                _parse_hint_lit(t)
-                for t in _re.findall(_HINT_LIT, m.group(2), _re.IGNORECASE)
-            ]
-            if any(v is None for v in vals):
-                continue
-            if len({_hint_family(v) for v in vals}) != 1:
-                continue  # mixed families: unprunable, not wrong
-            _fold(m.group(1), min(vals), max(vals))
+        col, op, vals = conj
+        vals = [float(v) if isinstance(v, int) else v for v in vals]
+        if len({literal_family(v) for v in vals}) != 1:
+            poisoned.add(col)
+        elif op in (">", ">="):
+            _fold(col, vals[0], None)
+        elif op in ("<", "<="):
+            _fold(col, None, vals[0])
+        elif op == "between":
+            _fold(col, vals[0], vals[1])
+        else:  # '=' or 'in': the conservative envelope
+            _fold(col, min(vals), max(vals))
     out = {
         c: (lo, hi)
         for c, (lo, hi) in bounds.items()
@@ -427,14 +312,14 @@ def _range_hints(cond: str) -> dict[str, tuple] | None:
     return out or None
 
 
-def _usable_hints(condition, man: dict):
+def _usable_hints(spark: SparkSession, condition, man: dict):
     """Range hints restricted to columns footer statistics can
     actually prune on: hive partition/layout columns live in dir
     names, not file footers — hinting them would make the footer
     sweep raise 'column not in file schema'."""
     if not isinstance(condition, str):
         return None
-    hints = _range_hints(condition)
+    hints = _range_hints(spark, condition)
     if not hints:
         return None
     skip = set(dir_cols(man))
@@ -477,7 +362,7 @@ def _rewrite_where(
     # layout opens only the files whose min/max can hold matches.
     # The survivors read below stays UNPRUNED — it must keep the
     # non-matching rows of affected generations.
-    hints = _usable_hints(condition, man)
+    hints = _usable_hints(spark, condition, man)
     by_entry_rel = sorted(set(entries.values()))
     dv = man["deletes"]
     scan = read_entries(

@@ -344,17 +344,25 @@ def read_pruned(
     ``read(path).filter(lo <= column <= hi)`` (lossless-ness proven
     in tests/test_stats.py).
     """
-    from big_data_spark.io.stats import prune_files_multi, range_predicate
+    from big_data_spark.io.stats import (
+        check_bound_types,
+        prune_files_multi,
+        range_predicate,
+    )
 
     ranges = column if isinstance(column, dict) else {column: (lo, hi)}
     kept = [f for f, k in prune_files_multi(spark, path, ranges).items() if k]
-    cond = range_predicate(ranges)
-    if not kept:
+    if kept:
+        # basePath keeps hive-style partition columns in the schema
+        # when the dataset is partitioned (without it a residual filter
+        # on a partition column fails / diverges from the documented
+        # full-scan-filter equivalence); harmless when the layout is
+        # flat.
+        df = spark.read.option("basePath", path).parquet(*kept)
+    else:
         # Every file provably misses the range: empty result, real schema.
-        return spark.read.parquet(path).where(F.lit(False))
-    # basePath keeps hive-style partition columns in the schema when
-    # the dataset is partitioned (without it a residual filter on a
-    # partition column fails / diverges from the documented
-    # full-scan-filter equivalence); harmless when the layout is flat.
-    df = spark.read.option("basePath", path).parquet(*kept)
-    return df.filter(cond)
+        df = spark.read.parquet(path).where(F.lit(False))
+    check_bound_types(
+        ranges, {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    )
+    return df.filter(range_predicate(ranges))

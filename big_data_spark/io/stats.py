@@ -22,6 +22,11 @@ object-store round trips).
 ``parquet_column_stats`` is the public row-group audit tool: min/max
 as strings (one schema fits every column type; callers cast) at the
 per-row-group grain a scan actually prunes at.
+
+``sql_conjuncts`` is the one reader of SQL condition text: it takes a
+condition's top-level conjuncts from Spark's own parse tree for the
+DML range hints, the catalog's metadata-answered WHERE and the
+``OPTIMIZE ... PARTITION`` pairs.
 """
 
 from __future__ import annotations
@@ -589,6 +594,25 @@ def is_in_list(spec) -> bool:
     return isinstance(spec, (list, set, frozenset))
 
 
+def literal_family(v) -> str:
+    """The family a bound's value orders within: numeric, string, date
+    or datetime ("bool" and "other" order against nothing). Bounds of
+    two families never fold together."""
+    import datetime as _dt
+
+    if isinstance(v, bool):
+        return "bool"
+    if isinstance(v, _dt.datetime):
+        return "datetime"
+    if isinstance(v, _dt.date):
+        return "date"
+    if isinstance(v, str):
+        return "string"
+    if isinstance(v, (int, float)):
+        return "numeric"
+    return "other"
+
+
 def inlist_bounds(spec) -> tuple:
     """Conservative (lo, hi) range implied by an IN-list: its min and
     max when every member shares one literal family, else (None,
@@ -601,22 +625,7 @@ def inlist_bounds(spec) -> tuple:
         raise ValueError(
             "empty IN-list predicate — it can match no rows"
         )
-    import datetime as _dt
-
-    def fam(v):
-        if isinstance(v, bool):
-            return "bool"
-        if isinstance(v, _dt.datetime):
-            return "datetime"
-        if isinstance(v, _dt.date):
-            return "date"
-        if isinstance(v, str):
-            return "string"
-        if isinstance(v, (int, float)):
-            return "numeric"
-        return "other"
-
-    fams = {fam(v) for v in vals}
+    fams = {literal_family(v) for v in vals}
     if len(fams) != 1 or fams & {"bool", "other"}:
         return (None, None)
     return (min(vals), max(vals))
@@ -642,6 +651,140 @@ def range_predicate(ranges: dict[str, tuple]):
         if hi is not None:
             cond = cond & (F.col(c) <= F.lit(hi))
     return cond
+
+
+def check_bound_types(
+    ranges: dict[str, tuple], types: dict[str, str]
+) -> None:
+    """Refuse a numeric bound on a string, date or timestamp column
+    before any scan. ``types`` maps column name to its declared type
+    string. Spark would cast every row's value to the bound's type in
+    the residual filter and fail at the first action with an error
+    that names a data value, not the predicate."""
+    from decimal import Decimal
+
+    for c, spec in ranges.items():
+        if stat_kind(types.get(c, "")) in (None, "numeric"):
+            continue
+        for b in list(spec) if is_in_list(spec) else spec:
+            if isinstance(b, bool):
+                continue
+            if isinstance(b, (int, float, Decimal)):
+                raise ValueError(
+                    f"predicate bound {b!r} on column {c!r} is numeric, "
+                    f"but {c!r} is {types[c]} — pass a bound of the "
+                    "column's type"
+                )
+
+
+_CMP_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+
+
+def _children(expr) -> list:
+    kids = expr.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _column_name(expr) -> str | None:
+    """The name of a single-part column reference, else None."""
+    if expr.nodeName() != "UnresolvedAttribute":
+        return None
+    parts = expr.nameParts()
+    return parts.head() if parts.size() == 1 else None
+
+
+def _literal_value(expr):
+    """A Catalyst ``Literal`` as a Python value by its data type, or
+    None for anything else (a NULL literal is type ``void``).
+    Timestamps come back naive in the session time zone, the way
+    ``Literal.toString`` renders them and ``norm_bound`` reads naive
+    bounds."""
+    import datetime as _dt
+
+    if expr.nodeName() != "Literal":
+        return None
+    typ = expr.dataType().typeName()
+    text = expr.toString()
+    try:
+        if typ in ("byte", "short", "integer", "long"):
+            return int(text)
+        if typ in ("float", "double") or typ.startswith("decimal"):
+            return float(text)
+        if typ == "string":
+            return text
+        if typ == "date":
+            return _dt.date.fromisoformat(text)
+        if typ == "timestamp":
+            return _dt.datetime.fromisoformat(text)
+    except ValueError:
+        return None  # a rendering Python cannot read: unrecognised
+    return None
+
+
+def _conjunct(expr) -> tuple[str, str, list] | None:
+    name = expr.nodeName()
+    if name in _CMP_OPS:
+        op = _CMP_OPS[name]
+    elif name == "In":
+        op = "in"
+    elif (
+        name == "UnresolvedFunction"
+        and expr.nameParts().mkString(".").lower() == "between"
+    ):
+        op = "between"
+    else:
+        return None
+    kids = _children(expr)
+    col = _column_name(kids[0])
+    if col is None or (op == "between" and len(kids) != 3):
+        return None
+    vals = [_literal_value(k) for k in kids[1:]]
+    if not vals or any(v is None for v in vals):
+        return None
+    return col, op, vals
+
+
+def sql_conjuncts(
+    spark: SparkSession, text: str
+) -> list[tuple[str, str, list] | None]:
+    """The top-level conjuncts of the SQL condition ``text``, read from
+    Spark's own parse tree, so every literal means exactly what it
+    means in the filter Spark runs (escapes, suffixes, typed
+    literals). Parsing runs no job.
+
+    Each conjunct is ``(column, op, values)`` when it compares one
+    single-part column with literals: op ``=``, ``<``, ``<=``, ``>``
+    or ``>=`` with one value, ``between`` with (lo, hi), or ``in`` with
+    the members. Values are ``int`` (integral literals), ``float``
+    (decimal, double, float), ``str``, ``datetime.date`` or a naive
+    ``datetime.datetime``. Any other conjunct (OR, NOT, subqueries,
+    function calls, qualified names, NULL or other literal types) is
+    None. Text Spark cannot parse reads as one unrecognised conjunct.
+    """
+    from pyspark.errors import ParseException
+
+    try:
+        root = (
+            spark._jsparkSession.sessionState()
+            .sqlParser()
+            .parseExpression(text)
+        )
+    except ParseException:
+        return [None]
+    out, stack = [], [root]
+    while stack:
+        expr = stack.pop()
+        if expr.nodeName() == "And":
+            stack.extend(reversed(_children(expr)))
+        else:
+            out.append(_conjunct(expr))
+    return out
 
 
 def keep_file(

@@ -135,7 +135,7 @@ def _gen_read_ddl(
     schema_fields: list[dict],
     rename_log: list | None,
     gen_id: int | None,
-    partition_cols: list[str] | None,
+    partition_cols: list[str],
 ) -> str | None:
     """DDL string for an EXPLICIT per-generation read schema, or None
     when only footer inference is sound. Passing a user schema to the
@@ -159,15 +159,12 @@ def _gen_read_ddl(
     '00123' survive exactly as with inference disabled, cast to the
     committed type downstream in _normalize_scan as before.
 
-    Falls back to inference (None) when: the caller didn't affirm the
-    dir-column set; two committed fields
+    Falls back to inference (None) when: two committed fields
     derive the SAME physical name (a later column re-using a renamed-
     away name: the physical bytes belong to the OLD column and only
     the forward replay resolves it); or a later drop event's physical
     name collides with a derived one (drop-then-re-add: the file's
     column is dead data)."""
-    if partition_cols is None:
-        return None
     evs = [
         ev
         for ev in (rename_log or [])
@@ -430,6 +427,12 @@ def read_snapshot(
         man = latest_manifest(spark, table_dir, below=below)
     if man is None:
         raise ValueError(f"no committed snapshots under {table_dir!r}")
+    if predicate:
+        from big_data_spark.io.stats import check_bound_types
+
+        check_bound_types(
+            predicate, {f["name"]: f["type"] for f in man["schema"]}
+        )
     residual_parts = None
     if partitions:
         kept_entries, want = select_partition_entries(
@@ -510,13 +513,12 @@ def read_entries(
     schema_fields: list[dict],
     rename_log: list | None = None,
     stats: dict | None = None,
-    partition_cols: list[str] | None = None,
+    partition_cols: list[str],
 ) -> DataFrame:
     """``partition_cols`` (the manifest's dir-valued columns: entry
     partition columns + generation layout column) lets each
     generation read with an EXPLICIT schema (_gen_read_ddl) — zero
-    footer-inference jobs; ``None`` (callers without the manifest)
-    keeps the inference path.
+    footer-inference jobs.
 
     ``stats`` (the manifest's per-file column-stats block) routes
     ``predicate`` pruning through COMMIT-TIME metadata for covered

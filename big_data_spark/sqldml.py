@@ -1,8 +1,7 @@
-"""SQL DML over snapshot tables — the statement door the round-7
-verdict ranked first: ``delete_where`` / ``update_where`` /
-``merge_snapshot`` existed only as Python APIs, so a SQL user could
-SELECT with time travel (catalog.register_snapshot_views) but not
-write. Plain ``spark.sql`` cannot parse DELETE/UPDATE/MERGE for a
+"""SQL DML over snapshot tables: ``delete_where`` / ``update_where`` /
+``merge_snapshot`` as SQL statements, so a SQL user can write as
+well as SELECT with time travel (catalog.register_snapshot_views).
+Plain ``spark.sql`` cannot parse DELETE/UPDATE/MERGE for a
 non-catalog format (Spark routes DML through a catalog's table
 capabilities, which raw-parquet manifests don't implement), so this
 module is a THIN statement dispatcher: recognize the DML statement
@@ -64,6 +63,8 @@ import re
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from big_data_spark.io.stats import sql_conjuncts
+
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -100,7 +101,7 @@ _ALTER_RE = re.compile(
     # The type token admits parameterized types — decimal(18,2),
     # decimal(18, 2) — so they reach evolve_schema's loud
     # 'not a lossless widening' validation instead of silently
-    # falling through to plain spark.sql (round-10 advice).
+    # falling through to plain spark.sql.
     r"|ALTER\s+COLUMN\s+(\w+)\s+TYPE\s+(\w+(?:\s*\([^)]*\))?)"
     r")\s*;?\s*$",
     re.IGNORECASE,
@@ -149,11 +150,6 @@ _OPTIMIZE_RE = re.compile(
     r"(?:\s+ZORDER\s+BY\s+\(\s*([\w\s,`]+?)\s*\))?\s*;?\s*$",
     re.IGNORECASE,
 )
-# one `col = literal` pair of a PARTITION (...) clause: single-quoted
-# strings ('' escapes) or bare numeric literals.
-_PART_PAIR_RE = re.compile(
-    r"^\s*`?(\w+)`?\s*=\s*(?:'((?:[^']|'')*)'|(-?\d+(?:\.\d+)?))\s*$"
-)
 _VACUUM_RE = re.compile(
     r"^\s*VACUUM\s+(\w+)"
     r"(?:\s+RETAIN\s+(\d+)\s+(SNAPSHOTS?|HOURS?))?\s*;?\s*$",
@@ -164,19 +160,19 @@ _RESTORE_RE = re.compile(
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
-# SHOW *SNAPSHOT* TABLES on purpose: bare SHOW TABLES passed through
-# to spark.sql (temp views + session catalog, its own schema) before
-# round 12 and must keep working — claiming it would silently swap
-# the result schema and hide non-snapshot views (review finding).
+# SHOW *SNAPSHOT* TABLES on purpose: bare SHOW TABLES passes through
+# to spark.sql (temp views + session catalog, its own schema) —
+# claiming it would silently swap the result schema and hide
+# non-snapshot views.
 _SHOW_TABLES_RE = re.compile(
     r"^\s*SHOW\s+SNAPSHOT\s+TABLES\s*;?\s*$", re.IGNORECASE
 )
-# Round 13 (round-12 directive #2; subsumes round 12's bare-COUNT(*)
-# regex): the general metadata-answerable SELECT shape — a comma list
-# where EVERY item is COUNT(*) / MIN(col) / MAX(col) / SUM(col) /
-# AVG(col) with an optional alias, over ONE registered table, nothing
-# else (no WHERE/GROUP/expressions — the planning query
-# `SELECT MIN(d), MAX(d) FROM t`, not a general optimizer). Parsed by
+# The metadata-answerable SELECT shape — a comma list where EVERY
+# item is COUNT(*) / MIN(col) / MAX(col) / SUM(col) / AVG(col) (or a
+# bare GROUP BY column) with an optional alias, over ONE registered
+# table, with optional time travel, WHERE and GROUP BY clauses — the
+# planning query `SELECT MIN(d), MAX(d) FROM t`, not a general
+# optimizer. Parsed by
 # parse_metadata_select, consumed by SnapshotCatalog.sql, NOT
 # route_statement — the fast path must only answer when the catalog's
 # pinned head view and the latest manifest agree (the catalog tracks
@@ -195,39 +191,15 @@ _META_ITEM_RE = re.compile(
     r"(?:\s+AS\s+(\w+))?$",
     re.IGNORECASE | re.DOTALL,
 )
-# One WHERE conjunct the metadata layer COULD answer (round-14
-# directive #2): `col = literal` or `col IN (lit, ...)` with
-# single-quoted-string ('' escapes) or bare numeric literals. The
-# CALLER decides whether col is actually a partition column; any
-# conjunct outside this shape unclaims the whole statement.
-_META_WHERE_EQ_RE = re.compile(
-    r"^`?(\w+)`?\s*=\s*('(?:[^']|'')*'|-?\d+(?:\.\d+)?)$",
-    re.DOTALL,
-)
-_META_WHERE_IN_RE = re.compile(
-    r"^`?(\w+)`?\s+IN\s*\(\s*(.+?)\s*\)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_META_LIT_RE = re.compile(r"^('(?:[^']|'')*'|-?\d+(?:\.\d+)?)$")
-_META_AND_RE = re.compile(r"\s+AND\s+", re.IGNORECASE)
-
-
-def _parse_meta_literal(raw: str) -> tuple[str, bool]:
-    """(value, quoted): a single-quoted literal unescapes '' -> ',
-    a bare numeric stays verbatim."""
-    if raw.startswith("'"):
-        return raw[1:-1].replace("''", "'"), True
-    return raw, False
-
-
 def parse_metadata_select(
+    spark: SparkSession,
     statement: str,
 ) -> (
     tuple[
         str,
         list[tuple[str, str | None, str]],
         tuple[str, str] | None,
-        list[tuple[str, list[tuple[str, bool]]]] | None,
+        list[tuple[str, list]] | None,
         list[str] | None,
     ]
     | None
@@ -241,20 +213,19 @@ def parse_metadata_select(
     Spark's default output name for the bare call (``count(1)`` /
     ``min(col)`` / the column's own name), so a metadata answer and
     the passthrough query are column-for-column indistinguishable.
-    ``travel`` carries a trailing time-travel clause (round-13
-    optional #9) as ``("version", "3")``, ``("tag", "gold")`` or
+    ``travel`` carries a trailing time-travel clause as
+    ``("version", "3")``, ``("tag", "gold")`` or
     ``("ts", "2026-08-15 13:00:00")`` — resolution (tag lookup,
     timestamp→id) is the caller's job against the live table, exactly
-    like claiming. ``where`` (round-14 directive #2) is a conjunct
-    list ``[(col, [(value, quoted), ...]), ...]`` from
-    ``col = literal`` / ``col IN (...)`` clauses — whether each col
-    is a PARTITION column (the only kind metadata can answer) is the
-    caller's job too; any conjunct outside the shape unclaims the
+    like claiming. ``where`` is a conjunct list
+    ``[(col, [value, ...]), ...]`` from ``col = literal`` /
+    ``col IN (...)`` clauses, read from Spark's own parse tree
+    (io/stats.sql_conjuncts) with typed literal values — whether each
+    col is a PARTITION column (the only kind metadata can answer) is
+    the caller's job too; any conjunct outside the shape unclaims the
     whole statement (fall through to the real query, never a guess).
-    A quoted literal containing ``AND``/commas simply fails the
-    strict anchored conjunct shapes after the naive split — a safe
-    unclaim, never a mis-parse. ``group`` (round 14) is the GROUP BY
-    column list — the partition-wise rollup shape."""
+    ``group`` is the GROUP BY column list — the partition-wise rollup
+    shape."""
     m = _META_SELECT_RE.match(statement)
     if not m:
         return None
@@ -283,33 +254,11 @@ def parse_metadata_select(
         )
     else:
         travel = ("ts", val[1:-1] if val.startswith("'") else val)
-    where = None
-    if m.group(5) is not None:
-        where = []
-        for conj in _META_AND_RE.split(m.group(5).strip()):
-            conj = conj.strip()
-            em = _META_WHERE_EQ_RE.match(conj)
-            if em:
-                where.append(
-                    (em.group(1), [_parse_meta_literal(em.group(2))])
-                )
-                continue
-            nm = _META_WHERE_IN_RE.match(conj)
-            if nm:
-                lits = []
-                for part in nm.group(2).split(","):
-                    lm = _META_LIT_RE.match(part.strip())
-                    if not lm:
-                        return None
-                    lits.append(_parse_meta_literal(lm.group(1)))
-                where.append((nm.group(1), lits))
-                continue
-            return None  # conjunct outside the claimable shape
     group = None
     if m.group(6) is not None:
         # An EMPTY comma segment ("GROUP BY p," / "GROUP BY ,p") is
         # a syntax error the passthrough would raise on — unclaim
-        # rather than silently answering invalid SQL (review r14).
+        # rather than silently answering invalid SQL.
         group = [
             c.strip().strip("`") for c in m.group(6).split(",")
         ]
@@ -319,7 +268,16 @@ def parse_metadata_select(
             return None
     if group is None and any(f == "col" for f, _, _ in items):
         return None  # a bare column without GROUP BY is not ours
+    where = None
+    if m.group(5) is not None:
+        where = []
+        for conj in sql_conjuncts(spark, m.group(5)):
+            if conj is None or conj[1] not in ("=", "in"):
+                return None  # conjunct outside the claimable shape
+            where.append((conj[0], conj[2]))
     return m.group(2), items, travel, where, group
+
+
 _REPARTITION_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(\w+)\s+REPARTITION\s+BY\s+"
     r"(?:\(\s*([\w\s,`]+?)\s*\)|NONE)\s*;?\s*$",
@@ -340,15 +298,15 @@ def route_statement(
     statements (OPTIMIZE / VACUUM [RETAIN n SNAPSHOTS | n HOURS] /
     RESTORE TABLE ... TO VERSION AS OF n) and for the table-lifecycle
     statements (CREATE TABLE [PARTITIONED BY (...)] [LOCATION '...']
-    AS SELECT — round 11 — and DROP TABLE [IF EXISTS]), else None —
+    AS SELECT and DROP TABLE [IF EXISTS]), else None —
     meaning PASS THROUGH to plain ``spark.sql``. DELETE/UPDATE/MERGE
     are always claimed (plain spark.sql cannot run them for this
     format, so strict errors beat silent misroutes); INSERT INTO /
-    INSERT OVERWRITE (round 10) and ALTER on REGISTERED snapshot
-    tables are claimed; shapes outside the subset — qualified names,
-    ALTER VIEW, targets not registered as snapshot tables — worked
-    through spark.sql before round 9 added the statements and must
-    keep working. ``base_dir`` roots a CTAS without LOCATION
+    INSERT OVERWRITE and ALTER on REGISTERED snapshot tables are
+    claimed; shapes outside the subset — qualified names, ALTER VIEW,
+    targets not registered as snapshot tables — pass through to
+    spark.sql and must keep working there. ``base_dir`` roots a CTAS
+    without LOCATION
     (``<base_dir>/<name>``); CREATE mutates ``tables`` in place and
     DROP removes the entry, so a caller-owned dict stays the one
     source of truth."""
@@ -358,8 +316,7 @@ def route_statement(
         # Claim CTAS only when the statement names a LOCATION or the
         # catalog was built with base_dir= (the snapshot-format
         # opt-in) — a plain 'CREATE TABLE t AS SELECT' against the
-        # Spark catalog worked through spark.sql before round 11 and
-        # must keep working.
+        # Spark catalog works through spark.sql and must keep working.
         if m and (m.group(3) or base_dir is not None):
             return _execute_create(spark, m, tables, base_dir)
         return None  # CREATE VIEW / Spark-catalog CTAS — spark.sql's
@@ -381,8 +338,8 @@ def route_statement(
         m = _REPARTITION_RE.match(statement)
         if m and m.group(1) in tables:
             # ALTER TABLE t REPARTITION BY (c1, c2) | NONE — the SQL
-            # spelling of the one-call partition-spec rewrite
-            # (round 12); checked BEFORE the generic ALTER claim so
+            # spelling of the one-call partition-spec rewrite;
+            # checked BEFORE the generic ALTER claim so
             # the clause never reaches _execute_alter's rename/drop/
             # type parser.
             from big_data_spark.io.table_writes import repartition_table
@@ -410,7 +367,7 @@ def route_statement(
         return table_history(spark, tables[m.group(1)])
     m = _DETAIL_RE.match(statement)
     if m and m.group(1) in tables:
-        # DESCRIBE DETAIL t (round 11, Delta's spelling): one manifest
+        # DESCRIBE DETAIL t (Delta's spelling): one manifest
         # summary row — partition columns, live file count/bytes,
         # stats coverage, tags. Metadata-only.
         from big_data_spark.io.aggregates import table_detail
@@ -418,7 +375,7 @@ def route_statement(
         return table_detail(spark, tables[m.group(1)])
     m = _SHOW_PARTS_RE.match(statement)
     if m and m.group(1) in tables:
-        # SHOW PARTITIONS t (round 11): one row per live partition
+        # SHOW PARTITIONS t: one row per live partition
         # leaf with typed values + n_files/total_bytes, answered from
         # manifest entry keys — Spark's own SHOW PARTITIONS errors on
         # these tables (temp views), so claiming the registered names
@@ -427,7 +384,7 @@ def route_statement(
 
         return show_partitions(spark, tables[m.group(1)])
     if _SHOW_TABLES_RE.match(statement):
-        # SHOW SNAPSHOT TABLES (round 12): the catalog's registered
+        # SHOW SNAPSHOT TABLES: the catalog's registered
         # snapshot tables — name, dir, and whether the binding
         # persists in the warehouse registry. Metadata-only; bindings
         # are the driver-side dict, no storage reads. (Bare SHOW
@@ -442,8 +399,8 @@ def route_statement(
         )
     m = _ANALYZE_RE.match(statement)
     if m and m.group(1) in tables:
-        # ANALYZE TABLE t [COMPUTE STATISTICS [FOR COLUMNS c1, c2]]
-        # (round 11): backfill/upgrade the manifest stats block as a
+        # ANALYZE TABLE t [COMPUTE STATISTICS [FOR COLUMNS c1, c2]]:
+        # backfill/upgrade the manifest stats block as a
         # maintenance commit — Spark's spelling, the snapshot
         # format's semantics. Unregistered names pass through to
         # spark.sql (its catalog-table ANALYZE).
@@ -486,32 +443,28 @@ def route_statement(
         parts = None
         if m.group(2):
             # OPTIMIZE t PARTITION (ds = '2026-01-01', region = 'eu')
-            # (round 12 — Delta's OPTIMIZE ... WHERE, Hive's clause
-            # spelling): scope the rewrite to the matching partitions
-            # — the only affordable shape at 100 TB. Literal pairs
-            # only; anything else fails loudly here rather than
-            # silently rewriting the whole table.
+            # (Delta's OPTIMIZE ... WHERE, Hive's clause spelling):
+            # scope the rewrite to the matching partitions — the only
+            # affordable shape at 100 TB. Each pair is one `col =
+            # literal` conjunct read by Spark's parser; anything else
+            # fails loudly here rather than silently rewriting the
+            # whole table.
             parts = {}
             for pair in _split_top_level(m.group(2)):
-                pm = _PART_PAIR_RE.match(pair)
-                if not pm:
+                conj = sql_conjuncts(spark, pair)
+                if len(conj) != 1 or not conj[0] or conj[0][1] != "=":
                     raise ValueError(
                         f"OPTIMIZE PARTITION: cannot parse {pair!r} — "
                         "use `col = 'string'` or `col = number` pairs"
                     )
-                col = pm.group(1)
-                val = (
-                    pm.group(2).replace("''", "'")
-                    if pm.group(2) is not None
-                    else pm.group(3)
-                )
+                col, _, (val,) = conj[0]
                 parts[col] = val
         if m.group(3) or parts is not None:
             # OPTIMIZE t [PARTITION (...)] ZORDER BY (c1, c2): the
             # SQL spelling of the (optionally partition-scoped)
             # z-order / compaction rewrite (io/compact.py
             # compact_snapshot) — one atomic rewrite clustered on the
-            # interleaved key (round-9 directive #3; scoping round 12).
+            # interleaved key.
             from big_data_spark.io.compact import compact_snapshot
 
             cols = (
@@ -546,8 +499,8 @@ def route_statement(
 
         unit = (m.group(3) or "SNAPSHOTS").upper()
         # VACUUM t RETAIN n SNAPSHOTS (commit-count retention) or
-        # RETAIN n HOURS (wall-clock retention, Delta's spelling,
-        # round 11) — hours keep the keep_last=2 replay floor and
+        # RETAIN n HOURS (wall-clock retention, Delta's spelling) —
+        # hours keep the keep_last=2 replay floor and
         # additionally pin the trailing time window.
         st = vacuum_snapshots(
             spark,
@@ -823,9 +776,9 @@ def _execute_insert(
         # through the partial writer with every prior partition
         # touched: old keys drop, the new content's partitions key
         # the manifest, and partition_col survives so later partial
-        # writers (CDC mirrors, partial DML) keep working (round-10
-        # advice: routing through write_snapshot silently re-laid the
-        # table out unpartitioned).
+        # writers (CDC mirrors, partial DML) keep working (routing
+        # through write_snapshot would silently re-lay the table out
+        # unpartitioned).
         from big_data_spark.io.manifest import partition_cols
         from big_data_spark.io.table_writes import (
             write_snapshot,
@@ -877,8 +830,7 @@ def _execute_create(
     base_dir: str | None,
 ) -> dict:
     """CREATE TABLE <t> [PARTITIONED BY (c1[, c2...])] [LOCATION 'p']
-    AS <select> — the last SQL-only gap (round-10 verdict #3: a SQL
-    user could do everything except MAKE the table). The row source
+    AS <select> — how a SQL user MAKES a table. The row source
     goes through Spark's own parser (time-travel fragments resolve
     first), lands as snapshot 0 via write_snapshot /
     write_snapshot_partial, and the name registers into ``tables``.
@@ -909,7 +861,7 @@ def _execute_create(
             )
         if name.lower() == "_catalog":
             # Reserved: <base_dir>/_catalog is the warehouse's
-            # per-table binding directory (round 13) — a data table
+            # per-table binding directory — a data table
             # there would interleave with registry files.
             raise ValueError(
                 "CREATE TABLE: '_catalog' is reserved for the "
@@ -1006,7 +958,7 @@ def _execute_drop(
     if not fs.exists(root_probe):
         # The dir is already gone (removed out-of-band): DROP still
         # releases the binding — a persistent-registry entry must not
-        # become permanently un-droppable (round 12).
+        # become permanently un-droppable.
         del tables[name]
         return {
             "statement_type": "DROP TABLE",
@@ -1111,8 +1063,8 @@ def _execute_merge(
         # the statement's aliases onto them in ONE pass (a sequential
         # rewrite corrupts swapped aliases: 'AS s ... AS t' would
         # first turn s.->t. and then rewrite ALL t. — original and
-        # just-produced — to s., binding everything to one side;
-        # round-8 advice). String literals are skipped — both
+        # just-produced — to s., binding everything to one side).
+        # String literals are skipped — both
         # single-quoted and double-quoted (Spark's ANSI-off default
         # reads "..." as a string) — so an alias-looking word inside
         # one survives verbatim.

@@ -15,7 +15,11 @@ from big_data_spark.session import get_spark, quiet_logs, stop_spark  # noqa: E4
 TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = f"{TESTDATA_ROOT}/sf0.001"
 SF_CORRECT = f"{TESTDATA_ROOT}/sf0.01"
-REFERENCE_DATA = "/root/reference/Data"
+# Small generated stand-ins for the reference's sample logs, in its
+# JSON event format (tools/make_log_fixtures.py writes them).
+REFERENCE_DATA = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "data"
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

@@ -76,6 +76,7 @@ def test_pruned_read_is_metadata_only_and_exact(
         predicate={"k": (100.0, 220.0)},
         schema_fields=man["schema"],
         stats=None,
+        partition_cols=manifest.dir_cols(man),
     )
     footer_files = set(footer_df.inputFiles())
     footer_rows = {r["k"] for r in footer_df.collect()}
@@ -307,6 +308,7 @@ def test_manifest_size_is_o_generations_not_o_files(spark, tmp_path):
     footer = read_entries(
         spark, t, man["entries"], predicate=pred,
         schema_fields=man["schema"], stats=None,
+        partition_cols=manifest.dir_cols(man),
     )
     pruned = read_snapshot(spark, t, predicate=pred)
     assert {r["k"] for r in pruned.collect()} == {

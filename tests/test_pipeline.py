@@ -1,4 +1,6 @@
-"""End-to-end pipeline on the reference's committed datasets.
+"""End-to-end pipeline on ``tests/data/test.json``, a small generated
+stand-in for the reference's sample log of that name, in its JSON
+event format (tools/make_log_fixtures.py).
 
 The reference's own part-1 golden output is cluster-id-dependent and
 its LSH run was unseeded, so byte-equality is not a sound oracle

@@ -1114,34 +1114,73 @@ def test_sql_views_cover_history_and_changes(spark, tmp_path):
     assert {(r["k"], r["_change_type"]) for r in ch} == {(2, "insert")}
 
 
-def test_range_hints_parser():
+def test_range_hints_parser(spark):
     """_range_hints: sound bounds from conjunctive SQL text; OR/NOT
     or unparseable terms degrade safely (subset of conjuncts or
     None), never a wrong bound."""
     from big_data_spark.io.dml import _range_hints
 
-    assert _range_hints("k >= 250 AND k < 320") == {"k": (250.0, 320.0)}
-    assert _range_hints("(k >= 2) AND (v <= 7.5)") == {
+    assert _range_hints(spark, "k >= 250 AND k < 320") == {
+        "k": (250.0, 320.0)
+    }
+    assert _range_hints(spark, "(k >= 2) AND (v <= 7.5)") == {
         "k": (2.0, None),
         "v": (None, 7.5),
     }
-    # Round 11: string equality hints too (typed skipping).
-    assert _range_hints("k BETWEEN 5 AND 9 AND status = 'X'") == {
+    # String equality hints too (typed skipping).
+    assert _range_hints(
+        spark, "k BETWEEN 5 AND 9 AND status = 'X'"
+    ) == {
         "k": (5.0, 9.0),
         "status": ("X", "X"),
     }
-    assert _range_hints("k = 42") == {"k": (42.0, 42.0)}
+    assert _range_hints(spark, "k = 42") == {"k": (42.0, 42.0)}
     # Tighter of two bounds on one column wins.
-    assert _range_hints("k >= 10 AND k >= 20 AND k <= 90 AND k <= 80") == {
-        "k": (20.0, 80.0)
-    }
+    assert _range_hints(
+        spark, "k >= 10 AND k >= 20 AND k <= 90 AND k <= 80"
+    ) == {"k": (20.0, 80.0)}
     # OR / NOT disable hinting wholesale.
-    assert _range_hints("k >= 250 OR k < 10") is None
-    assert _range_hints("NOT (k >= 250)") is None
+    assert _range_hints(spark, "k >= 250 OR k < 10") is None
+    assert _range_hints(spark, "NOT (k >= 250)") is None
     # Function-wrapped or genuinely non-range conditions contribute
-    # nothing (string equality DOES hint since round 11).
-    assert _range_hints("status = 'X'") == {"status": ("X", "X")}
-    assert _range_hints("upper(who) = 'A'") is None
+    # nothing (string equality DOES hint).
+    assert _range_hints(spark, "status = 'X'") == {"status": ("X", "X")}
+    assert _range_hints(spark, "upper(who) = 'A'") is None
+    # A keyword inside a string literal is data, not syntax: both
+    # conjuncts hint.
+    assert _range_hints(spark, "status = 'NOT SHIPPED' AND k >= 5") == {
+        "status": ("NOT SHIPPED", "NOT SHIPPED"),
+        "k": (5.0, None),
+    }
+
+
+def test_dml_reads_literals_as_spark_does(spark, tmp_path):
+    """Backslash escapes in a DML condition mean what Spark's lexer
+    says: DELETE and UPDATE touch exactly the rows the same condition
+    matches in a plain filter (the hints never narrow the count)."""
+    from big_data_spark.io.snapshot import (
+        append_snapshot,
+        delete_where,
+        update_where,
+    )
+
+    names = ["x\\y", "x\\y", "xy", "xy", "xy", "x\\\\y", "z"]
+    df = spark.createDataFrame(list(enumerate(names)), "k bigint, name string")
+    # SQL 'x\\y' is the value x\y; in SQL 'x\y' the unknown escape
+    # drops its backslash, giving xy.
+    t = str(tmp_path / "del")
+    append_snapshot(df, t)
+    cond = r"name = 'x\\y'"
+    assert read_snapshot(spark, t).where(cond).count() == 2
+    assert delete_where(spark, t, cond)["deleted_rows"] == 2
+    assert read_snapshot(spark, t).count() == 5
+    t = str(tmp_path / "upd")
+    append_snapshot(df, t)
+    cond = r"name = 'x\y'"
+    assert read_snapshot(spark, t).where(cond).count() == 3
+    st = update_where(spark, t, cond, {"k": "k + 100"})
+    assert st["updated_rows"] == 3
+    assert read_snapshot(spark, t).where("k >= 100").count() == 3
 
 
 def test_delete_where_prunes_files_with_identical_result(
@@ -1192,7 +1231,7 @@ def test_delete_where_prunes_files_with_identical_result(
     )
 
     # Hints off -> identical table state and stats.
-    monkeypatch.setattr(dml, "_range_hints", lambda cond: None)
+    monkeypatch.setattr(dml, "_range_hints", lambda *a: None)
     t_plain = build("prune_off")
     st2 = delete_where(spark, t_plain, "k >= 250 AND k < 320")
     monkeypatch.undo()

@@ -1459,6 +1459,25 @@ def test_partition_literal_shapes_match_spark_casts(spark, tmp_path):
         ).collect()
 
 
+def test_partition_predicate_reads_literals_as_spark_does(spark, tmp_path):
+    """Backslash escapes in a metadata-answered WHERE mean what Spark's
+    lexer says: the scan-free COUNT(*) equals spark.sql on the same
+    text, also when the table was made by CREATE TABLE ... PARTITIONED
+    BY."""
+    base = str(tmp_path / "wh_esc")
+    cat = SnapshotCatalog(spark, versions="lazy", base_dir=base)
+    vals = ["a\\b", "a\\b", "a\\\\b", "a\b", "a\b", "a\b", "ab"]
+    spark.createDataFrame(
+        list(enumerate(vals)), "k bigint, p string"
+    ).createOrReplaceTempView("esc_src")
+    cat.sql("CREATE TABLE pt3 PARTITIONED BY (p) AS SELECT * FROM esc_src")
+    for cond, n in [(r"p = 'a\\b'", 2), (r"p = 'a\b'", 3)]:
+        q = f"SELECT COUNT(*) AS n FROM pt3 WHERE {cond}"
+        fast = cat.sql(q)
+        assert fast.inputFiles() == [], q
+        assert fast.collect()[0]["n"] == spark.sql(q).collect()[0]["n"] == n
+
+
 def test_partition_groupby_metadata_rollup(spark, tmp_path):
     """Round 14: GROUP BY over partition columns answers scan-free —
     one literal row per live partition group — value- and schema-

@@ -1,9 +1,12 @@
-"""Tree-encoding correctness against the reference's own sample data.
+"""Tree-encoding correctness on sample logs in the reference's format.
 
 Oracle: a direct driver-side Python implementation of the documented
 encoding spec (FIXTURES.md §2a; reference: Src/processes.py:12-33 and
-Src/processes.py:66-99 semantics), run on the reference's committed
-``Data/test.json`` / ``Data/data_processes_v2.json``.
+Src/processes.py:66-99 semantics), run on ``tests/data/test.json`` and
+``tests/data/data_processes_v2.json``. These are small generated
+stand-ins for the reference's sample files of the same names, in its
+JSON event format (tools/make_log_fixtures.py); the second adds
+hand-written processes for each edge case of ``_spec_depths``.
 """
 
 from __future__ import annotations

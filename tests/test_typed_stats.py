@@ -108,26 +108,27 @@ def test_norm_bound_mismatches_are_unprunable_not_wrong():
     assert norm_bound("date", dt.datetime(2026, 1, 5, 23, 59)) == "2026-01-05"
 
 
-def test_range_hints_string_and_temporal_literals():
-    h = _range_hints("region = 'EUROPE' AND v >= 10")
+def test_range_hints_string_and_temporal_literals(spark):
+    h = _range_hints(spark, "region = 'EUROPE' AND v >= 10")
     assert h == {"region": ("EUROPE", "EUROPE"), "v": (10.0, None)}
-    h = _range_hints("name = 'O''BRIEN'")
+    h = _range_hints(spark, "name = 'O''BRIEN'")
     assert h == {"name": ("O'BRIEN", "O'BRIEN")}
     h = _range_hints(
-        "ts >= TIMESTAMP '2026-01-05 00:00:00' AND d <= DATE '2026-03-01'"
+        spark,
+        "ts >= TIMESTAMP '2026-01-05 00:00:00' AND d <= DATE '2026-03-01'",
     )
     assert h == {
         "ts": (dt.datetime(2026, 1, 5), None),
         "d": (None, dt.date(2026, 3, 1)),
     }
-    h = _range_hints("k BETWEEN 'a' AND 'f'")
+    h = _range_hints(spark, "k BETWEEN 'a' AND 'f'")
     assert h == {"k": ("a", "f")}
     # mixed literal families poison the column (unprunable, not wrong)
-    assert _range_hints("v >= 5 AND v <= 'x'") is None
-    h = _range_hints("v >= 5 AND v <= 'x' AND w = 3")
+    assert _range_hints(spark, "v >= 5 AND v <= 'x'") is None
+    h = _range_hints(spark, "v >= 5 AND v <= 'x' AND w = 3")
     assert h == {"w": (3.0, 3.0)}
     # OR/NOT still disable hinting entirely
-    assert _range_hints("k = 'a' OR k = 'b'") is None
+    assert _range_hints(spark, "k = 'a' OR k = 'b'") is None
 
 
 # ------------------------------------------------------- footer sweep
@@ -227,6 +228,34 @@ def test_footer_numeric_bound_on_string_column_keeps_all(spark, tmp_path):
     df.write.parquet(src)
     dec = prune_files_multi(spark, src, {"s": (1.0, 2.0)})
     assert dec and all(dec.values())
+
+
+def test_read_pruned_refuses_numeric_bound_on_string_column(
+    spark, tmp_path, typed_df
+):
+    """A numeric bound on a string column fails up front with a
+    message naming the column, its type and the bound — not at the
+    first action with a cast error naming a data value."""
+    src = str(tmp_path / "numstr")
+    typed_df.write.parquet(src)
+    with pytest.raises(ValueError, match=r"1\.0 on column 'key'.*string"):
+        read_pruned(spark, src, {"key": (1.0, 2.0)})
+    with pytest.raises(ValueError, match="column 'd'.*date"):
+        read_pruned(spark, src, {"d": [3, 4]})
+
+
+def test_read_snapshot_refuses_numeric_bound_on_string_column(
+    spark, tmp_path, typed_df
+):
+    t = str(tmp_path / "numstr_snap")
+    write_snapshot(typed_df, t)
+    with pytest.raises(ValueError, match=r"1\.0 on column 'key'.*string"):
+        read_snapshot(spark, t, predicate={"key": (1.0, 2.0)})
+    with pytest.raises(ValueError, match="column 'ts'.*timestamp"):
+        read_snapshot(spark, t, predicate={"ts": (None, 5)})
+    # bounds of the column's type still read
+    got = read_snapshot(spark, t, predicate={"key": ("k00001", "k00002")})
+    assert got.count() == 160
 
 
 # ----------------------------------------------------- manifest stats
@@ -641,18 +670,18 @@ def test_analyze_upgrade_keeps_recorded_columns(spark, tmp_path):
 
 # --------------------------------------------------- IN-list support
 
-def test_range_hints_in_list():
-    h = _range_hints("k IN (7, 3, 5)")
+def test_range_hints_in_list(spark):
+    h = _range_hints(spark, "k IN (7, 3, 5)")
     assert h == {"k": (3.0, 7.0)}
-    h = _range_hints("region IN ('us', 'eu') AND v >= 2")
+    h = _range_hints(spark, "region IN ('us', 'eu') AND v >= 2")
     assert h == {"region": ("eu", "us"), "v": (2.0, None)}
-    h = _range_hints("d IN (DATE '2026-02-01', DATE '2026-01-01')")
+    h = _range_hints(spark, "d IN (DATE '2026-02-01', DATE '2026-01-01')")
     assert h == {"d": (dt.date(2026, 1, 1), dt.date(2026, 2, 1))}
     # subqueries and mixed families contribute nothing (still sound)
-    assert _range_hints("k IN (SELECT id FROM t)") is None
-    assert _range_hints("k IN (1, 'a')") is None
+    assert _range_hints(spark, "k IN (SELECT id FROM t)") is None
+    assert _range_hints(spark, "k IN (1, 'a')") is None
     # IN composes with other conjuncts on the same column
-    h = _range_hints("k IN (3, 9) AND k <= 7")
+    h = _range_hints(spark, "k IN (3, 9) AND k <= 7")
     assert h == {"k": (3.0, 7.0)}
 
 
