@@ -33,7 +33,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_spark.io.layout import data_files, hadoop_fs
+from big_data_spark.io.layout import _DATA_DIR, data_files, hadoop_fs
 
 
 def parquet_inventory(spark: SparkSession, path: str) -> dict:
@@ -178,8 +178,8 @@ def _with_zorder_key(
     dtypes = dict(df.dtypes)
 
     def dim_expr(c: str):
-        """The column as a double z-dimension. STRING columns (round
-        11 — Delta's approach) map through a truncated fixed-width
+        """The column as a double z-dimension. STRING columns (Delta's
+        approach) map through a truncated fixed-width
         binary prefix: the first 7 UTF-8 bytes, hex-encoded and
         right-'0'-padded to 14 nibbles, read as one 56-bit integer —
         MONOTONE with the lexicographic byte order on that prefix
@@ -188,7 +188,7 @@ def _with_zorder_key(
         bucket: truncation trades tail resolution for a bounded key,
         exactly the z-order trade for long common prefixes.
 
-        DATE/TIMESTAMP columns (round 11, with typed skipping) map to
+        DATE/TIMESTAMP columns (with typed skipping) map to
         epoch day/microsecond counts — event time is THE most common
         clustering dimension on a fact table. ntz values route
         through the session-tz cast Spark itself applies; a DST fold
@@ -308,7 +308,7 @@ def compact_snapshot(
 
     ``partitions`` ({col: value | list-of-values}, the read_snapshot
     spelling) scopes the rewrite to MATCHING partitions of a
-    partitioned table (round 12 — Delta's ``OPTIMIZE ... WHERE``):
+    partitioned table (Delta's ``OPTIMIZE ... WHERE``):
     only their entries are read and rewritten (cost O(selected), the
     only affordable shape at 100 TB — a day's hot partitions, not
     the table); untouched partitions carry by reference, delete
@@ -318,7 +318,6 @@ def compact_snapshot(
     """
     from big_data_spark.io.layout import generation_dir
     from big_data_spark.io.manifest import (
-        _claim_check,
         latest_manifest,
         partition_cols,
         select_partition_entries,
@@ -372,7 +371,6 @@ def compact_snapshot(
         partitions=partitions,
     )
     next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
     pcols = partition_cols(man)
     if pcols:
         if cluster_by:
@@ -382,8 +380,8 @@ def compact_snapshot(
                 "layout; use zorder_by to cluster WITHIN partitions"
             )
         if zorder_by:
-            # Z-order WITHIN each partition (round 10 — Delta's
-            # OPTIMIZE ZORDER on partitioned tables): range-split on
+            # Z-order WITHIN each partition (Delta's OPTIMIZE ZORDER
+            # on partitioned tables): range-split on
             # (partition..., Morton key) so every task holds one
             # contiguous slice of one-or-few partitions sorted by the
             # interleave — each written file is narrow on EVERY
@@ -430,7 +428,6 @@ def compact_snapshot(
             # the replaced generations; the new generation's id is
             # above every logged event, so no replay applies to it).
             **({} if scoped else {"deletes": [], "rename_log": []}),
-            claim=True,
         )
     elif man["layout_by"]:
         # Generations are hive-partitioned on a layout column (e.g.
@@ -452,7 +449,6 @@ def compact_snapshot(
             snapshot_id=next_id,
             partition_by=layout,
             maintenance=True,
-            claim=True,
         )
         # The layout fixes the file count (one per partition dir),
         # not the size heuristic — report what was actually written
@@ -464,9 +460,7 @@ def compact_snapshot(
         out = _compaction_plan(
             df, n_out, cluster_by, sort_within, zorder_by, zorder_bits
         )
-        write_snapshot(
-            out, table_dir, snapshot_id=next_id, maintenance=True, claim=True
-        )
+        write_snapshot(out, table_dir, snapshot_id=next_id, maintenance=True)
     return {**inv, "n_output_files": n_out, "snapshot_id": next_id}
 
 
@@ -494,16 +488,12 @@ def binpack_snapshot(
     from pyspark.sql import functions as F
 
     from big_data_spark.io.manifest import (
-        SnapshotConflict,
-        _claim_check,
-        commit_manifest,
         dir_cols,
         latest_manifest,
         partition_cols,
-        successor,
     )
     from big_data_spark.io.table_reads import _pad_to_schema, read_entries
-    from big_data_spark.io.table_writes import _stage_and_claim, _unclaim
+    from big_data_spark.io.table_writes import _parquet_writer, _publish
 
     man = latest_manifest(spark, table_dir)
     if man is None:
@@ -533,7 +523,6 @@ def binpack_snapshot(
     # an intervening commit collides -> SnapshotConflict, never a
     # silent drop of its entries from the folded manifest.
     next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
     # _pad_to_schema: TYPED null-pad to the committed schema — a
     # small tail that entirely predates an added column must not
     # produce a void column parquet refuses to write.
@@ -556,11 +545,7 @@ def binpack_snapshot(
     layout = man["layout_by"]
     # write_snapshot would commit entries = {"": gen} (full table);
     # here the folded generation joins the carried-forward big ones,
-    # so write the data through the generation layout and commit the
-    # merged manifest directly — staged to _staging and CLAIMED by
-    # one atomic rename (never delete-then-write: a concurrent
-    # retry-appender holding this id's dir must conflict, not lose
-    # its data).
+    # so publish the generation with the merged entry map.
     out = df.repartition(layout) if layout else df.coalesce(
         max(
             1,
@@ -574,36 +559,25 @@ def binpack_snapshot(
         )
     )
 
-    def _write(to: str) -> None:
-        writer = out.write.mode("error")
-        if layout:
-            writer = writer.partitionBy(layout)
-        writer.parquet(to)
-
-    gdir = _stage_and_claim(spark, table_dir, next_id, _write)
-    entries = {
+    kept = {
         key: rel for key, rel in man["entries"].items() if key not in small
     }
-    if gdir is not None:
-        entries[f"b{next_id}"] = f"_data/s={next_id}"
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(man, next_id, entries, maintenance=True),
-            prev_man=man,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir)
-        raise
-    return {
-        "folded": len(small),
-        # entries holds the carried generations plus b{next_id} only
-        # when the fold actually wrote data (an all-rows-MOR-deleted
-        # tail stages nothing).
-        "kept": len(entries) - (1 if gdir is not None else 0),
-        "snapshot_id": next_id,
-    }
+
+    def build(prev, sid, staged):
+        # An all-rows-MOR-deleted tail stages nothing: no new entry.
+        entries = dict(kept)
+        if staged:
+            entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
+        return entries, {"maintenance": True}
+
+    _publish(
+        spark,
+        table_dir,
+        [(_DATA_DIR, _parquet_writer(out, layout))],
+        build,
+        at=(man, next_id),
+    )
+    return {"folded": len(small), "kept": len(kept), "snapshot_id": next_id}
 
 
 def maintain_table(

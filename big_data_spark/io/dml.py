@@ -33,8 +33,9 @@ from big_data_spark.io.table_reads import (
 )
 from big_data_spark.io.stats import literal_family, sql_conjuncts
 from big_data_spark.io.table_writes import (
-    _stage_and_claim,
-    _unclaim,
+    _leaf_entries,
+    _parquet_writer,
+    _publish,
     write_snapshot_partial,
 )
 
@@ -146,7 +147,6 @@ def _delete_mor(spark: SparkSession, table_dir: str, condition) -> dict:
             "snapshot_id": man["snapshot_id"],
         }
     next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
     hints = _usable_hints(spark, condition, man)
     scan = read_entries(
         spark,
@@ -176,50 +176,45 @@ def _delete_mor(spark: SparkSession, table_dir: str, condition) -> dict:
         F.col("_dv_path").alias("file_path"),
         F.col("_dv_pos").alias("row_index"),
     )
-    # Stage the vector, then CLAIM _deletes/d=<id> by atomic rename —
-    # two racing MOR writers at the same next_id would otherwise
-    # interleave on the vector dir (A writes, B delete-rewrites, A's
-    # manifest wins pointing at B's positions: wrong rows deleted).
-    ddir = _stage_and_claim(
+    # The vector is claimed as _deletes/d=<id> by one rename — two
+    # racing MOR writers at the same next_id would otherwise
+    # interleave on the vector dir (A writes, B rewrites, A's manifest
+    # wins pointing at B's positions: wrong rows deleted).
+    new_deletes = sorted(
+        set(man["deletes"]) | {f"{_DELETES_DIR}/d={next_id}"}
+    )
+    matched = []
+
+    def build(prev, sid, staged):
+        n = (
+            spark.read.parquet(staged[_DELETES_DIR]).count()
+            if _DELETES_DIR in staged
+            else 0
+        )
+        if n == 0:
+            return None  # nothing matched: no commit
+        matched.append(int(n))
+        return dict(man["entries"]), {"deletes": new_deletes}
+
+    sid = _publish(
         spark,
         table_dir,
-        next_id,
-        lambda to: positions.coalesce(1).write.mode("error").parquet(to),
-        dest_rel=f"{_DELETES_DIR}/d={next_id}",
+        [(_DELETES_DIR, _parquet_writer(positions.coalesce(1)))],
+        build,
+        at=(man, next_id),
     )
-    if ddir is None:
-        n = 0
-    else:
-        n = spark.read.parquet(ddir).count()
-        if n == 0:
-            _unclaim(spark, ddir)
-    if n == 0:
+    if sid is None:
         return {
             "deleted_rows": 0,
             "delete_vectors": len(man["deletes"]),
             "carried": len(man["entries"]),
             "snapshot_id": man["snapshot_id"],
         }
-    new_deletes = sorted(
-        set(man["deletes"]) | {f"{_DELETES_DIR}/d={next_id}"}
-    )
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(
-                man, next_id, dict(man["entries"]), deletes=new_deletes
-            ),
-            prev_man=man,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, ddir)
-        raise
     return {
-        "deleted_rows": int(n),
+        "deleted_rows": matched[0],
         "delete_vectors": len(new_deletes),
         "carried": len(man["entries"]),
-        "snapshot_id": next_id,
+        "snapshot_id": sid,
     }
 
 
@@ -422,7 +417,6 @@ def _rewrite_where(
     # of being silently dropped from the new manifest and later
     # vacuumed away (lost update).
     next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
     affected = {k: v for k, v in entries.items() if v in hit_rels}
     carried = {k: v for k, v in entries.items() if v not in hit_rels}
     # Pad to the COMMITTED schema (typed) BEFORE evaluating the
@@ -449,8 +443,8 @@ def _rewrite_where(
                 f"update_where: unknown columns {sorted(unknown)} — "
                 "additive evolution goes through append/write"
             )
-    cdf_rel: str | None = None
-    cdf_dir: str | None = None
+    parts = []
+    staged_cdf: list[str] = []
     if row_cdf:
         # Row-level CDF sidecar (opt-in): the MATCHED rows, as
         # pre/post images for an UPDATE (evaluated from `base`, the
@@ -483,110 +477,85 @@ def _rewrite_where(
             ).unionByName(
                 post.withColumn("_change_type", F.lit("update_postimage"))
             )
-        cdf_rel = f"{_CDF_DIR}/c={next_id}"
-        cdf_dir = _stage_and_claim(
-            spark,
-            table_dir,
-            next_id,
-            lambda to: images.write.mode("error").parquet(to),
-            dest_rel=cdf_rel,
-        )
-        if cdf_dir is None:
-            cdf_rel = None  # defensive: hit_rels guarantees matches
-    if set_exprs is None:
-        # SQL DELETE three-valued logic: only rows where the
-        # predicate is TRUE are deleted; NULL-valued predicates keep
-        # their row (a bare ~cond would drop them too).
-        survivors = base.where(~F.coalesce(cond, F.lit(False)))
-    elif row_cdf and cdf_dir is not None:
-        # The rewritten generation's updated rows are the JUST-WRITTEN
-        # sidecar post-images read back from disk — the single
-        # evaluation of the SET expressions. A persist() would only
-        # pin them as strongly as the block cache: a lost executor
-        # recomputes from lineage with fresh rand(), committing rows
-        # that differ from the feed's update_postimage (the
-        # audit-vs-commit double-execution class). Bytes on disk
-        # cannot diverge.
-        committed_post = (
-            spark.read.parquet(cdf_dir)
-            .where(F.col("_change_type") == "update_postimage")
-            .drop("_change_type")
-        )
-        survivors = base.where(
-            ~F.coalesce(cond, F.lit(False))
-        ).unionByName(committed_post)
-    else:
-        survivors = base
+
+        def _write_images(to: str) -> None:
+            _parquet_writer(images)(to)
+            staged_cdf.append(to)
+
+        parts.append((_CDF_DIR, _write_images))
+
+    def _survivors():
+        if set_exprs is None:
+            # SQL DELETE three-valued logic: only rows where the
+            # predicate is TRUE are deleted; NULL-valued predicates
+            # keep their row (a bare ~cond would drop them too).
+            return base.where(~F.coalesce(cond, F.lit(False)))
+        if staged_cdf:
+            # The rewritten generation's updated rows are the
+            # JUST-WRITTEN sidecar post-images read back from disk —
+            # the single evaluation of the SET expressions. A
+            # persist() would only pin them as strongly as the block
+            # cache: a lost executor recomputes from lineage with
+            # fresh rand(), committing rows that differ from the
+            # feed's update_postimage (the audit-vs-commit
+            # double-execution class). Bytes on disk cannot diverge.
+            committed_post = (
+                spark.read.parquet(staged_cdf[0])
+                .where(F.col("_change_type") == "update_postimage")
+                .drop("_change_type")
+            )
+            return base.where(
+                ~F.coalesce(cond, F.lit(False))
+            ).unionByName(committed_post)
+        out = base
         for col, expr in set_exprs.items():
             val = F.expr(expr) if isinstance(expr, str) else expr
-            survivors = survivors.withColumn(
+            out = out.withColumn(
                 col,
                 F.when(cond, val.cast(dict(base.dtypes)[col])).otherwise(
                     F.col(col)
                 ),
             )
-    stats = {
+        return out
+
+    layout = man["layout_by"]
+
+    def _write(to: str) -> None:
+        survivors = _survivors()
+        if pcols:
+            _parquet_writer(survivors, pcols)(to)
+        else:
+            _parquet_writer(
+                survivors.repartition(layout) if layout else survivors,
+                layout,
+            )(to)
+
+    parts.append((_DATA_DIR, _write))
+
+    def build(prev, sid, staged):
+        # Delete vectors carry verbatim: rows referencing the
+        # rewritten (dropped) generations are inert; rows for carried
+        # generations still mask. fold_deletes / maintenance clears
+        # the list. On a partitioned table the affected entries ARE
+        # partitions: the rewritten ones re-key from the written
+        # leaves (emptied partitions drop).
+        new_entries = dict(carried)
+        if pcols:
+            new_entries.update(
+                _leaf_entries(spark, staged.get(_DATA_DIR), pcols, sid)
+            )
+        elif _DATA_DIR in staged:
+            new_entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
+        cdf = f"{_CDF_DIR}/c={sid}" if _CDF_DIR in staged else None
+        return new_entries, {"cdf": cdf}
+
+    _publish(spark, table_dir, parts, build, at=(man, next_id))
+    return {
         "matched_rows": int(sum(hit_rels.values())),
         "rewritten": len(set(affected.values())),
         "carried": len(carried),
         "snapshot_id": next_id,
     }
-    if pcols:
-        # Partitioned table: the affected entries ARE partitions —
-        # route through the partial writer so manifest keys reconcile
-        # per partition (and emptied partitions drop). affected's keys
-        # are already canonical entry keys (scalar or escaped suffix).
-        try:
-            write_snapshot_partial(
-                survivors,
-                table_dir,
-                next_id,
-                man["partition_col"],
-                list(affected.keys()),
-                claim=True,
-                cdf=cdf_rel,
-            )
-        except SnapshotConflict:
-            _unclaim(spark, cdf_dir)
-            raise
-        return stats
-    layout = man["layout_by"]
-
-    def _write(to: str) -> None:
-        writer = (
-            survivors.repartition(layout) if layout else survivors
-        ).write.mode("error")
-        if layout:
-            writer = writer.partitionBy(layout)
-        writer.parquet(to)
-
-    # Staged-rename dir claim, never delete-then-write: a concurrent
-    # retry-appender holding _data/s=<next_id> surfaces as a
-    # retryable SnapshotConflict instead of losing its claimed data.
-    try:
-        gdir = _stage_and_claim(spark, table_dir, next_id, _write)
-    except SnapshotConflict:
-        _unclaim(spark, cdf_dir)
-        raise
-    new_entries = dict(carried)
-    if gdir is not None:
-        new_entries[f"b{next_id}"] = f"{_DATA_DIR}/s={next_id}"
-    try:
-        # Delete vectors carry verbatim: rows referencing the
-        # rewritten (dropped) generations are inert; rows for carried
-        # generations still mask. fold_deletes / maintenance clears
-        # the list.
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(man, next_id, new_entries, cdf=cdf_rel),
-            prev_man=man,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir)
-        _unclaim(spark, cdf_dir)
-        raise
-    return stats
 
 
 def fold_deletes(spark: SparkSession, table_dir: str) -> dict:
@@ -653,35 +622,23 @@ def fold_deletes(spark: SparkSession, table_dir: str) -> dict:
             # partitions materialized their masks, the carried ones
             # were never masked (hit_dirs chose affected).
             deletes=[],
-            claim=True,
         )
         return stats
     layout = man["layout_by"]
 
-    def _write(to: str) -> None:
-        writer = (base.repartition(layout) if layout else base).write.mode(
-            "error"
-        )
-        if layout:
-            writer = writer.partitionBy(layout)
-        writer.parquet(to)
+    def build(prev, sid, staged):
+        gone = set(affected.values())
+        new_entries = {k: v for k, v in entries.items() if v not in gone}
+        if staged:
+            new_entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
+        return new_entries, {"maintenance": True, "deletes": []}
 
-    gdir = _stage_and_claim(spark, table_dir, next_id, _write)
-    new_entries = {
-        k: v for k, v in entries.items() if v not in set(affected.values())
-    }
-    if gdir is not None:
-        new_entries[f"b{next_id}"] = f"{_DATA_DIR}/s={next_id}"
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(
-                man, next_id, new_entries, maintenance=True, deletes=[]
-            ),
-            prev_man=man,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir)
-        raise
+    out = base.repartition(layout) if layout else base
+    _publish(
+        spark,
+        table_dir,
+        [(_DATA_DIR, _parquet_writer(out, layout))],
+        build,
+        at=(man, next_id),
+    )
     return stats

@@ -111,12 +111,11 @@ def _manifest_path(table_dir: str, snapshot_id: int) -> str:
 
 
 def _claim_check(spark: SparkSession, table_dir: str, snapshot_id: int):
-    """Fail fast BEFORE touching the generation dir when
-    ``snapshot_id`` is already committed — ``clear_generation`` would
-    otherwise delete a racing committer's PUBLISHED data on the way
-    to a commit that was going to conflict anyway. This narrows (does
-    not eliminate) the claim window; ``commit_manifest``'s atomic
-    rename stays the final arbiter."""
+    """Fail fast BEFORE any write when ``snapshot_id`` is already
+    committed — a fixed-id writer would otherwise stage (and a
+    replayed id claim) a generation for a commit that was going to
+    conflict anyway. This narrows (does not eliminate) the race;
+    ``commit_manifest``'s atomic rename stays the final arbiter."""
     fs, p = hadoop_fs(spark, _manifest_path(table_dir, snapshot_id))
     if fs.exists(p):
         raise SnapshotConflict(

@@ -70,7 +70,6 @@ from big_data_spark.io.table_writes import (
     append_snapshot,
     append_with_retry,
     check_schema_evolution,
-    clear_generation,
     publish_staged,
     read_staged,
     repartition_table,

@@ -20,7 +20,6 @@ from big_data_spark.io.layout import (
     _read_json,
     _write_text,
     data_files,
-    generation_dir,
     hadoop_fs,
 )
 from big_data_spark.io.manifest import (
@@ -108,8 +107,7 @@ def stage_snapshot(
     batch is automatically staged partitioned on that column (an
     explicit different ``partition_by`` is refused) so publish can
     reconcile manifest entries per touched partition — the dq-gated
-    ingest path for partitioned fact tables (round-9 verdict
-    directive #1)."""
+    ingest path for partitioned fact tables."""
     spark = df.sparkSession
     prev = latest_manifest(spark, table_dir)
     pcols = None if prev is None else partition_cols(prev)
@@ -134,10 +132,7 @@ def stage_snapshot(
     check_schema_evolution((prev or {}).get("schema"), fields)
     token = uuid.uuid4().hex
     staging = f"{table_dir}/_staging/{token}"
-    writer = df.write.mode("error")
-    if by:
-        writer = writer.partitionBy(*by)
-    writer.parquet(staging)
+    _parquet_writer(df, by)(staging)
     # Record the writer's DECLARED schema beside the data: a read-back
     # of the staged dir re-INFERS hive partition column types (a
     # '2026-08-15' string key comes back as date), which would make
@@ -206,123 +201,229 @@ def _staged_fields(
 
 
 def _refresh_claim_mtime(spark: SparkSession, fs, dest_path) -> None:
-    """Stamp a just-claimed generation dir with the CLAIM time: rename
-    preserves mtime, so a WAP batch staged longer ago than vacuum's
+    """Stamp a just-claimed dir with the CLAIM time: rename preserves
+    mtime, so a WAP batch staged longer ago than vacuum's
     ``staging_ttl_hours`` (arbitrarily heavy audits are blessed) would
     look like stale crash residue during its claim->commit window — a
     concurrent vacuum would delete the just-claimed data and the
-    commit would publish a manifest pointing at vanished files
-    (round-10 advice, medium). setTimes is metadata-only."""
+    commit would publish a manifest pointing at vanished files.
+    setTimes is metadata-only."""
     import time as _time
 
     try:
         fs.setTimes(dest_path, int(_time.time() * 1000), -1)
     except Exception:
-        # A FS without setTimes support: the post-commit existence
-        # verify in the claim loops still turns the (now wider) race
-        # into a loud SnapshotConflict instead of silent corruption.
+        # A FS without setTimes support: _publish's post-commit
+        # existence check still turns the (now wider) race into a loud
+        # SnapshotConflict instead of silent corruption.
         pass
 
 
-def _claim_commit_loop(
+# The per-id dir each kind of part is claimed as: _data/s=<id>,
+# _deletes/d=<id>, _cdf/c=<id>.
+_PART_PREFIX = {_DATA_DIR: "s", _DELETES_DIR: "d", _CDF_DIR: "c"}
+
+
+def _publish(
     spark: SparkSession,
     table_dir: str,
-    staging: str,
-    fields: list[dict],
-    attempts: int,
+    parts: list[tuple],
     build,
-    origin: str,
-) -> int:
-    """THE staged-data publish loop shared by append_with_retry and
-    publish_staged: each attempt rebases on the freshest manifest,
-    claims ``_data/s=<id>`` by ONE atomic rename of the staged dir,
-    and commits; losing either race (dir claim or manifest rename)
-    renames the data back to staging and retries — a retry costs a
-    directory rename, never a data rewrite. ``build(prev, sid,
-    has_data)`` returns ``(entries, changes)``: the FULL entry map to
-    commit (including the claimed generation's own entries — one
-    whole-generation key, or per-partition keys pointing into
-    ``_data/s=<sid>/<col>=<val>`` subdirs for a partitioned publish)
-    and the manifest keys the commit changes beyond ``schema``
-    (``successor``). It runs per attempt against the freshest
-    predecessor, so table-shape refusals rebase too."""
+    at: tuple | None = None,
+    attempts: int = 1,
+    replace: bool = False,
+    fields: list[dict] | None = None,
+    stats_columns: list[str] | None = None,
+) -> int | None:
+    """THE publish path of every commit that writes files (Delta's
+    rule: new files under fresh names, then one atomic log commit;
+    nothing is rewritten in place).
+
+    ``parts`` lists ``(root, write)`` pairs, ``root`` one of
+    ``_data`` / ``_deletes`` / ``_cdf``; ``write`` writes the part to
+    the path it is given, or is the path of a batch already staged
+    under ``_staging/`` (publish_staged's token, which stays the
+    caller's on failure). Each part is written ONCE to a private
+    ``_staging/<uuid>`` dir; a part with no data files is dropped.
+    ``build(prev, sid, staged)`` gets the predecessor, the id and the
+    non-empty staged dirs by root (partition-leaf walks read those),
+    and returns ``(entries, changes)`` for ``successor`` — or None to
+    publish nothing. Each part is then CLAIMED as ``<root>/<x>=<sid>``
+    by one rename and the manifest commits.
+
+    ``at=(prev, sid)`` fixes the id (rewrites, explicit-id writers):
+    without ``replace`` a committed ``sid`` fails fast before any
+    write. ``at=None`` rebases every attempt on the freshest manifest
+    (the appenders). An occupied destination belongs to another
+    writer or a crash in its claim->commit window and refuses the
+    claim; a ``replace`` writer owns its id (deterministic replay)
+    and swaps the occupant out after its own files are staged. A lost
+    race (dir claim or manifest rename) moves the claimed parts back
+    to staging and rebases while ``attempts`` remain — a retry costs
+    a rename, never a data rewrite. Any failure removes everything
+    this call staged or claimed. ``fields`` is the batch's declared
+    schema, checked (additive evolution) and committed; None inherits
+    the predecessor's. Returns the committed id (None when ``build``
+    published nothing)."""
     import random as _random
     import time as _time
 
-    fs, staging_path = hadoop_fs(spark, staging)
-    has_data = _generation_has_data(spark, staging)
-    _, data_root = hadoop_fs(spark, f"{table_dir}/{_DATA_DIR}")
-    fs.mkdirs(data_root)
-    last_err: Exception | None = None
-    for attempt in range(attempts):
-        if attempt:
-            # Jittered backoff: a loser re-reading the manifest before
-            # the winner's commit lands recomputes the SAME id and
-            # burns attempts in a tight spin — the commit window now
-            # includes the stats sweep, so give the winner time to
-            # land instead of exhausting the budget (round-11 two-
-            # writer thread test caught exactly this).
-            _time.sleep(
-                min(0.05 * (2 ** (attempt - 1)), 1.0)
-                * (0.5 + _random.random())
-            )
-        prev = latest_manifest(spark, table_dir)
-        check_schema_evolution((prev or {}).get("schema"), fields)
-        sid = (prev["snapshot_id"] + 1) if prev else 0
-        entries, changes = build(prev, sid, has_data)
-        if has_data:
-            _, dest_path = hadoop_fs(spark, generation_dir(table_dir, sid))
-            if fs.exists(dest_path) or not fs.rename(
-                staging_path, dest_path
-            ):
-                # Another writer holds this id's dir (in-flight or a
-                # crash orphan). If its manifest lands, the next loop
-                # rebases past it; an orphan exhausts the budget and
-                # raises with the blocking dir named.
-                last_err = SnapshotConflict(
-                    f"generation dir s={sid} under {table_dir!r} is "
-                    "held by another writer (or a crash orphan — "
-                    "vacuum reclaims it after the staging TTL)"
-                )
-                continue
-            _refresh_claim_mtime(spark, fs, dest_path)
-        try:
-            commit_manifest(
-                spark,
-                table_dir,
-                successor(prev, sid, entries, schema=fields, **changes),
-                prev_man=prev,
-            )
-        except SnapshotConflict as exc:
-            last_err = exc
-            if has_data and not fs.rename(dest_path, staging_path):
-                # A non-staging committer took the manifest id after
-                # our dir claim; the loser's generation must not sit
-                # under a committed id it doesn't belong to.
-                raise SnapshotConflict(
-                    f"lost commit race for snapshot {sid} AND the "
-                    f"rename-back of {generation_dir(table_dir, sid)!r} "
-                    "failed — manual cleanup required"
-                ) from exc
-            continue
-        if not has_data:
-            fs.delete(staging_path, True)
-        elif not fs.exists(dest_path):
-            # The claim was reclaimed between rename and commit (a
-            # vacuum that listed before the mtime stamp landed) —
-            # the committed manifest points at vanished data. Loud
-            # beats silent: name the corrupted id for recovery.
+    fs, _ = hadoop_fs(spark, table_dir)
+    prev, sid = at if at is not None else (None, None)
+    if at is not None:
+        if not replace:
+            _claim_check(spark, table_dir, sid)
+        if fields is not None:
+            check_schema_evolution((prev or {}).get("schema"), fields)
+    staged: dict[str, str] = {}
+    own: list[str] = []
+    claimed: list[tuple] = []  # (staging Path, claimed Path)
+
+    def claim(root: str, staging: str) -> None:
+        rel = f"{root}/{_PART_PREFIX[root]}={sid}"
+        _, sp = hadoop_fs(spark, staging)
+        _, dp = hadoop_fs(spark, f"{table_dir}/{rel}")
+        fs.mkdirs(dp.getParent())  # rename needs the parent to exist
+        occupied = fs.exists(dp)
+        if occupied and replace:
+            occupied = not fs.delete(dp, True)
+        if occupied or not fs.rename(sp, dp):
             raise SnapshotConflict(
-                f"generation dir s={sid} under {table_dir!r} vanished "
-                "between claim and commit — a concurrent vacuum "
-                f"reclaimed it; manifest {sid} points at missing data "
-                "and must be rolled back"
+                f"{rel} under {table_dir!r} is held by another writer "
+                "or a crash orphan — once no writer is running, "
+                "reclaim it with vacuum_snapshots(..., "
+                "staging_ttl_hours=0)"
             )
-        return sid
-    raise SnapshotConflict(
-        f"{origin} exhausted {attempts} attempts under "
-        f"{table_dir!r}: {last_err}"
-    )
+        claimed.append((sp, dp))
+        _refresh_claim_mtime(spark, fs, dp)
+
+    def unclaim() -> None:
+        while claimed:
+            sp, dp = claimed.pop()
+            if not fs.rename(dp, sp):
+                # Our uncommitted part must not sit under an id it
+                # does not belong to.
+                raise SnapshotConflict(
+                    f"lost the commit race for snapshot {sid} AND the "
+                    f"rename-back of {dp.toString()!r} failed — manual "
+                    "cleanup required"
+                )
+
+    try:
+        for root, write in parts:
+            if isinstance(write, str):
+                staged[root] = write
+            else:
+                staged[root] = f"{table_dir}/_staging/{uuid.uuid4().hex}"
+                own.append(staged[root])
+                write(staged[root])
+        full = {
+            root: path
+            for root, path in staged.items()
+            if _generation_has_data(spark, path)
+        }
+        last_err: Exception | None = None
+        for attempt in range(attempts):
+            if at is None:
+                if attempt:
+                    # Jittered backoff: a loser re-reading the manifest
+                    # before the winner's commit lands recomputes the
+                    # SAME id and would burn its attempts in a tight
+                    # spin (the commit window includes the stats
+                    # sweep).
+                    _time.sleep(
+                        min(0.05 * (2 ** (attempt - 1)), 1.0)
+                        * (0.5 + _random.random())
+                    )
+                prev = latest_manifest(spark, table_dir)
+                sid = (prev["snapshot_id"] + 1) if prev else 0
+                if fields is not None:
+                    check_schema_evolution(
+                        (prev or {}).get("schema"), fields
+                    )
+            built = build(prev, sid, full)
+            if built is None:
+                full = {}
+                break
+            entries, changes = built
+            if fields is not None:
+                changes = {"schema": fields, **changes}
+            try:
+                for root, path in full.items():
+                    claim(root, path)
+                commit_manifest(
+                    spark,
+                    table_dir,
+                    successor(prev, sid, entries, **changes),
+                    prev_man=prev,
+                    replace=replace,
+                    stats_columns=stats_columns,
+                )
+            except SnapshotConflict as exc:
+                last_err = exc
+                unclaim()
+                continue
+            done, claimed[:] = list(claimed), []
+            for _sp, dp in done:
+                if not fs.exists(dp):
+                    # Reclaimed between rename and commit (a vacuum
+                    # that listed before the mtime stamp landed): the
+                    # committed manifest points at vanished data.
+                    raise SnapshotConflict(
+                        f"{dp.toString()!r} vanished between claim and "
+                        "commit — a concurrent vacuum reclaimed it; "
+                        f"manifest {sid} points at missing data and "
+                        "must be rolled back"
+                    )
+            break
+        else:
+            if attempts == 1:
+                raise last_err
+            raise SnapshotConflict(
+                f"exhausted {attempts} attempts under {table_dir!r}: "
+                f"{last_err}"
+            )
+    except BaseException:
+        try:
+            unclaim()
+        finally:
+            for path in own:
+                _, p = hadoop_fs(spark, path)
+                fs.delete(p, True)
+        raise
+    for root, path in staged.items():
+        if root not in full:
+            _, p = hadoop_fs(spark, path)
+            fs.delete(p, True)
+    return None if built is None else sid
+
+
+def _parquet_writer(df: DataFrame, by: str | list[str] | None = None):
+    """The ``write(to)`` of a part: ``df`` as Parquet under ``to``,
+    hive-partitioned on ``by`` (one column or an ordered list)."""
+    writer = df.write.mode("error")
+    if by:
+        writer = writer.partitionBy(*spec_cols(by))
+    return writer.parquet
+
+
+def _leaf_entries(
+    spark: SparkSession, staged: str | None, pcols: list[str], sid: int
+) -> dict[str, str]:
+    """The per-partition manifest entries of a partitioned generation
+    staged at ``staged`` once it is claimed as ``_data/s=<sid>`` — one
+    per written partition leaf (an empty part has none). Written dir
+    names are hive-ESCAPED; ``_walk_partition_leaves`` keys them the
+    way the manifest does, so a caller's pop-canonical-key /
+    insert-written-key reconcile stays consistent."""
+    if staged is None:
+        return {}
+    return {
+        key: posixpath.join(_DATA_DIR, f"s={sid}", suffix)
+        for key, suffix in _walk_partition_leaves(
+            spark, staged, pcols
+        ).items()
+    }
 
 
 def publish_staged(
@@ -379,19 +480,22 @@ def publish_staged(
     if len(layout_cols) == 1:
         layout = next(iter(layout_cols))
 
-    def build(prev, sid, has_data):
+    def build(prev, sid, staged):
         pcols = None if prev is None else partition_cols(prev)
         # A replace publishes a fresh table with nothing old to mask
         # or map; appends never touch existing rows, so prior masks
         # and the rename log stay valid (rows of replaced partitions
         # go inert with their generations).
         fresh = {} if mode == "append" else {"deletes": [], "rename_log": []}
+        has_data = _DATA_DIR in staged
         if pcols is not None:
             # Partitioned table: per-partition entry reconcile, the
             # write_snapshot_partial contract behind one rename. The
             # leaf walk raises on __HIVE_DEFAULT_PARTITION__ at any
             # level (null keys cannot round-trip).
-            written = _walk_partition_leaves(spark, staging, pcols)
+            written = _leaf_entries(
+                spark, staged.get(_DATA_DIR), pcols, sid
+            )
             if has_data and not written:
                 raise ValueError(
                     f"staged batch is laid out on "
@@ -403,10 +507,7 @@ def publish_staged(
             entries = (
                 dict(prev["entries"]) if mode == "append" else {}
             )
-            for key, suffix in written.items():
-                entries[key] = posixpath.join(
-                    _DATA_DIR, f"s={sid}", suffix
-                )
+            entries.update(written)
             return entries, fresh
         entries = (
             dict(prev["entries"]) if (prev and mode == "append") else {}
@@ -426,9 +527,9 @@ def publish_staged(
             fresh["layout_by"] = layout
         return entries, fresh
 
-    return _claim_commit_loop(
-        spark, table_dir, staging, fields, attempts, build,
-        "publish_staged",
+    return _publish(
+        spark, table_dir, [(_DATA_DIR, staging)], build,
+        attempts=attempts, fields=fields,
     )
 
 
@@ -507,80 +608,11 @@ def check_schema_evolution(
         )
 
 
-def clear_generation(
-    spark: SparkSession, table_dir: str, snapshot_id: int
-) -> str:
-    """Delete any half-written data generation from a crashed prior
-    attempt of the same snapshot id — call before rewriting it."""
-    gdir = generation_dir(table_dir, snapshot_id)
-    fs, hpath = hadoop_fs(spark, gdir)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-    return gdir
-
-
 def _generation_has_data(spark: SparkSession, gdir: str) -> bool:
     """True if any data file exists anywhere under the generation dir
     (``layout.data_files``' hidden-path rule) — a driver-side listing
     that stops at the first file."""
     return next(data_files(spark, gdir), None) is not None
-
-
-def _stage_and_claim(
-    spark: SparkSession,
-    table_dir: str,
-    snapshot_id: int,
-    write_fn,
-    dest_rel: str | None = None,
-) -> str | None:
-    """Write a new data generation CONTENTION-FREE to a private
-    ``_staging`` dir, then CLAIM its destination (``_data/s=<id>``,
-    or ``dest_rel``) with ONE atomic rename — the same dir-claim
-    protocol append_with_retry uses. The rewrite paths (DML,
-    fold_deletes, bin-pack) previously used clear_generation's
-    delete-then-write, which could delete a concurrent retry-
-    appender's claimed-but-uncommitted dir and leave the appender's
-    committed manifest pointing at foreign data (round-8 advice,
-    medium). Returns the claimed dir, or None when the staged write
-    produced no data files (staging removed, nothing claimed). An
-    existing destination raises SnapshotConflict: an in-flight writer
-    holds it, or a crashed claimant left it — vacuum_snapshots
-    reclaims such orphans after its staging TTL."""
-    staging = f"{table_dir}/_staging/{uuid.uuid4().hex}"
-    write_fn(staging)
-    fs, staging_path = hadoop_fs(spark, staging)
-    if not _generation_has_data(spark, staging):
-        fs.delete(staging_path, True)
-        return None
-    dest = (
-        f"{table_dir}/{dest_rel}"
-        if dest_rel
-        else generation_dir(table_dir, snapshot_id)
-    )
-    _, parent = hadoop_fs(spark, dest.rsplit("/", 1)[0])
-    fs.mkdirs(parent)  # rename needs the parent to exist
-    _, dest_path = hadoop_fs(spark, dest)
-    if fs.exists(dest_path) or not fs.rename(staging_path, dest_path):
-        fs.delete(staging_path, True)
-        raise SnapshotConflict(
-            f"{dest_rel or f'generation dir s={snapshot_id}'} under "
-            f"{table_dir!r} is held by another writer (or a crash "
-            "orphan — vacuum reclaims it after the staging TTL)"
-        )
-    _refresh_claim_mtime(spark, fs, dest_path)
-    return dest
-
-
-def _unclaim(spark: SparkSession, dest: str | None) -> None:
-    """Drop a dir claimed by _stage_and_claim after losing the
-    manifest race — the data is ours and uncommitted, so deleting it
-    can never orphan a committed entry (the race winner never wrote
-    into a dir we hold)."""
-    if dest is None:
-        return
-    fs, p = hadoop_fs(spark, dest)
-    if fs.exists(p):
-        fs.delete(p, True)
 
 
 def _check_layout_compatible(
@@ -614,7 +646,6 @@ def write_snapshot(
     replace: bool = False,
     partition_by: str | None = None,
     maintenance: bool = False,
-    claim: bool = False,
     stats_columns: list[str] | None = None,
 ) -> int:
     """Full-table publish: write ``df`` as a fresh data generation,
@@ -624,64 +655,78 @@ def write_snapshot(
 
     ``snapshot_id`` defaults to latest+1 (0 for a new table). Pass an
     explicit id + ``replace=True`` only from deterministic replay
-    loops (foreachBatch). ``partition_by`` hive-partitions the
-    generation layout (same contract as append_snapshot's).
-
-    ``claim=True`` routes the write through the staged-rename dir
-    claim (_stage_and_claim) instead of clear_generation — required
-    of any writer that may run CONCURRENTLY with append_with_retry
-    (maintenance/compaction); the default delete-then-write path is
-    for single-writer / deterministic-replay callers, which need a
-    crashed same-id attempt overwritten, not refused.
+    loops (foreachBatch); without ``replace`` a committed or claimed
+    id is refused with SnapshotConflict. ``partition_by``
+    hive-partitions the generation layout (same contract as
+    append_snapshot's).
     """
     spark = df.sparkSession
     if snapshot_id is None:
         ids = snapshot_ids(spark, table_dir)
         snapshot_id = (ids[-1] + 1) if ids else 0
-    fields = _schema_fields(df)
     prev = latest_manifest(spark, table_dir, below=snapshot_id)
-    check_schema_evolution((prev or {}).get("schema"), fields)
 
-    def _write(to: str) -> None:
-        writer = df.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(to)
-
-    if claim:
-        gdir = _stage_and_claim(spark, table_dir, snapshot_id, _write)
-        has = gdir is not None
-    else:
-        gdir = clear_generation(spark, table_dir, snapshot_id)
-        _write(gdir)
-        has = _generation_has_data(spark, gdir)
-    entries = {"": f"{_DATA_DIR}/s={snapshot_id}"} if has else {}
-    try:
+    def build(prev, sid, staged):
         # A full rewrite re-declares the whole table state: the new
         # generation is written in current names with nothing masked.
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(
-                prev,
-                snapshot_id,
-                entries,
-                schema=fields,
-                partition_col=None,
-                layout_by=partition_by,
-                deletes=[],
-                rename_log=[],
-                maintenance=maintenance,
-            ),
-            prev_man=prev,
-            replace=replace,
-            stats_columns=stats_columns,
-        )
-    except SnapshotConflict:
-        if claim:
-            _unclaim(spark, gdir if has else None)
-        raise
-    return snapshot_id
+        entries = {"": f"{_DATA_DIR}/s={sid}"} if staged else {}
+        return entries, {
+            "partition_col": None,
+            "layout_by": partition_by,
+            "deletes": [],
+            "rename_log": [],
+            "maintenance": maintenance,
+        }
+
+    return _publish(
+        spark, table_dir, [(_DATA_DIR, _parquet_writer(df, partition_by))],
+        build, at=(prev, snapshot_id), replace=replace,
+        fields=_schema_fields(df), stats_columns=stats_columns,
+    )
+
+
+def _append(
+    df: DataFrame,
+    table_dir: str,
+    partition_by: str | None,
+    origin: str,
+    **publish,
+) -> int:
+    """The one append: ``df`` becomes a new whole-generation entry
+    beside EVERY predecessor entry. append_snapshot fixes the id and
+    commits once; append_with_retry lets each attempt take the next
+    free id."""
+
+    def build(prev, sid, staged):
+        if prev is not None and partition_cols(prev) is not None:
+            raise ValueError(
+                f"{origin} on a table partitioned on "
+                f"{partition_cols(prev)!r} — appends are whole-"
+                "generation entries; use write_snapshot_partial (or "
+                "stage_snapshot/publish_staged, which reconcile per "
+                "partition) for partitioned tables."
+            )
+        _check_layout_compatible(prev, partition_by, origin)
+        entries = dict(prev["entries"]) if prev else {}
+        # An empty df under partitionBy writes NO part files (dynamic
+        # partition dirs only materialize for existing rows); an entry
+        # pointing at that dir would poison every later read with
+        # UNABLE_TO_INFER_SCHEMA. The manifest commits anyway — the id
+        # advances and replay converges — just without a new entry.
+        if staged:
+            entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
+        # Appends never touch existing rows: delete vectors and the
+        # rename log carry; the layout is the one the check allowed.
+        return entries, {"layout_by": partition_by}
+
+    return _publish(
+        df.sparkSession,
+        table_dir,
+        [(_DATA_DIR, _parquet_writer(df, partition_by))],
+        build,
+        fields=_schema_fields(df),
+        **publish,
+    )
 
 
 def append_snapshot(
@@ -701,9 +746,11 @@ def append_snapshot(
     Same replay contract as write_snapshot_partial: pass the batch id
     as ``snapshot_id`` (+ ``replace=True``) from deterministic replay
     loops — the predecessor is the newest manifest STRICTLY BELOW the
-    id, so recomputing a crashed batch converges. Refuses a
-    hive-partitioned predecessor (mixing per-partition entries with
-    whole-generation appends would double-count touched partitions).
+    id, so recomputing a crashed batch converges; without ``replace``
+    a committed or claimed id is refused with SnapshotConflict.
+    Refuses a hive-partitioned predecessor (mixing per-partition
+    entries with whole-generation appends would double-count touched
+    partitions).
 
     ``partition_by`` lays each generation out hive-partitioned on one
     column WITHOUT changing the manifest contract (the entry still
@@ -718,43 +765,10 @@ def append_snapshot(
         ids = snapshot_ids(spark, table_dir)
         snapshot_id = (ids[-1] + 1) if ids else 0
     prev = latest_manifest(spark, table_dir, below=snapshot_id)
-    if prev is not None and partition_cols(prev) is not None:
-        raise ValueError(
-            "append_snapshot on a table partitioned on "
-            f"{partition_cols(prev)!r} — appends are whole-generation "
-            "entries; use write_snapshot_partial for partitioned tables."
-        )
-    fields = _schema_fields(df)
-    check_schema_evolution((prev or {}).get("schema"), fields)
-    _check_layout_compatible(prev, partition_by, "append_snapshot")
-    entries = dict(prev["entries"]) if prev else {}
-    gdir = clear_generation(spark, table_dir, snapshot_id)
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(gdir)
-    if _generation_has_data(spark, gdir):
-        entries[f"b{snapshot_id}"] = f"{_DATA_DIR}/s={snapshot_id}"
-    else:
-        # An empty df under partitionBy writes NO part files (dynamic
-        # partition dirs only materialize for existing rows); an entry
-        # pointing at that dir would poison every later read with
-        # UNABLE_TO_INFER_SCHEMA. Commit the manifest anyway — the id
-        # advances and replay converges — just without a new entry.
-        clear_generation(spark, table_dir, snapshot_id)
-    # Appends never touch existing rows: delete vectors and the
-    # rename log carry; the layout is the one the check above allowed.
-    commit_manifest(
-        spark,
-        table_dir,
-        successor(
-            prev, snapshot_id, entries, schema=fields,
-            layout_by=partition_by,
-        ),
-        prev_man=prev,
-        replace=replace,
+    return _append(
+        df, table_dir, partition_by, "append_snapshot",
+        at=(prev, snapshot_id), replace=replace,
     )
-    return snapshot_id
 
 
 def append_with_retry(
@@ -764,64 +778,25 @@ def append_with_retry(
     attempts: int = 5,
 ) -> int:
     """Multi-writer append: commit with RETRY-AND-REBASE instead of
-    append_snapshot's first-committer-wins failure (round-7 verdict
-    gap #4 — two independent appenders couldn't both land without
-    caller-side logic).
+    append_snapshot's first-committer-wins failure, so independent
+    appenders all land without caller-side logic.
 
     The data is written ONCE to a private ``_staging/<uuid>`` dir (no
     contention), then each attempt claims the next id by atomically
     RENAMING the staged dir to ``_data/s=<id>`` — rename refuses an
-    existing destination, so two retry-writers can never interleave
-    into one generation dir — and commits a manifest rebased on the
+    existing destination, so two writers can never interleave into
+    one generation dir — and commits a manifest rebased on the
     freshest predecessor. Losing a race at either step (dir claim or
     manifest rename) rebases and retries with the data untouched: a
-    retry costs a directory rename, never a data rewrite.
-
-    Concurrency contract (RUNBOOK): concurrent appenders on one table
-    should ALL use this helper. Plain ``append_snapshot`` writes
-    straight into ``_data/s=<id>`` and stays the single-writer /
-    deterministic-replay path — mixing it with concurrent retry
-    appenders can collide inside a generation dir before any commit.
-    A refused or exhausted append deletes its staged dir before
-    raising; a crashed writer's staged dir is invisible to readers and
-    falls to ``vacuum_snapshots`` (staging is unreferenced by
-    manifests).
+    retry costs a directory rename, never a data rewrite. A refused
+    or exhausted append deletes its staged dir before raising; a
+    crashed writer's staged dir is invisible to readers and falls to
+    ``vacuum_snapshots`` (staging is unreferenced by manifests).
     """
-    spark = df.sparkSession
-    fields = _schema_fields(df)
-    staging = f"{table_dir}/_staging/{uuid.uuid4().hex}"
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(staging)
-
-    def build(prev, sid, has_data):
-        if prev is not None and partition_cols(prev) is not None:
-            raise ValueError(
-                "append_with_retry on a table partitioned on "
-                f"{partition_cols(prev)!r} — appends are whole-"
-                "generation entries; use write_snapshot_partial (or "
-                "stage_snapshot/publish_staged, which reconcile per "
-                "partition) for partitioned tables."
-            )
-        entries = dict(prev["entries"]) if prev else {}
-        _check_layout_compatible(prev, partition_by, "append_with_retry")
-        if has_data:
-            entries[f"b{sid}"] = f"{_DATA_DIR}/s={sid}"
-        return entries, {"layout_by": partition_by}
-
-    try:
-        return _claim_commit_loop(
-            spark, table_dir, staging, fields, attempts, build,
-            "append_with_retry",
-        )
-    except Exception:
-        # No caller holds a token for this batch, so nobody else can
-        # abandon it: a refused or exhausted append removes its own
-        # staged data instead of leaving it to vacuum's staging TTL.
-        fs, sp = hadoop_fs(spark, staging)
-        fs.delete(sp, True)
-        raise
+    return _append(
+        df, table_dir, partition_by, "append_with_retry",
+        attempts=attempts,
+    )
 
 
 def write_snapshot_partial(
@@ -834,8 +809,6 @@ def write_snapshot_partial(
     maintenance: bool = False,
     deletes: list[str] | None = None,
     rename_log: list | None = None,
-    claim: bool = False,
-    cdf: str | None = None,
     stats_columns: list[str] | None = None,
 ) -> None:
     """Partial publish for a partitioned table: ``df`` holds the NEW
@@ -846,14 +819,13 @@ def write_snapshot_partial(
     with no rows simply drops out of the manifest: atomically-visible
     partition deletion, no stale files, no empty-dir sentinel.
 
-    ``partition_col`` may be an ordered LIST of columns (round 11):
-    the table then partitions hive-style on every column — (date,
-    region) fact layouts — with one manifest entry per leaf
-    combination, keyed by the escaped ``c1=v1/c2=v2`` suffix
-    (:func:`partition_entry_key`). ``touched_keys`` elements are then
-    ordered value tuples (or canonical key strings, the form DML
-    hands back from the entry map); single-column tables keep the
-    legacy scalar keys and raw-value entry format unchanged.
+    ``partition_col`` may be an ordered LIST of columns: the table
+    then partitions hive-style on every column — (date, region) fact
+    layouts — with one manifest entry per leaf combination, keyed by
+    the escaped ``c1=v1/c2=v2`` suffix (:func:`partition_entry_key`).
+    ``touched_keys`` elements are then ordered value tuples (or
+    canonical key strings, the form DML hands back from the entry
+    map); single-column tables keep scalar keys and raw-value entries.
 
     ``deletes`` / ``rename_log`` left as None carry the predecessor's
     delete vectors and evolution log (the ``successor`` rule), so a
@@ -867,16 +839,14 @@ def write_snapshot_partial(
 
     The replay contract mirrors foreachBatch: the predecessor is the
     newest manifest STRICTLY BELOW ``snapshot_id``, so recomputing a
-    crashed (or even already-committed) snapshot id from the same
-    inputs converges to the same table.
+    crashed (or, with ``replace=True``, an already-committed) snapshot
+    id from the same inputs converges to the same table.
     """
     spark = df.sparkSession
     pcols = spec_cols(partition_col)
     prev = latest_manifest(spark, table_dir, below=snapshot_id)
-    fields = _schema_fields(df)
-    check_schema_evolution((prev or {}).get("schema"), fields)
-    # Layout-compatibility gate (round-6 advice): carrying forward a
-    # predecessor that is unpartitioned (a "" whole-table entry from
+    # Layout-compatibility gate: carrying forward a predecessor that
+    # is unpartitioned (a "" whole-table entry from
     # write_snapshot/merge_snapshot) or partitioned on DIFFERENT
     # columns would leave the old generation live alongside the new
     # per-partition entries — readers would silently see duplicate /
@@ -898,68 +868,37 @@ def write_snapshot_partial(
     canon_keys = [
         partition_entry_key(spark, pcols, k) for k in touched_keys
     ]
-    entries = dict(prev["entries"]) if prev else {}
-    if claim:
-        gdir = _stage_and_claim(
-            spark,
-            table_dir,
-            snapshot_id,
-            lambda to: df.write.mode("error")
-            .partitionBy(*pcols)
-            .parquet(to),
+    named = {
+        k: v
+        for k, v in (("deletes", deletes), ("rename_log", rename_log))
+        if v is not None
+    }
+
+    def build(prev, sid, staged):
+        entries = dict(prev["entries"]) if prev else {}
+        for key in canon_keys:
+            entries.pop(key, None)
+        # The leaf walk raises on null partition values in df (a
+        # caller bug — the touched_keys contract).
+        entries.update(
+            _leaf_entries(spark, staged.get(_DATA_DIR), pcols, sid)
         )
-    else:
-        gdir = clear_generation(spark, table_dir, snapshot_id)
-        df.write.mode("error").partitionBy(*pcols).parquet(gdir)
-    # Written dir names are hive-ESCAPED (%, /, ':', '=', ... become
-    # %XX); single-column entry keys are the RAW partition values and
-    # multi-column keys the escaped suffix, so the reconcile below
-    # (pop canonical key / insert written key) stays consistent for
-    # values Spark escapes (round-6 advice).
-    try:
-        written: dict[str, str] = (
-            _walk_partition_leaves(spark, gdir, pcols) if gdir else {}
-        )
-    except ValueError:
-        # Null partition values in df (caller bug — the touched_keys
-        # contract): release the claimed dir before raising so the
-        # loud refusal doesn't also orphan a generation claim.
-        if claim:
-            _unclaim(spark, gdir)
-        raise
-    for key in canon_keys:
-        entries.pop(key, None)
-    for key, suffix in written.items():
-        entries[key] = posixpath.join(
-            _DATA_DIR, f"s={snapshot_id}", suffix
-        )
-    try:
-        named = {
-            k: v
-            for k, v in (("deletes", deletes), ("rename_log", rename_log))
-            if v is not None
+        return entries, {
+            "partition_col": partition_col,
+            "maintenance": maintenance,
+            **named,
         }
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(
-                prev,
-                snapshot_id,
-                entries,
-                schema=fields,
-                partition_col=partition_col,
-                maintenance=maintenance,
-                cdf=cdf,
-                **named,
-            ),
-            prev_man=prev,
-            replace=replace,
-            stats_columns=stats_columns,
-        )
-    except SnapshotConflict:
-        if claim:
-            _unclaim(spark, gdir)
-        raise
+
+    _publish(
+        spark,
+        table_dir,
+        [(_DATA_DIR, _parquet_writer(df, pcols))],
+        build,
+        at=(prev, snapshot_id),
+        replace=replace,
+        fields=_schema_fields(df),
+        stats_columns=stats_columns,
+    )
 
 
 def repartition_table(
@@ -968,8 +907,8 @@ def repartition_table(
     partition_by: str | list[str] | None,
 ) -> dict:
     """Partition-SPEC evolution as ONE explicit, atomic maintenance
-    rewrite (round-12 directive #4 — option b, decided over Iceberg's
-    metadata-forward per-generation specs): read the current
+    rewrite (chosen over Iceberg's metadata-forward per-generation
+    specs): read the current
     snapshot, rewrite it hive-partitioned on the NEW column list (or
     unpartitioned for None), and publish with a single manifest
     rename carrying the new ``partition_col``.
@@ -1011,7 +950,6 @@ def repartition_table(
             f"{cur_pcols!r} — nothing to change"
         )
     next_id = man["snapshot_id"] + 1
-    _claim_check(spark, table_dir, next_id)
     prev_stats = man["stats"]
     if prev_stats:
         # Keep an EMPTY filtered list as [] (meaning: record no
@@ -1019,7 +957,7 @@ def repartition_table(
         # defaults", and _auto_commit_stats would fall back to
         # prev_stats['columns'] — re-recording stats for the very
         # partition columns this filter excludes (footerless in the
-        # hive-partitioned data files; round-12 advice).
+        # hive-partitioned data files).
         stats_columns = [
             c
             for c in prev_stats["columns"]
@@ -1051,7 +989,6 @@ def repartition_table(
             "n_entries": 0,
         }
     df = read_snapshot(spark, table_dir, as_of=man["snapshot_id"])
-    fields = _schema_fields(df)
     if new_pcols:
         missing = [c for c in new_pcols if c not in df.columns]
         if missing:
@@ -1059,53 +996,32 @@ def repartition_table(
                 f"repartition_table: partition column(s) {missing} "
                 f"not in the table's columns {df.columns}"
             )
-        gdir = _stage_and_claim(
-            spark,
-            table_dir,
-            next_id,
-            lambda to: df.write.mode("error")
-            .partitionBy(*new_pcols)
-            .parquet(to),
-        )
-        try:
-            written = (
-                _walk_partition_leaves(spark, gdir, new_pcols)
-                if gdir
-                else {}
+    n_entries = []
+
+    def build(prev, sid, staged):
+        if new_pcols:
+            # NULL partition values: the leaf walk refuses loudly.
+            entries = _leaf_entries(
+                spark, staged.get(_DATA_DIR), new_pcols, sid
             )
-        except ValueError:
-            # NULL partition values: loud refusal, claim released.
-            _unclaim(spark, gdir)
-            raise
-        entries = {
-            key: posixpath.join(_DATA_DIR, f"s={next_id}", suffix)
-            for key, suffix in written.items()
-        }
-    else:
-        gdir = _stage_and_claim(
-            spark,
-            table_dir,
-            next_id,
-            lambda to: df.write.mode("error").parquet(to),
-        )
-        entries = (
-            {"": f"{_DATA_DIR}/s={next_id}"} if gdir is not None else {}
-        )
-    try:
-        commit_manifest(
-            spark,
-            table_dir,
-            successor(man, next_id, entries, schema=fields, **respec),
-            prev_man=man,
-            stats_columns=stats_columns,
-        )
-    except SnapshotConflict:
-        _unclaim(spark, gdir if entries else None)
-        raise
+        else:
+            entries = {"": f"{_DATA_DIR}/s={sid}"} if staged else {}
+        n_entries.append(len(entries))
+        return entries, respec
+
+    _publish(
+        spark,
+        table_dir,
+        [(_DATA_DIR, _parquet_writer(df, new_pcols))],
+        build,
+        at=(man, next_id),
+        fields=_schema_fields(df),
+        stats_columns=stats_columns,
+    )
     return {
         "snapshot_id": next_id,
         "partition_col": new_pcols,
-        "n_entries": len(entries),
+        "n_entries": n_entries[-1],
     }
 
 
@@ -1119,12 +1035,13 @@ def vacuum_snapshots(
     """Expire all but the newest ``keep_last`` manifests and delete
     data generations no kept manifest references. ``keep_last >= 2``
     so a replayed batch can still read its predecessor; larger values
-    keep time travel. ``retain_hours`` (round 11, Delta's retention
-    spelling) ADDITIONALLY keeps every version committed inside the
-    trailing window — commit-count and wall-clock retention compose,
-    a version expires only when it fails BOTH. ``_staging`` dirs
-    (append_with_retry) older than ``staging_ttl_hours`` are crash
-    residue and reclaimed; the TTL protects live writers mid-stage."""
+    keep time travel. ``retain_hours`` (Delta's retention spelling)
+    ADDITIONALLY keeps every version committed inside the trailing
+    window — commit-count and wall-clock retention compose, a version
+    expires only when it fails BOTH. ``_staging`` dirs (every writer
+    stages there first) older than ``staging_ttl_hours`` are crash
+    residue and reclaimed; the TTL, and for a still-running write job
+    its ``_temporary`` dir, protect live writers mid-stage."""
     if keep_last < 2:
         raise ValueError("keep_last must be >= 2 (replay reads n-1)")
     ids = snapshot_ids(spark, table_dir)
@@ -1178,8 +1095,8 @@ def vacuum_snapshots(
         **retained_mans,
     }.values():
         _mark_live(man)
-    # Close the pin-vs-vacuum race from THIS side (round-9 verdict
-    # directive #5): re-read the tags AFTER computing the kill list —
+    # Close the pin-vs-vacuum race from THIS side: re-read the tags
+    # AFTER computing the kill list —
     # a pin that landed since the first read pulls its id back into
     # the kept set before anything is deleted. tag_snapshot's own
     # post-pin manifest check covers the opposite interleaving, so
@@ -1201,31 +1118,19 @@ def vacuum_snapshots(
 
     stale_cutoff = (_time.time() - staging_ttl_hours * 3600) * 1000
 
-    def _job_in_flight(dir_path) -> bool:
-        # A DIRECT (claim=False) writer's df.write job keeps a
-        # _temporary subdir inside the generation for the job's whole
-        # duration — which can exceed any TTL. Never reclaim such a
-        # dir regardless of age; the TTL applies only to COMPLETE
-        # dirs (a claimant's renamed data, or a direct write whose
-        # job finished but whose manifest never landed — both crash
-        # residue once stale).
-        _, tmp = hadoop_fs(
-            spark, f"{dir_path.toString()}/_temporary"
-        )
-        return fs.exists(tmp)
-
     def _sweep(sub: str, live: set) -> list[str]:
         """Delete the ``<id>``-suffixed dirs under ``sub`` (data
         generations, delete vectors, CDF sidecars) no kept manifest
         references. In-flight-writer guard: an id ABOVE the newest
-        committed manifest belongs to a writer in its write -> commit
-        window (e.g. a running CDC-mirror batch, a DML claimant);
-        deleting it would make that writer commit a manifest pointing
-        at vanished data. Such dirs are left alone — UNLESS older than
-        the staging TTL: a live claimant's claim->commit window is
-        seconds, so a stale above-newest dir is a crashed claimant
-        whose id would otherwise block every future committer forever
-        (next_id keeps resolving to it)."""
+        committed manifest belongs to a writer in its claim -> commit
+        window (every writer stages first, so nothing is written
+        under ``sub`` until its one-rename claim); deleting it would
+        make that writer commit a manifest pointing at vanished data.
+        Such dirs are left alone — UNLESS older than the staging TTL:
+        a live claimant's claim->commit window is seconds, so a stale
+        above-newest dir is a crashed claimant whose id would
+        otherwise block every future committer forever (next_id keeps
+        resolving to it)."""
         removed = []
         fs_, path = hadoop_fs(spark, f"{table_dir}/{sub}")
         if not fs_.exists(path):
@@ -1238,12 +1143,12 @@ def vacuum_snapshots(
                 dir_id = int(name.split("=", 1)[1])
             except (IndexError, ValueError):
                 dir_id = None
-            if dir_id is not None and dir_id > newest:
-                if (
-                    st.getModificationTime() >= stale_cutoff
-                    or _job_in_flight(st.getPath())
-                ):
-                    continue
+            if (
+                dir_id is not None
+                and dir_id > newest
+                and st.getModificationTime() >= stale_cutoff
+            ):
+                continue
             fs_.delete(st.getPath(), True)
             removed.append(name)
         return removed
@@ -1273,9 +1178,23 @@ def vacuum_snapshots(
     fs, spath = hadoop_fs(spark, sdir)
     if fs.exists(spath):
         for st in fs.listStatus(spath):
-            if st.isDirectory() and st.getModificationTime() < stale_cutoff:
-                fs.delete(st.getPath(), True)
-                removed_staging.append(st.getPath().getName())
+            if not st.isDirectory() or (
+                st.getModificationTime() >= stale_cutoff
+            ):
+                continue
+            # A staged write whose df.write job is still running keeps
+            # Spark's _temporary work area inside for the job's whole
+            # duration — which can exceed any TTL. Never reclaim such
+            # a dir regardless of age; the TTL applies only to
+            # COMPLETE staged dirs (an abandoned audit, a crashed
+            # writer).
+            _, tmp = hadoop_fs(
+                spark, f"{st.getPath().toString()}/_temporary"
+            )
+            if fs.exists(tmp):
+                continue
+            fs.delete(st.getPath(), True)
+            removed_staging.append(st.getPath().getName())
     return {
         "expired_manifests": expired,
         "removed_generations": removed,

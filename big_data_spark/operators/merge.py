@@ -215,8 +215,7 @@ def merge_snapshot(
     publish the result atomically (io/snapshot.py manifest commit):
     readers concurrent with the merge see the old table until the
     one-rename commit, the new one after — never a half-written mix —
-    and a crash mid-write leaves the table untouched (the orphan
-    generation is cleared on the next attempt).
+    and a crash mid-write leaves only ``_staging`` residue for vacuum.
 
     This is the full-rewrite shape (the merged table is one new data
     generation). For change sets that are tiny against a huge keyed
@@ -228,22 +227,15 @@ def merge_snapshot(
     from big_data_spark.io.table_reads import read_snapshot
     from big_data_spark.io.table_writes import write_snapshot
 
-    # Read AS OF the manifest the id derives from (a commit landing
+    # Read AS OF the manifest the id derives from: a commit landing
     # during the merge collides on the id -> SnapshotConflict instead
-    # of its rows silently missing from the merged rewrite), and
-    # publish through the staged-rename dir claim so a concurrent
-    # retry-appender's claimed generation is never overwritten —
-    # the SQL door routes MERGE statements here, so this path must
-    # honor the same multi-writer contract as DML/compaction.
+    # of its rows silently missing from the merged rewrite.
     man = latest_manifest(spark, table_dir)
     as_of = man["snapshot_id"] if man else None
     target = read_snapshot(spark, table_dir, as_of=as_of)
     merged = merge_into(target, source, keys, **merge_kwargs)
     return write_snapshot(
-        merged,
-        table_dir,
-        snapshot_id=(as_of + 1) if man else None,
-        claim=True,
+        merged, table_dir, snapshot_id=(as_of + 1) if man else None
     )
 
 

@@ -345,7 +345,15 @@ def run_pipeline(
     clogs = truncate_lineage(cluster_logs(logs_df, servers_clustered), eager=True)
     encodings = cluster_process_encodings(clogs)
     elements = process_elements(clogs)
-    processes = truncate_lineage(encodings.join(elements, on="process_id"), eager=True)
+    # A process with no Request event has no elements; it keeps an
+    # empty list so it still lands in a part-1 group like any other.
+    processes = truncate_lineage(
+        encodings.join(elements, on="process_id", how="left").withColumn(
+            "cluster_elements",
+            F.coalesce("cluster_elements", F.array().cast("array<string>")),
+        ),
+        eager=True,
+    )
     groups = truncate_lineage(equal_process_groups(processes), eager=True)
     part1_logs = grouped_logs(clogs, groups)
     part1_obs = observations_text(clogs, groups)

@@ -770,8 +770,7 @@ def _execute_insert(
     ]
     if overwrite:
         # INSERT OVERWRITE: the row source becomes the table's FULL
-        # new content as one atomic commit (staged-rename claims,
-        # safe beside concurrent appenders). A PARTITIONED table
+        # new content as one atomic commit. A PARTITIONED table
         # keeps its partitioning — Delta's behavior — by publishing
         # through the partial writer with every prior partition
         # touched: old keys drop, the new content's partitions key
@@ -796,10 +795,9 @@ def _execute_insert(
                 # Fresh full content: nothing old to mask or map.
                 deletes=[],
                 rename_log=[],
-                claim=True,
             )
         else:
-            sid = write_snapshot(row.select(*cols), table_dir, claim=True)
+            sid = write_snapshot(row.select(*cols), table_dir)
     else:
         # Appends keep the table's generation layout (a plain append
         # onto a laid-out table is refused as mixed-layout).
@@ -894,26 +892,25 @@ def _execute_create(
                 )
             # New table: no predecessor entries to reconcile away, so
             # the touched list is empty; the writer derives the entry
-            # map from the written leaves. claim=True: two concurrent
-            # CTAS to one location race on the staged-rename dir
-            # claim, so the loser can never clear the winner's
-            # generation on its way to a doomed commit.
+            # map from the written leaves. Two concurrent CTAS to one
+            # location race on the one-rename dir claim and the
+            # manifest commit: the loser refuses, never touching the
+            # winner's generation.
             write_snapshot_partial(
                 src,
                 location,
                 0,
                 pcols[0] if len(pcols) == 1 else pcols,
                 touched_keys=[],
-                claim=True,
             )
             sid = 0
         else:
-            sid = write_snapshot(src, location, claim=True)
+            sid = write_snapshot(src, location)
     except SnapshotConflict:
         # A CONCURRENT writer committed here first — the location now
         # holds THEIR table, not our residue; deleting it would
-        # destroy a committed table. The claim protocol already
-        # unclaimed our staged data.
+        # destroy a committed table. The publish path already removed
+        # our staged data.
         raise
     except Exception:
         # The target was empty-or-absent by the guard above and no

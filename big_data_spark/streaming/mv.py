@@ -6,9 +6,10 @@ Delta-Live-Tables shape, persisted as a snapshot table (io/).
 Exactly-once by VERSIONING, not hope: additive refresh is not
 idempotent (re-adding a batch double-counts), so the MV's snapshot
 ids ARE the batch ids. Batch N folds into the newest snapshot
-STRICTLY BELOW N and replace-commits snapshot N: a crashed attempt's
-half-written generation is cleared and recomputed on replay, and the
-predecessor it reads from is immutable. Snapshots are cheap because
+STRICTLY BELOW N and replace-commits snapshot N: a crashed attempt
+leaves staging residue (or a claimed generation the replay swaps
+out) and is recomputed on replay, and the predecessor it reads from
+is immutable. Snapshots are cheap because
 an MV is an aggregate — |groups| rows, not |base| — and old ones
 double as time travel (``read_snapshot(mv_dir, as_of=)``) until
 ``vacuum_snapshots(keep_last=)`` reclaims them.

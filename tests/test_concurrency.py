@@ -40,8 +40,8 @@ def test_delete_where_stale_manifest_conflicts(spark, tmp_path, monkeypatch):
     """DELETE computed over a stale manifest collides on the id the
     interloper took (next_id = stale manifest id + 1) instead of
     carrying forward only the stale entries — and the interloper's
-    generation data survives untouched (fail-fast claim check runs
-    BEFORE clear_generation)."""
+    generation data survives untouched (the fail-fast claim check runs
+    before anything is written)."""
     t = str(tmp_path / "race_del")
     man0 = _two_commits(spark, t)
     monkeypatch.setattr(dml, "latest_manifest", lambda *a, **k: man0)
@@ -51,6 +51,47 @@ def test_delete_where_stale_manifest_conflicts(spark, tmp_path, monkeypatch):
     # Both commits intact: nothing lost, nothing deleted.
     assert read_snapshot(spark, t).count() == 200
     assert read_manifest(spark, t, 1)["entries"]
+
+
+def _gen_bytes(t, sid):
+    import glob
+    import os
+
+    out = {}
+    for p in sorted(glob.glob(f"{t}/_data/s={sid}/**", recursive=True)):
+        if os.path.isfile(p):
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, t)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("writer", ["append_snapshot", "write_snapshot"])
+def test_explicit_id_over_committed_snapshot_refuses(
+    spark, tmp_path, writer
+):
+    """An explicit-id write without replace over an already-committed
+    snapshot must refuse BEFORE touching that snapshot's generation:
+    the committed rows and the _data/s=<id> files stay byte-identical
+    (a delete-then-write publish used to overwrite them with the
+    refused batch and then raise)."""
+    t = str(tmp_path / "collide")
+    _two_commits(spark, t)
+    sid = 1 if writer == "append_snapshot" else 0
+    before_rows = sorted(
+        tuple(r) for r in read_snapshot(spark, t, as_of=sid).collect()
+    )
+    before_files = _gen_bytes(t, sid)
+    assert before_files
+    batch = spark.range(500, 503).selectExpr(
+        "id AS k", "cast(id as string) AS v"
+    )
+    with pytest.raises(SnapshotConflict):
+        getattr(snap, writer)(batch, t, snapshot_id=sid)
+    assert sorted(
+        tuple(r) for r in read_snapshot(spark, t, as_of=sid).collect()
+    ) == before_rows
+    assert _gen_bytes(t, sid) == before_files
+    assert read_snapshot(spark, t).where("k >= 500").count() == 0
 
 
 def test_compact_snapshot_stale_manifest_conflicts(
@@ -354,8 +395,10 @@ def test_mor_vector_dir_claim(spark, tmp_path):
 
 def test_dml_loser_leaves_no_orphan_generation(spark, tmp_path, monkeypatch):
     """When the DML claims its dir but loses the MANIFEST race, it
-    must unclaim (delete its own staged generation) so the id isn't
-    wedged for every later committer."""
+    must release the claim (and remove its staged generation) so the
+    id isn't wedged for every later committer."""
+    import glob
+
     from big_data_spark.io.snapshot import hadoop_fs
 
     t = str(tmp_path / "loser")
@@ -364,7 +407,7 @@ def test_dml_loser_leaves_no_orphan_generation(spark, tmp_path, monkeypatch):
         t,
         snapshot_id=0,
     )
-    real_commit = dml.commit_manifest
+    real_commit = table_writes.commit_manifest
     state = {"raced": False}
 
     def race_then_commit(spark_, table_dir, man, **kw):
@@ -382,12 +425,13 @@ def test_dml_loser_leaves_no_orphan_generation(spark, tmp_path, monkeypatch):
             )
         return real_commit(spark_, table_dir, man, **kw)
 
-    monkeypatch.setattr(dml, "commit_manifest", race_then_commit)
+    monkeypatch.setattr(table_writes, "commit_manifest", race_then_commit)
     with pytest.raises(SnapshotConflict):
         snap.delete_where(spark, t, "k < 50")
     monkeypatch.undo()
     fs, p = hadoop_fs(spark, f"{t}/_data/s=1")
     assert not fs.exists(p), "losing DML must unclaim its generation"
+    assert glob.glob(f"{t}/_staging/*") == []
     # A retry now lands cleanly at the next id.
     st = snap.delete_where(spark, t, "k < 50")
     assert st["deleted_rows"] == 50
@@ -446,9 +490,10 @@ def test_merge_snapshot_respects_dir_claim_and_reads_as_of(
 
 
 def test_vacuum_spares_inflight_direct_write(spark, tmp_path):
-    """The stale-claim TTL must never reclaim a generation dir whose
-    df.write job is still running (its _temporary subdir exists) —
-    a direct writer's window is the job duration, not seconds."""
+    """The staging TTL must never reclaim a staged dir whose df.write
+    job is still running (its _temporary subdir exists) — every
+    writer stages first, and a write's window is the job duration,
+    not seconds."""
     import os
 
     from big_data_spark.io.snapshot import vacuum_snapshots
@@ -458,12 +503,12 @@ def test_vacuum_spares_inflight_direct_write(spark, tmp_path):
         append_snapshot(
             spark.range(5).selectExpr("id AS k"), t, snapshot_id=g
         )
-    # Simulate a long direct write in progress: the generation dir
-    # exists with only Spark's _temporary work area inside.
-    os.makedirs(f"{t}/_data/s=2/_temporary/0")
+    # Simulate a long write in progress: the staged dir exists with
+    # only Spark's _temporary work area inside.
+    os.makedirs(f"{t}/_staging/cafe0001/_temporary/0")
     res = vacuum_snapshots(spark, t, keep_last=2, staging_ttl_hours=0.0)
-    assert res["removed_generations"] == []
-    assert os.path.isdir(f"{t}/_data/s=2/_temporary")
+    assert res["removed_staging"] == []
+    assert os.path.isdir(f"{t}/_staging/cafe0001/_temporary")
 
 
 def test_mixed_writers_stress(spark, tmp_path):

@@ -36,6 +36,49 @@ def test_every_process_is_grouped(pipeline_out):
     assert grouped == pids
 
 
+def test_process_without_request_is_grouped(spark, tmp_path):
+    """A process with no Request event (outside the generator's
+    invariants, FIXTURES.md §1) still lands in a part-1 group: every
+    process is grouped and no part-1 row is keyed by a null group."""
+    import json
+
+    from big_data_spark.datagen import generate_logs
+
+    rows = generate_logs(
+        spark, n_trees=6, n_processes=12, max_branch=2, max_depth=3,
+        n_servers=6, seed=11,
+    ).orderBy("time").collect()
+    server = rows[0].state_to
+    events = [
+        (r.state_from, r.state_to, r.time, r.action, r.process_id)
+        for r in rows
+    ] + [(server, "user", rows[-1].time + 10, "Response", "process_norq")]
+    path = tmp_path / "no_request.json"
+    path.write_text(
+        "".join(
+            json.dumps(
+                dict(
+                    zip(
+                        ("state_from", "state_to", "time", "action",
+                         "process_id"),
+                        e,
+                    )
+                )
+            )
+            + ",\n"
+            for e in events
+        )
+    )
+    logs = read_logs_json(spark, str(path))
+    out = run_pipeline(spark, logs)
+    grouped = set()
+    for row in out["groups"].collect():
+        grouped.update(row["equal_processes"])
+    assert grouped == {e[4] for e in events}
+    keys = {r["process_id"] for r in out["part1_grouped_logs"].collect()}
+    assert None not in keys
+
+
 def test_identical_euler_strings_share_group(spark, pipeline_out):
     logs, out = pipeline_out
     from big_data_spark.functions.tree import process_encodings

@@ -152,15 +152,16 @@ def test_repartition_refuses_noop_and_races_loudly(
         repartition_table(spark, t, "d")
     # a commit landing DURING the rewrite: the repartition loses the
     # id race loudly instead of dropping the racer's commit
-    real = table_writes._stage_and_claim
+    real = table_writes._publish
+    raced = []
 
-    def racing(spark_, table_dir, sid, write_fn):
-        write_snapshot(
-            _mk(spark).limit(5), t, snapshot_id=sid, replace=False
-        )
-        return real(spark_, table_dir, sid + 1, write_fn)
+    def racing(*args, **kwargs):
+        if not raced:
+            raced.append(True)  # the racer's own publish goes through
+            write_snapshot(_mk(spark).limit(5), t)
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(table_writes, "_stage_and_claim", racing)
+    monkeypatch.setattr(table_writes, "_publish", racing)
     with pytest.raises(SnapshotConflict):
         repartition_table(spark, t, ["d", "region"])
     monkeypatch.undo()

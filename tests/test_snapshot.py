@@ -44,12 +44,12 @@ def test_crash_between_bucket_writes_is_invisible(spark, tmp_path):
     old = _rows(read_snapshot(spark, t))
     assert old == set(v0)
 
-    # Simulate the crash: the next snapshot's generation dir holds
-    # bucket 0's new data, bucket 1 never got written, no manifest.
-    gdir = generation_dir(t, 1)
+    # Simulate the crash: the writer's staged dir holds bucket 0's new
+    # data, bucket 1 never got written, no claim, no manifest.
+    staged = f"{t}/_staging/0123abcd"
     spark.createDataFrame([(1, "a2", 0)], "k int, v string, _kb int").drop(
         "_kb"
-    ).write.parquet(f"{gdir}/_kb=0")
+    ).write.parquet(f"{staged}/_kb=0")
     assert _rows(read_snapshot(spark, t)) == old, (
         "reader must not see the half-written rewrite"
     )
@@ -68,15 +68,26 @@ def test_orphan_full_generation_is_invisible_and_replay_overwrites(
     t = str(tmp_path / "tbl")
     df = spark.createDataFrame([(i, "x") for i in range(5)], "k int, v string")
     write_snapshot(df, t)
-    # crashed full rewrite: data generation exists, manifest does not
+    # A crash mid-write leaves part files under _staging only: readers
+    # never see them and the next writer publishes past them.
     junk = spark.createDataFrame([(99, "junk")], "k int, v string")
-    junk.write.parquet(generation_dir(t, 1))
+    junk.write.parquet(f"{t}/_staging/deadbeef")
     assert _rows(read_snapshot(spark, t)) == _rows(df)
-    # the retry clears the orphan and publishes cleanly
     good = spark.createDataFrame([(7, "y")], "k int, v string")
-    sid = write_snapshot(good, t)
-    assert sid == 1
+    assert write_snapshot(good, t) == 1
     assert _rows(read_snapshot(spark, t)) == {(7, "y")}
+    # A crash between claim and commit leaves _data/s=<id>: invisible,
+    # and an implicit-id writer refuses it (naming the id and the
+    # remedy) instead of publishing over foreign data.
+    junk.write.parquet(generation_dir(t, 2))
+    assert _rows(read_snapshot(spark, t)) == {(7, "y")}
+    with pytest.raises(SnapshotConflict, match="s=2") as err:
+        write_snapshot(df, t)
+    assert "vacuum_snapshots(..., staging_ttl_hours=0)" in str(err.value)
+    # A deterministic replay owns its id: replace swaps the orphan out.
+    assert write_snapshot(good, t, snapshot_id=2, replace=True) == 2
+    assert _rows(read_snapshot(spark, t)) == {(7, "y")}
+    assert glob.glob(f"{t}/_staging/*") == [f"{t}/_staging/deadbeef"]
 
 
 def test_commit_conflict_first_wins(spark, tmp_path):
@@ -1375,14 +1386,16 @@ def test_zero_column_frame_commits_nothing(spark, tmp_path):
 def test_snapshot_module_keeps_its_public_names():
     """``big_data_spark.io.snapshot`` re-exports every public name it
     defined before the table format was split into modules (plus
-    ``hadoop_fs``, which callers imported through it)."""
+    ``hadoop_fs``, which callers imported through it), except
+    ``clear_generation``: the delete-then-write publish it served is
+    gone, every writer stages and claims."""
     import big_data_spark.io.snapshot as snap
 
     frozen = [
         "FORMAT_VERSION", "SnapshotConflict", "abandon_staged",
         "analyze_table", "append_snapshot", "append_with_retry",
-        "bare_path", "check_schema_evolution", "clear_generation",
-        "commit_manifest", "consolidate_stats", "delete_tag",
+        "bare_path", "check_schema_evolution", "commit_manifest",
+        "consolidate_stats", "delete_tag",
         "delete_where", "entry_partition_values", "evolve_schema",
         "fold_deletes", "follow_changes", "format_version_error",
         "generation_dir", "hadoop_fs", "latest_manifest", "list_tags",
@@ -1396,7 +1409,7 @@ def test_snapshot_module_keeps_its_public_names():
         "tag_snapshot", "update_where", "vacuum_snapshots",
         "write_snapshot", "write_snapshot_partial",
     ]
-    assert len(frozen) == 47
+    assert len(frozen) == 46
     missing = [n for n in frozen if not hasattr(snap, n)]
     assert missing == []
 
