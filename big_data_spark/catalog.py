@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from big_data_spark.io.readers import read_table
 from big_data_spark.schemas import TESTDATA_SCHEMAS
+from big_data_spark.session import driver_frame
 
 # The format stamp ("v") of a persisted catalog binding file; the
 # loader refuses any other value.
@@ -814,11 +815,9 @@ class SnapshotCatalog:
         # A local literal relation. Two builders:
         #
         # - JVM literals (range(1).select(lit...cast)) whenever every
-        #   value is a plain scalar: createDataFrame ships even a
-        #   ONE-ROW answer as a defaultParallelism-sliced pickled RDD
-        #   — 32 near-empty tasks per action locally, thousands on a
-        #   real cluster, measured 0.35-0.45 s vs 0.05-0.10 s per
-        #   noop action at sf0.1. int/float/str cross py4j by exact
+        #   value is a plain scalar: no Python task at all, where the
+        #   one-slice pickled RDD below runs one per action.
+        #   int/float/str cross py4j by exact
         #   repr round-trip (shortest-repr doubles are bit-exact) and
         #   the cast pins the committed output type. NULLABILITY: a
         #   bare literal under-reports nullable aggregates as
@@ -830,12 +829,13 @@ class SnapshotCatalog:
         #   semantics, version-stable. Bounded at 64 rows so a wide
         #   GROUP BY can't blow up the plan with unioned one-row
         #   projects.
-        # - createDataFrame for everything else: it round-trips every
-        #   committed kind faithfully (naive timestamps convert
-        #   through the session zone exactly as the real query's
-        #   collect would; dates/decimals likewise) — fidelities the
-        #   py4j literal path cannot promise (its datetime converter
-        #   uses the OS zone, not the session zone).
+        # - createDataFrame over one slice (session.driver_frame) for
+        #   everything else: it round-trips every committed kind
+        #   faithfully (naive timestamps convert through the session
+        #   zone exactly as the real query's collect would;
+        #   dates/decimals likewise) — fidelities the py4j literal
+        #   path cannot promise (its datetime converter uses the OS
+        #   zone, not the session zone) — in one task per action.
         def _scalar_safe(v) -> bool:
             if v is None or isinstance(v, (bool, str)):
                 return True
@@ -883,7 +883,7 @@ class SnapshotCatalog:
             for p in parts[1:]:
                 out_df = out_df.unionByName(p)
             return out_df.to(struct)
-        return self.spark.createDataFrame(rows, struct)
+        return driver_frame(self.spark, rows, struct)
 
     def _travel_sid(self, name: str, travel) -> int | None | bool:
         """Snapshot id for a parsed time-travel clause against a

@@ -6,7 +6,7 @@ materializes delete vectors."""
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_spark.io.layout import (
@@ -172,9 +172,16 @@ def _delete_mor(spark: SparkSession, table_dir: str, condition) -> dict:
         ],
     )
     # SQL DELETE 3VL: only predicate-TRUE rows are marked deleted.
-    positions = scan.where(F.coalesce(cond, F.lit(False))).select(
-        F.col("_dv_path").alias("file_path"),
-        F.col("_dv_pos").alias("row_index"),
+    # The write itself counts the positions it writes (an Observation
+    # filled by the write job), so no read-back job is needed.
+    written = Observation()
+    positions = (
+        scan.where(F.coalesce(cond, F.lit(False)))
+        .select(
+            F.col("_dv_path").alias("file_path"),
+            F.col("_dv_pos").alias("row_index"),
+        )
+        .observe(written, F.count(F.lit(1)).alias("n"))
     )
     # The vector is claimed as _deletes/d=<id> by one rename — two
     # racing MOR writers at the same next_id would otherwise
@@ -186,11 +193,7 @@ def _delete_mor(spark: SparkSession, table_dir: str, condition) -> dict:
     matched = []
 
     def build(prev, sid, staged):
-        n = (
-            spark.read.parquet(staged[_DELETES_DIR]).count()
-            if _DELETES_DIR in staged
-            else 0
-        )
+        n = written.get["n"]
         if n == 0:
             return None  # nothing matched: no commit
         matched.append(int(n))

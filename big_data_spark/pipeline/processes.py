@@ -40,9 +40,11 @@ from big_data_spark.operators.clustering import (
     similarity_edges,
 )
 from big_data_spark.operators.connections import server_connections
+from big_data_spark.operators.components import dbscan_labels, materialize_edges
 from big_data_spark.operators.dbscan import dbscan_from_edges
 from big_data_spark.operators.editdist import edit_distance
 from big_data_spark.operators.ids import dense_ids
+from big_data_spark.session import driver_frame
 
 
 def cluster_process_encodings(cluster_logs_df: DataFrame) -> DataFrame:
@@ -225,58 +227,27 @@ _LOCAL_DBSCAN_SCHEMA = StructType(
 )
 
 
-def _local_edit_dbscan(pdf: pd.DataFrame, epsilon: float, min_pts: int) -> pd.DataFrame:
-    """Edit-distance DBSCAN inside one LSH cluster (pandas kernel).
+def _local_edit_dbscan(
+    ids: list, strings: list[str], minhash_cluster, epsilon: float, min_pts: int
+) -> list[tuple]:
+    """Edit-distance DBSCAN inside one LSH cluster: all pairs within
+    ``epsilon`` labelled by ``components.dbscan_labels``. Returns
+    ``_LOCAL_DBSCAN_SCHEMA`` rows.
 
     The reference launches a full Spark job chain per LSH cluster from
     a driver loop (Src/processes.py:347-359); each cluster is small by
-    construction, so the right shape is applyInPandas: one task per
-    cluster, all clusters in parallel."""
-    ids = pdf["group_processes_id"].tolist()
-    strings = pdf["cluster_euler_string"].tolist()
+    construction, so one call labels a whole cluster in one place."""
     n = len(ids)
-    adj: list[set[int]] = [set() for _ in range(n)]
-    for i in range(n):
-        for j in range(i + 1, n):
-            if edit_distance(strings[i], strings[j]) < epsilon:
-                adj[i].add(j)
-                adj[j].add(i)
-    core = [len(nbrs) + 1 >= min_pts for nbrs in adj]
-    # Components over core-core edges (union-find).
-    parent = list(range(n))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for i in range(n):
-        if not core[i]:
-            continue
-        for j in adj[i]:
-            if core[j]:
-                ra, rb = find(i), find(j)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    rows = []
-    mh = int(pdf["minhash_cluster"].iloc[0])
-    comp_label = {}
-    for i in range(n):
-        if core[i]:
-            root = find(i)
-            comp_label.setdefault(root, min(ids[k] for k in range(n) if core[k] and find(k) == root))
-    for i in range(n):
-        if core[i]:
-            rows.append((ids[i], mh, comp_label[find(i)], "core"))
-        else:
-            core_nbrs = [j for j in adj[i] if core[j]]
-            if core_nbrs:
-                label = min(comp_label[find(j)] for j in core_nbrs)
-                rows.append((ids[i], mh, label, "border"))
-    return pd.DataFrame(
-        rows, columns=["group_processes_id", "minhash_cluster", "ped_cluster", "is_core"]
-    )
+    pairs = [(ids[i], ids[i]) for i in range(n)] + [
+        (ids[i], ids[j])
+        for i in range(n)
+        for j in range(i + 1, n)
+        if edit_distance(strings[i], strings[j]) < epsilon
+    ]
+    return [
+        (v, minhash_cluster, comp, "core" if core else "border")
+        for v, (comp, core) in dbscan_labels(pairs, min_pts).items()
+    ]
 
 
 def similar_process_groups(
@@ -296,6 +267,15 @@ def similar_process_groups(
     cluster_euler_string, cluster_elements.
     Returns (group_processes_id, minhash_cluster, ped_cluster, is_core).
 
+    The ε-edges and every group's cluster_euler_string are
+    materialized once, as one graph, and its observed size picks the
+    plan. At most ``components.SMALL_GRAPH_ROWS`` rows (edges plus
+    groups): they are collected, the edges labelled by one union-find,
+    and every LSH cluster's edit-distance DBSCAN runs on the driver;
+    the answer is a one-partition DataFrame. Above that: graph DBSCAN
+    in Spark rounds (operators.dbscan), then one ``applyInPandas`` task
+    per LSH cluster.
+
     ``edges`` overrides the ε-neighborhood graph: pass a precomputed
     (id_a, id_b) pair DataFrame — e.g. an exact-Jaccard inverted-index
     join — and the seeded MinHashLSH stage is skipped while everything
@@ -314,16 +294,61 @@ def similar_process_groups(
             num_features=num_features,
             seed=seed,
         )
-    mh_labels = dbscan_from_edges(edges, min_pts=lsh_min_pts).select(
+    # One materialized graph: a row per ε-edge (id_a, id_b) and a row
+    # per group (id_a, cluster_euler_string; id_b null). The group rows
+    # come out of the job that runs the LSH chain, so the strings cost
+    # no second pass over the groups.
+    graph, rows = materialize_edges(
+        edges.select(
+            "id_a", "id_b", F.lit(None).cast("string").alias("cluster_euler_string")
+        ).unionByName(
+            groups_with_elements.select(
+                F.col("group_processes_id").alias("id_a"),
+                F.lit(None).cast("long").alias("id_b"),
+                "cluster_euler_string",
+            )
+        )
+    )
+    if rows is not None:
+        string_of = {r.id_a: r.cluster_euler_string for r in rows if r.id_b is None}
+        members: dict = {}
+        for v, (mh, _) in dbscan_labels(
+            ((r.id_a, r.id_b) for r in rows if r.id_b is not None), lsh_min_pts
+        ).items():
+            # An edge endpoint without a group row shapes the graph
+            # but gets no label of its own.
+            if v in string_of:
+                members.setdefault(mh, []).append(v)
+        out = []
+        for mh, ids in members.items():
+            out += _local_edit_dbscan(
+                ids, [string_of[v] for v in ids], mh, edit_epsilon, edit_min_pts
+            )
+        return driver_frame(graph.sparkSession, out, _LOCAL_DBSCAN_SCHEMA)
+    is_edge = F.col("id_b").isNotNull()
+    mh_labels = dbscan_from_edges(
+        graph.where(is_edge).select("id_a", "id_b"), min_pts=lsh_min_pts
+    ).select(
         F.col("point").alias("group_processes_id"),
         F.col("component").alias("minhash_cluster"),
     )
-    clustered = groups_with_elements.join(
-        mh_labels, on="group_processes_id", how="inner"
-    ).select("group_processes_id", "minhash_cluster", "cluster_euler_string")
+    clustered = (
+        graph.where(~is_edge)
+        .select(F.col("id_a").alias("group_processes_id"), "cluster_euler_string")
+        .join(mh_labels, on="group_processes_id")
+    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _local_edit_dbscan(pdf, epsilon=edit_epsilon, min_pts=edit_min_pts)
+        return pd.DataFrame(
+            _local_edit_dbscan(
+                pdf["group_processes_id"].tolist(),
+                pdf["cluster_euler_string"].tolist(),
+                int(pdf["minhash_cluster"].iloc[0]),
+                edit_epsilon,
+                edit_min_pts,
+            ),
+            columns=_LOCAL_DBSCAN_SCHEMA.fieldNames(),
+        )
 
     return clustered.groupBy("minhash_cluster").applyInPandas(
         kernel, schema=_LOCAL_DBSCAN_SCHEMA

@@ -645,12 +645,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     which rows to drop when duplicates chain (a~b, b~c).
 
     Composition: q_dedup_minhash_lsh's verified pair set feeds
-    operators/components.connected_components (pointer-doubling
-    DataFrame loop); the canonical doc per cluster is the minimum
-    doc_id (deterministic keep-first). Scale: the pair set is the
-    banded-LSH output (never all-pairs) and the component loop is
-    O(log diameter) shuffles over |pairs| edges — near-dup clusters
-    are tiny, so convergence is a handful of rounds.
+    operators/components.connected_components (one driver union-find
+    for a pair list of at most components.SMALL_GRAPH_ROWS rows, the
+    pointer-doubling DataFrame loop above); the canonical doc per
+    cluster is the minimum doc_id (deterministic keep-first). Scale:
+    the pair set is the banded-LSH output (never all-pairs) and the
+    component loop is O(log diameter) shuffles over |pairs| edges —
+    near-dup clusters are tiny, so convergence is a handful of
+    rounds.
 
     Oracle: DuckDB recursive CTE reachability closure over the SAME
     deterministic pair set."""

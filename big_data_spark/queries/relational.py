@@ -1721,9 +1721,11 @@ def q_pipeline_part2_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs the REAL pipeline functions end-to-end: process_elements +
     equal_process_groups (pipeline.processes) feed the REAL
-    similar_process_groups — graph DBSCAN over a similarity ε-graph
-    (operators.dbscan over operators.components), then the REAL
-    applyInPandas edit-distance DBSCAN kernel per cluster. Only the
+    similar_process_groups — graph DBSCAN over a similarity ε-graph,
+    then the REAL edit-distance DBSCAN kernel per LSH cluster (on the
+    driver for a graph of at most components.SMALL_GRAPH_ROWS rows, as
+    here; operators.dbscan rounds and one applyInPandas task per
+    cluster above that). Only the
     ε-graph construction is swapped (the ``edges`` override): seeded
     ML MinHash signatures cannot be replayed in ANSI SQL, so the row
     uses the exact Jaccard neighborhood that MinHashLSH approximates,

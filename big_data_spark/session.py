@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # One partition per core locally; on a real cluster AQE coalesces the
 # initial number down after each shuffle, so a generous initial value
@@ -127,6 +127,19 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def driver_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """``rows`` held on the driver as a ONE-partition DataFrame. The
+    list form of createDataFrame slices even a handful of rows into
+    defaultParallelism near-empty partitions, so every action over it
+    runs that many tasks; one slice runs one task, with the same
+    per-row type conversion (it runs in that task). ``coalesce(1)``
+    adds no task: it tells the planner the frame is one partition, so
+    an aggregate over it (a count, a groupBy) needs no shuffle job."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema
+    ).coalesce(1)
 
 
 def quiet_logs(spark: SparkSession) -> None:

@@ -1,9 +1,13 @@
-"""Shared fixtures: one SparkSession per test run, DuckDB oracle."""
+"""Shared fixtures: one SparkSession per test run, DuckDB oracle; helpers
+that count the Spark jobs of a block and force a graph-labelling path."""
 
 from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import ExitStack, contextmanager
+from unittest import mock
 
 import duckdb
 import pytest
@@ -87,3 +91,57 @@ def pytest_collection_modifyitems(config, items):
             f"{manifest} names functions that no longer exist: {stale} "
             "— update the slow-test list"
         )
+
+
+@contextmanager
+def jobs_run(spark):
+    """Count the Spark jobs (and their tasks) started inside the block:
+    they run under a fresh job group, read back through the status
+    tracker. Yields a dict whose ``jobs`` and ``tasks`` are filled on
+    exit."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    counts: dict = {}
+    sc.setJobGroup(group, "counted block")
+    try:
+        yield counts
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        ids = tracker.getJobIdsForGroup(group)
+        counts["jobs"] = len(ids)
+        counts["tasks"] = sum(
+            tracker.getStageInfo(sid).numTasks
+            for jid in ids
+            for sid in tracker.getJobInfo(jid).stageIds
+            if tracker.getStageInfo(sid) is not None
+        )
+
+
+GRAPH_PATHS = ("driver", "spark")
+
+
+@contextmanager
+def graph_path(path: str):
+    """Run the block with graph labelling forced onto one path:
+    ``driver`` (the one-step union-find, for any graph up to the
+    module's edge bound) or ``spark`` (the bound below every row
+    count, even an empty list's, so the Spark rounds always run).
+    Yields a list that gets one entry per call of the driver labeller,
+    so a test can check which path really ran."""
+    from big_data_spark.operators import components, dbscan
+    from big_data_spark.pipeline import processes
+
+    calls: list = []
+    labeller = components.dbscan_labels
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return labeller(*args, **kwargs)
+
+    bound = components.SMALL_GRAPH_ROWS if path == "driver" else -1
+    with ExitStack() as stack:
+        stack.enter_context(mock.patch.object(components, "SMALL_GRAPH_ROWS", bound))
+        for module in (components, dbscan, processes):
+            stack.enter_context(mock.patch.object(module, "dbscan_labels", spy))
+        yield calls

@@ -5,11 +5,13 @@ row counts per example stay large."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from big_data_spark.session import get_spark
+from tests.conftest import GRAPH_PATHS, graph_path
 
 
 def _spark():
@@ -287,20 +289,22 @@ def _py_components(edges):
     return {v: find(v) for v in parent}
 
 
+@pytest.mark.parametrize("path", GRAPH_PATHS)
 @given(edges=_edges)
 @settings(max_examples=5, deadline=None)
-def test_fuzz_components_match_python_union_find(edges):
-    """The pointer-doubling loop labels every vertex of a random graph
-    with its component's minimum id, including isolated vertices
-    passed as self-loops."""
+def test_fuzz_components_match_python_union_find(path, edges):
+    """Both labelling paths (driver union-find and the pointer-doubling
+    rounds) label every vertex of a random graph with its component's
+    minimum id, including isolated vertices passed as self-loops."""
     from big_data_spark.operators.components import connected_components
 
     spark = _spark()
     graph = edges + [(99, 99)]
     df = spark.createDataFrame(graph, "src long, dst long")
-    got = {
-        r.id: r.component for r in connected_components(df).collect()
-    }
+    with graph_path(path):
+        got = {
+            r.id: r.component for r in connected_components(df).collect()
+        }
     assert got == _py_components(graph)
     assert got[99] == 99
 

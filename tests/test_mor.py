@@ -22,6 +22,7 @@ from big_data_spark.io.snapshot import (
     vacuum_snapshots,
     write_snapshot_partial,
 )
+from tests.conftest import jobs_run
 
 
 def _files(t, pat="_data/s=*/**/*.parquet"):
@@ -196,3 +197,21 @@ def test_mor_on_partitioned_table_and_appends(spark, tmp_path):
     st2 = fold_deletes(spark, t)
     assert st2["rewritten"] == 1
     assert read_snapshot(spark, t).count() == 50
+
+
+def test_mor_delete_without_match_commits_nothing(spark, tmp_path):
+    """A MOR DELETE that matches no row takes its count from the
+    position write itself (no read-back): at most 2 jobs, no commit,
+    and nothing left under _staging/ or _deletes/."""
+    t = str(tmp_path / "mor_none")
+    _build(spark, t)
+    before = latest_manifest(spark, t)
+    # Not prunable by footer min/max: every generation is scanned.
+    with jobs_run(spark) as counted:
+        st = delete_where(spark, t, "k % 1000 = 999", mode="mor")
+    assert st["deleted_rows"] == 0
+    assert st["snapshot_id"] == before["snapshot_id"]
+    assert counted["jobs"] <= 2, counted
+    assert latest_manifest(spark, t) == before
+    assert glob.glob(f"{t}/_staging/*") == []
+    assert glob.glob(f"{t}/_deletes/*") == []

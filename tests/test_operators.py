@@ -5,6 +5,7 @@ driver-side spec implementations."""
 from __future__ import annotations
 
 import os
+from unittest import mock
 
 import pytest
 from hypothesis import given, settings
@@ -16,7 +17,7 @@ from big_data_spark.operators.components import connected_components
 from big_data_spark.operators.connections import server_connections
 from big_data_spark.operators.dbscan import dbscan_from_edges
 from big_data_spark.operators.editdist import edit_distance, pair_edit_distances
-from tests.conftest import REFERENCE_DATA
+from tests.conftest import GRAPH_PATHS, REFERENCE_DATA, graph_path
 
 
 # ----------------------------------------------------------------- #
@@ -52,27 +53,33 @@ def test_server_connections_match_spec(spark):
 # ----------------------------------------------------------------- #
 
 
-def test_connected_components_basic(spark):
+@pytest.mark.parametrize("path", GRAPH_PATHS)
+def test_connected_components_basic(spark, path):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (7, 7)], ["src", "dst"]
     )
-    got = {
-        r["id"]: r["component"] for r in connected_components(edges).collect()
-    }
+    with graph_path(path) as calls:
+        got = {
+            r["id"]: r["component"] for r in connected_components(edges).collect()
+        }
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 7}
+    assert bool(calls) == (path == "driver")
 
 
-def test_connected_components_chain(spark):
+@pytest.mark.parametrize("path", GRAPH_PATHS)
+def test_connected_components_chain(spark, path):
     """A long path graph exercises multi-iteration propagation."""
     n = 40
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["src", "dst"]
     )
-    got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    with graph_path(path):
+        got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {i: 0 for i in range(n + 1)}
 
 
-def test_connected_components_chain_star_and_self_loop(spark):
+@pytest.mark.parametrize("path", GRAPH_PATHS)
+def test_connected_components_chain_star_and_self_loop(spark, path):
     """Labels start at each vertex's neighbourhood minimum: a chain
     listed from its high end, a star whose centre is not its minimum,
     and a vertex that appears only as a self-loop all still end at
@@ -83,12 +90,84 @@ def test_connected_components_chain_star_and_self_loop(spark):
         + [(30, 30)],
         ["src", "dst"],
     )
-    got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    with graph_path(path):
+        got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {
         **{i: 1 for i in range(1, 6)},
         **{i: 15 for i in (15, 20, 21, 22)},
         30: 30,
     }
+
+
+CC_EDGE_CASES = {
+    # An empty edge list keeps the schema, with the input's id type.
+    "empty": ([], "long", {}),
+    # String ids are labelled by their component's minimum string.
+    "strings": (
+        [("kiwi", "fig"), ("fig", "pear"), ("plum", "plum"), ("lime", "date")],
+        "string",
+        {
+            "kiwi": "fig", "fig": "fig", "pear": "fig",
+            "plum": "plum", "lime": "date", "date": "date",
+        },
+    ),
+    # Vertices listed only as self-loops are their own components.
+    "self_loops_only": ([(3, 3), (1, 1), (2, 2)], "long", {1: 1, 2: 2, 3: 3}),
+}
+
+
+@pytest.mark.parametrize("path", GRAPH_PATHS)
+@pytest.mark.parametrize("case", sorted(CC_EDGE_CASES))
+def test_connected_components_edge_cases(spark, case, path):
+    pairs, id_type, want = CC_EDGE_CASES[case]
+    edges = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+    with graph_path(path):
+        cc = connected_components(edges)
+        got = {r["id"]: r["component"] for r in cc.collect()}
+    assert got == want
+    assert [(f.name, f.dataType.simpleString()) for f in cc.schema.fields] == [
+        ("id", id_type.replace("long", "bigint")),
+        ("component", id_type.replace("long", "bigint")),
+    ]
+
+
+@pytest.mark.parametrize("extra_rows,on_driver", [(0, True), (1, False)])
+def test_connected_components_bound_is_inclusive(spark, extra_rows, on_driver):
+    """A symmetrized edge list of exactly the bound's row count is
+    labelled on the driver; one row more runs the Spark rounds."""
+    from big_data_spark.operators import components
+
+    pairs = [(1, 2), (2, 3), (4, 5), (6, 6)]
+    rows = 2 * 3 + 1  # each pair both ways, the self-loop once
+    edges = spark.createDataFrame(pairs, ["src", "dst"])
+    with graph_path("driver") as calls, mock.patch.object(
+        components, "SMALL_GRAPH_ROWS", rows - extra_rows
+    ):
+        got = sorted(map(tuple, connected_components(edges).collect()))
+    assert bool(calls) == on_driver
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)]
+
+
+@pytest.mark.parametrize("mode", ["local", "persist", "reliable", "none"])
+def test_connected_components_every_checkpoint_mode(spark, tmp_path, mode):
+    """The size check rides on the edge list's materialization in every
+    checkpoint mode. ``none`` materializes nothing, so its Observation
+    never fills: the Spark rounds run without waiting on it."""
+    from big_data_spark.lineage import CHECKPOINT_MODE_KEY
+
+    if mode == "reliable":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["src", "dst"])
+    spark.conf.set(CHECKPOINT_MODE_KEY, mode)
+    try:
+        with graph_path("driver") as calls:
+            got = {
+                r["id"]: r["component"] for r in connected_components(edges).collect()
+            }
+    finally:
+        spark.conf.unset(CHECKPOINT_MODE_KEY)
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    assert bool(calls) == (mode != "none")
 
 
 # ----------------------------------------------------------------- #
@@ -150,14 +229,30 @@ DBSCAN_FIXTURE = [
 ]
 
 
+@pytest.mark.parametrize("path", GRAPH_PATHS)
 @pytest.mark.parametrize("min_pts", [2, 3, 4])
-def test_dbscan_matches_spec(spark, min_pts):
+def test_dbscan_matches_spec(spark, min_pts, path):
     edges = spark.createDataFrame(DBSCAN_FIXTURE, ["id_a", "id_b"])
-    got = {
-        r["point"]: (r["component"], r["core_point"])
-        for r in dbscan_from_edges(edges, min_pts=min_pts).collect()
-    }
+    with graph_path(path) as calls:
+        got = {
+            r["point"]: (r["component"], r["core_point"])
+            for r in dbscan_from_edges(edges, min_pts=min_pts).collect()
+        }
     assert got == _spec_dbscan(DBSCAN_FIXTURE, min_pts)
+    assert bool(calls) == (path == "driver")
+
+
+@pytest.mark.parametrize("path", GRAPH_PATHS)
+def test_dbscan_empty_edges_keep_schema(spark, path):
+    edges = spark.createDataFrame([], "id_a string, id_b string")
+    with graph_path(path):
+        out = dbscan_from_edges(edges, min_pts=2)
+        assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("point", "string"),
+        ("component", "string"),
+        ("core_point", "boolean"),
+    ]
 
 
 # ----------------------------------------------------------------- #

@@ -17,7 +17,7 @@ import pytest
 
 from big_data_spark.io.readers import read_logs_json
 from big_data_spark.pipeline.processes import run_pipeline
-from tests.conftest import REFERENCE_DATA
+from tests.conftest import GRAPH_PATHS, REFERENCE_DATA, graph_path, jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -157,3 +157,105 @@ def test_pipeline_deterministic_across_runs(spark):
         for r in b["groups"].collect()
     )
     assert ga == gb
+
+
+@pytest.fixture(scope="module")
+def part2_input(spark):
+    """Part 2's input on ``data_processes_v2.json``: one row per
+    equal-process group with its element set (the join run_pipeline
+    makes), and its MinHash-LSH ε-edges, both materialized. The edges
+    use a looser threshold than the pipeline's 0.5 (15 edges instead
+    of 2), so the graph has multi-hop components and border points."""
+    from big_data_spark.lineage import truncate_lineage
+    from big_data_spark.operators.clustering import similarity_edges
+
+    logs = read_logs_json(
+        spark, os.path.join(REFERENCE_DATA, "data_processes_v2.json")
+    )
+    out = run_pipeline(spark, logs)
+    groups, processes = out["groups"], out["processes"]
+    gwe = truncate_lineage(
+        groups.join(
+            processes.select("process_id", "cluster_elements"),
+            groups.equal_processes[0] == processes.process_id,
+            "left",
+        ).select("group_processes_id", "cluster_euler_string", "cluster_elements"),
+        eager=True,
+    )
+    edges = truncate_lineage(
+        similarity_edges(
+            gwe,
+            id_col="group_processes_id",
+            features_col="cluster_elements",
+            threshold=0.8,
+            num_features=512,
+        ),
+        eager=True,
+    )
+    return gwe, edges
+
+
+def _spec_part2(edges, strings, lsh_min_pts, edit_epsilon, edit_min_pts):
+    """Driver-side spec of part 2: graph DBSCAN over the ε-edges, then
+    edit-distance DBSCAN over all pairs inside each LSH cluster."""
+    from big_data_spark.operators.editdist import edit_distance
+    from tests.test_operators import _spec_dbscan
+
+    clusters = {}
+    for v, (mh, _) in _spec_dbscan(edges, lsh_min_pts).items():
+        clusters.setdefault(mh, []).append(v)
+    rows = []
+    for mh, ids in clusters.items():
+        close = [
+            (a, b)
+            for a in ids
+            for b in ids
+            if a < b and edit_distance(strings[a], strings[b]) < edit_epsilon
+        ]
+        for v, (comp, core) in _spec_dbscan(close, edit_min_pts).items():
+            rows.append((v, mh, comp, "core" if core else "border"))
+    return sorted(rows)
+
+
+@pytest.mark.parametrize("path", GRAPH_PATHS)
+def test_part2_matches_spec(part2_input, path):
+    """Both part-2 paths — the driver path (one union-find plus the
+    edit-distance kernel per LSH cluster, on the driver) and the Spark
+    path (DBSCAN rounds plus one applyInPandas task per LSH cluster) —
+    give the spec's rows. edit_min_pts=3 makes the edit-distance
+    DBSCAN label both core and border points."""
+    from big_data_spark.pipeline.processes import similar_process_groups
+
+    gwe, edges = part2_input
+    with graph_path(path) as calls:
+        got = sorted(
+            map(
+                tuple,
+                similar_process_groups(gwe, edges=edges, edit_min_pts=3).collect(),
+            )
+        )
+    assert bool(calls) == (path == "driver")
+    strings = {
+        r["group_processes_id"]: r["cluster_euler_string"] for r in gwe.collect()
+    }
+    pairs = [(r["id_a"], r["id_b"]) for r in edges.collect()]
+    want = _spec_part2(pairs, strings, 2, 6, 3)
+    assert got == want
+    assert {r[3] for r in want} == {"core", "border"}
+
+
+def test_part2_and_components_job_counts(spark, part2_input):
+    """On the sample, part 2 (MinHash-LSH included) and connected
+    components over its ε-edges each run at most half the Spark jobs
+    the Spark rounds needed (32 and 29): a small graph is labelled in
+    one step on the driver."""
+    from big_data_spark.operators.components import connected_components
+    from big_data_spark.pipeline.processes import similar_process_groups
+
+    gwe, edges = part2_input
+    with jobs_run(spark) as part2:
+        similar_process_groups(gwe).collect()
+    with jobs_run(spark) as cc:
+        connected_components(edges, src="id_a", dst="id_b").collect()
+    assert part2["jobs"] <= 32 // 2, part2
+    assert cc["jobs"] <= 29 // 2, cc
