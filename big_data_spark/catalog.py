@@ -183,21 +183,24 @@ def as_of(
 
 class SnapshotCatalog:
     """Name -> snapshot-table binding with a ONE-CALL SQL door that
-    covers reads AND writes: ``sql()`` routes DELETE/UPDATE/MERGE
-    statements through the copy-on-write DML primitives
-    (big_data_spark/sqldml.py) and refreshes the table's views after
-    the commit, and hands everything else to ``spark.sql`` over the
-    registered views — so a SQL user can round-trip
+    covers reads AND writes. ``sql()`` reads each statement once with
+    Spark's own parser (big_data_spark/sqldml.py) and routes it by the
+    parse tree: DELETE/UPDATE/MERGE/INSERT/ALTER/CTAS/DROP go to the
+    snapshot primitives and refresh the table's views after the
+    commit, a bare aggregate SELECT is answered from metadata when it
+    provably can be, and everything else runs through ``spark.sql``
+    over the registered views with time travel resolved — so a SQL
+    user can round-trip
 
         cat = SnapshotCatalog(spark)
         cat.register("orders_t", "/lake/orders")
         cat.sql("DELETE FROM orders_t WHERE o_orderstatus = 'X'")
         cat.sql("SELECT count(*) FROM orders_t")          # post-DML
-        cat.sql("SELECT count(*) FROM orders_t_v0")       # time travel
+        cat.sql("SELECT count(*) FROM orders_t VERSION AS OF 0")
 
-    with SQL DML reaching the lakehouse. The dispatcher is
-    driver-side statement routing only; all
-    data movement stays in the audited primitives."""
+    with SQL DML reaching the lakehouse. The door is driver-side
+    statement routing only; all data movement stays in the audited
+    primitives."""
 
     def __init__(
         self,
@@ -508,7 +511,7 @@ class SnapshotCatalog:
 
     @staticmethod
     def _partition_filter(man: dict, where) -> dict | None:
-        """parse_metadata_select's WHERE conjuncts (typed literal
+        """metadata_select's WHERE conjuncts (typed literal
         values from Spark's parse tree) as a
         ``read_snapshot(partitions=)`` dict — or None to decline.
         Claims ONLY predicates metadata answers EXACTLY: every
@@ -656,7 +659,7 @@ class SnapshotCatalog:
         where=None,
         group=None,
     ) -> DataFrame | None:
-        """Answer a parse_metadata_select shape from metadata only —
+        """Answer a metadata_select shape from metadata only —
         a local literal relation (one row, or one row per partition
         group under GROUP BY), zero scan jobs (the optimizer rewrite
         Delta/Iceberg do in OptimizeMetadataOnlyQuery, spelled
@@ -885,108 +888,94 @@ class SnapshotCatalog:
             return out_df.to(struct)
         return driver_frame(self.spark, rows, struct)
 
-    def _travel_sid(self, name: str, travel) -> int | None | bool:
-        """Snapshot id for a parsed time-travel clause against a
-        registered table: None = head (no clause), an int = the
-        pinned id, False = unresolvable — the fast path declines and
-        the passthrough (rewrite_time_travel) raises its canonical
-        error for a missing tag / pre-first-commit timestamp. Tag and
-        timestamp resolution go through the SAME manifest-layer
-        functions the passthrough uses, so both paths always pin the
-        same version."""
-        if travel is None:
-            return None
-        kind, val = travel
-        from big_data_spark.io.table_reads import resolve_as_of_ts
-        from big_data_spark.io.tags import list_tags
-        from big_data_spark.sqldml import _parse_ts_ms
+    def _fast_select(self, statement: str, plan) -> DataFrame | None:
+        """The metadata-only answer to a bare COUNT(*)/MIN/MAX/SUM/AVG
+        list (``sqldml.metadata_select``), with time travel via `t
+        VERSION AS OF n` or the `t_vN` view spelling — or None to fall
+        through to the passthrough, which stays authoritative. An
+        exactly-registered name always wins over the `_vN`
+        interpretation (a real table literally named `orders_v2`
+        beside `orders`). The fast path and the passthrough pin
+        versions through the one ``travel_version``."""
+        import re as _re
 
-        try:
-            if kind == "version":
-                return int(val)
-            if kind == "tag":
-                tags = list_tags(self.spark, self.tables[name])
-                return tags[val] if val in tags else False
-            return resolve_as_of_ts(
-                self.spark, self.tables[name], _parse_ts_ms(val)
-            )
-        except Exception:  # noqa: BLE001 — decline, passthrough decides
-            return False
+        from big_data_spark.sqldml import metadata_select, travel_version
+
+        parsed = metadata_select(plan)
+        if parsed is None:
+            return None
+        tbl, items, travel, where, grp = parsed
+        base = as_of = None
+        if tbl in self.tables:
+            try:
+                if travel is not None:
+                    as_of = travel_version(
+                        self.spark, statement, travel, self.tables
+                    )[1]
+                base = tbl
+            except Exception:  # noqa: BLE001 — the passthrough raises
+                pass  # its canonical error (missing tag, too early)
+        elif travel is None:
+            m = _re.match(r"^(\w+?)_v(\d+)$", tbl)
+            if m and m.group(1) in self.tables:
+                base, as_of = m.group(1), int(m.group(2))
+        if base is None:
+            return None
+        return self._metadata_select(
+            base, items, as_of=as_of, where=where, group=grp
+        )
 
     def sql(self, statement: str):
+        """Run one statement through the door: the maintenance
+        statements Spark's grammar rejects, then Spark's parse tree —
+        the metadata-only SELECT, the routed DML/DDL, or plain
+        ``spark.sql`` with time travel resolved."""
         from big_data_spark.sqldml import (
-            parse_metadata_select,
-            rewrite_time_travel,
-            route_statement,
+            parse_plan,
+            route_maintenance,
+            route_plan,
+            travel_text,
         )
 
         self._ensure_aux_fresh(statement)
-        parsed = parse_metadata_select(self.spark, statement)
-        if parsed is not None:
-            # Metadata-only fast path (any bare COUNT(*)/MIN/MAX/
-            # SUM/AVG list, with time travel via `t VERSION AS OF n`
-            # or the `t_vN` view spelling) — None means fall through
-            # to the passthrough below, which stays authoritative. An exactly-registered name
-            # always wins over the `_vN` interpretation (a real
-            # table literally named `orders_v2` beside `orders`).
-            import re as _re
-
-            tbl, items, travel, where, grp = parsed
-            base = as_of = None
-            if tbl in self.tables:
-                as_of = self._travel_sid(tbl, travel)
-                if as_of is not False:
-                    base = tbl
-            elif travel is None:
-                m = _re.match(r"^(\w+?)_v(\d+)$", tbl)
-                if m and m.group(1) in self.tables:
-                    base, as_of = m.group(1), int(m.group(2))
-            if base is not None:
-                fast = self._metadata_select(
-                    base, items, as_of=as_of, where=where, group=grp
+        st = route_maintenance(
+            self.spark, statement, self.tables, self._persisted
+        )
+        if st is None:
+            plan = parse_plan(self.spark, statement)
+            if plan is None:
+                return self.spark.sql(statement)  # Spark's own parse error
+            fast = self._fast_select(statement, plan)
+            if fast is not None:
+                return fast
+            st = route_plan(
+                self.spark, statement, plan, self.tables, self.base_dir
+            )
+            if st is None:
+                return self.spark.sql(
+                    travel_text(self.spark, statement, plan, self.tables)
                 )
-                if fast is not None:
-                    return fast
-
-        st = route_statement(
-            self.spark,
-            statement,
-            self.tables,
-            base_dir=self.base_dir,
-            persisted=self._persisted,
-        )
         if isinstance(st, DataFrame):
-            return st  # DESCRIBE HISTORY — a read, nothing to refresh
-        if st is not None:
-            if st.get("statement_type") == "DROP TABLE":
-                self._drop_views(st["table"])
-                self._view_sid.pop(st["table"], None)
-                self._stale_aux.discard(st["table"])
-                if self.base_dir is not None and (
-                    st["table"] in self._persisted
-                ):
-                    self._persisted.discard(st["table"])
-                    self._remove_binding(st["table"])
-            else:
-                if (
-                    st.get("statement_type") == "CREATE TABLE"
-                    and self.base_dir is not None
-                ):
-                    # CTAS persists: the binding survives the session.
-                    self._persisted.add(st["table"])
-                    self._save_binding(st["table"])
-                # CREATE TABLE registered the name into self.tables
-                # inside the dispatcher and needs its FIRST full view
-                # set (the aux views must exist to be deferrable);
-                # post-DML refreshes take the O(1)-in-table-age path.
-                if st.get("statement_type") == "CREATE TABLE":
-                    self.refresh(st["table"])
-                else:
-                    self._refresh_after_dml(st["table"])
-            return st
-        # SELECT-side time travel: 't VERSION AS OF n|tag' and
-        # 't TIMESTAMP AS OF ts' rewrite to just-registered version
-        # views before Spark parses the statement.
-        return self.spark.sql(
-            rewrite_time_travel(self.spark, statement, self.tables)
-        )
+            return st  # DESCRIBE / SHOW — a read, nothing to refresh
+        if st.get("statement_type") == "DROP TABLE":
+            self._drop_views(st["table"])
+            self._view_sid.pop(st["table"], None)
+            self._stale_aux.discard(st["table"])
+            if self.base_dir is not None and (
+                st["table"] in self._persisted
+            ):
+                self._persisted.discard(st["table"])
+                self._remove_binding(st["table"])
+        elif st.get("statement_type") == "CREATE TABLE":
+            if self.base_dir is not None:
+                # CTAS persists: the binding survives the session.
+                self._persisted.add(st["table"])
+                self._save_binding(st["table"])
+            # CREATE TABLE registered the name into self.tables inside
+            # the router and needs its FIRST full view set (the
+            # aux views must exist to be deferrable); post-DML
+            # refreshes take the O(1)-in-table-age path.
+            self.refresh(st["table"])
+        else:
+            self._refresh_after_dml(st["table"])
+        return st

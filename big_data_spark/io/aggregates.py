@@ -164,8 +164,8 @@ def consolidate_stats(
 ) -> dict:
     """Maintenance: fold the live generations' LOOSE stats sidecar
     FILES (plus the tail shard) into size-capped consolidated shards
-    and commit a metadata-only manifest referencing them (round-13
-    directive #6; sharded + incremental per round-14 directive #1).
+    and commit a metadata-only manifest referencing them (sharded
+    and incremental).
     An append-heavy table accumulates one sidecar per commit; past
     the process cache cap (``_SIDECAR_CACHE_MAX``) every metadata
     aggregate re-pays a bulk distributed scan of them ALL — after
@@ -416,15 +416,6 @@ def metadata_aggregate(
             "them"
         )
     # Every live data file must be covered by stats AND row counts.
-    if any(
-        not rel.startswith(f"{_DATA_DIR}/")
-        for rel in entries.values()
-    ):
-        raise ValueError(
-            "metadata_aggregate: table has entries outside the "
-            "standard generation layout — stats cannot prove "
-            "coverage; use a real query"
-        )
     covered_gens = _stats_covered(stats)
     live_gen_set = _live_gens(entries)
     if not live_gen_set <= covered_gens:
@@ -629,7 +620,7 @@ def metadata_group_aggregate(
     as_of: int | None = None,
     _man: dict | None = None,
 ) -> dict:
-    """Partition-wise GROUP BY rollup from metadata only (round 14):
+    """Partition-wise GROUP BY rollup from metadata only:
     one ``metadata_aggregate`` result PER DISTINCT live combination
     of ``group_cols`` values — ``SELECT date, COUNT(*), MAX(v) FROM t
     GROUP BY date`` without touching a data file (the Iceberg
@@ -676,7 +667,7 @@ def metadata_group_aggregate(
         # Each group's fold sees ONLY its own already-bucketed
         # entries (threaded through the manifest-reuse door), so the
         # per-group cost never includes re-filtering the full entry
-        # map (review r14).
+        # map.
         agg = metadata_aggregate(
             spark,
             table_dir,

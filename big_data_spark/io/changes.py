@@ -71,7 +71,7 @@ def read_changes(
     still be within ``vacuum_snapshots``' kept window — expired
     ranges raise on read like any other time travel.
 
-    ``predicate`` (round 11; same shape as ``read_snapshot`` — {col:
+    ``predicate`` (same shape as ``read_snapshot`` — {col:
     (lo, hi)} ranges or {col: [v1, ...]} IN-lists, typed bounds)
     restricts the feed to matching CHANGE ROWS, exactly
     ``read_changes(...).filter(...)`` — the range-shard consumer's
@@ -144,7 +144,7 @@ def read_changes(
         ).drop("_dv_path", "_dv_pos", "file_path", "row_index")
         return _pad_to_schema(out, side["schema"])
 
-    # Simple-append RUN state (round-15 directive #3): a maximal run
+    # Simple-append RUN state: a maximal run
     # of consecutive pure-append commits under ONE committed schema
     # collapses into a single multi-generation scan instead of one
     # read_entries plan per commit — the `_changes` view over an
@@ -281,11 +281,7 @@ def read_changes(
                 } and "s" not in pcols
                 if ok:
                     for rel in added.values():
-                        g = _gen_id_of(rel)
-                        if g is None:
-                            ok = False
-                            break
-                        gen_sid[g] = sid
+                        gen_sid[_gen_id_of(rel)] = sid
                 ddl = (
                     _gen_read_ddl(man["schema"], None, None, pcols)
                     if ok

@@ -208,15 +208,13 @@ def read_snapshot_point(
     # partition columns survive the file-list read.
     by_gen: dict[str, list[str]] = {}
     for rel in covered.values():
-        parts_ = rel.split("/")
-        gen = "/".join(parts_[:2]) if parts_[0] == "_data" else rel
-        by_gen.setdefault(gen, []).append(rel)
+        by_gen.setdefault("/".join(rel.split("/")[:2]), []).append(rel)
     dv = man["deletes"]
     for gen, rels in sorted(by_gen.items()):
         # Index-recorded URIs are URI-ENCODED (input_file_name), rels
         # are raw disk names: match the once-unquoted form first, raw
-        # as fallback (round-10 provenance-encoding finding; a miss
-        # here would silently DROP covered files from a point read).
+        # as fallback (a miss here would silently DROP covered
+        # files from a point read).
         # Per-pair fallback is safe here — rels of one generation
         # share a scan, and `_data/s=<id>` prefixes never encode.
         from urllib.parse import unquote

@@ -325,26 +325,24 @@ def bare_path(uri: str) -> str:
     return re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/", uri)
 
 
-def _gen_id_of(path: str) -> int | None:
+def _gen_id_of(path: str) -> int:
     """Snapshot id a generation was committed at, parsed from the
     ``_data/s=<id>`` segment of a path — accepts both manifest-
     relative entry paths and full file URIs (the ONE parser of this
-    layout, shared with io/stats.py's footer-sweep kernel). None for
-    paths outside the generation layout (legacy entries; treated as
-    predating every evolution event)."""
+    layout, shared with io/stats.py's footer-sweep kernel). Every
+    manifest entry lies in the layout (``read_manifest`` refuses any
+    other), so a path outside it raises."""
     m = re.search(rf"(?:^|/){_DATA_DIR}/s=(\d+)(?:/|$)", path)
-    return int(m.group(1)) if m else None
+    if m is None:
+        raise ValueError(f"{path!r} is outside the {_DATA_DIR}/s=<id> layout")
+    return int(m.group(1))
 
 
 def _live_gens(entries: dict[str, str]) -> set[str]:
     """Live ``s=<id>`` generation names referenced by manifest
     entries — ONE derivation for commit stats, ANALYZE coverage,
     metadata aggregates and DESCRIBE DETAIL."""
-    return {
-        rel.split("/")[1]
-        for rel in entries.values()
-        if rel.startswith(f"{_DATA_DIR}/")
-    }
+    return {rel.split("/")[1] for rel in entries.values()}
 
 
 def generation_dir(table_dir: str, snapshot_id: int) -> str:

@@ -44,11 +44,13 @@ reachable only through a manifest, so that one check covers them too.
 from __future__ import annotations
 
 import json
+import re
 from typing import TypedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_spark.io.layout import (
+    _DATA_DIR,
     _MANIFEST_DIR,
     _os_path,
     _read_json,
@@ -173,6 +175,14 @@ def _checked_manifest(table_dir: str, man: dict) -> Manifest:
             f"{table_dir!r} manifest {man.get('snapshot_id')!r} has no "
             "committed schema — rebuild it from source"
         )
+    for rel in man["entries"].values():
+        # Every v1 writer points each entry into its own generation.
+        if not re.match(rf"{_DATA_DIR}/s=\d+(/|$)", rel):
+            raise ValueError(
+                f"{table_dir!r} manifest {man.get('snapshot_id')!r} entry "
+                f"{rel!r} lies outside the {_DATA_DIR}/s=<id> layout "
+                "— rebuild it from source"
+            )
     return man
 
 

@@ -426,7 +426,7 @@ def _footer_rows(
     (unprunable, never a false drop) — the snapshot DML / predicate
     path, where pre-evolution files legitimately miss later-added
     columns."""
-    gen_id = _file_gen_id(uri)
+    gen_id = _file_gen_id(uri) if rename_log else None
     phys = {c: _physical_name(c, rename_log, gen_id) for c in cols}
     rows = footer_file_stats(pf, cols, phys)
     if not missing_ok:
@@ -686,20 +686,30 @@ _CMP_OPS = {
 }
 
 
+def seq_items(seq) -> list:
+    """A Scala ``Seq`` handed back by the JVM as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 def _children(expr) -> list:
-    kids = expr.children()
-    return [kids.apply(i) for i in range(kids.size())]
+    return seq_items(expr.children())
 
 
-def _column_name(expr) -> str | None:
-    """The name of a single-part column reference, else None."""
+def name_parts(expr) -> list[str] | None:
+    """The name parts of an unresolved column reference (``t.k`` ->
+    ``["t", "k"]``), else None."""
     if expr.nodeName() != "UnresolvedAttribute":
         return None
-    parts = expr.nameParts()
-    return parts.head() if parts.size() == 1 else None
+    return seq_items(expr.nameParts())
 
 
-def _literal_value(expr):
+def column_name(expr) -> str | None:
+    """The name of a single-part column reference, else None."""
+    parts = name_parts(expr)
+    return parts[0] if parts is not None and len(parts) == 1 else None
+
+
+def literal_value(expr):
     """A Catalyst ``Literal`` as a Python value by its data type, or
     None for anything else (a NULL literal is type ``void``).
     Timestamps come back naive in the session time zone, the way
@@ -741,22 +751,32 @@ def _conjunct(expr) -> tuple[str, str, list] | None:
     else:
         return None
     kids = _children(expr)
-    col = _column_name(kids[0])
+    col = column_name(kids[0])
     if col is None or (op == "between" and len(kids) != 3):
         return None
-    vals = [_literal_value(k) for k in kids[1:]]
+    vals = [literal_value(k) for k in kids[1:]]
     if not vals or any(v is None for v in vals):
         return None
     return col, op, vals
 
 
-def sql_conjuncts(
-    spark: SparkSession, text: str
-) -> list[tuple[str, str, list] | None]:
-    """The top-level conjuncts of the SQL condition ``text``, read from
-    Spark's own parse tree, so every literal means exactly what it
-    means in the filter Spark runs (escapes, suffixes, typed
-    literals). Parsing runs no job.
+def and_terms(expr) -> list:
+    """The top-level conjuncts of a parsed condition, left to right."""
+    out, stack = [], [expr]
+    while stack:
+        expr = stack.pop()
+        if expr.nodeName() == "And":
+            stack.extend(reversed(_children(expr)))
+        else:
+            out.append(expr)
+    return out
+
+
+def expr_conjuncts(expr) -> list[tuple[str, str, list] | None]:
+    """The top-level conjuncts of a condition already parsed by Spark
+    (an unresolved Catalyst expression), so every literal means
+    exactly what it means in the filter Spark runs (escapes, suffixes,
+    typed literals).
 
     Each conjunct is ``(column, op, values)`` when it compares one
     single-part column with literals: op ``=``, ``<``, ``<=``, ``>``
@@ -765,26 +785,33 @@ def sql_conjuncts(
     (decimal, double, float), ``str``, ``datetime.date`` or a naive
     ``datetime.datetime``. Any other conjunct (OR, NOT, subqueries,
     function calls, qualified names, NULL or other literal types) is
-    None. Text Spark cannot parse reads as one unrecognised conjunct.
-    """
+    None."""
+    return [_conjunct(t) for t in and_terms(expr)]
+
+
+def parse_expression(spark: SparkSession, text: str):
+    """Spark's parse tree of the SQL expression ``text`` (an
+    unresolved JVM Expression), or None when Spark cannot parse it.
+    Parsing runs no job."""
     from pyspark.errors import ParseException
 
     try:
-        root = (
+        return (
             spark._jsparkSession.sessionState()
             .sqlParser()
             .parseExpression(text)
         )
     except ParseException:
-        return [None]
-    out, stack = [], [root]
-    while stack:
-        expr = stack.pop()
-        if expr.nodeName() == "And":
-            stack.extend(reversed(_children(expr)))
-        else:
-            out.append(_conjunct(expr))
-    return out
+        return None
+
+
+def sql_conjuncts(
+    spark: SparkSession, text: str
+) -> list[tuple[str, str, list] | None]:
+    """``expr_conjuncts`` of the SQL condition ``text``. Text Spark
+    cannot parse reads as one unrecognised conjunct."""
+    root = parse_expression(spark, text)
+    return [None] if root is None else expr_conjuncts(root)
 
 
 def keep_file(

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_spark.io.layout import (
-    _DATA_DIR,
     _GEN_DIR_RE,
     _TAGS_DIR,
     _bare_expr,
@@ -212,9 +211,8 @@ def _normalize_scan(
     collision-free against the then-current schema at its commit, so
     sequential replay in commit order can never collide. Types then
     cast to the committed schema (evolve_schema admits only lossless
-    widenings, so the cast cannot truncate). ``gen_id=None`` (a
-    non-generation entry path) replays the full log — such entries
-    can only predate evolution."""
+    widenings, so the cast cannot truncate). Callers without an
+    event log pass no ``gen_id``."""
     for ev in rename_log or []:
         cid, kind, old, new = ev[0], ev[1], ev[2], ev[3]
         if gen_id is not None and cid <= gen_id:
@@ -543,9 +541,7 @@ def read_entries(
     want_meta = bool(deletes) or with_positions
     by_gen: dict[str, list[str]] = {}
     for rel in entries.values():
-        parts = rel.split("/")
-        gen = "/".join(parts[:2]) if parts[0] == _DATA_DIR else rel
-        by_gen.setdefault(gen, []).append(rel)
+        by_gen.setdefault("/".join(rel.split("/")[:2]), []).append(rel)
     kept_by_dir: dict[str, list[str]] | None = None
     if predicate:
         all_paths = sorted(
@@ -588,10 +584,8 @@ def read_entries(
         path_of: dict[str, str] = {}
         for p in all_paths:
             rel = p[len(table_dir) + 1 :]
-            gen = rel.split("/")[1] if rel.startswith(
-                f"{_DATA_DIR}/"
-            ) else None
-            if gen is None or gen not in covered_gens:
+            gen = rel.split("/")[1]
+            if gen not in covered_gens:
                 swept_paths.append(p)
                 continue
             rels_by_gen.setdefault(gen, set()).add(rel)

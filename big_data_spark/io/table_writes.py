@@ -1074,9 +1074,7 @@ def vacuum_snapshots(
     live_sidecars = set()
     def _mark_live(man: dict) -> None:
         for rel in man["entries"].values():
-            parts = rel.split("/")
-            if parts[0] == _DATA_DIR:
-                live_gens.add(parts[1])
+            live_gens.add(rel.split("/")[1])
         for rel in man["deletes"]:
             live_deletes.add(rel.split("/")[1])
         if man["cdf"]:

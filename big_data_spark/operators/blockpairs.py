@@ -1,5 +1,5 @@
 """Memory-BOUNDED block-local pair generation for embedding dedup —
-the chunked replacement for the round-7 `weak`: a groupBy(cell)
+the chunked replacement for a groupBy(cell)
 .applyInPandas all-pairs kernel materializes an ENTIRE cell in one
 task (AQE cannot split an applyInPandas group), so a cell that
 outgrows executor memory kills the task no matter how the rest of
@@ -110,9 +110,8 @@ def chunked_pair_candidates(
     ``total_rows``: a caller-known row count (many callers have one
     from an eager lineage truncation). When it is <= ``budget``,
     every block trivially fits one chunk, so the per-block count job
-    and its broadcast join are SKIPPED entirely (round-8 verdict:
-    that fixed overhead was paid even when every block was under
-    budget) — identical output, one less job. Above budget the
+    and its broadcast join are SKIPPED entirely (that fixed overhead
+    was paid even when every block was under budget) — identical output, one less job. Above budget the
     counted path runs unchanged."""
     if budget < 2:
         raise ValueError(f"budget must be >= 2, got {budget}")

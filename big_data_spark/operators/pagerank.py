@@ -17,7 +17,7 @@ computation done Spark-right:
   SAME aggregate — and is SKIPPED outright when the build-time
   vertex aggregate proves no vertex lacks in-edges (any symmetrized
   graph): then the union is a data no-op that would still cost a
-  vertex-table scan stage per iteration (round 14).
+  vertex-table scan stage per iteration.
   The ranks side of the contribution join is hinted
   broadcast ONLY when the driver-known vertex count is under
   ``broadcast_vertices`` — the count is already on the driver, so
@@ -111,7 +111,7 @@ def pagerank(
         ),
         # Lazy on purpose: the counts aggregate right below is the
         # materializing job (it reads every vertex anyway), so the
-        # build phase pays two actions, not three (round-14 fusion).
+        # build phase pays two actions, not three.
     )
     counts = verts.agg(
         F.count(F.lit(1)).alias("n"),
@@ -127,8 +127,8 @@ def pagerank(
     # union keeps it alive. When NO vertex lacks in-edges (e.g. any
     # symmetrized graph), the union is provably a data no-op, yet it
     # costs a scan stage of the vertex table EVERY iteration — skip
-    # it (round 14: interleaved A/B at sf0.1, medians 3.98 vs 4.16 s
-    # over 6 pairs, rows bit-identical).
+    # it (interleaved A/B at sf0.1, medians 3.98 vs 4.16 s over 6
+    # pairs, rows bit-identical).
     has_no_in = (counts["n_no_in"] or 0) > 0
     vertices = verts.select("v")
     zero = vertices.select("v", F.lit(0.0).alias("c"))

@@ -70,7 +70,7 @@ def shortest_paths(
     spark = edges.sparkSession
     # Settled pairs so far; starts at dist 0 (each landmark to itself).
     # One slice: the list form would parallelize the handful of seed
-    # rows into defaultParallelism near-empty partitions (round 14).
+    # rows into defaultParallelism near-empty partitions.
     settled = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(int(x), int(x), 0) for x in landmarks], 1

@@ -101,7 +101,7 @@ def running_total(
     # defaultParallelism slices, so the broadcast build below would
     # collect a 32-task job (thousands of tasks on a real cluster)
     # for one row per partition — bounded driver metadata that fits
-    # one task by construction (round 14; same conversion machinery,
+    # one task by construction (same conversion machinery,
     # it just runs in the single task instead of eagerly).
     off = spark.createDataFrame(
         spark.sparkContext.parallelize(offsets, 1),

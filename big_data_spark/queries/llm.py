@@ -353,8 +353,8 @@ def ngram_jaccard_pairs(
     shingle and AQE skew-join covers the remaining imbalance."""
     # Join on an 8-byte xxhash64 of each shingle, not the string:
     # same pairs and counts absent a 2^-64 collision, ~4x less shuffle
-    # payload on the posting-list self-join. Round 14 moves the hash
-    # INSIDE the gram transform — xxhash64 over the 3-token slice
+    # payload on the posting-list self-join. The hash sits INSIDE
+    # the gram transform — xxhash64 over the 3-token slice
     # directly — so the per-gram join string (array_join) is never
     # materialized at all and the distinct/explode run over longs
     # instead of ~20-char strings. Token tuples and their joined
@@ -479,17 +479,17 @@ def minhash_band_rows(docs_sh: DataFrame) -> DataFrame:
 
     The band key is ``xxhash64(h_r0, h_r1)`` — an 8-byte long — not
     the md5 hex string (32 chars ≈ 40+ B per row) it used to be
-    (guide §2.3, round 15): the bucket exists only to group equal
+    (guide §2.3): the bucket exists only to group equal
     signature pairs, it is never an output, so the narrower key
     shrinks the persisted band index, the checkpoint and every band
     equi-join's build/exchange payload ~4x. Two docs collide iff
     their signature pairs collide under xxhash64 (~2^-64 per pair,
     vs md5's 2^-128) — and a colliding candidate still has to pass
-    the exact-Jaccard verify, the same argument as the round-14
-    xxhash64 n-gram shingle fold. The SQL oracles keep md5 buckets;
+    the exact-Jaccard verify, the same argument as the xxhash64
+    n-gram shingle fold. The SQL oracles keep md5 buckets;
     pair/cluster outputs are checked equal by the oracle gate."""
     # Both projections are ONE selectExpr string each (the simhash
-    # construction lesson, applied in round 14): the 6 signature folds
+    # construction lesson): the 6 signature folds
     # plus 3 band structs built Column-by-Column cost ~0.3 s of py4j
     # per construction; a JVM-side parse is milliseconds. Each fold
     # spells exactly what the Column form built — min(md5(seed|s)) —
@@ -716,7 +716,7 @@ def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side probe of the stored band index; cluster merges append
     re-rooting events instead of rewriting members (the full story in
     streaming/neardup_ingest.py; per-batch flatness measured in
-    PERF.md round 7)."""
+    PERF.md)."""
     import hashlib
     import os
     import shutil
@@ -953,11 +953,11 @@ NEARDUP_MARGIN = 1e-4
 
 
 # Block-local all-pairs candidate generation lives in
-# operators/blockpairs.py (chunked_pair_candidates): the round-8
-# chunked form whose applyInPandas group size is bounded BY
-# CONSTRUCTION (~2 x BLOCK_ROW_BUDGET rows per task) regardless of
-# block population — the round-7 verdict's one `weak` was the
-# unchunked kernel materializing an entire cell in one task.
+# operators/blockpairs.py (chunked_pair_candidates): the chunked
+# form whose applyInPandas group size is bounded BY CONSTRUCTION
+# (~2 x BLOCK_ROW_BUDGET rows per task) regardless of block
+# population — an unchunked kernel materializes an entire cell in
+# one task.
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,7 +1065,7 @@ def q_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = _hyperplanes()
 
     # The whole banded projection is built as ONE selectExpr string
-    # (the simhash/ivf_dists_expr lesson, applied here in round 14):
+    # (the simhash/ivf_dists_expr lesson):
     # 8 hyperplanes x 64 literal components plus per-bit CASEs is
     # ~600 expression nodes, and building it Column-by-Column cost
     # ~0.7 s of py4j driver time PER query construction (profiled at
@@ -2332,7 +2332,7 @@ HYBRID_TOPK = 10
 
 
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval (round 10): fuse the lexical (BM25) and the
+    """Hybrid retrieval: fuse the lexical (BM25) and the
     semantic (frozen-IVF ANN) hit lists with reciprocal-rank fusion —
     ``score = Σ 1/(RRF_K + rank)`` — the standard RAG-retrieval
     composition (Cormack et al.'s RRF beats either list alone and

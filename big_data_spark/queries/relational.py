@@ -1924,7 +1924,7 @@ ORDER BY group_processes_id
 
 
 # --------------------------------------------------------------------
-# Lakehouse maintenance: MERGE INTO / CDC apply (round 5)
+# Lakehouse maintenance: MERGE INTO / CDC apply
 # --------------------------------------------------------------------
 
 
@@ -2255,14 +2255,14 @@ def q_pagerank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_iter=PAGERANK_ITERS,
         tol=0.0,
         check_every=PAGERANK_ITERS + 1,
-        # 8 frozen iterations, lineage cut every 1: with the round-14
-        # LAZY checkpoints each cut is free (the next broadcast build
+        # 8 frozen iterations, lineage cut every 1: with LAZY
+        # checkpoints each cut is free (the next broadcast build
         # is the materializing job — no extra action), and every
         # UN-truncated iteration is re-executed by every later
         # broadcast build in its window — a 2-wide window re-runs ~12
         # iteration shuffles for the 8 real ones, a 4-wide ~20, and
         # width 1 exactly the 8 real ones, the minimum. Interleaved
-        # same-window A/B at sf0.1 (round 14, 8 paired reps): every-1
+        # same-window A/B at sf0.1 (8 paired reps): every-1
         # beat every-2 in 6/8 pairs, paired mean -0.34 s (medians
         # 5.37 vs 5.63 s under load; earlier quiet pass: every-2
         # ~4.0-4.3 s, every-4 ~4.2-4.5 s, every-8 ~12.5 s — the
@@ -2445,8 +2445,8 @@ def q_sql_portable_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # One ANSI-shaped string over the SnapshotCatalog SQL door: VERSION
-# AS OF / TIMESTAMP AS OF fragments (round 10 — rewritten to version
-# views through the manifest layer before Spark parses), plus the
+# AS OF / TIMESTAMP AS OF relations (read from Spark's parse tree and
+# rewritten to version views through the manifest layer), plus the
 # unsuffixed current view. Revenue aggregates in exact DECIMAL and
 # casts once at the end, so both engines emit bit-identical doubles.
 SNAPSHOT_ASOF_SQL = """
@@ -2475,8 +2475,8 @@ def q_sql_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders — a full atomic rewrite), register it through
     SnapshotCatalog, and answer ONE SQL string that reads the v0
     state TWICE — ``VERSION AS OF 0`` and ``TIMESTAMP AS OF
-    '<v0's commit ts>'`` (round-10: both travel spellings resolve
-    through the manifest layer) — plus the current view. The oracle
+    '<v0's commit ts>'`` (both travel spellings resolve through
+    the manifest layer) — plus the current view. The oracle
     re-derives each version's content from the raw ``orders`` table,
     so a wrong manifest or timestamp resolution (stale generation,
     mixed versions, lost rewrite, non-monotone commit ts)
@@ -2601,7 +2601,7 @@ ORDER BY commit_id, change_type
 
 def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level pruned read over a MULTI-COLUMN partitioned snapshot
-    table (round-11 directive #1): build an orders table partitioned
+    table: build an orders table partitioned
     on (o_orderstatus, o_orderpriority) — manifest entries keyed per
     leaf combination — partial-replace exactly ONE leaf ('O',
     '1-URGENT') with surcharged prices (untouched leaves carry by
@@ -2683,7 +2683,7 @@ ORDER BY o_orderpriority
 
 
 def q_typed_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed data skipping end-to-end (round 11): publish events as a
+    """Typed data skipping end-to-end: publish events as a
     snapshot table CLUSTERED ON ts (range partition + sort, so file
     min/max are narrow on event time), then answer a per-type rollup
     of one January week through a predicate of a TIMESTAMP range (ISO
@@ -2771,8 +2771,8 @@ METADATA_AGG_SQL = (
 
 
 def q_metadata_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only aggregates through the SQL door (round-13
-    directive #2): publish an orders snapshot with stats on five
+    """Metadata-only aggregates through the SQL door: publish an
+    orders snapshot with stats on five
     columns spanning every stat kind (bigint, string, double,
     timestamp), then answer one SELECT holding COUNT(*), MIN/MAX over
     each kind, an exact integer SUM and an AVG — entirely from the
@@ -2896,8 +2896,7 @@ def _orders_by_status_fixture(
 
 
 def q_metadata_partition_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-predicate metadata aggregates (round-14 directive
-    #2): publish orders PARTITIONED on o_orderstatus (manifest
+    """Partition-predicate metadata aggregates: publish orders PARTITIONED on o_orderstatus (manifest
     entries keyed per status), then answer ``SELECT COUNT(*),
     MIN/MAX, SUM ... WHERE o_orderstatus = 'O'`` and an
     ``IN ('F', 'P')`` variant entirely from the MATCHING partitions'
@@ -2975,8 +2974,8 @@ SELECT * FROM agg ORDER BY probe
 
 
 def q_metadata_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-wise GROUP BY rollup from metadata only (round 14):
-    publish orders PARTITIONED on o_orderstatus, then answer
+    """Partition-wise GROUP BY rollup from metadata only: publish
+    orders PARTITIONED on o_orderstatus, then answer
     ``SELECT o_orderstatus, COUNT(*), MIN/MAX/SUM(o_orderkey) ...
     GROUP BY o_orderstatus`` — one row per live partition — entirely
     from the manifest entries + stats sidecars, zero data-file reads
@@ -3146,7 +3145,7 @@ ORDER BY state, o_orderstatus
 
 def q_snapshot_update_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level change feed for an UPDATE (io/snapshot.py
-    update_where(row_cdf=True), round-10): build a four-generation
+    update_where(row_cdf=True)): build a four-generation
     orders table, UPDATE the pending orders of one modulo slice with
     a pre/post-image sidecar, and return the feed's
     update_preimage/update_postimage rows — the oracle re-derives the
@@ -3213,10 +3212,9 @@ ORDER BY _change_type, o_orderkey
 def q_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL DML door end-to-end (sqldml.py + SnapshotCatalog.sql):
     build a four-generation orders table, then drive DELETE, UPDATE
-    and INSERT through STATEMENT STRINGS — the regex dispatcher, the
-    expression routing, and the snapshot primitives behind them are
-    all on the oracle's hook (round-8 verdict: the door had
-    behavioral tests but no oracle-paired registry row). The oracle
+    and INSERT through STATEMENT STRINGS — the statement reader over
+    Spark's parse tree, the expression routing, and the snapshot
+    primitives behind them are all on the oracle's hook. The oracle
     re-derives the final state from raw ``orders`` with the same
     three edits expressed relationally.
 
@@ -3286,7 +3284,7 @@ ORDER BY status
 
 
 def q_snapshot_tag_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot tags + timestamp time travel (round 9): build a
+    """Snapshot tags + timestamp time travel: build a
     three-generation orders table, TAG version 1, append more, then
     read the table back through BOTH selectors — the pinned tag and
     as_of_ts at version 1's commit timestamp — alongside the current
@@ -3366,8 +3364,7 @@ def q_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one aggregate over the union of all three. The oracle
     re-derives from raw ``orders`` in the final names/types: a broken
     rename replay surfaces as a NULL status group, a broken widen as
-    a dtype mismatch (round-8 verdict directive #1: the evolution
-    path needed an oracle-paired registry row).
+    a dtype mismatch.
 
     Scale: evolution is O(manifest) metadata; the read adds one
     column-rename projection per pre-evolution generation."""

@@ -88,7 +88,7 @@ def get_spark(
         # which carries NO footer min/max statistics — every
         # timestamp-range scan reads every file. TIMESTAMP_MICROS is
         # the modern spec encoding (Iceberg/Delta require it) and is
-        # what makes typed data skipping (round 11) work on event-time
+        # what makes typed data skipping work on event-time
         # predicates — the single most common pruning column at scale.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Self-joins after LSH and iterative connected components build
@@ -151,8 +151,8 @@ def quiet_logs(spark: SparkSession) -> None:
     unregistration; it is pure noise in tool output (every REAL
     failure surfaces through the tool's own rc / per-query error
     capture). Shared here so bench.py, plan_audit.py and the test
-    session all benefit (round-6 verdict: the bench-local fix left
-    plan_audit's output with the same stack)."""
+    session all benefit (a bench-local fix left plan_audit's
+    output with the same stack)."""
     spark.sparkContext.setLogLevel("ERROR")
     try:
         jvm = spark._jvm

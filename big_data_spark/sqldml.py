@@ -1,117 +1,76 @@
-"""SQL DML over snapshot tables: ``delete_where`` / ``update_where`` /
-``merge_snapshot`` as SQL statements, so a SQL user can write as
-well as SELECT with time travel (catalog.register_snapshot_views).
-Plain ``spark.sql`` cannot parse DELETE/UPDATE/MERGE for a
-non-catalog format (Spark routes DML through a catalog's table
-capabilities, which raw-parquet manifests don't implement), so this
-module is a THIN statement dispatcher: recognize the DML statement
-shape, hand the WHERE/SET/WHEN text to Spark's OWN expression parser
-(``F.expr`` — no home-grown expression grammar), and route to the
-snapshot-layer primitives. Everything after the dispatch is the
-already-tested engine: copy-on-write rewrites, manifest commits,
-change feed, time travel.
+"""The SQL door's statement reader: DML, DDL and maintenance
+statements over snapshot tables (catalog.SnapshotCatalog.sql).
 
-Supported statements (one per call; case-insensitive keywords):
+Plain ``spark.sql`` cannot run DELETE/UPDATE/MERGE for a non-catalog
+format (Spark routes DML through a catalog's table capabilities, which
+raw-parquet manifests don't implement). So each statement is parsed
+ONCE by Spark's own parser (``sessionState().sqlParser().parsePlan``)
+and routed by the type of the tree's root; names, conditions, SET
+values and row sources are read from that tree — no home-grown
+statement or expression grammar — and handed to the already-tested
+snapshot primitives (copy-on-write rewrites, manifest commits, change
+feed, time travel).
+
+Read from Spark's parse tree (``<table>`` is a bare name):
 
 - ``DELETE FROM <table> WHERE <predicate>``
 - ``UPDATE <table> SET col = expr[, ...] WHERE <predicate>``
-- ``MERGE INTO <table> [AS] [t] USING <view> [AS] [s]
-     ON t.k = s.k [AND t.k2 = s.k2 ...]
+- ``MERGE INTO <table> [[AS] t] USING <view> [[AS] s]
+     ON t.k = s.k [AND ...]
      [WHEN MATCHED [AND <pred>] THEN DELETE]
      [WHEN MATCHED [AND <pred>] THEN UPDATE SET * | col = expr[, ...]]
-     [WHEN NOT MATCHED [AND <pred>] THEN INSERT *]``
-- ``INSERT INTO <table> [(col, ...)] VALUES (...)[, ...]`` and
-  ``INSERT INTO <table> [(col, ...)] SELECT ...`` — the row source
-  (VALUES / SELECT) is parsed by Spark's OWN parser, mapped
-  positionally onto the column list (or the full committed schema),
-  cast to the committed types, unlisted columns typed-NULL-padded,
-  and appended through the multi-writer retry path.
-  ``INSERT OVERWRITE [TABLE] <table> ...`` publishes the row source
-  as the table's full new content (one atomic commit).
-- ``ALTER TABLE <table> RENAME COLUMN <old> TO <new>`` /
-  ``DROP COLUMN <col>`` / ``ALTER COLUMN <col> TYPE <type>`` — the
-  SQL spelling of ``evolve_schema`` (metadata-only commit).
-- ``OPTIMIZE <table> [ZORDER BY (c1, c2, ...)]`` — maintenance pass,
-  or the atomic z-order rewrite with the column list.
-- ``SHOW PARTITIONS <table>`` — one row per live partition leaf
-  (typed values + n_files/total_bytes) from the manifest entry keys;
-  refuses unpartitioned tables like Spark does.
-- ``ANALYZE TABLE <table> [COMPUTE STATISTICS [FOR COLUMNS c1, ...]]``
-  — backfill/upgrade the manifest's per-file column stats as a
-  maintenance commit (``analyze_table``); fully-covered tables no-op.
-- SELECT-side time travel (``rewrite_time_travel``, wired into
-  SnapshotCatalog.sql): ``<table> VERSION AS OF <n>``, ``<table>
-  VERSION AS OF '<tag>'`` and ``<table> TIMESTAMP AS OF
-  '<iso-ts>'|<epoch_ms>`` fragments rewrite to version views
-  resolved through the manifest layer.
+     [WHEN NOT MATCHED [AND <pred>] THEN INSERT *]`` — unaliased
+  sides are named ``t`` and ``s``.
+- ``INSERT INTO|OVERWRITE [TABLE] <table> [(col, ...)] <query>`` —
+  the row source maps positionally onto the column list (or the
+  committed schema), cast to the committed types, unlisted columns
+  typed-NULL-padded; OVERWRITE publishes it as the full new content.
+- ``ALTER TABLE <table> RENAME COLUMN a TO b | DROP COLUMN c | ALTER
+  COLUMN c TYPE t`` — ``evolve_schema`` (metadata-only commit).
+- ``CREATE TABLE <t> [PARTITIONED BY (c1, ...)] [LOCATION '<dir>'] AS
+  <query>``, ``DROP TABLE [IF EXISTS] <t>``, ``SHOW PARTITIONS
+  <table>`` and ``ANALYZE TABLE <table> COMPUTE STATISTICS [FOR
+  COLUMNS c1, ...]``.
+- Time travel anywhere in a statement, subqueries and CTEs included:
+  ``<table> VERSION AS OF <n>|'<tag>'`` and ``<table> TIMESTAMP AS OF
+  '<iso-ts>'|<epoch_ms>`` become version views resolved through the
+  manifest layer (``travel_text``). The catalog's scan-free aggregate
+  SELECT is read from the same tree (``metadata_select``).
 
-``<table>`` resolves through the caller's name -> table_dir mapping
-(SnapshotCatalog keeps it); MERGE's ``<view>`` is any registered
-Spark temp view / table. Anything outside this subset raises with
-the exact unsupported fragment — a silent partial parse of a DML
-statement is how tables get corrupted.
+Matched by regex before the parse, because Spark's grammar rejects
+them: ``OPTIMIZE <table> [PARTITION (col = literal, ...)] [ZORDER BY
+(c1, ...)]``, ``VACUUM <table> [RETAIN n SNAPSHOTS|HOURS]``,
+``RESTORE TABLE <table> TO VERSION AS OF <n>``, ``SHOW SNAPSHOT
+TABLES``, ``ALTER TABLE <table> REPARTITION BY (c1, ...) | NONE`` and
+a bare ``ANALYZE TABLE <table>``. ``DESCRIBE HISTORY|DETAIL <table>``
+too: Spark reads them as DESCRIBE of a column ``t`` in a table named
+HISTORY / DETAIL.
 
-Scale: the dispatcher itself is O(statement text) on the driver;
-every data-touching decision (which generations rewrite, pruning,
-broadcast) is made by the routed primitive.
+DELETE/UPDATE/MERGE are always claimed, and anything outside the
+subset raises a ValueError naming the unsupported fragment — a silent
+partial apply is how tables get corrupted. The other statements are
+claimed for registered snapshot tables only; everything else passes
+through to ``spark.sql``. Reading a statement is one driver-side parse
+(~2 ms for a MERGE); every data-touching decision is the routed
+primitive's.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_spark.io.stats import sql_conjuncts
-
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
+from big_data_spark.io.stats import (
+    and_terms,
+    column_name,
+    expr_conjuncts,
+    literal_value,
+    name_parts,
+    parse_expression,
+    seq_items,
 )
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(\w+)(?:\s+AS)?\s*(\w+)?\s+"
-    r"USING\s+(\w+)(?:\s+AS)?\s*(\w+)?\s+"
-    r"ON\s+(.+?)\s*(WHEN\s+.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_RE = re.compile(
-    r"WHEN\s+(NOT\s+MATCHED|MATCHED)"
-    r"(?:\s+AND\s+(.+?))?\s+THEN\s+"
-    r"(DELETE|INSERT\s+\*|UPDATE\s+SET\s+.+?)"
-    r"\s*(?=WHEN\s+(?:NOT\s+)?MATCHED|$)",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+(INTO|OVERWRITE(?:\s+TABLE)?)\s+(\w+)\s*"
-    r"(?:\(([^)]*)\)\s*)?"
-    r"((?:VALUES|SELECT|WITH|TABLE)\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ALTER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+(?:"
-    r"RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)"
-    r"|DROP\s+COLUMN\s+(\w+)"
-    # The type token admits parameterized types — decimal(18,2),
-    # decimal(18, 2) — so they reach evolve_schema's loud
-    # 'not a lossless widening' validation instead of silently
-    # falling through to plain spark.sql.
-    r"|ALTER\s+COLUMN\s+(\w+)\s+TYPE\s+(\w+(?:\s*\([^)]*\))?)"
-    r")\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-def is_dml(statement: str) -> bool:
-    head = statement.lstrip()[:12].upper()
-    return head.startswith(("DELETE", "UPDATE", "MERGE", "INSERT", "ALTER"))
-
 
 _HISTORY_RE = re.compile(
     r"^\s*DESCRIBE\s+HISTORY\s+(\w+)\s*;?\s*$", re.IGNORECASE
@@ -119,25 +78,10 @@ _HISTORY_RE = re.compile(
 _DETAIL_RE = re.compile(
     r"^\s*DESCRIBE\s+DETAIL\s+(\w+)\s*;?\s*$", re.IGNORECASE
 )
-_SHOW_PARTS_RE = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+(\w+)\s*;?\s*$", re.IGNORECASE
-)
-_ANALYZE_RE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+(\w+)"
-    r"(?:\s+COMPUTE\s+STATISTICS(?:\s+FOR\s+COLUMNS\s+([\w\s,`]+?))?)?"
-    r"\s*;?\s*$",
-    re.IGNORECASE,
-)
-_CREATE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(\w+)\s*"
-    r"(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?"
-    r"(?:LOCATION\s+'([^']+)'\s*)?"
-    r"AS\s+(.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$",
-    re.IGNORECASE,
+# Spark's ANALYZE grammar requires COMPUTE STATISTICS; the bare form
+# is the door's own spelling of it.
+_ANALYZE_BARE_RE = re.compile(
+    r"^\s*ANALYZE\s+TABLE\s+(\w+)\s*;?\s*$", re.IGNORECASE
 )
 _OPTIMIZE_RE = re.compile(
     # The PARTITION group is QUOTE-AWARE: a ')' or ',' inside a
@@ -167,117 +111,6 @@ _RESTORE_RE = re.compile(
 _SHOW_TABLES_RE = re.compile(
     r"^\s*SHOW\s+SNAPSHOT\s+TABLES\s*;?\s*$", re.IGNORECASE
 )
-# The metadata-answerable SELECT shape — a comma list where EVERY
-# item is COUNT(*) / MIN(col) / MAX(col) / SUM(col) / AVG(col) (or a
-# bare GROUP BY column) with an optional alias, over ONE registered
-# table, with optional time travel, WHERE and GROUP BY clauses — the
-# planning query `SELECT MIN(d), MAX(d) FROM t`, not a general
-# optimizer. Parsed by
-# parse_metadata_select, consumed by SnapshotCatalog.sql, NOT
-# route_statement — the fast path must only answer when the catalog's
-# pinned head view and the latest manifest agree (the catalog tracks
-# that; a bare dispatcher cannot), or a stale registration would
-# return rows a simultaneous SELECT * does not.
-_META_SELECT_RE = re.compile(
-    r"^\s*SELECT\s+(.+?)\s+FROM\s+(\w+)"
-    r"(?:\s+(VERSION|TIMESTAMP)\s+AS\s+OF\s+('[^']*'|\d+))?"
-    r"(?:\s+WHERE\s+(.+?))?"
-    r"(?:\s+GROUP\s+BY\s+([\w\s,`]+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_META_ITEM_RE = re.compile(
-    r"^(?:COUNT\s*\(\s*\*\s*\)|(MIN|MAX|SUM|AVG)\s*\(\s*(\w+)\s*\)"
-    r"|`?(\w+)`?)"
-    r"(?:\s+AS\s+(\w+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-def parse_metadata_select(
-    spark: SparkSession,
-    statement: str,
-) -> (
-    tuple[
-        str,
-        list[tuple[str, str | None, str]],
-        tuple[str, str] | None,
-        list[tuple[str, list]] | None,
-        list[str] | None,
-    ]
-    | None
-):
-    """``(table, [(func, col|None, out_name), ...], travel|None,
-    where|None, group|None)`` when the whole statement is a bare
-    aggregate list the metadata layer COULD answer, else None.
-    ``func`` is lowercased (count/min/max/sum/avg) or ``"col"`` for
-    a bare column reference (legal ONLY under GROUP BY — the caller
-    checks it names a group column); ``out_name`` is the alias or
-    Spark's default output name for the bare call (``count(1)`` /
-    ``min(col)`` / the column's own name), so a metadata answer and
-    the passthrough query are column-for-column indistinguishable.
-    ``travel`` carries a trailing time-travel clause as
-    ``("version", "3")``, ``("tag", "gold")`` or
-    ``("ts", "2026-08-15 13:00:00")`` — resolution (tag lookup,
-    timestamp→id) is the caller's job against the live table, exactly
-    like claiming. ``where`` is a conjunct list
-    ``[(col, [value, ...]), ...]`` from ``col = literal`` /
-    ``col IN (...)`` clauses, read from Spark's own parse tree
-    (io/stats.sql_conjuncts) with typed literal values — whether each
-    col is a PARTITION column (the only kind metadata can answer) is
-    the caller's job too; any conjunct outside the shape unclaims the
-    whole statement (fall through to the real query, never a guess).
-    ``group`` is the GROUP BY column list — the partition-wise rollup
-    shape."""
-    m = _META_SELECT_RE.match(statement)
-    if not m:
-        return None
-    items: list[tuple[str, str | None, str]] = []
-    for raw in m.group(1).split(","):
-        im = _META_ITEM_RE.match(raw.strip())
-        if not im:
-            return None
-        if im.group(3) is not None:
-            func, col = "col", im.group(3)
-            out = im.group(4) or col
-        else:
-            func = (im.group(1) or "count").lower()
-            col = im.group(2)
-            out = im.group(4) or (
-                "count(1)" if func == "count" else f"{func}({col})"
-            )
-        items.append((func, col, out))
-    kind, val = m.group(3), m.group(4)
-    if kind is None:
-        travel = None
-    elif kind.upper() == "VERSION":
-        travel = (
-            ("tag", val[1:-1]) if val.startswith("'")
-            else ("version", val)
-        )
-    else:
-        travel = ("ts", val[1:-1] if val.startswith("'") else val)
-    group = None
-    if m.group(6) is not None:
-        # An EMPTY comma segment ("GROUP BY p," / "GROUP BY ,p") is
-        # a syntax error the passthrough would raise on — unclaim
-        # rather than silently answering invalid SQL.
-        group = [
-            c.strip().strip("`") for c in m.group(6).split(",")
-        ]
-        if not group or any(
-            not re.match(r"^\w+$", c) for c in group
-        ):
-            return None
-    if group is None and any(f == "col" for f, _, _ in items):
-        return None  # a bare column without GROUP BY is not ours
-    where = None
-    if m.group(5) is not None:
-        where = []
-        for conj in sql_conjuncts(spark, m.group(5)):
-            if conj is None or conj[1] not in ("=", "in"):
-                return None  # conjunct outside the claimable shape
-            where.append((conj[0], conj[2]))
-    return m.group(2), items, travel, where, group
-
-
 _REPARTITION_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(\w+)\s+REPARTITION\s+BY\s+"
     r"(?:\(\s*([\w\s,`]+?)\s*\)|NONE)\s*;?\s*$",
@@ -285,81 +118,38 @@ _REPARTITION_RE = re.compile(
 )
 
 
-def route_statement(
+def _col_list(text: str | None) -> list[str] | None:
+    """A regex-captured ``c1, `c2`, ...`` list as names, or None."""
+    if not text:
+        return None
+    return [c.strip().strip("`") for c in text.split(",") if c.strip()]
+
+
+def route_maintenance(
     spark: SparkSession,
     statement: str,
     tables: dict[str, str],
-    base_dir: str | None = None,
     persisted: set | None = None,
 ):
-    """The catalog's dispatch: ``execute_dml``'s result when the
-    statement is snapshot-table DML this module handles, a DataFrame
-    for DESCRIBE HISTORY, a stats dict for the maintenance
-    statements (OPTIMIZE / VACUUM [RETAIN n SNAPSHOTS | n HOURS] /
-    RESTORE TABLE ... TO VERSION AS OF n) and for the table-lifecycle
-    statements (CREATE TABLE [PARTITIONED BY (...)] [LOCATION '...']
-    AS SELECT and DROP TABLE [IF EXISTS]), else None —
-    meaning PASS THROUGH to plain ``spark.sql``. DELETE/UPDATE/MERGE
-    are always claimed (plain spark.sql cannot run them for this
-    format, so strict errors beat silent misroutes); INSERT INTO /
-    INSERT OVERWRITE and ALTER on REGISTERED snapshot tables are
-    claimed; shapes outside the subset — qualified names, ALTER VIEW,
-    targets not registered as snapshot tables — pass through to
-    spark.sql and must keep working there. ``base_dir`` roots a CTAS
-    without LOCATION
-    (``<base_dir>/<name>``); CREATE mutates ``tables`` in place and
-    DROP removes the entry, so a caller-owned dict stays the one
-    source of truth."""
-    head = statement.lstrip()[:12].upper()
-    if head.startswith("CREATE"):
-        m = _CREATE_RE.match(statement)
-        # Claim CTAS only when the statement names a LOCATION or the
-        # catalog was built with base_dir= (the snapshot-format
-        # opt-in) — a plain 'CREATE TABLE t AS SELECT' against the
-        # Spark catalog works through spark.sql and must keep working.
-        if m and (m.group(3) or base_dir is not None):
-            return _execute_create(spark, m, tables, base_dir)
-        return None  # CREATE VIEW / Spark-catalog CTAS — spark.sql's
-    if head.startswith("DROP"):
-        m = _DROP_RE.match(statement)
-        # Claim only REGISTERED snapshot tables; DROP of a spark temp
-        # view (and IF EXISTS probes of unknown names) keeps passing
-        # through to plain spark.sql. The regex (not a literal-space
-        # head probe) decides, so 'DROP\nTABLE t' routes too.
-        if m and m.group(2) in tables:
-            return _execute_drop(spark, m, tables)
-        return None
-    if head.startswith(("DELETE", "UPDATE", "MERGE")):
-        return execute_dml(spark, statement, tables)
-    if head.startswith(("INSERT", "ALTER")):
-        m = _INSERT_RE.match(statement)
-        if m and m.group(2) in tables:
-            return execute_dml(spark, statement, tables)
-        m = _REPARTITION_RE.match(statement)
-        if m and m.group(1) in tables:
-            # ALTER TABLE t REPARTITION BY (c1, c2) | NONE — the SQL
-            # spelling of the one-call partition-spec rewrite;
-            # checked BEFORE the generic ALTER claim so
-            # the clause never reaches _execute_alter's rename/drop/
-            # type parser.
-            from big_data_spark.io.table_writes import repartition_table
-
-            cols = m.group(2)
-            spec = (
-                [c.strip().strip("`") for c in cols.split(",") if c.strip()]
-                if cols
-                else None
-            )
-            st = repartition_table(spark, tables[m.group(1)], spec)
-            return {
-                "statement_type": "REPARTITION",
-                "table": m.group(1),
-                **st,
-            }
-        m = _ALTER_RE.match(statement)
-        if m and m.group(1) in tables:
-            return execute_dml(spark, statement, tables)
-        return None
+    """The statements Spark's grammar rejects or misreads, matched by
+    regex: a DataFrame for DESCRIBE HISTORY / DESCRIBE DETAIL / SHOW
+    SNAPSHOT TABLES, a stats dict for OPTIMIZE / VACUUM [RETAIN n
+    SNAPSHOTS | n HOURS] / RESTORE TABLE ... TO VERSION AS OF n /
+    ALTER TABLE ... REPARTITION BY and the bare ANALYZE TABLE, else
+    None. Only registered snapshot tables are claimed."""
+    if _SHOW_TABLES_RE.match(statement):
+        # SHOW SNAPSHOT TABLES: the catalog's registered snapshot
+        # tables — name, dir, and whether the binding persists in the
+        # warehouse registry. Metadata-only; bindings are the
+        # driver-side dict, no storage reads.
+        rows = [
+            (n, tables[n], n in (persisted or set()))
+            for n in sorted(tables)
+        ]
+        return spark.createDataFrame(
+            rows,
+            "table_name string, table_dir string, persisted boolean",
+        )
     m = _HISTORY_RE.match(statement)
     if m and m.group(1) in tables:
         from big_data_spark.io.changes import table_history
@@ -373,131 +163,27 @@ def route_statement(
         from big_data_spark.io.aggregates import table_detail
 
         return table_detail(spark, tables[m.group(1)])
-    m = _SHOW_PARTS_RE.match(statement)
+    m = _ANALYZE_BARE_RE.match(statement)
     if m and m.group(1) in tables:
-        # SHOW PARTITIONS t: one row per live partition
-        # leaf with typed values + n_files/total_bytes, answered from
-        # manifest entry keys — Spark's own SHOW PARTITIONS errors on
-        # these tables (temp views), so claiming the registered names
-        # is purely additive.
-        from big_data_spark.io.aggregates import show_partitions
+        return _analyze(spark, m.group(1), tables, None)
+    m = _REPARTITION_RE.match(statement)
+    if m and m.group(1) in tables:
+        # ALTER TABLE t REPARTITION BY (c1, c2) | NONE — the SQL
+        # spelling of the one-call partition-spec rewrite.
+        from big_data_spark.io.table_writes import repartition_table
 
-        return show_partitions(spark, tables[m.group(1)])
-    if _SHOW_TABLES_RE.match(statement):
-        # SHOW SNAPSHOT TABLES: the catalog's registered
-        # snapshot tables — name, dir, and whether the binding
-        # persists in the warehouse registry. Metadata-only; bindings
-        # are the driver-side dict, no storage reads. (Bare SHOW
-        # TABLES stays spark.sql's.)
-        rows = [
-            (n, tables[n], n in (persisted or set()))
-            for n in sorted(tables)
-        ]
-        return spark.createDataFrame(
-            rows,
-            "table_name string, table_dir string, persisted boolean",
+        st = repartition_table(
+            spark, tables[m.group(1)], _col_list(m.group(2))
         )
-    m = _ANALYZE_RE.match(statement)
-    if m and m.group(1) in tables:
-        # ANALYZE TABLE t [COMPUTE STATISTICS [FOR COLUMNS c1, c2]]:
-        # backfill/upgrade the manifest stats block as a
-        # maintenance commit — Spark's spelling, the snapshot
-        # format's semantics. Unregistered names pass through to
-        # spark.sql (its catalog-table ANALYZE).
-        from big_data_spark.io.aggregates import analyze_table
-
-        cols = (
-            [
-                c
-                for c in (
-                    x.strip().strip("`")
-                    for x in m.group(2).split(",")
-                )
-                if c
-            ]
-            if m.group(2)
-            else None
-        )
-        st = dict(
-            analyze_table(spark, tables[m.group(1)], stats_columns=cols)
-        )
-        st["statement_type"] = "ANALYZE"
-        st["table"] = m.group(1)
-        return st
-    m = re.match(
-        r"^\s*ANALYZE\s+TABLE\s+(\w+)\b", statement, re.IGNORECASE
-    )
-    if m and m.group(1) in tables:
-        # A registered snapshot table with an ANALYZE clause outside
-        # the supported subset (FOR ALL COLUMNS / NOSCAN /
-        # PARTITION(...)) — raising here beats handing it to
-        # spark.sql, whose TABLE_OR_VIEW_NOT_FOUND for a table this
-        # catalog owns would point the user at the wrong problem.
-        raise ValueError(
-            "unsupported ANALYZE clause for snapshot table "
-            f"{m.group(1)!r} — supported: ANALYZE TABLE t "
-            "[COMPUTE STATISTICS [FOR COLUMNS c1, c2, ...]]"
-        )
+        return {"statement_type": "REPARTITION", "table": m.group(1), **st}
     m = _OPTIMIZE_RE.match(statement)
     if m and m.group(1) in tables:
-        parts = None
-        if m.group(2):
-            # OPTIMIZE t PARTITION (ds = '2026-01-01', region = 'eu')
-            # (Delta's OPTIMIZE ... WHERE, Hive's clause spelling):
-            # scope the rewrite to the matching partitions — the only
-            # affordable shape at 100 TB. Each pair is one `col =
-            # literal` conjunct read by Spark's parser; anything else
-            # fails loudly here rather than silently rewriting the
-            # whole table.
-            parts = {}
-            for pair in _split_top_level(m.group(2)):
-                conj = sql_conjuncts(spark, pair)
-                if len(conj) != 1 or not conj[0] or conj[0][1] != "=":
-                    raise ValueError(
-                        f"OPTIMIZE PARTITION: cannot parse {pair!r} — "
-                        "use `col = 'string'` or `col = number` pairs"
-                    )
-                col, _, (val,) = conj[0]
-                parts[col] = val
-        if m.group(3) or parts is not None:
-            # OPTIMIZE t [PARTITION (...)] ZORDER BY (c1, c2): the
-            # SQL spelling of the (optionally partition-scoped)
-            # z-order / compaction rewrite (io/compact.py
-            # compact_snapshot) — one atomic rewrite clustered on the
-            # interleaved key.
-            from big_data_spark.io.compact import compact_snapshot
-
-            cols = (
-                [
-                    c.strip().strip("`")
-                    for c in m.group(3).split(",")
-                    if c.strip()
-                ]
-                if m.group(3)
-                else None
-            )
-            st = compact_snapshot(
-                spark,
-                tables[m.group(1)],
-                zorder_by=cols,
-                partitions=parts,
-            )
-            return {
-                "statement_type": "OPTIMIZE",
-                "table": m.group(1),
-                "zorder_by": cols,
-                **({"partitions": parts} if parts else {}),
-                **st,
-            }
-        from big_data_spark.io.compact import maintain_table
-
-        st = maintain_table(spark, tables[m.group(1)])
-        return {"statement_type": "OPTIMIZE", "table": m.group(1), **st}
+        return _optimize(spark, m, tables)
     m = _VACUUM_RE.match(statement)
     if m and m.group(1) in tables:
         from big_data_spark.io.table_writes import vacuum_snapshots
 
-        unit = (m.group(3) or "SNAPSHOTS").upper()
+        n, unit = m.group(2), (m.group(3) or "").upper()
         # VACUUM t RETAIN n SNAPSHOTS (commit-count retention) or
         # RETAIN n HOURS (wall-clock retention, Delta's spelling) —
         # hours keep the keep_last=2 replay floor and
@@ -505,16 +191,8 @@ def route_statement(
         st = vacuum_snapshots(
             spark,
             tables[m.group(1)],
-            keep_last=(
-                int(m.group(2))
-                if m.group(2) and unit.startswith("SNAPSHOT")
-                else 2
-            ),
-            retain_hours=(
-                float(m.group(2))
-                if m.group(2) and unit.startswith("HOUR")
-                else None
-            ),
+            keep_last=int(n) if n and unit.startswith("SNAPSHOT") else 2,
+            retain_hours=float(n) if n and unit.startswith("HOUR") else None,
         )
         return {"statement_type": "VACUUM", "table": m.group(1), **st}
     m = _RESTORE_RE.match(statement)
@@ -530,13 +208,94 @@ def route_statement(
     return None
 
 
-_TRAVEL_RE = re.compile(
-    # String literals first so an alias-looking fragment inside one
-    # survives verbatim (same trick as the MERGE alias rewriter).
-    r"'(?:[^']|'')*'"
-    r"|\b(\w+)\s+(TIMESTAMP|VERSION)\s+AS\s+OF\s+('[^']*'|\d+)",
-    re.IGNORECASE,
-)
+def _optimize(spark: SparkSession, m: re.Match, tables: dict[str, str]):
+    parts = None
+    if m.group(2):
+        # OPTIMIZE t PARTITION (ds = '2026-01-01', region = 'eu')
+        # (Delta's OPTIMIZE ... WHERE, Hive's clause spelling): scope
+        # the rewrite to the matching partitions — the only affordable
+        # shape at 100 TB. Each pair is one `col = literal` conjunct
+        # read by Spark's parser; anything else fails loudly here
+        # rather than silently rewriting the whole table.
+        parts = {}
+        pairs = parse_expression(spark, f"pairs({m.group(2)})")
+        for pair in [None] if pairs is None else seq_items(pairs.arguments()):
+            conj = [None] if pair is None else expr_conjuncts(pair)
+            if len(conj) != 1 or not conj[0] or conj[0][1] != "=":
+                text = m.group(2) if pair is None else pair.sql()
+                raise ValueError(
+                    f"OPTIMIZE PARTITION: cannot parse {text!r} — "
+                    "use `col = 'string'` or `col = number` pairs"
+                )
+            col, _, (val,) = conj[0]
+            parts[col] = val
+    if m.group(3) or parts is not None:
+        # OPTIMIZE t [PARTITION (...)] ZORDER BY (c1, c2): the SQL
+        # spelling of the (optionally partition-scoped) z-order /
+        # compaction rewrite (io/compact.py compact_snapshot) — one
+        # atomic rewrite clustered on the interleaved key.
+        from big_data_spark.io.compact import compact_snapshot
+
+        cols = _col_list(m.group(3))
+        st = compact_snapshot(
+            spark, tables[m.group(1)], zorder_by=cols, partitions=parts
+        )
+        return {
+            "statement_type": "OPTIMIZE",
+            "table": m.group(1),
+            "zorder_by": cols,
+            **({"partitions": parts} if parts else {}),
+            **st,
+        }
+    from big_data_spark.io.compact import maintain_table
+
+    st = maintain_table(spark, tables[m.group(1)])
+    return {"statement_type": "OPTIMIZE", "table": m.group(1), **st}
+
+
+def parse_plan(spark: SparkSession, statement: str):
+    """Spark's parse tree of ``statement`` (an unresolved JVM
+    LogicalPlan), or None when Spark's grammar rejects it."""
+    from pyspark.errors import ParseException
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        return parser.parsePlan(statement)
+    except ParseException:
+        return None
+
+
+def _span(node) -> tuple[int, int]:
+    """The [start, stop] character span of a parse-tree node in the
+    statement text."""
+    origin = node.origin()
+    return origin.startIndex().get(), origin.stopIndex().get()
+
+
+def _table_name(node) -> str | None:
+    """The bare (single-part) name of a table reference, else None."""
+    kind = node.nodeName()
+    if kind == "UnresolvedIdentifier":
+        parts = seq_items(node.nameParts())
+    elif kind in (
+        "UnresolvedRelation", "UnresolvedTable", "UnresolvedTableOrView"
+    ):
+        parts = seq_items(node.multipartIdentifier())
+    else:
+        return None
+    return parts[0] if len(parts) == 1 else None
+
+
+def _target(node, tables: dict[str, str]) -> tuple[str, str]:
+    """(name, table_dir) of a DML target, which must be a bare
+    registered snapshot-table name."""
+    name = _table_name(node)
+    if name not in tables:
+        raise ValueError(
+            f"unknown snapshot table {node.toString().strip()!r} — "
+            f"DML targets one of {sorted(tables)} by bare name"
+        )
+    return name, tables[name]
 
 
 def _parse_ts_ms(text: str) -> int:
@@ -562,196 +321,452 @@ def _parse_ts_ms(text: str) -> int:
     )
 
 
-def rewrite_time_travel(
-    spark: SparkSession, statement: str, tables: dict[str, str]
-) -> str:
-    """The SQL spelling of time travel for the snapshot format:
-    rewrite ``<table> VERSION AS OF <n>``, ``<table> VERSION AS OF
-    '<tag>'`` and ``<table> TIMESTAMP AS OF '<ts>'|<epoch_ms>``
-    fragments (plain ``spark.sql`` cannot parse them for a
-    non-catalog format) into a just-registered ``<table>_v<id>`` temp
-    view, resolving tags and timestamps through the manifest layer.
-    Statements naming no registered snapshot table pass through
-    untouched; string literals are never rewritten."""
+def travel_version(
+    spark: SparkSession, statement: str, node, tables: dict[str, str]
+) -> tuple[str, int] | None:
+    """``(table, snapshot id)`` a parsed ``RelationTimeTravel`` node of
+    ``statement`` pins, or None when its relation is not a registered
+    snapshot table. A quoted VERSION AS OF value is a tag, a bare one a
+    snapshot id (Spark hands both back as the same string, so the
+    node's own text decides); TIMESTAMP AS OF takes an ISO string or
+    epoch millis, resolved through the manifest layer. Raises
+    ValueError for an unknown tag or an unsupported timestamp."""
+    rel = node.relation()
+    name = _table_name(rel)
+    if name not in tables:
+        return None
+    from big_data_spark.io.table_reads import resolve_as_of_ts
+    from big_data_spark.io.tags import list_tags
 
-    def _sub(m: re.Match) -> str:
-        if m.group(1) is None:
-            return m.group(0)  # string literal, untouched
-        name, kind, val = m.group(1), m.group(2).upper(), m.group(3)
-        if name not in tables:
-            return m.group(0)
-        from big_data_spark.io.table_reads import read_snapshot, resolve_as_of_ts
-        from big_data_spark.io.tags import list_tags
-
-        table_dir = tables[name]
-        if kind == "VERSION":
-            if val.startswith("'"):
-                tag = val[1:-1]
-                tags = list_tags(spark, table_dir)
-                if tag not in tags:
-                    raise ValueError(
-                        f"VERSION AS OF {val}: tag {tag!r} not found "
-                        f"under {name!r} (tags: {sorted(tags)})"
-                    )
-                sid = tags[tag]
-            else:
-                sid = int(val)
-        else:
-            if not val.startswith("'") and not val.isdigit():
-                raise ValueError(
-                    f"TIMESTAMP AS OF takes a quoted ISO string or "
-                    f"epoch millis, got {val!r}"
-                )
-            sid = resolve_as_of_ts(
-                spark, table_dir, _parse_ts_ms(val.strip("'"))
-            )
-        vname = f"{name}_v{sid}"
-        read_snapshot(spark, table_dir, as_of=sid).createOrReplaceTempView(
-            vname
-        )
-        return vname
-
-    return _TRAVEL_RE.sub(_sub, statement)
-
-
-def _split_top_level(text: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` outside parentheses and string literals —
-    enough to separate SET assignments whose expressions contain
-    function calls or quoted commas."""
-    parts, depth, quote, start = [], 0, None, 0
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _parse_assignments(text: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for item in _split_top_level(text):
-        m = re.match(r"^(\w+)\s*=\s*(.+)$", item, re.DOTALL)
-        if not m:
+    start, stop = _span(node)
+    if node.version().isDefined():
+        val = node.version().get()
+        if statement[stop] not in "'\"":
+            return name, int(val)
+        tags = list_tags(spark, tables[name])
+        if val not in tags:
             raise ValueError(
-                f"unsupported SET assignment {item!r} — expected "
-                "'col = <expression>'"
+                f"{statement[start:stop + 1]}: tag {val!r} not found "
+                f"under {name!r} (tags: {sorted(tags)})"
             )
-        out[m.group(1)] = m.group(2).strip()
+        return name, tags[val]
+    ts = literal_value(node.timestamp().get())
+    if type(ts) is int:
+        ts = str(ts)
+    if not isinstance(ts, str):
+        raise ValueError(
+            "TIMESTAMP AS OF takes a quoted ISO string or epoch "
+            f"millis, got {statement[start:stop + 1]!r}"
+        )
+    return name, resolve_as_of_ts(spark, tables[name], _parse_ts_ms(ts))
+
+
+def _travel_nodes(plan) -> list:
+    """Every time-travel relation in a parse tree, subqueries and CTE
+    bodies (the plan's inner children) included."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "RelationTimeTravel":
+            out.append(node)
+        stack.extend(seq_items(node.children()))
+        stack.extend(seq_items(node.innerChildren()))
     return out
 
 
-def _parse_merge_keys(on_text: str, t_alias: str, s_alias: str) -> list[str]:
-    """Equality-key conjunction 't.k = s.k AND ...' -> ['k', ...].
-    merge_into joins on named keys, so both sides must name the SAME
-    column; anything else in the ON clause is refused loudly."""
-    keys = []
-    for term in re.split(r"\s+AND\s+", on_text, flags=re.IGNORECASE):
-        m = re.match(
-            rf"^\s*(?:({t_alias}|{s_alias})\.)?(\w+)\s*=\s*"
-            rf"(?:({t_alias}|{s_alias})\.)?(\w+)\s*$",
-            term,
-            re.IGNORECASE,
+def travel_text(
+    spark: SparkSession, statement: str, plan, tables: dict[str, str]
+) -> str:
+    """``statement`` with each time-travel relation over a registered
+    snapshot table in ``plan`` (its parse tree) replaced by a
+    just-registered ``<table>_v<id>`` view — the SQL spelling of time
+    travel for the snapshot format, which plain ``spark.sql`` cannot
+    resolve for a non-catalog table. The relations come from the
+    tree, so string literals and comments are never rewritten;
+    statements naming no registered snapshot table come back
+    unchanged."""
+    from big_data_spark.io.table_reads import read_snapshot
+
+    splices = []
+    for node in _travel_nodes(plan):
+        pinned = travel_version(spark, statement, node, tables)
+        if pinned is not None:
+            name, sid = pinned
+            vname = f"{name}_v{sid}"
+            read_snapshot(
+                spark, tables[name], as_of=sid
+            ).createOrReplaceTempView(vname)
+            splices.append((_span(node.relation())[0], _span(node)[1], vname))
+    out, pos = [], 0
+    for start, stop, vname in sorted(splices):
+        out += [statement[pos:start], vname]
+        pos = stop + 1
+    return "".join(out) + statement[pos:]
+
+
+def _row_source(
+    spark: SparkSession, statement: str, plan, tables: dict[str, str]
+) -> DataFrame:
+    """The row source of an INSERT or CTAS as a DataFrame: the
+    statement's query subtree exactly as Spark parsed it, read again
+    from ``travel_text`` when it time-travels."""
+    text = travel_text(spark, statement, plan, tables)
+    if text != statement:
+        plan = parse_plan(spark, text)
+    rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    return DataFrame(rows(spark._jsparkSession, plan.query()), spark)
+
+
+_META_FUNCS = ("count", "min", "max", "sum", "avg")
+
+
+def _metadata_item(expr) -> tuple[str, str | None, str] | None:
+    """``(func, col|None, out_name)`` for one select item of the
+    metadata-answerable shape, else None."""
+    out = None
+    if expr.nodeName() == "Alias":
+        out, expr = expr.name(), expr.child()
+    elif expr.nodeName() == "UnresolvedAlias":
+        expr = expr.child()
+    col = column_name(expr)
+    if col is not None:
+        return "col", col, out or col
+    if (
+        expr.nodeName() != "UnresolvedFunction"
+        or expr.isDistinct()
+        or expr.filter().isDefined()
+        or expr.ignoreNulls()
+    ):
+        return None
+    fname = seq_items(expr.nameParts())
+    args = seq_items(expr.arguments())
+    if len(fname) != 1 or len(args) != 1:
+        return None
+    func = fname[0].lower()
+    if func == "count":  # COUNT(*) parses as COUNT(1)
+        v = literal_value(args[0])
+        return None if (type(v), v) != (int, 1) else (
+            "count", None, out or "count(1)"
         )
-        if not m or m.group(2).lower() != m.group(4).lower():
-            raise ValueError(
-                f"unsupported MERGE ON term {term.strip()!r} — the "
-                "dispatcher routes equality keys only "
-                "('t.col = s.col AND ...'); express richer match "
-                "logic in the source view"
-            )
-        keys.append(m.group(2))
-    return keys
+    col = column_name(args[0])
+    if func not in _META_FUNCS or col is None:
+        return None
+    return func, col, out or f"{func}({col})"
+
+
+def metadata_select(plan) -> tuple | None:
+    """``(table, [(func, col|None, out_name), ...], travel|None,
+    where|None, group|None)`` when the parsed statement is a bare
+    aggregate list over ONE table the metadata layer COULD answer
+    (the planning query ``SELECT MIN(d), MAX(d) FROM t``), else None.
+    ``func`` is count/min/max/sum/avg, or ``"col"`` for a bare column
+    (legal ONLY under GROUP BY — the caller checks it names a group
+    column); ``out_name`` is the alias or Spark's default output name
+    (``count(1)`` / ``min(col)`` / the column's own name), so both
+    paths are column-for-column indistinguishable. ``travel`` is the
+    ``RelationTimeTravel`` node (``travel_version`` pins it).
+    ``where`` is ``[(col, [value, ...]), ...]`` from ``col = literal``
+    / ``col IN (...)`` conjuncts with typed values — whether each col
+    is a PARTITION column is the caller's job; any other conjunct
+    unclaims the statement. ``group`` is the GROUP BY column list."""
+    if plan.nodeName() == "Project":
+        group, exprs = None, seq_items(plan.projectList())
+    elif plan.nodeName() == "Aggregate":
+        group = [column_name(e) for e in seq_items(plan.groupingExpressions())]
+        if None in group:
+            return None
+        exprs = seq_items(plan.aggregateExpressions())
+    else:
+        return None
+    items = [_metadata_item(e) for e in exprs]
+    if None in items:
+        return None
+    if group is None and any(f == "col" for f, _, _ in items):
+        return None  # a bare column without GROUP BY is not ours
+    child, where, travel = plan.child(), None, None
+    if child.nodeName() == "Filter":
+        where = []
+        for conj in expr_conjuncts(child.condition()):
+            if conj is None or conj[1] not in ("=", "in"):
+                return None  # conjunct outside the claimable shape
+            where.append((conj[0], conj[2]))
+        child = child.child()
+    if child.nodeName() == "RelationTimeTravel":
+        travel, child = child, child.relation()
+    name = _table_name(child)
+    if child.nodeName() != "UnresolvedRelation" or name is None:
+        return None
+    return name, items, travel, where, group
+
+
+def route_statement(
+    spark: SparkSession,
+    statement: str,
+    tables: dict[str, str],
+    base_dir: str | None = None,
+    persisted: set | None = None,
+):
+    """The door's dispatch for callers holding only the statement:
+    ``route_maintenance``, then ``route_plan`` over Spark's parse
+    tree. None means PASS THROUGH to plain ``spark.sql``."""
+    st = route_maintenance(spark, statement, tables, persisted)
+    if st is None:
+        plan = parse_plan(spark, statement)
+        if plan is not None:
+            st = route_plan(spark, statement, plan, tables, base_dir)
+    return st
+
+
+def route_plan(
+    spark: SparkSession,
+    statement: str,
+    plan,
+    tables: dict[str, str],
+    base_dir: str | None = None,
+):
+    """Route a parsed statement by its root node: the routed
+    primitive's stats dict (plus ``statement_type``), a DataFrame for
+    SHOW PARTITIONS, or None — PASS THROUGH to plain ``spark.sql``
+    (qualified names, ALTER VIEW, unregistered targets keep working
+    there). ``base_dir`` roots a CTAS without LOCATION at
+    ``<base_dir>/<name>``; CREATE adds to ``tables`` in place and DROP
+    removes the entry, so a caller-owned dict stays the one source of
+    truth."""
+    kind = plan.nodeName()
+    if kind == "CreateTableAsSelect":
+        return _execute_create(spark, statement, plan, tables, base_dir)
+    route = _ROUTES.get(kind)
+    return None if route is None else route(spark, statement, plan, tables)
 
 
 def execute_dml(
     spark: SparkSession, statement: str, tables: dict[str, str]
-) -> dict:
-    """Run one DML statement against the snapshot tables in
-    ``tables`` (name -> table_dir). Returns the routed primitive's
-    stats dict (plus ``statement_type``). Raises ValueError for
-    unknown tables or unsupported syntax — never a partial apply."""
-    m = _DELETE_RE.match(statement)
-    if m:
-        from big_data_spark.io.dml import delete_where
-
-        table_dir = _resolve(m.group(1), tables)
-        st = delete_where(spark, table_dir, m.group(2), attempts=3)
-        return {"statement_type": "DELETE", "table": m.group(1), **st}
-    m = _UPDATE_RE.match(statement)
-    if m:
-        from big_data_spark.io.dml import update_where
-
-        table_dir = _resolve(m.group(1), tables)
-        st = update_where(
-            spark,
-            table_dir,
-            m.group(3),
-            _parse_assignments(m.group(2)),
-            attempts=3,
+):
+    """Run one statement of the door against the snapshot tables in
+    ``tables`` (name -> table_dir) — the strict entry: anything the
+    door would pass through to spark.sql raises ValueError instead.
+    Never a partial apply."""
+    st = route_statement(spark, statement, tables)
+    if st is None:
+        raise ValueError(
+            "unsupported statement — see big_data_spark/sqldml.py for "
+            f"the door's subset; got: {statement.strip()[:120]!r}"
         )
-        return {"statement_type": "UPDATE", "table": m.group(1), **st}
-    m = _MERGE_RE.match(statement)
-    if m:
-        return _execute_merge(spark, m, tables)
-    m = _INSERT_RE.match(statement)
-    if m:
-        return _execute_insert(spark, m, tables)
-    m = _ALTER_RE.match(statement)
-    if m:
-        return _execute_alter(spark, m, tables)
-    raise ValueError(
-        "unsupported DML statement — the dispatcher accepts "
-        "DELETE FROM ... WHERE, UPDATE ... SET ... WHERE, "
-        "INSERT INTO ... VALUES/SELECT, ALTER TABLE "
-        "RENAME/DROP/ALTER COLUMN, and the documented MERGE INTO "
-        f"subset; got: {statement.strip()[:120]!r}"
+    return st
+
+
+def _execute_delete(spark, statement, plan, tables) -> dict:
+    from big_data_spark.io.dml import delete_where
+
+    name, table_dir = _target(plan.table(), tables)
+    # Spark reads a WHERE-less DELETE as `WHERE true`; only the text
+    # after the table name tells them apart.
+    if not statement[_span(plan.table())[1] + 1 : _span(plan)[1] + 1].strip():
+        raise ValueError(
+            f"DELETE FROM {name} needs a WHERE clause "
+            "(WHERE true deletes every row)"
+        )
+    st = delete_where(spark, table_dir, plan.condition().sql(), attempts=3)
+    return {"statement_type": "DELETE", "table": name, **st}
+
+
+def _sets(node, value) -> dict:
+    """``{col: value(expr)}`` for the SET list of an UPDATE or a MERGE
+    UPDATE action."""
+    out = {}
+    for a in seq_items(node.assignments()):
+        col = column_name(a.key())
+        if col is None:
+            raise ValueError(
+                f"unsupported SET target {a.key().sql()!r} — expected "
+                "'col = <expression>'"
+            )
+        out[col] = value(a.value())
+    return out
+
+
+def _execute_update(spark, statement, plan, tables) -> dict:
+    from big_data_spark.io.dml import update_where
+
+    name, table_dir = _target(plan.table(), tables)
+    if not plan.condition().isDefined():
+        raise ValueError(f"UPDATE {name} needs a WHERE clause")
+    st = update_where(
+        spark,
+        table_dir,
+        plan.condition().get().sql(),
+        _sets(plan, lambda e: e.sql()),
+        attempts=3,
     )
+    return {"statement_type": "UPDATE", "table": name, **st}
 
 
-def _execute_insert(
-    spark: SparkSession, m: re.Match, tables: dict[str, str]
-) -> dict:
+def _side(node, default: str) -> tuple[object, str]:
+    """(table reference, alias) of a MERGE side."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.child(), node.alias()
+    return node, default
+
+
+def _merge_keys(cond, sides: dict[str, str]) -> list[str]:
+    """Equality-key conjunction 't.k = s.k AND ...' -> ['k', ...].
+    merge_into joins on named keys, so both sides must name the SAME
+    column, and a qualified pair must name one column of EACH side;
+    anything else in the ON clause is refused loudly."""
+    keys = []
+    for term in and_terms(cond):
+        refs = [name_parts(k) for k in seq_items(term.children())]
+        quals = [
+            sides.get(r[0].lower(), "?") if r and len(r) == 2 else None
+            for r in refs
+        ]
+        if (
+            term.nodeName() != "EqualTo"
+            or None in refs
+            or any(len(r) > 2 for r in refs)
+            or "?" in quals
+            or refs[0][-1].lower() != refs[1][-1].lower()
+            or (quals[0] is not None and quals[0] == quals[1])
+        ):
+            raise ValueError(
+                f"unsupported MERGE ON term {term.sql()!r} — the door "
+                "routes equality keys between the two sides only "
+                "('t.col = s.col AND ...'); express richer match "
+                "logic in the source view"
+            )
+        keys.append(refs[0][-1])
+    return keys
+
+
+def _requalify(spark: SparkSession, expr, sides: dict[str, str]):
+    """``expr`` with every column qualified by a statement alias
+    re-qualified by its merge_into side (``t`` / ``s``) — on the
+    expression tree, so string literals are never touched."""
+    jvm = spark._jvm
+    parts = name_parts(expr)
+    if parts is None:
+        kids = [_requalify(spark, k, sides) for k in seq_items(expr.children())]
+        return expr.withNewChildren(jvm.PythonUtils.toSeq(kids))
+    if len(parts) > 1 and parts[0].lower() in sides:
+        parts = [sides[parts[0].lower()], *parts[1:]]
+        return jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
+            jvm.PythonUtils.toSeq(parts)
+        )
+    return expr
+
+
+def _execute_merge(spark, statement, plan, tables) -> dict:
+    from big_data_spark.operators.merge import merge_snapshot
+
+    target, t_alias = _side(plan.targetTable(), "t")
+    source, s_alias = _side(plan.sourceTable(), "s")
+    name, table_dir = _target(target, tables)
+    if _table_name(source) is None:
+        raise ValueError(
+            f"unsupported MERGE source {source.toString().strip()!r} — "
+            "USING takes a registered view name"
+        )
+    if t_alias.lower() == s_alias.lower():
+        raise ValueError(
+            f"MERGE target and source share the alias {t_alias!r} — "
+            "column references would be ambiguous"
+        )
+    if plan.withSchemaEvolution() or (
+        not plan.notMatchedBySourceActions().isEmpty()
+    ):
+        raise ValueError(
+            "unsupported MERGE clause: WITH SCHEMA EVOLUTION / WHEN NOT "
+            "MATCHED BY SOURCE"
+        )
+    # merge_into exposes the joined row under t./s. aliases.
+    sides = {t_alias.lower(): "t", s_alias.lower(): "s"}
+    keys = _merge_keys(plan.mergeCondition(), sides)
+
+    def _expr(e):
+        return F.expr(_requalify(spark, e, sides).sql())
+
+    def _when(action, kwarg: str, default=None):
+        c = action.condition()
+        if c.isDefined() or default is not None:
+            kwargs[kwarg] = _expr(c.get()) if c.isDefined() else default
+
+    kwargs: dict = {"insert": False}
+    saw_update = False
+    for action in seq_items(plan.matchedActions()):
+        kind = action.nodeName()
+        if kind == "DeleteAction":
+            _when(action, "delete_condition", F.lit(True))
+        elif kind in ("UpdateAction", "UpdateStarAction"):
+            saw_update = True
+            _when(action, "update_condition")
+            if kind == "UpdateAction":
+                kwargs["update_exprs"] = _sets(action, _expr)
+        else:
+            raise ValueError(f"unsupported MERGE action {kind} for MATCHED")
+    for action in seq_items(plan.notMatchedActions()):
+        if action.nodeName() != "InsertStarAction":
+            raise ValueError(
+                f"unsupported MERGE action {action.nodeName()} for NOT "
+                "MATCHED — the door inserts with INSERT *"
+            )
+        kwargs["insert"] = True
+        _when(action, "insert_condition")
+    if not saw_update:
+        # merge_into defaults to update-all-shared-columns on match;
+        # a statement WITHOUT an UPDATE clause must leave matched
+        # (non-deleted) rows unchanged.
+        kwargs["update_condition"] = F.lit(False)
+    sid = merge_snapshot(
+        spark, table_dir, spark.table(_table_name(source)), keys, **kwargs
+    )
+    return {"statement_type": "MERGE", "table": name, "snapshot_id": sid}
+
+
+def _landed_rows(spark: SparkSession, table_dir: str, sid: int) -> int:
+    """Rows the generation committed at ``sid`` holds — a parquet
+    metadata count, never a re-execution of the row source (a
+    non-deterministic SELECT would report rows it didn't write)."""
+    from big_data_spark.io.layout import generation_dir, hadoop_fs
+
+    gdir = generation_dir(table_dir, sid)
+    fs, gp = hadoop_fs(spark, gdir)
+    return int(spark.read.parquet(gdir).count()) if fs.exists(gp) else 0
+
+
+def _execute_insert(spark, statement, plan, tables) -> dict | None:
     from big_data_spark.io.manifest import latest_manifest
     from big_data_spark.io.table_writes import append_with_retry
 
-    mode, table_name, col_text, body = m.group(1, 2, 3, 4)
-    overwrite = mode.upper().startswith("OVERWRITE")
-    table_dir = _resolve(table_name, tables)
+    table_name = _table_name(plan.table())
+    if (
+        table_name not in tables
+        or not plan.partitionSpec().isEmpty()
+        or plan.ifPartitionNotExists()
+        or plan.byName()
+    ):
+        return None  # not a snapshot table, or a clause spark.sql owns
+    overwrite = plan.overwrite()
+    table_dir = tables[table_name]
     man = latest_manifest(spark, table_dir)
     if man is None:
         raise ValueError(f"INSERT target {table_name!r} has no snapshots")
     schema = man["schema"]
     by_name = {f["name"]: f for f in schema}
-    targets = (
-        [c.strip() for c in col_text.split(",")]
-        if col_text
-        else [f["name"] for f in schema]
-    )
+    targets = seq_items(plan.userSpecifiedCols()) or [
+        f["name"] for f in schema
+    ]
     unknown = [c for c in targets if c not in by_name]
     if unknown:
         raise ValueError(
             f"INSERT column(s) {unknown} not in {table_name!r}'s "
             f"schema {[f['name'] for f in schema]}"
         )
-    # Spark's own parser produces the row source (VALUES is a valid
-    # standalone query); its output maps POSITIONALLY onto the
-    # target column list, standard SQL semantics. Time-travel
-    # fragments in a SELECT source resolve first, so
-    # 'INSERT INTO t SELECT * FROM t VERSION AS OF 0' (the
-    # restore-old-rows idiom) works through the same door.
-    src = spark.sql(rewrite_time_travel(spark, body, tables))
+    # The row source's output maps POSITIONALLY onto the target
+    # column list, standard SQL semantics. Time travel in a SELECT
+    # source resolves first, so 'INSERT INTO t SELECT * FROM t
+    # VERSION AS OF 0' (the restore-old-rows idiom) works through the
+    # same door.
+    src = _row_source(spark, statement, plan, tables)
     if len(src.columns) != len(targets):
         raise ValueError(
             f"INSERT supplies {len(src.columns)} column(s) for "
@@ -804,59 +819,66 @@ def _execute_insert(
         sid = append_with_retry(
             row.select(*cols), table_dir, partition_by=man["layout_by"]
         )
-    # Report what actually LANDED: a parquet metadata count of the
-    # committed generation — never a re-execution of the row source
-    # (a non-deterministic SELECT would report rows it didn't write).
-    from big_data_spark.io.layout import hadoop_fs
-    from big_data_spark.io.layout import generation_dir
-
-    gdir = generation_dir(table_dir, sid)
-    fs, gp = hadoop_fs(spark, gdir)
-    n = spark.read.parquet(gdir).count() if fs.exists(gp) else 0
     return {
         "statement_type": "INSERT OVERWRITE" if overwrite else "INSERT",
         "table": table_name,
-        "inserted_rows": int(n),
+        "inserted_rows": _landed_rows(spark, table_dir, sid),
         "snapshot_id": sid,
     }
 
 
 def _execute_create(
     spark: SparkSession,
-    m: re.Match,
+    statement: str,
+    plan,
     tables: dict[str, str],
     base_dir: str | None,
-) -> dict:
+) -> dict | None:
     """CREATE TABLE <t> [PARTITIONED BY (c1[, c2...])] [LOCATION 'p']
-    AS <select> — how a SQL user MAKES a table. The row source
-    goes through Spark's own parser (time-travel fragments resolve
-    first), lands as snapshot 0 via write_snapshot /
+    AS <query> — how a SQL user MAKES a table. The row source (time
+    travel resolved first) lands as snapshot 0 via write_snapshot /
     write_snapshot_partial, and the name registers into ``tables``.
     Refuses an already-registered name and a non-empty target dir —
-    CTAS creates, it never adopts or overwrites."""
+    CTAS creates, it never adopts or overwrites. Any other clause
+    (USING, OPTIONS, TBLPROPERTIES, COMMENT, IF NOT EXISTS, a
+    non-identity partition transform) leaves the statement to
+    spark.sql, as does a CTAS with neither a LOCATION nor a base_dir:
+    a plain 'CREATE TABLE t AS SELECT' against the Spark catalog works
+    through spark.sql and must keep working."""
     from big_data_spark.io.layout import hadoop_fs
-    from big_data_spark.io.layout import generation_dir
     from big_data_spark.io.table_writes import (
         write_snapshot,
         write_snapshot_partial,
     )
 
-    name, part_text, location, body = m.group(1, 2, 3, 4)
+    name = _table_name(plan.name())
+    spec = plan.tableSpec()
+    location = spec.location().get() if spec.location().isDefined() else None
+    fields = [
+        list(t.references()[0].fieldNames())
+        for t in seq_items(plan.partitioning())
+        if t.name() == "identity"
+    ]
+    pcols = [f[0] for f in fields if len(f) == 1]
+    if (
+        len(pcols) != plan.partitioning().size()
+        or name is None
+        or plan.ignoreIfExists()
+        or spec.provider().isDefined()
+        or not spec.properties().isEmpty()
+        or not spec.optionExpression().options().isEmpty()
+        or spec.comment().isDefined()
+        or spec.serde().isDefined()
+        or spec.external()
+        or (location is None and base_dir is None)
+    ):
+        return None
     if name in tables:
         raise ValueError(
             f"CREATE TABLE: {name!r} is already registered "
             f"(at {tables[name]!r}) — DROP it first, or pick a new name"
         )
     if location is None:
-        if base_dir is None:
-            # Defensive only: route_statement claims CTAS exclusively
-            # with a LOCATION or a base_dir catalog (a plain
-            # Spark-catalog CTAS passes through to spark.sql), so
-            # direct callers are the only way here.
-            raise ValueError(
-                "CREATE TABLE needs LOCATION '<dir>' (or a catalog "
-                "constructed with base_dir=) to place the table"
-            )
         if name.lower() == "_catalog":
             # Reserved: <base_dir>/_catalog is the warehouse's
             # per-table binding directory — a data table
@@ -876,14 +898,9 @@ def _execute_create(
         )
     from big_data_spark.io.manifest import SnapshotConflict
 
-    src = spark.sql(rewrite_time_travel(spark, body, tables))
+    src = _row_source(spark, statement, plan, tables)
     try:
-        if part_text:
-            pcols = [
-                c.strip().strip("`")
-                for c in part_text.split(",")
-                if c.strip()
-            ]
+        if pcols:
             missing = [c for c in pcols if c not in src.columns]
             if missing:
                 raise ValueError(
@@ -922,88 +939,94 @@ def _execute_create(
         fs.delete(lp, True)
         raise
     tables[name] = location
-    gdir = generation_dir(location, sid)
-    fs, gp = hadoop_fs(spark, gdir)
-    n = spark.read.parquet(gdir).count() if fs.exists(gp) else 0
     return {
         "statement_type": "CREATE TABLE",
         "table": name,
         "table_dir": location,
-        "partitioned_by": (
-            [c.strip().strip("`") for c in part_text.split(",")]
-            if part_text
-            else None
-        ),
-        "rows": int(n),
+        "partitioned_by": pcols or None,
+        "rows": _landed_rows(spark, location, sid),
         "snapshot_id": sid,
     }
 
 
-def _execute_drop(
-    spark: SparkSession, m: re.Match, tables: dict[str, str]
-) -> dict:
+def _execute_drop(spark, statement, plan, tables) -> dict | None:
     """DROP TABLE [IF EXISTS] <t>: deregister and recursively delete
     the table dir — GUARDED: only a dir that actually carries a
     ``_manifests`` commit log is deleted (the registration could
     point anywhere; an unguarded recursive delete of a mis-registered
-    path would be a data-loss foot-gun)."""
+    path would be a data-loss foot-gun). Only REGISTERED snapshot
+    tables are claimed; DROP of a spark temp view (and IF EXISTS
+    probes of unknown names) keeps passing through to spark.sql."""
     from big_data_spark.io.layout import hadoop_fs
 
-    name = m.group(2)
+    name = _table_name(plan.child())
+    if name not in tables or plan.purge():
+        return None
     table_dir = tables[name]
-    fs, root_probe = hadoop_fs(spark, table_dir)
-    if not fs.exists(root_probe):
-        # The dir is already gone (removed out-of-band): DROP still
-        # releases the binding — a persistent-registry entry must not
-        # become permanently un-droppable.
-        del tables[name]
-        return {
-            "statement_type": "DROP TABLE",
-            "table": name,
-            "table_dir": table_dir,
-            "dropped": False,
-        }
-    fs, mp = hadoop_fs(spark, f"{table_dir}/_manifests")
-    if not fs.exists(mp):
-        raise ValueError(
-            f"DROP TABLE {name}: {table_dir!r} has no _manifests dir "
-            "— not a snapshot table; refusing the recursive delete "
-            "(deregister it manually if the mapping is stale)"
-        )
-    _, root = hadoop_fs(spark, table_dir)
-    fs.delete(root, True)
+    fs, root = hadoop_fs(spark, table_dir)
+    # A dir already gone (removed out-of-band) still releases the
+    # binding — a persistent-registry entry must not become
+    # permanently un-droppable.
+    dropped = bool(fs.exists(root))
+    if dropped:
+        if not fs.exists(hadoop_fs(spark, f"{table_dir}/_manifests")[1]):
+            raise ValueError(
+                f"DROP TABLE {name}: {table_dir!r} has no _manifests dir "
+                "— not a snapshot table; refusing the recursive delete "
+                "(deregister it manually if the mapping is stale)"
+            )
+        fs.delete(root, True)
     del tables[name]
     return {
         "statement_type": "DROP TABLE",
         "table": name,
         "table_dir": table_dir,
-        "dropped": True,
+        "dropped": dropped,
     }
 
 
-def _execute_alter(
-    spark: SparkSession, m: re.Match, tables: dict[str, str]
-) -> dict:
+def _execute_alter(spark, statement, plan, tables) -> dict | None:
+    """RENAME COLUMN / DROP COLUMN / ALTER COLUMN ... TYPE of one
+    top-level column of a registered table; any other ALTER shape
+    (several or nested columns, IF EXISTS, nullability, comments,
+    positions, defaults) passes through."""
     from big_data_spark.io.table_reads import evolve_schema
 
-    table_name = m.group(1)
-    table_dir = _resolve(table_name, tables)
-    rename_old, rename_new, drop_col, widen_col, widen_type = m.group(
-        2, 3, 4, 5, 6
-    )
-    if rename_old:
-        sid = evolve_schema(
-            spark, table_dir, renames={rename_old: rename_new}
-        )
-        op = f"RENAME {rename_old} -> {rename_new}"
-    elif drop_col:
-        sid = evolve_schema(spark, table_dir, drops=[drop_col])
-        op = f"DROP {drop_col}"
+    table_name = _table_name(plan.table())
+    if table_name not in tables:
+        return None
+    kind = plan.nodeName()
+    if kind == "RenameColumn":
+        fields = [plan.column()]
+    elif kind == "DropColumns":
+        fields = [] if plan.ifExists() else seq_items(plan.columnsToDrop())
+    else:  # AlterColumns: the TYPE change alone
+        specs = seq_items(plan.specs())
+        spec = specs[0]
+        fields = [spec.column()] if (
+            len(specs) == 1
+            and spec.newDataType().isDefined()
+            and spec.newNullability().isEmpty()
+            and spec.newComment().isEmpty()
+            and spec.newPosition().isEmpty()
+            and spec.newDefaultExpression().isEmpty()
+            and not spec.dropDefault()
+        ) else []
+    names = [seq_items(f.name()) for f in fields]
+    if len(names) != 1 or len(names[0]) != 1:
+        return None
+    col, table_dir = names[0][0], tables[table_name]
+    if kind == "RenameColumn":
+        new = plan.newName()
+        sid = evolve_schema(spark, table_dir, renames={col: new})
+        op = f"RENAME {col} -> {new}"
+    elif kind == "DropColumns":
+        sid = evolve_schema(spark, table_dir, drops=[col])
+        op = f"DROP {col}"
     else:
-        sid = evolve_schema(
-            spark, table_dir, widens={widen_col: widen_type.lower()}
-        )
-        op = f"ALTER {widen_col} TYPE {widen_type.lower()}"
+        typ = spec.newDataType().get().catalogString()
+        sid = evolve_schema(spark, table_dir, widens={col: typ})
+        op = f"ALTER {col} TYPE {typ}"
     return {
         "statement_type": "ALTER",
         "table": table_name,
@@ -1012,108 +1035,64 @@ def _execute_alter(
     }
 
 
-def _resolve(name: str, tables: dict[str, str]) -> str:
+def _show_partitions(spark, statement, plan, tables):
+    """SHOW PARTITIONS t: one row per live partition leaf with typed
+    values + n_files/total_bytes, answered from manifest entry keys —
+    Spark's own SHOW PARTITIONS errors on these tables (temp views),
+    so claiming the registered names is purely additive."""
+    from big_data_spark.io.aggregates import show_partitions
+
+    name = _table_name(plan.table())
+    if name not in tables or plan.pattern().isDefined():
+        return None
+    return show_partitions(spark, tables[name])
+
+
+def _analyze(spark, name: str, tables: dict[str, str], cols) -> dict:
+    from big_data_spark.io.aggregates import analyze_table
+
+    st = dict(analyze_table(spark, tables[name], stats_columns=cols))
+    st["statement_type"] = "ANALYZE"
+    st["table"] = name
+    return st
+
+
+def _execute_analyze(spark, statement, plan, tables) -> dict | None:
+    """ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c1, c2]:
+    backfill/upgrade the manifest stats block as a maintenance commit
+    — Spark's spelling, the snapshot format's semantics. Unregistered
+    names pass through to spark.sql (its catalog-table ANALYZE)."""
+    name = _table_name(plan.child())
     if name not in tables:
+        return None
+    if plan.nodeName() == "AnalyzeColumn" and not plan.allColumns():
+        return _analyze(spark, name, tables, seq_items(plan.columnNames().get()))
+    if plan.nodeName() == "AnalyzeColumn" or (
+        not plan.partitionSpec().isEmpty() or plan.noScan()
+    ):
+        # A registered snapshot table with a clause outside the
+        # subset (FOR ALL COLUMNS / NOSCAN / PARTITION(...)) —
+        # raising here beats handing it to spark.sql, whose
+        # TABLE_OR_VIEW_NOT_FOUND for a table this catalog owns would
+        # point the user at the wrong problem.
         raise ValueError(
-            f"unknown snapshot table {name!r} — registered: "
-            f"{sorted(tables)}"
+            "unsupported ANALYZE clause for snapshot table "
+            f"{name!r} — supported: ANALYZE TABLE t "
+            "[COMPUTE STATISTICS [FOR COLUMNS c1, c2, ...]]"
         )
-    return tables[name]
+    return _analyze(spark, name, tables, None)
 
 
-def _execute_merge(
-    spark: SparkSession, m: re.Match, tables: dict[str, str]
-) -> dict:
-    from big_data_spark.operators.merge import merge_snapshot
-
-    target_name = m.group(1)
-    t_alias = m.group(2) or "t"
-    source_name = m.group(3)
-    s_alias = m.group(4) or "s"
-    table_dir = _resolve(target_name, tables)
-    keys = _parse_merge_keys(m.group(5), t_alias, s_alias)
-    when_text = m.group(6)
-    whens, pos = [], 0
-    for match in _WHEN_RE.finditer(when_text):
-        if when_text[pos : match.start()].strip():
-            raise ValueError(
-                "unparsed MERGE text before clause: "
-                f"{when_text[pos:match.start()].strip()!r}"
-            )
-        whens.append(match.groups())
-        pos = match.end()
-    if not whens or when_text[pos:].strip():
-        raise ValueError(
-            f"unparsed MERGE WHEN clause tail: {when_text[pos:].strip()!r}"
-        )
-    kwargs: dict = {"insert": False}
-
-    if t_alias == s_alias:
-        raise ValueError(
-            f"MERGE target and source share the alias {t_alias!r} — "
-            "column references would be ambiguous"
-        )
-    alias_map = {t_alias: "t", s_alias: "s"}
-
-    def _alias_expr(text: str):
-        # merge_into exposes the joined row under t./s. aliases; map
-        # the statement's aliases onto them in ONE pass (a sequential
-        # rewrite corrupts swapped aliases: 'AS s ... AS t' would
-        # first turn s.->t. and then rewrite ALL t. — original and
-        # just-produced — to s., binding everything to one side).
-        # String literals are skipped — both
-        # single-quoted and double-quoted (Spark's ANSI-off default
-        # reads "..." as a string) — so an alias-looking word inside
-        # one survives verbatim.
-        def _sub(m2: re.Match) -> str:
-            if m2.group(0)[0] in "'\"":
-                return m2.group(0)  # string literal, untouched
-            return alias_map[m2.group(1)] + "."
-
-        rewritten = re.sub(
-            rf"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|"
-            rf"\b({re.escape(t_alias)}|{re.escape(s_alias)})\.",
-            _sub,
-            text,
-        )
-        return F.expr(rewritten)
-
-    saw_update = False
-    for matched, pred, action in whens:
-        is_matched = "NOT" not in matched.upper()
-        action_up = action.strip().upper()
-        if is_matched and action_up == "DELETE":
-            kwargs["delete_condition"] = (
-                _alias_expr(pred) if pred else F.lit(True)
-            )
-        elif is_matched and action_up.startswith("UPDATE SET"):
-            saw_update = True
-            if pred:
-                kwargs["update_condition"] = _alias_expr(pred)
-            set_text = action.strip()[len("UPDATE SET"):].strip()
-            if set_text != "*":
-                kwargs["update_exprs"] = {
-                    col: _alias_expr(expr)
-                    for col, expr in _parse_assignments(set_text).items()
-                }
-        elif not is_matched and action_up == "INSERT *":
-            kwargs["insert"] = True
-            if pred:
-                kwargs["insert_condition"] = _alias_expr(pred)
-        else:
-            raise ValueError(
-                f"unsupported MERGE action {action.strip()!r} for "
-                f"{'MATCHED' if is_matched else 'NOT MATCHED'}"
-            )
-    if not saw_update:
-        # merge_into defaults to update-all-shared-columns on match;
-        # a statement WITHOUT an UPDATE clause must leave matched
-        # (non-deleted) rows unchanged.
-        kwargs["update_condition"] = F.lit(False)
-    source = spark.table(source_name)
-    sid = merge_snapshot(spark, table_dir, source, keys, **kwargs)
-    return {
-        "statement_type": "MERGE",
-        "table": target_name,
-        "snapshot_id": sid,
-    }
+_ROUTES = {
+    "DeleteFromTable": _execute_delete,
+    "UpdateTable": _execute_update,
+    "MergeIntoTable": _execute_merge,
+    "InsertIntoStatement": _execute_insert,
+    "RenameColumn": _execute_alter,
+    "DropColumns": _execute_alter,
+    "AlterColumns": _execute_alter,
+    "DropTable": _execute_drop,
+    "ShowPartitions": _show_partitions,
+    "AnalyzeTable": _execute_analyze,
+    "AnalyzeColumn": _execute_analyze,
+}

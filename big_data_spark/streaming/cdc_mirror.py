@@ -123,7 +123,7 @@ def run_cdc_mirror(
                 # Honor the manifest's merge-on-read masks and
                 # evolution log: a MOR delete or evolve on the mirror
                 # must not resurrect/misread rows into the next
-                # rewritten bucket (round-10 model-walk class).
+                # rewritten bucket.
                 deletes=prev["deletes"],
                 schema_fields=prev["schema"],
                 rename_log=prev["rename_log"],

@@ -1,8 +1,8 @@
 """Incremental STREAM over a snapshot table's change feed — the
 read-side twin of streaming/snapshot_sink.py: a downstream pipeline
 consumes a snapshot table the way it would ``readStream`` a source,
-in micro-batches with a durable cursor (round-9 verdict directive #7;
-``follow_changes`` alone was a single batch-cursor step).
+in micro-batches with a durable cursor (``follow_changes`` alone is
+a single batch-cursor step).
 
 Shape: a foreachBatch-style DRIVER loop, not a custom Python data
 source — deliberately. A PySpark DataSource stream reader funnels
@@ -58,7 +58,7 @@ def stream_changes(
       been processed, or — ``max_idle_s`` — until no new commits have
       arrived for that many seconds (the unsupervised-pipeline escape
       hatch; with both None it polls forever — supervise externally).
-      ``predicate=`` (round 11) restricts every window to matching
+      ``predicate=`` restricts every window to matching
       change rows — the range-shard consumer (same typed bounds /
       IN-lists as ``read_snapshot``; file-level skipping through each
       side's manifest stats).
@@ -97,8 +97,8 @@ def stream_changes(
             if "no committed snapshots" not in str(exc):
                 raise
             # Not committed yet (producer hasn't started): in poll
-            # mode this is just "no new commits" (round-10 advice —
-            # the raw raise crashed consumers started early); in
+            # mode this is just "no new commits" (the raw raise
+            # crashed consumers started early); in
             # drain mode there is nothing to drain.
             feed, commit = None, None
         if feed is None:

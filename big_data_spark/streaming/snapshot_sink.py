@@ -61,7 +61,7 @@ def snapshot_sink(
             # only pins the batch as strongly as the block cache, so a
             # lost executor recomputes from lineage with fresh
             # non-determinism and the committed rows can differ from
-            # the audited rows (round-10 advice). Bytes on disk cannot
+            # the audited rows. Bytes on disk cannot
             # diverge; the cost is one extra write+read of the batch
             # (micro-batch-sized by construction).
             spark = batch_df.sparkSession

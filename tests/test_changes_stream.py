@@ -142,3 +142,43 @@ def test_stream_mirrors_table_exactly_once(spark, tmp_path):
     assert _rows(read_snapshot(spark, mirror)) == _rows(
         read_snapshot(spark, t)
     )
+
+
+def test_stream_changes_tolerates_missing_table_and_idles_out(
+    spark, tmp_path
+):
+    """Poll mode on a table with no commits yet sleeps instead of
+    crashing and max_idle_s bounds the wait."""
+    t = str(tmp_path / "never_created")
+    seen = []
+    st = stream_changes(
+        spark,
+        t,
+        str(tmp_path / "cur"),
+        lambda df, eid: seen.append(eid),
+        available_now=False,
+        poll_interval_s=0.05,
+        max_idle_s=0.3,
+    )
+    assert st["stopped"] == "idle"
+    assert st["batches"] == 0 and seen == []
+    # Drain mode on the same missing table: nothing to drain, no raise.
+    st2 = stream_changes(
+        spark, t, str(tmp_path / "cur2"), lambda df, eid: None
+    )
+    assert st2["stopped"] == "drained" and st2["batches"] == 0
+
+
+def test_stream_changes_batch_metrics_shape(spark, tmp_path):
+    t = str(tmp_path / "metered")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t)
+    st = stream_changes(
+        spark,
+        t,
+        str(tmp_path / "cur"),
+        lambda df, eid: None,
+        track_rows=True,
+    )
+    assert st["stopped"] == "drained" and st["batches"] == 1
+    (m,) = st["batch_metrics"]
+    assert m == {"epoch_id": 0, "after_id": -1, "rows": 5}

@@ -17,6 +17,7 @@ from big_data_spark.io.snapshot import (
     read_snapshot,
     update_where,
     vacuum_snapshots,
+    write_snapshot,
     write_snapshot_partial,
 )
 
@@ -160,3 +161,60 @@ def test_row_cdf_default_off_keeps_file_level_feed(spark, tmp_path):
     # File-level grain: the whole rewritten generation reports.
     assert feed.where("_change_type = 'delete'").count() == 10
     assert feed.where("_change_type = 'insert'").count() == 10
+
+
+def test_delete_where_mor_refuses_row_cdf(spark, tmp_path):
+    t = str(tmp_path / "morcdf")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t)
+    with pytest.raises(ValueError, match="row_cdf.*cow-only"):
+        delete_where(spark, t, "k = 1", mode="mor", row_cdf=True)
+
+
+def test_row_cdf_postimage_equals_committed_rows_under_rand(
+    spark, tmp_path
+):
+    """A non-deterministic SET (rand() salting) must commit EXACTLY
+    the rows the feed reports as update_postimage — the post-images
+    are pinned and the rewritten generation is built from them."""
+    t = str(tmp_path / "cdf_rand")
+    append_snapshot(
+        spark.createDataFrame(
+            [(i, 0.0) for i in range(20)], "k long, v double"
+        ),
+        t,
+        snapshot_id=0,
+    )
+    update_where(
+        spark, t, "k < 5", {"v": "rand() + 10.0"}, row_cdf=True
+    )
+    table_rows = {
+        r["k"]: r["v"]
+        for r in read_snapshot(spark, t).where("k < 5").collect()
+    }
+    feed_rows = {
+        r["k"]: r["v"]
+        for r in read_changes(spark, t, after_id=0)
+        .where("_change_type = 'update_postimage'")
+        .collect()
+    }
+    assert len(table_rows) == 5 and len(feed_rows) == 5
+    assert table_rows == feed_rows  # bit-identical, not re-evaluated
+    # Untouched rows really untouched.
+    assert (
+        read_snapshot(spark, t).where("k >= 5 AND v <> 0.0").count() == 0
+    )
+
+
+def test_row_cdf_refuses_reserved_columns(spark, tmp_path):
+    t = str(tmp_path / "cdf_resv")
+    append_snapshot(
+        spark.createDataFrame(
+            [(1, "x")], "k long, _change_type string"
+        ),
+        t,
+        snapshot_id=0,
+    )
+    with pytest.raises(ValueError, match="_change_type"):
+        update_where(
+            spark, t, "k = 1", {"_change_type": "'y'"}, row_cdf=True
+        )

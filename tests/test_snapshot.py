@@ -15,10 +15,12 @@ from pyspark.sql import functions as F
 from big_data_spark.io.manifest import commit_manifest, successor
 from big_data_spark.io.snapshot import (
     SnapshotConflict,
+    append_snapshot,
     generation_dir,
     latest_manifest,
     read_manifest,
     read_snapshot,
+    resolve_as_of_ts,
     snapshot_ids,
     vacuum_snapshots,
     write_snapshot,
@@ -1331,6 +1333,33 @@ def test_schemaless_manifest_refused_on_serial_and_bulk_reads(
         table_history(spark, t2)
 
 
+def test_entry_outside_generation_layout_refused(spark, tmp_path):
+    """Every writer points each manifest entry into its own
+    `_data/s=<id>` generation, so a manifest with an entry elsewhere
+    was not written by this engine: reading it refuses with one
+    message naming the table, the entry and the recovery."""
+    import json
+    import re
+
+    t = str(tmp_path / "offlayout")
+    write_snapshot(spark.range(5).selectExpr("id AS k"), t)
+    path = f"{t}/_manifests/manifest-{0:012d}.json"
+    with open(path) as fh:
+        man = json.load(fh)
+    man["entries"] = {"": "part-0.parquet"}
+    with open(path, "w") as fh:
+        json.dump(man, fh, sort_keys=True)
+    crc = f"{t}/_manifests/.manifest-{0:012d}.json.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+    msg = (
+        rf"^{re.escape(repr(t))} manifest 0 entry 'part-0.parquet' lies "
+        r"outside the _data/s=<id> layout — rebuild it from source$"
+    )
+    with pytest.raises(ValueError, match=msg):
+        read_snapshot(spark, t)
+
+
 def test_successor_carries_table_state_but_not_commit_keys():
     """The one carry-forward rule: table-state keys inherit unless
     named, per-commit keys never do, and an unknown key is refused."""
@@ -1480,3 +1509,55 @@ def test_every_writer_stamps_the_format_version(spark, tmp_path):
     for sid in range(len(steps)):
         with open(f"{mdir}/manifest-{sid:012d}.json") as fh:
             assert json.load(fh)["format_version"] == FORMAT_VERSION, sid
+
+
+def test_replace_recommit_carries_original_timestamp(spark, tmp_path):
+    """A crash-replayed write of an already-committed id keeps the
+    ORIGINAL committed_at_ms: re-stamping with the wall clock would
+    put manifest N's timestamp above its successor's and make
+    as_of_ts time travel resolve the wrong version."""
+    t = str(tmp_path / "replay_ts")
+    df = spark.range(10).selectExpr("id AS k")
+    append_snapshot(df, t, snapshot_id=0)
+    ts0 = read_manifest(spark, t, 0)["committed_at_ms"]
+    append_snapshot(spark.range(5).selectExpr("id AS k"), t, snapshot_id=1)
+    ts1 = read_manifest(spark, t, 1)["committed_at_ms"]
+    # The replay of batch 0 (deterministic, same inputs).
+    append_snapshot(df, t, snapshot_id=0, replace=True)
+    assert read_manifest(spark, t, 0)["committed_at_ms"] == ts0
+    assert read_manifest(spark, t, 1)["committed_at_ms"] == ts1
+    assert resolve_as_of_ts(spark, t, ts0) == 0
+    assert resolve_as_of_ts(spark, t, ts1) == 1
+
+
+def test_dml_attribution_with_aliasing_partition_values(spark, tmp_path):
+    """Partition value 'a:b'
+    URI-encodes in scan provenance to exactly the RAW hive-escaped
+    dir of sibling value 'a%3Ab' — raw-first matching attributed the
+    file to the wrong partition and COW DML rewrote the wrong one.
+    Unquoted-first, full-pass matching resolves both correctly."""
+    from big_data_spark.io.snapshot import (
+        delete_where,
+        fold_deletes,
+        write_snapshot_partial,
+    )
+
+    t = str(tmp_path / "alias")
+    df = spark.createDataFrame(
+        [(1, "a:b", 1.0), (2, "a%3Ab", 2.0)],
+        "k long, part string, v double",
+    )
+    write_snapshot_partial(df, t, 0, "part", ["a:b", "a%3Ab"])
+    st = delete_where(spark, t, "k = 1")  # lives in partition 'a:b'
+    assert st["deleted_rows"] == 1
+    got = {
+        (r["k"], r["part"]) for r in read_snapshot(spark, t).collect()
+    }
+    assert got == {(2, "a%3Ab")}
+    # MOR + fold across the same aliasing pair.
+    st = delete_where(spark, t, "k = 2", mode="mor")
+    assert st["deleted_rows"] == 1
+    assert read_snapshot(spark, t).count() == 0
+    folded = fold_deletes(spark, t)
+    assert folded["rewritten"] == 1  # only the truly-masked partition
+    assert read_snapshot(spark, t).count() == 0

@@ -4,6 +4,7 @@ stream -> versioned table -> change feed -> incremental MV."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_spark.io.snapshot import (
@@ -119,3 +120,82 @@ def test_streaming_write_audit_gate(spark, tmp_path):
     )
     assert len(snapshot_ids(spark, t)) == 3
     assert read_snapshot(spark, t).count() == 30
+
+
+def test_streaming_wap_gate_audits_the_committed_bytes(
+    spark, tmp_path, monkeypatch
+):
+    """The dq audit and the append are two actions; the sink must
+    run both over DISK-STAGED bytes (not a persist, whose evicted
+    blocks recompute from lineage with fresh non-determinism), so a non-deterministic transform cannot
+    pass the audit yet commit different rows."""
+    import big_data_spark.operators.dq as dq
+    from big_data_spark.operators.dq import not_null
+    from big_data_spark.streaming.snapshot_sink import snapshot_sink
+
+    src = str(tmp_path / "src")
+    spark.range(20).selectExpr("id AS k").coalesce(1).write.parquet(src)
+    real_assert = dq.assert_suite
+    seen = {"staged": None}
+
+    def recording_assert(df, checks):
+        # The audited frame must be a SCAN of the staged bytes — its
+        # input files live under _staging/, not the stream source.
+        seen["staged"] = all(
+            "/_staging/" in f for f in df.inputFiles()
+        ) and len(df.inputFiles()) > 0
+        return real_assert(df, checks)
+
+    monkeypatch.setattr(dq, "assert_suite", recording_assert)
+    stream = spark.readStream.schema("k long").parquet(src)
+    snapshot_sink(
+        stream,
+        str(tmp_path / "tbl"),
+        str(tmp_path / "cp"),
+        checks=[not_null("k")],
+    )
+    assert seen["staged"] is True
+    assert read_snapshot(spark, str(tmp_path / "tbl")).count() == 20
+
+
+def test_snapshot_sink_checks_stage_to_disk_and_clean_up(
+    spark, tmp_path
+):
+    """The audited stream commits the STAGED bytes' read-back and
+    removes staging afterwards — pass and fail both leave no staging
+    residue, and a failing audit lands nothing."""
+    from big_data_spark.operators.dq import in_range, not_null
+    from big_data_spark.streaming.snapshot_sink import snapshot_sink
+
+    src = str(tmp_path / "src")
+    spark.range(10).selectExpr("id AS k", "id * 2 AS v").write.json(src)
+    stream = spark.readStream.schema("k long, v long").json(src)
+    t = str(tmp_path / "sunk")
+    snapshot_sink(
+        stream,
+        t,
+        str(tmp_path / "ckpt"),
+        checks=[not_null("k")],
+    )
+    assert read_snapshot(spark, t).count() == 10
+    import os
+
+    residue = os.listdir(f"{t}/_staging") if os.path.isdir(
+        f"{t}/_staging"
+    ) else []
+    assert residue == []
+
+    # Failing audit: loud stop, nothing landed, staging removed.
+    t2 = str(tmp_path / "sunk_bad")
+    with pytest.raises(Exception, match="in_range"):
+        snapshot_sink(
+            stream,
+            t2,
+            str(tmp_path / "ckpt2"),
+            checks=[in_range("v", 0, 5)],
+        )
+    assert not os.path.isdir(f"{t2}/_manifests")
+    residue2 = os.listdir(f"{t2}/_staging") if os.path.isdir(
+        f"{t2}/_staging"
+    ) else []
+    assert residue2 == []

@@ -12,7 +12,7 @@ from big_data_spark.catalog import SnapshotCatalog, as_of
 from big_data_spark.io import sidecars, table_writes
 from big_data_spark.io.manifest import SnapshotConflict
 from big_data_spark.io.snapshot import append_snapshot, read_snapshot
-from big_data_spark.sqldml import execute_dml, is_dml
+from big_data_spark.sqldml import _parse_ts_ms, execute_dml, route_statement
 from tests.conftest import jobs_run
 
 
@@ -126,7 +126,7 @@ def test_unsupported_statements_raise_whole(spark, cat):
         with pytest.raises(ValueError):
             execute_dml(spark, bad, c.tables)
     assert read_snapshot(spark, t).count() == before
-    assert not is_dml("SELECT * FROM orders_t")
+    assert route_statement(spark, "SELECT * FROM orders_t", c.tables) is None
     # Non-DML routes to plain spark.sql through the same door.
     assert c.sql("SELECT max(k) AS m FROM orders_t").first()["m"] == 4
 
@@ -182,6 +182,67 @@ def test_sql_merge_alias_inside_string_literal_survives(spark, cat):
     )
     got = {r["k"]: r["who"] for r in read_snapshot(spark, t).collect()}
     assert got[1] == "tgt. stays" and got[2] == "b"
+
+
+def test_sql_travel_text_in_double_quoted_literal_untouched(spark, cat):
+    """Time travel is read from Spark's parse tree: a double-quoted
+    string that spells `<table> VERSION AS OF n` stays a string."""
+    c, t = cat
+    row = c.sql(
+        'SELECT "orders_t VERSION AS OF 0" AS s FROM orders_t'
+    ).first()
+    assert row["s"] == "orders_t VERSION AS OF 0"
+
+
+def test_sql_travel_text_after_escaped_quote_untouched(spark, cat):
+    """A backslash-escaped quote does not end a single-quoted literal,
+    so the travel-looking text after it stays part of the string."""
+    c, t = cat
+    row = c.sql(
+        "SELECT 'it\\'s orders_t VERSION AS OF 0' AS s FROM orders_t"
+    ).first()
+    assert row["s"] == "it's orders_t VERSION AS OF 0"
+
+
+def test_sql_travel_text_in_comment_ignored(spark, cat):
+    """A comment that spells `<table> VERSION AS OF n` pins nothing
+    (snapshot 1 does not exist, so reading it would raise)."""
+    c, t = cat
+    n = c.sql(
+        "SELECT count(*) AS n FROM orders_t -- orders_t VERSION AS OF 1"
+    ).first()["n"]
+    assert n == 4
+
+
+def test_sql_merge_escaped_literal_keeps_spark_meaning(spark, cat):
+    """A backslash-escaped quote inside a SET literal does not end the
+    literal: the alias-looking text after it is stored verbatim."""
+    c, t = cat
+    spark.createDataFrame(
+        [(1, 0.0)], "k int, delta double"
+    ).createOrReplaceTempView("esc_src")
+    c.sql(
+        "MERGE INTO orders_t AS tgt USING esc_src AS src "
+        "ON tgt.k = src.k "
+        "WHEN MATCHED THEN UPDATE SET who = 'it\\'s src.who'"
+    )
+    got = {r["k"]: r["who"] for r in read_snapshot(spark, t).collect()}
+    assert got[1] == "it's src.who" and got[2] == "b"
+
+
+def test_sql_merge_on_same_side_refused(spark, cat):
+    """`ON t.k = t.k` compares the target with itself; the door refuses
+    it instead of joining on t.k = s.k."""
+    c, t = cat
+    spark.createDataFrame(
+        [(1, 0.0)], "k int, delta double"
+    ).createOrReplaceTempView("taut_src")
+    with pytest.raises(ValueError, match="MERGE ON term"):
+        c.sql(
+            "MERGE INTO orders_t t USING taut_src s ON t.k = t.k "
+            "WHEN MATCHED THEN DELETE"
+        )
+    assert read_snapshot(spark, t).count() == 4
 
 
 def test_sql_merge_identical_aliases_refused(spark, cat):
@@ -490,8 +551,6 @@ def test_ctas_and_drop_guards(spark, tmp_path):
     assert (victim / "data.txt").exists()
     # No base_dir and no LOCATION: NOT claimed — a plain Spark-catalog
     # CTAS must keep working through spark.sql (round-11 review).
-    from big_data_spark.sqldml import route_statement
-
     assert (
         route_statement(
             spark, "CREATE TABLE nowhere AS SELECT id FROM src_g", {}
@@ -1671,3 +1730,77 @@ def test_lazy_post_dml_defers_aux_views_until_referenced(spark, tmp_path):
         spark.sql("SELECT max(_commit_id) AS m FROM lzx_changes")
         .first()["m"] == 2
     )
+
+
+def test_alter_parameterized_type_reaches_evolution_gate(spark, tmp_path):
+    """'ALTER COLUMN c TYPE decimal(18,2)' (with or without the inner
+    space) must reach evolve_schema's loud not-a-lossless-widening
+    error, never fall through to plain spark.sql."""
+    from big_data_spark.catalog import SnapshotCatalog
+
+    t = str(tmp_path / "alter_t")
+    append_snapshot(
+        spark.range(10).selectExpr(
+            "cast(id as int) AS k", "cast(id as double) AS v"
+        ),
+        t,
+        snapshot_id=0,
+    )
+    cat = SnapshotCatalog(spark)
+    cat.register("alter_t", t)
+    for spelling in ("decimal(18,2)", "decimal(18, 2)"):
+        with pytest.raises(ValueError, match="lossless widening"):
+            cat.sql(
+                f"ALTER TABLE alter_t ALTER COLUMN k TYPE {spelling}"
+            )
+    st = cat.sql("ALTER TABLE alter_t ALTER COLUMN k TYPE bigint")
+    assert st["statement_type"] == "ALTER"
+    assert dict(read_snapshot(spark, t).dtypes)["k"] == "bigint"
+
+
+def test_parse_ts_ms_is_exact_for_every_millisecond():
+    """float seconds*1000 truncated 1ms low on ~0.6% of values —
+    a statement quoting a commit's own timestamp then resolved the
+    previous version (or raised on the first commit)."""
+    from datetime import datetime, timezone
+
+    # Sweep a dense band plus the empirically-failing shapes.
+    bad = 0
+    for ms in list(range(1755264000000, 1755264000000 + 20000)) + [
+        1755268859999,
+        1696118399001,
+    ]:
+        iso = datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc).strftime(
+            "%Y-%m-%d %H:%M:%S.%f"
+        )
+        if _parse_ts_ms(iso) != ms:
+            bad += 1
+    assert bad == 0
+    assert _parse_ts_ms("123456") == 123456
+
+
+def test_insert_select_with_time_travel_source(spark, tmp_path):
+    """INSERT INTO t SELECT ... FROM t VERSION AS OF 0 — the
+    restore-old-rows idiom — resolves the time travel in the row
+    source."""
+    from big_data_spark.catalog import SnapshotCatalog
+    from big_data_spark.io.snapshot import delete_where
+
+    t = str(tmp_path / "ins_tt")
+    append_snapshot(
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(6)], "k long, v double"
+        ),
+        t,
+        snapshot_id=0,
+    )
+    cat = SnapshotCatalog(spark, versions="lazy")
+    cat.register("ins_tt", t)
+    delete_where(spark, t, "k < 3")
+    cat.refresh("ins_tt")
+    st = cat.sql(
+        "INSERT INTO ins_tt SELECT k, v FROM ins_tt VERSION AS OF 0 "
+        "WHERE k < 3"
+    )
+    assert st["inserted_rows"] == 3
+    assert read_snapshot(spark, t).count() == 6

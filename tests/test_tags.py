@@ -5,8 +5,12 @@ commit timestamps."""
 
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
 
+from big_data_spark.io import layout, table_writes
 from big_data_spark.io.snapshot import (
     SnapshotConflict,
     append_snapshot,
@@ -15,9 +19,11 @@ from big_data_spark.io.snapshot import (
     read_manifest,
     read_snapshot,
     resolve_as_of_ts,
+    snapshot_ids,
     table_history,
     tag_snapshot,
     vacuum_snapshots,
+    write_snapshot,
 )
 
 
@@ -281,3 +287,144 @@ def test_vacuum_retain_hours_keeps_recent_versions(spark, tmp_path):
     # a zero-hour window falls back to commit-count retention
     vacuum_snapshots(spark, t, keep_last=2, retain_hours=0.0)
     assert snapshot_ids(spark, t) == [3, 4]
+
+
+def test_tag_replace_retries_lost_mover_race(spark, tmp_path, monkeypatch):
+    """On an FS WITHOUT an atomic overwrite-rename (the non-local
+    fallback — local FS takes a java.nio ATOMIC_MOVE path),
+    two replace=True movers race: the loser's rename fails because
+    the winner's file landed after its delete. The loser retries once
+    (last-completed-wins for an explicit MOVE) instead of raising the
+    misleading first-writer 'pass replace=True' conflict."""
+    t = str(tmp_path / "tag_race")
+    for g in range(3):
+        append_snapshot(
+            spark.range(10).selectExpr("id AS k"), t, snapshot_id=g
+        )
+    tag_snapshot(spark, t, "rel", snapshot_id=0)
+
+    class _FakeUri:
+        def getScheme(self):
+            return "mockdfs"  # forces the delete-then-rename fallback
+
+    class _RacedFS:
+        """First delete of the tag file is swallowed — as if a racing
+        mover re-created the destination in the same instant."""
+
+        def __init__(self, fs):
+            self._fs = fs
+            self.swallowed = False
+
+        def getUri(self):
+            return _FakeUri()
+
+        def delete(self, path, recursive=False):
+            if (
+                not self.swallowed
+                and path.getName() == "rel.json"
+            ):
+                self.swallowed = True
+                return True
+            return self._fs.delete(path, recursive)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_hadoop_fs = layout.hadoop_fs
+    raced: dict = {}
+
+    def wrapped(spark_, path):
+        fs, p = real_hadoop_fs(spark_, path)
+        if "tag_race" in path:
+            proxy = raced.setdefault("fs", _RacedFS(fs))
+            return proxy, p
+        return fs, p
+
+    monkeypatch.setattr(layout, "hadoop_fs", wrapped)
+    assert tag_snapshot(spark, t, "rel", snapshot_id=2, replace=True) == 2
+    assert raced["fs"].swallowed  # the race actually happened
+    monkeypatch.undo()
+    assert list_tags(spark, t)["rel"] == 2
+
+
+def test_vacuum_rescues_pin_landing_after_kill_list(
+    spark, tmp_path, monkeypatch
+):
+    """A tag pinned BETWEEN vacuum's first tag read and its deletes
+    is rescued by the post-kill-list re-read: the pinned manifest and
+    its generation survive."""
+    t = str(tmp_path / "late_pin")
+    for g in range(5):
+        append_snapshot(
+            spark.range(g * 10, (g + 1) * 10).selectExpr("id AS k"),
+            t,
+            snapshot_id=g,
+        )
+    tag_snapshot(spark, t, "late", snapshot_id=1)
+    real_list = table_writes.list_tags
+    calls = {"n": 0}
+
+    def late_pin_list(spark_, table_dir):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            return {}  # the pin hasn't landed yet at the first read
+        return real_list(spark_, table_dir)
+
+    monkeypatch.setattr(table_writes, "list_tags", late_pin_list)
+    res = vacuum_snapshots(spark, t, keep_last=2)
+    assert calls["n"] >= 2
+    assert 1 not in res["expired_manifests"]
+    assert 1 in snapshot_ids(spark, t)
+    monkeypatch.undo()
+    assert read_snapshot(spark, t, tag="late").count() == 20
+
+
+def test_tag_replace_never_exposes_missing_tag_on_local_fs(
+    spark, tmp_path
+):
+    """replace=True is one atomic overwrite-rename on local FS: a
+    reader polling the tag while a mover loops replace-tags must
+    never observe not-found, and the pin must stay readable (crc
+    sidecar consistent) after every move."""
+    t = str(tmp_path / "tagswap")
+    write_snapshot(spark.range(3).selectExpr("id AS k"), t, snapshot_id=0)
+    write_snapshot(spark.range(4).selectExpr("id AS k"), t, snapshot_id=1)
+    tag_snapshot(spark, t, "release", snapshot_id=0)
+
+    stop = threading.Event()
+    errors: list[str] = []
+
+    def mover():
+        flip = 0
+        while not stop.is_set():
+            try:
+                tag_snapshot(
+                    spark, t, "release", snapshot_id=flip % 2, replace=True
+                )
+            except Exception as exc:  # pragma: no cover - fail loudly
+                errors.append(f"mover: {exc}")
+                return
+            flip += 1
+
+    th = threading.Thread(target=mover)
+    th.start()
+    try:
+        path = f"{t}/_tags/release.json"
+        for _ in range(200):
+            # Raw filesystem probe: the window the delete-then-rename
+            # path exposed was the file being absent between ops.
+            with open(path, "rb") as fh:
+                body = json.loads(fh.read())
+            assert body["tag"] == "release"
+            assert body["snapshot_id"] in (0, 1)
+    except FileNotFoundError:
+        errors.append("reader: tag file vanished mid-replace")
+    finally:
+        stop.set()
+        th.join()
+    assert errors == []
+    # The pin still reads through the checksummed Hadoop FS (no stale
+    # .crc sidecar) and resolves a real snapshot.
+    sid = list_tags(spark, t)["release"]
+    assert read_snapshot(spark, t, tag="release").count() in (3, 4)
+    assert sid in (0, 1)

@@ -5,18 +5,23 @@ audited bytes, and failed audits abandon cleanly."""
 from __future__ import annotations
 
 import glob
+import os
+import time
 
 import pytest
 
+from big_data_spark.io import table_writes
 from big_data_spark.io.snapshot import (
     SnapshotConflict,
     abandon_staged,
     append_snapshot,
     publish_staged,
+    read_manifest,
     read_snapshot,
     read_staged,
     stage_snapshot,
     vacuum_snapshots,
+    write_snapshot_partial,
 )
 from big_data_spark.operators.dq import assert_suite, in_range, not_null
 
@@ -374,3 +379,77 @@ def test_staged_batch_without_schema_file_asks_to_restage(
     with pytest.raises(ValueError, match=msg):
         publish_staged(spark, t, token)
     assert read_snapshot(spark, t).count() == 100
+
+
+def test_long_staged_wap_claim_survives_concurrent_vacuum(
+    spark, tmp_path, monkeypatch
+):
+    """A WAP batch staged LONGER AGO than vacuum's staging TTL (heavy
+    audits are blessed) is renamed into _data/s=<id> at publish;
+    rename preserves mtime, so without the claim-time stamp a vacuum
+    racing the claim->commit window saw a 'stale' above-newest dir
+    and deleted the just-claimed data."""
+    t = str(tmp_path / "stale_claim")
+    append_snapshot(
+        spark.range(100).selectExpr("id AS k"), t, snapshot_id=0
+    )
+    token = stage_snapshot(spark.range(100, 150).selectExpr("id AS k"), t)
+    # The audit took two days (mtime of the staged dir is ancient).
+    old = time.time() - 2 * 24 * 3600
+    os.utime(f"{t}/_staging/{token}", (old, old))
+
+    real_commit = table_writes.commit_manifest
+    ran = {"vacuum": None}
+
+    def commit_with_racing_vacuum(*args, **kwargs):
+        # A vacuum lands exactly inside the claim->commit window.
+        if ran["vacuum"] is None:
+            ran["vacuum"] = vacuum_snapshots(
+                spark, t, keep_last=2, staging_ttl_hours=24.0
+            )
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(
+        table_writes, "commit_manifest", commit_with_racing_vacuum
+    )
+    sid = publish_staged(spark, t, token)
+    assert sid == 1
+    # The claimed generation survived the racing vacuum (the claim
+    # stamped its own time) and the published table is intact.
+    assert ran["vacuum"]["removed_generations"] == []
+    assert read_snapshot(spark, t).count() == 150
+
+
+def test_read_staged_keeps_numeric_looking_string_partition_keys(
+    spark, tmp_path
+):
+    """'00123' staged on a string partition column must audit as
+    '00123' — inference-then-cast-back yielded '123', diverging from
+    the raw dir value publish keys the manifest on."""
+    t = str(tmp_path / "numkeys")
+    base = spark.createDataFrame(
+        [("00123", 1), ("1e5", 2)], "part string, v int"
+    )
+    write_snapshot_partial(
+        base, t, 0, "part", touched_keys=["00123", "1e5"]
+    )
+    token = stage_snapshot(
+        spark.createDataFrame([("00123", 3)], "part string, v int"), t
+    )
+    audited = read_staged(spark, t, token)
+    assert audited.schema["part"].dataType.simpleString() == "string"
+    assert [r["part"] for r in audited.collect()] == ["00123"]
+    publish_staged(spark, t, token, mode="append")
+    man = read_manifest(spark, t, 1)
+    # The audited value IS the published manifest key.
+    assert "00123" in man["entries"]
+    # Partitioned WAP append REPLACES the touched partition ('00123'
+    # now holds exactly the staged batch) and carries '1e5' forward —
+    # and both keys read back VERBATIM (no inference mangling).
+    got = read_snapshot(spark, t)
+    assert sorted(
+        (r["part"], r["v"]) for r in got.collect()
+    ) == [("00123", 3), ("1e5", 2)]
+    assert [
+        r["v"] for r in got.where("part = '00123'").collect()
+    ] == [3]
